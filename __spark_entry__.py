@@ -40,7 +40,6 @@ from historicaldatadocumentparsersystem_spark.operators import (
 from historicaldatadocumentparsersystem_spark.extractor import idsx as _idsx
 from historicaldatadocumentparsersystem_spark.extractor import piix as _piix
 from historicaldatadocumentparsersystem_spark.operators import psl as _psl
-from historicaldatadocumentparsersystem_spark.operators import certs as _certops
 from historicaldatadocumentparsersystem_spark.operators import qmodel as _qmodel
 
 # ---------------------------------------------------------------------------
@@ -1259,41 +1258,6 @@ def _desktop_entries_oracle() -> str:
             FROM (VALUES {", ".join(vals)})
             t(url, pos, grp, key, locale, value)
             ORDER BY url, pos"""
-
-
-def _jar_census_oracle() -> str:
-    """Twin of jar_class_census: the SAME zip walk + parse_class at
-    SQL-generation time — pure-fed VALUES."""
-    import io
-    import zipfile
-
-    from historicaldatadocumentparsersystem_spark import fixtures as _fx
-    from historicaldatadocumentparsersystem_spark.extractor.javaclassx import (
-        parse_class)
-    vals = []
-    for r in _fx.jar_file_rows():
-        try:
-            z = zipfile.ZipFile(io.BytesIO(r["payload"]))
-            names = [n for n in z.namelist()
-                     if n.endswith(".class")]
-        except zipfile.BadZipFile:
-            continue
-        for member in names:
-            d = parse_class(z.read(member))
-            if d is None:
-                continue
-            nm = sum(1 for m in d["members"] if m[1] == "method")
-            nf = sum(1 for m in d["members"] if m[1] == "field")
-            vals.append(
-                f"('{r['url']}', '{member}', "
-                f"'{d['class_name']}', '{d['super_name']}', "
-                f"'{d['java_version']}', '{d['access']}', "
-                f"{nm}, {nf})")
-    return f"""
-            SELECT * FROM (VALUES {", ".join(vals)})
-            t(url, member, class_name, super_name, java_version,
-              access, n_methods, n_fields)
-            ORDER BY url, member"""
 
 
 def _legacy_extract_oracle() -> str:
@@ -2616,85 +2580,6 @@ def _license_resolve_sql() -> str:
         ORDER BY url"""
 
 
-def _v4int_sql(e: str) -> str:
-    """Engine-portable strict dotted-quad -> bigint (NULL when the
-    grammar rejects) — IPV4_RE generated from extractor/ipx.py, the
-    same constant operators/netblocks.ipv4_int compiles to Spark
-    expressions."""
-    from historicaldatadocumentparsersystem_spark.extractor.ipx \
-        import IPV4_RE
-
-    def g(i: int) -> str:
-        return f"try_cast(regexp_extract({e}, '{IPV4_RE}', {i}) " \
-               f"AS bigint)"
-    return (f"(CASE WHEN regexp_extract({e}, '{IPV4_RE}', 1) != '' "
-            f"THEN {g(1)} * 16777216 + {g(2)} * 65536 "
-            f"+ {g(3)} * 256 + {g(4)} END)")
-
-
-def _netblocks_cte() -> str:
-    """CIDR LPM lookup twin (ends in ``lpm``: one row per distinct
-    probe address). Blocks VALUES + probe extras are GENERATED from
-    fixtures.NETBLOCKS / fixtures.EXTRA_IPS; the parse/floor/bucket
-    arithmetic mirrors operators/netblocks.py term for term
-    (integer div/% on non-negatives only)."""
-    from historicaldatadocumentparsersystem_spark import fixtures
-    blocks = ",\n            ".join(
-        f"('{c}', {a}, '{o}')" for c, a, o in fixtures.NETBLOCKS)
-    extras = " UNION ALL ".join(
-        f"SELECT '{ip}'" for ip in fixtures.EXTRA_IPS)
-    return f"""
-        blocks(cidr, asn, org) AS (VALUES
-            {blocks}),
-        nb0 AS (
-          SELECT cidr, asn, org, string_split(cidr, '/') AS parts
-          FROM blocks
-        ),
-        nb1 AS (
-          SELECT cidr, asn, org,
-                 {_v4int_sql("parts[1]")} AS ip0,
-                 try_cast(CASE WHEN len(parts) = 1 THEN '32'
-                               WHEN len(parts) = 2 THEN parts[2]
-                          END AS int) AS prefix
-          FROM nb0
-        ),
-        nb2 AS (
-          SELECT cidr, asn, org, prefix,
-                 ip0 - ip0 % (1::bigint << (32 - prefix))
-                   AS ip_start,
-                 ip0 - ip0 % (1::bigint << (32 - prefix))
-                   + (1::bigint << (32 - prefix)) - 1 AS ip_end
-          FROM nb1
-          WHERE ip0 IS NOT NULL AND prefix BETWEEN 0 AND 32
-        ),
-        nbx AS (
-          SELECT cidr, asn, org, prefix, ip_start, ip_end,
-                 unnest(generate_series(ip_start // 16777216,
-                                        ip_end // 16777216))
-                   AS bucket
-          FROM nb2
-        ),
-        probe AS (
-          SELECT DISTINCT remote AS ip FROM (
-            SELECT remote FROM read_parquet('{_GOLDEN_ACCESSLOG}')
-            UNION ALL {extras}
-          )
-        ),
-        ips AS (
-          SELECT ip, {_v4int_sql("ip")} AS ip_num FROM probe
-        ),
-        lpm AS (
-          SELECT i.ip, i.ip_num, b.prefix, b.cidr, b.asn, b.org
-          FROM ips i LEFT JOIN nbx b
-            ON i.ip_num // 16777216 = b.bucket
-           AND i.ip_num BETWEEN b.ip_start AND b.ip_end
-          QUALIFY row_number() OVER (
-            PARTITION BY i.ip
-            ORDER BY b.prefix DESC NULLS LAST,
-                     b.asn ASC NULLS LAST, b.cidr) = 1
-        )"""
-
-
 def _id_values() -> str:
     from historicaldatadocumentparsersystem_spark import fixtures
     rows = ",\n            ".join(
@@ -2712,44 +2597,6 @@ def _id_time_cols(e: str) -> str:
     ex = id_time_exprs(e, "duckdb")
     return (f"{ex['kind']} AS kind,\n"
             f"            {ex['ts_ms']} AS ts_ms")
-
-
-def _jwt_cte() -> str:
-    """VALUES + stage CTEs ending in ``jwt`` — stages generated by
-    operators/jwtops.jwt_stages, the same list the Spark side
-    compiles."""
-    from historicaldatadocumentparsersystem_spark import fixtures
-    from historicaldatadocumentparsersystem_spark.operators.jwtops \
-        import jwt_twin_cte
-    rows = ",\n            ".join(
-        f"({i}, " + ("CAST(NULL AS VARCHAR))" if t is None
-                     else f"'{t}')")
-        for i, t in enumerate(fixtures.jwt_sample_rows()))
-    return (f"toks(pos, token) AS (VALUES\n            {rows}),\n"
-            f"        {jwt_twin_cte('toks')}")
-
-
-def _ua_twin_cols(e: str) -> str:
-    """The five classification output expressions, generated from
-    operators/uaclass.ua_case_sql (which renders extractor/uax.py's
-    rule tables — one source of truth, three engines)."""
-    from historicaldatadocumentparsersystem_spark.operators.uaclass \
-        import ua_case_sql
-    c = ua_case_sql(e)
-    return (f"{c['family']} AS family,\n"
-            f"            {c['version_major']} AS version_major,\n"
-            f"            {c['os']} AS os,\n"
-            f"            {c['is_bot']} AS is_bot,\n"
-            f"            {c['bot_name']} AS bot_name")
-
-
-def _ua_values() -> str:
-    from historicaldatadocumentparsersystem_spark import fixtures
-    rows = ",\n            ".join(
-        f"({i}, " + ("CAST(NULL AS VARCHAR))" if ua is None
-                     else f"'{ua}')")
-        for i, ua in enumerate(fixtures.UA_SAMPLES))
-    return f"ua(pos, ua) AS (VALUES\n            {rows})"
 
 
 def _alt_svc_cte() -> str:
@@ -3615,16 +3462,12 @@ _GOLDEN_PO = os.path.join(_REPO, "fixtures",
                           "golden_po_seed42_n20.parquet")
 _GOLDEN_TMX = os.path.join(_REPO, "fixtures",
                            "golden_tmx_seed42_n16.parquet")
-_GOLDEN_CERTS = os.path.join(_REPO, "fixtures",
-                             "golden_certs_seed42_n24.parquet")
 _GOLDEN_MHTML = os.path.join(_REPO, "fixtures",
                              "golden_mhtml_seed42_n16.parquet")
 _GOLDEN_HAR = os.path.join(_REPO, "fixtures",
                            "golden_har_seed42_n12.parquet")
 _GOLDEN_VCARDS = os.path.join(_REPO, "fixtures",
                               "golden_vcards_seed42_n16.parquet")
-_GOLDEN_TORRENTS = os.path.join(
-    _REPO, "fixtures", "golden_torrents_seed42_n12.parquet")
 _GOLDEN_STEMS = os.path.join(_REPO, "fixtures",
                              "golden_stems_seed42.parquet")
 _GOLDEN_GPX = os.path.join(_REPO, "fixtures",
@@ -3639,75 +3482,25 @@ _GOLDEN_NTRIPLES = os.path.join(
     _REPO, "fixtures", "golden_ntriples_seed42_n12.parquet")
 _GOLDEN_GEOJSON = os.path.join(
     _REPO, "fixtures", "golden_geojson_seed42_n12.parquet")
-_GOLDEN_ACCESSLOG = os.path.join(
-    _REPO, "fixtures", "golden_accesslog_seed42_n12.parquet")
-# SQLite fixture page images are build-version-dependent, so the
-# committed corpus parquet (not fixtures.build_sqlite_fixture_dbs)
-# is canonical — see fixtures.sqlite_db_rows
-_SQLITE_FIX = os.path.join(_REPO, "fixtures",
-                           "sqlite_dbs_seed42_n10.parquet")
-_GOLDEN_SQLITE = os.path.join(
-    _REPO, "fixtures", "golden_sqlite_seed42_n10.parquet")
-_GOLDEN_WASM = os.path.join(
-    _REPO, "fixtures", "golden_wasm_seed42_n12.parquet")
-_GOLDEN_PCAP = os.path.join(
-    _REPO, "fixtures", "golden_pcap_seed42_n10.parquet")
-_GOLDEN_DNS = os.path.join(
-    _REPO, "fixtures", "golden_dns_seed42_n10.parquet")
-_GOLDEN_FONTS = os.path.join(
-    _REPO, "fixtures", "golden_fonts_seed42_n8.parquet")
-_GOLDEN_AVRO = os.path.join(
-    _REPO, "fixtures", "golden_avro_seed42_n8.parquet")
-_GOLDEN_PROTOBUF = os.path.join(
-    _REPO, "fixtures", "golden_protobuf_seed42_n8.parquet")
-_GOLDEN_ELF = os.path.join(
-    _REPO, "fixtures", "golden_elf_seed42_n6.parquet")
 _GOLDEN_TOML = os.path.join(
     _REPO, "fixtures", "golden_toml_seed42_n10.parquet")
-_GOLDEN_CBOR = os.path.join(
-    _REPO, "fixtures", "golden_cbor_seed42_n10.parquet")
 _GOLDEN_COMP = os.path.join(
     _REPO, "fixtures", "golden_comp_seed42_n10.parquet")
-_GOLDEN_PE = os.path.join(
-    _REPO, "fixtures", "golden_pe_seed42_n5.parquet")
-_GOLDEN_MACHO = os.path.join(
-    _REPO, "fixtures", "golden_macho_seed42_n5.parquet")
-_GOLDEN_AR = os.path.join(
-    _REPO, "fixtures", "golden_ar_seed42_n6.parquet")
-_GOLDEN_GIT = os.path.join(
-    _REPO, "fixtures", "golden_git_seed42_n6.parquet")
-_GOLDEN_ICC = os.path.join(
-    _REPO, "fixtures", "golden_icc_seed42_n5.parquet")
-_GOLDEN_ISO = os.path.join(
-    _REPO, "fixtures", "golden_iso_seed42_n4.parquet")
 _GOLDEN_CFB = os.path.join(
     _REPO, "fixtures", "golden_cfb_seed42_n6.parquet")
 _GOLDEN_OLEPS = os.path.join(
     _REPO, "fixtures", "golden_oleps_seed42_n6.parquet")
-_GOLDEN_MSGPACK = os.path.join(
-    _REPO, "fixtures", "golden_msgpack_seed42_n10.parquet")
-_GOLDEN_BPLIST = os.path.join(
-    _REPO, "fixtures", "golden_bplist_seed42_n8.parquet")
 _GOLDEN_KML = os.path.join(
     _REPO, "fixtures", "golden_kml_seed42_n5.parquet")
-_GOLDEN_JAVACLASS = os.path.join(
-    _REPO, "fixtures", "golden_javaclass_seed42_n5.parquet")
-_GOLDEN_RPM = os.path.join(
-    _REPO, "fixtures", "golden_rpm_seed42_n5.parquet")
-_GOLDEN_SWF = os.path.join(
-    _REPO, "fixtures", "golden_swf_seed42_n5.parquet")
 _GOLDEN_PGP = os.path.join(
     _REPO, "fixtures", "golden_pgp_seed42_n6.parquet")
-_GOLDEN_MIDI = os.path.join(
-    _REPO, "fixtures", "golden_midi_seed42_n5.parquet")
-_GOLDEN_LNK = os.path.join(
-    _REPO, "fixtures", "golden_lnk_seed42_n5.parquet")
 _GOLDEN_AVI = os.path.join(
     _REPO, "fixtures", "golden_avi_seed42_n5.parquet")
 _GOLDEN_SOURCEMAPS = os.path.join(
     _REPO, "fixtures", "golden_sourcemaps_seed42_n12.parquet")
 # fixed probe set for the from-scratch parquet footer reader (both
-# engines read the SAME files, so golden regens keep parity)
+# engines read the SAME files, so golden regens keep parity); the
+# certs file is kept only as a footer probe, its X.509 family is gone
 _PARQUET_PROBE_FILES = [
     os.path.join(_REPO, "fixtures", f) for f in (
         "golden_extracted_seed42_n300.parquet",
@@ -4329,16 +4122,15 @@ _DRIVER_ORDER = [
     "publish_date", "pack_greedy", "cms_term_counts",
     "table_records", "surt_urlkey",
     # never-driver-checked reps of the round-4 resumed-session format
-    # families (VERDICT r4 task 2's named list + one witness per big
-    # binary/container family): parquet footers, sqlite b-trees, pcap
-    # flows, DNS, git packs, ELF, TOML, cookies, security headers,
-    # certs, BibTeX, wasm, avro, ISO 9660, compression frames, UA
-    # classification, JWTs
-    "parquet_layout_audit", "sqlite_objects", "pcap_flows",
-    "dns_records", "git_objects", "elf_objects", "toml_records",
-    "cookie_table", "security_headers", "cert_host_hygiene",
-    "bibtex_fields", "wasm_sections", "avro_container",
-    "iso_images", "compressed_frames", "ua_classify", "jwt_rows",
+    # families (VERDICT r4 task 2's named list): parquet footers,
+    # TOML, cookies, security headers, BibTeX, compression frames
+    "parquet_layout_audit", "toml_records", "cookie_table",
+    "security_headers", "bibtex_fields", "compressed_frames",
+    # keep-set witnesses on the reference's document-to-record trace:
+    # office/EPUB/RTF extraction, dedup, crawl index and chunking
+    "docx_elements", "pptx_elements", "ppt_elements", "doc_elements",
+    "odt_elements", "epub_chapters", "rtf_elements", "exact_dedup",
+    "simhash_near_pairs", "cdx_fetch_plan", "html_section_chunks",
     # kept: bm25_scores MUST re-earn a green row after the r4 rounding
     # -tie fix (VERDICT task 1); kmeans/semantic_dedup cover the new
     # broadcast-centroid path and the task-6 perf target; the rest are
@@ -4374,7 +4166,7 @@ _EXTRA_ORDER = [
     "bigram_logppl", "bloom_url_membership", "decontaminate",
     "dsir_weights", "robots_gate", "snapshot_latest", "crawl_delta",
     "host_boilerplate", "host_hits", "quantized_topk",
-    "cdx_fetch_plan", "extract_meta", "extract_tables",
+    "extract_meta", "extract_tables",
     "extract_jsonld", "page_shapes", "template_clusters",
     "canonical_dedup", "winnow_near_pairs", "soft404_gate",
     "encoding_profile", "extract_microdata", "extract_dates",
@@ -4392,7 +4184,7 @@ _EXTRA_ORDER = [
     "first_seen_dedup", "pii_redaction", "cap_per_host",
     "length_quantiles", "bbox_remove_nested", "tpch_q1_pricing",
     "segment_revenue", "events_cube",
-    "pptx_elements", "pptx_keyword_sections", "docx_elements",
+    "pptx_keyword_sections",
     "docx_token_chunks", "picture_class_filter", "media_dimensions",
     "image_pixel_stats", "audio_wav_stats", "structured_records",
     # rows-only here (BPE merges are not SQL-expressible); the real
@@ -4418,16 +4210,16 @@ _EXTRA_ORDER = [
     "extract_mf2", "mf2_records", "temporal_split",
     "media_metadata", "media_provenance", "normalize_orientation",
     "media_artifacts", "extract_markdown", "markdown_stats",
-    "epub_chapters", "bpe_learn_merges", "zorder_layout",
-    "odt_elements", "stitch_pagination", "script_profile",
+    "bpe_learn_merges", "zorder_layout",
+    "stitch_pagination", "script_profile",
     "nfc_normalize", "pdf_info", "content_type_mismatch",
     "script_lang_consistency", "fetch_schedule_delayed",
     "office_metadata",
     # round-4 resumed-session-3 additions
     "extract_code", "code_lang_stats", "code_block_profile",
-    "rtf_elements", "subtitle_cues", "subtitle_stats",
+    "subtitle_cues", "subtitle_stats",
     "interstitial_gate", "opml_feeds", "section_chunks",
-    "extract_outline", "html_section_chunks",
+    "extract_outline",
     "sentence_split", "sentence_stats", "bitext_candidates",
     "header_robots_gate", "host_trustrank", "frame_cue_alignment",
     "sentence_boilerplate", "pdf_outline",
@@ -4475,12 +4267,9 @@ _EXTRA_ORDER = [
     "xlsx_cells", "xlsx_sheet_stats", "spreadsheet_header_records",
     "po_entries", "po_bitext_pairs", "po_catalog_stats",
     "tmx_rows", "tmx_bitext_pairs", "tmx_memory_stats",
-    "cert_rows", "cert_chain_integrity",
-    "cert_crypto_profile",
     "mhtml_resources", "mhtml_pages", "mhtml_asset_census",
     "har_entries", "har_pages", "har_page_weight",
     "vcard_props", "contact_cards",
-    "torrent_files", "torrent_summary",
     "stem_vocab", "stem_collisions",
     "mail_thread_roots", "mail_thread_profile",
     "gpx_points", "gpx_track_stats",
@@ -4490,42 +4279,20 @@ _EXTRA_ORDER = [
     "sourcemap_sources", "sourcemap_stats",
     "zip_directory", "zip_container_audit",
     "nt_triples", "nt_predicate_census",
-    "access_log_rows", "access_log_profile",
-    "ip_cidr_lookup", "log_network_profile",
-    "ua_profile",
     "id_time_classify", "id_minting_days",
-    "jwt_security_profile",
     "geojson_features", "geojson_geometry_stats",
     # round-4 resumed-session-11 additions
-    "sqlite_db_profile",
-    "wasm_module_profile",
-    "pcap_packets", "dns_cname_resolution",
-    "font_metadata", "font_family_census",
-    "avro_layout_audit",
-    "protobuf_census", "protobuf_shape_profile",
-    "elf_dependency_census",
     "toml_type_census",
-    "cbor_records", "cbor_tag_profile",
     "compression_audit",
-    "pe_objects", "macho_objects", "binary_dependency_graph",
-    "ar_archives", "deb_dependency_census",
-    "git_commit_history",
-    "icc_profiles", "icc_class_census",
-    "iso_tree_profile",
     # round-5 additions: the legacy OLE/CFB office family (the last
     # reference source-format branch — VERDICT r4 task 5) + the
     # score-producing picture classifier closing F3's input gap
-    "cfb_documents", "ppt_elements", "doc_elements",
+    "cfb_documents",
     "picture_auto_gate", "oleps_properties", "legacy_office_metadata",
     "legacy_office_extract",
-    "msgpack_records", "msgpack_type_census",
-    "bplist_records", "bplist_type_census",
     "kml_placemarks", "kml_folder_stats",
-    "java_classes", "java_member_census",
-    "rpm_packages", "rpm_dependency_census", "jar_class_census",
-    "swf_files", "swf_tag_profile",
     "pgp_blocks", "pgp_key_profile", "desktop_entries",
-    "midi_tracks", "midi_profile", "lnk_shortcuts", "avi_headers",
+    "avi_headers",
     # demoted in the round-4 resumed-session rotation (multi-round
     # driver-green; families keep witnesses in the window)
     "ngram_jaccard_pairs", "line_dedup", "tfidf_top_terms",
@@ -4533,8 +4300,8 @@ _EXTRA_ORDER = [
     "repetition_profile", "host_stats_salted",
     # demoted in the round-4 late rotation (multi-round driver-green)
     "event_sessions", "bbox_overlap_pairs", "hypertable_rollup",
-    "gopher_rules", "c4_line_filter", "exact_dedup",
-    "simhash_near_pairs", "cosine_topk", "unigram_logppl",
+    "gopher_rules", "c4_line_filter",
+    "cosine_topk", "unigram_logppl",
     "url_normalize",
 ]
 
@@ -7076,107 +6843,6 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                 .orderBy("pred"))
     q["nt_predicate_census"] = q_nt_census
 
-    def q_access_log_rows(spark, sf_dir):
-        files = fixtures.accesslog_file_rows(12)
-        df = spark.createDataFrame(
-            [(r["url"], r["payload"]) for r in files],
-            "url string, payload binary").repartition(8)
-        return sources.read_access_log(df)
-    q["access_log_rows"] = q_access_log_rows
-
-    def q_access_log_profile(spark, sf_dir):
-        g = spark.read.parquet(_GOLDEN_ACCESSLOG)
-        return (g.groupBy("url")
-                .agg(F.count(F.lit(1)).cast("long")
-                     .alias("n_requests"),
-                     F.sum(F.when(F.expr("status div 100") == 2, 1)
-                           .otherwise(0)).cast("long").alias("n_2xx"),
-                     F.sum(F.when(F.expr("status div 100") == 4, 1)
-                           .otherwise(0)).cast("long").alias("n_4xx"),
-                     F.sum(F.coalesce("bytes_sent", F.lit(0)))
-                     .cast("long").alias("bytes_total"),
-                     F.sum(F.when(F.lower(F.col("user_agent"))
-                                  .like("%bot%"), 1).otherwise(0))
-                     .cast("long").alias("n_bot"),
-                     F.sum(F.col("method").isNull().cast("long"))
-                     .cast("long").alias("n_garbage_requests"),
-                     (F.max("epoch") - F.min("epoch"))
-                     .alias("span_s"))
-                .orderBy("url"))
-    q["access_log_profile"] = q_access_log_profile
-
-    # --- CIDR longest-prefix-match network lookup (the routing-
-    # table interval join, /8-bucketed + broadcast — never a BNLJ)
-    # over the access-log remotes; TRUE dual-engine (JVM builtins
-    # vs generated DuckDB SQL from the same ipx.py constants)
-    def _netblocks_inputs(spark):
-        from historicaldatadocumentparsersystem_spark.operators \
-            import netblocks
-        g = spark.read.parquet(_GOLDEN_ACCESSLOG)
-        extra = spark.createDataFrame(
-            [(ip,) for ip in fixtures.EXTRA_IPS], "remote string")
-        blocks = spark.createDataFrame(
-            list(fixtures.NETBLOCKS), "cidr string, asn int, org string")
-        return netblocks, g, extra, blocks
-
-    def q_ip_cidr_lookup(spark, sf_dir):
-        netblocks, g, extra, blocks = _netblocks_inputs(spark)
-        probe = g.select("remote").union(extra)
-        return (netblocks.ip_lookup(probe, blocks)
-                .orderBy("ip"))
-    q["ip_cidr_lookup"] = q_ip_cidr_lookup
-
-    def q_log_network_profile(spark, sf_dir):
-        netblocks, g, extra, blocks = _netblocks_inputs(spark)
-        lk = (netblocks.ip_lookup(g, blocks)
-              .withColumnRenamed("ip", "remote")
-              .select("remote", "asn", "org"))
-        j = g.join(F.broadcast(lk), "remote", "left")
-        return (j.groupBy(F.coalesce("org", F.lit("(unrouted)"))
-                          .alias("org"))
-                .agg(F.count(F.lit(1)).cast("long")
-                     .alias("n_requests"),
-                     F.countDistinct("remote").cast("long")
-                     .alias("n_remotes"),
-                     F.sum(F.coalesce("bytes_sent", F.lit(0)))
-                     .cast("long").alias("bytes_total"),
-                     F.sum(F.when(F.lower(F.col("user_agent"))
-                                  .like("%bot%"), 1).otherwise(0))
-                     .cast("long").alias("n_bot"))
-                .orderBy("org"))
-    q["log_network_profile"] = q_log_network_profile
-
-    # --- user-agent classification (rule tables shared verbatim by
-    # the pure oracle, the Spark CASE compiler, and the generated
-    # DuckDB twin; map-only codegen — scan cost IS the cost)
-    def q_ua_classify(spark, sf_dir):
-        from historicaldatadocumentparsersystem_spark.operators \
-            import uaclass
-        rows = [(i, ua) for i, ua in enumerate(fixtures.UA_SAMPLES)]
-        df = spark.createDataFrame(
-            rows, "pos int, ua string").repartition(4)
-        return (uaclass.classify_ua(df, "ua")
-                .select("pos", "family", "version_major", "os",
-                        "is_bot", "bot_name")
-                .orderBy("pos"))
-    q["ua_classify"] = q_ua_classify
-
-    def q_ua_profile(spark, sf_dir):
-        from historicaldatadocumentparsersystem_spark.operators \
-            import uaclass
-        g = spark.read.parquet(_GOLDEN_ACCESSLOG)
-        c = uaclass.classify_ua(g)
-        return (c.groupBy("family", "os", "is_bot")
-                .agg(F.count(F.lit(1)).cast("long").alias("n"),
-                     F.countDistinct("remote").cast("long")
-                     .alias("n_remotes"),
-                     F.countDistinct("bot_name").cast("long")
-                     .alias("n_named_bots"))
-                .orderBy(F.col("family").asc_nulls_first(),
-                         F.col("os").asc_nulls_first(),
-                         F.col("is_bot").asc_nulls_first()))
-    q["ua_profile"] = q_ua_profile
-
     # --- ID-embedded timestamp mining (UUIDv1/v7, ULID, snowflake
     # clocks recovered by integer arithmetic; one expression
     # generator renders both engines — map-only codegen)
@@ -7207,40 +6873,6 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                      F.max("ts_ms").alias("last_ms"))
                 .orderBy("kind", "day"))
     q["id_minting_days"] = q_id_minting_days
-
-    # --- JWT structure parsing (no verification — the token-leak
-    # analytics view; one stage generator renders both engines)
-    def _jwt_df(spark):
-        from historicaldatadocumentparsersystem_spark.operators \
-            import jwtops
-        toks = fixtures.jwt_sample_rows()
-        df = spark.createDataFrame(
-            [(i, t) for i, t in enumerate(toks)],
-            "pos int, token string").repartition(4)
-        return jwtops.parse_jwt_df(df)
-
-    def q_jwt_rows(spark, sf_dir):
-        return (_jwt_df(spark)
-                .select("pos", "token", "well_formed", "alg", "typ",
-                        "kid", "iss", "sub", "exp", "iat", "expired",
-                        "n_claims", "sig_chars")
-                .orderBy("pos"))
-    q["jwt_rows"] = q_jwt_rows
-
-    def q_jwt_security_profile(spark, sf_dir):
-        j = _jwt_df(spark).where(F.col("well_formed"))
-        return (j.groupBy("alg")
-                .agg(F.count(F.lit(1)).cast("long").alias("n"),
-                     F.sum(F.coalesce(F.col("expired").cast("int"),
-                                      F.lit(0))).cast("long")
-                     .alias("n_expired"),
-                     F.sum(F.when(F.col("sig_chars") == 0, 1)
-                           .otherwise(0)).cast("long")
-                     .alias("n_unsigned"),
-                     F.countDistinct("iss").cast("long")
-                     .alias("n_issuers"))
-                .orderBy("alg"))
-    q["jwt_security_profile"] = q_jwt_security_profile
 
     # --- GeoJSON feature index (rows golden-pinned; the stats
     # census reads the golden on BOTH sides — bbox is min/max only,
@@ -7501,40 +7133,6 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                 .orderBy("stem"))
     q["stem_collisions"] = q_stem_collisions
 
-    # --- BitTorrent metainfo source (open-data discovery channel;
-    # from-scratch bencode with span-aware infohash) — file rows
-    # hash-checked against the committed golden; the piece-count
-    # integrity audit reads the golden on BOTH sides
-    def q_torrent_files(spark, sf_dir):
-        files = fixtures.torrent_file_rows(12)
-        df = spark.createDataFrame(
-            [(r["url"], r["payload"]) for r in files],
-            "url string, payload binary").repartition(8)
-        return sources.read_torrent_files(df)
-    q["torrent_files"] = q_torrent_files
-
-    def q_torrent_summary(spark, sf_dir):
-        # pieces_ok: ceil(total/piece_length) must equal the piece
-        # count the metainfo declares — integer div on non-negatives
-        # (the cross-engine-safe form)
-        g = spark.read.parquet(_GOLDEN_TORRENTS)
-        return (g.groupBy("url")
-                .agg(F.max("name").alias("name"),
-                     F.max("infohash").alias("infohash"),
-                     F.count(F.lit(1)).cast("long").alias("n_files"),
-                     F.sum("length").cast("long")
-                     .alias("total_bytes"),
-                     F.max("piece_length").alias("piece_length"),
-                     F.max("n_pieces").alias("n_pieces"),
-                     F.max("private").alias("private"))
-                .withColumn(
-                    "pieces_ok",
-                    F.expr("cast(n_pieces as bigint) = "
-                           "(total_bytes + piece_length - 1) div "
-                           "piece_length"))
-                .orderBy("url"))
-    q["torrent_summary"] = q_torrent_summary
-
     # --- vCard contact source (the icsx grammar sibling) — flat
     # property rows hash-checked against the committed golden;
     # card rollup reads the golden on BOTH sides
@@ -7637,37 +7235,6 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                      .alias("n_archives"))
                 .orderBy("content_type"))
     q["mhtml_asset_census"] = q_mhtml_census
-
-    # --- X.509 certificate family (from-scratch DER; the transport
-    # sibling of the security-header posture family) — cert rows
-    # hash-checked against the committed golden; hygiene/chain/
-    # profile read the golden on BOTH sides to isolate the grading
-    def q_cert_rows(spark, sf_dir):
-        files = fixtures.cert_chain_rows(24)
-        df = spark.createDataFrame(
-            [(r["url"], r["payload"]) for r in files],
-            "url string, payload binary").repartition(8)
-        return sources.read_certificates(df)
-    q["cert_rows"] = q_cert_rows
-
-    def q_cert_hygiene(spark, sf_dir):
-        from historicaldatadocumentparsersystem_spark.operators \
-            import certs as _certs
-        return _certs.cert_hygiene(spark.read.parquet(_GOLDEN_CERTS))
-    q["cert_host_hygiene"] = q_cert_hygiene
-
-    def q_cert_chain(spark, sf_dir):
-        from historicaldatadocumentparsersystem_spark.operators \
-            import certs as _certs
-        return _certs.chain_integrity(
-            spark.read.parquet(_GOLDEN_CERTS))
-    q["cert_chain_integrity"] = q_cert_chain
-
-    def q_cert_profile(spark, sf_dir):
-        from historicaldatadocumentparsersystem_spark.operators \
-            import certs as _certs
-        return _certs.crypto_profile(spark.read.parquet(_GOLDEN_CERTS))
-    q["cert_crypto_profile"] = q_cert_profile
 
     # --- media-extension sitemaps (video/image discovery channel) —
     # pure-extractor-fed VALUES oracle; parser round-trips pinned in
@@ -8363,274 +7930,6 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         return rev
     q["segment_revenue"] = q_revenue_join
 
-    # --- SQLite database files (container sibling of parquetx/zipx:
-    # from-scratch header + b-tree + record decoding, exact per-table
-    # row counts from the tree walk; stdlib sqlite3 is the
-    # independent pytest oracle over the SAME committed bytes)
-    def q_sqlite_objects(spark, sf_dir):
-        df = spark.read.parquet(_SQLITE_FIX).repartition(8)
-        return sources.read_sqlite_objects(df)
-    q["sqlite_objects"] = q_sqlite_objects
-
-    def q_sqlite_db_profile(spark, sf_dir):
-        g = spark.read.parquet(_GOLDEN_SQLITE)
-        aggs = [F.sum(F.when(F.col("otype") == t, 1).otherwise(0))
-                .cast("long").alias(alias)
-                for t, alias in (("table", "n_tables"),
-                                 ("index", "n_indexes"),
-                                 ("view", "n_views"),
-                                 ("trigger", "n_triggers"))]
-        return (g.groupBy("url")
-                .agg(*aggs,
-                     F.sum(F.coalesce("n_rows", F.lit(0)))
-                     .cast("long").alias("rows_total"),
-                     F.min("page_size").alias("page_size"),
-                     F.min("encoding").alias("encoding"),
-                     F.min("n_pages").alias("n_pages"),
-                     F.min("freelist_pages").alias("freelist_pages"))
-                .orderBy("url"))
-    q["sqlite_db_profile"] = q_sqlite_db_profile
-
-    # --- WebAssembly modules (LEB128 section walk + import/export
-    # symbol census; custom sourceMappingURL/producers sections are
-    # the srcmapx-style discovery channels)
-    def q_wasm_sections(spark, sf_dir):
-        files = fixtures.wasm_module_rows(12)
-        df = spark.createDataFrame(
-            [(r["url"], r["payload"]) for r in files],
-            "url string, payload binary").repartition(8)
-        return sources.read_wasm_modules(df)
-    q["wasm_sections"] = q_wasm_sections
-
-    def q_wasm_module_profile(spark, sf_dir):
-        g = spark.read.parquet(_GOLDEN_WASM)
-        sec = F.col("row_kind") == "section"
-        return (g.groupBy("url")
-                .agg(F.sum(sec.cast("long")).cast("long")
-                     .alias("n_sections"),
-                     F.sum((F.col("row_kind") == "import")
-                           .cast("long")).cast("long")
-                     .alias("n_imports"),
-                     F.sum((F.col("row_kind") == "export")
-                           .cast("long")).cast("long")
-                     .alias("n_exports"),
-                     F.sum(F.when(sec & (F.col("name") == "code"),
-                                  F.col("n_items")).otherwise(0))
-                     .cast("long").alias("code_fns"),
-                     F.sum(F.when(sec & (F.col("sec_id") == 0), 1)
-                           .otherwise(0)).cast("long")
-                     .alias("n_custom"),
-                     F.bool_or(
-                         F.col("name") == "custom:sourceMappingURL")
-                     .alias("has_sourcemap"),
-                     F.sum(F.when((F.col("row_kind") == "export")
-                                  & (F.col("sym_kind") == "func"),
-                                  1).otherwise(0)).cast("long")
-                     .alias("exported_funcs"))
-                .orderBy("url"))
-    q["wasm_module_profile"] = q_wasm_module_profile
-
-    # --- libpcap captures (wire-side complement of accesslogx/
-    # harx; exact integer epoch-ms, no float time). Flow summary
-    # canonicalizes direction with least/greatest over ip#port
-    # endpoint keys so both directions land in ONE group — the
-    # golden feeds BOTH engines, isolating the composition.
-    def q_pcap_packets(spark, sf_dir):
-        files = fixtures.pcap_capture_rows()
-        df = spark.createDataFrame(
-            [(r["url"], r["payload"]) for r in files],
-            "url string, payload binary").repartition(8)
-        return sources.read_pcap_packets(df)
-    q["pcap_packets"] = q_pcap_packets
-
-    def q_pcap_flows(spark, sf_dir):
-        g = spark.read.parquet(_GOLDEN_PCAP)
-        ks = F.concat_ws("#", "src_ip", "src_port")
-        kd = F.concat_ws("#", "dst_ip", "dst_port")
-        # src_port guard matters cross-engine: Spark concat_ws
-        # SKIPS nulls where DuckDB || propagates them
-        return (g.where(F.col("proto").isin("tcp", "udp")
-                        & F.col("src_ip").isNotNull()
-                        & F.col("src_port").isNotNull())
-                .withColumn("ep_a", F.least(ks, kd))
-                .withColumn("ep_b", F.greatest(ks, kd))
-                .groupBy("url", "proto", "ep_a", "ep_b")
-                .agg(F.count(F.lit(1)).cast("long")
-                     .alias("n_packets"),
-                     F.sum("orig_len").cast("long")
-                     .alias("bytes_total"),
-                     F.min("ts_ms").alias("first_ms"),
-                     F.max("ts_ms").alias("last_ms"),
-                     F.sum(F.when(F.col("tcp_flags") == "S", 1)
-                           .otherwise(0)).cast("long")
-                     .alias("n_syn"))
-                .orderBy("url", "proto", "ep_a", "ep_b"))
-    q["pcap_flows"] = q_pcap_flows
-
-    # --- DNS wire messages (naming-side complement of pcapx/idnx;
-    # compression-pointer decode with the strictly-backwards guard).
-    # The resolution query joins CNAME aliases to address records
-    # within each message — golden on BOTH sides isolates the join.
-    def q_dns_records(spark, sf_dir):
-        files = fixtures.dns_message_rows()
-        df = spark.createDataFrame(
-            [(r["url"], r["payload"]) for r in files],
-            "url string, payload binary").repartition(8)
-        return sources.read_dns_records(df)
-    q["dns_records"] = q_dns_records
-
-    def q_dns_cname_resolution(spark, sf_dir):
-        g = (spark.read.parquet(_GOLDEN_DNS)
-             .where(F.col("section") == "answer"))
-        cn = (g.where(F.col("rtype") == "CNAME")
-              .select("url", F.col("name").alias("alias_name"),
-                      F.col("rdata").alias("canonical")))
-        ad = (g.where(F.col("rtype").isin("A", "AAAA"))
-              .select(F.col("url").alias("u2"),
-                      F.col("name").alias("tname"),
-                      F.col("rtype").alias("addr_type"),
-                      F.col("rdata").alias("address")))
-        return (cn.join(F.broadcast(ad),
-                        (cn.url == ad.u2)
-                        & (cn.canonical == ad.tname))
-                .select("url", "alias_name", "canonical",
-                        "addr_type", "address")
-                .orderBy("url", "alias_name", "addr_type",
-                         "address"))
-    q["dns_cname_resolution"] = q_dns_cname_resolution
-
-    # --- web fonts (fetch-side complement of cssx's url() mining:
-    # sfnt/WOFF table directories + decoded name strings; WOFF2
-    # is header-indexed only — Brotli is gated, the multimodal rule)
-    def q_font_metadata(spark, sf_dir):
-        files = fixtures.font_file_rows()
-        df = spark.createDataFrame(
-            [(r["url"], r["payload"]) for r in files],
-            "url string, payload binary").repartition(8)
-        return sources.read_font_metadata(df)
-    q["font_metadata"] = q_font_metadata
-
-    def q_font_family_census(spark, sf_dir):
-        g = spark.read.parquet(_GOLDEN_FONTS)
-        return (g.groupBy("kind", "flavor")
-                .agg(F.sum((F.col("row_kind") == "font")
-                           .cast("long")).cast("long")
-                     .alias("n_fonts"),
-                     F.sum((F.col("row_kind") == "table")
-                           .cast("long")).cast("long")
-                     .alias("n_table_entries"),
-                     F.sum((F.col("row_kind") == "name")
-                           .cast("long")).cast("long")
-                     .alias("n_name_strings"),
-                     F.countDistinct(
-                         F.when(F.col("name_kind") == "family",
-                                F.col("value"))).cast("long")
-                     .alias("n_families"))
-                .orderBy("kind", "flavor"))
-    q["font_family_census"] = q_font_family_census
-
-    # --- Avro object containers (row-oriented sibling of the
-    # parquet footer reader; real inflated sizes for deflate
-    # blocks; the audit mirrors zip_container_audit's ratio shape)
-    def q_avro_container(spark, sf_dir):
-        files = fixtures.avro_file_rows()
-        df = spark.createDataFrame(
-            [(r["url"], r["payload"]) for r in files],
-            "url string, payload binary").repartition(8)
-        return sources.read_avro_containers(df)
-    q["avro_container"] = q_avro_container
-
-    def q_avro_layout_audit(spark, sf_dir):
-        g = spark.read.parquet(_GOLDEN_AVRO)
-        blk = F.col("row_kind") == "block"
-        return (g.groupBy("url", "codec")
-                .agg(F.sum(blk.cast("long")).cast("long")
-                     .alias("n_blocks"),
-                     F.sum(F.when(blk, F.col("n_records"))
-                           .otherwise(0)).cast("long")
-                     .alias("records_total"),
-                     F.sum(F.when(blk, F.col("size")).otherwise(0))
-                     .cast("long").alias("bytes_ondisk"),
-                     F.sum(F.when(blk, F.col("raw_size"))
-                           .otherwise(0)).cast("long")
-                     .alias("bytes_raw"),
-                     F.sum((F.col("row_kind") == "field")
-                           .cast("long")).cast("long")
-                     .alias("n_fields"),
-                     F.bool_or(~F.col("sync_ok"))
-                     .alias("any_sync_break"))
-                .withColumn(
-                    "ratio_permille",
-                    F.expr("CASE WHEN bytes_raw > 0 THEN "
-                           "bytes_ondisk * 1000 div bytes_raw "
-                           "END"))
-                .orderBy("url"))
-    q["avro_layout_audit"] = q_avro_layout_audit
-
-    # --- schema-free protobuf census (protoscope move: dotted
-    # field paths, deterministic len-value classification). Depth
-    # is derived arithmetically from the path — dot counting, not
-    # split() (split semantics diverge cross-engine on '').
-    def q_protobuf_census(spark, sf_dir):
-        files = fixtures.protobuf_blob_rows()
-        df = spark.createDataFrame(
-            [(r["url"], r["payload"]) for r in files],
-            "url string, payload binary").repartition(8)
-        return sources.read_protobuf_census(df)
-    q["protobuf_census"] = q_protobuf_census
-
-    def q_protobuf_shape_profile(spark, sf_dir):
-        g = spark.read.parquet(_GOLDEN_PROTOBUF)
-        depth = F.expr(
-            "CASE WHEN path = '' THEN 0 ELSE length(path) "
-            "- length(replace(path, '.', '')) + 1 END")
-        return (g.withColumn("depth", depth)
-                .groupBy("url")
-                .agg(F.count(F.lit(1)).cast("long")
-                     .alias("n_field_slots"),
-                     F.sum("n").cast("long").alias("fields_total"),
-                     F.sum("bytes_total").cast("long")
-                     .alias("value_bytes"),
-                     F.max("depth").cast("int").alias("max_depth"),
-                     F.sum((F.col("kind") == "msg").cast("long"))
-                     .cast("long").alias("n_msg_slots"),
-                     F.sum((F.col("kind") == "str").cast("long"))
-                     .cast("long").alias("n_str_slots"))
-                .orderBy("url"))
-    q["protobuf_shape_profile"] = q_protobuf_shape_profile
-
-    # --- ELF objects (app bundles / firmware in crawls; names via
-    # .shstrtab, deps via DT_NEEDED through the sh_link strtab —
-    # the ldd-style surface without executing anything)
-    def q_elf_objects(spark, sf_dir):
-        files = fixtures.elf_object_rows()
-        df = spark.createDataFrame(
-            [(r["url"], r["payload"]) for r in files],
-            "url string, payload binary").repartition(8)
-        return sources.read_elf_objects(df)
-    q["elf_objects"] = q_elf_objects
-
-    def q_elf_dependency_census(spark, sf_dir):
-        g = spark.read.parquet(_GOLDEN_ELF)
-        return (g.groupBy("machine", "etype")
-                .agg(F.sum((F.col("row_kind") == "file")
-                           .cast("long")).cast("long")
-                     .alias("n_objects"),
-                     F.sum((F.col("row_kind") == "section")
-                           .cast("long")).cast("long")
-                     .alias("n_sections"),
-                     F.sum(F.when(F.col("row_kind") == "section",
-                                  F.col("size")).otherwise(0))
-                     .cast("long").alias("section_bytes"),
-                     F.sum(F.when(
-                         F.col("flags").contains("X"), 1)
-                         .otherwise(0)).cast("long")
-                     .alias("n_exec_sections"),
-                     F.countDistinct("lib").cast("long")
-                     .alias("n_distinct_deps"))
-                .orderBy("machine", "etype"))
-    q["elf_dependency_census"] = q_elf_dependency_census
-
     # --- TOML configs (from-scratch grammar pinned value-for-value
     # against stdlib tomllib; flattened dotted-key index)
     def q_toml_records(spark, sf_dir):
@@ -8652,45 +7951,6 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                 .orderBy("vtype"))
     q["toml_type_census"] = q_toml_type_census
 
-    # --- CBOR items (binary configs in the tomlx flattened shape;
-    # tag labels ride the vtype). Depth is dot+bracket arithmetic,
-    # the protobuf_shape_profile rule.
-    def q_cbor_records(spark, sf_dir):
-        files = fixtures.cbor_blob_rows()
-        df = spark.createDataFrame(
-            [(r["url"], r["payload"]) for r in files],
-            "url string, payload binary").repartition(8)
-        return sources.read_cbor_records(df)
-    q["cbor_records"] = q_cbor_records
-
-    # msgpack — the third binary-config dialect, same leaf shape
-    def q_msgpack_records(spark, sf_dir):
-        files = fixtures.msgpack_blob_rows()
-        df = spark.createDataFrame(
-            [(r["url"], r["payload"]) for r in files],
-            "url string, payload binary").repartition(8)
-        return sources.read_msgpack_records(df)
-    q["msgpack_records"] = q_msgpack_records
-
-    def q_msgpack_type_census(spark, sf_dir):
-        g = spark.read.parquet(_GOLDEN_MSGPACK)
-        return (g.groupBy("vtype")
-                .agg(F.count(F.lit(1)).cast("long").alias("n"),
-                     F.countDistinct("url").cast("long")
-                     .alias("n_blobs"),
-                     F.max(F.length("path")).alias("max_path_len"))
-                .orderBy("vtype"))
-    q["msgpack_type_census"] = q_msgpack_type_census
-
-    # Apple binary plist — the fourth binary-config dialect
-    def q_bplist_records(spark, sf_dir):
-        files = fixtures.bplist_blob_rows()
-        df = spark.createDataFrame(
-            [(r["url"], r["payload"]) for r in files],
-            "url string, payload binary").repartition(8)
-        return sources.read_bplist_records(df)
-    q["bplist_records"] = q_bplist_records
-
     # AVI headers (legacy-video sibling of mp4_metadata)
     def q_avi_headers(spark, sf_dir):
         files = fixtures.avi_file_rows()
@@ -8699,40 +7959,6 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             "url string, payload binary").repartition(4)
         return sources.read_avi_headers(df)
     q["avi_headers"] = q_avi_headers
-
-    # Windows .lnk shortcuts ([MS-SHLLINK] — disk-image artifact)
-    def q_lnk_shortcuts(spark, sf_dir):
-        files = fixtures.lnk_file_rows()
-        df = spark.createDataFrame(
-            [(r["url"], r["payload"]) for r in files],
-            "url string, payload binary").repartition(4)
-        return (sources.read_lnk_shortcuts(df).orderBy("url"))
-    q["lnk_shortcuts"] = q_lnk_shortcuts
-
-    # Standard MIDI files (symbolic-music modality)
-    def q_midi_tracks(spark, sf_dir):
-        files = fixtures.midi_file_rows()
-        df = spark.createDataFrame(
-            [(r["url"], r["payload"]) for r in files],
-            "url string, payload binary").repartition(4)
-        return sources.read_midi_files(df)
-    q["midi_tracks"] = q_midi_tracks
-
-    def q_midi_profile(spark, sf_dir):
-        g = spark.read.parquet(_GOLDEN_MIDI)
-        f = (g.where(F.col("row_kind") == "file")
-             .select("url", "format", "division", "bpm",
-                     "time_sig"))
-        t = (g.where(F.col("row_kind") == "track")
-             .groupBy("url")
-             .agg(F.count(F.lit(1)).cast("long")
-                  .alias("n_tracks_present"),
-                  F.sum("n_notes").cast("long")
-                  .alias("total_notes"),
-                  F.max("ticks").alias("max_ticks")))
-        return (f.join(t, "url", "left")
-                .orderBy("url"))
-    q["midi_profile"] = q_midi_profile
 
     # freedesktop .desktop entries (pure-fed VALUES twin — values
     # carry escapes, so the Python parser feeds both engines)
@@ -8768,95 +7994,6 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                 .orderBy("name", "algorithm"))
     q["pgp_key_profile"] = q_pgp_key_profile
 
-    # SWF (legacy Flash — two decades of archived web)
-    def q_swf_files(spark, sf_dir):
-        files = fixtures.swf_file_rows()
-        df = spark.createDataFrame(
-            [(r["url"], r["payload"]) for r in files],
-            "url string, payload binary").repartition(4)
-        return sources.read_swf_files(df)
-    q["swf_files"] = q_swf_files
-
-    def q_swf_tag_profile(spark, sf_dir):
-        g = spark.read.parquet(_GOLDEN_SWF)
-        t = g.where(F.col("row_kind") == "tag")
-        return (t.groupBy("tag_code", "tag_name")
-                .agg(F.sum("n").cast("long").alias("n_tags"),
-                     F.sum("tag_bytes").cast("long")
-                     .alias("total_bytes"),
-                     F.countDistinct("url").cast("long")
-                     .alias("n_files"))
-                .orderBy("tag_code"))
-    q["swf_tag_profile"] = q_swf_tag_profile
-
-    # jar = zip container x class format composition (one decode
-    # per member; pure-fed VALUES twin)
-    def q_jar_class_census(spark, sf_dir):
-        files = fixtures.jar_file_rows()
-        df = spark.createDataFrame(
-            [(r["url"], r["payload"]) for r in files],
-            "url string, payload binary").repartition(2)
-        return (sources.read_jar_classes(df)
-                .orderBy("url", "member"))
-    q["jar_class_census"] = q_jar_class_census
-
-    # RPM packages — the yum-side sibling of the .deb census
-    def q_rpm_packages(spark, sf_dir):
-        files = fixtures.rpm_file_rows()
-        df = spark.createDataFrame(
-            [(r["url"], r["payload"]) for r in files],
-            "url string, payload binary").repartition(4)
-        return sources.read_rpm_packages(df)
-    q["rpm_packages"] = q_rpm_packages
-
-    def q_rpm_dependency_census(spark, sf_dir):
-        # resolve requires -> providing package over the golden:
-        # the deb_dependency_census join shape for the rpm side
-        g = spark.read.parquet(_GOLDEN_RPM)
-        pkgs = (g.where(F.col("row_kind") == "package")
-                .select("url", "name"))
-        deps = (g.where((F.col("row_kind") == "dep")
-                        & (F.col("dep_kind") == "requires"))
-                .select("url", "dep_name"))
-        provs = (g.where((F.col("row_kind") == "dep")
-                         & (F.col("dep_kind") == "provides"))
-                 .select(F.col("url").alias("p_url"),
-                         F.col("dep_name").alias("p_name")))
-        j = (deps.join(pkgs, "url")
-             .join(F.broadcast(provs),
-                   F.col("dep_name") == F.col("p_name"), "left"))
-        prov_pkg = (pkgs.select(
-            F.col("url").alias("p_url"),
-            F.col("name").alias("provider")))
-        return (j.join(F.broadcast(prov_pkg), "p_url", "left")
-                .groupBy("name", "dep_name")
-                .agg(F.max("provider").alias("provider"))
-                .orderBy("name", "dep_name"))
-    q["rpm_dependency_census"] = q_rpm_dependency_census
-
-    # JVM class files — the fourth executable-format member
-    def q_java_classes(spark, sf_dir):
-        files = fixtures.java_class_rows()
-        df = spark.createDataFrame(
-            [(r["url"], r["payload"]) for r in files],
-            "url string, payload binary").repartition(4)
-        return sources.read_java_classes(df)
-    q["java_classes"] = q_java_classes
-
-    def q_java_member_census(spark, sf_dir):
-        g = spark.read.parquet(_GOLDEN_JAVACLASS)
-        m = g.where(F.col("row_kind") == "member")
-        return (m.groupBy("url", "member_kind")
-                .agg(F.count(F.lit(1)).cast("long").alias("n"),
-                     F.sum(F.when(F.col("member_access")
-                                  .contains("static"), 1)
-                           .otherwise(0)).cast("long")
-                     .alias("n_static"),
-                     F.sort_array(F.collect_list("name"))
-                     .alias("names"))
-                .orderBy("url", "member_kind"))
-    q["java_member_census"] = q_java_member_census
-
     # KML placemarks — the gpxx geodata sibling (lon,lat order)
     def q_kml_placemarks(spark, sf_dir):
         files = fixtures.kml_file_rows()
@@ -8881,36 +8018,6 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                      F.max("t_end").alias("latest"))
                 .orderBy("url", "folder"))
     q["kml_folder_stats"] = q_kml_folder_stats
-
-    def q_bplist_type_census(spark, sf_dir):
-        g = spark.read.parquet(_GOLDEN_BPLIST)
-        return (g.groupBy("vtype")
-                .agg(F.count(F.lit(1)).cast("long").alias("n"),
-                     F.countDistinct("url").cast("long")
-                     .alias("n_blobs"))
-                .orderBy("vtype"))
-    q["bplist_type_census"] = q_bplist_type_census
-
-    def q_cbor_tag_profile(spark, sf_dir):
-        g = spark.read.parquet(_GOLDEN_CBOR)
-        depth = F.expr(
-            "CASE WHEN path IS NULL OR path = '' THEN 0 ELSE "
-            "length(path) - length(replace(path, '.', '')) "
-            "+ length(path) - length(replace(path, '[', '')) + 1 "
-            "END")
-        return (g.groupBy("url")
-                .agg(F.bool_and("ok").alias("ok"),
-                     F.sum(F.col("ok").cast("long")).cast("long")
-                     .alias("n_leaves"),
-                     F.sum(F.when(F.col("vtype").contains("@tag"),
-                                  1).otherwise(0)).cast("long")
-                     .alias("n_tagged"),
-                     F.sum(F.when(F.col("vtype") == "bstr", 1)
-                           .otherwise(0)).cast("long")
-                     .alias("n_bstr"),
-                     F.max(depth).cast("int").alias("max_depth"))
-                .orderBy("url"))
-    q["cbor_tag_profile"] = q_cbor_tag_profile
 
     # --- compressed-stream frame index (gzip/bzip2/xz via stdlib,
     # zstd/lz4 walked structurally — the pre-pipeline layout audit)
@@ -8939,141 +8046,6 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                      F.bool_and("ok").alias("all_ok"))
                 .orderBy("format"))
     q["compression_audit"] = q_compression_audit
-
-    # --- PE + Mach-O (the Windows and Apple thirds of the
-    # executable triad; elfx is the third). The dependency graph
-    # unions all three goldens into one (fmt, dep) census — the
-    # cross-platform "what does this bundle link against" view.
-    def q_pe_objects(spark, sf_dir):
-        files = fixtures.pe_file_rows()
-        df = spark.createDataFrame(
-            [(r["url"], r["payload"]) for r in files],
-            "url string, payload binary").repartition(8)
-        return sources.read_pe_objects(df)
-    q["pe_objects"] = q_pe_objects
-
-    def q_macho_objects(spark, sf_dir):
-        files = fixtures.macho_file_rows()
-        df = spark.createDataFrame(
-            [(r["url"], r["payload"]) for r in files],
-            "url string, payload binary").repartition(8)
-        return sources.read_macho_objects(df)
-    q["macho_objects"] = q_macho_objects
-
-    def q_binary_dependency_graph(spark, sf_dir):
-        elf = (spark.read.parquet(_GOLDEN_ELF)
-               .where(F.col("row_kind") == "needed")
-               .select(F.lit("elf").alias("fmt"), "url",
-                       F.col("lib").alias("dep")))
-        pe = (spark.read.parquet(_GOLDEN_PE)
-              .where(F.col("row_kind") == "import")
-              .select(F.lit("pe").alias("fmt"), "url",
-                      F.col("import_dll").alias("dep")))
-        macho = (spark.read.parquet(_GOLDEN_MACHO)
-                 .where(F.col("row_kind") == "dylib")
-                 .select(F.lit("macho").alias("fmt"), "url",
-                         F.col("name").alias("dep")))
-        return (elf.unionByName(pe).unionByName(macho)
-                .groupBy("fmt", "dep")
-                .agg(F.countDistinct("url").cast("long")
-                     .alias("n_objects"),
-                     F.count(F.lit(1)).cast("long")
-                     .alias("n_links"))
-                .orderBy("fmt", "dep"))
-    q["binary_dependency_graph"] = q_binary_dependency_graph
-
-    # --- ar archives + Debian packages (the apt-side dependency
-    # surface: control inflated via stdlib codecs, walked with
-    # tarx, Depends split into groups/alternatives/constraints)
-    def q_ar_archives(spark, sf_dir):
-        files = fixtures.ar_archive_rows()
-        df = spark.createDataFrame(
-            [(r["url"], r["payload"]) for r in files],
-            "url string, payload binary").repartition(8)
-        return sources.read_ar_archives(df)
-    q["ar_archives"] = q_ar_archives
-
-    def q_deb_dependency_census(spark, sf_dir):
-        g = spark.read.parquet(_GOLDEN_AR)
-        deps = g.where(F.col("row_kind") == "dep")
-        pkg = (g.where((F.col("row_kind") == "field")
-                       & (F.col("name") == "Package"))
-               .select(F.col("url").alias("u2"),
-                       F.col("value").alias("package")))
-        return (deps.join(F.broadcast(pkg),
-                          deps.url == F.col("u2"))
-                .groupBy("package", "name")
-                .agg(F.count(F.lit(1)).cast("long")
-                     .alias("n_refs"),
-                     F.max(F.coalesce("version_req", F.lit("")))
-                     .alias("tightest"),
-                     F.max("dep_alt").cast("int")
-                     .alias("max_alt"))
-                .orderBy("package", "name"))
-    q["deb_dependency_census"] = q_deb_dependency_census
-
-    # --- git object stores (exposed-.git corpus: packs with
-    # deltas APPLIED, real SHA-1 ids — git-binary cross-checked in
-    # pytest; history joins commit rows to their parents)
-    def q_git_objects(spark, sf_dir):
-        files = fixtures.git_object_rows()
-        df = spark.createDataFrame(
-            [(r["url"], r["payload"]) for r in files],
-            "url string, payload binary").repartition(8)
-        return sources.read_git_objects(df)
-    q["git_objects"] = q_git_objects
-
-    def q_git_commit_history(spark, sf_dir):
-        g = (spark.read.parquet(_GOLDEN_GIT)
-             .where(F.col("row_kind") == "commit"))
-        child = g.select("oid", "parent", "title",
-                         "author_email", "author_ts")
-        par = (g.select(F.col("oid").alias("p_oid"),
-                        F.col("title").alias("parent_title"))
-               .distinct())
-        return (child.join(F.broadcast(par),
-                           child.parent == par.p_oid, "left")
-                .select("oid", "title", "author_email",
-                        "author_ts", "parent", "parent_title")
-                .distinct()
-                .orderBy("author_ts", "oid", "parent"))
-    q["git_commit_history"] = q_git_commit_history
-
-    # --- ICC color profiles (joins the imagex/exifx world; desc
-    # text decoded from both spec encodings)
-    def q_icc_profiles(spark, sf_dir):
-        files = fixtures.icc_profile_rows()
-        df = spark.createDataFrame(
-            [(r["url"], r["payload"]) for r in files],
-            "url string, payload binary").repartition(4)
-        return sources.read_icc_profiles(df)
-    q["icc_profiles"] = q_icc_profiles
-
-    def q_icc_class_census(spark, sf_dir):
-        g = spark.read.parquet(_GOLDEN_ICC)
-        return (g.groupBy("profile_class", "color_space")
-                .agg(F.sum((F.col("row_kind") == "profile")
-                           .cast("long")).cast("long")
-                     .alias("n_profiles"),
-                     F.sum((F.col("row_kind") == "tag")
-                           .cast("long")).cast("long")
-                     .alias("n_tags"),
-                     F.count("text").cast("long")
-                     .alias("n_texts"),
-                     F.min("created").alias("oldest"),
-                     F.max("version").alias("max_version"))
-                .orderBy("profile_class", "color_space"))
-    q["icc_class_census"] = q_icc_class_census
-
-    # --- ISO 9660 disc images (mirror/firmware downloads; Joliet
-    # names win; both-endian fields cross-checked)
-    def q_iso_images(spark, sf_dir):
-        files = fixtures.iso_image_rows()
-        df = spark.createDataFrame(
-            [(r["url"], r["payload"]) for r in files],
-            "url string, payload binary").repartition(4)
-        return sources.read_iso_images(df)
-    q["iso_images"] = q_iso_images
 
     # --- legacy OLE2/CFB office (.ppt/.doc — the reference's
     # loaders.py:18-37 partition_ppt branch; extractor/cfbx.py)
@@ -9147,27 +8119,6 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                      .alias("n_props"))
                 .orderBy("url"))
     q["legacy_office_metadata"] = q_legacy_office_metadata
-
-    def q_iso_tree_profile(spark, sf_dir):
-        g = spark.read.parquet(_GOLDEN_ISO)
-        depth = F.expr(
-            "CASE WHEN path IS NULL THEN NULL ELSE "
-            "length(path) - length(replace(path, '/', '')) + 1 "
-            "END")
-        return (g.groupBy("url", "volume_id", "has_joliet")
-                .agg(F.sum(F.when(F.col("row_kind") == "member",
-                                  1).otherwise(0)).cast("long")
-                     .alias("n_members"),
-                     F.sum(F.when(F.col("is_dir"), 1)
-                           .otherwise(0)).cast("long")
-                     .alias("n_dirs"),
-                     F.sum(F.when(~F.col("is_dir"),
-                                  F.col("size")).otherwise(0))
-                     .cast("long").alias("file_bytes"),
-                     F.max(depth).cast("int").alias("max_depth"),
-                     F.min("recorded").alias("oldest"))
-                .orderBy("url"))
-    q["iso_tree_profile"] = q_iso_tree_profile
 
     return q
 
@@ -12346,69 +11297,6 @@ def oracle_sql() -> dict[str, str]:
                    count(DISTINCT subj)::bigint AS n_subjects
             FROM read_parquet('{_GOLDEN_NTRIPLES}')
             GROUP BY pred ORDER BY pred""",
-        # access logs: committed golden pinned by
-        # tests/test_ntlog.py against the pure re-derivation
-        "access_log_rows": f"""
-            SELECT url, pos, remote, ident, auth_user, epoch,
-                   method,
-                   path, protocol, request, status, bytes_sent,
-                   referer, user_agent
-            FROM read_parquet('{_GOLDEN_ACCESSLOG}')""",
-        "access_log_profile": f"""
-            SELECT url, count(*)::bigint AS n_requests,
-                   sum(CASE WHEN status // 100 = 2 THEN 1 ELSE 0
-                       END)::bigint AS n_2xx,
-                   sum(CASE WHEN status // 100 = 4 THEN 1 ELSE 0
-                       END)::bigint AS n_4xx,
-                   sum(coalesce(bytes_sent, 0))::bigint
-                     AS bytes_total,
-                   sum(CASE WHEN lower(user_agent) LIKE '%bot%'
-                       THEN 1 ELSE 0 END)::bigint AS n_bot,
-                   sum(CASE WHEN method IS NULL THEN 1 ELSE 0
-                       END)::bigint AS n_garbage_requests,
-                   max(epoch) - min(epoch) AS span_s
-            FROM read_parquet('{_GOLDEN_ACCESSLOG}')
-            GROUP BY url ORDER BY url""",
-        # CIDR LPM: TRUE dual-engine — both sides derive start/end/
-        # bucket from the SAME raw (cidr, asn, org) strings
-        "ip_cidr_lookup": f"""
-            WITH {_netblocks_cte()}
-            SELECT ip, ip_num, prefix, cidr, asn, org FROM lpm
-            ORDER BY ip""",
-        "log_network_profile": f"""
-            WITH {_netblocks_cte()},
-            logs AS (
-              SELECT * FROM read_parquet('{_GOLDEN_ACCESSLOG}')
-            ),
-            j AS (
-              SELECT l.*, m.org AS blk_org
-              FROM logs l LEFT JOIN lpm m ON l.remote = m.ip
-            )
-            SELECT coalesce(blk_org, '(unrouted)') AS org,
-                   count(*)::bigint AS n_requests,
-                   count(DISTINCT remote)::bigint AS n_remotes,
-                   sum(coalesce(bytes_sent, 0))::bigint
-                     AS bytes_total,
-                   sum(CASE WHEN lower(user_agent) LIKE '%bot%'
-                       THEN 1 ELSE 0 END)::bigint AS n_bot
-            FROM j GROUP BY 1 ORDER BY org""",
-        # UA classification: rule tables generated, never retyped
-        "ua_classify": f"""
-            WITH {_ua_values()}
-            SELECT pos, {_ua_twin_cols('ua')}
-            FROM ua ORDER BY pos""",
-        "ua_profile": f"""
-            WITH c AS (
-              SELECT remote, {_ua_twin_cols('user_agent')}
-              FROM read_parquet('{_GOLDEN_ACCESSLOG}')
-            )
-            SELECT family, os, is_bot,
-                   count(*)::bigint AS n,
-                   count(DISTINCT remote)::bigint AS n_remotes,
-                   count(DISTINCT bot_name)::bigint AS n_named_bots
-            FROM c GROUP BY family, os, is_bot
-            ORDER BY family ASC NULLS FIRST, os ASC NULLS FIRST,
-                     is_bot ASC NULLS FIRST""",
         # id-time: both engines re-derive clocks from raw strings
         "id_time_classify": f"""
             WITH {_id_values()}
@@ -12424,23 +11312,6 @@ def oracle_sql() -> dict[str, str]:
                    min(ts_ms) AS first_ms, max(ts_ms) AS last_ms
             FROM c WHERE ts_ms IS NOT NULL
             GROUP BY kind, day ORDER BY kind, day""",
-        # JWT: stage CTEs generated by the same stage list Spark runs
-        "jwt_rows": f"""
-            WITH {_jwt_cte()}
-            SELECT pos, token, well_formed, alg, typ, kid, iss, sub,
-                   exp, iat, expired, n_claims::int AS n_claims,
-                   sig_chars::int AS sig_chars
-            FROM jwt ORDER BY pos""",
-        "jwt_security_profile": f"""
-            WITH {_jwt_cte()}
-            SELECT alg, count(*)::bigint AS n,
-                   sum(coalesce(expired::int, 0))::bigint
-                     AS n_expired,
-                   sum(CASE WHEN sig_chars = 0 THEN 1 ELSE 0
-                       END)::bigint AS n_unsigned,
-                   count(DISTINCT iss)::bigint AS n_issuers
-            FROM jwt WHERE well_formed
-            GROUP BY alg ORDER BY alg""",
         # GeoJSON: committed golden pinned by tests/test_geojson.py
         # against the pure re-derivation
         "geojson_features": f"""
@@ -12591,32 +11462,6 @@ def oracle_sql() -> dict[str, str]:
             FROM read_parquet('{_GOLDEN_STEMS}')
             GROUP BY stem HAVING count(*) > 1
             ORDER BY stem""",
-        # torrent file rows: committed golden pinned by
-        # tests/test_torrent.py against the pure re-derivation
-        "torrent_files": f"""
-            SELECT url, file_idx, path, length, name, infohash,
-                   piece_length, n_pieces, private, announce,
-                   n_trackers, creation_date, created_by
-            FROM read_parquet('{_GOLDEN_TORRENTS}')""",
-        # integrity audit: golden both sides; `//` == Spark `div`
-        # on non-negatives
-        "torrent_summary": f"""
-            WITH s AS (
-              SELECT url, max(name) AS name,
-                     max(infohash) AS infohash,
-                     count(*)::bigint AS n_files,
-                     sum(length)::bigint AS total_bytes,
-                     max(piece_length) AS piece_length,
-                     max(n_pieces) AS n_pieces,
-                     max(private) AS private
-              FROM read_parquet('{_GOLDEN_TORRENTS}')
-              GROUP BY url)
-            SELECT url, name, infohash, n_files, total_bytes,
-                   piece_length, n_pieces, private,
-                   (n_pieces::bigint =
-                    (total_bytes + piece_length - 1) // piece_length)
-                     AS pieces_ok
-            FROM s ORDER BY url""",
         # vCard flat rows: committed golden pinned by
         # tests/test_vcard.py against the pure re-derivation
         "vcard_props": f"""
@@ -12674,81 +11519,6 @@ def oracle_sql() -> dict[str, str]:
                    count(DISTINCT url)::bigint AS n_archives
             FROM read_parquet('{_GOLDEN_MHTML}')
             GROUP BY content_type ORDER BY content_type""",
-        # X.509 rows: committed golden pinned by tests/test_certx.py
-        # against the pure re-derivation
-        "cert_rows": f"""
-            SELECT url, chain_pos, version, serial, sig_alg,
-                   issuer_cn, issuer_dn, subject_cn, subject_dn,
-                   not_before, not_after, pubkey_alg, pubkey_bits,
-                   curve, san_dns, san_ip, is_ca, self_signed,
-                   key_usage, ext_key_usage, fingerprint_sha256
-            FROM read_parquet('{_GOLDEN_CERTS}')""",
-        # hygiene: golden both sides; the covered/weak predicates and
-        # the as-of instant are GENERATED from operators.certs
-        # constants (never retyped); ISO strings compare as strings
-        "cert_host_hygiene": f"""
-            WITH g AS (SELECT * FROM
-                       read_parquet('{_GOLDEN_CERTS}')
-                       WHERE chain_pos = 0),
-            h AS (SELECT *, split_part(split_part(split_part(
-                       url, '://', 2), '/', 1), ':', 1) AS host
-                  FROM g),
-            flags AS (
-              SELECT url, host, subject_cn, sig_alg, pubkey_alg,
-                     pubkey_bits, not_after,
-                     not_after < '{_certops.CERT_AS_OF}' AS expired,
-                     not_before > '{_certops.CERT_AS_OF}'
-                       AS not_yet_valid,
-                     self_signed,
-                     (len(san_dns) = 0 AND len(san_ip) = 0)
-                       AS no_san,
-                     len(list_filter(san_dns, s ->
-                         {_certops.covered_sql('s', 'host')})) > 0
-                       AS host_covered,
-                     (len(san_dns) > 0) AS has_dns,
-                     {_certops.weak_sql()} AS weak_crypto
-              FROM h)
-            SELECT url, host, subject_cn, sig_alg, pubkey_alg,
-                   pubkey_bits, not_after, expired, not_yet_valid,
-                   self_signed, no_san, host_covered,
-                   (has_dns AND NOT host_covered) AS san_mismatch,
-                   weak_crypto,
-                   CASE WHEN expired OR not_yet_valid THEN 'F'
-                        WHEN self_signed
-                             OR (has_dns AND NOT host_covered)
-                          THEN 'D'
-                        WHEN weak_crypto THEN 'C'
-                        WHEN no_san THEN 'B'
-                        ELSE 'A' END AS grade
-            FROM flags""",
-        # chain audit: golden both sides; arg_max == Spark max_by
-        "cert_chain_integrity": f"""
-            WITH g AS (SELECT * FROM
-                       read_parquet('{_GOLDEN_CERTS}')),
-            per_url AS (
-              SELECT url, count(*)::bigint AS n_certs,
-                     arg_max(self_signed, chain_pos)
-                       AS top_self_signed
-              FROM g GROUP BY url),
-            pairs AS (
-              SELECT c.url, c.issuer_dn = p.subject_dn AS linked
-              FROM g c JOIN g p
-                ON p.url = c.url AND p.chain_pos = c.chain_pos + 1),
-            l AS (SELECT url, bool_and(linked) AS chain_linked
-                  FROM pairs GROUP BY url)
-            SELECT per_url.url, n_certs,
-                   coalesce(chain_linked, TRUE) AS chain_linked,
-                   top_self_signed
-            FROM per_url LEFT JOIN l USING (url)
-            ORDER BY per_url.url""",
-        "cert_crypto_profile": f"""
-            SELECT sig_alg, pubkey_alg, count(*)::bigint AS n_certs,
-                   sum(CASE WHEN {_certops.weak_sql()} THEN 1
-                       ELSE 0 END)::bigint AS n_weak,
-                   count(DISTINCT url)::bigint AS n_hosts
-            FROM read_parquet('{_GOLDEN_CERTS}')
-            GROUP BY sig_alg, pubkey_alg
-            ORDER BY sig_alg, pubkey_alg""",
         "po_catalog_stats": f"""
             WITH g AS (SELECT * FROM
                        read_parquet('{_GOLDEN_PO}')),
@@ -12904,195 +11674,6 @@ def oracle_sql() -> dict[str, str]:
             WHERE track_id IS NOT NULL
             GROUP BY handler, codec
             ORDER BY handler, codec""",
-        # SQLite catalog: committed golden pinned by
-        # tests/test_sqlitex.py against stdlib sqlite3 AND the pure
-        # re-derivation
-        "sqlite_objects": f"""
-            SELECT url, pos, otype, name, tbl_name, rootpage,
-                   n_rows, sql_chars, page_size, encoding, n_pages,
-                   freelist_pages
-            FROM read_parquet('{_GOLDEN_SQLITE}')""",
-        "sqlite_db_profile": f"""
-            SELECT url,
-                   sum(CASE WHEN otype = 'table' THEN 1 ELSE 0
-                       END)::bigint AS n_tables,
-                   sum(CASE WHEN otype = 'index' THEN 1 ELSE 0
-                       END)::bigint AS n_indexes,
-                   sum(CASE WHEN otype = 'view' THEN 1 ELSE 0
-                       END)::bigint AS n_views,
-                   sum(CASE WHEN otype = 'trigger' THEN 1 ELSE 0
-                       END)::bigint AS n_triggers,
-                   sum(coalesce(n_rows, 0))::bigint AS rows_total,
-                   min(page_size) AS page_size,
-                   min(encoding) AS encoding,
-                   min(n_pages) AS n_pages,
-                   min(freelist_pages) AS freelist_pages
-            FROM read_parquet('{_GOLDEN_SQLITE}')
-            GROUP BY url ORDER BY url""",
-        # WebAssembly: committed golden pinned by tests/test_wasmx.py
-        # against the pure re-derivation
-        "wasm_sections": f"""
-            SELECT url, pos, row_kind, sec_id, name, module,
-                   sym_kind, sym_index, size, n_items
-            FROM read_parquet('{_GOLDEN_WASM}')""",
-        "wasm_module_profile": f"""
-            SELECT url,
-                   sum(CASE WHEN row_kind = 'section' THEN 1
-                       ELSE 0 END)::bigint AS n_sections,
-                   sum(CASE WHEN row_kind = 'import' THEN 1
-                       ELSE 0 END)::bigint AS n_imports,
-                   sum(CASE WHEN row_kind = 'export' THEN 1
-                       ELSE 0 END)::bigint AS n_exports,
-                   sum(CASE WHEN row_kind = 'section'
-                            AND name = 'code' THEN n_items
-                       ELSE 0 END)::bigint AS code_fns,
-                   sum(CASE WHEN row_kind = 'section'
-                            AND sec_id = 0 THEN 1
-                       ELSE 0 END)::bigint AS n_custom,
-                   bool_or(name = 'custom:sourceMappingURL')
-                     AS has_sourcemap,
-                   sum(CASE WHEN row_kind = 'export'
-                            AND sym_kind = 'func' THEN 1
-                       ELSE 0 END)::bigint AS exported_funcs
-            FROM read_parquet('{_GOLDEN_WASM}')
-            GROUP BY url ORDER BY url""",
-        # libpcap: committed golden pinned by tests/test_pcapx.py
-        # against the pure re-derivation; flows read the golden on
-        # BOTH sides (direction-canonical least/greatest keys)
-        "pcap_packets": f"""
-            SELECT url, pos, ts_ms, orig_len, incl_len, src_mac,
-                   dst_mac, ethertype, src_ip, dst_ip, proto,
-                   src_port, dst_port, tcp_flags
-            FROM read_parquet('{_GOLDEN_PCAP}')""",
-        "pcap_flows": f"""
-            WITH p AS (
-              SELECT *,
-                     src_ip || '#' || src_port AS ks,
-                     dst_ip || '#' || dst_port AS kd
-              FROM read_parquet('{_GOLDEN_PCAP}')
-              WHERE proto IN ('tcp', 'udp')
-                AND src_ip IS NOT NULL
-                AND src_port IS NOT NULL)
-            SELECT url, proto,
-                   least(ks, kd) AS ep_a,
-                   greatest(ks, kd) AS ep_b,
-                   count(*)::bigint AS n_packets,
-                   sum(orig_len)::bigint AS bytes_total,
-                   min(ts_ms) AS first_ms, max(ts_ms) AS last_ms,
-                   sum(CASE WHEN tcp_flags = 'S' THEN 1 ELSE 0
-                       END)::bigint AS n_syn
-            FROM p
-            GROUP BY url, proto, least(ks, kd), greatest(ks, kd)
-            ORDER BY url, proto, ep_a, ep_b""",
-        # DNS: committed golden pinned by tests/test_dnsx.py
-        # against the pure re-derivation; resolution joins golden
-        # to golden on both sides
-        "dns_records": f"""
-            SELECT url, pos, section, name, rtype, ttl, rdata,
-                   msg_id, is_response, opcode, rcode, truncated
-            FROM read_parquet('{_GOLDEN_DNS}')""",
-        "dns_cname_resolution": f"""
-            WITH ans AS (
-              SELECT * FROM read_parquet('{_GOLDEN_DNS}')
-              WHERE section = 'answer')
-            SELECT c.url AS url, c.name AS alias_name,
-                   c.rdata AS canonical, a.rtype AS addr_type,
-                   a.rdata AS address
-            FROM ans c JOIN ans a
-              ON a.url = c.url AND a.name = c.rdata
-             AND a.rtype IN ('A', 'AAAA')
-            WHERE c.rtype = 'CNAME'
-            ORDER BY url, alias_name, addr_type, address""",
-        # fonts: committed golden pinned by tests/test_fontx.py
-        # against the pure re-derivation
-        "font_metadata": f"""
-            SELECT url, pos, row_kind, kind, flavor, n_tables,
-                   tag, "offset", length, comp_length, name_id,
-                   name_kind, platform, value
-            FROM read_parquet('{_GOLDEN_FONTS}')""",
-        "font_family_census": f"""
-            SELECT kind, flavor,
-                   sum(CASE WHEN row_kind = 'font' THEN 1 ELSE 0
-                       END)::bigint AS n_fonts,
-                   sum(CASE WHEN row_kind = 'table' THEN 1 ELSE 0
-                       END)::bigint AS n_table_entries,
-                   sum(CASE WHEN row_kind = 'name' THEN 1 ELSE 0
-                       END)::bigint AS n_name_strings,
-                   count(DISTINCT CASE WHEN name_kind = 'family'
-                         THEN value END)::bigint AS n_families
-            FROM read_parquet('{_GOLDEN_FONTS}')
-            GROUP BY kind, flavor ORDER BY kind, flavor""",
-        # Avro: committed golden pinned by tests/test_avrox.py
-        # against the pure re-derivation
-        "avro_container": f"""
-            SELECT url, pos, row_kind, codec, schema_type,
-                   schema_name, sync_ok, field_name, field_type,
-                   n_records, size, raw_size
-            FROM read_parquet('{_GOLDEN_AVRO}')""",
-        "avro_layout_audit": f"""
-            SELECT url, codec,
-                   sum(CASE WHEN row_kind = 'block' THEN 1 ELSE 0
-                       END)::bigint AS n_blocks,
-                   sum(CASE WHEN row_kind = 'block'
-                       THEN n_records ELSE 0 END)::bigint
-                     AS records_total,
-                   sum(CASE WHEN row_kind = 'block' THEN size
-                       ELSE 0 END)::bigint AS bytes_ondisk,
-                   sum(CASE WHEN row_kind = 'block' THEN raw_size
-                       ELSE 0 END)::bigint AS bytes_raw,
-                   sum(CASE WHEN row_kind = 'field' THEN 1 ELSE 0
-                       END)::bigint AS n_fields,
-                   bool_or(NOT sync_ok) AS any_sync_break,
-                   CASE WHEN sum(CASE WHEN row_kind = 'block'
-                                 THEN raw_size ELSE 0 END) > 0
-                        THEN sum(CASE WHEN row_kind = 'block'
-                                 THEN size ELSE 0 END)::bigint
-                             * 1000
-                             // sum(CASE WHEN row_kind = 'block'
-                                    THEN raw_size ELSE 0
-                                    END)::bigint
-                   END AS ratio_permille
-            FROM read_parquet('{_GOLDEN_AVRO}')
-            GROUP BY url, codec ORDER BY url""",
-        # protobuf: committed golden pinned by tests/test_protox.py
-        # against the pure re-derivation
-        "protobuf_census": f"""
-            SELECT url, path, field_no, wire_type, kind, n,
-                   bytes_total
-            FROM read_parquet('{_GOLDEN_PROTOBUF}')""",
-        "protobuf_shape_profile": f"""
-            SELECT url, count(*)::bigint AS n_field_slots,
-                   sum(n)::bigint AS fields_total,
-                   sum(bytes_total)::bigint AS value_bytes,
-                   max(CASE WHEN path = '' THEN 0
-                       ELSE length(path)
-                            - length(replace(path, '.', '')) + 1
-                       END)::int AS max_depth,
-                   sum(CASE WHEN kind = 'msg' THEN 1 ELSE 0
-                       END)::bigint AS n_msg_slots,
-                   sum(CASE WHEN kind = 'str' THEN 1 ELSE 0
-                       END)::bigint AS n_str_slots
-            FROM read_parquet('{_GOLDEN_PROTOBUF}')
-            GROUP BY url ORDER BY url""",
-        # ELF: committed golden pinned by tests/test_elfx.py
-        # against the pure re-derivation
-        "elf_objects": f"""
-            SELECT url, pos, row_kind, cls, endian, etype, machine,
-                   entry, name, stype, flags, "offset", size, lib
-            FROM read_parquet('{_GOLDEN_ELF}')""",
-        "elf_dependency_census": f"""
-            SELECT machine, etype,
-                   sum(CASE WHEN row_kind = 'file' THEN 1 ELSE 0
-                       END)::bigint AS n_objects,
-                   sum(CASE WHEN row_kind = 'section' THEN 1
-                       ELSE 0 END)::bigint AS n_sections,
-                   sum(CASE WHEN row_kind = 'section' THEN size
-                       ELSE 0 END)::bigint AS section_bytes,
-                   sum(CASE WHEN flags LIKE '%X%' THEN 1 ELSE 0
-                       END)::bigint AS n_exec_sections,
-                   count(DISTINCT lib)::bigint AS n_distinct_deps
-            FROM read_parquet('{_GOLDEN_ELF}')
-            GROUP BY machine, etype ORDER BY machine, etype""",
         # TOML: committed golden pinned by tests/test_tomlx.py
         # against stdlib tomllib AND the pure re-derivation
         "toml_records": f"""
@@ -13105,32 +11686,6 @@ def oracle_sql() -> dict[str, str]:
                    max(key_path) AS last_key
             FROM read_parquet('{_GOLDEN_TOML}') WHERE ok
             GROUP BY vtype ORDER BY vtype""",
-        # CBOR: committed golden pinned by tests/test_cborx.py
-        # against the pure re-derivation
-        "cbor_records": f"""
-            SELECT url, pos, ok, path, vtype, value_text
-            FROM read_parquet('{_GOLDEN_CBOR}')""",
-        # msgpack: committed golden pinned by tests/test_msgpackx.py
-        "msgpack_records": f"""
-            SELECT url, pos, ok, path, vtype, value_text
-            FROM read_parquet('{_GOLDEN_MSGPACK}')""",
-        "msgpack_type_census": f"""
-            SELECT vtype, count(*)::bigint AS n,
-                   count(DISTINCT url)::bigint AS n_blobs,
-                   max(length(path))::int AS max_path_len
-            FROM read_parquet('{_GOLDEN_MSGPACK}')
-            GROUP BY vtype ORDER BY vtype""",
-        # bplist: committed golden pinned by tests/test_bplistx.py
-        # (plistlib is the independent parity oracle there)
-        "bplist_records": f"""
-            SELECT url, pos, ok, path, vtype, value_text
-            FROM read_parquet('{_GOLDEN_BPLIST}')""",
-        "bplist_type_census": f"""
-            SELECT vtype, count(*)::bigint AS n,
-                   count(DISTINCT url)::bigint AS n_blobs
-            FROM read_parquet('{_GOLDEN_BPLIST}')
-            GROUP BY vtype ORDER BY vtype""",
-        "jar_class_census": _jar_census_oracle(),
         "desktop_entries": _desktop_entries_oracle(),
         # AVI: committed golden pinned by tests/test_avix.py
         "avi_headers": f"""
@@ -13138,32 +11693,6 @@ def oracle_sql() -> dict[str, str]:
                    width, height, total_frames, n_streams,
                    stream_kind, handler, rate_milli, length
             FROM read_parquet('{_GOLDEN_AVI}')""",
-        # .lnk: committed golden pinned by tests/test_lnkx.py
-        "lnk_shortcuts": f"""
-            SELECT url, flags, attributes, created, accessed,
-                   modified, target_size, icon_index, show_cmd,
-                   volume_label, base_path, common_suffix, name,
-                   rel_path, workdir, arguments, icon_location
-            FROM read_parquet('{_GOLDEN_LNK}')
-            ORDER BY url""",
-        # MIDI: committed golden pinned by tests/test_midix.py
-        "midi_tracks": f"""
-            SELECT url, pos, row_kind, format, n_tracks, division,
-                   smpte, tempo_us, bpm, time_sig, track_name,
-                   n_events, n_notes, ticks
-            FROM read_parquet('{_GOLDEN_MIDI}')""",
-        "midi_profile": f"""
-            WITH g AS (SELECT * FROM read_parquet('{_GOLDEN_MIDI}')),
-            f AS (SELECT url, format, division, bpm, time_sig
-                  FROM g WHERE row_kind = 'file'),
-            t AS (SELECT url,
-                         count(*)::bigint AS n_tracks_present,
-                         sum(n_notes)::bigint AS total_notes,
-                         max(ticks) AS max_ticks
-                  FROM g WHERE row_kind = 'track' GROUP BY url)
-            SELECT f.*, t.n_tracks_present, t.total_notes,
-                   t.max_ticks
-            FROM f LEFT JOIN t USING (url) ORDER BY url""",
         # OpenPGP: committed golden pinned by tests/test_pgpx.py
         # (real gpg output is the parity oracle there)
         "pgp_blocks": f"""
@@ -13179,60 +11708,6 @@ def oracle_sql() -> dict[str, str]:
             FROM read_parquet('{_GOLDEN_PGP}')
             WHERE row_kind = 'packet'
             GROUP BY name, algorithm ORDER BY name, algorithm""",
-        # SWF: committed golden pinned by tests/test_swfx.py
-        "swf_files": f"""
-            SELECT url, pos, row_kind, compression, version,
-                   declared_len, width_px, height_px, frame_rate,
-                   frame_count, tag_code, tag_name, n, tag_bytes
-            FROM read_parquet('{_GOLDEN_SWF}')""",
-        "swf_tag_profile": f"""
-            SELECT tag_code, tag_name,
-                   sum(n)::bigint AS n_tags,
-                   sum(tag_bytes)::bigint AS total_bytes,
-                   count(DISTINCT url)::bigint AS n_files
-            FROM read_parquet('{_GOLDEN_SWF}')
-            WHERE row_kind = 'tag'
-            GROUP BY tag_code, tag_name ORDER BY tag_code""",
-        # RPM: committed golden pinned by tests/test_rpmx.py
-        "rpm_packages": f"""
-            SELECT url, pos, row_kind, name, version, release,
-                   arch, license, summary, payload_format,
-                   payload_compressor, dep_kind, dep_name,
-                   dep_version
-            FROM read_parquet('{_GOLDEN_RPM}')""",
-        "rpm_dependency_census": f"""
-            WITH g AS (SELECT * FROM read_parquet('{_GOLDEN_RPM}')),
-            pkgs AS (SELECT url, name FROM g
-                     WHERE row_kind = 'package'),
-            deps AS (SELECT url, dep_name FROM g
-                     WHERE row_kind = 'dep'
-                       AND dep_kind = 'requires'),
-            provs AS (SELECT url AS p_url, dep_name AS p_name
-                      FROM g WHERE row_kind = 'dep'
-                        AND dep_kind = 'provides')
-            SELECT pkgs.name, deps.dep_name,
-                   max(pp.name) AS provider
-            FROM deps JOIN pkgs USING (url)
-            LEFT JOIN provs ON deps.dep_name = provs.p_name
-            LEFT JOIN pkgs pp ON pp.url = provs.p_url
-            GROUP BY pkgs.name, deps.dep_name
-            ORDER BY pkgs.name, deps.dep_name""",
-        # JVM class files: committed golden pinned by
-        # tests/test_javaclassx.py (javac 17 is the independent
-        # parity oracle there)
-        "java_classes": f"""
-            SELECT url, pos, row_kind, class_name, super_name,
-                   java_version, access, n_cp, source_file,
-                   member_kind, name, descriptor, member_access
-            FROM read_parquet('{_GOLDEN_JAVACLASS}')""",
-        "java_member_census": f"""
-            SELECT url, member_kind, count(*)::bigint AS n,
-                   sum(CASE WHEN member_access LIKE '%static%'
-                       THEN 1 ELSE 0 END)::bigint AS n_static,
-                   list(name ORDER BY name) AS names
-            FROM read_parquet('{_GOLDEN_JAVACLASS}')
-            WHERE row_kind = 'member'
-            GROUP BY url, member_kind ORDER BY url, member_kind""",
         # KML: committed golden pinned by tests/test_kmlx.py
         "kml_placemarks": f"""
             SELECT url, pos, folder, name, gtype, n_points,
@@ -13251,22 +11726,6 @@ def oracle_sql() -> dict[str, str]:
                    max(t_end) AS latest
             FROM read_parquet('{_GOLDEN_KML}')
             GROUP BY url, folder ORDER BY url, folder""",
-        "cbor_tag_profile": f"""
-            SELECT url, bool_and(ok) AS ok,
-                   sum(ok::int)::bigint AS n_leaves,
-                   sum(CASE WHEN vtype LIKE '%@tag%' THEN 1
-                       ELSE 0 END)::bigint AS n_tagged,
-                   sum(CASE WHEN vtype = 'bstr' THEN 1 ELSE 0
-                       END)::bigint AS n_bstr,
-                   max(CASE WHEN path IS NULL OR path = ''
-                       THEN 0 ELSE
-                       length(path)
-                       - length(replace(path, '.', ''))
-                       + length(path)
-                       - length(replace(path, '[', '')) + 1
-                       END)::int AS max_depth
-            FROM read_parquet('{_GOLDEN_CBOR}')
-            GROUP BY url ORDER BY url""",
         # compressed frames: committed golden pinned by
         # tests/test_compx.py against the pure re-derivation
         "compressed_frames": f"""
@@ -13283,94 +11742,6 @@ def oracle_sql() -> dict[str, str]:
                    bool_and(ok) AS all_ok
             FROM read_parquet('{_GOLDEN_COMP}')
             GROUP BY format ORDER BY format""",
-        # PE / Mach-O: committed goldens pinned by
-        # tests/test_pex_machox.py against the pure re-derivation;
-        # the dependency graph unions all three executable goldens
-        "pe_objects": f"""
-            SELECT url, pos, row_kind, machine, kind, is_dll,
-                   n_sections, pe_timestamp, name, vsize, rva,
-                   rawsize, flags, import_dll
-            FROM read_parquet('{_GOLDEN_PE}')""",
-        "macho_objects": f"""
-            SELECT url, pos, row_kind, fat, slice_no, arch, cpu,
-                   bits, endian, filetype, name, nsects, link_kind
-            FROM read_parquet('{_GOLDEN_MACHO}')""",
-        "binary_dependency_graph": f"""
-            WITH deps AS (
-              SELECT 'elf' AS fmt, url, lib AS dep
-              FROM read_parquet('{_GOLDEN_ELF}')
-              WHERE row_kind = 'needed'
-              UNION ALL
-              SELECT 'pe' AS fmt, url, import_dll AS dep
-              FROM read_parquet('{_GOLDEN_PE}')
-              WHERE row_kind = 'import'
-              UNION ALL
-              SELECT 'macho' AS fmt, url, name AS dep
-              FROM read_parquet('{_GOLDEN_MACHO}')
-              WHERE row_kind = 'dylib')
-            SELECT fmt, dep,
-                   count(DISTINCT url)::bigint AS n_objects,
-                   count(*)::bigint AS n_links
-            FROM deps GROUP BY fmt, dep ORDER BY fmt, dep""",
-        # ar/.deb: committed golden pinned by tests/test_arx.py
-        # against the pure re-derivation
-        "ar_archives": f"""
-            SELECT url, pos, row_kind, kind, name, mtime, mode,
-                   size, value, dep_group, dep_alt, version_req
-            FROM read_parquet('{_GOLDEN_AR}')""",
-        "deb_dependency_census": f"""
-            WITH g AS (SELECT * FROM read_parquet('{_GOLDEN_AR}')),
-            pkg AS (
-              SELECT url, value AS package FROM g
-              WHERE row_kind = 'field' AND name = 'Package')
-            SELECT p.package AS package, d.name AS name,
-                   count(*)::bigint AS n_refs,
-                   max(coalesce(d.version_req, '')) AS tightest,
-                   max(d.dep_alt)::int AS max_alt
-            FROM g d JOIN pkg p ON p.url = d.url
-            WHERE d.row_kind = 'dep'
-            GROUP BY p.package, d.name
-            ORDER BY package, name""",
-        # git: committed golden pinned by tests/test_gitx.py
-        # against the pure re-derivation + the git binary
-        "git_objects": f"""
-            SELECT url, pos, row_kind, container, otype, size,
-                   packed_size, oid, delta_of, tree, parent,
-                   author_email, author_ts, title, mode, name,
-                   entry_sha
-            FROM read_parquet('{_GOLDEN_GIT}')""",
-        "git_commit_history": f"""
-            WITH c AS (
-              SELECT * FROM read_parquet('{_GOLDEN_GIT}')
-              WHERE row_kind = 'commit'),
-            par AS (SELECT DISTINCT oid AS p_oid,
-                           title AS parent_title FROM c)
-            SELECT DISTINCT c.oid AS oid, c.title AS title,
-                   c.author_email AS author_email,
-                   c.author_ts AS author_ts,
-                   c.parent AS parent, par.parent_title
-                     AS parent_title
-            FROM c LEFT JOIN par ON par.p_oid = c.parent
-            ORDER BY author_ts, oid, parent""",
-        # ICC: committed golden pinned by tests/test_iccx.py
-        # against the pure re-derivation
-        "icc_profiles": f"""
-            SELECT url, pos, row_kind, profile_class, color_space,
-                   pcs, version, intent, created, n_tags, sig,
-                   tag_offset, tag_size, text
-            FROM read_parquet('{_GOLDEN_ICC}')""",
-        "icc_class_census": f"""
-            SELECT profile_class, color_space,
-                   sum(CASE WHEN row_kind = 'profile' THEN 1
-                       ELSE 0 END)::bigint AS n_profiles,
-                   sum(CASE WHEN row_kind = 'tag' THEN 1 ELSE 0
-                       END)::bigint AS n_tags,
-                   count(text)::bigint AS n_texts,
-                   min(created) AS oldest,
-                   max(version) AS max_version
-            FROM read_parquet('{_GOLDEN_ICC}')
-            GROUP BY profile_class, color_space
-            ORDER BY profile_class, color_space""",
         # legacy OLE2/CFB office: committed golden pinned by
         # tests/test_cfbx.py against the pure re-derivation
         "cfb_documents": f"""
@@ -13409,26 +11780,4 @@ def oracle_sql() -> dict[str, str]:
                    count(*)::bigint AS n_props
             FROM read_parquet('{_GOLDEN_OLEPS}')
             GROUP BY url ORDER BY url""",
-        # ISO 9660: committed golden pinned by tests/test_isox.py
-        # against the pure re-derivation
-        "iso_images": f"""
-            SELECT url, pos, row_kind, volume_id, system_id,
-                   n_sectors, block_size, has_joliet, path,
-                   is_dir, size, lba, recorded
-            FROM read_parquet('{_GOLDEN_ISO}')""",
-        "iso_tree_profile": f"""
-            SELECT url, volume_id, has_joliet,
-                   sum(CASE WHEN row_kind = 'member' THEN 1
-                       ELSE 0 END)::bigint AS n_members,
-                   sum(CASE WHEN is_dir THEN 1 ELSE 0
-                       END)::bigint AS n_dirs,
-                   sum(CASE WHEN NOT is_dir THEN size ELSE 0
-                       END)::bigint AS file_bytes,
-                   max(CASE WHEN path IS NULL THEN NULL ELSE
-                       length(path)
-                       - length(replace(path, '/', '')) + 1
-                       END)::int AS max_depth,
-                   min(recorded) AS oldest
-            FROM read_parquet('{_GOLDEN_ISO}')
-            GROUP BY url, volume_id, has_joliet ORDER BY url""",
     }

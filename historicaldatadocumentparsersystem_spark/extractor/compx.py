@@ -23,7 +23,7 @@ dispatcher, five formats:
   4-byte block sizes (high bit = stored uncompressed).
 
 Each parser stops at the first malformed byte, keeping verified
-frames (the avrox sync rule)."""
+frames."""
 
 from __future__ import annotations
 
@@ -32,24 +32,6 @@ import lzma
 import zlib
 
 _XZ_CHECKS = {0: "none", 1: "crc32", 4: "crc64", 10: "sha256"}
-
-
-def inflate_bounded(b: bytes, off: int, max_out: int,
-                    wbits: int = 15) -> tuple[bytes, int]:
-    """(data, consumed) for the zlib stream at off, inflated to at
-    most max_out bytes — more means a corrupt size or a
-    decompression bomb; raises ValueError rather than
-    materializing it. wbits as in zlib (31 = gzip wrapper)."""
-    d = zlib.decompressobj(wbits)
-    out = bytearray(d.decompress(b[off:], max_out + 1))
-    while not d.eof and d.unconsumed_tail:
-        budget = max_out + 1 - len(out)
-        if budget <= 0:
-            raise ValueError("inflate bound")
-        out += d.decompress(d.unconsumed_tail, budget)
-    if not d.eof or len(out) > max_out:
-        raise ValueError("inflate")
-    return bytes(out), len(b) - off - len(d.unused_data)
 
 
 _CHUNK = 1 << 20

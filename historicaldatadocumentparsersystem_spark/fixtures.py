@@ -4436,160 +4436,6 @@ def diff_file_rows(n: int = 40, seed: int = 42) -> list[dict]:
     return out
 
 
-def cert_chain_rows(n: int = 24, seed: int = 42) -> list[dict]:
-    """Deterministic TLS certificate fixtures: (url, payload) where
-    payload is a PEM bundle (leaf first, then intermediates) built
-    by the certx DER encoders. Shapes cycle i % 8: healthy 2-cert
-    chain / expired leaf / self-signed EC / legacy weak (sha1 +
-    RSA-1024, no SAN) / wildcard-vs-apex mismatch / not-yet-valid
-    with an IP SAN / md5 + wrong-domain SAN / malformed payloads.
-    Hygiene grades are judged against operators.certs.CERT_AS_OF.
-    Golden: fixtures/golden_certs_seed42_n24.parquet."""
-    import random
-
-    from .extractor import certx
-
-    rng = random.Random(seed)
-
-    def mod(bits: int) -> bytes:
-        return bytes([0x80 | rng.randrange(128)]
-                     + [rng.randrange(256)
-                        for _ in range(bits // 8 - 1)])
-
-    rows: list[dict] = []
-    for i in range(n):
-        k = i % 8
-        host = f"site{i}.example.net"
-        url = f"https://{host}/"
-        if k == 0:
-            inter = [("CN", f"Example Issuing CA R{i}"),
-                     ("O", "Example Trust"), ("C", "US")]
-            leaf = certx.build_certificate(
-                serial=0x1000 + i, sig_oid="1.2.840.113549.1.1.11",
-                issuer=inter,
-                subject=[("CN", host), ("O", f"Site {i} Inc")],
-                not_before="2025-03-01T00:00:00Z",
-                not_after="2026-06-01T00:00:00Z",
-                spki=certx.build_spki("rsa", modulus=mod(2048)),
-                san_dns=[host, f"www.{host}", f"*.cdn.{host}"],
-                is_ca=False,
-                key_usage=["digitalSignature", "keyEncipherment"],
-                eku=["serverAuth", "clientAuth"])
-            ca = certx.build_certificate(
-                serial=0x20 + i, sig_oid="1.2.840.113549.1.1.11",
-                issuer=[("CN", "Example Root"), ("C", "US")],
-                subject=inter,
-                not_before="2020-01-01T00:00:00Z",
-                not_after="2035-01-01T00:00:00Z",
-                spki=certx.build_spki("rsa", modulus=mod(2048)),
-                is_ca=True, key_usage=["keyCertSign", "cRLSign"])
-            pem = certx.to_pem(leaf) + certx.to_pem(ca)
-        elif k == 1:
-            der = certx.build_certificate(
-                serial=0x2000 + i, sig_oid="1.2.840.113549.1.1.11",
-                issuer=[("CN", "Example Issuing CA R1"),
-                        ("O", "Example Trust"), ("C", "US")],
-                subject=[("CN", host)],
-                not_before="2023-01-15T08:30:00Z",
-                not_after="2024-01-15T08:30:00Z",
-                spki=certx.build_spki("rsa", modulus=mod(2048)),
-                san_dns=[host], is_ca=False, eku=["serverAuth"])
-            pem = certx.to_pem(der)
-        elif k == 2:
-            name = [("CN", host), ("O", "Self Hosted"),
-                    ("emailAddress", f"admin@{host}")]
-            der = certx.build_certificate(
-                serial=1 + i, sig_oid="1.2.840.10045.4.3.2",
-                issuer=name, subject=name,
-                not_before="2025-01-01T00:00:00Z",
-                not_after="2027-01-01T00:00:00Z",
-                spki=certx.build_spki("ec", curve="prime256v1"),
-                san_dns=[host, f"alt{i}.example.org"],
-                is_ca=True, eku=["serverAuth"])
-            pem = certx.to_pem(der)
-        elif k == 3:
-            # legacy CN-only: weak sha1+1024 (grade C) for even
-            # cycles, modern crypto but still SAN-less (grade B)
-            # for odd ones
-            legacy = (i // 8) % 2 == 0
-            der = certx.build_certificate(
-                serial=0x3000 + i,
-                sig_oid=("1.2.840.113549.1.1.5" if legacy
-                         else "1.2.840.113549.1.1.11"),
-                issuer=[("CN", "Legacy CA 2009"), ("C", "DE")],
-                subject=[("CN", host), ("OU", "Ops"),
-                         ("L", "Berlin"), ("ST", "BE")],
-                not_before="2024-07-01T12:00:00Z",
-                not_after="2027-07-01T12:00:00Z",
-                spki=certx.build_spki(
-                    "rsa", modulus=mod(1024 if legacy else 2048)))
-            pem = certx.to_pem(der)
-        elif k == 4:
-            # wildcard SAN: served at the apex (one label short —
-            # mismatch, grade D) on even cycles, at www. (covered,
-            # grade A) on odd ones
-            if (i // 8) % 2:
-                host = f"www.site{i}.example.net"
-                url = f"https://{host}/"
-            wild = f"*.site{i}.example.net"
-            der = certx.build_certificate(
-                serial=0x4000 + i, sig_oid="1.3.101.112",
-                issuer=[("CN", "Example Issuing CA R2"),
-                        ("O", "Example Trust"), ("C", "US")],
-                subject=[("CN", wild)],
-                not_before="2025-06-01T00:00:00Z",
-                not_after="2026-09-01T00:00:00Z",
-                spki=certx.build_spki("ed25519"),
-                san_dns=[wild], is_ca=False,
-                eku=["serverAuth"])
-            pem = certx.to_pem(der)
-        elif k == 5:
-            der = certx.build_certificate(
-                serial=0x5000 + i, sig_oid="1.2.840.10045.4.3.3",
-                issuer=[("CN", "Example Issuing CA R2"),
-                        ("O", "Example Trust"), ("C", "US")],
-                subject=[("CN", host)],
-                not_before="2050-02-03T04:05:06Z",
-                not_after="2051-02-03T04:05:06Z",
-                spki=certx.build_spki("ec", curve="secp384r1"),
-                san_dns=[host],
-                san_ip=[f"192.0.2.{(i * 7) % 250 + 1}"],
-                is_ca=False, gen_time=True,
-                key_usage=["digitalSignature"], eku=["serverAuth"])
-            pem = certx.to_pem(der)
-        elif k == 6:
-            der = certx.build_certificate(
-                serial=0x6000 + i,
-                sig_oid="1.2.840.113549.1.1.4",
-                issuer=[("CN", "Example Issuing CA R1"),
-                        ("O", "Example Trust"), ("C", "US")],
-                subject=[("CN", f"other{i}.example.com")],
-                not_before="2025-01-01T00:00:00Z",
-                not_after="2026-12-31T23:59:59Z",
-                spki=certx.build_spki("rsa", modulus=mod(2048)),
-                san_dns=[f"other{i}.example.com",
-                         f"www.other{i}.example.com"],
-                is_ca=False, eku=["serverAuth"])
-            pem = certx.to_pem(der)
-        else:
-            variant = (i // 8) % 3
-            if variant == 0:
-                good = certx.build_certificate(
-                    serial=9, sig_oid="1.2.840.113549.1.1.11",
-                    issuer=[("CN", "T")], subject=[("CN", host)],
-                    not_before="2025-01-01T00:00:00Z",
-                    not_after="2026-01-01T00:00:00Z",
-                    spki=certx.build_spki("rsa", modulus=mod(2048)))
-                pem = certx.to_pem(good)[:-80] + "zz\n-----END CERTIFICATE-----\n"
-            elif variant == 1:
-                pem = "-----BEGIN CERTIFICATE-----\nAAAA\n-----END CERTIFICATE-----\n"
-            else:
-                pem = ""
-        rows.append({"url": url,
-                     "payload": pem.encode("ascii")})
-    return rows
-
-
 def mhtml_file_rows(n: int = 16, seed: int = 42) -> list[dict]:
     """Deterministic MHTML snapshots: (url, payload). Shapes cycle
     i % 5: Chrome-style snapshot (html root + png + css, Snapshot-
@@ -4863,71 +4709,6 @@ def vcf_file_rows(n: int = 16, seed: int = 42) -> list[dict]:
             variant = (i // 4) % 2
             payload = (b"not a vcard at all"
                        if variant == 0 else b"\xff\xfe\x00junk")
-        rows.append({"url": url, "payload": payload})
-    return rows
-
-
-def torrent_file_rows(n: int = 12, seed: int = 42) -> list[dict]:
-    """Deterministic .torrent metainfo files: (url, payload).
-    Shapes cycle i % 4: multi-file dataset with tracker tiers and
-    piece count consistent with sizes / single-file private with an
-    inconsistent piece count (integrity audit must flag it) /
-    unicode names + nested dirs + no announce (DHT-only) /
-    malformed payloads. Golden:
-    fixtures/golden_torrents_seed42_n12.parquet."""
-    from .extractor import torrentx
-
-    rows: list[dict] = []
-    for i in range(n):
-        url = f"https://mirror{i}.example.org/pub/item-{i}.torrent"
-        k = i % 4
-        if k == 0:
-            plen = 16384
-            sizes = [12000 + 1000 * i, 50000, 777]
-            total = sum(sizes)
-            npieces = (total + plen - 1) // plen
-            payload = torrentx.encode_bencode({
-                "announce": f"http://tracker{i}.example/announce",
-                "announce-list": [
-                    [f"http://tracker{i}.example/announce"],
-                    [f"udp://backup{i}.example:6969",
-                     f"udp://backup{i}b.example:6969"]],
-                "creation date": 1700000000 + i * 86400,
-                "created by": "fixture-mk/2.0",
-                "comment": f"open dataset {i}",
-                "info": {
-                    "name": f"dataset-{i}",
-                    "piece length": plen,
-                    "pieces": bytes(20 * npieces),
-                    "files": [
-                        {"path": ["data", f"part-{j}.bin"],
-                         "length": s}
-                        for j, s in enumerate(sizes)]}})
-        elif k == 1:
-            payload = torrentx.encode_bencode({
-                "announce": f"https://closed{i}.example/ann",
-                "info": {
-                    "name": f"image-{i}.iso",
-                    "piece length": 32768,
-                    # WRONG piece count on purpose (one short)
-                    "pieces": bytes(20 * ((100000 // 32768 + 1) - 1)),
-                    "length": 100000 + i,
-                    "private": 1}})
-        elif k == 2:
-            payload = torrentx.encode_bencode({
-                "creation date": 1690000000,
-                "info": {
-                    "name": f"аrchive-{i} データ",
-                    "piece length": 65536,
-                    "pieces": bytes(20),
-                    "files": [
-                        {"path": ["docs", "läng", f"f{i}.txt"],
-                         "length": 64000 + i}]}})
-        else:
-            variant = (i // 4) % 3
-            payload = (b"not bencode" if variant == 0
-                       else b"i42e" if variant == 1
-                       else b"d4:infoi1ee")
         rows.append({"url": url, "payload": payload})
     return rows
 
@@ -5359,173 +5140,6 @@ def ntriples_file_rows(n: int = 12, seed: int = 42) -> list[dict]:
     return rows
 
 
-def accesslog_file_rows(n: int = 12, seed: int = 42) -> list[dict]:
-    """Deterministic access logs: (url, payload). Shapes cycle
-    i % 4: combined format with mixed offsets and a bot sweep /
-    CLF without referer+UA, '-' bytes, escaped quotes in UA /
-    garbage request lines (kept raw, NULL parts) + malformed lines
-    (counted) / junk payloads. Golden:
-    fixtures/golden_accesslog_seed42_n12.parquet."""
-    rows: list[dict] = []
-    for i in range(n):
-        url = f"https://ops{i}.example.org/logs/access-{i}.log"
-        k = i % 4
-        day = i % 27 + 1
-        if k == 0:
-            lines = [
-                f'203.0.113.{i} - - [{day:02d}/Mar/2026:10:00:0'
-                f'{j} +0000] "GET /page/{j} HTTP/1.1" 200 '
-                f'{5000 + 100 * j} "https://ref{i}.example/" '
-                f'"Mozilla/5.0 (X11; Linux) Crawler{i}/1.0"'
-                for j in range(4)
-            ] + [
-                f'198.51.100.{i} - - [{day:02d}/Mar/2026:02:30:00 '
-                f'-0700] "GET /robots.txt HTTP/1.1" 404 153 "-" '
-                f'"FetchBot/2.{i}"',
-            ]
-        elif k == 1:
-            lines = [
-                f'10.0.0.{i} user{i} alice [{day:02d}/Jun/2026:'
-                f'23:59:5{i % 10} +0530] "POST /api/v1/items '
-                f'HTTP/2.0" 201 -',
-                f'10.0.0.{i} - - [{day:02d}/Jun/2026:00:00:01 '
-                f'+0530] "HEAD /health HTTP/1.1" 204 0 "-" '
-                f'"probe \\"quoted\\" agent"',
-            ]
-        elif k == 2:
-            lines = [
-                f'192.0.2.{i} - - [{day:02d}/Jul/2026:12:00:00 '
-                f'+0000] "\\x16\\x03garbage" 400 0 "-" "-"',
-                f'192.0.2.{i} - - [{day:02d}/Jul/2026:12:00:01 '
-                f'+0000] "GET /ok HTTP/1.1" 301 99 "-" "-"',
-                "completely malformed line",
-                f'192.0.2.{i} - - [{day:02d}/Xxx/2026:12:00:02 '
-                f'+0000] "GET /badmonth HTTP/1.1" 200 1 "-" "-"',
-            ]
-        else:
-            rows.append({"url": url,
-                         "payload": b"\x00\x01\x02 binary junk"
-                         if (i // 4) % 2 else b"   \n\n"})
-            continue
-        rows.append({"url": url,
-                     "payload": ("\n".join(lines) + "\n")
-                     .encode("utf-8")})
-    return rows
-
-
-# Deterministic routing-table fixture for the CIDR LPM family
-# (operators/netblocks.py). Overlap by design: a /4 blanket under
-# /12 under /24 under /30 tests longest-prefix-match depth; the
-# duplicate 198.51.100.0/24 tests the (asn, cidr) tie-break; the
-# last four rows are malformed and must be DROPPED by the strict
-# validation gate in BOTH engines. Generated into the DuckDB twin
-# as a VALUES list — never hand-retyped.
-NETBLOCKS: tuple[tuple[str, int, str], ...] = (
-    ("192.0.0.0/4", 64599, "Legacy Blanket /4"),
-    ("203.0.0.0/12", 64501, "WideNet Transit"),
-    ("203.0.113.0/24", 64500, "Example Hosting"),
-    ("203.0.113.4/30", 64510, "Example Hosting VPS"),
-    ("198.51.100.0/24", 64502, "CrawlerCo"),
-    ("198.51.100.0/24", 64509, "CrawlerCo Alt"),
-    ("10.0.0.0/8", 64512, "Private-Use RFC1918"),
-    ("192.0.2.7/24", 64503, "TestNet (host bits floored)"),
-    ("192.0.2.2/32", 64504, "TestNet Pinhole"),
-    ("256.1.1.1/24", 64505, "Bad Octet"),
-    ("10.0.0.0/33", 64506, "Bad Prefix"),
-    ("banana", 64507, "Not an IP"),
-    ("198.51.100.0/", 64508, "Empty Prefix"),
-)
-
-# probe addresses unioned onto the access-log remotes by the lookup
-# query: an unrouted-but-valid v4, an IPv6 literal (the v4 lookup
-# must pass it through with NULL ip_num), junk, and a leading-zero
-# quad the STRICT grammar rejects.
-EXTRA_IPS: tuple[str, ...] = (
-    "8.8.8.8", "2001:db8::1", "not-an-ip", "10.00.0.1")
-
-
-# Deterministic UA corpus for the classification family
-# (extractor/uax.py): every browser rule, rule-ORDER traps (Edge/
-# Opera/Samsung carry Chrome/, Chrome carries Safari/, iOS carries
-# "like Mac OS X"), the Seamonkey exclusion, bots with and without
-# a name-bearing token, and junk. No single quotes (rows are
-# generated into a VALUES list for the DuckDB twin). None = SQL
-# NULL.
-UA_SAMPLES: tuple[str | None, ...] = (
-    "Mozilla/5.0 (Windows NT 10.0; Win64; x64) AppleWebKit/537.36"
-    " (KHTML, like Gecko) Chrome/124.0.0.0 Safari/537.36",
-    "Mozilla/5.0 (X11; Linux x86_64) AppleWebKit/537.36"
-    " (KHTML, like Gecko) Chrome/109.0.5414.74 Safari/537.36",
-    "Mozilla/5.0 (Linux; Android 14; Pixel 8) AppleWebKit/537.36"
-    " (KHTML, like Gecko) Chrome/123.0.6312.40 Mobile"
-    " Safari/537.36",
-    "Mozilla/5.0 (Windows NT 10.0; Win64; x64) AppleWebKit/537.36"
-    " (KHTML, like Gecko) Chrome/124.0.0.0 Safari/537.36"
-    " Edg/124.0.2478.51",
-    "Mozilla/5.0 (Windows NT 10.0) AppleWebKit/537.36 (KHTML, like"
-    " Gecko) Chrome/42.0.2311.135 Safari/537.36 Edge/12.246",
-    "Mozilla/5.0 (iPhone; CPU iPhone OS 17_0 like Mac OS X)"
-    " AppleWebKit/605.1.15 (KHTML, like Gecko) EdgiOS/124.2478.50"
-    " Version/17.0 Mobile/15E148 Safari/604.1",
-    "Mozilla/5.0 (Windows NT 10.0; Win64; x64) AppleWebKit/537.36"
-    " (KHTML, like Gecko) Chrome/124.0.0.0 Safari/537.36"
-    " OPR/109.0.0.0",
-    "Opera/9.80 (Windows NT 6.1; WOW64) Presto/2.12.388"
-    " Version/12.18",
-    "Mozilla/5.0 (Linux; Android 13; SM-S911B) AppleWebKit/537.36"
-    " (KHTML, like Gecko) SamsungBrowser/24.0 Chrome/117.0.0.0"
-    " Mobile Safari/537.36",
-    "Mozilla/5.0 (Windows NT 10.0; Win64; x64; rv:125.0)"
-    " Gecko/20100101 Firefox/125.0",
-    "Mozilla/5.0 (X11; Ubuntu; Linux x86_64; rv:109.0)"
-    " Gecko/20100101 Firefox/115.0",
-    "Mozilla/5.0 (iPhone; CPU iPhone OS 17_4 like Mac OS X)"
-    " AppleWebKit/605.1.15 (KHTML, like Gecko) FxiOS/125.0"
-    " Mobile/15E148 Safari/605.1.15",
-    "Mozilla/5.0 (X11; Linux x86_64; rv:2.53) Gecko/20100101"
-    " Firefox/60.0 Seamonkey/2.53.18",
-    "Mozilla/5.0 (Macintosh; Intel Mac OS X 10_15_7)"
-    " AppleWebKit/605.1.15 (KHTML, like Gecko) Version/17.4.1"
-    " Safari/605.1.15",
-    "Mozilla/5.0 (iPad; CPU OS 16_6 like Mac OS X)"
-    " AppleWebKit/605.1.15 (KHTML, like Gecko) Version/16.6"
-    " Mobile/15E148 Safari/604.1",
-    "Mozilla/5.0 (iPhone; CPU iPhone OS 17_4 like Mac OS X)"
-    " AppleWebKit/605.1.15 (KHTML, like Gecko) CriOS/124.0.6367.71"
-    " Mobile/15E148 Safari/604.1",
-    "Mozilla/5.0 (compatible; MSIE 9.0; Windows NT 6.1;"
-    " Trident/5.0)",
-    "Mozilla/5.0 (Windows NT 6.1; WOW64; Trident/7.0; rv:11.0)"
-    " like Gecko",
-    "Mozilla/5.0 (compatible; Googlebot/2.1;"
-    " +http://www.google.com/bot.html)",
-    "Mozilla/5.0 (Linux; Android 6.0.1; Nexus 5X Build/MMB29P)"
-    " AppleWebKit/537.36 (KHTML, like Gecko) Chrome/124.0.6367.78"
-    " Mobile Safari/537.36 (compatible; Googlebot/2.1;"
-    " +http://www.google.com/bot.html)",
-    "Mozilla/5.0 (compatible; bingbot/2.0;"
-    " +http://www.bing.com/bingbot.htm)",
-    "Mozilla/5.0 (compatible; Baiduspider/2.0;"
-    " +http://www.baidu.com/search/spider.html)",
-    "Mozilla/5.0 (compatible; YandexBot/3.0;"
-    " +http://yandex.com/bots)",
-    "Mozilla/5.0 (compatible; Yahoo! Slurp;"
-    " http://help.yahoo.com/help/us/ysearch/slurp)",
-    "curl/8.5.0",
-    "Wget/1.21.4 (linux-gnu)",
-    "python-requests/2.31.0",
-    "Scrapy/2.11.1 (+https://scrapy.org)",
-    "Mozilla/5.0 (X11; Linux x86_64) AppleWebKit/537.36 (KHTML,"
-    " like Gecko) HeadlessChrome/123.0.6312.86 Safari/537.36",
-    "facebookexternalhit/1.1"
-    " (+http://www.facebook.com/externalhit_uatext.php)",
-    "Mozilla/4.0 (compatible)",
-    "",
-    "totally unknown agent",
-    None,
-)
-
-
 def id_sample_rows() -> list[str | None]:
     """Deterministic identifier corpus for the id-time family
     (extractor/idtimex.py): v1/v4/v5/v7 UUIDs (incl. a bogus
@@ -5580,57 +5194,6 @@ def id_sample_rows() -> list[str | None]:
         "",
         None,
     ]
-
-
-def jwt_sample_rows() -> list[str | None]:
-    """Deterministic JWT corpus (extractor/jwtx.py): live + expired
-    HS256, unsecured alg=none (trailing empty signature), kid'd
-    RS256 shape, float/negative/huge exp (the shared digits gate
-    nulls them in every engine), empty payload, junk structures.
-    Claims keep their spec types (string iss/sub, integer exp/iat)
-    — wrong-typed claims are undefined across engines and excluded
-    by design (jwtx docstring). No single quotes (rows feed a
-    VALUES twin)."""
-    from .extractor import jwtx
-
-    b = jwtx.build_jwt
-    hs = {"alg": "HS256", "typ": "JWT"}
-    live = jwtx.JWT_AS_OF + 86400 * 30
-    dead = jwtx.JWT_AS_OF - 86400 * 400
-    toks: list[str | None] = [
-        b(hs, {"iss": "https://auth.example.org", "sub": "user42",
-               "exp": live, "iat": dead}),
-        b(hs, {"iss": "https://auth.example.org", "sub": "user43",
-               "exp": dead, "iat": dead - 3600}),
-        b({"alg": "RS256", "typ": "JWT", "kid": "key-2026-01"},
-          {"iss": "https://idp.example.net", "sub": "svc-crawler",
-           "exp": live, "aud": "api"}),
-        # unsecured: alg none, empty signature (trailing '.')
-        b(hs, {"sub": "x"}).rsplit(".", 1)[0].replace(
-            b(hs, {"sub": "x"}).split(".")[0],
-            b({"alg": "none"}, {"sub": "x"}).split(".")[0]) + ".",
-        b(hs, {"sub": "no-clock-claims"}),
-        b(hs, {"exp": jwtx.JWT_AS_OF}),          # boundary: not <
-        b(hs, {"exp": jwtx.JWT_AS_OF - 1}),      # boundary: expired
-        b(hs, {}),                               # empty payload
-        # the digits gate: float / negative / bool / 19-digit exp
-        b(hs, {"exp": 1700000000.5}),
-        b(hs, {"exp": -5}),
-        b(hs, {"exp": True}),
-        b(hs, {"exp": 10 ** 19}),
-        # header decodes but is not JSON ('not json')
-        "bm90IGpzb24." + b(hs, {"sub": "x"}).split(".")[1] + ".sig",
-        # payload is a JSON array, not an object
-        b(hs, {"sub": "x"}).split(".")[0] + ".WzEsMl0.sig",
-        # structure failures: bad b64 chars, len%4==1, 2/4 parts
-        "abc+/.def.ghi",
-        "abcde.defg.hijk",
-        "onlytwo.parts",
-        "a.b.c.d",
-        "",
-        None,
-    ]
-    return toks
 
 
 def geojson_file_rows(n: int = 12, seed: int = 42) -> list[dict]:
@@ -5731,846 +5294,6 @@ def geojson_file_rows(n: int = 12, seed: int = 42) -> list[dict]:
     return rows
 
 
-def build_sqlite_fixture_dbs() -> list[dict]:
-    """Build the SQLite fixture databases with the LOCAL stdlib
-    sqlite3 — the ENCODE half of extractor/sqlitex.py. Page images
-    depend on the linked SQLite version, so the canonical corpus is
-    the COMMITTED fixtures/sqlite_dbs_seed42_n10.parquet (see
-    sqlite_db_rows); this builder regenerates it and feeds the
-    version-independent dual-engine test (our reader vs stdlib over
-    the same fresh bytes). Shapes: simple catalog / deep rowid
-    b-tree / overflowing CREATE sql / utf16le / WITHOUT ROWID /
-    freelist / empty / AUTOINCREMENT+view+trigger + 2 junk rows."""
-    import sqlite3
-
-    def make(setup, page_size=4096, pragmas=()):
-        con = sqlite3.connect(":memory:")
-        cur = con.cursor()
-        for p in pragmas:
-            cur.execute(p)
-        cur.execute(f"PRAGMA page_size={page_size}")
-        setup(cur)
-        con.commit()
-        blob = bytes(con.serialize())
-        con.close()
-        return blob
-
-    rows: list[dict] = []
-
-    def add(name, blob):
-        rows.append({
-            "url": f"https://files{len(rows)}.example.org/{name}",
-            "payload": blob})
-
-    def s_simple(c):
-        c.execute("CREATE TABLE docs(id INTEGER PRIMARY KEY, "
-                  "url TEXT, score REAL, body BLOB)")
-        c.execute("CREATE TABLE hosts(host TEXT, hits INT)")
-        c.execute("CREATE INDEX idx_docs_url ON docs(url)")
-        c.execute("CREATE VIEW v_top AS SELECT url FROM docs "
-                  "WHERE score > 0.5")
-        for i in range(23):
-            c.execute("INSERT INTO docs VALUES(?,?,?,?)",
-                      (i + 1, f"https://h{i % 5}.example.org/p{i}",
-                       i * 0.125, bytes([i % 7]) * (i % 40)))
-        for i in range(6):
-            c.execute("INSERT INTO hosts VALUES(?,?)",
-                      (f"h{i}.example.org", i * 11))
-    add("catalog.db", make(s_simple))
-
-    def s_deep(c):
-        c.execute("CREATE TABLE fetches(id INTEGER PRIMARY KEY, "
-                  "u TEXT, n INT)")
-        for i in range(3000):
-            c.execute("INSERT INTO fetches VALUES(?,?,?)",
-                      (i + 1, f"u-{i:06d}", i % 97))
-    add("deep.db", make(s_deep, page_size=512))
-
-    def s_overflow(c):
-        cols = ", ".join(
-            f"very_long_descriptive_column_name_{i:03d} TEXT"
-            for i in range(40))
-        c.execute(f"CREATE TABLE wide({cols})")
-        c.execute("INSERT INTO wide (very_long_descriptive_column"
-                  "_name_000) VALUES (?)", ("x" * 2000,))
-    add("overflow.db", make(s_overflow, page_size=512))
-
-    def s_utf16(c):
-        c.execute("CREATE TABLE articles(title TEXT)")
-        for t in ("café", "中文标题",
-                  "naïve", "Ж"):
-            c.execute("INSERT INTO articles VALUES(?)", (t,))
-    add("utf16.db", make(
-        s_utf16, pragmas=("PRAGMA encoding='UTF-16le'",)))
-
-    def s_worowid(c):
-        c.execute("CREATE TABLE kv(k TEXT PRIMARY KEY, v TEXT) "
-                  "WITHOUT ROWID")
-        for i in range(400):
-            c.execute("INSERT INTO kv VALUES(?,?)",
-                      (f"key-{i:05d}", f"value-{i}" * 3))
-    add("worowid.db", make(s_worowid, page_size=512))
-
-    def s_freelist(c):
-        c.execute("CREATE TABLE churn(id INTEGER PRIMARY KEY, "
-                  "pad TEXT)")
-        for i in range(500):
-            c.execute("INSERT INTO churn VALUES(?,?)",
-                      (i + 1, "p" * 100))
-        c.execute("DELETE FROM churn WHERE id % 3 != 0")
-    add("freelist.db", make(s_freelist, page_size=512))
-
-    def s_empty(c):
-        # a never-written :memory: db has no pages to serialize;
-        # create-then-drop leaves an allocated, catalog-empty file
-        c.execute("CREATE TABLE gone(x INT)")
-        c.execute("DROP TABLE gone")
-    add("empty.db", make(s_empty))
-
-    def s_autoinc(c):
-        c.execute("CREATE TABLE log(id INTEGER PRIMARY KEY "
-                  "AUTOINCREMENT, msg TEXT)")
-        c.execute("CREATE TRIGGER trg AFTER INSERT ON log BEGIN "
-                  "UPDATE log SET msg = msg WHERE id = new.id; END")
-        for i in range(9):
-            c.execute("INSERT INTO log(msg) VALUES(?)",
-                      (f"event-{i}",))
-    add("autoinc.db", make(s_autoinc))
-
-    add("junk.bin", b"not a database at all, just bytes")
-    add("trunc.db", make(s_simple)[:90])
-    return rows
-
-
-def sqlite_db_rows() -> list[dict]:
-    """The COMMITTED SQLite fixture corpus (url, payload) — read
-    from fixtures/sqlite_dbs_seed42_n10.parquet (page images are
-    build-version-dependent, so the parquet, not the builder, is
-    canonical; golden: fixtures/golden_sqlite_seed42_n10.parquet)."""
-    import os
-
-    import pyarrow.parquet as pq
-    path = os.path.join(os.path.dirname(os.path.dirname(
-        os.path.abspath(__file__))), "fixtures",
-        "sqlite_dbs_seed42_n10.parquet")
-    return pq.read_table(path).to_pylist()
-
-
-def wasm_module_rows(n: int = 12, seed: int = 42) -> list[dict]:
-    """Deterministic hand-encoded WebAssembly modules (url,
-    payload) — the ENCODE half of extractor/wasmx.py (spliced
-    payloads must still decode, the exifx rule). Shapes cycle
-    i % 6: typical module (type/function/memory/export/code) /
-    imports of all four kinds / custom name+producers sections /
-    sourceMappingURL custom + start/element/datacount / truncated
-    mid-section (valid prefix survives) / junk. Golden:
-    fixtures/golden_wasm_seed42_n12.parquet."""
-
-    def u(v: int) -> bytes:          # unsigned LEB128
-        out = bytearray()
-        while True:
-            c = v & 0x7F
-            v >>= 7
-            out.append(c | (0x80 if v else 0))
-            if not v:
-                return bytes(out)
-
-    def nm(s: str) -> bytes:
-        raw = s.encode("utf-8")
-        return u(len(raw)) + raw
-
-    def vec(items: list[bytes]) -> bytes:
-        return u(len(items)) + b"".join(items)
-
-    def sec(sid: int, body: bytes) -> bytes:
-        return bytes([sid]) + u(len(body)) + body
-
-    def custom(name: str, payload: bytes) -> bytes:
-        return sec(0, nm(name) + payload)
-
-    hdr = b"\x00asm" + (1).to_bytes(4, "little")
-    functype = b"\x60\x00\x00"            # () -> ()
-    empty_fn = u(2) + u(0) + b"\x0b"      # no locals, just end
-
-    rows: list[dict] = []
-    for i in range(n):
-        url = f"https://cdn{i}.example.org/mod-{i}.wasm"
-        k = i % 6
-        if k == 0:
-            nfn = 1 + (i // 6) * 50
-            blob = hdr \
-                + sec(1, vec([functype])) \
-                + sec(3, vec([u(0)] * nfn)) \
-                + sec(5, vec([b"\x00" + u(1)])) \
-                + sec(7, vec([nm(f"fn{j}") + b"\x00" + u(j)
-                              for j in range(min(nfn, 3))]
-                             + [nm("memory") + b"\x02" + u(0)])) \
-                + sec(10, vec([empty_fn] * nfn))
-        elif k == 1:
-            imports = [
-                nm("env") + nm("log") + b"\x00" + u(0),
-                nm("env") + nm("mem") + b"\x02\x01" + u(1) + u(4),
-                nm("env") + nm("tbl") + b"\x01\x70\x00" + u(2),
-                nm("wasi") + nm(f"clock_{i}") + b"\x00" + u(0),
-                nm("env") + nm("g") + b"\x03\x7f\x01",
-            ]
-            blob = hdr \
-                + sec(1, vec([functype])) \
-                + sec(2, vec(imports)) \
-                + sec(7, vec([nm("run") + b"\x00" + u(2)]))
-        elif k == 2:
-            names = custom("name", nm("mod") + bytes([i % 9]))
-            prod = custom(
-                "producers",
-                vec([nm("language") + vec([nm("Rust") + nm("1.70")]),
-                     nm("processed-by")
-                     + vec([nm("wasm-opt") + nm(f"11{i}")])]))
-            blob = hdr + sec(1, vec([functype])) \
-                + sec(3, vec([u(0)])) + sec(10, vec([empty_fn])) \
-                + names + prod
-        elif k == 3:
-            blob = hdr \
-                + sec(1, vec([functype])) \
-                + sec(3, vec([u(0), u(0)])) \
-                + sec(8, u(1)) \
-                + sec(12, u(1)) \
-                + sec(10, vec([empty_fn, empty_fn])) \
-                + sec(11, vec([b"\x00\x41\x00\x0b"
-                               + u(3) + b"abc"])) \
-                + custom("sourceMappingURL",
-                         nm(f"https://cdn{i}.example.org/"
-                            f"mod-{i}.wasm.map"))
-        elif k == 4:
-            whole = sec(1, vec([functype])) \
-                + sec(7, vec([nm("partial") + b"\x00" + u(0)])) \
-                + sec(10, vec([empty_fn]))
-            blob = hdr + whole[:len(whole) - 4]
-        else:
-            blob = (b"\x00asm" + b"\xff")[: 5 + i % 3] \
-                if (i // 6) % 2 else b"GIF89a not wasm"
-        rows.append({"url": url, "payload": blob})
-    return rows
-
-
-def pcap_capture_rows(seed: int = 42) -> list[dict]:
-    """Deterministic hand-built libpcap captures (url, payload) —
-    the ENCODE half of extractor/pcapx.py. Shapes: little-endian
-    TCP session / big-endian UDP+ICMP / nanosecond IPv6 / VLAN tag /
-    raw-IP linktype / ARP + trailing truncated record / junk /
-    snaplen-cut IP header / 60-packet multi-flow / header-only.
-    Golden: fixtures/golden_pcap_seed42_n10.parquet."""
-    import struct
-
-    def ip4(a: str) -> bytes:
-        return bytes(int(x) for x in a.split("."))
-
-    def ipv4(src, dst, proto, body):
-        hdr = struct.pack(">BBHHHBBH", 0x45, 0, 20 + len(body),
-                          1, 0, 64, proto, 0) + ip4(src) + ip4(dst)
-        return hdr + body
-
-    def ipv6(src: bytes, dst: bytes, proto, body):
-        return struct.pack(">IHBB", 0x60000000, len(body),
-                           proto, 64) + src + dst + body
-
-    def tcp(sp, dp, flags, body=b""):
-        return struct.pack(">HHIIBBHHH", sp, dp, 1000, 2000,
-                           0x50, flags, 8192, 0, 0) + body
-
-    def udp(sp, dp, body=b""):
-        return struct.pack(">HHHH", sp, dp, 8 + len(body), 0) + body
-
-    def eth(src, dst, ethertype, body, vlan=None):
-        hdr = bytes.fromhex(dst.replace(":", "")) \
-            + bytes.fromhex(src.replace(":", ""))
-        if vlan is not None:
-            hdr += struct.pack(">HH", 0x8100, vlan)
-        return hdr + struct.pack(">H", ethertype) + body
-
-    BASE = 1730000000  # 2024-10-27 epoch seconds
-
-    def pcap(pkts, endian="<", nano=False, linktype=1,
-             extra=b""):
-        magic = 0xA1B23C4D if nano else 0xA1B2C3D4
-        out = struct.pack(endian + "IHHiIII", magic, 2, 4, 0, 0,
-                          65535, linktype)
-        for i, (frac, pkt, *rest) in enumerate(pkts):
-            incl = len(pkt)
-            orig = rest[0] if rest else incl
-            out += struct.pack(endian + "IIII", BASE + i, frac,
-                               incl, orig) + pkt
-        return out + extra
-
-    M1, M2 = "02:42:ac:11:00:02", "02:42:ac:11:00:03"
-    rows: list[dict] = []
-
-    def add(name, blob):
-        rows.append({
-            "url": f"https://sensor{len(rows)}.example.net/{name}",
-            "payload": blob})
-
-    # 0: little-endian microsecond TCP session (handshake + data)
-    sess = [
-        (1000, eth(M1, M2, 0x0800, ipv4(
-            "10.0.0.5", "93.184.216.34", 6, tcp(49152, 443, 0x02)))),
-        (2000, eth(M2, M1, 0x0800, ipv4(
-            "93.184.216.34", "10.0.0.5", 6, tcp(443, 49152, 0x12)))),
-        (3000, eth(M1, M2, 0x0800, ipv4(
-            "10.0.0.5", "93.184.216.34", 6, tcp(49152, 443, 0x10)))),
-        (4000, eth(M1, M2, 0x0800, ipv4(
-            "10.0.0.5", "93.184.216.34", 6,
-            tcp(49152, 443, 0x18, b"GET / HTTP/1.1")))),
-        (5000, eth(M2, M1, 0x0800, ipv4(
-            "93.184.216.34", "10.0.0.5", 6, tcp(443, 49152, 0x11)))),
-    ]
-    add("session.pcap", pcap(sess))
-
-    # 1: big-endian, UDP + ICMP
-    add("dns.pcap", pcap([
-        (10, eth(M1, M2, 0x0800, ipv4(
-            "10.0.0.5", "8.8.8.8", 17, udp(5353, 53, b"\x00" * 12)))),
-        (20, eth(M2, M1, 0x0800, ipv4(
-            "8.8.8.8", "10.0.0.5", 17, udp(53, 5353, b"\x00" * 24)))),
-        (30, eth(M1, M2, 0x0800, ipv4(
-            "10.0.0.5", "8.8.4.4", 1, b"\x08\x00\x00\x00"))),
-    ], endian=">"))
-
-    # 2: nanosecond magic, IPv6 TCP (:: compression exercised)
-    s6 = bytes.fromhex("20010db8000000000000000000000001")
-    d6 = bytes.fromhex("20010db8000085a300000000ac1f8001")
-    add("v6.pcap", pcap([
-        (500_000_000, eth(M1, M2, 0x86DD, ipv6(
-            s6, d6, 6, tcp(52000, 8443, 0x02)))),
-        (750_000_000, eth(M2, M1, 0x86DD, ipv6(
-            d6, s6, 6, tcp(8443, 52000, 0x12)))),
-    ], nano=True))
-
-    # 3: 802.1Q VLAN-tagged IPv4
-    add("vlan.pcap", pcap([
-        (100, eth(M1, M2, 0x0800, ipv4(
-            "192.168.7.9", "192.168.7.1", 17, udp(123, 123)),
-            vlan=42)),
-    ]))
-
-    # 4: raw-IP linktype 101, mixed v4/v6
-    add("rawip.pcap", pcap([
-        (1, ipv4("172.16.0.1", "172.16.0.2", 6,
-                 tcp(1234, 80, 0x02))),
-        (2, ipv6(s6, d6, 17, udp(7000, 7001))),
-    ], linktype=101))
-
-    # 5: ARP (no IP layer) + a truncated trailing record
-    add("arp.pcap", pcap([
-        (9, eth(M1, "ff:ff:ff:ff:ff:ff", 0x0806, b"\x00\x01" * 14)),
-    ], extra=struct.pack("<IIII", BASE, 0, 400, 400) + b"\xab" * 10))
-
-    # 6: junk
-    add("noise.bin", b"\x89PNG not a capture either")
-
-    # 7: snaplen cut mid-IP-header (incl < orig)
-    full = eth(M1, M2, 0x0800, ipv4(
-        "10.1.1.1", "10.1.1.2", 6, tcp(5555, 22, 0x02)))
-    add("snap.pcap", pcap([(77, full[:20], len(full))]))
-
-    # 8: 60 packets over 3 flows (both directions interleaved)
-    pkts = []
-    for i in range(60):
-        f = i % 3
-        src, dst, sp, dp = [
-            ("10.0.9.1", "203.0.113.7", 40000, 443),
-            ("10.0.9.2", "203.0.113.7", 40001, 443),
-            ("10.0.9.1", "198.51.100.3", 40002, 53),
-        ][f]
-        proto = 17 if f == 2 else 6
-        body = udp(sp, dp) if proto == 17 else \
-            tcp(sp, dp, 0x02 if i < 3 else 0x10)
-        pkt = ipv4(src, dst, proto, body) if i % 5 else \
-            ipv4(dst, src, proto,
-                 udp(dp, sp) if proto == 17 else
-                 tcp(dp, sp, 0x10))
-        pkts.append((i * 1000, eth(M1, M2, 0x0800, pkt)))
-    add("flows.pcap", pcap(pkts))
-
-    # 9: header-only capture
-    add("empty.pcap", pcap([]))
-    return rows
-
-
-def dns_message_rows(seed: int = 42) -> list[dict]:
-    """Deterministic hand-encoded DNS wire messages (url, payload)
-    — the ENCODE half of extractor/dnsx.py, with a real
-    suffix-compressing name encoder so pointer decode is exercised
-    everywhere. Shapes: bare query / A+CNAME response / AAAA with
-    shared-suffix compression / MX+multi-string-TXT / NXDOMAIN with
-    SOA authority / truncated (TC bit + cut) / junk / punycode PTR /
-    20-answer rotation / EDNS OPT additional. Golden:
-    fixtures/golden_dns_seed42_n10.parquet."""
-    import struct
-
-    def build(msg_id, flags, questions=(), answers=(),
-              authority=(), additional=()):
-        out = bytearray(struct.pack(
-            ">HHHHHH", msg_id, flags, len(questions), len(answers),
-            len(authority), len(additional)))
-        seen: dict[str, int] = {}
-
-        def put_name(name: str):
-            labels = name.split(".") if name else []
-            for i in range(len(labels)):
-                suffix = ".".join(labels[i:])
-                if suffix in seen:
-                    out.extend(struct.pack(
-                        ">H", 0xC000 | seen[suffix]))
-                    return
-                if len(out) < 0x3FFF:
-                    seen[suffix] = len(out)
-                lab = labels[i].encode("ascii")
-                out.append(len(lab))
-                out.extend(lab)
-            out.append(0)
-
-        for name, qtype in questions:
-            put_name(name)
-            out.extend(struct.pack(">HH", qtype, 1))
-        for name, rtype, ttl, rd in (
-                list(answers) + list(authority) + list(additional)):
-            put_name(name)
-            out.extend(struct.pack(">HHI", rtype, 1, ttl))
-            at = len(out)
-            out.extend(b"\x00\x00")
-            if isinstance(rd, bytes):
-                out.extend(rd)
-            else:  # a name-valued rdata, compressed too
-                put_name(rd)
-            struct.pack_into(">H", out, at, len(out) - at - 2)
-        return bytes(out)
-
-    def a(ip: str) -> bytes:
-        return bytes(int(x) for x in ip.split("."))
-
-    def txt(*parts: str) -> bytes:
-        return b"".join(bytes([len(p)]) + p.encode("ascii")
-                        for p in parts)
-
-    rows: list[dict] = []
-
-    def add(name, blob):
-        rows.append({
-            "url": f"https://resolver{len(rows)}.example.net/"
-                   f"{name}.bin",
-            "payload": blob})
-
-    add("query", build(0x1234, 0x0100,
-                       questions=[("www.example.org", 1)]))
-    add("a-cname", build(0x1235, 0x8180,
-        questions=[("www.example.org", 1)],
-        answers=[("www.example.org", 5, 300, "example.org"),
-                 ("example.org", 1, 60, a("93.184.216.34")),
-                 ("example.org", 1, 60, a("93.184.216.35"))]))
-    aaaa = bytes.fromhex("20010db8000000000000000000000001")
-    add("aaaa", build(0x1236, 0x8580,
-        questions=[("api.cdn.example.net", 28)],
-        answers=[("api.cdn.example.net", 28, 3600, aaaa),
-                 ("img.cdn.example.net", 28, 3600,
-                  aaaa[:15] + b"\x02")]))
-    add("mx-txt", build(0x1237, 0x8180,
-        questions=[("example.org", 15)],
-        answers=[("example.org", 15, 900,
-                  struct.pack(">H", 10)
-                  + b"\x04mail\x07example\x03org\x00"),
-                 ("example.org", 16, 900,
-                  txt("v=spf1 include:_spf.example.org", " ~all"))]))
-    add("nxdomain", build(0x1238, 0x8183,
-        questions=[("gone.example.org", 1)],
-        authority=[("example.org", 6, 1800,
-                    b"\x03ns1\x07example\x03org\x00"
-                    b"\x05admin\xc0\x0c"
-                    + struct.pack(">IIIII", 2024102701, 7200,
-                                  3600, 1209600, 300))]))
-    whole = build(0x1239, 0x8380,
-                  questions=[("big.example.org", 1)],
-                  answers=[("big.example.org", 1, 60,
-                            a("198.51.100.9"))])
-    add("truncated", whole[:len(whole) - 7])
-    add("junk", b"\x00\x01notdns")
-    add("punycode", build(0x123A, 0x8180,
-        questions=[("9.0.113.0.203.in-addr.arpa", 12)],
-        answers=[("9.0.113.0.203.in-addr.arpa", 12, 86400,
-                  "xn--bcher-kva.example")]))
-    add("rotation", build(0x123B, 0x8180,
-        questions=[("lb.example.com", 1)],
-        answers=[("lb.example.com", 1, 30,
-                  a(f"10.0.{i // 8}.{i % 8 + 1}"))
-                 for i in range(20)]))
-    add("edns", build(0x123C, 0x0110,
-        questions=[("dnssec.example.org", 48)],
-        additional=[("", 41, 0, b"\x00\x00\x10\x00")]))
-    return rows
-
-
-def font_file_rows(seed: int = 42) -> list[dict]:
-    """Deterministic hand-built web fonts (url, payload) — the
-    ENCODE half of extractor/fontx.py. Shapes: TrueType sfnt with
-    Windows names / OTTO with Mac Roman names / WOFF with
-    zlib-compressed name table / WOFF with stored name table /
-    WOFF2 header / junk / truncated directory / Apple flavor with
-    both platforms. Golden: fixtures/golden_fonts_seed42_n8.parquet."""
-    import struct
-    import zlib as _z
-
-    def name_table(recs):
-        """recs: [(plat, enc, nid, text)] -> name table bytes."""
-        pool = bytearray()
-        entries = []
-        for plat, enc, nid, text in recs:
-            raw = text.encode(
-                "latin-1" if plat == 1 else "utf-16-be")
-            entries.append((plat, enc, 0 if plat == 1 else 0x409,
-                            nid, len(raw), len(pool)))
-            pool.extend(raw)
-        out = struct.pack(">HHH", 0, len(recs), 6 + 12 * len(recs))
-        for e in entries:
-            out += struct.pack(">HHHHHH", *e)
-        return out + bytes(pool)
-
-    def sfnt(flavor: bytes, tables: list[tuple[str, bytes]]):
-        n = len(tables)
-        out = bytearray(struct.pack(">4sHHHH", flavor, n, 16, 4, 0))
-        off = 12 + 16 * n
-        body = bytearray()
-        for tag, data in tables:
-            out += struct.pack(">4sIII", tag.encode("ascii"), 0,
-                               off, len(data))
-            body += data + b"\x00" * (-len(data) % 4)
-            off += len(data) + (-len(data) % 4)
-        return bytes(out + body)
-
-    def woff(flavor: bytes, tables, compress=()):
-        n = len(tables)
-        entries = []
-        body = bytearray()
-        off = 44 + 20 * n
-        for tag, data in tables:
-            blob = _z.compress(data, 9) if tag in compress else data
-            if len(blob) >= len(data):
-                blob = data
-            entries.append((tag.encode("ascii"), off, len(blob),
-                            len(data)))
-            body += blob + b"\x00" * (-len(blob) % 4)
-            off += len(blob) + (-len(blob) % 4)
-        total = 44 + 20 * n + len(body)
-        sfnt_size = 12 + 16 * n + sum(
-            len(d) + (-len(d) % 4) for _, d in tables)
-        out = struct.pack(">4s4sIHHIHHIIIII", b"wOFF", flavor,
-                          total, n, 0, sfnt_size,
-                          1, 0, 0, 0, 0, 0, 0)
-        for tag, o, c, orig in entries:
-            out += struct.pack(">4sIIII", tag, o, c, orig, 0)
-        return out + bytes(body)
-
-    head = struct.pack(">IIIIHH", 0x00010000, 0, 0x5F0F3CF5,
-                       0, 16, 0) + b"\x00" * 30
-    win = [(3, 1, 1, "Inter Display"), (3, 1, 2, "Bold"),
-           (3, 1, 4, "Inter Display Bold"),
-           (3, 1, 5, "Version 4.000"), (3, 1, 6, "Inter-Bold")]
-    mac = [(1, 0, 1, "Café Grande"), (1, 0, 2, "Regular"),
-           (1, 0, 6, "CafeGrande-Regular")]
-
-    tt = sfnt(b"\x00\x01\x00\x00",
-              [("head", head), ("name", name_table(win)),
-               ("glyf", b"\x00" * 64)])
-    rows: list[dict] = []
-
-    def add(name, blob):
-        rows.append({
-            "url": f"https://fonts{len(rows)}.example.org/{name}",
-            "payload": blob})
-
-    add("inter.ttf", tt)
-    add("cafe.otf", sfnt(b"OTTO",
-                         [("CFF ", b"\x01\x00\x04\x04" * 8),
-                          ("name", name_table(mac))]))
-    add("inter.woff", woff(b"\x00\x01\x00\x00",
-                           [("head", head),
-                            ("name", name_table(win + [(3, 1, 16,
-                              "Inter")])),
-                            ("glyf", b"\x00" * 64)],
-                           compress=("name", "glyf")))
-    add("stored.woff", woff(b"OTTO",
-                            [("name", name_table(mac))]))
-    add("next.woff2", struct.pack(">4s4sIHH", b"wOF2", b"OTTO",
-                                  1234, 7, 0) + b"\x00" * 32)
-    add("junk.bin", b"GIF89a definitely not a font")
-    add("trunc.ttf", tt[:12 + 16 * 2 + 8])
-    add("apple.ttf", sfnt(b"true",
-                          [("name", name_table(
-                              win[:1] + mac
-                              + [(3, 1, 16, "Inter Var")]))]))
-    return rows
-
-
-def avro_file_rows(seed: int = 42) -> list[dict]:
-    """Deterministic hand-encoded Avro object-container files (url,
-    payload) — the ENCODE half of extractor/avrox.py, with real
-    record payloads (zigzag longs + strings) so block sizes are
-    honest. Shapes: null codec / deflate codec / split metadata
-    map + extra keys / non-record schema / sync-mismatch mid-file /
-    truncated / junk / nested union-array-map schema. Golden:
-    fixtures/golden_avro_seed42_n8.parquet."""
-    import json as _json
-    import zlib as _z
-
-    def zz(v: int) -> bytes:          # zigzag long varint
-        u = (v << 1) ^ (v >> 63)
-        out = bytearray()
-        while True:
-            c = u & 0x7F
-            u >>= 7
-            out.append(c | (0x80 if u else 0))
-            if not u:
-                return bytes(out)
-
-    def s(x: str) -> bytes:
-        raw = x.encode("utf-8")
-        return zz(len(raw)) + raw
-
-    SYNC = bytes(range(16))
-
-    def header(schema, codec="null", extra=(), split=False):
-        items = [("avro.schema", _json.dumps(
-            schema, sort_keys=True).encode()),
-            ("avro.codec", codec.encode())] + list(extra)
-        out = b"Obj\x01"
-        if split:
-            out += zz(1) + s(items[0][0]) \
-                + zz(len(items[0][1])) + items[0][1]
-            rest = items[1:]
-            out += zz(len(rest))
-            for k, v in rest:
-                out += s(k) + zz(len(v)) + v
-        else:
-            out += zz(len(items))
-            for k, v in items:
-                out += s(k) + zz(len(v)) + v
-        return out + zz(0) + SYNC
-
-    def recs(start, n):
-        return b"".join(zz(start + i)
-                        + s(f"https://h{i % 3}.example.org/p"
-                            f"{start + i}")
-                        for i in range(n))
-
-    def block(n, data, codec="null", sync=SYNC):
-        if codec == "deflate":
-            co = _z.compressobj(9, _z.DEFLATED, -15)
-            data = co.compress(data) + co.flush()
-        return zz(n) + zz(len(data)) + data + sync
-
-    SCHEMA = {"type": "record", "name": "Fetch",
-              "fields": [{"name": "id", "type": "long"},
-                         {"name": "url", "type": "string"}]}
-    NESTED = {"type": "record", "name": "Doc", "fields": [
-        {"name": "id", "type": "long"},
-        {"name": "lang", "type": ["null", "string"]},
-        {"name": "tags", "type": {"type": "array",
-                                  "items": "string"}},
-        {"name": "hdrs", "type": {"type": "map",
-                                  "values": "string"}},
-        {"name": "geo", "type": {"type": "record", "name": "Geo",
-                                 "fields": [{"name": "lat",
-                                             "type": "double"}]}}]}
-
-    rows: list[dict] = []
-
-    def add(name, blob):
-        rows.append({
-            "url": f"https://lake{len(rows)}.example.org/{name}",
-            "payload": blob})
-
-    add("plain.avro", header(SCHEMA)
-        + block(10, recs(0, 10)) + block(5, recs(10, 5)))
-    add("deflate.avro", header(SCHEMA, codec="deflate")
-        + block(20, recs(0, 20), "deflate")
-        + block(20, recs(20, 20), "deflate")
-        + block(3, recs(40, 3), "deflate"))
-    add("split.avro", header(
-        SCHEMA, extra=[("writer", b"hddps 1.0")], split=True)
-        + block(2, recs(0, 2)))
-    add("strings.avro", header("string")
-        + block(4, b"".join(s(f"tok-{i}") for i in range(4))))
-    bad = header(SCHEMA) + block(6, recs(0, 6)) \
-        + block(6, recs(6, 6), sync=b"\xee" * 16)
-    add("badsync.avro", bad)
-    good = header(SCHEMA) + block(8, recs(0, 8))
-    add("trunc.avro", good[:len(good) - 11])
-    add("junk.bin", b"PAR1 not avro")
-    add("nested.avro", header(NESTED, codec="deflate")
-        + block(1, _z.compress(b"\x02", 9)[2:-4], "deflate"))
-    return rows
-
-
-def protobuf_blob_rows(seed: int = 42) -> list[dict]:
-    """Deterministic hand-encoded protobuf wire blobs (url,
-    payload) — the ENCODE half of extractor/protox.py. Shapes:
-    API-response-ish message (nested submessages, strings, varints,
-    fixed64/fixed32, repeated fields) / deep nesting at the depth
-    cap / length-prefixed string that is NOT a message (the
-    classifier's str path) / binary bytes field / empty + junk +
-    group-marker rejects. Golden:
-    fixtures/golden_protobuf_seed42_n8.parquet."""
-    import struct
-
-    def vi(v: int) -> bytes:          # unsigned varint
-        out = bytearray()
-        while True:
-            c = v & 0x7F
-            v >>= 7
-            out.append(c | (0x80 if v else 0))
-            if not v:
-                return bytes(out)
-
-    def fld(no: int, wt: int, val: bytes) -> bytes:
-        return vi((no << 3) | wt) + val
-
-    def ln(no: int, val: bytes) -> bytes:
-        return fld(no, 2, vi(len(val)) + val)
-
-    def st(no: int, text: str) -> bytes:
-        return ln(no, text.encode("utf-8"))
-
-    geo = fld(1, 1, struct.pack("<d", 48.8566)) \
-        + fld(2, 1, struct.pack("<d", 2.3522))
-    page = fld(1, 0, vi(200)) \
-        + st(2, "https://example.org/doc-7") \
-        + st(3, "text/html") \
-        + ln(4, geo) \
-        + fld(5, 5, struct.pack("<f", 0.75)) \
-        + fld(6, 0, vi(1730000000))
-    resp = fld(1, 0, vi(1)) + ln(2, page) + ln(2, page[:-6]
-                                               + fld(6, 0, vi(99))) \
-        + st(3, "ok") + ln(9, b"\x00\xff\xfe\x01garbage")
-
-    deep = st(1, "leaf")
-    for no in (2, 3, 4, 5, 6, 7):
-        deep = ln(no, deep)
-
-    rows: list[dict] = []
-
-    def add(name, blob):
-        rows.append({
-            "url": f"https://api{len(rows)}.example.com/{name}",
-            "payload": blob})
-
-    add("response.pb", resp)
-    add("deep.pb", deep)
-    add("strings.pb", st(1, "hello world")
-        + st(1, "second value") + st(7, "née naïve — utf8"))
-    add("scalars.pb", fld(1, 0, vi(0))
-        + fld(2, 0, vi(1 << 40))
-        + fld(3, 1, struct.pack("<q", -5))
-        + fld(4, 5, struct.pack("<I", 0xDEADBEEF)))
-    add("empty.pb", b"")
-    add("junk.pb", b"\xff\xff\xff\xff\xff\xff\xff\xff\xff\xff")
-    add("group.pb", fld(1, 3, b"") + fld(1, 4, b""))
-    add("text.txt", b"just some plain ascii text, not protobuf")
-    return rows
-
-
-def elf_object_rows(seed: int = 42) -> list[dict]:
-    """Deterministic hand-built ELF objects (url, payload) — the
-    ENCODE half of extractor/elfx.py, one parameterized builder for
-    both classes and byte orders. Shapes: x86_64 LE shared object
-    with DT_NEEDED deps / 32-bit big-endian ARM executable /
-    aarch64 relocatable / sectionless core / truncated section
-    table / junk. Golden: fixtures/golden_elf_seed42_n6.parquet."""
-    import struct
-
-    def build(cls, endian, etype, machine, sections, entry=0):
-        """sections: [(name, stype, flags, data, link)]; appends
-        .shstrtab automatically when any sections exist."""
-        is64 = cls == 64
-        bo = "<" if endian == "le" else ">"
-        w = "Q" if is64 else "I"
-        ehsize = 64 if is64 else 52
-        shentsize = 64 if is64 else 40
-        secs = list(sections)
-        if secs:
-            secs = [("", 0, 0, b"", 0)] + secs \
-                + [(".shstrtab", 3, 0, b"", 0)]
-        names = bytearray(b"\x00")
-        name_off = {}
-        for nm, *_ in secs:
-            if nm and nm not in name_off:
-                name_off[nm] = len(names)
-                names += nm.encode() + b"\x00"
-        # lay out: ehdr | data blobs | shstrtab | sh table
-        off = ehsize
-        offsets = []
-        blobs = bytearray()
-        for nm, st, fl, data, link in secs:
-            if nm == ".shstrtab":
-                data = bytes(names)
-            offsets.append((off + len(blobs), len(data)))
-            blobs += data
-        shoff = ehsize + len(blobs)
-        sh = bytearray()
-        for i, (nm, st, fl, data, link) in enumerate(secs):
-            o, sz = offsets[i]
-            if is64:
-                sh += struct.pack(bo + "IIQQQQIIQQ",
-                                  name_off.get(nm, 0), st, fl, 0,
-                                  o, sz, link, 0, 1, 0)
-            else:
-                sh += struct.pack(bo + "IIIIIIIIII",
-                                  name_off.get(nm, 0), st, fl, 0,
-                                  o, sz, link, 0, 1, 0)
-        ident = b"\x7fELF" + bytes([2 if is64 else 1,
-                                    1 if endian == "le" else 2,
-                                    1, 0]) + b"\x00" * 8
-        ehdr = ident + struct.pack(
-            bo + "HHI" + w * 3 + "IHHHHHH", etype, machine, 1,
-            entry, 0, shoff if secs else 0, 0, ehsize, 0, 0,
-            shentsize, len(secs), len(secs) - 1 if secs else 0)
-        return bytes(ehdr) + bytes(blobs) + bytes(sh)
-
-    def dyn(entries, is64=True, endian="le"):
-        import struct as _s
-        bo = "<" if endian == "le" else ">"
-        w = "QQ" if is64 else "II"
-        return b"".join(_s.pack(bo + w, t, v) for t, v in entries)
-
-    dynstr = b"\x00libc.so.6\x00libm.so.6\x00libssl.so.3\x00"
-    rows: list[dict] = []
-
-    def add(name, blob):
-        rows.append({
-            "url": f"https://pkg{len(rows)}.example.org/{name}",
-            "payload": blob})
-
-    so = build(64, "le", 3, 62, [
-        (".text", 1, 6, b"\x90" * 48, 0),
-        (".data", 1, 3, b"\x01" * 16, 0),
-        (".bss", 8, 3, b"", 0),
-        (".dynstr", 3, 2, dynstr, 0),
-        (".dynamic", 6, 3,
-         dyn([(1, 1), (1, 11), (5, 0), (0, 0)]), 4),
-    ], entry=0x1040)
-    add("libdemo.so", so)
-    add("tool", build(32, "be", 2, 40, [
-        (".text", 1, 6, b"\x00" * 32, 0),
-        (".rodata", 1, 2, b"strings!", 0),
-        (".note", 7, 0, b"\x04\x00\x00\x00", 0),
-    ], entry=0x8000))
-    add("mod.o", build(64, "le", 1, 183, [
-        (".text", 1, 6, b"\x1f\x20\x03\xd5" * 4, 0),
-        (".symtab", 2, 0, b"\x00" * 24, 0),
-    ]))
-    add("crash.core", build(64, "le", 4, 62, []))
-    add("trunc.so", so[:len(so) - 100])
-    add("junk.bin", b"#!/bin/sh\necho not an elf\n")
-    return rows
-
-
 def toml_file_rows(seed: int = 42) -> list[dict]:
     """Deterministic TOML config files (url, payload) for
     extractor/tomlx.py: pyproject / Cargo manifest / site config
@@ -6655,94 +5378,6 @@ times = [09:30:00, 17:45:00.25]
         rows.append({
             "url": f"https://repo{i}.example.org/{name}",
             "payload": payload})
-    return rows
-
-
-def cbor_blob_rows(seed: int = 42) -> list[dict]:
-    """Deterministic hand-encoded CBOR items (url, payload) — the
-    ENCODE half of extractor/cborx.py. Shapes: WebAuthn-ish
-    attestation map / COSE key map (negative int keys) / tagged
-    datetimes+bignum / indefinite-length strings+arrays+maps /
-    half+single+double floats / mixed deep nesting / rejects
-    (trailing bytes, truncated, junk, bad utf8 tstr). Golden:
-    fixtures/golden_cbor_seed42_n10.parquet."""
-    import struct
-
-    def hd(mt, arg):
-        if arg < 24:
-            return bytes([(mt << 5) | arg])
-        for ai, n in ((24, 1), (25, 2), (26, 4), (27, 8)):
-            if arg < (1 << (8 * n)):
-                return bytes([(mt << 5) | ai]) \
-                    + arg.to_bytes(n, "big")
-        raise ValueError
-
-    def enc(v):
-        if isinstance(v, bool):
-            return b"\xf5" if v else b"\xf4"
-        if v is None:
-            return b"\xf6"
-        if isinstance(v, int):
-            return hd(0, v) if v >= 0 else hd(1, -1 - v)
-        if isinstance(v, bytes):
-            return hd(2, len(v)) + v
-        if isinstance(v, str):
-            raw = v.encode("utf-8")
-            return hd(3, len(raw)) + raw
-        if isinstance(v, float):
-            return b"\xfb" + struct.pack(">d", v)
-        if isinstance(v, list):
-            return hd(4, len(v)) + b"".join(enc(x) for x in v)
-        if isinstance(v, dict):
-            return hd(5, len(v)) + b"".join(
-                enc(k) + enc(x) for k, x in v.items())
-        if isinstance(v, tuple) and v[0] == "tag":
-            return hd(6, v[1]) + enc(v[2])
-        raise ValueError(type(v))
-
-    rows: list[dict] = []
-
-    def add(name, blob):
-        rows.append({
-            "url": f"https://iot{len(rows)}.example.org/{name}",
-            "payload": blob})
-
-    add("webauthn.cbor", enc({
-        "fmt": "packed",
-        "attStmt": {"alg": -7, "sig": bytes(range(20))},
-        "authData": bytes(range(40)),
-    }))
-    add("cosekey.cbor", enc({
-        1: 2, 3: -7, -1: 1,
-        -2: bytes.fromhex("deadbeef" * 8),
-        -3: bytes.fromhex("cafef00d" * 8),
-    }))
-    add("tagged.cbor", enc({
-        "created": ("tag", 0, "2024-10-27T06:00:00Z"),
-        "epoch": ("tag", 1, 1730000000),
-        "big": ("tag", 2, b"\x01\x00\x00\x00\x00"),
-        "nested": ("tag", 42, ("tag", 1, 7)),
-    }))
-    # indefinite forms: 0x5f/0x7f chunks, 0x9f array, 0xbf map
-    indef = b"\xbf" + enc("parts") \
-        + b"\x7f" + enc("he")[0:]  # text chunks follow
-    indef = b"\xbf" + enc("parts") + b"\x7f" \
-        + hd(3, 2) + b"he" + hd(3, 3) + b"llo" + b"\xff" \
-        + enc("blob") + b"\x5f" + hd(2, 2) + b"\x00\x01" \
-        + hd(2, 1) + b"\x02" + b"\xff" \
-        + enc("seq") + b"\x9f" + enc(1) + enc("x") + b"\xff" \
-        + b"\xff"
-    add("indefinite.cbor", indef)
-    add("floats.cbor", enc([0.5, -1.25])[:1]
-        + b"\xf9\x3e\x00"          # half 1.5
-        + b"\xfa\x3f\x00\x00\x00")  # single 0.5
-    add("mixed.cbor", enc([1, "two", [3, {"four": 4}],
-                           {"empty_a": [], "empty_m": {}},
-                           None, True, 23.5]))
-    add("trailing.cbor", enc(5) + b"\x00")
-    add("trunc.cbor", enc({"a": "long string here"})[:6])
-    add("junk.bin", b"\xff\xff\xff")
-    add("badutf8.cbor", hd(3, 2) + b"\xc3\x28")
     return rows
 
 
@@ -6849,546 +5484,6 @@ def compressed_stream_rows(seed: int = 42) -> list[dict]:
     add("plain.txt", b"not compressed at all, just text")
     add("empty.gz", gz_member(b""))
     add("nested.gz.zst", zstd_frame([gz_member(text2)[:60]]))
-    return rows
-
-
-def pe_file_rows(seed: int = 42) -> list[dict]:
-    """Deterministic hand-built PE files (url, payload) — the
-    ENCODE half of extractor/pex.py. Shapes: PE32+ DLL with a real
-    import directory (RVA-mapped .idata) / PE32 x86 exe / DOS-only
-    stub / truncated / junk. Golden:
-    fixtures/golden_pe_seed42_n5.parquet."""
-    import struct
-
-    def build(plus, machine, dll, imports, nsec_extra=0):
-        opt_size = 240 if plus else 224
-        nsec = 2
-        dos = b"MZ" + b"\x00" * 58 + struct.pack("<I", 64)
-        coff = b"PE\x00\x00" + struct.pack(
-            "<HHIIIHH", machine, nsec, 1730000000, 0, 0, opt_size,
-            0x2022 if dll else 0x0102)
-        opt = bytearray(opt_size)
-        struct.pack_into("<H", opt, 0, 0x20B if plus else 0x10B)
-        dd = 112 if plus else 96
-        struct.pack_into("<I", opt, dd - 4, 16)  # n dirs
-        idata_rva, idata_raw = 0x2000, 1024
-        # import directory = data dir entry 1
-        struct.pack_into("<II", opt, dd + 8, idata_rva, 512)
-        secs = b""
-        for name, vsize, rva, rsize, roff, fl in (
-                (b".text", 0x400, 0x1000, 512, 512, 0x60000020),
-                (b".idata", 0x200, idata_rva, 512, idata_raw,
-                 0x40000040)):
-            secs += struct.pack("<8sIIIIIIHHI",
-                                name.ljust(8, b"\x00"), vsize,
-                                rva, rsize, roff, 0, 0, 0, 0, fl)
-        hdr = dos + coff + bytes(opt) + secs
-        hdr = hdr.ljust(512, b"\x00") + b"\x90" * 512  # .text
-        # .idata: descriptors then names
-        names_off = 20 * (len(imports) + 1)
-        desc = b""
-        names = b""
-        for nm in imports:
-            desc += struct.pack(
-                "<IIIII", 0x2100, 0, 0,
-                idata_rva + names_off + len(names), 0x2200)
-            names += nm.encode("ascii") + b"\x00"
-        desc += b"\x00" * 20
-        idata = (desc + names).ljust(512, b"\x00")
-        return hdr + idata
-
-    rows: list[dict] = []
-
-    def add(name, blob):
-        rows.append({
-            "url": f"https://win{len(rows)}.example.org/{name}",
-            "payload": blob})
-
-    add("helper.dll", build(True, 0x8664, True,
-                            ["KERNEL32.dll", "ws2_32.dll",
-                             "ADVAPI32.dll"]))
-    add("setup.exe", build(False, 0x014C, False, ["USER32.dll"]))
-    add("dosonly.exe", b"MZ" + b"\x00" * 62 + b"legacy stub")
-    add("trunc.dll", build(True, 0x8664, True,
-                           ["KERNEL32.dll"])[:600])
-    add("junk.bin", b"\x7fELF not a PE")
-    return rows
-
-
-def macho_file_rows(seed: int = 42) -> list[dict]:
-    """Deterministic hand-built Mach-O files (url, payload) — the
-    ENCODE half of extractor/machox.py. Shapes: arm64 LE dylib
-    (LC_ID_DYLIB + two LC_LOAD_DYLIBs, segments with section
-    counts) / 32-bit big-endian x86 executable / fat binary
-    wrapping both / Java class (shared magic, rejected) / junk.
-    Golden: fixtures/golden_macho_seed42_n5.parquet."""
-    import struct
-
-    def dylib_cmd(kind, name, bo):
-        raw = name.encode("ascii") + b"\x00"
-        csize = (24 + len(raw) + 7) // 8 * 8
-        return struct.pack(bo + "IIIIII", kind, csize, 24,
-                           1730000000, 0x10000, 0x10000) \
-            + raw.ljust(csize - 24, b"\x00")
-
-    def seg64(name, nsects, bo):
-        return struct.pack(bo + "II16s", 0x19, 72,
-                           name.encode().ljust(16, b"\x00")) \
-            + b"\x00" * 32 + struct.pack(bo + "IIII", 7, 5,
-                                         nsects, 0)
-
-    def seg32(name, nsects, bo):
-        return struct.pack(bo + "II16s", 0x01, 56,
-                           name.encode().ljust(16, b"\x00")) \
-            + b"\x00" * 16 + struct.pack(bo + "IIII", 7, 5,
-                                         nsects, 0)
-
-    def thin64(bo_c):
-        bo = "<" if bo_c == "le" else ">"
-        cmds = seg64("__TEXT", 2, bo) + seg64("__DATA", 1, bo) \
-            + dylib_cmd(0x0D, "@rpath/libdemo.dylib", bo) \
-            + dylib_cmd(0x0C, "/usr/lib/libSystem.B.dylib", bo) \
-            + dylib_cmd(0x0C,
-                        "/usr/lib/libc++.1.dylib", bo)
-        magic = b"\xcf\xfa\xed\xfe" if bo_c == "le" \
-            else b"\xfe\xed\xfa\xcf"
-        return magic + struct.pack(
-            bo + "IIIIII", 0x0100000C, 0, 6, 5,
-            len(cmds), 0) + b"\x00" * 4 + cmds
-
-    def thin32():
-        bo = ">"
-        cmds = seg32("__TEXT", 1, bo) \
-            + dylib_cmd(0x0C, "/usr/lib/libSystem.B.dylib", bo)
-        return b"\xfe\xed\xfa\xce" + struct.pack(
-            bo + "IIIIII", 7, 3, 2, 2, len(cmds), 0) + cmds
-
-    t64, t32 = thin64("le"), thin32()
-    fat = struct.pack(">II", 0xCAFEBABE, 2) \
-        + struct.pack(">IIIII", 0x0100000C, 0, 48 + 0,
-                      len(t64), 0) \
-        + struct.pack(">IIIII", 7, 3, 48 + len(t64), len(t32), 0)
-    fat = fat.ljust(48, b"\x00") + t64 + t32
-
-    rows: list[dict] = []
-
-    def add(name, blob):
-        rows.append({
-            "url": f"https://mac{len(rows)}.example.org/{name}",
-            "payload": blob})
-
-    add("libdemo.dylib", t64)
-    add("tool32", t32)
-    add("universal", fat)
-    add("Hello.class", struct.pack(">IHH", 0xCAFEBABE, 0, 52)
-        + b"\x00" * 40)
-    add("junk.bin", b"MZ but actually nothing")
-    return rows
-
-
-def ar_archive_rows(seed: int = 42) -> list[dict]:
-    """Deterministic ar/.deb archives (url, payload) — the ENCODE
-    half of extractor/arx.py over tarx.make_tar + stdlib codecs.
-    Shapes: static lib with a GNU '//' long-name table / .deb with
-    gzip control + xz data / .deb with xz control and an
-    alternatives-heavy Depends / plain ar (not a deb) / truncated /
-    junk. Golden: fixtures/golden_ar_seed42_n6.parquet."""
-    import lzma as _lzma
-    import zlib as _z
-
-    from .extractor.tarx import make_tar
-
-    def ar(members, longnames=None):
-        out = b"!<arch>\n"
-        if longnames:
-            table = b"".join(n.encode() + b"/\n"
-                             for n in longnames)
-            out += b"//" + b" " * 14 + b"0" + b" " * 11 \
-                + b"0     0     0       " \
-                + f"{len(table):<10}".encode() + b"`\n" + table
-            if len(table) & 1:
-                out += b"\n"
-        offs = {}
-        pos = 0
-        for n in (longnames or []):
-            offs[n] = pos
-            pos += len(n) + 2
-        for name, mtime, data in members:
-            nm = f"/{offs[name]}" if name in offs else name + "/"
-            out += f"{nm:<16}".encode() \
-                + f"{mtime:<12}".encode() + b"0     0     " \
-                + b"100644  " + f"{len(data):<10}".encode() \
-                + b"`\n" + data
-            if len(data) & 1:
-                out += b"\n"
-        return out
-
-    def gz(data):
-        co = _z.compressobj(9, _z.DEFLATED, 31)
-        return co.compress(data) + co.flush()
-
-    CTRL = """\
-Package: warc-tools
-Version: 2.1.0-3
-Architecture: amd64
-Maintainer: Crawl Team <crawl@example.org>
-Installed-Size: 2048
-Depends: libc6 (>= 2.34), zlib1g (>= 1:1.2.11), python3:any
-Section: utils
-Priority: optional
-Description: WARC processing utilities
- Long description continues here.
-"""
-    CTRL2 = """\
-Package: page-extractor
-Version: 0.9.1
-Architecture: all
-Depends: python3 | python3-minimal, libxml2 (>= 2.9) | libxml2-compat, curl
-Description: main-content extraction
-"""
-    ctrl_tar = make_tar([
-        {"name": "./", "typeflag": "5"},
-        {"name": "./control", "data": CTRL.encode()},
-        {"name": "./md5sums", "data": b"d41d8cd9  usr/bin/x\n"}])
-    ctrl_tar2 = make_tar([
-        {"name": "control", "data": CTRL2.encode()}])
-    data_tar = make_tar([
-        {"name": "./usr/bin/warc-tool", "data": b"\x7fELF stub"}])
-
-    rows: list[dict] = []
-
-    def add(name, blob):
-        rows.append({
-            "url": f"https://mirror{len(rows)}.example.org/"
-                   f"{name}",
-            "payload": blob})
-
-    add("libcrawl.a", ar(
-        [("crawl_fetch_module.o", 1730000000, b"\x7fELF" + b"0" * 40),
-         ("crawl_parse_module.o", 1730000001, b"\x7fELF" + b"1" * 41)],
-        longnames=["crawl_fetch_module.o", "crawl_parse_module.o"]))
-    add("warc-tools.deb", ar([
-        ("debian-binary", 1730000000, b"2.0\n"),
-        ("control.tar.gz", 1730000000, gz(ctrl_tar)),
-        ("data.tar.xz", 1730000000,
-         _lzma.compress(data_tar, format=_lzma.FORMAT_XZ))]))
-    add("page-extractor.deb", ar([
-        ("debian-binary", 1730000010, b"2.0\n"),
-        ("control.tar.xz", 1730000010,
-         _lzma.compress(ctrl_tar2, format=_lzma.FORMAT_XZ)),
-        ("data.tar.xz", 1730000010,
-         _lzma.compress(data_tar, format=_lzma.FORMAT_XZ))]))
-    add("plain.ar", ar([("notes.txt", 1730000020,
-                         b"just a member\n")]))
-    deb = rows[1]["payload"]
-    add("cut.deb", deb[:len(deb) - 40])
-    add("junk.bin", b"!<arch>X wrong magic")
-    return rows
-
-
-def git_object_rows(seed: int = 42) -> list[dict]:
-    """Deterministic hand-built git objects (url, payload) — the
-    ENCODE half of extractor/gitx.py: a two-commit history whose
-    pack carries an ofs-delta (copy+insert) and a ref-delta blob,
-    plus loose commit/blob/tag objects, a truncated pack, and
-    junk. Golden: fixtures/golden_git_seed42_n6.parquet."""
-    import hashlib
-    import struct
-    import zlib as _z
-
-    def oid(otype, content):
-        return hashlib.sha1(
-            f"{otype} {len(content)}".encode() + b"\x00"
-            + content).digest()
-
-    blob1 = b"# crawl notes\nfetch politely\n"
-    blob2 = blob1 + b"respect robots.txt\n"
-    tree1 = b"100644 notes.md\x00" + oid("blob", blob1)
-    tree2 = (b"100644 notes.md\x00" + oid("blob", blob2)
-             + b"40000 docs\x00" + oid("tree", tree1))
-    c1 = (b"tree " + oid("tree", tree1).hex().encode()
-          + b"\nauthor Ada L <ada@example.org> 1730000000 +0000"
-          b"\ncommitter Ada L <ada@example.org> 1730000000 +0000"
-          b"\n\ninitial import\n")
-    c2 = (b"tree " + oid("tree", tree2).hex().encode()
-          + b"\nparent " + oid("commit", c1).hex().encode()
-          + b"\nauthor Bo X <bo@example.org> 1730000600 +0000"
-          b"\ncommitter Bo X <bo@example.org> 1730000700 +0000"
-          b"\n\nadd robots guidance\n\nlonger body here\n")
-    tag = (b"object " + oid("commit", c2).hex().encode()
-           + b"\ntype commit\ntag v1.0\n"
-           b"tagger Bo X <bo@example.org> 1730000800 +0000"
-           b"\n\nrelease v1.0\n")
-
-    def size_varint(t, size):
-        c = (t << 4) | (size & 15)
-        size >>= 4
-        out = bytearray()
-        while size:
-            out.append(c | 0x80)
-            c = size & 0x7F
-            size >>= 7
-        out.append(c)
-        return bytes(out)
-
-    def ofs_varint(rel):
-        out = [rel & 0x7F]
-        rel >>= 7
-        while rel:
-            rel -= 1
-            out.insert(0, 0x80 | (rel & 0x7F))
-            rel >>= 7
-        return bytes(out)
-
-    def dsize(v):
-        out = bytearray()
-        while True:
-            c = v & 0x7F
-            v >>= 7
-            out.append(c | (0x80 if v else 0))
-            if not v:
-                return bytes(out)
-
-    # delta blob1 -> blob2: copy all of blob1, insert the tail
-    tail = blob2[len(blob1):]
-    delta = (dsize(len(blob1)) + dsize(len(blob2))
-             + bytes([0x80 | 0x01 | 0x10, 0, len(blob1)])
-             + bytes([len(tail)]) + tail)
-    # ref-delta tag-as-blob: insert-only over blob1
-    note = b"see notes.md"
-    rdelta = (dsize(len(blob1)) + dsize(len(note))
-              + bytes([len(note)]) + note)
-
-    pack = bytearray(b"PACK" + struct.pack(">II", 2, 6))
-    offsets = {}
-    def emit(key, t, data):
-        offsets[key] = len(pack)
-        pack.extend(size_varint(t, len(data)))
-        pack.extend(_z.compress(data, 9))
-    emit("c2", 1, c2)
-    emit("c1", 1, c1)
-    emit("tree2", 2, tree2)
-    emit("blob1", 3, blob1)
-    # ofs-delta: rel must equal delta_start - blob1_start
-    offsets["d"] = len(pack)
-    pack.extend(size_varint(6, len(delta)))
-    pack.extend(ofs_varint(offsets["d"] - offsets["blob1"]))
-    pack.extend(_z.compress(delta, 9))
-    offsets["r"] = len(pack)
-    pack.extend(size_varint(7, len(rdelta)))
-    pack.extend(oid("blob", blob1))
-    pack.extend(_z.compress(rdelta, 9))
-    pack.extend(hashlib.sha1(bytes(pack)).digest())
-    pack = bytes(pack)
-
-    rows: list[dict] = []
-
-    def add(name, blob):
-        rows.append({
-            "url": f"https://code{len(rows)}.example.org/.git/"
-                   f"{name}",
-            "payload": blob})
-
-    add("objects/pack/pack-1.pack", pack)
-    add("objects/aa/loose-commit", _z.compress(
-        b"commit " + str(len(c1)).encode() + b"\x00" + c1, 9))
-    add("objects/bb/loose-blob", _z.compress(
-        b"blob " + str(len(blob1)).encode() + b"\x00" + blob1, 9))
-    add("objects/cc/loose-tag", _z.compress(
-        b"tag " + str(len(tag)).encode() + b"\x00" + tag, 9))
-    add("objects/pack/cut.pack", pack[:90])
-    add("junk.bin", b"not git data in any way")
-    return rows
-
-
-def icc_profile_rows(seed: int = 42) -> list[dict]:
-    """Deterministic hand-built ICC profiles (url, payload) — the
-    ENCODE half of extractor/iccx.py. Shapes: sRGB-like display
-    profile ('desc' ASCII description) / wide-gamut display with
-    'mluc' UTF-16BE description / CMYK printer with 'text'
-    copyright / truncated tag table / junk. Golden:
-    fixtures/golden_icc_seed42_n5.parquet."""
-    import struct
-
-    def desc_tag(text):
-        raw = text.encode("latin-1") + b"\x00"
-        return b"desc" + b"\x00" * 4 \
-            + struct.pack(">I", len(raw)) + raw + b"\x00" * 78
-
-    def mluc_tag(text):
-        raw = text.encode("utf-16-be")
-        return b"mluc" + b"\x00" * 4 + struct.pack(">II", 1, 12) \
-            + b"enUS" + struct.pack(">II", len(raw), 28) + raw
-
-    def text_tag(text):
-        return b"text" + b"\x00" * 4 \
-            + text.encode("latin-1") + b"\x00"
-
-    def xyz_tag(x, y, z):
-        return b"XYZ " + b"\x00" * 4 \
-            + struct.pack(">iii", x, y, z)
-
-    def profile(cls, space, pcs, tags, version=(4, 0x30),
-                intent=0, date=(2024, 10, 27, 6, 0, 0)):
-        hdr = bytearray(128)
-        hdr[4:8] = b"none"
-        hdr[8] = version[0]
-        hdr[9] = version[1]
-        hdr[12:16] = cls.encode("latin-1").ljust(4)
-        hdr[16:20] = space.encode("latin-1").ljust(4)
-        hdr[20:24] = pcs.encode("latin-1").ljust(4)
-        hdr[24:36] = struct.pack(">6H", *date)
-        hdr[36:40] = b"acsp"
-        struct.pack_into(">I", hdr, 64, intent)
-        table = struct.pack(">I", len(tags))
-        off = 128 + 4 + 12 * len(tags)
-        body = b""
-        for sig, data in tags:
-            table += sig.encode("latin-1").ljust(4) \
-                + struct.pack(">II", off, len(data))
-            pad = (-len(data)) % 4
-            body += data + b"\x00" * pad
-            off += len(data) + pad
-        blob = bytes(hdr) + table + body
-        return struct.pack(">I", len(blob)) + blob[4:]
-
-    srgb = profile("mntr", "RGB", "XYZ", [
-        ("desc", desc_tag("sRGB IEC61966-2.1")),
-        ("wtpt", xyz_tag(63190, 65536, 54061)),
-        ("cprt", text_tag("public domain"))],
-        version=(2, 0x10))
-    p3 = profile("mntr", "RGB", "XYZ", [
-        ("desc", mluc_tag("Wide Gamut Display P3")),
-        ("wtpt", xyz_tag(63190, 65536, 54061))],
-        intent=1)
-    cmyk = profile("prtr", "CMYK", "Lab", [
-        ("desc", desc_tag("Coated FOGRA39-ish")),
-        ("cprt", text_tag("(c) example press"))],
-        intent=3, date=(2019, 3, 2, 12, 30, 45))
-
-    rows: list[dict] = []
-
-    def add(name, blob):
-        rows.append({
-            "url": f"https://color{len(rows)}.example.org/"
-                   f"{name}",
-            "payload": blob})
-
-    add("srgb.icc", srgb)
-    add("p3.icc", p3)
-    add("fogra.icc", cmyk)
-    add("cut.icc", p3[:140])
-    add("junk.bin", b"not a profile at all, no acsp")
-    return rows
-
-
-def iso_image_rows(seed: int = 42) -> list[dict]:
-    """Deterministic hand-built ISO 9660 images (url, payload) —
-    the ENCODE half of extractor/isox.py. Shapes: PVD + Joliet SVD
-    (UCS-2 names win), nested directory, versioned identifiers,
-    fixed recording dates / PVD-only image / truncated / junk.
-    Golden: fixtures/golden_iso_seed42_n4.parquet."""
-    import struct
-
-    S = 2048
-
-    def u32b(v):
-        return struct.pack("<I", v) + struct.pack(">I", v)
-
-    def u16b(v):
-        return struct.pack("<H", v) + struct.pack(">H", v)
-
-    DATE = bytes([124, 10, 27, 6, 0, 0, 0])  # 2024-10-27T06:00:00
-
-    def rec(name, extent, size, is_dir=False, joliet=False):
-        if name in (".", ".."):
-            raw = b"\x00" if name == "." else b"\x01"
-        else:
-            raw = name.encode("utf-16-be" if joliet else "ascii")
-        ln = 33 + len(raw)
-        ln += ln & 1
-        out = bytearray(ln)
-        out[0] = ln
-        out[2:10] = u32b(extent)
-        out[10:18] = u32b(size)
-        out[18:25] = DATE
-        out[25] = 2 if is_dir else 0
-        out[28:32] = u16b(1)
-        out[32] = len(raw)
-        out[33:33 + len(raw)] = raw
-        return bytes(out)
-
-    def sector(payload):
-        return payload.ljust(S, b"\x00")
-
-    def vd(vtype, volume_id, root_extent, root_size, escape=b""):
-        d = bytearray(S)
-        d[0] = vtype
-        d[1:7] = b"CD001\x01"
-        d[8:40] = b"HDDPS-SPARK".ljust(32)
-        d[40:72] = volume_id.ljust(32).encode("ascii")
-        d[80:88] = u32b(26)
-        d[88:88 + len(escape)] = escape
-        d[120:124] = u16b(1)
-        d[124:128] = u16b(1)
-        d[128:132] = u16b(S)
-        d[156:190] = rec(".", root_extent, root_size, True)
-        return bytes(d)
-
-    readme = b"welcome to the crawl mirror image\n"
-    inner = bytes(range(100))
-
-    def dirsec(entries):
-        return sector(b"".join(entries))
-
-    pvd_root = dirsec([
-        rec(".", 19, S, True), rec("..", 19, S, True),
-        rec("README.TXT;1", 22, len(readme)),
-        rec("DATA", 20, S, True),
-    ])
-    pvd_data = dirsec([
-        rec(".", 20, S, True), rec("..", 19, S, True),
-        rec("INNER.BIN;1", 23, len(inner)),
-    ])
-    jol_root = dirsec([
-        rec(".", 21, S, True, True), rec("..", 21, S, True, True),
-        rec("Read Me.txt", 22, len(readme), joliet=True),
-        rec("Data Files", 24, S, True, True),
-    ])
-    jol_data = dirsec([
-        rec(".", 24, S, True, True), rec("..", 21, S, True, True),
-        rec("inner file.bin", 23, len(inner), joliet=True),
-    ])
-
-    full = (sector(b"") * 16
-            + vd(1, "CRAWL_MIRROR", 19, S)
-            + vd(2, "CRAWL_MIRROR", 21, S, escape=b"%/E")
-            + vd(255, "", 0, 0)
-            + pvd_root + pvd_data + jol_root
-            + sector(readme) + sector(inner) + jol_data
-            + sector(b""))
-    plain = (sector(b"") * 16
-             + vd(1, "FIRMWARE_V2", 18, S)
-             + vd(255, "", 0, 0)
-             + dirsec([
-                 rec(".", 18, S, True), rec("..", 18, S, True),
-                 rec("BOOT.IMG;1", 19, 512),
-                 rec("VERSION.TXT;1", 19, 12),
-             ])
-             + sector(b"\x90" * 512))
-
-    rows: list[dict] = []
-
-    def add(name, blob):
-        rows.append({
-            "url": f"https://mirror{len(rows)}.example.org/"
-                   f"{name}",
-            "payload": blob})
-
-    add("mirror.iso", full)
-    add("firmware.iso", plain)
-    add("cut.iso", full[:18 * S + 100])
-    add("junk.iso", b"\x00" * (17 * S))
     return rows
 
 
@@ -7675,102 +5770,6 @@ def cfb_file_rows(seed: int = 42) -> list[dict]:
     return rows
 
 
-def msgpack_blob_rows(seed: int = 42) -> list[dict]:
-    """Deterministic msgpack blobs (url, payload) — the ENCODE half
-    of extractor/msgpackx.py. Shapes: API-response map (nested maps/
-    arrays, mixed ints, float64, bin, bool/nil), all three
-    timestamp-extension widths, a custom ext type, 16+-entry map
-    (map16 head), long str (str8), deep-nesting reject, 0xc1
-    reject, trailing-bytes reject, junk. Golden:
-    fixtures/golden_msgpack_seed42_n10.parquet."""
-    from .extractor.msgpackx import encode_msgpack as enc
-
-    rows: list[dict] = []
-
-    def add(name, blob):
-        rows.append({
-            "url": f"https://api{len(rows)}.example.org/{name}",
-            "payload": blob})
-
-    add("fetch.msgpack", enc({
-        "url": "https://example.org/page",
-        "status": 200,
-        "elapsed_ms": 12.75,
-        "ok": True,
-        "retries": None,
-        "headers": {"content-type": "text/html",
-                    "content length": 48213},
-        "tags": ["crawl", "html", -3],
-        "digest": bytes(range(8)),
-    }))
-    add("ts32.msgpack", enc({"fetched": ("__ts__", 1700000000, 0)}))
-    add("ts64.msgpack", enc(
-        {"fetched": ("__ts__", 1700000000, 500_000_000)}))
-    add("ts96.msgpack", enc(
-        {"fetched": ("__ts__", -86400, 123_456_789)}))
-    add("ext.msgpack", enc({"blob": None})[:1]
-        + enc("blob") + b"\xd5\x2a\x01\x02")     # fixext2 type 42
-    add("wide.msgpack", enc(
-        {f"k{i:02d}": i for i in range(20)}))    # map16
-    add("longstr.msgpack", enc("x" * 64))        # str8
-    deep = [1]
-    for _ in range(30):
-        deep = [deep]
-    add("deep.msgpack", enc(deep))               # depth reject
-    add("never.msgpack", b"\xc1")                # 0xc1 reject
-    add("trail.msgpack", enc(1) + b"\x00")       # trailing reject
-    return rows
-
-
-def bplist_blob_rows(seed: int = 42) -> list[dict]:
-    """Deterministic Apple binary plists (url, payload) — encoded
-    with stdlib plistlib (FMT_BINARY), which doubles as the parity
-    oracle for extractor/bplistx.py (the tomlx-vs-tomllib
-    discipline). Shapes: app Info.plist-ish dict, fractional +
-    integral CFDates, 8-byte signed ints, UID, empty containers,
-    >14-element array (count-escape int object), long unicode
-    string, truncated, junk. Golden:
-    fixtures/golden_bplist_seed42_n8.parquet."""
-    import datetime as _dt
-    import plistlib as _pl
-
-    rows: list[dict] = []
-
-    def add(name, blob):
-        rows.append({
-            "url": f"https://bundle{len(rows)}.example.org/{name}",
-            "payload": blob})
-
-    def enc(v):
-        return _pl.dumps(v, fmt=_pl.FMT_BINARY, sort_keys=True)
-
-    add("Info.plist", enc({
-        "CFBundleName": "CrawlViewer",
-        "CFBundleVersion": "2.1",
-        "count": 48213,
-        "big": -(1 << 40),
-        "ratio": 0.25,
-        "hidden": False,
-        "created": _dt.datetime(2015, 6, 1, 12, 30, 5),
-        "payload": bytes(range(6)),
-        "items": ["a", "long key with spaces", -7, 3.5],
-        "nested": {"x": {"y": [1, 2]}},
-    }))
-    add("dates.plist", enc({
-        "midnight": _dt.datetime(2001, 1, 1, 0, 0, 0),
-        "frac": _dt.datetime(2020, 2, 29, 6, 0, 0, 250000),
-    }))
-    add("uid.plist", enc({"ref": _pl.UID(7)}))
-    add("empty.plist", enc({"arr": [], "dct": {}, "s": ""}))
-    add("wide.plist", enc({"xs": list(range(20)),
-                           "u": "café — ünïcode"}))
-    good = enc({"k": [1, 2, 3]})
-    add("cut.plist", good[:len(good) - 9])
-    add("junk.plist", b"bplist99 not really")
-    add("noise.bin", b"\x00" * 48)
-    return rows
-
-
 def kml_file_rows(seed: int = 42) -> list[dict]:
     """Deterministic KML files (url, payload) — the ENCODE half of
     extractor/kmlx.py. Shapes: nested folders with point/line/
@@ -7826,168 +5825,6 @@ def kml_file_rows(seed: int = 42) -> list[dict]:
     add("edge.kml", bad)
     add("feed.xml", b"<?xml version='1.0'?><rss><channel/></rss>")
     add("junk.kml", b"not xml at all <<<")
-    return rows
-
-
-def java_class_rows(seed: int = 42) -> list[dict]:
-    """Deterministic JVM class files (url, payload) — the ENCODE
-    half of extractor/javaclassx.py. Shapes: service class with
-    interfaces/fields/methods + SourceFile + a two-slot
-    CONSTANT_Long, a Java-6-era interface, a module-info-ish class,
-    truncated, junk. Golden:
-    fixtures/golden_javaclass_seed42_n5.parquet."""
-    from .extractor.javaclassx import build_class
-
-    rows: list[dict] = []
-
-    def add(name, blob):
-        rows.append({
-            "url": f"https://jars{len(rows)}.example.org/{name}",
-            "payload": blob})
-
-    full = build_class(
-        "com/example/crawl/Fetcher",
-        interfaces=["java/lang/Runnable", "java/io/Closeable"],
-        fields=[("timeout", "I", 0x0002),
-                ("UA", "Ljava/lang/String;", 0x0019)],
-        methods=[("<init>", "()V", 0x0001),
-                 ("run", "()V", 0x0001),
-                 ("fetch", "(Ljava/lang/String;)[B", 0x000A)],
-        source_file="Fetcher.java", long_const=True)
-    add("Fetcher.class", full)
-    add("Iface.class", build_class(
-        "org/example/Sink", major=50, access=0x0601,
-        methods=[("accept", "(Ljava/lang/Object;)V", 0x0401)]))
-    add("Old.class", build_class(
-        "Old", major=46, access=0x0020,
-        fields=[("x", "D", 0x0000)]))
-    add("cut.class", full[:40])
-    add("junk.bin", b"\x00\x01\x02 not a class")
-    return rows
-
-
-def rpm_file_rows(seed: int = 42) -> list[dict]:
-    """Deterministic RPM packages (url, payload) — the ENCODE half
-    of extractor/rpmx.py. Shapes: dependency-rich tool package,
-    library package with versioned provides, noarch doc package
-    with no requires, truncated, junk. Golden:
-    fixtures/golden_rpm_seed42_n5.parquet."""
-    from .extractor.rpmx import build_rpm
-
-    rows: list[dict] = []
-
-    def add(name, blob):
-        rows.append({
-            "url": f"https://mirror{len(rows)}.example.org/"
-                   f"rpms/{name}",
-            "payload": blob})
-
-    full = build_rpm(
-        "crawl-tools", "2.4.1", "3.el9", "x86_64",
-        requires=[("libc.so.6", None), ("python3", "3.9"),
-                  ("libcrawl", "2.0")],
-        provides=[("crawl-tools", "2.4.1"),
-                  ("crawl-cli", None)],
-        license_="Apache-2.0",
-        summary="Crawl pipeline command-line tools")
-    add("crawl-tools-2.4.1-3.el9.x86_64.rpm", full)
-    add("libcrawl-2.0.7-1.el9.x86_64.rpm", build_rpm(
-        "libcrawl", "2.0.7", "1.el9", "x86_64",
-        requires=[("libc.so.6", None)],
-        provides=[("libcrawl", "2.0.7"),
-                  ("libcrawl.so.2", None)],
-        license_="MIT", summary="Crawl parsing library"))
-    add("crawl-docs-2.4.1-3.el9.noarch.rpm", build_rpm(
-        "crawl-docs", "2.4.1", "3.el9", "noarch",
-        license_="CC-BY-4.0", summary="Documentation"))
-    add("cut.rpm", full[:120])
-    add("junk.rpm", b"not an rpm at all, sorry")
-    return rows
-
-
-def jar_file_rows(seed: int = 42) -> list[dict]:
-    """Deterministic .jar archives (url, payload): the java_class
-    fixture classes zipped with FIXED ZipInfo dates (deterministic
-    bytes — office builders stamp wall-clock times, jars must not).
-    Shapes: app jar with manifest + nested packages, classless
-    resource jar, junk. Golden rides through jar_class_census's
-    pure-fed twin."""
-    import io
-    import zipfile
-
-    classes = {r["url"].rsplit("/", 1)[1]: r["payload"]
-               for r in java_class_rows(seed)}
-
-    def make_jar(members: list[tuple[str, bytes]]) -> bytes:
-        buf = io.BytesIO()
-        with zipfile.ZipFile(buf, "w", zipfile.ZIP_DEFLATED) as z:
-            for name, data in members:
-                zi = zipfile.ZipInfo(name,
-                                     date_time=(2020, 1, 1,
-                                                0, 0, 0))
-                z.writestr(zi, data)
-        return buf.getvalue()
-
-    rows: list[dict] = []
-
-    def add(name, blob):
-        rows.append({
-            "url": f"https://jars{len(rows)}.example.org/{name}",
-            "payload": blob})
-
-    add("crawl-tools.jar", make_jar([
-        ("META-INF/MANIFEST.MF",
-         b"Manifest-Version: 1.0\r\n"
-         b"Main-Class: com.example.crawl.Fetcher\r\n\r\n"),
-        ("com/example/crawl/Fetcher.class",
-         classes["Fetcher.class"]),
-        ("org/example/Sink.class", classes["Iface.class"]),
-        ("Old.class", classes["Old.class"]),
-        ("assets/banner.txt", b"hello"),
-        ("broken/Bad.class", b"\xca\xfe\xba\xbe truncated"),
-    ]))
-    add("resources.jar", make_jar([
-        ("data/terms.txt", b"a\nb\nc\n"),
-    ]))
-    add("junk.jar", b"PK\x03\x04 not a real zip")
-    return rows
-
-
-def swf_file_rows(seed: int = 42) -> list[dict]:
-    """Deterministic SWF files (url, payload) — the ENCODE half of
-    extractor/swfx.py. Shapes: uncompressed banner with a long tag
-    (0x3F length escape), zlib movie, LZMA header-only, truncated,
-    junk. Golden: fixtures/golden_swf_seed42_n5.parquet."""
-    import struct as _s
-
-    from .extractor.swfx import build_swf
-
-    rows: list[dict] = []
-
-    def add(name, blob):
-        rows.append({
-            "url": f"https://flash{len(rows)}.example.org/{name}",
-            "payload": blob})
-
-    banner = build_swf(468, 60, 18, [
-        (69, b"\x08\x00\x00\x00"),
-        (77, b"<rdf/>"),
-        (9, b"\xee\xee\xee"),
-        (2, b"s" * 80),                 # long escape (>= 0x3F)
-        (1, b""),
-        (12, b"\x00" * 10),
-        (1, b""),
-    ])
-    add("banner.swf", banner)
-    add("movie.swf", build_swf(550, 400, 24, [
-        (9, b"\x00\x00\x00"),
-        (39, b"\x01\x00" + b"\x00" * 20),
-        (1, b""), (1, b""), (1, b""),
-    ], version=11, compress=True))
-    add("modern.swf", b"ZWS\x0d"
-        + _s.pack("<I", 4096) + b"\x5d\x00\x00 body")
-    add("cut.swf", banner[:10])
-    add("junk.swf", b"GIF89a not a swf")
     return rows
 
 
@@ -8067,81 +5904,6 @@ def desktop_file_rows(seed: int = 42) -> list[dict]:
     add("dup.desktop", dup)
     add("pre.desktop", b"Type=Application\n[Desktop Entry]\nName=X\n")
     add("junk.desktop", b"\x00\x01 not ini at all")
-    return rows
-
-
-def midi_file_rows(seed: int = 42) -> list[dict]:
-    """Deterministic SMF files (url, payload) — the ENCODE half of
-    extractor/midix.py. Shapes: format-1 song (tempo map + two
-    instrument tracks, running status, program changes), format-0
-    single track, SMPTE division, truncated, junk. Golden:
-    fixtures/golden_midi_seed42_n5.parquet."""
-    from .extractor.midix import build_midi
-
-    rows: list[dict] = []
-
-    def add(name, blob):
-        rows.append({
-            "url": f"https://music{len(rows)}.example.org/{name}",
-            "payload": blob})
-
-    song = build_midi([
-        [(0, ("meta", 0x03, b"Tempo Map")),
-         (0, ("meta", 0x51, (500000).to_bytes(3, "big"))),
-         (0, ("meta", 0x58, bytes([4, 2, 24, 8])))],
-        [(0, ("meta", 0x03, b"Lead")),
-         (0, b"\x90\x3c\x64"), (240, b"\x3c\x00"),
-         (0, b"\x3e\x64"), (240, b"\x3e\x00"),
-         (0, b"\x40\x64"), (480, b"\x40\x00"),
-         (0, b"\xc0\x05")],
-        [(0, ("meta", 0x03, b"Bass")),
-         (0, b"\x91\x24\x50"), (960, b"\x81\x24\x00"),
-         (0, b"\xf0\x03\x01\x02\x03")],
-    ])
-    add("song.mid", song)
-    add("loop.mid", build_midi([
-        [(0, ("meta", 0x51, (400000).to_bytes(3, "big"))),
-         (0, b"\x99\x23\x7f"), (120, b"\x23\x00"),
-         (0, b"\x26\x7f"), (120, b"\x26\x00")],
-    ], fmt=0))
-    add("smpte.mid", build_midi([
-        [(0, b"\x90\x30\x40"), (50, b"\x30\x00")],
-    ], division=0xE728))      # -25 fps, 40 ticks/frame
-    add("cut.mid", song[:20])
-    add("junk.mid", b"RIFF not midi")
-    return rows
-
-
-def lnk_file_rows(seed: int = 42) -> list[dict]:
-    """Deterministic Windows shortcuts (url, payload) — the ENCODE
-    half of extractor/lnkx.py. Shapes: full unicode shortcut with
-    LinkInfo + idlist, codepage (non-unicode) strings, bare
-    minimal, truncated, junk."""
-    from .extractor.lnkx import build_lnk
-
-    rows: list[dict] = []
-
-    def add(name, blob):
-        rows.append({
-            "url": f"https://disk{len(rows)}.example.org/{name}",
-            "payload": blob})
-
-    full = build_lnk(
-        target_size=48213, created="2012-03-04T10:20:30Z",
-        modified="2015-07-08T01:02:03Z",
-        base_path="C:\\Tools\\crawl.exe", volume_label="SYSTEM",
-        name="Crawl Tool", rel_path="..\\crawl.exe",
-        workdir="C:\\Tools", arguments="--fast --depth 3",
-        with_idlist=True)
-    add("crawl.lnk", full)
-    add("legacy.lnk", build_lnk(
-        target_size=1024, modified="2001-09-09T01:46:40Z",
-        attributes=0x01 | 0x20, show=3,
-        name="Ancien raccourci é",
-        rel_path="..\\vieux.exe", unicode_strings=False))
-    add("bare.lnk", build_lnk())
-    add("cut.lnk", full[:60])
-    add("junk.lnk", b"L\x00\x00\x00 but wrong clsid here....")
     return rows
 
 

@@ -204,17 +204,12 @@ def run_extraction(spark: SparkSession, docs: DataFrame, out_dir: str,
     todo_parts = sorted(set(range(num_buckets)) - done)
     t0 = time.monotonic()
     if todo_parts:
-        docs_b = with_part_id(
-            docs.select("url", "warc_ts", "lang", "html", "text"),
-            num_buckets)
-        todo = docs_b
         if done:
-            # IN over a small set: stays a pushable scan predicate
-            todo = docs_b.where(F.col("part_id").isin(todo_parts))
-        extracted = (todo
-                     .repartition(num_buckets, F.xxhash64(F.col("url")))
-                     .select(*_IN_COLS)
-                     .mapInPandas(extract_batch, EXTRACTED_SCHEMA)
+            # IN over a small set: stays a pushable scan predicate, so
+            # it lands below extract_df's exchange
+            docs = (with_part_id(docs, num_buckets)
+                    .where(F.col("part_id").isin(todo_parts)))
+        extracted = (extract_df(docs, num_buckets)
                      .withColumn("run_id", F.lit(run_id)))
         cat.write_extracted(extracted)
         wall_ms = int((time.monotonic() - t0) * 1000)

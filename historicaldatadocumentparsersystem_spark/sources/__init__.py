@@ -2085,62 +2085,6 @@ def media_fetch_frontier(parts: list[tuple[str, DataFrame]]
                     "n_refs"))
 
 
-CERT_ROWS_DDL = (
-    "url string, chain_pos int, version int, serial string, "
-    "sig_alg string, issuer_cn string, issuer_dn string, "
-    "subject_cn string, subject_dn string, not_before string, "
-    "not_after string, pubkey_alg string, pubkey_bits int, "
-    "curve string, san_dns array<string>, san_ip array<string>, "
-    "is_ca boolean, self_signed boolean, key_usage array<string>, "
-    "ext_key_usage array<string>, fingerprint_sha256 string")
-
-
-def read_certificates(df: DataFrame, url_col: str = "url",
-                      payload_col: str = "payload") -> DataFrame:
-    """(url, PEM-or-DER payload) rows -> one row per certificate in
-    armor order (chain_pos 0 = leaf). Pure parse:
-    ``extractor.certx.extract_chain`` (golden-pinned); malformed
-    certs/payloads degrade to zero rows, never raise. Map-only —
-    no shuffle; downstream hygiene ops group by url themselves."""
-    import pandas as pd
-
-    from ..extractor.certx import extract_chain
-
-    def parse(batches):
-        for b in batches:
-            rows = []
-            for url, payload in zip(b[url_col], b[payload_col]):
-                certs = extract_chain(
-                    bytes(payload) if payload is not None else None)
-                for pos, c in enumerate(certs):
-                    bits = c["pubkey_bits"]
-                    if bits is not None and bits > 2**31 - 1:
-                        bits = None  # Int32 clamp (header-fed int)
-                    rows.append((
-                        url, pos, c["version"], c["serial"],
-                        c["sig_alg"], c["issuer_cn"], c["issuer_dn"],
-                        c["subject_cn"], c["subject_dn"],
-                        c["not_before"], c["not_after"],
-                        c["pubkey_alg"], bits, c["curve"],
-                        c["san_dns"], c["san_ip"], c["is_ca"],
-                        c["self_signed"], c["key_usage"],
-                        c["ext_key_usage"], c["fingerprint_sha256"]))
-            out = pd.DataFrame(rows, columns=[
-                "url", "chain_pos", "version", "serial", "sig_alg",
-                "issuer_cn", "issuer_dn", "subject_cn", "subject_dn",
-                "not_before", "not_after", "pubkey_alg",
-                "pubkey_bits", "curve", "san_dns", "san_ip",
-                "is_ca", "self_signed", "key_usage",
-                "ext_key_usage", "fingerprint_sha256"])
-            for c in ("chain_pos", "version", "pubkey_bits"):
-                out[c] = pd.array(out[c], dtype="Int32")
-            yield out
-
-    return (df.select(F.col(url_col).alias(url_col),
-                      F.col(payload_col).alias(payload_col))
-            .mapInPandas(parse, CERT_ROWS_DDL))
-
-
 MHTML_RES_DDL = (
     "url string, snapshot_url string, pos int, content_type string, "
     "content_location string, content_id string, is_root boolean, "
@@ -2330,56 +2274,6 @@ def read_vcard_props(df: DataFrame, url_col: str = "url",
     return (df.select(F.col(url_col).alias(url_col),
                       F.col(payload_col).alias(payload_col))
             .mapInPandas(parse, VCARD_PROPS_DDL))
-
-
-TORRENT_FILES_DDL = (
-    "url string, file_idx int, path string, length bigint, "
-    "name string, infohash string, piece_length bigint, "
-    "n_pieces int, private boolean, announce string, "
-    "n_trackers int, creation_date bigint, created_by string")
-
-
-def read_torrent_files(df: DataFrame, url_col: str = "url",
-                       payload_col: str = "payload") -> DataFrame:
-    """(url, .torrent payload) -> one row per file in metainfo
-    order, torrent-level fields denormalized onto every row (the
-    tmx srclang convention — downstream rollups never re-join the
-    payload). Pure parse: ``extractor.torrentx.parse_torrent``
-    (golden-pinned; infohash = sha1 over the RAW info span, so
-    non-canonical encoders keep their identity). Map-only."""
-    import pandas as pd
-
-    from ..extractor.torrentx import parse_torrent
-
-    def parse(batches):
-        for b in batches:
-            rows = []
-            for url, payload in zip(b[url_col], b[payload_col]):
-                d = parse_torrent(
-                    bytes(payload) if payload is not None else None)
-                if d is None:
-                    continue
-                for idx, (path, length) in enumerate(d["files"]):
-                    rows.append((
-                        url, idx, path, length, d["name"],
-                        d["infohash"], d["piece_length"],
-                        d["n_pieces"], d["private"], d["announce"],
-                        len(d["trackers"]), d["creation_date"],
-                        d["created_by"]))
-            out = pd.DataFrame(rows, columns=[
-                "url", "file_idx", "path", "length", "name",
-                "infohash", "piece_length", "n_pieces", "private",
-                "announce", "n_trackers", "creation_date",
-                "created_by"])
-            for c in ("file_idx", "n_pieces", "n_trackers"):
-                out[c] = pd.array(out[c], dtype="Int32")
-            for c in ("length", "piece_length", "creation_date"):
-                out[c] = pd.array(out[c], dtype="Int64")
-            yield out
-
-    return (df.select(F.col(url_col).alias(url_col),
-                      F.col(payload_col).alias(payload_col))
-            .mapInPandas(parse, TORRENT_FILES_DDL))
 
 
 GPX_POINTS_DDL = (
@@ -2749,47 +2643,6 @@ def read_ntriples(df: DataFrame, url_col: str = "url",
             .mapInPandas(parse, NTRIPLES_DDL))
 
 
-ACCESS_LOG_DDL = (
-    "url string, pos int, remote string, ident string, "
-    "auth_user string, epoch bigint, method string, path string, "
-    "protocol string, request string, status int, "
-    "bytes_sent bigint, referer string, user_agent string")
-
-
-def read_access_log(df: DataFrame, url_col: str = "url",
-                    payload_col: str = "payload") -> DataFrame:
-    """(url, access-log payload) -> one row per parseable CLF/
-    combined line (epochs UTC via the shared integer date math).
-    Pure parse: ``extractor.accesslogx.parse_access_log``
-    (golden-pinned). Map-only."""
-    import pandas as pd
-
-    from ..extractor.accesslogx import parse_access_log
-
-    def parse(batches):
-        for b in batches:
-            rows = []
-            for url, payload in zip(b[url_col], b[payload_col]):
-                d = parse_access_log(
-                    bytes(payload) if payload is not None else None)
-                for t in d["rows"]:
-                    rows.append((url,) + t)
-            out = pd.DataFrame(rows, columns=[
-                "url", "pos", "remote", "ident", "auth_user",
-                "epoch",
-                "method", "path", "protocol", "request", "status",
-                "bytes_sent", "referer", "user_agent"])
-            out["pos"] = pd.array(out["pos"], dtype="Int32")
-            out["status"] = pd.array(out["status"], dtype="Int32")
-            for c in ("epoch", "bytes_sent"):
-                out[c] = pd.array(out[c], dtype="Int64")
-            yield out
-
-    return (df.select(F.col(url_col).alias(url_col),
-                      F.col(payload_col).alias(payload_col))
-            .mapInPandas(parse, ACCESS_LOG_DDL))
-
-
 GEOJSON_DDL = (
     "url string, pos int, gtype string, n_geoms int, n_points int, "
     "minx double, miny double, maxx double, maxy double, "
@@ -2826,393 +2679,6 @@ def read_geojson_features(df: DataFrame, url_col: str = "url",
     return (df.select(F.col(url_col).alias(url_col),
                       F.col(payload_col).alias(payload_col))
             .mapInPandas(parse, GEOJSON_DDL))
-
-
-SQLITE_DDL = (
-    "url string, pos int, otype string, name string, "
-    "tbl_name string, rootpage int, n_rows long, sql_chars int, "
-    "page_size int, encoding string, n_pages int, "
-    "freelist_pages int")
-
-
-def read_sqlite_objects(df: DataFrame, url_col: str = "url",
-                        payload_col: str = "payload") -> DataFrame:
-    """(url, SQLite database bytes) -> one row per sqlite_master
-    object (type/name/tbl_name/rootpage + exact b-tree row counts
-    for tables), header fields denormalized per row. Pure parse:
-    ``extractor.sqlitex.parse_sqlite`` (golden-pinned; stdlib
-    sqlite3 is the independent pytest oracle). Map-only; n_rows
-    NULL for rootpage-0 objects and indexes. Non-database payloads
-    yield no rows."""
-    import pandas as pd
-
-    from ..extractor.sqlitex import parse_sqlite
-
-    def parse(batches):
-        for b in batches:
-            rows = []
-            for url, payload in zip(b[url_col], b[payload_col]):
-                d = parse_sqlite(
-                    bytes(payload) if payload is not None else None)
-                h = d["header"]
-                if h is None:
-                    continue
-                for (pos, otype, name, tbl, root, sql,
-                     n_rows) in d["objects"]:
-                    rows.append((
-                        url, pos, otype, name, tbl, root, n_rows,
-                        len(sql) if sql is not None else None,
-                        h["page_size"], h["encoding"],
-                        h["n_pages"], h["freelist_pages"]))
-            out = pd.DataFrame(rows, columns=[
-                "url", "pos", "otype", "name", "tbl_name",
-                "rootpage", "n_rows", "sql_chars", "page_size",
-                "encoding", "n_pages", "freelist_pages"])
-            for c in ("pos", "rootpage", "sql_chars", "page_size",
-                      "n_pages", "freelist_pages"):
-                out[c] = pd.array(out[c], dtype="Int32")
-            out["n_rows"] = pd.array(out["n_rows"], dtype="Int64")
-            yield out
-
-    return (df.select(F.col(url_col).alias(url_col),
-                      F.col(payload_col).alias(payload_col))
-            .mapInPandas(parse, SQLITE_DDL))
-
-
-WASM_DDL = (
-    "url string, pos int, row_kind string, sec_id int, "
-    "name string, module string, sym_kind string, sym_index long, "
-    "size int, n_items int")
-
-
-def read_wasm_modules(df: DataFrame, url_col: str = "url",
-                      payload_col: str = "payload") -> DataFrame:
-    """(url, wasm bytes) -> one row per section ('section': id,
-    name — custom sections as 'custom:<name>' — declared size,
-    leading vector count) plus one per import/export table entry
-    ('import': module+field+kind; 'export': name+kind+index). Pure
-    parse: ``extractor.wasmx.parse_wasm`` (golden-pinned).
-    Map-only; junk payloads yield no rows."""
-    import pandas as pd
-
-    from ..extractor.wasmx import parse_wasm
-
-    def parse(batches):
-        for b in batches:
-            rows = []
-            for url, payload in zip(b[url_col], b[payload_col]):
-                d = parse_wasm(
-                    bytes(payload) if payload is not None else None)
-                for (pos, sid, sname, size, n_items) in \
-                        d["sections"]:
-                    rows.append((url, pos, "section", sid, sname,
-                                 None, None, None, size, n_items))
-                for (pos, mod, fld, kind) in d["imports"]:
-                    rows.append((url, pos, "import", None, fld,
-                                 mod, kind, None, None, None))
-                for (pos, nm_, kind, idx) in d["exports"]:
-                    rows.append((url, pos, "export", None, nm_,
-                                 None, kind, idx, None, None))
-            out = pd.DataFrame(rows, columns=[
-                "url", "pos", "row_kind", "sec_id", "name",
-                "module", "sym_kind", "sym_index", "size",
-                "n_items"])
-            for c in ("pos", "sec_id", "size", "n_items"):
-                out[c] = pd.array(out[c], dtype="Int32")
-            out["sym_index"] = pd.array(out["sym_index"],
-                                        dtype="Int64")
-            yield out
-
-    return (df.select(F.col(url_col).alias(url_col),
-                      F.col(payload_col).alias(payload_col))
-            .mapInPandas(parse, WASM_DDL))
-
-
-PCAP_DDL = (
-    "url string, pos int, ts_ms long, orig_len int, incl_len int, "
-    "src_mac string, dst_mac string, ethertype int, "
-    "src_ip string, dst_ip string, proto string, src_port int, "
-    "dst_port int, tcp_flags string")
-
-_PCAP_COLS = ["pos", "ts_ms", "orig_len", "incl_len", "src_mac",
-              "dst_mac", "ethertype", "src_ip", "dst_ip", "proto",
-              "src_port", "dst_port", "tcp_flags"]
-
-
-def read_pcap_packets(df: DataFrame, url_col: str = "url",
-                      payload_col: str = "payload") -> DataFrame:
-    """(url, libpcap capture bytes) -> one row per packet: exact
-    integer epoch-ms timestamps, Ethernet/IP/transport header
-    fields, NULL from the first undecodable layer down. Pure
-    parse: ``extractor.pcapx.parse_pcap`` (golden-pinned).
-    Map-only; junk payloads yield no rows."""
-    import pandas as pd
-
-    from ..extractor.pcapx import parse_pcap
-
-    def parse(batches):
-        for b in batches:
-            rows = []
-            for url, payload in zip(b[url_col], b[payload_col]):
-                d = parse_pcap(
-                    bytes(payload) if payload is not None else None)
-                for p in d["packets"]:
-                    rows.append((url,) + tuple(
-                        p[c] for c in _PCAP_COLS))
-            out = pd.DataFrame(rows, columns=["url"] + _PCAP_COLS)
-            for c in ("pos", "orig_len", "incl_len", "ethertype",
-                      "src_port", "dst_port"):
-                out[c] = pd.array(out[c], dtype="Int32")
-            out["ts_ms"] = pd.array(out["ts_ms"], dtype="Int64")
-            yield out
-
-    return (df.select(F.col(url_col).alias(url_col),
-                      F.col(payload_col).alias(payload_col))
-            .mapInPandas(parse, PCAP_DDL))
-
-
-DNS_DDL = (
-    "url string, pos int, section string, name string, "
-    "rtype string, ttl long, rdata string, msg_id int, "
-    "is_response boolean, opcode string, rcode string, "
-    "truncated boolean")
-
-
-def read_dns_records(df: DataFrame, url_col: str = "url",
-                     payload_col: str = "payload") -> DataFrame:
-    """(url, DNS wire message) -> one row per question/resource
-    record with rdata rendered to text (A/AAAA/CNAME/NS/PTR/MX/TXT/
-    SOA; everything else ``bytes:N``), header fields denormalized
-    per row. Pure parse: ``extractor.dnsx.parse_dns``
-    (golden-pinned). Map-only; sub-header payloads yield no rows."""
-    import pandas as pd
-
-    from ..extractor.dnsx import parse_dns
-
-    def parse(batches):
-        for b in batches:
-            rows = []
-            for url, payload in zip(b[url_col], b[payload_col]):
-                d = parse_dns(
-                    bytes(payload) if payload is not None else None)
-                m = d["msg"]
-                if m is None:
-                    continue
-                for (pos, section, name, rtype, ttl, rdata) in \
-                        d["records"]:
-                    rows.append((url, pos, section, name, rtype,
-                                 ttl, rdata, m["msg_id"],
-                                 m["is_response"], m["opcode"],
-                                 m["rcode"], m["truncated"]))
-            out = pd.DataFrame(rows, columns=[
-                "url", "pos", "section", "name", "rtype", "ttl",
-                "rdata", "msg_id", "is_response", "opcode",
-                "rcode", "truncated"])
-            for c in ("pos", "msg_id"):
-                out[c] = pd.array(out[c], dtype="Int32")
-            out["ttl"] = pd.array(out["ttl"], dtype="Int64")
-            yield out
-
-    return (df.select(F.col(url_col).alias(url_col),
-                      F.col(payload_col).alias(payload_col))
-            .mapInPandas(parse, DNS_DDL))
-
-
-FONT_DDL = (
-    "url string, pos int, row_kind string, kind string, "
-    "flavor string, n_tables int, tag string, offset long, "
-    "length long, comp_length long, name_id int, name_kind string, "
-    "platform int, value string")
-
-
-def read_font_metadata(df: DataFrame, url_col: str = "url",
-                       payload_col: str = "payload") -> DataFrame:
-    """(url, font bytes) -> one 'font' row per parsed font (kind/
-    flavor/table count) plus one 'table' row per directory entry
-    and one 'name' row per decoded name-table string. Pure parse:
-    ``extractor.fontx.parse_font`` (golden-pinned). Map-only; junk
-    yields no rows."""
-    import pandas as pd
-
-    from ..extractor.fontx import parse_font
-
-    def parse(batches):
-        for b in batches:
-            rows = []
-            for url, payload in zip(b[url_col], b[payload_col]):
-                d = parse_font(
-                    bytes(payload) if payload is not None else None)
-                if d["kind"] is None:
-                    continue
-                base = (d["kind"], d["flavor"], d["n_tables"])
-                rows.append((url, 0, "font") + base
-                            + (None,) * 8)
-                for (pos, tag, off, ln, comp) in d["tables"]:
-                    rows.append((url, pos, "table") + base
-                                + (tag, off, ln, comp,
-                                   None, None, None, None))
-                for (pos, nid, nkind, plat, value) in d["names"]:
-                    rows.append((url, pos, "name") + base
-                                + (None, None, None, None,
-                                   nid, nkind, plat, value))
-            out = pd.DataFrame(rows, columns=[
-                "url", "pos", "row_kind", "kind", "flavor",
-                "n_tables", "tag", "offset", "length",
-                "comp_length", "name_id", "name_kind", "platform",
-                "value"])
-            for c in ("pos", "n_tables", "name_id", "platform"):
-                out[c] = pd.array(out[c], dtype="Int32")
-            for c in ("offset", "length", "comp_length"):
-                out[c] = pd.array(out[c], dtype="Int64")
-            yield out
-
-    return (df.select(F.col(url_col).alias(url_col),
-                      F.col(payload_col).alias(payload_col))
-            .mapInPandas(parse, FONT_DDL))
-
-
-AVRO_DDL = (
-    "url string, pos int, row_kind string, codec string, "
-    "schema_type string, schema_name string, sync_ok boolean, "
-    "field_name string, field_type string, n_records long, "
-    "size long, raw_size long")
-
-
-def read_avro_containers(df: DataFrame, url_col: str = "url",
-                         payload_col: str = "payload") -> DataFrame:
-    """(url, Avro object-container bytes) -> one 'file' row
-    (codec/schema shape/sync verdict) plus one 'field' row per
-    top-level record field and one 'block' row per data block
-    (record count, on-disk size, inflated size for deflate). Pure
-    parse: ``extractor.avrox.parse_avro`` (golden-pinned).
-    Map-only; junk yields no rows."""
-    import pandas as pd
-
-    from ..extractor.avrox import parse_avro
-
-    def parse(batches):
-        for b in batches:
-            rows = []
-            for url, payload in zip(b[url_col], b[payload_col]):
-                d = parse_avro(
-                    bytes(payload) if payload is not None else None)
-                if d["codec"] is None:
-                    continue
-                base = (d["codec"], d["schema_type"],
-                        d["schema_name"], d["sync_ok"])
-                rows.append((url, 0, "file") + base
-                            + (None,) * 5)
-                for (pos, fname, ftype) in d["fields"]:
-                    rows.append((url, pos, "field") + base
-                                + (fname, ftype, None, None, None))
-                for (pos, n_rec, size, raw) in d["blocks"]:
-                    rows.append((url, pos, "block") + base
-                                + (None, None, n_rec, size, raw))
-            out = pd.DataFrame(rows, columns=[
-                "url", "pos", "row_kind", "codec", "schema_type",
-                "schema_name", "sync_ok", "field_name",
-                "field_type", "n_records", "size", "raw_size"])
-            out["pos"] = pd.array(out["pos"], dtype="Int32")
-            for c in ("n_records", "size", "raw_size"):
-                out[c] = pd.array(out[c], dtype="Int64")
-            yield out
-
-    return (df.select(F.col(url_col).alias(url_col),
-                      F.col(payload_col).alias(payload_col))
-            .mapInPandas(parse, AVRO_DDL))
-
-
-PROTOBUF_DDL = (
-    "url string, path string, field_no int, wire_type string, "
-    "kind string, n long, bytes_total long")
-
-
-def read_protobuf_census(df: DataFrame, url_col: str = "url",
-                         payload_col: str = "payload") -> DataFrame:
-    """(url, protobuf wire bytes) -> one row per (dotted path,
-    field number, wire type, classified kind) with occurrence and
-    value-byte totals — the schema-free protoscope census. Pure
-    parse: ``extractor.protox.parse_protobuf`` (golden-pinned).
-    Map-only; blobs that fail the whole-buffer parse yield no
-    rows."""
-    import pandas as pd
-
-    from ..extractor.protox import parse_protobuf
-
-    def parse(batches):
-        for b in batches:
-            rows = []
-            for url, payload in zip(b[url_col], b[payload_col]):
-                d = parse_protobuf(
-                    bytes(payload) if payload is not None else None)
-                for t in d["fields"]:
-                    rows.append((url,) + t)
-            out = pd.DataFrame(rows, columns=[
-                "url", "path", "field_no", "wire_type", "kind",
-                "n", "bytes_total"])
-            out["field_no"] = pd.array(out["field_no"],
-                                       dtype="Int32")
-            for c in ("n", "bytes_total"):
-                out[c] = pd.array(out[c], dtype="Int64")
-            yield out
-
-    return (df.select(F.col(url_col).alias(url_col),
-                      F.col(payload_col).alias(payload_col))
-            .mapInPandas(parse, PROTOBUF_DDL))
-
-
-ELF_DDL = (
-    "url string, pos int, row_kind string, cls int, endian string, "
-    "etype string, machine string, entry long, name string, "
-    "stype string, flags string, offset long, size long, "
-    "lib string")
-
-
-def read_elf_objects(df: DataFrame, url_col: str = "url",
-                     payload_col: str = "payload") -> DataFrame:
-    """(url, ELF bytes) -> one 'file' row (class/endian/type/
-    machine/entry) plus one 'section' row per section header
-    (names via .shstrtab) and one 'needed' row per DT_NEEDED
-    dependency. Pure parse: ``extractor.elfx.parse_elf``
-    (golden-pinned). Map-only; junk yields no rows."""
-    import pandas as pd
-
-    from ..extractor.elfx import parse_elf
-
-    def parse(batches):
-        for b in batches:
-            rows = []
-            for url, payload in zip(b[url_col], b[payload_col]):
-                d = parse_elf(
-                    bytes(payload) if payload is not None else None)
-                if d["cls"] is None:
-                    continue
-                base = (d["cls"], d["endian"], d["etype"],
-                        d["machine"], d["entry"])
-                rows.append((url, 0, "file") + base
-                            + (None,) * 6)
-                for (pos, name, stype, flags, off, size) in \
-                        d["sections"]:
-                    rows.append((url, pos, "section") + base
-                                + (name, stype, flags, off, size,
-                                   None))
-                for i, lib in enumerate(d["needed"]):
-                    rows.append((url, i, "needed") + base
-                                + (None, None, None, None, None,
-                                   lib))
-            out = pd.DataFrame(rows, columns=[
-                "url", "pos", "row_kind", "cls", "endian", "etype",
-                "machine", "entry", "name", "stype", "flags",
-                "offset", "size", "lib"])
-            for c in ("pos", "cls"):
-                out[c] = pd.array(out[c], dtype="Int32")
-            for c in ("entry", "offset", "size"):
-                out[c] = pd.array(out[c], dtype="Int64")
-            yield out
-
-    return (df.select(F.col(url_col).alias(url_col),
-                      F.col(payload_col).alias(payload_col))
-            .mapInPandas(parse, ELF_DDL))
 
 
 TOML_DDL = ("url string, pos int, ok boolean, key_path string, "
@@ -3253,44 +2719,6 @@ def read_toml_records(df: DataFrame, url_col: str = "url",
     return (df.select(F.col(url_col).alias(url_col),
                       F.col(payload_col).alias(payload_col))
             .mapInPandas(parse, TOML_DDL))
-
-
-CBOR_DDL = ("url string, pos int, ok boolean, path string, "
-            "vtype string, value_text string")
-
-
-def read_cbor_records(df: DataFrame, url_col: str = "url",
-                      payload_col: str = "payload") -> DataFrame:
-    """(url, CBOR bytes) -> one row per leaf with the dotted/
-    bracketed path, a type label (tags appended: ``int@tag1``),
-    and a canonical text rendering — the tomlx shape for binary
-    configs. A blob that is not exactly one well-formed item
-    yields ONE ok=false row. Pure parse:
-    ``extractor.cborx.parse_cbor`` (golden-pinned). Map-only."""
-    import pandas as pd
-
-    from ..extractor.cborx import parse_cbor
-
-    def parse(batches):
-        for b in batches:
-            rows = []
-            for url, payload in zip(b[url_col], b[payload_col]):
-                d = parse_cbor(
-                    bytes(payload) if payload is not None else None)
-                if not d["ok"]:
-                    rows.append((url, 0, False, None, None, None))
-                    continue
-                for (pos, path, vtype, text) in d["rows"]:
-                    rows.append((url, pos, True, path, vtype,
-                                 text))
-            out = pd.DataFrame(rows, columns=[
-                "url", "pos", "ok", "path", "vtype", "value_text"])
-            out["pos"] = pd.array(out["pos"], dtype="Int32")
-            yield out
-
-    return (df.select(F.col(url_col).alias(url_col),
-                      F.col(payload_col).alias(payload_col))
-            .mapInPandas(parse, CBOR_DDL))
 
 
 COMP_DDL = ("url string, pos int, format string, kind string, "
@@ -3334,357 +2762,6 @@ def read_compressed_frames(df: DataFrame, url_col: str = "url",
     return (df.select(F.col(url_col).alias(url_col),
                       F.col(payload_col).alias(payload_col))
             .mapInPandas(parse, COMP_DDL))
-
-
-PE_DDL = (
-    "url string, pos int, row_kind string, machine string, "
-    "kind string, is_dll boolean, n_sections int, "
-    "pe_timestamp long, name string, vsize long, rva long, "
-    "rawsize long, flags string, import_dll string")
-
-
-def read_pe_objects(df: DataFrame, url_col: str = "url",
-                    payload_col: str = "payload") -> DataFrame:
-    """(url, PE bytes) -> one 'file' row (machine/kind/dll bit/
-    COFF timestamp) plus 'section' rows and one 'import' row per
-    DLL from the RVA-walked import directory. Pure parse:
-    ``extractor.pex.parse_pe`` (golden-pinned). Map-only; non-PE
-    payloads yield no rows."""
-    import pandas as pd
-
-    from ..extractor.pex import parse_pe
-
-    def parse(batches):
-        for b in batches:
-            rows = []
-            for url, payload in zip(b[url_col], b[payload_col]):
-                d = parse_pe(
-                    bytes(payload) if payload is not None else None)
-                if d["kind"] is None:
-                    continue
-                base = (d["machine"], d["kind"], d["is_dll"],
-                        d["n_sections"], d["timestamp"])
-                rows.append((url, 0, "file") + base
-                            + (None,) * 6)
-                for (pos, name, vsize, rva, rawsize, _rawoff,
-                     flags) in d["sections"]:
-                    rows.append((url, pos, "section") + base
-                                + (name, vsize, rva, rawsize,
-                                   flags, None))
-                for i, dll in enumerate(d["imports"]):
-                    rows.append((url, i, "import") + base
-                                + (None, None, None, None, None,
-                                   dll))
-            out = pd.DataFrame(rows, columns=[
-                "url", "pos", "row_kind", "machine", "kind",
-                "is_dll", "n_sections", "pe_timestamp", "name",
-                "vsize", "rva", "rawsize", "flags", "import_dll"])
-            for c in ("pos", "n_sections"):
-                out[c] = pd.array(out[c], dtype="Int32")
-            for c in ("pe_timestamp", "vsize", "rva", "rawsize"):
-                out[c] = pd.array(out[c], dtype="Int64")
-            yield out
-
-    return (df.select(F.col(url_col).alias(url_col),
-                      F.col(payload_col).alias(payload_col))
-            .mapInPandas(parse, PE_DDL))
-
-
-MACHO_DDL = (
-    "url string, pos int, row_kind string, fat boolean, "
-    "slice_no int, arch string, cpu string, bits int, "
-    "endian string, filetype string, name string, nsects int, "
-    "link_kind string")
-
-
-def read_macho_objects(df: DataFrame, url_col: str = "url",
-                       payload_col: str = "payload") -> DataFrame:
-    """(url, Mach-O bytes) -> one 'slice' row per architecture
-    (thin files have one; fat headers enumerate), 'segment' rows
-    with section counts, and 'dylib' rows (the otool -L surface).
-    Pure parse: ``extractor.machox.parse_macho`` (golden-pinned).
-    Map-only; junk (incl. Java class files sharing the fat magic)
-    yields no rows."""
-    import pandas as pd
-
-    from ..extractor.machox import parse_macho
-
-    def parse(batches):
-        for b in batches:
-            rows = []
-            for url, payload in zip(b[url_col], b[payload_col]):
-                d = parse_macho(
-                    bytes(payload) if payload is not None else None)
-                if d["fat"] is None:
-                    continue
-                for (pos, arch, cpu, bits, endian, ft, _nc) in \
-                        d["slices"]:
-                    rows.append((url, pos, "slice", d["fat"], pos,
-                                 arch, cpu, bits, endian, ft,
-                                 None, None, None))
-                for (pos, sl, name, nsects) in d["segments"]:
-                    rows.append((url, pos, "segment", d["fat"],
-                                 sl, None, None, None, None, None,
-                                 name, nsects, None))
-                for (pos, sl, kind, name) in d["dylibs"]:
-                    rows.append((url, pos, "dylib", d["fat"], sl,
-                                 None, None, None, None, None,
-                                 name, None, kind))
-            out = pd.DataFrame(rows, columns=[
-                "url", "pos", "row_kind", "fat", "slice_no",
-                "arch", "cpu", "bits", "endian", "filetype",
-                "name", "nsects", "link_kind"])
-            for c in ("pos", "slice_no", "bits", "nsects"):
-                out[c] = pd.array(out[c], dtype="Int32")
-            yield out
-
-    return (df.select(F.col(url_col).alias(url_col),
-                      F.col(payload_col).alias(payload_col))
-            .mapInPandas(parse, MACHO_DDL))
-
-
-AR_DDL = (
-    "url string, pos int, row_kind string, kind string, "
-    "name string, mtime long, mode string, size long, "
-    "value string, dep_group int, dep_alt int, "
-    "version_req string")
-
-
-def read_ar_archives(df: DataFrame, url_col: str = "url",
-                     payload_col: str = "payload") -> DataFrame:
-    """(url, ar/.deb bytes) -> 'member' rows (GNU long names
-    resolved) plus, for Debian packages, 'field' rows from the
-    inflated control file and 'dep' rows from the split Depends
-    list (comma groups / '|' alternatives / version constraints).
-    Pure parse: ``extractor.arx.parse_ar`` (golden-pinned).
-    Map-only; junk yields no rows."""
-    import pandas as pd
-
-    from ..extractor.arx import parse_ar
-
-    def parse(batches):
-        for b in batches:
-            rows = []
-            for url, payload in zip(b[url_col], b[payload_col]):
-                d = parse_ar(
-                    bytes(payload) if payload is not None else None)
-                if d["kind"] is None:
-                    continue
-                for (pos, name, mtime, mode, size) in \
-                        d["members"]:
-                    rows.append((url, pos, "member", d["kind"],
-                                 name, mtime, mode, size, None,
-                                 None, None, None))
-                if d["control"]:
-                    for i, (k, v) in enumerate(
-                            d["control"].items()):
-                        rows.append((url, i, "field", d["kind"],
-                                     k, None, None, None, v,
-                                     None, None, None))
-                for i, (g, a, nm, constraint) in enumerate(
-                        d["depends"]):
-                    rows.append((url, i, "dep", d["kind"], nm,
-                                 None, None, None, None, g, a,
-                                 constraint))
-            out = pd.DataFrame(rows, columns=[
-                "url", "pos", "row_kind", "kind", "name", "mtime",
-                "mode", "size", "value", "dep_group", "dep_alt",
-                "version_req"])
-            for c in ("pos", "dep_group", "dep_alt"):
-                out[c] = pd.array(out[c], dtype="Int32")
-            for c in ("mtime", "size"):
-                out[c] = pd.array(out[c], dtype="Int64")
-            yield out
-
-    return (df.select(F.col(url_col).alias(url_col),
-                      F.col(payload_col).alias(payload_col))
-            .mapInPandas(parse, AR_DDL))
-
-
-GIT_DDL = (
-    "url string, pos int, row_kind string, container string, "
-    "otype string, size long, packed_size long, oid string, "
-    "delta_of string, tree string, parent string, "
-    "author_email string, author_ts long, title string, "
-    "mode string, name string, entry_sha string")
-
-
-def read_git_objects(df: DataFrame, url_col: str = "url",
-                     payload_col: str = "payload") -> DataFrame:
-    """(url, pack or loose-object bytes) -> 'object' rows (type/
-    size/packed extent/real SHA-1 id, deltas resolved), 'commit'
-    rows (one per parent, NULL parent for roots) and 'tree_entry'
-    rows. Pure parse: ``extractor.gitx`` (golden-pinned;
-    git-binary cross-checked in pytest). Map-only; junk yields no
-    rows."""
-    import pandas as pd
-
-    from ..extractor.gitx import (parse_commit, parse_loose,
-                                  parse_pack, parse_tree)
-
-    def expand(url, container, otype, size, packed, oid_,
-               delta_of, content, rows):
-        rows.append((url, len(rows), "object", container, otype,
-                     size, packed, oid_, delta_of)
-                    + (None,) * 8)
-        if otype == "commit" and content is not None:
-            c = parse_commit(content)
-            for parent in (c["parents"] or [None]):
-                rows.append((url, len(rows), "commit", container,
-                             otype, None, None, oid_, None,
-                             c["tree"], parent,
-                             c["author_email"], c["author_ts"],
-                             c["title"], None, None, None))
-        elif otype == "tree" and content is not None:
-            for (mode, name, sha) in parse_tree(content):
-                rows.append((url, len(rows), "tree_entry",
-                             container, otype, None, None, oid_,
-                             None, None, None, None, None, None,
-                             mode, name, sha))
-
-    def parse(batches):
-        for b in batches:
-            rows = []
-            for url, payload in zip(b[url_col], b[payload_col]):
-                pb = bytes(payload) if payload is not None \
-                    else None
-                if pb is None:
-                    continue
-                # pos is PER-URL (a batch-wide counter would make
-                # row ids partitioning-dependent)
-                mine: list = []
-                if pb[:4] == b"PACK":
-                    d = parse_pack(pb, with_content=True)
-                    for (pos, otype, size, packed, oid_,
-                         delta_of) in d["objects"]:
-                        expand(url, "pack", otype, size, packed,
-                               oid_, delta_of,
-                               d["contents"].get(oid_), mine)
-                else:
-                    lo = parse_loose(pb)
-                    if lo is None:
-                        continue
-                    expand(url, "loose", lo["otype"], lo["size"],
-                           len(pb), lo["oid"], None,
-                           lo["content"], mine)
-                rows.extend(mine)
-            out = pd.DataFrame(rows, columns=[
-                "url", "pos", "row_kind", "container", "otype",
-                "size", "packed_size", "oid", "delta_of", "tree",
-                "parent", "author_email", "author_ts", "title",
-                "mode", "name", "entry_sha"])
-            out["pos"] = pd.array(out["pos"], dtype="Int32")
-            for c in ("size", "packed_size", "author_ts"):
-                out[c] = pd.array(out[c], dtype="Int64")
-            yield out
-
-    return (df.select(F.col(url_col).alias(url_col),
-                      F.col(payload_col).alias(payload_col))
-            .mapInPandas(parse, GIT_DDL))
-
-
-ICC_DDL = (
-    "url string, pos int, row_kind string, profile_class string, "
-    "color_space string, pcs string, version string, "
-    "intent string, created string, n_tags int, sig string, "
-    "tag_offset long, tag_size long, text string")
-
-
-def read_icc_profiles(df: DataFrame, url_col: str = "url",
-                      payload_col: str = "payload") -> DataFrame:
-    """(url, ICC profile bytes) -> one 'profile' row (class/
-    spaces/version/intent/creation stamp) plus one 'tag' row per
-    tag-table entry with description text decoded for desc/mluc/
-    text types. Pure parse: ``extractor.iccx.parse_icc``
-    (golden-pinned). Map-only; junk yields no rows."""
-    import pandas as pd
-
-    from ..extractor.iccx import parse_icc
-
-    def parse(batches):
-        for b in batches:
-            rows = []
-            for url, payload in zip(b[url_col], b[payload_col]):
-                d = parse_icc(
-                    bytes(payload) if payload is not None else None)
-                if not d["ok"]:
-                    continue
-                base = (d["profile_class"], d["color_space"],
-                        d["pcs"], d["version"], d["intent"],
-                        d["created"], d["n_tags"])
-                rows.append((url, 0, "profile") + base
-                            + (None,) * 4)
-                for (pos, sig, off, sz, text) in d["tags"]:
-                    rows.append((url, pos, "tag") + base
-                                + (sig, off, sz, text))
-            out = pd.DataFrame(rows, columns=[
-                "url", "pos", "row_kind", "profile_class",
-                "color_space", "pcs", "version", "intent",
-                "created", "n_tags", "sig", "tag_offset",
-                "tag_size", "text"])
-            for c in ("pos", "n_tags"):
-                out[c] = pd.array(out[c], dtype="Int32")
-            for c in ("tag_offset", "tag_size"):
-                out[c] = pd.array(out[c], dtype="Int64")
-            yield out
-
-    return (df.select(F.col(url_col).alias(url_col),
-                      F.col(payload_col).alias(payload_col))
-            .mapInPandas(parse, ICC_DDL))
-
-
-ISO_DDL = (
-    "url string, pos int, row_kind string, volume_id string, "
-    "system_id string, n_sectors int, block_size int, "
-    "has_joliet boolean, path string, is_dir boolean, size long, "
-    "lba long, recorded string")
-
-
-def read_iso_images(df: DataFrame, url_col: str = "url",
-                    payload_col: str = "payload") -> DataFrame:
-    """(url, ISO 9660 image bytes) -> one 'volume' row (ids,
-    sector count, Joliet flag) plus one 'member' row per directory
-    entry from the walked tree (Joliet names when present). Pure
-    parse: ``extractor.isox.parse_iso`` (golden-pinned). Map-only;
-    junk yields no rows."""
-    import pandas as pd
-
-    from ..extractor.isox import parse_iso
-
-    def parse(batches):
-        for b in batches:
-            rows = []
-            for url, payload in zip(b[url_col], b[payload_col]):
-                d = parse_iso(
-                    bytes(payload) if payload is not None else None)
-                if not d["ok"]:
-                    # parse-success gate, not header-field nullness:
-                    # a valid PVD with blank ids and a clamped
-                    # sector count must keep its walked members
-                    continue
-                base = (d["volume_id"], d["system_id"],
-                        d["n_sectors"], d["block_size"],
-                        d["has_joliet"])
-                rows.append((url, 0, "volume") + base
-                            + (None,) * 5)
-                for (pos, path, is_dir, size, lba, recorded) in \
-                        d["members"]:
-                    rows.append((url, pos, "member") + base
-                                + (path, is_dir, size, lba,
-                                   recorded))
-            out = pd.DataFrame(rows, columns=[
-                "url", "pos", "row_kind", "volume_id", "system_id",
-                "n_sectors", "block_size", "has_joliet", "path",
-                "is_dir", "size", "lba", "recorded"])
-            for c in ("pos", "n_sectors", "block_size"):
-                out[c] = pd.array(out[c], dtype="Int32")
-            for c in ("size", "lba"):
-                out[c] = pd.array(out[c], dtype="Int64")
-            yield out
-
-    return (df.select(F.col(url_col).alias(url_col),
-                      F.col(payload_col).alias(payload_col))
-            .mapInPandas(parse, ISO_DDL))
 
 
 CFB_DDL = (
@@ -3781,74 +2858,6 @@ def read_office_properties(df: DataFrame, url_col: str = "url",
             .mapInPandas(parse, OLEPS_DDL))
 
 
-MSGPACK_DDL = CBOR_DDL  # same flattened-leaf shape
-
-
-def read_msgpack_records(df: DataFrame, url_col: str = "url",
-                         payload_col: str = "payload") -> DataFrame:
-    """(url, msgpack bytes) -> the cborx flattened-leaf shape (one
-    row per leaf; ok=false row for non-items) — binary configs from
-    Redis/Fluentd/API payloads land beside CBOR and TOML. Pure
-    parse: ``extractor.msgpackx.parse_msgpack`` (golden-pinned).
-    Map-only."""
-    import pandas as pd
-
-    from ..extractor.msgpackx import parse_msgpack
-
-    def parse(batches):
-        for b in batches:
-            rows = []
-            for url, payload in zip(b[url_col], b[payload_col]):
-                d = parse_msgpack(
-                    bytes(payload) if payload is not None else None)
-                if not d["ok"]:
-                    rows.append((url, 0, False, None, None, None))
-                    continue
-                for (pos, path, vtype, text) in d["rows"]:
-                    rows.append((url, pos, True, path, vtype,
-                                 text))
-            out = pd.DataFrame(rows, columns=[
-                "url", "pos", "ok", "path", "vtype", "value_text"])
-            out["pos"] = pd.array(out["pos"], dtype="Int32")
-            yield out
-
-    return (df.select(F.col(url_col).alias(url_col),
-                      F.col(payload_col).alias(payload_col))
-            .mapInPandas(parse, MSGPACK_DDL))
-
-
-def read_bplist_records(df: DataFrame, url_col: str = "url",
-                        payload_col: str = "payload") -> DataFrame:
-    """(url, bplist00 bytes) -> the flattened-leaf shape (cborx/
-    msgpackx DDL; ok=false row for junk). Pure parse:
-    ``extractor.bplistx.parse_bplist`` (plistlib-parity-pinned).
-    Map-only."""
-    import pandas as pd
-
-    from ..extractor.bplistx import parse_bplist
-
-    def parse(batches):
-        for b in batches:
-            rows = []
-            for url, payload in zip(b[url_col], b[payload_col]):
-                d = parse_bplist(
-                    bytes(payload) if payload is not None else None)
-                if not d["ok"]:
-                    rows.append((url, 0, False, None, None, None))
-                    continue
-                for (pos, path, vtype, text) in d["rows"]:
-                    rows.append((url, pos, True, path, vtype,
-                                 text))
-            out = pd.DataFrame(rows, columns=[
-                "url", "pos", "ok", "path", "vtype", "value_text"])
-            out["pos"] = pd.array(out["pos"], dtype="Int32")
-            yield out
-
-    return (df.select(F.col(url_col).alias(url_col),
-                      F.col(payload_col).alias(payload_col))
-            .mapInPandas(parse, MSGPACK_DDL))
-
-
 KML_DDL = ("url string, pos int, folder string, name string, "
            "gtype string, n_points int, min_lon double, "
            "min_lat double, max_lon double, max_lat double, "
@@ -3888,216 +2897,6 @@ def read_kml_placemarks(df: DataFrame, url_col: str = "url",
     return (df.select(F.col(url_col).alias(url_col),
                       F.col(payload_col).alias(payload_col))
             .mapInPandas(parse, KML_DDL))
-
-
-JAVACLASS_DDL = (
-    "url string, pos int, row_kind string, class_name string, "
-    "super_name string, java_version string, access string, "
-    "n_cp int, source_file string, member_kind string, "
-    "name string, descriptor string, member_access string")
-
-
-def read_java_classes(df: DataFrame, url_col: str = "url",
-                      payload_col: str = "payload") -> DataFrame:
-    """(url, .class bytes) -> one 'class' row (resolved names,
-    version, census) plus one 'member' row per field/method with
-    descriptor — the executable-triad index shape for JVM
-    artifacts. Pure parse: ``extractor.javaclassx.parse_class``
-    (javac-parity-pinned). Map-only; junk yields no rows."""
-    import pandas as pd
-
-    from ..extractor.javaclassx import parse_class
-
-    def parse(batches):
-        for b in batches:
-            rows = []
-            for url, payload in zip(b[url_col], b[payload_col]):
-                d = parse_class(
-                    bytes(payload) if payload is not None else None)
-                if d is None:
-                    continue
-                rows.append((url, 0, "class", d["class_name"],
-                             d["super_name"], d["java_version"],
-                             d["access"], d["n_cp"],
-                             d["source_file"], None, None, None,
-                             None))
-                for (pos, kind, name, desc, acc) in d["members"]:
-                    rows.append((url, pos, "member", None, None,
-                                 None, None, None, None, kind,
-                                 name, desc, acc))
-            out = pd.DataFrame(rows, columns=[
-                "url", "pos", "row_kind", "class_name",
-                "super_name", "java_version", "access", "n_cp",
-                "source_file", "member_kind", "name",
-                "descriptor", "member_access"])
-            for c in ("pos", "n_cp"):
-                out[c] = pd.array(out[c], dtype="Int32")
-            yield out
-
-    return (df.select(F.col(url_col).alias(url_col),
-                      F.col(payload_col).alias(payload_col))
-            .mapInPandas(parse, JAVACLASS_DDL))
-
-
-RPM_DDL = ("url string, pos int, row_kind string, name string, "
-           "version string, release string, arch string, "
-           "license string, summary string, payload_format string, "
-           "payload_compressor string, dep_kind string, "
-           "dep_name string, dep_version string")
-
-
-def read_rpm_packages(df: DataFrame, url_col: str = "url",
-                      payload_col: str = "payload") -> DataFrame:
-    """(url, rpm bytes) -> one 'package' row (identity/license/
-    payload) plus one 'dep' row per requires/provides pair — the
-    yum-side sibling of the .deb census. Pure parse:
-    ``extractor.rpmx.parse_rpm`` (golden-pinned). Map-only; junk
-    yields no rows."""
-    import pandas as pd
-
-    from ..extractor.rpmx import parse_rpm
-
-    def parse(batches):
-        for b in batches:
-            rows = []
-            for url, payload in zip(b[url_col], b[payload_col]):
-                d = parse_rpm(
-                    bytes(payload) if payload is not None else None)
-                if d is None:
-                    continue
-                rows.append((url, 0, "package", d["name"],
-                             d["version"], d["release"], d["arch"],
-                             d["license"], d["summary"],
-                             d["payload_format"],
-                             d["payload_compressor"],
-                             None, None, None))
-                pos = 0
-                for kind in ("requires", "provides"):
-                    for (dn, dv) in d[kind]:
-                        rows.append((url, pos, "dep", None, None,
-                                     None, None, None, None, None,
-                                     None, kind, dn, dv))
-                        pos += 1
-            out = pd.DataFrame(rows, columns=[
-                "url", "pos", "row_kind", "name", "version",
-                "release", "arch", "license", "summary",
-                "payload_format", "payload_compressor",
-                "dep_kind", "dep_name", "dep_version"])
-            out["pos"] = pd.array(out["pos"], dtype="Int32")
-            yield out
-
-    return (df.select(F.col(url_col).alias(url_col),
-                      F.col(payload_col).alias(payload_col))
-            .mapInPandas(parse, RPM_DDL))
-
-
-def read_jar_classes(df: DataFrame, url_col: str = "url",
-                     payload_col: str = "payload") -> DataFrame:
-    """(url, .jar bytes) -> the read_java_classes row shape with a
-    ``member`` column prepended: the zip walk (stdlib extraction,
-    zipx audits the directory) feeds every ``*.class`` member
-    through the SAME parse_class — container x format composition,
-    one decode per member. Unparseable members are skipped (F5)."""
-    import io
-    import zipfile
-
-    import pandas as pd
-
-    from ..extractor.javaclassx import parse_class
-
-    def parse(batches):
-        for b in batches:
-            rows = []
-            for url, payload in zip(b[url_col], b[payload_col]):
-                if payload is None:
-                    continue
-                try:
-                    z = zipfile.ZipFile(io.BytesIO(bytes(payload)))
-                    names = [n for n in z.namelist()
-                             if n.endswith(".class")]
-                except zipfile.BadZipFile:
-                    continue
-                for member in names:
-                    try:
-                        d = parse_class(z.read(member))
-                    except Exception:
-                        continue
-                    if d is None:
-                        continue
-                    rows.append((url, member, d["class_name"],
-                                 d["super_name"],
-                                 d["java_version"], d["access"],
-                                 len([m for m in d["members"]
-                                      if m[1] == "method"]),
-                                 len([m for m in d["members"]
-                                      if m[1] == "field"])))
-            out = pd.DataFrame(rows, columns=[
-                "url", "member", "class_name", "super_name",
-                "java_version", "access", "n_methods",
-                "n_fields"])
-            for c in ("n_methods", "n_fields"):
-                out[c] = pd.array(out[c], dtype="Int32")
-            yield out
-
-    return (df.select(F.col(url_col).alias(url_col),
-                      F.col(payload_col).alias(payload_col))
-            .mapInPandas(
-                parse,
-                "url string, member string, class_name string, "
-                "super_name string, java_version string, "
-                "access string, n_methods int, n_fields int"))
-
-
-SWF_DDL = ("url string, pos int, row_kind string, "
-           "compression string, version int, declared_len long, "
-           "width_px int, height_px int, frame_rate int, "
-           "frame_count int, tag_code int, tag_name string, "
-           "n int, tag_bytes long")
-
-
-def read_swf_files(df: DataFrame, url_col: str = "url",
-                   payload_col: str = "payload") -> DataFrame:
-    """(url, swf bytes) -> one 'file' row (header/stage/frames)
-    plus one 'tag' row per census entry. Pure parse:
-    ``extractor.swfx.parse_swf`` (golden-pinned). Map-only; junk
-    yields no rows."""
-    import pandas as pd
-
-    from ..extractor.swfx import parse_swf
-
-    def parse(batches):
-        for b in batches:
-            rows = []
-            for url, payload in zip(b[url_col], b[payload_col]):
-                d = parse_swf(
-                    bytes(payload) if payload is not None else None)
-                if d is None:
-                    continue
-                rows.append((url, 0, "file", d["compression"],
-                             d["version"], d["declared_len"],
-                             d["width_px"], d["height_px"],
-                             d["frame_rate"], d["frame_count"],
-                             None, None, None, None))
-                for i, (code, name, n, tb) in enumerate(d["tags"]):
-                    rows.append((url, i, "tag", None, None, None,
-                                 None, None, None, None, code,
-                                 name, n, tb))
-            out = pd.DataFrame(rows, columns=[
-                "url", "pos", "row_kind", "compression",
-                "version", "declared_len", "width_px",
-                "height_px", "frame_rate", "frame_count",
-                "tag_code", "tag_name", "n", "tag_bytes"])
-            for c in ("pos", "version", "width_px", "height_px",
-                      "frame_rate", "frame_count", "tag_code",
-                      "n"):
-                out[c] = pd.array(out[c], dtype="Int32")
-            for c in ("declared_len", "tag_bytes"):
-                out[c] = pd.array(out[c], dtype="Int64")
-            yield out
-
-    return (df.select(F.col(url_col).alias(url_col),
-                      F.col(payload_col).alias(payload_col))
-            .mapInPandas(parse, SWF_DDL))
 
 
 PGP_DDL = ("url string, pos int, row_kind string, kind string, "
@@ -4179,102 +2978,6 @@ def read_desktop_entries(df: DataFrame, url_col: str = "url",
             .mapInPandas(parse, "url string, pos int, grp string, "
                                 "key string, locale string, "
                                 "value string"))
-
-
-MIDI_DDL = ("url string, pos int, row_kind string, format int, "
-            "n_tracks int, division int, smpte boolean, "
-            "tempo_us int, bpm int, time_sig string, "
-            "track_name string, n_events int, n_notes int, "
-            "ticks long")
-
-
-def read_midi_files(df: DataFrame, url_col: str = "url",
-                    payload_col: str = "payload") -> DataFrame:
-    """(url, SMF bytes) -> one 'file' row (header/tempo/signature)
-    plus one 'track' row per MTrk (name, event/note census, tick
-    length). Pure parse: ``extractor.midix.parse_midi``
-    (golden-pinned). Map-only; junk yields no rows."""
-    import pandas as pd
-
-    from ..extractor.midix import parse_midi
-
-    def parse(batches):
-        for b in batches:
-            rows = []
-            for url, payload in zip(b[url_col], b[payload_col]):
-                d = parse_midi(
-                    bytes(payload) if payload is not None else None)
-                if d is None:
-                    continue
-                rows.append((url, 0, "file", d["format"],
-                             d["n_tracks_declared"], d["division"],
-                             d["smpte"], d["tempo_us"], d["bpm"],
-                             d["time_sig"], None, None, None,
-                             None))
-                for (pos, name, n_ev, n_notes, ticks) in \
-                        d["tracks"]:
-                    rows.append((url, pos, "track", None, None,
-                                 None, None, None, None, None,
-                                 name, n_ev, n_notes, ticks))
-            out = pd.DataFrame(rows, columns=[
-                "url", "pos", "row_kind", "format", "n_tracks",
-                "division", "smpte", "tempo_us", "bpm",
-                "time_sig", "track_name", "n_events", "n_notes",
-                "ticks"])
-            for c in ("pos", "format", "n_tracks", "division",
-                      "tempo_us", "bpm", "n_events", "n_notes"):
-                out[c] = pd.array(out[c], dtype="Int32")
-            out["ticks"] = pd.array(out["ticks"], dtype="Int64")
-            yield out
-
-    return (df.select(F.col(url_col).alias(url_col),
-                      F.col(payload_col).alias(payload_col))
-            .mapInPandas(parse, MIDI_DDL))
-
-
-LNK_DDL = ("url string, flags string, attributes string, "
-           "created string, accessed string, modified string, "
-           "target_size long, icon_index int, show_cmd string, "
-           "volume_label string, base_path string, "
-           "common_suffix string, name string, rel_path string, "
-           "workdir string, arguments string, "
-           "icon_location string")
-
-
-def read_lnk_shortcuts(df: DataFrame, url_col: str = "url",
-                       payload_col: str = "payload") -> DataFrame:
-    """(url, .lnk bytes) -> one row per shortcut with decoded
-    flags/attributes, FILETIMEs, LinkInfo paths, and StringData.
-    Pure parse: ``extractor.lnkx.parse_lnk`` (golden-pinned).
-    Map-only; junk yields no rows."""
-    import pandas as pd
-
-    from ..extractor.lnkx import parse_lnk
-
-    _COLS = ["flags", "attributes", "created", "accessed",
-             "modified", "target_size", "icon_index", "show_cmd",
-             "volume_label", "base_path", "common_suffix", "name",
-             "rel_path", "workdir", "arguments", "icon_location"]
-
-    def parse(batches):
-        for b in batches:
-            rows = []
-            for url, payload in zip(b[url_col], b[payload_col]):
-                d = parse_lnk(
-                    bytes(payload) if payload is not None else None)
-                if d is None:
-                    continue
-                rows.append((url,) + tuple(d[c] for c in _COLS))
-            out = pd.DataFrame(rows, columns=["url"] + _COLS)
-            out["target_size"] = pd.array(out["target_size"],
-                                          dtype="Int64")
-            out["icon_index"] = pd.array(out["icon_index"],
-                                         dtype="Int32")
-            yield out
-
-    return (df.select(F.col(url_col).alias(url_col),
-                      F.col(payload_col).alias(payload_col))
-            .mapInPandas(parse, LNK_DDL))
 
 
 AVI_DDL = ("url string, pos int, row_kind string, "

@@ -1,6 +1,8 @@
 """ads.txt family: extractor/adsx.py grammar vectors and Spark ==
 pure parity on the committed fixture corpus."""
 
+import random
+
 import pyarrow.parquet as pq
 
 from historicaldatadocumentparsersystem_spark import fixtures
@@ -62,3 +64,25 @@ def test_spark_matches_pure(spark):
     assert got_r == sorted(want_r)
     assert got_v == sorted(want_v)
     assert len(got_r) == 120 and len(got_v) == 40
+
+
+def test_fuzz_never_raises():
+    """Arbitrary text never raises: records keep their width, a valid
+    relationship, a lowercased domain and a 1-based line number."""
+    rng = random.Random(71)
+    toks = ["Example.COM", "ads.net", "pub-1", "direct", "RESELLER",
+            "Direct ", "other", "f08c47fec0942fa0", "", " ", ",", ",",
+            ",", "#c", "=", "contact", "x", "\t", "\r"]
+    for _ in range(400):
+        src = "\n".join("".join(rng.choice(toks)
+                                for _ in range(rng.randrange(0, 9)))
+                        for _ in range(rng.randrange(0, 8)))
+        records, variables = adsx.parse_ads_txt(src)
+        n_lines = src.count("\n") + 1
+        for line_no, domain, pub, rel, _cert in records:
+            assert 1 <= line_no <= n_lines
+            assert domain and pub and domain == domain.lower()
+            assert rel in adsx.RELATIONSHIPS
+        for line_no, name, value in variables:
+            assert 1 <= line_no <= n_lines
+            assert name == name.upper() and value

@@ -1,6 +1,8 @@
 """BibTeX source: extractor/bibx.py grammar vectors, golden pin,
 and the Spark reader == golden parity."""
 
+import random
+
 import pyarrow.parquet as pq
 
 from historicaldatadocumentparsersystem_spark import fixtures
@@ -113,3 +115,23 @@ def test_spark_reader_matches_golden(spark):
                   r.value)
                  for r in sources.read_bib_fields(df).collect())
     assert got == sorted(_pure_rows(24))
+
+
+def test_fuzz_never_raises():
+    """Arbitrary text or bytes never raise: every entry keeps its
+    shape, its ordinal, a lowercased type and lowercased field
+    names."""
+    rng = random.Random(72)
+    chars = "@{}()=,\"#%\\ \narticlebook0123xyz"
+    for _ in range(300):
+        src = "".join(rng.choice(chars)
+                      for _ in range(rng.randrange(0, 200)))
+        for pos, e in enumerate(bibx.extract_bib_entries(src)):
+            assert set(e) == {"entry_type", "key", "fields", "pos"}
+            assert e["pos"] == pos
+            assert e["entry_type"] == e["entry_type"].lower()
+            assert all(k == k.lower() for k, _v in e["fields"])
+    for _ in range(100):
+        blob = bytes(rng.randrange(256)
+                     for _ in range(rng.randrange(0, 160)))
+        assert isinstance(bibx.extract_bib_entries(blob), list)

@@ -3,6 +3,7 @@ vectors and Spark == pure parity on the committed fixture corpus."""
 
 import calendar
 import datetime
+import random
 
 import pyarrow.parquet as pq
 
@@ -290,3 +291,28 @@ def test_vary_retry_spark_matches_pure(spark):
         assert got[url] == (throttled, want), url
     # non-throttle statuses never schedule a backoff
     assert got["https://t.example/f"] == (False, None)
+
+
+def test_fuzz_never_raises():
+    """Arbitrary header values never raise and keep the documented
+    return types (directive indexes are dense, names lowercase)."""
+    rng = random.Random(73)
+    chars = "max-agenocachestoreprivate=,;\" 0123456789GMTSunNov:-*W/"
+    def hdr():
+        if rng.random() < 0.1:
+            return None
+        return "".join(rng.choice(chars)
+                       for _ in range(rng.randrange(0, 60)))
+    for _ in range(400):
+        cc = hdr()
+        dirs = cachex.parse_cache_control(cc)
+        assert [d[0] for d in dirs] == list(range(len(dirs)))
+        assert all(d[1] == d[1].lower() for d in dirs)
+        epoch = cachex.httpdate_to_epoch(hdr())
+        assert epoch is None or isinstance(epoch, int)
+        assert isinstance(cachex.parse_vary(hdr()), list)
+        retry = cachex.retry_after_epoch(hdr(), 1_700_000_000)
+        assert retry is None or isinstance(retry, int)
+        assert isinstance(cachex.etag_match(hdr(), hdr()), bool)
+        assert isinstance(cachex.cache_policy(
+            cc, hdr(), hdr(), hdr(), hdr(), hdr()), dict)

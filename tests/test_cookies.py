@@ -1,6 +1,8 @@
 """Set-Cookie privacy family: cookiex grammar vectors, fixture pin,
 and Spark == pure parity (RFC 6265 storage-model subset)."""
 
+import random
+
 import pyarrow.parquet as pq
 
 from historicaldatadocumentparsersystem_spark import fixtures
@@ -106,3 +108,29 @@ def test_profile_null_samesite_not_tracker(spark):
     assert r.host == "n.example"
     assert r.tracker_like is False
     assert r.n_long_lived == 1 and r.max_ttl_s == 99999999
+
+
+def test_fuzz_never_raises():
+    """Arbitrary Set-Cookie values never raise: the result is None or
+    the full storage-model dict with normalized attributes."""
+    rng = random.Random(74)
+    toks = ["a=b", "=", ";", "; ", " Domain=.Ex.COM", "domain=",
+            " path=/x", "Path=rel", " Secure", "HttpOnly", " SameSite=Lax",
+            "samesite=NONE", "Max-Age=-5", "max-age=1e3",
+            "Expires=Sun, 06 Nov 1994 08:49:37 GMT", " ", "\t", "x"]
+    keys = {"name", "value", "domain", "path", "secure", "httponly",
+            "samesite", "max_age", "expires_epoch"}
+    for _ in range(500):
+        src = "".join(rng.choice(toks) for _ in range(rng.randrange(0, 9)))
+        c = cookiex.parse_set_cookie(src)
+        if c is None:
+            continue
+        assert set(c) == keys and c["name"]
+        assert c["domain"] is None or (
+            c["domain"] == c["domain"].lower()
+            and not c["domain"].startswith("."))
+        assert c["path"] is None or c["path"].startswith("/")
+        assert c["samesite"] is None or c["samesite"] == c["samesite"].lower()
+        assert isinstance(c["secure"], bool)
+        assert isinstance(c["httponly"], bool)
+        assert c["max_age"] is None or isinstance(c["max_age"], int)

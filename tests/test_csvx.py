@@ -1,6 +1,8 @@
 """CSV/DSV source: extractor/csvx.py grammar vectors, dialect
 sniffing, golden pin, and Spark reader == golden parity."""
 
+import random
+
 import pyarrow.parquet as pq
 
 from historicaldatadocumentparsersystem_spark import fixtures
@@ -115,3 +117,22 @@ def test_spark_meta_matches_pure(spark):
         delim = "\\t" if d["delimiter"] == "\t" else d["delimiter"]
         assert got[f["url"]] == (delim, d["has_header"],
                                  n_rows, n_cols)
+
+
+def test_fuzz_never_raises():
+    """Arbitrary text or bytes never raise: the sniffed delimiter is a
+    single character and every record is (row, col, name, value)."""
+    rng = random.Random(75)
+    chars = "ab1,;\t|\"\r\n x"
+    for _ in range(300):
+        src = "".join(rng.choice(chars)
+                      for _ in range(rng.randrange(0, 200)))
+        for payload in (src, src.encode("utf-8")):
+            d = csvx.extract_csv(payload)
+            assert len(d["delimiter"]) == 1
+            assert isinstance(d["has_header"], bool)
+            assert all(len(r) == 4 for r in d["records"])
+    for _ in range(100):
+        blob = bytes(rng.randrange(256)
+                     for _ in range(rng.randrange(0, 160)))
+        assert isinstance(csvx.extract_csv(blob)["records"], list)

@@ -1,6 +1,8 @@
 """Markdown front-matter family: frontmx subset vectors, golden
 pin, and Spark reader == golden parity."""
 
+import random
+
 import pyarrow.parquet as pq
 
 from historicaldatadocumentparsersystem_spark import fixtures
@@ -70,3 +72,18 @@ def test_spark_reader_matches_golden(spark):
     got = sorted((r.url, r.pos, r.key, r.idx, r.value)
                  for r in sources.read_front_matter(df).collect())
     assert got == sorted(_pure_rows(20))
+
+
+def test_fuzz_never_raises():
+    """Arbitrary text never raises: the body offset stays inside the
+    input and every field row keeps its width."""
+    rng = random.Random(76)
+    chars = "-:[],'\"# \ntitle:datetags0123ab"
+    for _ in range(400):
+        src = "".join(rng.choice(chars)
+                      for _ in range(rng.randrange(0, 160)))
+        if rng.random() < 0.5:
+            src = "---\n" + src
+        fields, body_at = frontmx.parse_front_matter(src)
+        assert 0 <= body_at <= len(src)
+        assert all(len(f) == 4 for f in fields)

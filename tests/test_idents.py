@@ -2,6 +2,8 @@
 checksums, normalization, and Spark == pure parity on the committed
 fixture corpus plus adversarial strings."""
 
+import random
+
 import pyarrow.parquet as pq
 import pytest
 
@@ -84,3 +86,16 @@ def test_spark_matches_pure_on_fixture_and_adversarial(spark):
                   for k, v, i in idsx.find_identifiers(r["text"]))
     assert got == want
     assert len(got) > 130
+
+
+def test_fuzz_never_raises():
+    """Arbitrary text never raises: every hit is a substring of the
+    input whose normalized form passes its own validator."""
+    rng = random.Random(77)
+    chars = "10.0123456789/abXarXiv:vISBN- \n.xX"
+    for _ in range(400):
+        src = "".join(rng.choice(chars)
+                      for _ in range(rng.randrange(0, 160)))
+        for kind, raw, norm in idsx.find_identifiers(src):
+            assert raw in src
+            assert idsx.is_valid(kind, norm)

@@ -94,3 +94,24 @@ def test_homograph_gate_reasons(spark):
     # every homograph fixture host is flagged
     flagged_kinds = {fixtures.idn_hosts(96).index(h) % 8 for h in got}
     assert flagged_kinds == {2, 5}
+
+
+def test_script_ranges_disjoint_and_classify_samples():
+    """The shared block table is well formed (BMP intervals, unique
+    names, no codepoint in two scripts) and one sample letter per
+    script classifies to exactly that script."""
+    from historicaldatadocumentparsersystem_spark.extractor.scriptranges \
+        import SCRIPT_RANGES
+    names = [n for n, _ in SCRIPT_RANGES]
+    assert len(set(names)) == len(names)
+    spans = sorted((lo, hi) for _n, rs in SCRIPT_RANGES for lo, hi in rs)
+    assert all(0 <= lo <= hi <= 0xFFFF for lo, hi in spans)
+    assert all(h1 < l2 for (_l1, h1), (l2, _h2) in zip(spans, spans[1:]))
+    samples = {"latin": "a", "cyrillic": "я", "greek": "α",
+               "arabic": "ب", "hebrew": "א",
+               "devanagari": "क", "han": "中", "kana": "か",
+               "hangul": "한"}
+    assert set(samples) == set(names)
+    for name, ch in samples.items():
+        assert idnx.label_scripts(ch) == [name], name
+    assert idnx.label_scripts("0-9") == []

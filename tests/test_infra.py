@@ -1,6 +1,8 @@
 """Infrastructure-header family (Alt-Svc / Server): infrax grammar
 vectors, fixture pin, Spark == pure parity."""
 
+import random
+
 import pyarrow.parquet as pq
 
 from historicaldatadocumentparsersystem_spark import fixtures
@@ -77,3 +79,18 @@ def test_spark_matches_pure(spark):
         for fx in fixtures.infra_header_rows(48)
         for pos, product, ver in infrax.parse_server(fx["server"]))
     assert got_s == want_s
+
+
+def test_fuzz_never_raises():
+    """Arbitrary Alt-Svc / Server values never raise and keep the
+    documented shapes (dense product indexes)."""
+    rng = random.Random(78)
+    chars = "h3-29=\":443\";ma=86400,clear persist nginx/1.2 ()"
+    for _ in range(500):
+        src = "".join(rng.choice(chars)
+                      for _ in range(rng.randrange(0, 80)))
+        alt = infrax.parse_alt_svc(src)
+        assert alt is None or (isinstance(alt["clear"], bool)
+                               and isinstance(alt["alts"], list))
+        prods = infrax.parse_server(src)
+        assert [p[0] for p in prods] == list(range(len(prods)))

@@ -3,6 +3,7 @@ golden-pinned), the v3/v4 serialization variants, the core-dispatch
 branch, and the Spark reader."""
 
 import json
+import random
 
 import pyarrow.parquet as pq
 
@@ -124,3 +125,29 @@ def test_spark_reader_matches_golden(spark):
         "url string, payload binary").repartition(4)
     got = sorted(tuple(r) for r in sources.read_ipynb_cells(df).collect())
     assert got == sorted(_pure_rows())
+
+
+def test_fuzz_never_raises():
+    """Random bytes and byte-mutated notebooks never raise, in the
+    reader or through core dispatch; spans stay inside the text."""
+    rng = random.Random(79)
+    base = ipynbx.make_ipynb([
+        {"cell_type": "markdown", "source": "# Title\ntext"},
+        {"cell_type": "code", "source": "x = 1", "outputs": []}])
+    for _ in range(300):
+        if rng.random() < 0.3:
+            payload = bytes(rng.randrange(256)
+                            for _ in range(rng.randrange(0, 120)))
+        else:
+            b = bytearray(base)
+            for _ in range(rng.randrange(1, 6)):
+                i = rng.randrange(len(b))
+                b[i:i + rng.randrange(0, 4)] = bytes(
+                    [rng.randrange(256)])
+            payload = bytes(b)
+        assert isinstance(ipynbx.is_ipynb(payload), bool)
+        text, spans = ipynbx.extract_ipynb_text(payload)
+        assert all(0 <= s <= e <= len(text) for s, e, _k in spans)
+        res = core.extract_document(payload, "fb")
+        assert all(0 <= s <= e <= len(res.extracted_text)
+                   for s, e, _k in res.spans)

@@ -1,6 +1,8 @@
 """License-detection family: licensex vectors, fixture pin, Spark
 == pure parity."""
 
+import random
+
 import pyarrow.parquet as pq
 
 from historicaldatadocumentparsersystem_spark import fixtures
@@ -82,3 +84,23 @@ def test_spark_matches_pure(spark):
                                               "phrase"}
     urls_with_rows = {r["url"] for r in fixtures.license_page_rows()}
     assert set(got_r) < urls_with_rows
+
+
+def test_fuzz_never_raises():
+    """Arbitrary hrefs and texts never raise; resolve() of whatever
+    signals come out picks one of them or nothing."""
+    rng = random.Random(80)
+    chars = "https://creativecommons.org/licenses/by-sa-nc-nd/4.0 CC0 " \
+            "SPDX-License-Identifier: MIT All rights reserved\n"
+    for _ in range(400):
+        href = "".join(rng.choice(chars)
+                       for _ in range(rng.randrange(0, 80)))
+        text = "".join(rng.choice(chars)
+                       for _ in range(rng.randrange(0, 160)))
+        lic = licensex.link_license(href)
+        assert lic is None or isinstance(lic, str)
+        signals = licensex.text_signals(text)
+        if lic:
+            signals = signals + [("link", lic)]
+        got = licensex.resolve(signals)
+        assert got is None or got in [tuple(s) for s in signals]

@@ -1,6 +1,8 @@
 """llms.txt family: llmstxtx subset vectors, golden pin, Spark
 readers == pure parity."""
 
+import random
+
 import pyarrow.parquet as pq
 
 from historicaldatadocumentparsersystem_spark import fixtures
@@ -78,3 +80,16 @@ def test_spark_readers_match_pure(spark):
             d["title"], d["summary"], len(d["sections"]),
             len(d["links"]),
             "optional" in [x.lower() for x in d["sections"]])
+
+
+def test_fuzz_never_raises():
+    """Arbitrary text never raises: the result keeps its keys and
+    every link row names a parsed section."""
+    rng = random.Random(81)
+    chars = "#> -[]():/.abcOptional\n "
+    for _ in range(400):
+        src = "".join(rng.choice(chars)
+                      for _ in range(rng.randrange(0, 200)))
+        d = llmstxtx.parse_llms_txt(src)
+        assert set(d) == {"title", "summary", "sections", "links"}
+        assert all(link[1] in d["sections"] for link in d["links"])

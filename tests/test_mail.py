@@ -2,6 +2,8 @@
 golden-pinned), RFC 2047 / MIME / mboxrd semantics, the core-dispatch
 branch, and the Spark reader."""
 
+import random
+
 import pyarrow.parquet as pq
 
 from historicaldatadocumentparsersystem_spark import fixtures
@@ -162,3 +164,32 @@ def test_strip_quoted_reply_semantics(spark):
     plan = (webtext.strip_quoted_reply(df)
             ._jdf.queryExecution().executedPlan().toString())
     assert "Exchange" not in plan
+
+
+def test_fuzz_never_raises():
+    """Random bytes and byte-mutated mboxes never raise, in the
+    reader or through core dispatch; spans stay inside the text."""
+    rng = random.Random(82)
+    msg = mailx.make_message(
+        [("From", "a@example.org"), ("Subject", "=?utf-8?q?hi_there?=")],
+        [{"content_type": "text/plain", "cte": "quoted-printable",
+          "text": "body line =E2=9C=93"},
+         {"content_type": "text/html", "text": "<p>html part</p>"}])
+    base = mailx.make_mbox([msg, msg])
+    for _ in range(300):
+        if rng.random() < 0.3:
+            payload = bytes(rng.randrange(256)
+                            for _ in range(rng.randrange(0, 120)))
+        else:
+            b = bytearray(base)
+            for _ in range(rng.randrange(1, 6)):
+                i = rng.randrange(len(b))
+                b[i:i + rng.randrange(0, 4)] = bytes(
+                    [rng.randrange(256)])
+            payload = bytes(b)
+        assert isinstance(mailx.parse_mbox(payload), list)
+        text, spans = mailx.extract_mbox_text(payload)
+        assert all(0 <= s <= e <= len(text) for s, e, _k in spans)
+        res = core.extract_document(payload, "fb")
+        assert all(0 <= s <= e <= len(res.extracted_text)
+                   for s, e, _k in res.spans)

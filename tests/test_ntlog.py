@@ -1,23 +1,16 @@
-"""N-Triples + access-log sources: grammar vectors, epoch parity,
-golden pins, Spark parity, fuzz."""
+"""N-Triples source: grammar vectors, golden pin, Spark parity, fuzz."""
 
-import calendar
 import random
 
 import pyarrow.parquet as pq
 
 from historicaldatadocumentparsersystem_spark import fixtures
-from historicaldatadocumentparsersystem_spark.extractor import (
-    accesslogx, ntriplesx)
+from historicaldatadocumentparsersystem_spark.extractor import ntriplesx
 
 GOLDEN_NT = "fixtures/golden_ntriples_seed42_n12.parquet"
-GOLDEN_AL = "fixtures/golden_accesslog_seed42_n12.parquet"
 
 NT_COLS = ["pos", "subj", "subj_kind", "pred", "obj", "obj_kind",
            "obj_lang", "obj_datatype"]
-AL_COLS = ["pos", "remote", "ident", "auth_user", "epoch",
-           "method", "path", "protocol", "request", "status",
-           "bytes_sent", "referer", "user_agent"]
 
 
 def test_ntriples_vectors():
@@ -46,39 +39,6 @@ def test_ntriples_vectors():
     assert ntriplesx.parse_ntriples(b"\xff\xfe")["triples"] == []
 
 
-def test_clf_epoch_matches_stdlib():
-    # offset applied toward UTC; parity vs calendar.timegm
-    assert accesslogx.clf_ts_to_epoch(
-        "10/Oct/2000:13:55:36 -0700") == calendar.timegm(
-        (2000, 10, 10, 20, 55, 36))
-    assert accesslogx.clf_ts_to_epoch(
-        "01/Jan/2026:00:30:00 +0530") == calendar.timegm(
-        (2025, 12, 31, 19, 0, 0))
-    assert accesslogx.clf_ts_to_epoch(
-        "29/Feb/2024:12:00:00 +0000") == calendar.timegm(
-        (2024, 2, 29, 12, 0, 0))
-    assert accesslogx.clf_ts_to_epoch(
-        "10/Xxx/2000:13:55:36 +0000") is None
-
-
-def test_access_log_vectors():
-    d = accesslogx.parse_access_log(
-        '1.2.3.4 - - [10/Oct/2000:13:55:36 -0700] '
-        '"GET /a.html HTTP/1.0" 200 2326 '
-        '"http://r.example/" "Agent \\"q\\" v1"\n'
-        '5.6.7.8 i bob [10/Oct/2000:13:55:37 -0700] '
-        '"\\x16\\x03junk" 400 - \n'
-        "not a log line\n")
-    assert d["n_malformed"] == 1
-    r0, r1 = d["rows"]
-    assert (r0[5], r0[6], r0[7]) == ("GET", "/a.html", "HTTP/1.0")
-    assert r0[12] == 'Agent "q" v1' and r0[10] == 2326
-    # garbage request keeps raw string, NULL parts, '-' bytes
-    assert r1[5] is None and r1[8].startswith("x16")
-    assert r1[10] is None and (r1[2], r1[3]) == ("i", "bob")
-    assert accesslogx.parse_access_log(None)["rows"] == []
-
-
 def _nt_pure() -> list[tuple]:
     out = []
     for r in fixtures.ntriples_file_rows(12):
@@ -87,22 +47,10 @@ def _nt_pure() -> list[tuple]:
     return out
 
 
-def _al_pure() -> list[tuple]:
-    out = []
-    for r in fixtures.accesslog_file_rows(12):
-        for t in accesslogx.parse_access_log(
-                r["payload"])["rows"]:
-            out.append((r["url"],) + t)
-    return out
-
-
 def test_match_committed_goldens():
     nt = [(r["url"],) + tuple(r[c] for c in NT_COLS)
           for r in pq.read_table(GOLDEN_NT).to_pylist()]
     assert nt == _nt_pure() and len(nt) == 33
-    al = [(r["url"],) + tuple(r[c] for c in AL_COLS)
-          for r in pq.read_table(GOLDEN_AL).to_pylist()]
-    assert al == _al_pure() and len(al) == 27
 
 
 def test_spark_readers_match_pure(spark):
@@ -115,14 +63,6 @@ def test_spark_readers_match_pure(spark):
                  for r in sources.read_ntriples(ndf).collect())
     assert got == sorted(tuple(str(x) for x in r)
                          for r in _nt_pure())
-    adf = spark.createDataFrame(
-        [(r["url"], r["payload"])
-         for r in fixtures.accesslog_file_rows(12)],
-        "url string, payload binary").repartition(8)
-    got = sorted(tuple(str(x) for x in r)
-                 for r in sources.read_access_log(adf).collect())
-    assert got == sorted(tuple(str(x) for x in r)
-                         for r in _al_pure())
 
 
 def test_fuzz_never_raises():
@@ -132,5 +72,3 @@ def test_fuzz_never_raises():
                      for _ in range(rng.randrange(0, 200)))
         assert isinstance(
             ntriplesx.parse_ntriples(blob)["triples"], list)
-        assert isinstance(
-            accesslogx.parse_access_log(blob)["rows"], list)

@@ -123,3 +123,26 @@ def test_spark_source_matches_pure(spark):
     want = sorted((r["url"], el.para, el.kind, el.level, el.text)
                   for r in files for el in odtx.extract_odt(r["payload"]))
     assert got == want
+
+
+def test_fuzz_never_raises():
+    """Byte-mutated ODT containers never raise out of core dispatch
+    (the reader raises on a broken zip; dispatch degrades to the
+    failed fallback): spans stay inside the text."""
+    import random
+    from historicaldatadocumentparsersystem_spark.extractor import \
+        extract_document
+    rng = random.Random(83)
+    base = odtx.make_odt([("heading", "Title"), ("text", "first para"),
+                          ("text", "second para")])
+    for _ in range(300):
+        b = bytearray(base)
+        for _ in range(rng.randrange(1, 6)):
+            i = rng.randrange(len(b))
+            b[i:i + rng.randrange(0, 8)] = bytes([rng.randrange(256)])
+        res = extract_document(bytes(b), "fb")
+        assert res.n_blocks == len(res.spans)
+        assert all(0 <= s <= e <= len(res.extracted_text)
+                   for s, e, _k in res.spans)
+        if res.doc_kind == "empty":
+            assert res.extracted_text == "fb"

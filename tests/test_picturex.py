@@ -95,3 +95,17 @@ def test_pnm_codec_and_dispatch():
     flat = imagex.encode_pnm(bytes([90]) * 900, 30, 30, 1)
     out = picturex.classify_picture(flat)
     assert out is not None and out[0][0] == "flat"
+
+
+def test_committed_weights_cover_every_class_and_feature():
+    """pmodel holds one bias and one weight per feature for every
+    class. class_scores zips the tables, so a short table would drop
+    a class silently instead of failing."""
+    from historicaldatadocumentparsersystem_spark.extractor import pmodel
+    n_feats = len(picturex.picture_features(bytes([1, 2, 3]) * 4, 2, 2, 3))
+    assert len(pmodel.B_MICRO) == len(picturex.CLASSES)
+    assert len(pmodel.W_MICRO) == len(picturex.CLASSES)
+    assert all(len(row) == n_feats for row in pmodel.W_MICRO)
+    assert all(isinstance(v, int)
+               for v in pmodel.B_MICRO + sum(pmodel.W_MICRO, []))
+    assert picturex.class_scores((0,) * n_feats) == pmodel.B_MICRO

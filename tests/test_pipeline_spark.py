@@ -140,3 +140,45 @@ def test_exact_resume(spark, docs_df, tmp_path):
     stats2 = pipeline.run_extraction(spark, docs_df, res_out, run_id="r3",
                                      snapshot_id="s1", num_buckets=8)
     assert stats2["skipped_partitions"] == 8
+
+
+def test_run_extraction_writes_extract_df_plan(spark, docs_df, tmp_path,
+                                               monkeypatch):
+    """run_extraction writes extract_df's plan (one url-hash exchange
+    under the extraction stage); a fresh catalog adds no bucket
+    predicate, and a resumed run filters the todo buckets BELOW the
+    exchange, so done buckets are never shuffled."""
+    from pyspark.sql import functions as F
+    from historicaldatadocumentparsersystem_spark.catalog import Catalog
+    from historicaldatadocumentparsersystem_spark.plans import \
+        physical_plan
+
+    written = []
+    write = Catalog.write_extracted
+
+    def spy(self, df):
+        written.append(df)
+        write(self, df)
+
+    monkeypatch.setattr(Catalog, "write_extracted", spy)
+    out = str(tmp_path / "out")
+    half = docs_df.transform(lambda d: pipeline.with_part_id(d, 8)) \
+                  .where(F.col("part_id") < 4).drop("part_id")
+    pipeline.run_extraction(spark, half, out, run_id="a",
+                            snapshot_id="s1", num_buckets=8)
+    todo = sorted(set(range(8)) - Catalog(out).done_partitions(spark, "s1"))
+    assert todo
+    pipeline.run_extraction(spark, docs_df, out, run_id="b",
+                            snapshot_id="s1", num_buckets=8)
+    assert len(written) == 2
+    # the query part of each plan, above the cached input relation
+    fresh, resumed = (physical_plan(df, "simple").split("InMemoryRelation")[0]
+                      for df in written)
+    for plan in (fresh, resumed):
+        assert plan.count("Exchange ") == 1, plan
+        assert plan.index("MapInPandas extract_batch") < plan.index(
+            "Exchange hashpartitioning(xxhash64(url"), plan
+    assert " IN (" not in fresh, fresh
+    todo_in = "IN (%s)" % ",".join(map(str, todo))
+    assert todo_in in resumed, resumed
+    assert resumed.index("Exchange ") < resumed.index(todo_in), resumed

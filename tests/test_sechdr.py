@@ -1,6 +1,8 @@
 """Security-header posture family: sechdrx grammar vectors, fixture
 pin, and Spark == pure parity."""
 
+import random
+
 import pyarrow.parquet as pq
 
 from historicaldatadocumentparsersystem_spark import fixtures
@@ -97,3 +99,21 @@ def test_spark_matches_pure(spark):
     grades = {r.grade for r in sechdr.host_security_posture(
         sechdr.security_headers(caps)).collect()}
     assert grades == {"A", "B", "C", "D", "F"}
+
+
+def test_fuzz_never_raises():
+    """Arbitrary header values never raise and keep the documented
+    shapes (dense CSP directive indexes)."""
+    rng = random.Random(84)
+    chars = "max-age=;includeSubDomains preload default-src 'self' " \
+            "no-referrer,DENY SAMEORIGIN\"01"
+    for _ in range(500):
+        src = "".join(rng.choice(chars)
+                      for _ in range(rng.randrange(0, 80)))
+        hsts = sechdrx.parse_hsts(src)
+        assert hsts is None or isinstance(hsts["valid"], bool)
+        csp = sechdrx.parse_csp(src)
+        assert [d[0] for d in csp] == list(range(len(csp)))
+        for fn in (sechdrx.parse_referrer_policy, sechdrx.parse_xfo):
+            v = fn(src)
+            assert v is None or v == v.lower()

@@ -1,6 +1,8 @@
 """security.txt family: extractor/sectxtx.py grammar vectors and
 Spark == pure parity on the committed fixture corpus."""
 
+import random
+
 import pyarrow.parquet as pq
 
 from historicaldatadocumentparsersystem_spark import fixtures
@@ -85,3 +87,22 @@ def test_spark_matches_pure(spark):
     assert {v[3:] for v in got_g.values()} == {
         (True, False), (True, True), (True, None),
         (False, None)}
+
+
+def test_fuzz_never_raises():
+    """Arbitrary text never raises: field names are lowercase with
+    1-based line numbers, and the gate keeps its keys."""
+    rng = random.Random(85)
+    toks = ["Contact:", "expires:", "Policy: ", "mailto:a@b",
+            " 2030-01-01T00:00:00Z", "2020-13-01", "#", "x", ":", " ",
+            "\r", "-----BEGIN PGP SIGNED MESSAGE-----"]
+    keys = set(sectxtx.security_txt_gate("", "2025-01-01T00:00:00Z"))
+    for _ in range(400):
+        src = "\n".join("".join(rng.choice(toks)
+                                for _ in range(rng.randrange(0, 5)))
+                        for _ in range(rng.randrange(0, 8)))
+        n_lines = src.count("\n") + 1
+        for line_no, name, _value in sectxtx.parse_security_txt(src):
+            assert 1 <= line_no <= n_lines and name == name.lower()
+        gate = sectxtx.security_txt_gate(src, "2025-01-01T00:00:00Z")
+        assert set(gate) == keys

@@ -1,6 +1,8 @@
 """Porter stemmer: full-pipeline vectors (official output
 semantics), step-rule checks, golden pin, Spark parity."""
 
+import random
+
 import pyarrow.parquet as pq
 
 from historicaldatadocumentparsersystem_spark import fixtures
@@ -101,3 +103,18 @@ def test_spark_vocab_matches_golden(spark):
     golden = sorted((r["word"], r["stem"])
                     for r in pq.read_table(GOLDEN_STEMS).to_pylist())
     assert got == golden
+
+
+def test_fuzz_never_raises():
+    """Random lowercase words never raise and never get longer;
+    tokens() yields non-empty lowercase tokens."""
+    rng = random.Random(86)
+    for _ in range(1000):
+        w = "".join(rng.choice("abcdeilnorstuvyz")
+                    for _ in range(rng.randrange(0, 16)))
+        s = porter_stem(w)
+        assert isinstance(s, str) and len(s) <= max(len(w), 1)
+    for _ in range(200):
+        src = "".join(rng.choice("Ab c'-.,\n9é")
+                      for _ in range(rng.randrange(0, 80)))
+        assert all(t and t == t.lower() for t in tokens(src))

@@ -1,6 +1,8 @@
 """TMX source: extractor/tmxx.py vectors, golden pin, Spark reader
 parity, and the tu pairing operator."""
 
+import random
+
 import pyarrow.parquet as pq
 
 from historicaldatadocumentparsersystem_spark import fixtures
@@ -97,3 +99,31 @@ def test_tmx_pairs_semantics(spark):
         ("u", 0, "en-us", "Hello", "fr", "Bonjour"),
         ("u", 1, "ja", "こんにちは", "en", "Hello there"),
     ]
+
+
+def test_fuzz_never_raises():
+    """Arbitrary text, bytes and byte-mutated TMX documents never
+    raise: the result keeps its keys."""
+    rng = random.Random(87)
+    base = tmxx.build_tmx([
+        {"tuid": "1", "tuvs": [("en", "Hello <b>world</b>"),
+                               ("de", "Hallo Welt")]},
+        {"tuid": None, "tuvs": [("en", "Bye"), ("fr", "Salut")]}])
+    for _ in range(300):
+        r = rng.random()
+        if r < 0.2:
+            payload = bytes(rng.randrange(256)
+                            for _ in range(rng.randrange(0, 120)))
+        elif r < 0.4:
+            payload = "".join(rng.choice("<>/tmxtuvseg =\"en\n")
+                              for _ in range(rng.randrange(0, 120)))
+        else:
+            b = bytearray(base.encode("utf-8"))
+            for _ in range(rng.randrange(1, 6)):
+                i = rng.randrange(len(b))
+                b[i:i + rng.randrange(0, 4)] = bytes(
+                    [rng.randrange(256)])
+            payload = bytes(b)
+        d = tmxx.extract_tmx(payload)
+        assert set(d) == {"srclang", "rows"}
+        assert isinstance(d["rows"], list)

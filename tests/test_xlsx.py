@@ -2,6 +2,7 @@
 Spark reader == golden parity, and the core zip-dispatch branch."""
 
 import io
+import random
 import zipfile
 
 import pyarrow.parquet as pq
@@ -189,3 +190,25 @@ def test_spark_sheets_matches_pure(spark):
     # the empty sheet is present with zero extent
     assert any(r[2] == "Blank" and r[3] == 0 and r[4] == 0
                for r in got)
+
+
+def test_fuzz_never_raises():
+    """Byte-mutated workbooks never raise out of core dispatch (the
+    reader raises on a broken zip; dispatch degrades to the failed
+    fallback): spans stay inside the text."""
+    from historicaldatadocumentparsersystem_spark.extractor import core
+    rng = random.Random(88)
+    base = xlsxx.make_xlsx([("A", [["h1", "h2"], [1, 2.5]]),
+                            ("B", [["solo", True]])],
+                           shared_strings=True)
+    for _ in range(300):
+        b = bytearray(base)
+        for _ in range(rng.randrange(1, 6)):
+            i = rng.randrange(len(b))
+            b[i:i + rng.randrange(0, 8)] = bytes([rng.randrange(256)])
+        res = core.extract_document(bytes(b), "fb")
+        assert res.n_blocks == len(res.spans)
+        assert all(0 <= s <= e <= len(res.extracted_text)
+                   for s, e, _k in res.spans)
+        if res.doc_kind == "empty":
+            assert res.extracted_text == "fb"
