@@ -29,7 +29,25 @@ import sys
 import time
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+
+def _host_cpus() -> int:
+    """Cores this process may run on (its affinity mask, not the box)."""
+    try:
+        return len(os.sched_getaffinity(0))
+    except AttributeError:  # no sched_getaffinity on this platform
+        return os.cpu_count() or 1
+
+
+def _host_driver_mem() -> str:
+    """16g, capped at half the physical RAM: local mode runs executors
+    inside the driver JVM, and the Python workers and the page cache
+    need the other half."""
+    ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
+    return f"{min(16 << 10, ram_mb // 2)}m"
+
+
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or _host_cpus())
 BENCH_DOCS = int(os.environ.get("SPARK_GRAFT_BENCH_DOCS", "60000"))
 # 60k x ~12 KB (~740 MB html) keeps a local[32] timed run ~10 s — long
 # enough that job fixed costs (scheduling, first-stage settling) stop
@@ -68,7 +86,8 @@ def make_spark(cpus: int):
             .config("spark.sql.execution.arrow.pyspark.enabled", "true")
             .config("spark.sql.execution.arrow.maxRecordsPerBatch", "256")
             .config("spark.driver.memory",
-                    os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+                    os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+                    or _host_driver_mem())
             .config("spark.ui.enabled", "false")
             .getOrCreate())
 

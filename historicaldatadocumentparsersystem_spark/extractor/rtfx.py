@@ -97,10 +97,6 @@ def _body_start(payload: bytes) -> int:
     return len(payload[:256]) - len(stripped)
 
 
-def is_rtf(payload: bytes | None) -> bool:
-    return bool(payload) and _body_start(payload) >= 0
-
-
 def extract_rtf(payload: bytes) -> list[RtfElement]:
     """Parse an RTF payload into ordered paragraph elements.
 

@@ -1198,13 +1198,6 @@ def paging_pages(n_articles: int = 24, seed: int = 42) -> list[dict]:
     return pages
 
 
-def paging_pages_df(spark, n_articles: int = 24, seed: int = 42,
-                    num_partitions: int = 8):
-    """Spark DataFrame of the paging_pages fixture set (url, html)."""
-    return _pages_df(spark, paging_pages(n_articles, seed),
-                     num_partitions)
-
-
 def table_pages(n: int, seed: int = 42) -> list[dict]:
     """Deterministic (url, html) pages exercising the table extractor
     (extractor/tablex.py): thead/tbody with th headers, multiple
@@ -2611,19 +2604,6 @@ def pii_texts(n: int = 160, seed: int = 42) -> list[dict]:
     return rows
 
 
-def pii_texts_df(spark, n: int = 160, seed: int = 42,
-                 num_partitions: int = 8):
-    """Spark DataFrame of the pii_texts fixture set (url, text)."""
-    from pyspark.sql.types import StringType, StructField, StructType
-    schema = StructType([
-        StructField("url", StringType(), False),
-        StructField("text", StringType(), False),
-    ])
-    return (spark.createDataFrame(
-        [(r["url"], r["text"]) for r in pii_texts(n, seed)], schema)
-        .repartition(num_partitions))
-
-
 # --- Jupyter notebook fixture files -------------------------------------------
 
 def ipynb_file_rows(n: int = 30, seed: int = 42) -> list[dict]:
@@ -3375,19 +3355,6 @@ def ids_texts(n: int = 120, seed: int = 42) -> list[dict]:
         parts.append(_sentence(rng, 3, 8))
         rows.append({"url": url, "text": " ".join(parts)})
     return rows
-
-
-def ids_texts_df(spark, n: int = 120, seed: int = 42,
-                 num_partitions: int = 8):
-    """Spark DataFrame of the ids_texts fixture set (url, text)."""
-    from pyspark.sql.types import StringType, StructField, StructType
-    schema = StructType([
-        StructField("url", StringType(), False),
-        StructField("text", StringType(), False),
-    ])
-    return (spark.createDataFrame(
-        [(r["url"], r["text"]) for r in ids_texts(n, seed)], schema)
-        .repartition(num_partitions))
 
 
 def wacz_file_rows(n: int = 12, seed: int = 42) -> list[dict]:

@@ -14,13 +14,6 @@ def _c(col) -> Column:
     return F.col(col) if isinstance(col, str) else col
 
 
-# C1: lowercase keyword contains (llm_*_parser.py keyword matching)
-def contains_any(col, keywords: list[str]) -> Column:
-    import re as _re
-    pattern = "|".join(_re.escape(k.lower()) for k in keywords)
-    return F.lower(_c(col)).rlike(pattern)
-
-
 # C2: numbered-list strip (utils/tools.py:84-99 regex)
 _NUMBERED = r"^[0-9a-zA-Z]+[.\-)]\s*"
 
@@ -58,15 +51,6 @@ def pad_clamp_hi(col, ext: Column | float, limit_col) -> Column:
     return F.least(_c(limit_col), _c(col) + ext)
 
 
-# C8 (encoding half): base64 round-trip of binary payloads
-def to_b64(col) -> Column:
-    return F.base64(_c(col))
-
-
-def from_b64(col) -> Column:
-    return F.unbase64(_c(col))
-
-
 # C9: JSON parse with null-safe fallback (base_parser.py:57-63)
 def parse_records(col, schema: str = "array<struct<mission_name:string,"
                   "entity:string,thematiques:string,data_type:string,"
@@ -86,10 +70,6 @@ def truncate_text(col, limit: int = 15000) -> Column:
 
 
 # C11/C12: deterministic ids (uuid4 replaced per SURVEY C11)
-def url_hash(col="url") -> Column:
-    return F.xxhash64(_c(col))
-
-
 def chunk_id(url_col, kind_col, pos_col) -> Column:
     return F.concat_ws("_", F.xxhash64(_c(url_col)).cast("string"),
                        _c(kind_col), _c(pos_col).cast("string"))

@@ -12,7 +12,7 @@ fetches the scan cost IS the operator cost.
 
 Pure-Python twin: extractor/adsx.py (pytest pins Spark == pure on
 the committed fixture corpus); DuckDB twin: generated from the same
-constants in __spark_entry__.py.
+constants in queries/wellknown.py.
 """
 
 from __future__ import annotations

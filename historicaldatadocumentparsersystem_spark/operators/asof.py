@@ -8,7 +8,7 @@ key, O(n log n) per key group, no candidate explosion — the standard
 big-data as-of pattern (vs. a theta-join that degenerates at scale).
 
 Verified against DuckDB's native ASOF JOIN in the driver contract
-(``__spark_entry__`` query ``asof_join``).
+(query ``asof_join`` in ``queries/relational.py``).
 """
 
 from __future__ import annotations

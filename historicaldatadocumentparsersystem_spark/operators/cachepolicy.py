@@ -9,7 +9,7 @@ scan as any capture-view query; predicate pushdown keeps untouched
 columns out of the Arrow transfer (select the header columns only).
 
 Pure-Python twin: extractor/cachex.py; DuckDB twin: generated from
-the same regex/formula constants in __spark_entry__.py.
+the same regex/formula constants in queries/cache_policy.py.
 """
 
 from __future__ import annotations

@@ -10,8 +10,8 @@ keeps everything else out of the Arrow transfer.
 (map-side partial agg; host cardinality is tiny next to captures).
 
 Pure twin: extractor/cookiex.py; DuckDB twin: generated from the
-same regex constants + the shared IMF date-math CTE in
-__spark_entry__.py.
+same regex constants (queries/cookies.py) + the shared IMF date-math
+CTE (queries/__init__.py).
 """
 
 from __future__ import annotations

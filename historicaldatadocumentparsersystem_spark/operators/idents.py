@@ -11,7 +11,7 @@ family (operators/pii.py), whose plan shape this mirrors.
 
 Pure-Python twin: extractor/idsx.py (pytest pins Spark == pure on
 the committed fixture corpus and adversarial strings); DuckDB twin:
-generated from the same constants in __spark_entry__.py.
+generated from the same constants in queries/identifiers.py.
 """
 
 from __future__ import annotations

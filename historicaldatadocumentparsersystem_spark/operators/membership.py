@@ -13,7 +13,7 @@ FROM column expressions with an md5 hash family, so:
   written to parquet, unioned across crawls (bit_or is associative:
   merging two crawls' filters is one groupBy), and read back anywhere;
 - every bit is reproducible in any SQL engine (the DuckDB twin in
-  ``__spark_entry__`` matches bit-for-bit, false positives included).
+  ``queries/sketches.py`` matches bit-for-bit, false positives included).
 
 Layout: 63-bit words (bit index 0..62), so ``1 << bit`` never touches
 the int64 sign bit — DuckDB raises on signed shift overflow while

@@ -14,7 +14,7 @@ DuckDB twin).
 
 Pure-Python twin: extractor/piix.py (pytest pins Spark == pure on
 the committed fixture corpus and on adversarial strings); DuckDB
-twin: generated from the same constants in __spark_entry__.py.
+twin: generated from the same constants in queries/quality.py.
 """
 
 from __future__ import annotations

@@ -8,7 +8,7 @@ JVM built-ins (codegen — the CASE chain is shared verbatim with the
 DuckDB twin) and adds exactly ONE host exchange.
 
 Pure twin: extractor/sechdrx.py; DuckDB twin: generated from the
-same regex/token constants in __spark_entry__.py.
+same regex/token constants in queries/security_headers.py.
 """
 
 from __future__ import annotations

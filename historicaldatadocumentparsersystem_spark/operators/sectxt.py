@@ -12,7 +12,7 @@ left join back to the input so zero-field hosts keep their row
 url key is the natural partitioning.
 
 Pure-Python twin: extractor/sectxtx.py; DuckDB twin: generated from
-the same constants in __spark_entry__.py.
+the same constants in queries/wellknown.py.
 """
 
 from __future__ import annotations

@@ -9,7 +9,7 @@ regex strip (``utils/tools.py:84-99``).
 
 All functions return column expressions / DataFrames built from
 built-ins only, so each has an exact DuckDB oracle-SQL twin in
-``__spark_entry__.oracle_sql`` — correctness is SQL-checkable.
+its query's record under ``queries/`` — correctness is SQL-checkable.
 """
 
 from __future__ import annotations
@@ -111,11 +111,6 @@ def quality_score(col: str | Column = "text") -> Column:
     mwl_ok = (mwl >= 3) & (mwl <= 12)
     return ((len_ok.cast("double") + punct_ok.cast("double")
              + mwl_ok.cast("double")) / F.lit(3.0))
-
-
-def lang_scores(col: str | Column = "text") -> list[Column]:
-    """Per-language stopword-hit ratios, aliased score_<lang>."""
-    return [stopword_ratio(col, lg).alias(f"score_{lg}") for lg in STOPWORDS]
 
 
 def lang_id(col: str | Column = "text") -> Column:

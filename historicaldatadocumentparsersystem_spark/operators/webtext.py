@@ -4,7 +4,7 @@ style), URL canonicalization, deterministic stratified sampling,
 length histograms, TF-IDF salient terms.
 
 All plans are built from JVM-side built-ins (no Python UDFs) so every
-operator has an exact DuckDB oracle twin in ``__spark_entry__``.
+operator has an exact DuckDB oracle twin under ``queries/``.
 
 Scale notes per operator live on the function docstrings; the common
 theme: one hash-keyed shuffle per stage, frequency tables joined back
@@ -1308,7 +1308,7 @@ def resolve_revisits(revisits: DataFrame, plan: DataFrame,
 # phrase list a crawl pipeline matches against fetched-200 pages that
 # are actually error shells (soft 404s); lowercase substring matches,
 # RE2-free so both engines agree byte-for-byte. The DuckDB oracle
-# OR-chain is GENERATED from this tuple (__spark_entry__) — edit here
+# OR-chain is GENERATED from this tuple (queries/quality.py) — edit here
 # only. No entry may be a substring of another (it would be dead).
 SOFT404_PHRASES = ("not found", "access denied", "forbidden",
                    "does not exist", "no longer available",

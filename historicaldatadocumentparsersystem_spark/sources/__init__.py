@@ -2053,13 +2053,6 @@ def feed_enclosures_from_blobs(blobs: DataFrame) -> DataFrame:
     return blobs.select("content").mapInPandas(parse, ENCLOSURE_DDL)
 
 
-def read_feed_enclosures(spark: SparkSession, path: str) -> DataFrame:
-    """Feed files on disk -> attachment rows (binaryFile scan + the
-    Arrow pass of feed_enclosures_from_blobs)."""
-    return feed_enclosures_from_blobs(
-        spark.read.format("binaryFile").load(path).select("content"))
-
-
 def media_fetch_frontier(parts: list[tuple[str, DataFrame]]
                          ) -> DataFrame:
     """Union the media DISCOVERY channels into ONE deduplicated fetch

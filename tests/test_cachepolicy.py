@@ -268,7 +268,8 @@ def test_fetch_history_spark_matches_pure(spark):
 def test_vary_retry_spark_matches_pure(spark):
     from historicaldatadocumentparsersystem_spark.operators import \
         cachepolicy
-    from __spark_entry__ import _RETRY_ROWS, _VARY_ROWS
+    from historicaldatadocumentparsersystem_spark.queries.cache_policy import (
+        _RETRY_ROWS, _VARY_ROWS)
     vdf = spark.createDataFrame(list(_VARY_ROWS),
                                 "url string, vary string")
     got = {r.url: (r.n_tokens, r.varies_ua, r.varies_cookie,

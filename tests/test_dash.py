@@ -79,7 +79,8 @@ def test_parse_arbitrary_bytes_never_raises(data):
 
 
 def test_spark_rows_resolution(spark):
-    import __spark_entry__ as entry
+    from historicaldatadocumentparsersystem_spark.queries import (
+        media_discovery as entry)
     from historicaldatadocumentparsersystem_spark import sources
     blobs = spark.createDataFrame(entry._mpd_manifests(),
                                   "url string, content binary")
@@ -102,7 +103,8 @@ def test_spark_rows_resolution(spark):
 
 
 def test_segment_plan_fanout(spark):
-    import __spark_entry__ as entry
+    from historicaldatadocumentparsersystem_spark.queries import (
+        media_discovery as entry)
     from historicaldatadocumentparsersystem_spark import sources
     blobs = spark.createDataFrame(entry._mpd_manifests(),
                                   "url string, content binary")

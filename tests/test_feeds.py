@@ -371,7 +371,8 @@ def test_enclosures_arbitrary_bytes_never_raises(data):
 
 
 def test_spark_enclosure_source(spark):
-    import __spark_entry__ as entry
+    from historicaldatadocumentparsersystem_spark.queries import (
+        media_discovery as entry)
     from historicaldatadocumentparsersystem_spark import sources
     blobs = spark.createDataFrame(
         [(b,) for b in entry._enclosure_feeds()], "content binary")
@@ -404,7 +405,8 @@ def test_media_fetch_frontier_precedence(spark):
 
 
 def test_json_feed_parse_and_dispatch():
-    import __spark_entry__ as entrymod
+    from historicaldatadocumentparsersystem_spark.queries import (
+        media_discovery as entrymod)
     from historicaldatadocumentparsersystem_spark.extractor import feedx
     blobs = entrymod._json_feed_blobs()
     # dispatch: JSON / gzipped-JSON / XML through the ONE entry point

@@ -78,7 +78,8 @@ def test_parse_arbitrary_bytes_never_raises(data):
 
 
 def test_spark_rows_and_summary(spark):
-    import __spark_entry__ as entry
+    from historicaldatadocumentparsersystem_spark.queries import (
+        media_discovery as entry)
     from historicaldatadocumentparsersystem_spark import sources
     blobs = spark.createDataFrame(entry._hls_playlists(),
                                   "url string, content binary")

@@ -491,7 +491,8 @@ def test_refresh_spark_matches_pure(spark):
         import parse_refresh
     from historicaldatadocumentparsersystem_spark.operators import \
         pagemeta
-    from __spark_entry__ import _REFRESH_ROWS
+    from historicaldatadocumentparsersystem_spark.queries.cache_policy import (
+        _REFRESH_ROWS)
     df = spark.createDataFrame(list(_REFRESH_ROWS),
                                "url string, refresh string")
     got = [(r.url, r.delay_s, r.target)

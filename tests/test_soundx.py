@@ -252,7 +252,8 @@ def test_mp3_chapters_roundtrip_and_rules():
 
 
 def test_podcast_chapters_operator(spark):
-    import __spark_entry__ as entry
+    from historicaldatadocumentparsersystem_spark.queries import (
+        media_containers as entry)
     from historicaldatadocumentparsersystem_spark.operators import \
         multimodal
     df = spark.createDataFrame(entry._podcast_rows(),

@@ -631,7 +631,8 @@ def test_link_header_parse_vectors():
 
 
 def test_link_header_spark_matches_pure(spark):
-    import __spark_entry__ as entrymod
+    from historicaldatadocumentparsersystem_spark.queries import (
+        crawl as entrymod)
     from historicaldatadocumentparsersystem_spark.extractor.warcx \
         import parse_link_header
     from historicaldatadocumentparsersystem_spark.operators import \
