@@ -10,6 +10,12 @@ def test_compact_extracted_preserves_rows_and_reduces_files(spark, tmp_path):
     pipeline.run_extraction(spark, docs, out, run_id="r",
                             snapshot_id="s1", num_buckets=4)
     cat = Catalog(out)
+    # run_extraction writes one file per bucket; rewrite the same rows
+    # unshuffled, so each of the 8 input partitions drops a file into
+    # every bucket it holds rows of: the small-files state
+    from pyspark.sql import functions as F
+    cat.write_extracted(pipeline.extract_df(docs, 4, shuffle=False)
+                        .withColumn("run_id", F.lit("r")))
     before_rows = sorted(
         (r["url"], r["doc_kind"])
         for r in cat.read_extracted(spark).collect())

@@ -75,8 +75,8 @@ def test_run_extraction_and_lineage(spark, docs_df, tmp_path):
 def test_new_snapshot_never_counts_foreign_rows(spark, docs_df, tmp_path):
     """A later snapshot whose input leaves some buckets empty must not
     credit those buckets with the PREVIOUS snapshot's rows (dynamic
-    overwrite leaves untouched partitions on disk; the lineage
-    read-back is filtered to this run's run_id)."""
+    overwrite leaves untouched partitions on disk; lineage counts only
+    the rows this run's write observed)."""
     from pyspark.sql import functions as F
     from historicaldatadocumentparsersystem_spark.catalog import Catalog
 
@@ -147,7 +147,9 @@ def test_run_extraction_writes_extract_df_plan(spark, docs_df, tmp_path,
     """run_extraction writes extract_df's plan (one url-hash exchange
     under the extraction stage); a fresh catalog adds no bucket
     predicate, and a resumed run filters the todo buckets BELOW the
-    exchange, so done buckets are never shuffled."""
+    exchange, so done buckets are never shuffled. The write carries
+    the lineage observations: input rows below MapInPandas, output
+    rows above it, so the two are counted at different points."""
     from pyspark.sql import functions as F
     from historicaldatadocumentparsersystem_spark.catalog import Catalog
     from historicaldatadocumentparsersystem_spark.plans import \
@@ -178,7 +180,111 @@ def test_run_extraction_writes_extract_df_plan(spark, docs_df, tmp_path,
         assert plan.count("Exchange ") == 1, plan
         assert plan.index("MapInPandas extract_batch") < plan.index(
             "Exchange hashpartitioning(xxhash64(url"), plan
+        assert plan.count("CollectMetrics ") == 2, plan
+        above, below = (plan.index("CollectMetrics ", i) for i in
+                        (0, plan.index("MapInPandas extract_batch")))
+        assert above < plan.index("MapInPandas extract_batch") < below
+        assert "AS output_rows" in plan[above:below], plan
+        assert "AS input_rows" in plan[below:], plan
+        assert below < plan.index("Exchange "), plan
     assert " IN (" not in fresh, fresh
     todo_in = "IN (%s)" % ",".join(map(str, todo))
     assert todo_in in resumed, resumed
     assert resumed.index("Exchange ") < resumed.index(todo_in), resumed
+
+
+@pytest.mark.parametrize("num_buckets", [8, 64])
+def test_part_id_is_exchange_partition(spark, num_buckets):
+    """Bucket k IS exchange partition k: after extract_df's exchange
+    every row's part_id equals its spark_partition_id, so each write
+    task holds exactly one bucket."""
+    from pyspark.sql import functions as F
+    docs = spark.range(20_000).select(
+        F.concat(F.lit("https://h"), (F.col("id") % 97).cast("string"),
+                 F.lit(".example/p/"), F.col("id").cast("string"))
+        .alias("url"),
+        F.lit(None).cast("timestamp").alias("warc_ts"),
+        F.lit(None).cast("string").alias("lang"),
+        F.lit(None).cast("binary").alias("html"),
+        F.lit(None).cast("string").alias("text"))
+    got = (pipeline.extract_df(docs, num_buckets)
+           .groupBy("part_id", F.spark_partition_id().alias("pid"))
+           .count().collect())
+    assert sum(r["count"] for r in got) == 20_000
+    assert all(r.part_id == r.pid for r in got), got
+    assert {r.part_id for r in got} == set(range(num_buckets))
+
+
+def test_fresh_run_one_file_per_bucket_in_three_jobs(spark, docs_df,
+                                                      tmp_path):
+    import os
+    out = str(tmp_path / "cat")
+    docs_df.count()                 # the cached input is not this job's
+    sc = spark.sparkContext
+    group = f"fresh-run-{id(out)}"
+    sc.setJobGroup(group, "fresh run_extraction")
+    try:
+        pipeline.run_extraction(spark, docs_df, out, run_id="r1",
+                                snapshot_id="s1", num_buckets=8)
+    finally:
+        sc.setJobGroup("", "")
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 3
+    parts = sorted(d for d in os.listdir(os.path.join(out, "extracted"))
+                   if d.startswith("part_id="))
+    assert parts == [f"part_id={k}" for k in range(8)]
+    for d in parts:
+        files = [n for n in os.listdir(os.path.join(out, "extracted", d))
+                 if n.endswith(".parquet")]
+        assert len(files) == 1, (d, files)
+    lineage = [n for n in os.listdir(os.path.join(out, "lineage"))
+               if n.endswith(".parquet")]
+    assert len(lineage) == 1, lineage
+
+
+def test_observed_lineage_equals_groupby_of_written_table(spark, docs_df,
+                                                          tmp_path):
+    """Lineage observed during the write equals the old re-read: a
+    groupBy(part_id) over this run's rows of the written table."""
+    from pyspark.sql import functions as F
+    from historicaldatadocumentparsersystem_spark.catalog import Catalog
+    out = str(tmp_path / "cat")
+    half = docs_df.transform(lambda d: pipeline.with_part_id(d, 8)) \
+                  .where(F.col("part_id") < 4).drop("part_id")
+    pipeline.run_extraction(spark, half, out, run_id="r1",
+                            snapshot_id="s1", num_buckets=8)
+    pipeline.run_extraction(spark, docs_df, out, run_id="r2",
+                            snapshot_id="s1", num_buckets=8)
+    cat = Catalog(out)
+    lineage = cat.read_lineage(spark)
+    for run_id in ("r1", "r2"):
+        got = lineage.where(F.col("run_id") == run_id)
+        wall_ms = got.first().wall_ms
+        oracle = pipeline.lineage_from_extracted(
+            cat.read_extracted(spark).where(F.col("run_id") == run_id),
+            run_id, "s1", wall_ms)
+        assert sorted(map(tuple, got.collect())) == \
+            sorted(map(tuple, oracle.collect()))
+    assert lineage.agg(F.sum("output_rows")).first()[0] == N
+
+
+def test_input_rows_are_counted_before_the_udf(spark, docs_df, tmp_path,
+                                               monkeypatch):
+    """input_rows counts the rows entering extract_batch, output_rows
+    the rows leaving it: a UDF that drops each batch's first row makes
+    them differ."""
+    from pyspark.sql import functions as F
+    from historicaldatadocumentparsersystem_spark.catalog import Catalog
+    real = pipeline.extract_batch
+
+    def drop_first(batches):
+        return real(b.iloc[1:] for b in batches)
+
+    monkeypatch.setattr(pipeline, "extract_batch", drop_first)
+    out = str(tmp_path / "cat")
+    stats = pipeline.run_extraction(spark, docs_df, out, run_id="r1",
+                                    snapshot_id="s1", num_buckets=8)
+    tot = Catalog(out).read_lineage(spark).agg(
+        F.sum("input_rows"), F.sum("output_rows")).first()
+    assert tot[0] == N
+    assert tot[1] < N and tot[1] == stats["rows_written"]
+    assert Catalog(out).read_extracted(spark).count() == tot[1]

@@ -136,10 +136,9 @@ def test_flagship_bucketed_path_is_map_only(spark, docs_parquet):
 
 
 def test_lineage_read_partition_prunes(spark, docs_parquet, tmp_path_factory):
-    """Incremental lineage contract: the post-write read that feeds
-    lineage aggregation must carry part_id as a PartitionFilter — at
-    100 TB a resume run re-scans ONLY the buckets it just wrote, never
-    the whole extracted table."""
+    """Partition-pruned bucket reads: ``read_extracted_parts`` must
+    carry part_id as a PartitionFilter — at 100 TB an audit of some
+    buckets scans ONLY those, never the whole extracted table."""
     from historicaldatadocumentparsersystem_spark.catalog import Catalog
     cat = Catalog(str(tmp_path_factory.mktemp("lincat")))
     src = spark.read.parquet(docs_parquet)
