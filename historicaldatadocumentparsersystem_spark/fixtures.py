@@ -3161,7 +3161,7 @@ def svg_media_rows(n: int = 16, seed: int = 42) -> list[dict]:
 def ics_file_rows(n: int, seed: int = 42) -> list[dict]:
     """Deterministic synthetic iCalendar files: (url, payload). Cycles
     the RFC 5545 shapes the parser must survive — folded long lines,
-    escaped TEXT (\\n \\, \;), quoted TZID params, all-day DATE
+    escaped TEXT (\\n \\, \\;), quoted TZID params, all-day DATE
     values, DURATION instead of DTEND, nested VALARM blocks whose
     properties must NOT bleed into the event, RRULEs with COUNT /
     INTERVAL / UNTIL, CRLF endings and BOM — and every 6th row is a

@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..extractor import cachex
+from ..flatmap import flat_map
 
 HEADER_COLS = ("cache_control", "hdr_age", "hdr_date", "hdr_expires",
                "hdr_last_modified", "hdr_etag")
@@ -38,23 +39,13 @@ def cache_directives(df: DataFrame, cc_col: str = "cache_control",
     """(url, Cache-Control value) -> one row per parsed directive
     (url, pos, directive, arg). Malformed items drop (F5)."""
 
-    def run(batches: Iterator) -> Iterator:
-        for b in batches:
-            urls, poss, names, args = [], [], [], []
-            for url, raw in zip(b[url_col], b[cc_col]):
-                for pos, name, arg in cachex.parse_cache_control(raw):
-                    urls.append(url)
-                    poss.append(pos)
-                    names.append(name)
-                    args.append(arg)
-            yield pd.DataFrame({
-                "url": urls,
-                "pos": pd.array(poss, dtype="int32"),
-                "directive": names, "arg": args})
+    def rows_of(url, raw):
+        for pos, name, arg in cachex.parse_cache_control(raw):
+            yield url, pos, name, arg
 
-    return (df.select(url_col, cc_col)
-            .mapInPandas(run, "url string, pos int, "
-                              "directive string, arg string"))
+    return flat_map(df, [url_col, cc_col],
+                    "url string, pos int, directive string, arg string",
+                    rows_of)
 
 
 def cache_policy_table(df: DataFrame, url_col: str = "url",

@@ -15,13 +15,11 @@ rows-from-parser oracle, refresh_targets precedent).
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..extractor import infrax
+from ..flatmap import flat_map
 
 
 def alt_svc_alternatives(df: DataFrame,
@@ -31,29 +29,15 @@ def alt_svc_alternatives(df: DataFrame,
     pos, proto, host, port, ma_s, persist). ``clear`` and absent
     headers emit nothing."""
 
-    def run(batches: Iterator) -> Iterator:
-        for b in batches:
-            rows = []
-            for url, raw in zip(b[url_col], b[alt_col]):
-                d = infrax.parse_alt_svc(raw)
-                if d is None:
-                    continue
-                for pos, proto, host, port, ma, persist in \
-                        d["alts"]:
-                    rows.append((url, pos, proto, host, port, ma,
-                                 persist))
-            out = pd.DataFrame(rows, columns=[
-                "url", "pos", "proto", "host", "port", "ma_s",
-                "persist"])
-            out["pos"] = pd.array(out["pos"], dtype="int32")
-            for c in ("port", "ma_s"):
-                out[c] = pd.array(out[c], dtype="Int64")
-            yield out
+    def rows_of(url, raw):
+        d = infrax.parse_alt_svc(raw)
+        if d is not None:
+            for alt in d["alts"]:
+                yield (url, *alt)
 
-    return (df.select(url_col, alt_col)
-            .mapInPandas(run, "url string, pos int, proto string, "
-                              "host string, port bigint, "
-                              "ma_s bigint, persist boolean"))
+    return flat_map(df, [url_col, alt_col],
+                    "url string, pos int, proto string, host string, "
+                    "port bigint, ma_s bigint, persist boolean", rows_of)
 
 
 def server_products(df: DataFrame, server_col: str = "server",
@@ -61,20 +45,13 @@ def server_products(df: DataFrame, server_col: str = "server",
     """(url, Server value) -> one row per product token (url, pos,
     product, version)."""
 
-    def run(batches: Iterator) -> Iterator:
-        for b in batches:
-            rows = []
-            for url, raw in zip(b[url_col], b[server_col]):
-                for pos, product, ver in infrax.parse_server(raw):
-                    rows.append((url, pos, product, ver))
-            out = pd.DataFrame(rows, columns=[
-                "url", "pos", "product", "version"])
-            out["pos"] = pd.array(out["pos"], dtype="int32")
-            yield out
+    def rows_of(url, raw):
+        for pos, product, ver in infrax.parse_server(raw):
+            yield url, pos, product, ver
 
-    return (df.select(url_col, server_col)
-            .mapInPandas(run, "url string, pos int, "
-                              "product string, version string"))
+    return flat_map(df, [url_col, server_col],
+                    "url string, pos int, product string, "
+                    "version string", rows_of)
 
 
 def host_transport_profile(alts: DataFrame) -> DataFrame:

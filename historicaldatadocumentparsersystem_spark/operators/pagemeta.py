@@ -22,6 +22,7 @@ from pyspark.sql.types import (BooleanType, IntegerType, StringType,
                                StructField, StructType)
 
 from ..extractor import metax, tablex
+from ..flatmap import flat_map
 
 META_SCHEMA = StructType(
     [StructField("url", StringType(), False)]
@@ -983,31 +984,15 @@ def srcset_candidates(df: DataFrame, srcset_col: str = "srcset",
     in ``extractor/figx.parse_srcset`` (exact milli-density integers,
     clamped widths). Map-only 1->N Arrow pass; malformed candidates
     drop (F5)."""
-    import pandas as pd
-
     from ..extractor.figx import parse_srcset
 
-    def run(batches: Iterator) -> Iterator:
-        for b in batches:
-            urls, poss, imgs, kinds, vals = [], [], [], [], []
-            for url, raw in zip(b[url_col], b[srcset_col]):
-                for pos, img, kind, val in parse_srcset(raw):
-                    urls.append(url)
-                    poss.append(pos)
-                    imgs.append(img)
-                    kinds.append(kind)
-                    vals.append(val)
-            yield pd.DataFrame({
-                "url": urls,
-                "pos": pd.array(poss, dtype="int32"),
-                "img_url": imgs, "kind": kinds,
-                "val": pd.array(vals, dtype="int64")})
+    def rows_of(url, raw):
+        for pos, img, kind, val in parse_srcset(raw):
+            yield url, pos, img, kind, val
 
-    return (df.select(F.col(url_col).alias(url_col),
-                      F.col(srcset_col).alias(srcset_col))
-            .mapInPandas(
-                run, "url string, pos int, img_url string, "
-                     "kind string, val bigint"))
+    return flat_map(df, [url_col, srcset_col],
+                    "url string, pos int, img_url string, kind string, "
+                    "val bigint", rows_of)
 
 
 def srcset_best(cands: DataFrame) -> DataFrame:
@@ -1030,28 +1015,15 @@ def refresh_targets(df: DataFrame, content_col: str = "refresh",
     rows via the HTML shared-declarative-refresh subset in
     ``extractor/metax.parse_refresh``. Malformed values drop (F5);
     target is NULL for pure self-reloads. Map-only Arrow pass."""
-    import pandas as pd
-
     from ..extractor.metax import parse_refresh
 
-    def run(batches: Iterator) -> Iterator:
-        for b in batches:
-            urls, delays, targets = [], [], []
-            for url, raw in zip(b[url_col], b[content_col]):
-                parsed = parse_refresh(raw)
-                if parsed is None:
-                    continue
-                urls.append(url)
-                delays.append(parsed[0])
-                targets.append(parsed[1])
-            yield pd.DataFrame({
-                "url": urls,
-                "delay_s": pd.array(delays, dtype="int32"),
-                "target": targets})
+    def rows_of(url, raw):
+        parsed = parse_refresh(raw)
+        if parsed is not None:
+            yield (url, *parsed)
 
-    return (df.select(url_col, content_col)
-            .mapInPandas(run, "url string, delay_s int, "
-                              "target string"))
+    return flat_map(df, [url_col, content_col],
+                    "url string, delay_s int, target string", rows_of)
 
 
 def refresh_redirects(targets: DataFrame,

@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..extractor import sechdrx
+from ..flatmap import flat_map
 
 HEADER_COLS = ("hsts", "csp", "referrer_policy", "x_frame_options")
 
@@ -86,23 +87,13 @@ def csp_directives(df: DataFrame, csp_col: str = "csp",
     occurrence wins): (url, pos, directive, sources) with sources
     space-joined ('' for a bare directive)."""
 
-    def run(batches: Iterator) -> Iterator:
-        for b in batches:
-            urls, poss, names, srcs = [], [], [], []
-            for url, raw in zip(b[url_col], b[csp_col]):
-                for pos, name, toks in sechdrx.parse_csp(raw):
-                    urls.append(url)
-                    poss.append(pos)
-                    names.append(name)
-                    srcs.append(" ".join(toks))
-            yield pd.DataFrame({
-                "url": urls,
-                "pos": pd.array(poss, dtype="Int64"),
-                "directive": names, "sources": srcs})
+    def rows_of(url, raw):
+        for pos, name, toks in sechdrx.parse_csp(raw):
+            yield url, pos, name, " ".join(toks)
 
-    return (df.select(url_col, csp_col)
-            .mapInPandas(run, "url string, pos bigint, "
-                              "directive string, sources string"))
+    return flat_map(df, [url_col, csp_col],
+                    "url string, pos bigint, directive string, "
+                    "sources string", rows_of)
 
 
 def _score() -> F.Column:

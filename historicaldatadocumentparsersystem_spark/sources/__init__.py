@@ -4,12 +4,30 @@ Reference scan/source inventory (SURVEY.md §2.1): the directory walk S1
 becomes a table scan; format dispatch happens per row by payload sniff
 (extractor.sniff), not per file extension. S5 (CSV rows regrouped 10 per
 chunk, ``unstructured_chunker.py:65-78``) is re-expressed relationally.
+
+Reader contract. Each per-format reader turns its input rows into
+structured records with one :func:`..flatmap.flat_map` pass:
+
+- it selects its input columns (a url plus a payload or text column,
+  or a binaryFile ``content`` column);
+- its ``rows_of`` generator calls a Spark-free parser and yields output
+  tuples in the order of the reader's DDL, and keeps the reader's own
+  ``None`` handling;
+- the helper types the output from that DDL (``int``/``bigint``/
+  ``boolean`` as nullable pandas dtypes) and owns F5: a row whose parse
+  raises yields no rows, and the rest of its batch is kept.
+
+``read_warc_members`` (one file handle across rows) and the sitemap/feed
+batch parsers (shared with the streaming discovery source) keep their
+own ``mapInPandas`` bodies.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+
+from ..flatmap import flat_map
 
 DOCUMENTS_DDL = ("url string, warc_ts timestamp, html binary, "
                  "text string, lang string")
@@ -78,36 +96,14 @@ def read_pptx_elements(df: DataFrame, url_col: str = "url",
     Spark output equals the single-process parse structurally.
     Unparseable payloads yield no rows (F5: degrade, never crash).
     """
-    import pandas as pd
-
     from ..extractor.pptx import extract_pptx
 
-    def parse(batches):
-        for b in batches:
-            urls, slides, shapes, paras, kinds, texts = ([] for _ in
-                                                         range(6))
-            for url, payload in zip(b[url_col], b[payload_col]):
-                try:
-                    els = extract_pptx(bytes(payload))
-                except Exception:
-                    continue
-                for el in els:
-                    urls.append(url)
-                    slides.append(el.slide)
-                    shapes.append(el.shape)
-                    paras.append(el.para)
-                    kinds.append(el.kind)
-                    texts.append(el.text)
-            yield pd.DataFrame({
-                "url": urls,
-                "slide": pd.array(slides, dtype="int32"),
-                "shape": pd.array(shapes, dtype="int32"),
-                "para": pd.array(paras, dtype="int32"),
-                "kind": kinds, "text": texts})
+    def rows_of(url, payload):
+        for el in extract_pptx(bytes(payload)):
+            yield url, el.slide, el.shape, el.para, el.kind, el.text
 
-    return (df.select(F.col(url_col).alias(url_col),
-                      F.col(payload_col).alias(payload_col))
-            .mapInPandas(parse, PPTX_ELEMENTS_DDL))
+    return flat_map(df, [url_col, payload_col], PPTX_ELEMENTS_DDL,
+                    rows_of)
 
 
 DOCX_ELEMENTS_DDL = "url string, para int, kind string, text string"
@@ -121,31 +117,14 @@ def read_docx_elements(df: DataFrame, url_col: str = "url",
     pure-Python ``extractor.docx.extract_docx`` (reference
     ``unstructured_chunker.py:79-91`` Docx2txt extraction subset).
     """
-    import pandas as pd
-
     from ..extractor.docx import extract_docx
 
-    def parse(batches):
-        for b in batches:
-            urls, paras, kinds, texts = [], [], [], []
-            for url, payload in zip(b[url_col], b[payload_col]):
-                try:
-                    els = extract_docx(bytes(payload))
-                except Exception:
-                    continue
-                for el in els:
-                    urls.append(url)
-                    paras.append(el.para)
-                    kinds.append(el.kind)
-                    texts.append(el.text)
-            yield pd.DataFrame({
-                "url": urls,
-                "para": pd.array(paras, dtype="int32"),
-                "kind": kinds, "text": texts})
+    def rows_of(url, payload):
+        for el in extract_docx(bytes(payload)):
+            yield url, el.para, el.kind, el.text
 
-    return (df.select(F.col(url_col).alias(url_col),
-                      F.col(payload_col).alias(payload_col))
-            .mapInPandas(parse, DOCX_ELEMENTS_DDL))
+    return flat_map(df, [url_col, payload_col], DOCX_ELEMENTS_DDL,
+                    rows_of)
 
 
 ODT_ELEMENTS_DDL = ("url string, para int, kind string, level int, "
@@ -162,34 +141,14 @@ def read_odt_elements(df: DataFrame, url_col: str = "url",
     ``unstructured_chunker.py:79-91``). Non-zip payloads are skipped
     (F5); a malformed content part yields no rows for that document.
     """
-    import pandas as pd
-
     from ..extractor.odtx import extract_odt
 
-    def parse(batches):
-        for b in batches:
-            urls, paras, kinds, levels, texts = [], [], [], [], []
-            for url, payload in zip(b[url_col], b[payload_col]):
-                try:
-                    els = extract_odt(bytes(payload))
-                except Exception:
-                    continue
-                for el in els:
-                    urls.append(url)
-                    paras.append(el.para)
-                    kinds.append(el.kind)
-                    levels.append(el.level)
-                    texts.append(el.text)
-            yield pd.DataFrame({
-                "url": urls,
-                "para": pd.array(paras, dtype="int32"),
-                "kind": kinds,
-                "level": pd.array(levels, dtype="int32"),
-                "text": texts})
+    def rows_of(url, payload):
+        for el in extract_odt(bytes(payload)):
+            yield url, el.para, el.kind, el.level, el.text
 
-    return (df.select(F.col(url_col).alias(url_col),
-                      F.col(payload_col).alias(payload_col))
-            .mapInPandas(parse, ODT_ELEMENTS_DDL))
+    return flat_map(df, [url_col, payload_col], ODT_ELEMENTS_DDL,
+                    rows_of)
 
 
 IPYNB_CELLS_DDL = ("url string, cell_idx int, cell_type string, "
@@ -205,42 +164,16 @@ def read_ipynb_cells(df: DataFrame, url_col: str = "url",
     parse is the pure-Python ``extractor.ipynbx.parse_notebook``
     (v4 cells and v3 worksheets).  Non-notebook payloads yield no
     rows (F5)."""
-    import pandas as pd
-
     from ..extractor.ipynbx import parse_notebook
 
-    def parse(batches):
-        for b in batches:
-            urls, idxs, types, langs = [], [], [], []
-            srcs, execs, nouts, otexts = [], [], [], []
-            for url, payload in zip(b[url_col], b[payload_col]):
-                try:
-                    cells = parse_notebook(
-                        bytes(payload) if payload is not None else None)
-                except Exception:
-                    continue
-                for c in cells:
-                    urls.append(url)
-                    idxs.append(c.idx)
-                    types.append(c.cell_type)
-                    langs.append(c.lang)
-                    srcs.append(c.source)
-                    execs.append(c.exec_count)
-                    nouts.append(c.n_outputs)
-                    otexts.append(c.output_text)
-            yield pd.DataFrame({
-                "url": urls,
-                "cell_idx": pd.array(idxs, dtype="int32"),
-                "cell_type": types,
-                "lang": langs,
-                "source": srcs,
-                "exec_count": pd.array(execs, dtype="Int32"),
-                "n_outputs": pd.array(nouts, dtype="int32"),
-                "output_text": otexts})
+    def rows_of(url, payload):
+        for c in parse_notebook(
+                bytes(payload) if payload is not None else None):
+            yield (url, c.idx, c.cell_type, c.lang, c.source,
+                   c.exec_count, c.n_outputs, c.output_text)
 
-    return (df.select(F.col(url_col).alias(url_col),
-                      F.col(payload_col).alias(payload_col))
-            .mapInPandas(parse, IPYNB_CELLS_DDL))
+    return flat_map(df, [url_col, payload_col], IPYNB_CELLS_DDL,
+                    rows_of)
 
 
 def read_latex_elements(df: DataFrame, url_col: str = "url",
@@ -249,34 +182,13 @@ def read_latex_elements(df: DataFrame, url_col: str = "url",
     (url, para, kind, level, text) office/outline schema (the detex
     analog; ``chunking.section_chunks`` composes directly).  The
     per-row parse is the pure-Python ``extractor.texx.parse_latex``."""
-    import pandas as pd
-
     from ..extractor.texx import parse_latex
 
-    def parse(batches):
-        for b in batches:
-            urls, paras, kinds, levels, texts = [], [], [], [], []
-            for url, src in zip(b[url_col], b[text_col]):
-                try:
-                    els = parse_latex(src if src is not None else "")
-                except Exception:
-                    continue
-                for el in els:
-                    urls.append(url)
-                    paras.append(el.para)
-                    kinds.append(el.kind)
-                    levels.append(el.level)
-                    texts.append(el.text)
-            yield pd.DataFrame({
-                "url": urls,
-                "para": pd.array(paras, dtype="int32"),
-                "kind": kinds,
-                "level": pd.array(levels, dtype="int32"),
-                "text": texts})
+    def rows_of(url, src):
+        for el in parse_latex(src if src is not None else ""):
+            yield url, el.para, el.kind, el.level, el.text
 
-    return (df.select(F.col(url_col).alias(url_col),
-                      F.col(text_col).alias(text_col))
-            .mapInPandas(parse, ODT_ELEMENTS_DDL))
+    return flat_map(df, [url_col, text_col], ODT_ELEMENTS_DDL, rows_of)
 
 
 WIKI_LINKS_DDL = "url string, pos int, target string, label string"
@@ -291,40 +203,16 @@ def read_wiki_dump(df: DataFrame, url_col: str = "url",
     (the pages-articles.xml shape Wikipedia actually ships).  Chains
     into read_wikitext_elements / read_wiki_links on the wikitext
     column.  Junk payloads yield no rows (F5)."""
-    import pandas as pd
-
     from ..extractor.wikix import parse_wiki_dump
 
-    def parse(batches):
-        for b in batches:
-            urls, idxs, titles, nss, pids, reds, texts = \
-                [], [], [], [], [], [], []
-            for url, payload in zip(b[url_col], b[payload_col]):
-                try:
-                    pages = parse_wiki_dump(
-                        bytes(payload) if payload is not None else None)
-                except Exception:
-                    continue
-                for p in pages:
-                    urls.append(url)
-                    idxs.append(p.idx)
-                    titles.append(p.title)
-                    nss.append(p.ns)
-                    pids.append(p.page_id)
-                    reds.append(p.redirect)
-                    texts.append(p.wikitext)
-            yield pd.DataFrame({
-                "url": urls,
-                "page_idx": pd.array(idxs, dtype="int32"),
-                "title": titles,
-                "ns": pd.array(nss, dtype="int32"),
-                "page_id": pd.array(pids, dtype="int64"),
-                "redirect": reds,
-                "wikitext": texts})
+    def rows_of(url, payload):
+        for p in parse_wiki_dump(
+                bytes(payload) if payload is not None else None):
+            yield (url, p.idx, p.title, p.ns, p.page_id, p.redirect,
+                   p.wikitext)
 
-    return (df.select(F.col(url_col).alias(url_col),
-                      F.col(payload_col).alias(payload_col))
-            .mapInPandas(parse, WIKI_PAGES_DDL))
+    return flat_map(df, [url_col, payload_col], WIKI_PAGES_DDL,
+                    rows_of)
 
 
 def read_wikitext_elements(df: DataFrame, url_col: str = "url",
@@ -334,34 +222,13 @@ def read_wikitext_elements(df: DataFrame, url_col: str = "url",
     section exactly like office documents (``chunking.section_chunks``
     composes directly).  The per-row parse is the pure-Python
     ``extractor.wikix.parse_wikitext``."""
-    import pandas as pd
-
     from ..extractor.wikix import parse_wikitext
 
-    def parse(batches):
-        for b in batches:
-            urls, paras, kinds, levels, texts = [], [], [], [], []
-            for url, src in zip(b[url_col], b[text_col]):
-                try:
-                    els = parse_wikitext(src if src is not None else "")
-                except Exception:
-                    continue
-                for el in els:
-                    urls.append(url)
-                    paras.append(el.para)
-                    kinds.append(el.kind)
-                    levels.append(el.level)
-                    texts.append(el.text)
-            yield pd.DataFrame({
-                "url": urls,
-                "para": pd.array(paras, dtype="int32"),
-                "kind": kinds,
-                "level": pd.array(levels, dtype="int32"),
-                "text": texts})
+    def rows_of(url, src):
+        for el in parse_wikitext(src if src is not None else ""):
+            yield url, el.para, el.kind, el.level, el.text
 
-    return (df.select(F.col(url_col).alias(url_col),
-                      F.col(text_col).alias(text_col))
-            .mapInPandas(parse, ODT_ELEMENTS_DDL))
+    return flat_map(df, [url_col, text_col], ODT_ELEMENTS_DDL, rows_of)
 
 
 def read_wiki_links(df: DataFrame, url_col: str = "url",
@@ -369,32 +236,13 @@ def read_wiki_links(df: DataFrame, url_col: str = "url",
     """(url, wikitext) rows -> internal links in document order
     (File:/Image:/Category: and template/table/ref positions
     excluded — they do not render as article links)."""
-    import pandas as pd
-
     from ..extractor.wikix import wiki_links
 
-    def parse(batches):
-        for b in batches:
-            urls, poss, targets, labels = [], [], [], []
-            for url, src in zip(b[url_col], b[text_col]):
-                try:
-                    links = wiki_links(src if src is not None else "")
-                except Exception:
-                    continue
-                for lk in links:
-                    urls.append(url)
-                    poss.append(lk.pos)
-                    targets.append(lk.target)
-                    labels.append(lk.label)
-            yield pd.DataFrame({
-                "url": urls,
-                "pos": pd.array(poss, dtype="int32"),
-                "target": targets,
-                "label": labels})
+    def rows_of(url, src):
+        for lk in wiki_links(src if src is not None else ""):
+            yield url, lk.pos, lk.target, lk.label
 
-    return (df.select(F.col(url_col).alias(url_col),
-                      F.col(text_col).alias(text_col))
-            .mapInPandas(parse, WIKI_LINKS_DDL))
+    return flat_map(df, [url_col, text_col], WIKI_LINKS_DDL, rows_of)
 
 
 TAR_MEMBERS_DDL = ("url string, member_idx int, name string, "
@@ -408,40 +256,15 @@ def read_tar_members(df: DataFrame, url_col: str = "url",
     arXiv-bulk shape: tars of .tex/.html sources).  Member payloads
     stay binary so any per-format reader chains on them.  Junk
     payloads yield no rows (F5)."""
-    import pandas as pd
-
     from ..extractor.tarx import list_tar
 
-    def parse(batches):
-        for b in batches:
-            urls, idxs, names, sizes = [], [], [], []
-            mtimes, flags, payloads = [], [], []
-            for url, payload in zip(b[url_col], b[payload_col]):
-                try:
-                    members = list_tar(
-                        bytes(payload) if payload is not None else None)
-                except Exception:
-                    continue
-                for m in members:
-                    urls.append(url)
-                    idxs.append(m.idx)
-                    names.append(m.name)
-                    sizes.append(m.size)
-                    mtimes.append(m.mtime)
-                    flags.append(m.typeflag)
-                    payloads.append(m.payload)
-            yield pd.DataFrame({
-                "url": urls,
-                "member_idx": pd.array(idxs, dtype="int32"),
-                "name": names,
-                "size": pd.array(sizes, dtype="int64"),
-                "mtime": pd.array(mtimes, dtype="int64"),
-                "typeflag": flags,
-                "payload": payloads})
+    def rows_of(url, payload):
+        for m in list_tar(bytes(payload) if payload is not None else None):
+            yield (url, m.idx, m.name, m.size, m.mtime, m.typeflag,
+                   m.payload)
 
-    return (df.select(F.col(url_col).alias(url_col),
-                      F.col(payload_col).alias(payload_col))
-            .mapInPandas(parse, TAR_MEMBERS_DDL))
+    return flat_map(df, [url_col, payload_col], TAR_MEMBERS_DDL,
+                    rows_of)
 
 
 MBOX_MESSAGES_DDL = ("url string, msg_idx int, message_id string, "
@@ -458,47 +281,19 @@ def read_mbox_messages(df: DataFrame, url_col: str = "url",
     parse is the pure-Python ``extractor.mailx.parse_mbox`` (RFC 5322
     headers, RFC 2047 encoded words, nested MIME, mboxrd escaping).
     Junk payloads yield no rows (F5)."""
-    import pandas as pd
-
     from ..extractor.mailx import parse_mbox
 
-    def parse(batches):
-        for b in batches:
-            cols: dict[str, list] = {k: [] for k in (
-                "url", "msg_idx", "message_id", "from_addr", "to_addrs",
-                "subject", "date_ts", "in_reply_to", "text", "n_parts",
-                "has_html", "n_attachments")}
-            for url, payload in zip(b[url_col], b[payload_col]):
-                try:
-                    msgs = parse_mbox(
-                        bytes(payload) if payload is not None else None)
-                except Exception:
-                    continue
-                for m in msgs:
-                    cols["url"].append(url)
-                    cols["msg_idx"].append(m.idx)
-                    cols["message_id"].append(m.message_id)
-                    cols["from_addr"].append(m.from_addr)
-                    cols["to_addrs"].append(m.to_addrs)
-                    cols["subject"].append(m.subject)
-                    cols["date_ts"].append(
-                        m.date_ts.replace(tzinfo=None)
-                        if m.date_ts is not None else None)
-                    cols["in_reply_to"].append(m.in_reply_to)
-                    cols["text"].append(m.text)
-                    cols["n_parts"].append(len(m.parts))
-                    cols["has_html"].append(m.has_html)
-                    cols["n_attachments"].append(m.n_attachments)
-            out = pd.DataFrame(cols)
-            out["msg_idx"] = pd.array(cols["msg_idx"], dtype="int32")
-            out["n_parts"] = pd.array(cols["n_parts"], dtype="int32")
-            out["n_attachments"] = pd.array(cols["n_attachments"],
-                                            dtype="int32")
-            yield out
+    def rows_of(url, payload):
+        for m in parse_mbox(
+                bytes(payload) if payload is not None else None):
+            date_ts = (m.date_ts.replace(tzinfo=None)
+                       if m.date_ts is not None else None)
+            yield (url, m.idx, m.message_id, m.from_addr, m.to_addrs,
+                   m.subject, date_ts, m.in_reply_to, m.text,
+                   len(m.parts), m.has_html, m.n_attachments)
 
-    return (df.select(F.col(url_col).alias(url_col),
-                      F.col(payload_col).alias(payload_col))
-            .mapInPandas(parse, MBOX_MESSAGES_DDL))
+    return flat_map(df, [url_col, payload_col], MBOX_MESSAGES_DDL,
+                    rows_of)
 
 
 OPML_FEEDS_DDL = ("url string, pos int, category string, "
@@ -517,27 +312,17 @@ def read_opml_feeds(df: DataFrame, url_col: str = "url",
     domain-mixture signal. Map-only 1->N over the Spark-free
     ``extractor.feedx.parse_opml``; malformed documents degrade to
     fewer rows (F5)."""
-    import pandas as pd
-
     from ..extractor.feedx import parse_opml
 
-    def parse(batches):
-        cols = ("pos", "category", "title", "xml_url", "html_url")
-        for b in batches:
-            rows = []
-            for url, payload in zip(b[url_col], b[payload_col]):
-                if payload is None:
-                    continue
-                for rec in parse_opml(bytes(payload)):
-                    rows.append((url, *(rec[c] for c in cols)))
-            out = pd.DataFrame(
-                rows, columns=("url",) + cols)
-            out["pos"] = out["pos"].astype("Int32")
-            yield out
+    cols = ("pos", "category", "title", "xml_url", "html_url")
 
-    return (df.select(F.col(url_col).alias(url_col),
-                      F.col(payload_col).alias(payload_col))
-            .mapInPandas(parse, OPML_FEEDS_DDL))
+    def rows_of(url, payload):
+        if payload is None:
+            return
+        for rec in parse_opml(bytes(payload)):
+            yield (url, *(rec[c] for c in cols))
+
+    return flat_map(df, [url_col, payload_col], OPML_FEEDS_DDL, rows_of)
 
 
 SUBTITLE_CUES_DDL = ("url string, pos int, start_ms bigint, "
@@ -555,32 +340,16 @@ def read_subtitle_cues(df: DataFrame, url_col: str = "url",
     1->N; payloads without a parseable cue yield no rows (F5). At
     100 TB the downstream joins (cue windows x sampled video frames)
     key on (url, time) — this source shuffles nothing itself."""
-    import pandas as pd
-
     from ..extractor.subx import parse_subtitles
 
-    def parse(batches):
-        for b in batches:
-            urls, poss, starts, ends, texts = [], [], [], [], []
-            for url, payload in zip(b[url_col], b[payload_col]):
-                if payload is None:
-                    continue
-                for pos, a, z, t in parse_subtitles(bytes(payload)):
-                    urls.append(url)
-                    poss.append(pos)
-                    starts.append(a)
-                    ends.append(z)
-                    texts.append(t)
-            yield pd.DataFrame({
-                "url": urls,
-                "pos": pd.array(poss, dtype="int32"),
-                "start_ms": pd.array(starts, dtype="int64"),
-                "end_ms": pd.array(ends, dtype="int64"),
-                "text": texts})
+    def rows_of(url, payload):
+        if payload is None:
+            return
+        for pos, start_ms, end_ms, text in parse_subtitles(bytes(payload)):
+            yield url, pos, start_ms, end_ms, text
 
-    return (df.select(F.col(url_col).alias(url_col),
-                      F.col(payload_col).alias(payload_col))
-            .mapInPandas(parse, SUBTITLE_CUES_DDL))
+    return flat_map(df, [url_col, payload_col], SUBTITLE_CUES_DDL,
+                    rows_of)
 
 
 DIFF_HUNKS_DDL = (
@@ -603,8 +372,6 @@ def read_diff_hunks(df: DataFrame, url_col: str = "url",
     Int32 hunk coordinates). Map-only 1->N; payloads with no
     sections yield no rows (F5). At 100 TB churn aggregations key on
     (url, new_path) — this source shuffles nothing itself."""
-    import pandas as pd
-
     from ..extractor.diffx import parse_unified_diff
 
     fcols = ("file_idx", "old_path", "new_path", "kind", "is_binary",
@@ -612,30 +379,17 @@ def read_diff_hunks(df: DataFrame, url_col: str = "url",
     hcols = ("hunk_idx", "old_start", "old_len", "new_start",
              "new_len", "section", "n_added", "n_removed")
 
-    def parse(batches):
-        for b in batches:
-            rows = []
-            for url, payload in zip(b[url_col], b[payload_col]):
-                if payload is None:
-                    continue
-                for f in parse_unified_diff(bytes(payload)):
-                    head = (url,) + tuple(f[c] for c in fcols)
-                    if not f["hunks"]:
-                        rows.append(head + (None,) * len(hcols))
-                    for h in f["hunks"]:
-                        rows.append(head
-                                    + tuple(h[c] for c in hcols))
-            out = pd.DataFrame(rows, columns=("url",) + fcols + hcols)
-            for c in ("file_idx", "similarity", "hunk_idx",
-                      "old_start", "old_len", "new_start", "new_len",
-                      "n_added", "n_removed"):
-                out[c] = out[c].astype("Int32")
-            out["is_binary"] = out["is_binary"].astype("boolean")
-            yield out
+    def rows_of(url, payload):
+        if payload is None:
+            return
+        for f in parse_unified_diff(bytes(payload)):
+            head = (url,) + tuple(f[c] for c in fcols)
+            if not f["hunks"]:
+                yield head + (None,) * len(hcols)
+            for h in f["hunks"]:
+                yield head + tuple(h[c] for c in hcols)
 
-    return (df.select(F.col(url_col).alias(url_col),
-                      F.col(payload_col).alias(payload_col))
-            .mapInPandas(parse, DIFF_HUNKS_DDL))
+    return flat_map(df, [url_col, payload_col], DIFF_HUNKS_DDL, rows_of)
 
 
 WACZ_CAPTURES_DDL = (
@@ -660,31 +414,19 @@ def read_wacz_captures(df: DataFrame, url_col: str = "url",
     (dedup, fetch gating) never decompress a WARC member; the fetch
     path resolves individual locators via ``waczx.fetch_capture``.
     Map-only 1->N; non-zip payloads yield no rows (F5)."""
-    import pandas as pd
-
     from ..extractor.waczx import parse_wacz
 
     cols = ("index_path", "urlkey", "ts", "url", "mime", "status",
             "digest", "length", "offset", "filename")
 
-    def parse(batches):
-        for b in batches:
-            rows = []
-            for wacz, payload in zip(b[url_col], b[payload_col]):
-                if payload is None:
-                    continue
-                for cap in parse_wacz(bytes(payload))["captures"]:
-                    rows.append((wacz,)
-                                + tuple(cap[c] for c in cols))
-            out = pd.DataFrame(rows, columns=("wacz",) + cols)
-            out["status"] = out["status"].astype("Int32")
-            out["length"] = out["length"].astype("Int64")
-            out["offset"] = out["offset"].astype("Int64")
-            yield out
+    def rows_of(wacz, payload):
+        if payload is None:
+            return
+        for cap in parse_wacz(bytes(payload))["captures"]:
+            yield (wacz, *(cap[c] for c in cols))
 
-    return (df.select(F.col(url_col).alias(url_col),
-                      F.col(payload_col).alias(payload_col))
-            .mapInPandas(parse, WACZ_CAPTURES_DDL))
+    return flat_map(df, [url_col, payload_col], WACZ_CAPTURES_DDL,
+                    rows_of)
 
 
 def read_wacz_resources(df: DataFrame, url_col: str = "url",
@@ -695,33 +437,19 @@ def read_wacz_resources(df: DataFrame, url_col: str = "url",
     declares nothing to check, false when the member is missing) —
     the hand-off acceptance gate a pipeline runs before ingesting a
     delivered archive. Map-only 1->N (F5 on junk)."""
-    import pandas as pd
-
     from ..extractor.waczx import parse_wacz
 
     cols = ("path", "declared_bytes", "actual_bytes", "size_ok",
             "hash_ok")
 
-    def parse(batches):
-        for b in batches:
-            rows = []
-            for wacz, payload in zip(b[url_col], b[payload_col]):
-                if payload is None:
-                    continue
-                for res in parse_wacz(bytes(payload))["resources"]:
-                    rows.append((wacz,)
-                                + tuple(res[c] for c in cols))
-            out = pd.DataFrame(rows, columns=("wacz",) + cols)
-            out["declared_bytes"] = \
-                out["declared_bytes"].astype("Int64")
-            out["actual_bytes"] = out["actual_bytes"].astype("Int64")
-            out["size_ok"] = out["size_ok"].astype("boolean")
-            out["hash_ok"] = out["hash_ok"].astype("boolean")
-            yield out
+    def rows_of(wacz, payload):
+        if payload is None:
+            return
+        for res in parse_wacz(bytes(payload))["resources"]:
+            yield (wacz, *(res[c] for c in cols))
 
-    return (df.select(F.col(url_col).alias(url_col),
-                      F.col(payload_col).alias(payload_col))
-            .mapInPandas(parse, WACZ_RESOURCES_DDL))
+    return flat_map(df, [url_col, payload_col], WACZ_RESOURCES_DDL,
+                    rows_of)
 
 
 ICS_EVENTS_DDL = (
@@ -746,46 +474,17 @@ def read_ics_events(df: DataFrame, url_col: str = "url",
     duration seconds) so the typed pd.array columns can't overflow.
     At 100 TB the downstream joins (occurrence expansion, time
     windows) key on (url, time) — this source shuffles nothing."""
-    import pandas as pd
-
     from ..extractor.icsx import parse_ics
 
-    def parse(batches):
-        for b in batches:
-            cols: dict[str, list] = {
-                "url": [], "pos": [], "uid": [], "summary": [],
-                "location": [], "start_ms": [], "end_ms": [],
-                "all_day": [], "tzid": [], "freq": [],
-                "rrule_interval": [], "rrule_count": [],
-                "until_ms": [], "status": []}
-            for url, payload in zip(b[url_col], b[payload_col]):
-                if payload is None:
-                    continue
-                for ev in parse_ics(bytes(payload)):
-                    cols["url"].append(url)
-                    for k, v in ev.items():
-                        cols[k].append(v)
-            yield pd.DataFrame({
-                "url": cols["url"],
-                "pos": pd.array(cols["pos"], dtype="int32"),
-                "uid": cols["uid"],
-                "summary": cols["summary"],
-                "location": cols["location"],
-                "start_ms": pd.array(cols["start_ms"], dtype="int64"),
-                "end_ms": pd.array(cols["end_ms"], dtype="int64"),
-                "all_day": pd.array(cols["all_day"], dtype="boolean"),
-                "tzid": cols["tzid"],
-                "freq": cols["freq"],
-                "rrule_interval": pd.array(cols["rrule_interval"],
-                                           dtype="Int32"),
-                "rrule_count": pd.array(cols["rrule_count"],
-                                        dtype="Int32"),
-                "until_ms": pd.array(cols["until_ms"], dtype="Int64"),
-                "status": cols["status"]})
+    cols = [f.split()[0] for f in ICS_EVENTS_DDL.split(", ")][1:]
 
-    return (df.select(F.col(url_col).alias(url_col),
-                      F.col(payload_col).alias(payload_col))
-            .mapInPandas(parse, ICS_EVENTS_DDL))
+    def rows_of(url, payload):
+        if payload is None:
+            return
+        for ev in parse_ics(bytes(payload)):
+            yield (url, *(ev[c] for c in cols))
+
+    return flat_map(df, [url_col, payload_col], ICS_EVENTS_DDL, rows_of)
 
 
 def read_rtf_elements(df: DataFrame, url_col: str = "url",
@@ -797,34 +496,14 @@ def read_rtf_elements(df: DataFrame, url_col: str = "url",
     legacy-office member of the per-format loader family). Non-RTF
     payloads are skipped (F5); malformed bodies degrade to fewer
     elements inside the tokenizer."""
-    import pandas as pd
-
     from ..extractor.rtfx import extract_rtf
 
-    def parse(batches):
-        for b in batches:
-            urls, paras, kinds, levels, texts = [], [], [], [], []
-            for url, payload in zip(b[url_col], b[payload_col]):
-                try:
-                    els = extract_rtf(bytes(payload))
-                except Exception:
-                    continue
-                for el in els:
-                    urls.append(url)
-                    paras.append(el.para)
-                    kinds.append(el.kind)
-                    levels.append(el.level)
-                    texts.append(el.text)
-            yield pd.DataFrame({
-                "url": urls,
-                "para": pd.array(paras, dtype="int32"),
-                "kind": kinds,
-                "level": pd.array(levels, dtype="int32"),
-                "text": texts})
+    def rows_of(url, payload):
+        for el in extract_rtf(bytes(payload)):
+            yield url, el.para, el.kind, el.level, el.text
 
-    return (df.select(F.col(url_col).alias(url_col),
-                      F.col(payload_col).alias(payload_col))
-            .mapInPandas(parse, ODT_ELEMENTS_DDL))
+    return flat_map(df, [url_col, payload_col], ODT_ELEMENTS_DDL,
+                    rows_of)
 
 
 BIB_FIELDS_DDL = ("url string, pos int, entry_type string, "
@@ -841,42 +520,17 @@ def read_bib_fields(df: DataFrame, url_col: str = "url",
     (golden-pinned, rtfx pattern). No sniff/core-dispatch branch:
     a bare ``@`` is not an unambiguous magic, so .bib payloads are
     routed by the caller, not guessed."""
-    import pandas as pd
-
     from ..extractor.bibx import extract_bib_entries
 
-    def parse(batches):
-        for b in batches:
-            urls, poss, kinds, keys, fs, vs = [], [], [], [], [], []
-            for url, payload in zip(b[url_col], b[payload_col]):
-                try:
-                    entries = extract_bib_entries(bytes(payload))
-                except Exception:
-                    continue
-                for e in entries:
-                    if not e["fields"]:
-                        urls.append(url)
-                        poss.append(e["pos"])
-                        kinds.append(e["entry_type"])
-                        keys.append(e["key"])
-                        fs.append(None)
-                        vs.append(None)
-                    for fname, val in e["fields"]:
-                        urls.append(url)
-                        poss.append(e["pos"])
-                        kinds.append(e["entry_type"])
-                        keys.append(e["key"])
-                        fs.append(fname)
-                        vs.append(val)
-            yield pd.DataFrame({
-                "url": urls,
-                "pos": pd.array(poss, dtype="int32"),
-                "entry_type": kinds, "key": keys,
-                "field": fs, "value": vs})
+    def rows_of(url, payload):
+        for e in extract_bib_entries(bytes(payload)):
+            head = (url, e["pos"], e["entry_type"], e["key"])
+            if not e["fields"]:
+                yield head + (None, None)
+            for fname, val in e["fields"]:
+                yield head + (fname, val)
 
-    return (df.select(F.col(url_col).alias(url_col),
-                      F.col(payload_col).alias(payload_col))
-            .mapInPandas(parse, BIB_FIELDS_DDL))
+    return flat_map(df, [url_col, payload_col], BIB_FIELDS_DDL, rows_of)
 
 
 FRONT_MATTER_DDL = ("url string, pos int, key string, idx int, "
@@ -892,36 +546,16 @@ def read_front_matter(df: DataFrame, url_col: str = "url",
     Per-row parse is the pure ``extractor.frontmx.parse_front_matter``
     (golden-pinned); payloads decode strict-UTF-8 then cp1252 (the
     bibx fallback)."""
-    import pandas as pd
-
     from ..extractor.bibx import _decode
     from ..extractor.frontmx import parse_front_matter
 
-    def parse(batches):
-        for b in batches:
-            urls, poss, keys, idxs, vals = [], [], [], [], []
-            for url, payload in zip(b[url_col], b[payload_col]):
-                try:
-                    rows, _ = parse_front_matter(
-                        _decode(bytes(payload)))
-                except Exception:
-                    continue
-                for pos, key, idx, val in rows:
-                    urls.append(url)
-                    poss.append(pos)
-                    keys.append(key)
-                    idxs.append(idx)
-                    vals.append(val)
-            yield pd.DataFrame({
-                "url": urls,
-                "pos": pd.array(poss, dtype="int32"),
-                "key": keys,
-                "idx": pd.array(idxs, dtype="Int32"),
-                "value": vals})
+    def rows_of(url, payload):
+        rows, _ = parse_front_matter(_decode(bytes(payload)))
+        for pos, key, idx, val in rows:
+            yield url, pos, key, idx, val
 
-    return (df.select(F.col(url_col).alias(url_col),
-                      F.col(payload_col).alias(payload_col))
-            .mapInPandas(parse, FRONT_MATTER_DDL))
+    return flat_map(df, [url_col, payload_col], FRONT_MATTER_DDL,
+                    rows_of)
 
 
 LLMS_LINKS_DDL = ("url string, pos int, section string, "
@@ -933,35 +567,15 @@ def read_llms_links(df: DataFrame, url_col: str = "url",
     """(url, llms.txt payload) rows -> one row per curated link
     (pos, section, name, href, desc). Pure parse:
     ``extractor.llmstxtx.parse_llms_txt`` (golden-pinned)."""
-    import pandas as pd
-
     from ..extractor.bibx import _decode
     from ..extractor.llmstxtx import parse_llms_txt
 
-    def parse(batches):
-        for b in batches:
-            urls, poss, secs, names, hrefs, descs = \
-                [], [], [], [], [], []
-            for url, payload in zip(b[url_col], b[payload_col]):
-                try:
-                    d = parse_llms_txt(_decode(bytes(payload)))
-                except Exception:
-                    continue
-                for pos, sec, name, href, desc in d["links"]:
-                    urls.append(url)
-                    poss.append(pos)
-                    secs.append(sec)
-                    names.append(name)
-                    hrefs.append(href)
-                    descs.append(desc)
-            yield pd.DataFrame({
-                "url": urls, "pos": pd.array(poss, dtype="int32"),
-                "section": secs, "name": names, "href": hrefs,
-                "description": descs})
+    def rows_of(url, payload):
+        d = parse_llms_txt(_decode(bytes(payload)))
+        for pos, sec, name, href, desc in d["links"]:
+            yield url, pos, sec, name, href, desc
 
-    return (df.select(F.col(url_col).alias(url_col),
-                      F.col(payload_col).alias(payload_col))
-            .mapInPandas(parse, LLMS_LINKS_DDL))
+    return flat_map(df, [url_col, payload_col], LLMS_LINKS_DDL, rows_of)
 
 
 def read_llms_files(df: DataFrame, url_col: str = "url",
@@ -970,36 +584,19 @@ def read_llms_files(df: DataFrame, url_col: str = "url",
     title, summary, n_sections, n_links, has_optional (an
     'Optional' section marks crawl-skippable links per the
     proposal)."""
-    import pandas as pd
-
     from ..extractor.bibx import _decode
     from ..extractor.llmstxtx import parse_llms_txt
 
-    def parse(batches):
-        for b in batches:
-            rows = []
-            for url, payload in zip(b[url_col], b[payload_col]):
-                try:
-                    d = parse_llms_txt(_decode(bytes(payload)))
-                except Exception:
-                    continue
-                rows.append((url, d["title"], d["summary"],
-                             len(d["sections"]), len(d["links"]),
-                             "optional" in [s.lower() for s in
-                                            d["sections"]]))
-            out = pd.DataFrame(rows, columns=[
-                "url", "title", "summary", "n_sections", "n_links",
-                "has_optional"])
-            for c in ("n_sections", "n_links"):
-                out[c] = pd.array(out[c], dtype="Int64")
-            yield out
+    def rows_of(url, payload):
+        d = parse_llms_txt(_decode(bytes(payload)))
+        yield (url, d["title"], d["summary"], len(d["sections"]),
+               len(d["links"]),
+               "optional" in [s.lower() for s in d["sections"]])
 
-    return (df.select(F.col(url_col).alias(url_col),
-                      F.col(payload_col).alias(payload_col))
-            .mapInPandas(parse, "url string, title string, "
-                                "summary string, n_sections bigint, "
-                                "n_links bigint, "
-                                "has_optional boolean"))
+    return flat_map(df, [url_col, payload_col],
+                    "url string, title string, summary string, "
+                    "n_sections bigint, n_links bigint, "
+                    "has_optional boolean", rows_of)
 
 
 CSV_RECORDS_DDL = ("url string, row int, col int, header string, "
@@ -1013,33 +610,14 @@ def read_csv_records(df: DataFrame, url_col: str = "url",
     ``extractor.csvx.extract_csv`` (golden-pinned); header cells
     become the ``header`` column (NULL for headerless files or
     ragged overflow columns)."""
-    import pandas as pd
-
     from ..extractor.csvx import extract_csv
 
-    def parse(batches):
-        for b in batches:
-            urls, rws, cls, hds, vals = [], [], [], [], []
-            for url, payload in zip(b[url_col], b[payload_col]):
-                try:
-                    d = extract_csv(bytes(payload))
-                except Exception:
-                    continue
-                for row, col, header, value in d["records"]:
-                    urls.append(url)
-                    rws.append(row)
-                    cls.append(col)
-                    hds.append(header)
-                    vals.append(value)
-            yield pd.DataFrame({
-                "url": urls,
-                "row": pd.array(rws, dtype="int32"),
-                "col": pd.array(cls, dtype="int32"),
-                "header": hds, "value": vals})
+    def rows_of(url, payload):
+        for rec in extract_csv(bytes(payload))["records"]:
+            yield (url, *rec)
 
-    return (df.select(F.col(url_col).alias(url_col),
-                      F.col(payload_col).alias(payload_col))
-            .mapInPandas(parse, CSV_RECORDS_DDL))
+    return flat_map(df, [url_col, payload_col], CSV_RECORDS_DDL,
+                    rows_of)
 
 
 def read_csv_meta(df: DataFrame, url_col: str = "url",
@@ -1047,39 +625,19 @@ def read_csv_meta(df: DataFrame, url_col: str = "url",
     """(url, payload) -> one dialect row per file: sniffed
     delimiter (tab rendered as '\\t'), header flag, data-row count
     and widest row."""
-    import pandas as pd
-
     from ..extractor.csvx import extract_csv
 
-    def parse(batches):
-        for b in batches:
-            rows = []
-            for url, payload in zip(b[url_col], b[payload_col]):
-                try:
-                    d = extract_csv(bytes(payload))
-                except Exception:
-                    continue
-                recs = d["records"]
-                n_rows = (max(r for r, _, _, _ in recs) + 1
-                          if recs else 0)
-                n_cols = (max(c for _, c, _, _ in recs) + 1
-                          if recs else 0)
-                rows.append((url,
-                             "\\t" if d["delimiter"] == "\t"
-                             else d["delimiter"],
-                             d["has_header"], n_rows, n_cols))
-            out = pd.DataFrame(rows, columns=[
-                "url", "delimiter", "has_header", "n_rows",
-                "n_cols"])
-            for c in ("n_rows", "n_cols"):
-                out[c] = pd.array(out[c], dtype="Int64")
-            yield out
+    def rows_of(url, payload):
+        d = extract_csv(bytes(payload))
+        recs = d["records"]
+        n_rows = max(r for r, _, _, _ in recs) + 1 if recs else 0
+        n_cols = max(c for _, c, _, _ in recs) + 1 if recs else 0
+        yield (url, "\\t" if d["delimiter"] == "\t" else d["delimiter"],
+               d["has_header"], n_rows, n_cols)
 
-    return (df.select(F.col(url_col).alias(url_col),
-                      F.col(payload_col).alias(payload_col))
-            .mapInPandas(parse, "url string, delimiter string, "
-                                "has_header boolean, n_rows bigint, "
-                                "n_cols bigint"))
+    return flat_map(df, [url_col, payload_col],
+                    "url string, delimiter string, has_header boolean, "
+                    "n_rows bigint, n_cols bigint", rows_of)
 
 
 XLSX_CELLS_DDL = ("url string, sheet int, sheet_name string, "
@@ -1093,39 +651,15 @@ def read_xlsx_cells(df: DataFrame, url_col: str = "url",
     schema matches so both feed the same typing profile). Pure
     parse: ``extractor.xlsxx.extract_xlsx`` (golden-pinned);
     non-workbook payloads are skipped."""
-    import pandas as pd
-
     from ..extractor.xlsxx import extract_xlsx
 
-    def parse(batches):
-        for b in batches:
-            urls, shs, nms, rws, cls, tps, vals = \
-                [], [], [], [], [], [], []
-            for url, payload in zip(b[url_col], b[payload_col]):
-                try:
-                    d = extract_xlsx(bytes(payload))
-                except Exception:
-                    continue
-                names = d["sheets"]
-                for si, row, col, ctype, value in d["cells"]:
-                    urls.append(url)
-                    shs.append(si)
-                    nms.append(names[si])
-                    rws.append(row)
-                    cls.append(col)
-                    tps.append(ctype)
-                    vals.append(value)
-            yield pd.DataFrame({
-                "url": urls,
-                "sheet": pd.array(shs, dtype="int32"),
-                "sheet_name": nms,
-                "row": pd.array(rws, dtype="int32"),
-                "col": pd.array(cls, dtype="int32"),
-                "cell_type": tps, "value": vals})
+    def rows_of(url, payload):
+        d = extract_xlsx(bytes(payload))
+        names = d["sheets"]
+        for si, row, col, ctype, value in d["cells"]:
+            yield url, si, names[si], row, col, ctype, value
 
-    return (df.select(F.col(url_col).alias(url_col),
-                      F.col(payload_col).alias(payload_col))
-            .mapInPandas(parse, XLSX_CELLS_DDL))
+    return flat_map(df, [url_col, payload_col], XLSX_CELLS_DDL, rows_of)
 
 
 def read_xlsx_sheets(df: DataFrame, url_col: str = "url",
@@ -1133,40 +667,23 @@ def read_xlsx_sheets(df: DataFrame, url_col: str = "url",
     """(url, payload) -> one row per SHEET (workbook order):
     cell count and the populated extent (max row/col + 1; 0 for an
     empty sheet)."""
-    import pandas as pd
-
     from ..extractor.xlsxx import extract_xlsx
 
-    def parse(batches):
-        for b in batches:
-            rows = []
-            for url, payload in zip(b[url_col], b[payload_col]):
-                try:
-                    d = extract_xlsx(bytes(payload))
-                except Exception:
-                    continue
-                per: dict[int, list[tuple[int, int]]] = {}
-                for si, row, col, _, _ in d["cells"]:
-                    per.setdefault(si, []).append((row, col))
-                for si, name in enumerate(d["sheets"]):
-                    rcs = per.get(si, [])
-                    rows.append((
-                        url, si, name, len(rcs),
-                        max((r for r, _ in rcs), default=-1) + 1,
-                        max((c for _, c in rcs), default=-1) + 1))
-            out = pd.DataFrame(rows, columns=[
-                "url", "sheet", "sheet_name", "n_cells", "n_rows",
-                "n_cols"])
-            out["sheet"] = pd.array(out["sheet"], dtype="Int32")
-            for c in ("n_cells", "n_rows", "n_cols"):
-                out[c] = pd.array(out[c], dtype="Int64")
-            yield out
+    def rows_of(url, payload):
+        d = extract_xlsx(bytes(payload))
+        per: dict[int, list[tuple[int, int]]] = {}
+        for si, row, col, _, _ in d["cells"]:
+            per.setdefault(si, []).append((row, col))
+        for si, name in enumerate(d["sheets"]):
+            rcs = per.get(si, [])
+            yield (url, si, name, len(rcs),
+                   max((r for r, _ in rcs), default=-1) + 1,
+                   max((c for _, c in rcs), default=-1) + 1)
 
-    return (df.select(F.col(url_col).alias(url_col),
-                      F.col(payload_col).alias(payload_col))
-            .mapInPandas(parse, "url string, sheet int, "
-                                "sheet_name string, n_cells bigint, "
-                                "n_rows bigint, n_cols bigint"))
+    return flat_map(df, [url_col, payload_col],
+                    "url string, sheet int, sheet_name string, "
+                    "n_cells bigint, n_rows bigint, n_cols bigint",
+                    rows_of)
 
 
 PO_ENTRIES_DDL = ("url string, pos int, ctxt string, msgid string, "
@@ -1183,34 +700,15 @@ def read_po_entries(df: DataFrame, url_col: str = "url",
     ``refs`` is the space-joined ``#:`` reference list ('' when
     none) — arrays stay out of the golden so both engines hash the
     same scalar."""
-    import pandas as pd
-
     from ..extractor.pox import extract_po_entries
 
-    def parse(batches):
-        for b in batches:
-            rows = []
-            for url, payload in zip(b[url_col], b[payload_col]):
-                try:
-                    entries = extract_po_entries(bytes(payload))
-                except Exception:
-                    continue
-                for e in entries:
-                    rows.append((
-                        url, e["pos"], e["ctxt"], e["msgid"],
-                        e["msgid_plural"], e["msgstr"],
-                        e["n_plurals"], e["fuzzy"], e["obsolete"],
-                        " ".join(e["refs"])))
-            out = pd.DataFrame(rows, columns=[
-                "url", "pos", "ctxt", "msgid", "msgid_plural",
-                "msgstr", "n_plurals", "fuzzy", "obsolete", "refs"])
-            for c in ("pos", "n_plurals"):
-                out[c] = pd.array(out[c], dtype="Int32")
-            yield out
+    def rows_of(url, payload):
+        for e in extract_po_entries(bytes(payload)):
+            yield (url, e["pos"], e["ctxt"], e["msgid"],
+                   e["msgid_plural"], e["msgstr"], e["n_plurals"],
+                   e["fuzzy"], e["obsolete"], " ".join(e["refs"]))
 
-    return (df.select(F.col(url_col).alias(url_col),
-                      F.col(payload_col).alias(payload_col))
-            .mapInPandas(parse, PO_ENTRIES_DDL))
+    return flat_map(df, [url_col, payload_col], PO_ENTRIES_DDL, rows_of)
 
 
 TMX_ROWS_DDL = ("url string, tu int, tuid string, pos int, "
@@ -1223,31 +721,14 @@ def read_tmx_rows(df: DataFrame, url_col: str = "url",
     header srclang denormalized onto every row (the pairing
     operator needs it and the golden stays one flat table). Pure
     parse: ``extractor.tmxx.extract_tmx`` (golden-pinned)."""
-    import pandas as pd
-
     from ..extractor.tmxx import extract_tmx
 
-    def parse(batches):
-        for b in batches:
-            rows = []
-            for url, payload in zip(b[url_col], b[payload_col]):
-                try:
-                    d = extract_tmx(bytes(payload))
-                except Exception:
-                    continue
-                for tu, tuid, pos, lang, seg in d["rows"]:
-                    rows.append((url, tu, tuid, pos, d["srclang"],
-                                 lang, seg))
-            out = pd.DataFrame(rows, columns=[
-                "url", "tu", "tuid", "pos", "srclang", "lang",
-                "seg"])
-            for c in ("tu", "pos"):
-                out[c] = pd.array(out[c], dtype="Int32")
-            yield out
+    def rows_of(url, payload):
+        d = extract_tmx(bytes(payload))
+        for tu, tuid, pos, lang, seg in d["rows"]:
+            yield url, tu, tuid, pos, d["srclang"], lang, seg
 
-    return (df.select(F.col(url_col).alias(url_col),
-                      F.col(payload_col).alias(payload_col))
-            .mapInPandas(parse, TMX_ROWS_DDL))
+    return flat_map(df, [url_col, payload_col], TMX_ROWS_DDL, rows_of)
 
 
 PDF_INFO_DDL = ("url string, title string, author string, "
@@ -1268,33 +749,15 @@ def read_pdf_outline(df: DataFrame, url_col: str = "url",
     Per-row parse is the pure-Python ``extractor.pdfx.
     extract_pdf_outline``; outline-less PDFs yield no rows (F5).
     Map-only 1->N."""
-    import pandas as pd
-
     from ..extractor.pdfx import extract_pdf_outline
 
-    def parse(batches):
-        for b in batches:
-            urls, poss, depths, titles = [], [], [], []
-            for url, payload in zip(b[url_col], b[payload_col]):
-                try:
-                    items = extract_pdf_outline(
-                        bytes(payload) if payload is not None else b"")
-                except Exception:
-                    continue
-                for pos, depth, title in items:
-                    urls.append(url)
-                    poss.append(pos)
-                    depths.append(depth)
-                    titles.append(title)
-            yield pd.DataFrame({
-                "url": urls,
-                "pos": pd.array(poss, dtype="Int32"),
-                "depth": pd.array(depths, dtype="Int32"),
-                "title": titles})
+    def rows_of(url, payload):
+        for pos, depth, title in extract_pdf_outline(
+                bytes(payload) if payload is not None else b""):
+            yield url, pos, depth, title
 
-    return (df.select(F.col(url_col).alias(url_col),
-                      F.col(payload_col).alias(payload_col))
-            .mapInPandas(parse, PDF_OUTLINE_DDL))
+    return flat_map(df, [url_col, payload_col], PDF_OUTLINE_DDL,
+                    rows_of)
 
 
 def read_pdf_info(df: DataFrame, url_col: str = "url",
@@ -1307,31 +770,15 @@ def read_pdf_info(df: DataFrame, url_col: str = "url",
     surfaces the same dictionary). PDFs without /Info yield no row
     (the extract_links zero-row contract); malformed structures
     degrade inside the extractor."""
-    import pandas as pd
-
     from ..extractor.pdfx import INFO_FIELDS, extract_pdf_info
 
-    def parse(batches):
-        for b in batches:
-            out: dict[str, list] = {"url": []}
-            out.update({f: [] for f in INFO_FIELDS})
-            for url, payload in zip(b[url_col], b[payload_col]):
-                try:
-                    info = extract_pdf_info(bytes(payload)
-                                            if payload is not None
-                                            else b"")
-                except Exception:
-                    continue
-                if info is None:
-                    continue
-                out["url"].append(url)
-                for f in INFO_FIELDS:
-                    out[f].append(info[f])
-            yield pd.DataFrame(out)
+    def rows_of(url, payload):
+        info = extract_pdf_info(
+            bytes(payload) if payload is not None else b"")
+        if info is not None:
+            yield (url, *(info[f] for f in INFO_FIELDS))
 
-    return (df.select(F.col(url_col).alias(url_col),
-                      F.col(payload_col).alias(payload_col))
-            .mapInPandas(parse, PDF_INFO_DDL))
+    return flat_map(df, [url_col, payload_col], PDF_INFO_DDL, rows_of)
 
 
 OFFICE_META_DDL = ("url string, format string, title string, "
@@ -1347,30 +794,16 @@ def read_office_meta(df: DataFrame, url_col: str = "url",
     container sibling of ``read_pdf_info``). Documents without a
     metadata part yield no row; malformed containers degrade inside
     the extractor."""
-    import pandas as pd
-
     from ..extractor.officemeta import META_FIELDS, extract_office_meta
 
-    cols = ["url", "format", *META_FIELDS]
+    def rows_of(url, payload):
+        meta = extract_office_meta(
+            bytes(payload) if payload is not None else b"")
+        if meta is not None:
+            yield (url, meta["format"], *(meta[f] for f in META_FIELDS))
 
-    def parse(batches):
-        for b in batches:
-            rows = []
-            for url, payload in zip(b[url_col], b[payload_col]):
-                try:
-                    meta = extract_office_meta(
-                        bytes(payload) if payload is not None else b"")
-                except Exception:
-                    continue
-                if meta is None:
-                    continue
-                rows.append((url, meta["format"],
-                             *(meta[f] for f in META_FIELDS)))
-            yield pd.DataFrame(rows, columns=cols)
-
-    return (df.select(F.col(url_col).alias(url_col),
-                      F.col(payload_col).alias(payload_col))
-            .mapInPandas(parse, OFFICE_META_DDL))
+    return flat_map(df, [url_col, payload_col], OFFICE_META_DDL,
+                    rows_of)
 
 
 EPUB_CHAPTERS_DDL = ("url string, chapter int, href string, "
@@ -1387,32 +820,14 @@ def read_epub_chapters(df: DataFrame, url_col: str = "url",
     ``unstructured_chunker.py:79-91``). Non-zip payloads are skipped
     (F5); malformed inner layers degrade inside the extractor.
     """
-    import pandas as pd
-
     from ..extractor.epubx import extract_epub
 
-    def parse(batches):
-        for b in batches:
-            urls, chapters, hrefs, titles, texts = [], [], [], [], []
-            for url, payload in zip(b[url_col], b[payload_col]):
-                try:
-                    chs = extract_epub(bytes(payload))
-                except Exception:
-                    continue
-                for ch in chs:
-                    urls.append(url)
-                    chapters.append(ch.idx)
-                    hrefs.append(ch.href)
-                    titles.append(ch.title)
-                    texts.append(ch.text)
-            yield pd.DataFrame({
-                "url": urls,
-                "chapter": pd.array(chapters, dtype="int32"),
-                "href": hrefs, "title": titles, "text": texts})
+    def rows_of(url, payload):
+        for ch in extract_epub(bytes(payload)):
+            yield url, ch.idx, ch.href, ch.title, ch.text
 
-    return (df.select(F.col(url_col).alias(url_col),
-                      F.col(payload_col).alias(payload_col))
-            .mapInPandas(parse, EPUB_CHAPTERS_DDL))
+    return flat_map(df, [url_col, payload_col], EPUB_CHAPTERS_DDL,
+                    rows_of)
 
 
 def read_warc_documents(spark: SparkSession, path: str) -> DataFrame:
@@ -1429,27 +844,14 @@ def read_warc_documents(spark: SparkSession, path: str) -> DataFrame:
     production CC; size executors or split shards accordingly).
     Malformed/truncated shards degrade to fewer rows (F5 contract).
     """
-    import pandas as pd
-
     from ..extractor.warcx import parse_warc
 
-    def parse(batches):
-        for b in batches:
-            urls, tss, bodies = [], [], []
-            for blob in b["content"]:
-                for rec in parse_warc(bytes(blob)):
-                    urls.append(rec["url"])
-                    tss.append(rec["warc_ts"])
-                    bodies.append(rec["body"])
-            yield pd.DataFrame({
-                "url": urls, "warc_ts": tss, "html": bodies,
-                "text": pd.array([None] * len(urls), dtype=object),
-                "lang": pd.array([None] * len(urls), dtype=object)})
+    def rows_of(blob):
+        for rec in parse_warc(bytes(blob)):
+            yield rec["url"], rec["warc_ts"], rec["body"], None, None
 
-    return (spark.read.format("binaryFile")
-            .load(path)
-            .select("content")
-            .mapInPandas(parse, DOCUMENTS_DDL))
+    return flat_map(spark.read.format("binaryFile").load(path),
+                    ["content"], DOCUMENTS_DDL, rows_of)
 
 
 WARC_CAPTURES_DDL = ("url string, warc_ts timestamp, status int, "
@@ -1483,34 +885,18 @@ def warc_captures_from_blobs(blobs: DataFrame) -> DataFrame:
     pass as ``read_warc_captures`` minus the binaryFile scan (for
     shards that arrive via another source, e.g. ranged reads or
     fixtures). ``blobs`` needs a ``content binary`` column."""
-    import pandas as pd
-
     from ..extractor.sniff import sniff_kind
     from ..extractor.warcx import parse_warc
 
-    def parse(batches):
-        for b in batches:
-            rows = []
-            for blob in b["content"]:
-                for rec in parse_warc(bytes(blob)):
-                    rows.append((rec["url"], rec["warc_ts"],
-                                 rec["status"], rec["content_type"],
-                                 rec["x_robots"], rec["location"],
-                                 rec["content_encoding"],
-                                 rec["decoded"],
-                                 sniff_kind(rec["body"]),
-                                 len(rec["body"])))
-            df = pd.DataFrame(
-                rows, columns=["url", "warc_ts", "status",
-                               "content_type", "x_robots",
-                               "location", "content_encoding",
-                               "decoded", "sniffed_kind", "n_bytes"])
-            df["status"] = pd.array(df["status"], dtype="Int32")
-            df["n_bytes"] = pd.array(df["n_bytes"], dtype="Int64")
-            yield df
+    def rows_of(blob):
+        for rec in parse_warc(bytes(blob)):
+            yield (rec["url"], rec["warc_ts"], rec["status"],
+                   rec["content_type"], rec["x_robots"],
+                   rec["location"], rec["content_encoding"],
+                   rec["decoded"], sniff_kind(rec["body"]),
+                   len(rec["body"]))
 
-    return blobs.select("content").mapInPandas(
-        parse, WARC_CAPTURES_DDL)
+    return flat_map(blobs, ["content"], WARC_CAPTURES_DDL, rows_of)
 
 
 def read_wet_documents(spark: SparkSession, path: str) -> DataFrame:
@@ -1524,28 +910,14 @@ def read_wet_documents(spark: SparkSession, path: str) -> DataFrame:
     binaryFile parallelism, shard bytes never shuffle, malformed
     records degrade to fewer rows (F5).
     """
-    import pandas as pd
-
     from ..extractor.warcx import parse_wet
 
-    def parse(batches):
-        for b in batches:
-            urls, tss, texts = [], [], []
-            for blob in b["content"]:
-                for rec in parse_wet(bytes(blob)):
-                    urls.append(rec["url"])
-                    tss.append(rec["warc_ts"])
-                    texts.append(rec["text"])
-            yield pd.DataFrame({
-                "url": urls, "warc_ts": tss,
-                "html": pd.array([None] * len(urls), dtype=object),
-                "text": texts,
-                "lang": pd.array([None] * len(urls), dtype=object)})
+    def rows_of(blob):
+        for rec in parse_wet(bytes(blob)):
+            yield rec["url"], rec["warc_ts"], None, rec["text"], None
 
-    return (spark.read.format("binaryFile")
-            .load(path)
-            .select("content")
-            .mapInPandas(parse, DOCUMENTS_DDL))
+    return flat_map(spark.read.format("binaryFile").load(path),
+                    ["content"], DOCUMENTS_DDL, rows_of)
 
 
 WAT_LINKS_DDL = ("url string, warc_ts timestamp, title string, "
@@ -1569,31 +941,18 @@ def read_wat_links(spark: SparkSession, path: str) -> DataFrame:
     binaryFile parallelism, shard bytes never shuffle, malformed
     envelopes degrade to titleless/linkless rows (F5).
     """
-    import pandas as pd
-
     from ..extractor.warcx import parse_wat
 
-    def parse(batches):
-        cols = ("url", "warc_ts", "title", "link_pos", "path", "href",
-                "anchor")
-        for b in batches:
-            rows = []
-            for blob in b["content"]:
-                for rec in parse_wat(bytes(blob)):
-                    if rec["links"]:
-                        for i, lk in enumerate(rec["links"]):
-                            rows.append((rec["url"], rec["warc_ts"],
-                                         rec["title"], i, lk["path"],
-                                         lk["href"], lk["anchor"]))
-                    else:
-                        rows.append((rec["url"], rec["warc_ts"],
-                                     rec["title"], -1, None, None, None))
-            yield pd.DataFrame(rows, columns=cols)
+    def rows_of(blob):
+        for rec in parse_wat(bytes(blob)):
+            head = (rec["url"], rec["warc_ts"], rec["title"])
+            if not rec["links"]:
+                yield head + (-1, None, None, None)
+            for i, lk in enumerate(rec["links"]):
+                yield head + (i, lk["path"], lk["href"], lk["anchor"])
 
-    return (spark.read.format("binaryFile")
-            .load(path)
-            .select("content")
-            .mapInPandas(parse, WAT_LINKS_DDL))
+    return flat_map(spark.read.format("binaryFile").load(path),
+                    ["content"], WAT_LINKS_DDL, rows_of)
 
 
 CDX_DDL = ("urlkey string, ts timestamp, url string, mime string, "
@@ -1616,26 +975,16 @@ def read_cdx(spark: SparkSession, path: str) -> DataFrame:
     binaryFile parallelism, shard bytes never shuffle, malformed
     lines degrade to fewer rows (F5).
     """
-    import pandas as pd
-
     from ..extractor.cdxx import parse_cdxj
 
-    cols = ("urlkey", "ts", "url", "mime", "status", "digest",
-            "length", "offset", "filename")
+    cols = [f.split()[0] for f in CDX_DDL.split(", ")]
 
-    def parse(batches):
-        for b in batches:
-            rows = [tuple(rec[c] for c in cols)
-                    for blob in b["content"]
-                    for rec in parse_cdxj(bytes(blob))]
-            df = pd.DataFrame(rows, columns=cols)
-            df["status"] = df["status"].astype("Int32")
-            yield df
+    def rows_of(blob):
+        for rec in parse_cdxj(bytes(blob)):
+            yield tuple(rec[c] for c in cols)
 
-    return (spark.read.format("binaryFile")
-            .load(path)
-            .select("content")
-            .mapInPandas(parse, CDX_DDL))
+    return flat_map(spark.read.format("binaryFile").load(path),
+                    ["content"], CDX_DDL, rows_of)
 
 
 WARC_MEMBER_DDL = ("url string, warc_ts timestamp, status int, "
@@ -1791,27 +1140,14 @@ def arc_documents_from_blobs(blobs: DataFrame) -> DataFrame:
     records (dns:, filedesc:) are skipped; ``text``/``lang`` stay
     null. Same scale shape as read_warc_documents: shard bytes never
     leave the task that scanned them."""
-    import pandas as pd
-
     from ..extractor.warcx import parse_arc
 
-    def parse(batches):
-        for b in batches:
-            urls, tss, bodies = [], [], []
-            for blob in b["content"]:
-                for rec in parse_arc(bytes(blob)):
-                    if not rec["url"].startswith(("http://",
-                                                  "https://")):
-                        continue
-                    urls.append(rec["url"])
-                    tss.append(rec["warc_ts"])
-                    bodies.append(rec["body"])
-            yield pd.DataFrame({
-                "url": urls, "warc_ts": tss, "html": bodies,
-                "text": pd.array([None] * len(urls), dtype=object),
-                "lang": pd.array([None] * len(urls), dtype=object)})
+    def rows_of(blob):
+        for rec in parse_arc(bytes(blob)):
+            if rec["url"].startswith(("http://", "https://")):
+                yield rec["url"], rec["warc_ts"], rec["body"], None, None
 
-    return blobs.select("content").mapInPandas(parse, DOCUMENTS_DDL)
+    return flat_map(blobs, ["content"], DOCUMENTS_DDL, rows_of)
 
 
 def read_arc_documents(spark: SparkSession, path: str) -> DataFrame:
@@ -1830,26 +1166,18 @@ def sitemap_media_from_blobs(blobs: DataFrame) -> DataFrame:
     (extractor.feedx.parse_sitemap_media is the Spark-free oracle).
     Map-only; shard bytes never leave the scanning task; the output
     joins the fetch frontier on loc."""
-    import pandas as pd
-
     from ..extractor.feedx import parse_sitemap_media
 
-    def parse(batches):
-        cols = ("page_loc", "pos", "kind", "loc", "thumbnail_loc",
-                "title", "description", "duration_s")
-        for b in batches:
-            rows = []
-            for blob in b["content"]:
-                for r in parse_sitemap_media(bytes(blob)):
-                    rows.append(tuple(r[c] for c in cols))
-            out = pd.DataFrame(rows, columns=cols)
-            out["duration_s"] = out["duration_s"].astype("Int32")
-            yield out
+    ddl = ("page_loc string, pos int, kind string, loc string, "
+           "thumbnail_loc string, title string, description string, "
+           "duration_s int")
+    cols = [f.split()[0] for f in ddl.split(", ")]
 
-    return blobs.select("content").mapInPandas(
-        parse, "page_loc string, pos int, kind string, loc string, "
-               "thumbnail_loc string, title string, "
-               "description string, duration_s int")
+    def rows_of(blob):
+        for r in parse_sitemap_media(bytes(blob)):
+            yield tuple(r[c] for c in cols)
+
+    return flat_map(blobs, ["content"], ddl, rows_of)
 
 
 def read_sitemap_media(spark: SparkSession, path: str) -> DataFrame:
@@ -1876,41 +1204,23 @@ def hls_rows_from_blobs(blobs: DataFrame) -> DataFrame:
     the fetch frontier on uri."""
     from urllib.parse import urljoin
 
-    import pandas as pd
-
     from ..extractor.hlsx import parse_m3u8
 
-    cols = [f.split()[0] for f in HLS_ROWS_DDL.split(", ")]
+    def rows_of(url, blob):
+        kind, rs = parse_m3u8(bytes(blob) if blob is not None else b"")
+        for r in rs:
+            uri = urljoin(url, r[2]) if url else r[2]
+            if r[0] == "variant":
+                yield (url, kind, r[1], "variant", uri, r[3], r[4],
+                       r[5], r[6], None, None, None, None, None)
+            elif r[0] == "media":
+                yield (url, kind, r[1], "media", uri, None, None, None,
+                       None, None, r[3], r[4], r[5], None)
+            else:
+                yield (url, kind, r[1], "segment", uri, None, None,
+                       None, None, r[3], None, None, None, r[4])
 
-    def parse(batches):
-        for b in batches:
-            rows = []
-            for url, blob in zip(b["url"], b["content"]):
-                kind, rs = parse_m3u8(bytes(blob)
-                                      if blob is not None else b"")
-                for r in rs:
-                    uri = urljoin(url, r[2]) if url else r[2]
-                    if r[0] == "variant":
-                        rows.append((url, kind, r[1], "variant", uri,
-                                     r[3], r[4], r[5], r[6],
-                                     None, None, None, None, None))
-                    elif r[0] == "media":
-                        rows.append((url, kind, r[1], "media", uri,
-                                     None, None, None, None, None,
-                                     r[3], r[4], r[5], None))
-                    else:
-                        rows.append((url, kind, r[1], "segment", uri,
-                                     None, None, None, None, r[3],
-                                     None, None, None, r[4]))
-            out = pd.DataFrame(rows, columns=cols)
-            for c, t in (("pos", "Int32"), ("bandwidth", "Int64"),
-                         ("width", "Int32"), ("height", "Int32"),
-                         ("duration_ms", "Int64")):
-                out[c] = out[c].astype(t)
-            yield out
-
-    return blobs.select("url", "content").mapInPandas(
-        parse, HLS_ROWS_DDL)
+    return flat_map(blobs, ["url", "content"], HLS_ROWS_DDL, rows_of)
 
 
 def hls_summary(rows: DataFrame) -> DataFrame:
@@ -1953,38 +1263,18 @@ def mpd_rows_from_blobs(blobs: DataFrame) -> DataFrame:
     KB-scale manifests."""
     from urllib.parse import urljoin
 
-    import pandas as pd
-
     from ..extractor.dashx import parse_mpd
 
-    cols = [f.split()[0] for f in MPD_ROWS_DDL.split(", ")]
+    def rows_of(url, blob):
+        meta, rs = parse_mpd(bytes(blob) if blob is not None else b"")
+        for r in rs:
+            base = urljoin(url or "", r[11] or "")
+            init = urljoin(base, r[12]) if r[12] else None
+            media = urljoin(base, r[13]) if r[13] else None
+            yield (url, meta["type"], meta["duration_ms"], *r[:11], base,
+                   init, media, r[14], r[15])
 
-    def parse(batches):
-        for b in batches:
-            rows = []
-            for url, blob in zip(b["url"], b["content"]):
-                meta, rs = parse_mpd(bytes(blob)
-                                     if blob is not None else b"")
-                for r in rs:
-                    base = urljoin(url or "", r[11] or "")
-                    init = urljoin(base, r[12]) if r[12] else None
-                    media = urljoin(base, r[13]) if r[13] else None
-                    rows.append((url, meta["type"],
-                                 meta["duration_ms"], *r[:11], base,
-                                 init, media, r[14], r[15]))
-            out = pd.DataFrame(rows, columns=cols)
-            for c, t in (("pos", "Int32"), ("period", "Int32"),
-                         ("adaptation", "Int32"),
-                         ("mpd_duration_ms", "Int64"),
-                         ("bandwidth", "Int64"), ("width", "Int32"),
-                         ("height", "Int32"),
-                         ("seg_duration_ms", "Int64"),
-                         ("start_number", "Int64")):
-                out[c] = out[c].astype(t)
-            yield out
-
-    return blobs.select("url", "content").mapInPandas(
-        parse, MPD_ROWS_DDL)
+    return flat_map(blobs, ["url", "content"], MPD_ROWS_DDL, rows_of)
 
 
 def dash_segment_plan(rows: DataFrame) -> DataFrame:
@@ -2031,26 +1321,16 @@ def feed_enclosures_from_blobs(blobs: DataFrame) -> DataFrame:
     (extractor.feedx.parse_feed_enclosures is the Spark-free oracle).
     Map-only; the rows join the fetch frontier on url and the
     audio-budget planner on duration_ms/length_bytes."""
-    import pandas as pd
-
     from ..extractor.feedx import parse_feed_enclosures
 
     cols = [f.split()[0] for f in ENCLOSURE_DDL.split(", ")]
 
-    def parse(batches):
-        for b in batches:
-            rows = []
-            for blob in b["content"]:
-                for r in parse_feed_enclosures(
-                        bytes(blob) if blob is not None else b""):
-                    rows.append(tuple(r[c] for c in cols))
-            out = pd.DataFrame(rows, columns=cols)
-            out["pos"] = out["pos"].astype("Int32")
-            out["length_bytes"] = out["length_bytes"].astype("Int64")
-            out["duration_ms"] = out["duration_ms"].astype("Int64")
-            yield out
+    def rows_of(blob):
+        for r in parse_feed_enclosures(
+                bytes(blob) if blob is not None else b""):
+            yield tuple(r[c] for c in cols)
 
-    return blobs.select("content").mapInPandas(parse, ENCLOSURE_DDL)
+    return flat_map(blobs, ["content"], ENCLOSURE_DDL, rows_of)
 
 
 def media_fetch_frontier(parts: list[tuple[str, DataFrame]]
@@ -2094,33 +1374,17 @@ def read_mhtml_resources(df: DataFrame, url_col: str = "url",
     the archive, the WACZ pattern). Pure parse:
     ``extractor.mhtmlx.parse_mhtml`` (golden-pinned); non-MHTML
     payloads yield zero rows. Map-only."""
-    import pandas as pd
-
     from ..extractor.mhtmlx import parse_mhtml
 
-    def parse(batches):
-        for b in batches:
-            rows = []
-            for url, payload in zip(b[url_col], b[payload_col]):
-                d = parse_mhtml(bytes(payload)
-                                if payload is not None else None)
-                for p in d["parts"]:
-                    size = min(p["size"], 2**31 - 1)  # Int32 clamp
-                    rows.append((url, d["url"], p["pos"],
-                                 p["content_type"],
-                                 p["content_location"],
-                                 p["content_id"],
-                                 p["pos"] == d["root_pos"], size))
-            out = pd.DataFrame(rows, columns=[
-                "url", "snapshot_url", "pos", "content_type",
-                "content_location", "content_id", "is_root", "size"])
-            for c in ("pos", "size"):
-                out[c] = pd.array(out[c], dtype="Int32")
-            yield out
+    def rows_of(url, payload):
+        d = parse_mhtml(bytes(payload) if payload is not None else None)
+        for p in d["parts"]:
+            size = min(p["size"], 2**31 - 1)  # Int32 clamp
+            yield (url, d["url"], p["pos"], p["content_type"],
+                   p["content_location"], p["content_id"],
+                   p["pos"] == d["root_pos"], size)
 
-    return (df.select(F.col(url_col).alias(url_col),
-                      F.col(payload_col).alias(payload_col))
-            .mapInPandas(parse, MHTML_RES_DDL))
+    return flat_map(df, [url_col, payload_col], MHTML_RES_DDL, rows_of)
 
 
 def read_mhtml_pages(df: DataFrame, url_col: str = "url",
@@ -2129,27 +1393,17 @@ def read_mhtml_pages(df: DataFrame, url_col: str = "url",
     part through the SAME htmlx main-content pipeline every other
     format uses (mailx precedent). Non-MHTML or non-HTML-root
     payloads yield zero rows. Map-only."""
-    import pandas as pd
-
     from ..extractor.htmlx import extract_html
     from ..extractor.mhtmlx import root_html
 
-    def parse(batches):
-        for b in batches:
-            rows = []
-            for url, payload in zip(b[url_col], b[payload_col]):
-                snap, html = root_html(
-                    bytes(payload) if payload is not None else None)
-                if not html:
-                    continue
-                text, _spans, _score, title = extract_html(html)
-                rows.append((url, snap, title, text))
-            yield pd.DataFrame(rows, columns=[
-                "url", "snapshot_url", "title", "text"])
+    def rows_of(url, payload):
+        snap, html = root_html(
+            bytes(payload) if payload is not None else None)
+        if html:
+            text, _spans, _score, title = extract_html(html)
+            yield url, snap, title, text
 
-    return (df.select(F.col(url_col).alias(url_col),
-                      F.col(payload_col).alias(payload_col))
-            .mapInPandas(parse, MHTML_PAGE_DDL))
+    return flat_map(df, [url_col, payload_col], MHTML_PAGE_DDL, rows_of)
 
 
 HAR_ENTRY_DDL = (
@@ -2169,68 +1423,32 @@ def read_har_entries(df: DataFrame, url_col: str = "url",
     """(url, HAR payload) -> one row per log entry (index-only
     capture view, the WACZ pattern). Pure parse:
     ``extractor.harx.parse_har`` (golden-pinned). Map-only."""
-    import pandas as pd
-
     from ..extractor.harx import parse_har
 
-    def parse(batches):
-        for b in batches:
-            rows = []
-            for url, payload in zip(b[url_col], b[payload_col]):
-                d = parse_har(bytes(payload)
-                              if payload is not None else None)
-                for e in d["entries"]:
-                    rows.append((url, e["pos"], e["pageref"],
-                                 e["started"], e["method"],
-                                 e["request_url"], e["status"],
-                                 e["status_text"], e["mime"],
-                                 e["body_size"], e["content_size"],
-                                 e["time_ms"], e["server_ip"],
-                                 e["http_version"]))
-            out = pd.DataFrame(rows, columns=[
-                "url", "pos", "pageref", "started", "method",
-                "request_url", "status", "status_text", "mime",
-                "body_size", "content_size", "time_ms", "server_ip",
-                "http_version"])
-            for c in ("pos", "status", "body_size", "content_size"):
-                out[c] = pd.array(out[c], dtype="Int32")
-            out["time_ms"] = pd.array(out["time_ms"],
-                                      dtype="float64")
-            yield out
+    def rows_of(url, payload):
+        d = parse_har(bytes(payload) if payload is not None else None)
+        for e in d["entries"]:
+            yield (url, e["pos"], e["pageref"], e["started"],
+                   e["method"], e["request_url"], e["status"],
+                   e["status_text"], e["mime"], e["body_size"],
+                   e["content_size"], e["time_ms"], e["server_ip"],
+                   e["http_version"])
 
-    return (df.select(F.col(url_col).alias(url_col),
-                      F.col(payload_col).alias(payload_col))
-            .mapInPandas(parse, HAR_ENTRY_DDL))
+    return flat_map(df, [url_col, payload_col], HAR_ENTRY_DDL, rows_of)
 
 
 def read_har_pages(df: DataFrame, url_col: str = "url",
                    payload_col: str = "payload") -> DataFrame:
     """(url, HAR payload) -> one row per log page. Map-only."""
-    import pandas as pd
-
     from ..extractor.harx import parse_har
 
-    def parse(batches):
-        for b in batches:
-            rows = []
-            for url, payload in zip(b[url_col], b[payload_col]):
-                d = parse_har(bytes(payload)
-                              if payload is not None else None)
-                for p in d["pages"]:
-                    rows.append((url, p["page_id"], p["started"],
-                                 p["title"],
-                                 p["on_content_load_ms"],
-                                 p["on_load_ms"]))
-            out = pd.DataFrame(rows, columns=[
-                "url", "page_id", "started", "title",
-                "on_content_load_ms", "on_load_ms"])
-            for c in ("on_content_load_ms", "on_load_ms"):
-                out[c] = pd.array(out[c], dtype="float64")
-            yield out
+    def rows_of(url, payload):
+        d = parse_har(bytes(payload) if payload is not None else None)
+        for p in d["pages"]:
+            yield (url, p["page_id"], p["started"], p["title"],
+                   p["on_content_load_ms"], p["on_load_ms"])
 
-    return (df.select(F.col(url_col).alias(url_col),
-                      F.col(payload_col).alias(payload_col))
-            .mapInPandas(parse, HAR_PAGE_DDL))
+    return flat_map(df, [url_col, payload_col], HAR_PAGE_DDL, rows_of)
 
 
 VCARD_PROPS_DDL = ("url string, card int, pos int, grp string, "
@@ -2243,30 +1461,16 @@ def read_vcard_props(df: DataFrame, url_col: str = "url",
     source order (flat model, the bibtex_fields pattern). Pure
     parse: ``extractor.vcardx.parse_vcards`` (golden-pinned).
     Map-only."""
-    import pandas as pd
-
     from ..extractor.vcardx import parse_vcards
 
-    def parse(batches):
-        for b in batches:
-            rows = []
-            for url, payload in zip(b[url_col], b[payload_col]):
-                cards = parse_vcards(
-                    bytes(payload) if payload is not None else None)
-                for c in cards:
-                    for pos, grp, name, types, value in c["props"]:
-                        rows.append((url, c["idx"], pos, grp, name,
-                                     types, value))
-            out = pd.DataFrame(rows, columns=[
-                "url", "card", "pos", "grp", "name", "types",
-                "value"])
-            for c in ("card", "pos"):
-                out[c] = pd.array(out[c], dtype="Int32")
-            yield out
+    def rows_of(url, payload):
+        for c in parse_vcards(
+                bytes(payload) if payload is not None else None):
+            for pos, grp, name, types, value in c["props"]:
+                yield url, c["idx"], pos, grp, name, types, value
 
-    return (df.select(F.col(url_col).alias(url_col),
-                      F.col(payload_col).alias(payload_col))
-            .mapInPandas(parse, VCARD_PROPS_DDL))
+    return flat_map(df, [url_col, payload_col], VCARD_PROPS_DDL,
+                    rows_of)
 
 
 GPX_POINTS_DDL = (
@@ -2281,33 +1485,15 @@ def read_gpx_points(df: DataFrame, url_col: str = "url",
     document order. Pure parse: ``extractor.gpxx.parse_gpx``
     (golden-pinned; coordinates range-gated, epochs integer
     days-from-civil). Map-only."""
-    import pandas as pd
-
     from ..extractor.gpxx import parse_gpx
 
-    def parse(batches):
-        for b in batches:
-            rows = []
-            for url, payload in zip(b[url_col], b[payload_col]):
-                for r in parse_gpx(bytes(payload)
-                                   if payload is not None else None):
-                    rows.append((url, r["kind"], r["trk"],
-                                 r["trk_name"], r["seg"], r["pt"],
-                                 r["name"], r["lat"], r["lon"],
-                                 r["ele"], r["time"], r["epoch"]))
-            out = pd.DataFrame(rows, columns=[
-                "url", "kind", "trk", "trk_name", "seg", "pt",
-                "name", "lat", "lon", "ele", "time", "epoch"])
-            for c in ("trk", "seg", "pt"):
-                out[c] = pd.array(out[c], dtype="Int32")
-            out["epoch"] = pd.array(out["epoch"], dtype="Int64")
-            for c in ("lat", "lon", "ele"):
-                out[c] = pd.array(out[c], dtype="float64")
-            yield out
+    def rows_of(url, payload):
+        for r in parse_gpx(bytes(payload) if payload is not None else None):
+            yield (url, r["kind"], r["trk"], r["trk_name"], r["seg"],
+                   r["pt"], r["name"], r["lat"], r["lon"], r["ele"],
+                   r["time"], r["epoch"])
 
-    return (df.select(F.col(url_col).alias(url_col),
-                      F.col(payload_col).alias(payload_col))
-            .mapInPandas(parse, GPX_POINTS_DDL))
+    return flat_map(df, [url_col, payload_col], GPX_POINTS_DDL, rows_of)
 
 
 BOOKMARK_ROWS_DDL = (
@@ -2322,32 +1508,16 @@ def read_bookmarks(df: DataFrame, url_col: str = "url",
     document order with its "/"-joined folder path. Pure parse:
     ``extractor.bookmarkx.parse_bookmarks`` (golden-pinned).
     Map-only."""
-    import pandas as pd
-
     from ..extractor.bookmarkx import parse_bookmarks
 
-    def parse(batches):
-        for b in batches:
-            rows = []
-            for url, payload in zip(b[url_col], b[payload_col]):
-                for r in parse_bookmarks(
-                        bytes(payload)
-                        if payload is not None else None):
-                    rows.append((url, r["pos"], r["folder"],
-                                 r["href"], r["title"],
-                                 r["add_date"], r["last_modified"],
-                                 r["tags"]))
-            out = pd.DataFrame(rows, columns=[
-                "url", "pos", "folder", "href", "title", "add_date",
-                "last_modified", "tags"])
-            out["pos"] = pd.array(out["pos"], dtype="Int32")
-            for c in ("add_date", "last_modified"):
-                out[c] = pd.array(out[c], dtype="Int64")
-            yield out
+    def rows_of(url, payload):
+        for r in parse_bookmarks(
+                bytes(payload) if payload is not None else None):
+            yield (url, r["pos"], r["folder"], r["href"], r["title"],
+                   r["add_date"], r["last_modified"], r["tags"])
 
-    return (df.select(F.col(url_col).alias(url_col),
-                      F.col(payload_col).alias(payload_col))
-            .mapInPandas(parse, BOOKMARK_ROWS_DDL))
+    return flat_map(df, [url_col, payload_col], BOOKMARK_ROWS_DDL,
+                    rows_of)
 
 
 WEBMANIFEST_DDL = (
@@ -2363,62 +1533,33 @@ def read_webmanifests(df: DataFrame, url_col: str = "url",
                       payload_col: str = "payload") -> DataFrame:
     """(url, manifest.json payload) -> one row per valid manifest.
     Pure parse: ``extractor.manifestx.parse_manifest``. Map-only."""
-    import pandas as pd
-
     from ..extractor.manifestx import parse_manifest
 
-    def parse(batches):
-        for b in batches:
-            rows = []
-            for url, payload in zip(b[url_col], b[payload_col]):
-                d = parse_manifest(
-                    bytes(payload) if payload is not None else None)
-                if d is None:
-                    continue
-                rows.append((url, d["name"], d["short_name"],
-                             d["start_url"], d["scope"],
-                             d["display"], d["theme_color"],
-                             d["background_color"], d["lang"],
-                             len(d["icons"])))
-            out = pd.DataFrame(rows, columns=[
-                "url", "name", "short_name", "start_url", "scope",
-                "display", "theme_color", "background_color",
-                "lang", "n_icons"])
-            out["n_icons"] = pd.array(out["n_icons"], dtype="Int32")
-            yield out
+    def rows_of(url, payload):
+        d = parse_manifest(bytes(payload) if payload is not None else None)
+        if d is not None:
+            yield (url, d["name"], d["short_name"], d["start_url"],
+                   d["scope"], d["display"], d["theme_color"],
+                   d["background_color"], d["lang"], len(d["icons"]))
 
-    return (df.select(F.col(url_col).alias(url_col),
-                      F.col(payload_col).alias(payload_col))
-            .mapInPandas(parse, WEBMANIFEST_DDL))
+    return flat_map(df, [url_col, payload_col], WEBMANIFEST_DDL,
+                    rows_of)
 
 
 def read_manifest_icons(df: DataFrame, url_col: str = "url",
                         payload_col: str = "payload") -> DataFrame:
     """(url, manifest.json payload) -> one row per icon entry with
     a string src. Map-only."""
-    import pandas as pd
-
     from ..extractor.manifestx import parse_manifest
 
-    def parse(batches):
-        for b in batches:
-            rows = []
-            for url, payload in zip(b[url_col], b[payload_col]):
-                d = parse_manifest(
-                    bytes(payload) if payload is not None else None)
-                if d is None:
-                    continue
-                for pos, src, sizes, typ, purpose in d["icons"]:
-                    rows.append((url, pos, src, sizes, typ,
-                                 purpose))
-            out = pd.DataFrame(rows, columns=[
-                "url", "pos", "src", "sizes", "type", "purpose"])
-            out["pos"] = pd.array(out["pos"], dtype="Int32")
-            yield out
+    def rows_of(url, payload):
+        d = parse_manifest(bytes(payload) if payload is not None else None)
+        if d is not None:
+            for pos, src, sizes, typ, purpose in d["icons"]:
+                yield url, pos, src, sizes, typ, purpose
 
-    return (df.select(F.col(url_col).alias(url_col),
-                      F.col(payload_col).alias(payload_col))
-            .mapInPandas(parse, MANIFEST_ICONS_DDL))
+    return flat_map(df, [url_col, payload_col], MANIFEST_ICONS_DDL,
+                    rows_of)
 
 
 PARQUET_CHUNKS_DDL = (
@@ -2437,47 +1578,18 @@ def read_parquet_footers(df: DataFrame, file_col: str = "file",
     from-scratch Thrift compact). At 100 TB this is the layout
     auditor: only footers travel, never data pages (pair with
     ranged reads of the last N KB). Map-only."""
-    import pandas as pd
-
     from ..extractor.parquetx import parse_footer
 
-    def parse(batches):
-        for b in batches:
-            rows = []
-            for fname, payload in zip(b[file_col], b[payload_col]):
-                d = parse_footer(bytes(payload)
-                                 if payload is not None else None)
-                if d is None:
-                    continue
-                for c in d["chunks"]:
-                    rows.append((
-                        fname, c["row_group_id"],
-                        c["row_group_num_rows"], c["column_id"],
-                        c["file_offset"], c["num_values"],
-                        c["path_in_schema"], c["type"],
-                        c["compression"], c["encodings"],
-                        c["data_page_offset"],
-                        c["dictionary_page_offset"],
-                        c["total_compressed_size"],
-                        c["total_uncompressed_size"]))
-            out = pd.DataFrame(rows, columns=[
-                "file", "row_group_id", "row_group_num_rows",
-                "column_id", "file_offset", "num_values",
-                "path_in_schema", "type", "compression",
-                "encodings", "data_page_offset",
-                "dictionary_page_offset", "total_compressed_size",
-                "total_uncompressed_size"])
-            for c in ("row_group_id", "row_group_num_rows",
-                      "column_id", "file_offset", "num_values",
-                      "data_page_offset", "dictionary_page_offset",
-                      "total_compressed_size",
-                      "total_uncompressed_size"):
-                out[c] = pd.array(out[c], dtype="Int64")
-            yield out
+    cols = [f.split()[0] for f in PARQUET_CHUNKS_DDL.split(", ")][1:]
 
-    return (df.select(F.col(file_col).alias(file_col),
-                      F.col(payload_col).alias(payload_col))
-            .mapInPandas(parse, PARQUET_CHUNKS_DDL))
+    def rows_of(fname, payload):
+        d = parse_footer(bytes(payload) if payload is not None else None)
+        if d is not None:
+            for c in d["chunks"]:
+                yield (fname, *(c[k] for k in cols))
+
+    return flat_map(df, [file_col, payload_col], PARQUET_CHUNKS_DDL,
+                    rows_of)
 
 
 CSS_REFS_DDL = ("url string, pos int, kind string, ref string, "
@@ -2489,27 +1601,14 @@ def read_css_refs(df: DataFrame, url_col: str = "url",
     """(url, stylesheet payload) -> one row per @import/url()
     reference with its syntactic kind. Pure parse:
     ``extractor.cssx.parse_css_refs`` (golden-pinned). Map-only."""
-    import pandas as pd
-
     from ..extractor.cssx import parse_css_refs
 
-    def parse(batches):
-        for b in batches:
-            rows = []
-            for url, payload in zip(b[url_col], b[payload_col]):
-                for r in parse_css_refs(
-                        bytes(payload)
-                        if payload is not None else None):
-                    rows.append((url, r["pos"], r["kind"],
-                                 r["url"], r["is_data"]))
-            out = pd.DataFrame(rows, columns=[
-                "url", "pos", "kind", "ref", "is_data"])
-            out["pos"] = pd.array(out["pos"], dtype="Int32")
-            yield out
+    def rows_of(url, payload):
+        for r in parse_css_refs(
+                bytes(payload) if payload is not None else None):
+            yield url, r["pos"], r["kind"], r["url"], r["is_data"]
 
-    return (df.select(F.col(url_col).alias(url_col),
-                      F.col(payload_col).alias(payload_col))
-            .mapInPandas(parse, CSS_REFS_DDL))
+    return flat_map(df, [url_col, payload_col], CSS_REFS_DDL, rows_of)
 
 
 SOURCEMAP_SOURCES_DDL = (
@@ -2524,31 +1623,18 @@ def read_sourcemap_sources(df: DataFrame, url_col: str = "url",
     VLQ-decoded segment count. Pure parse:
     ``extractor.srcmapx.parse_sourcemap`` (golden-pinned).
     Map-only."""
-    import pandas as pd
-
     from ..extractor.srcmapx import parse_sourcemap
 
-    def parse(batches):
-        for b in batches:
-            rows = []
-            for url, payload in zip(b[url_col], b[payload_col]):
-                d = parse_sourcemap(
-                    bytes(payload) if payload is not None else None)
-                if d is None:
-                    continue
-                for pos, src, has_c, nseg in d["sources"]:
-                    rows.append((url, d["file"], d["source_root"],
-                                 pos, src, has_c, nseg))
-            out = pd.DataFrame(rows, columns=[
-                "url", "file", "source_root", "pos", "source",
-                "has_content", "n_segments"])
-            for c in ("pos", "n_segments"):
-                out[c] = pd.array(out[c], dtype="Int32")
-            yield out
+    def rows_of(url, payload):
+        d = parse_sourcemap(
+            bytes(payload) if payload is not None else None)
+        if d is not None:
+            for pos, src, has_c, nseg in d["sources"]:
+                yield (url, d["file"], d["source_root"], pos, src,
+                       has_c, nseg)
 
-    return (df.select(F.col(url_col).alias(url_col),
-                      F.col(payload_col).alias(payload_col))
-            .mapInPandas(parse, SOURCEMAP_SOURCES_DDL))
+    return flat_map(df, [url_col, payload_col], SOURCEMAP_SOURCES_DDL,
+                    rows_of)
 
 
 # mtime deliberately NOT exposed: office fixture builders stamp
@@ -2567,38 +1653,18 @@ def read_zip_directory(df: DataFrame, url_col: str = "url",
     WITHOUT inflating anything (extractor/zipx.py — stdlib-parity
     pinned). The container-layout auditor: at 100 TB only file
     tails travel (the parquet-footer pattern). Map-only."""
-    import pandas as pd
-
     from ..extractor.zipx import parse_zip_directory
 
-    def parse(batches):
-        for b in batches:
-            rows = []
-            for url, payload in zip(b[url_col], b[payload_col]):
-                d = parse_zip_directory(
-                    bytes(payload) if payload is not None else None)
-                if d is None:
-                    continue
-                for e in d["entries"]:
-                    rows.append((url, e["pos"], e["name"],
-                                 e["method"],
-                                 e["crc32"], e["compressed_size"],
-                                 e["uncompressed_size"],
-                                 e["local_offset"], e["is_dir"],
-                                 e["utf8_name"]))
-            out = pd.DataFrame(rows, columns=[
-                "url", "pos", "name", "method", "crc32",
-                "compressed_size", "uncompressed_size",
-                "local_offset", "is_dir", "utf8_name"])
-            out["pos"] = pd.array(out["pos"], dtype="Int32")
-            for c in ("compressed_size", "uncompressed_size",
-                      "local_offset"):
-                out[c] = pd.array(out[c], dtype="Int64")
-            yield out
+    cols = [f.split()[0] for f in ZIP_DIR_DDL.split(", ")][1:]
 
-    return (df.select(F.col(url_col).alias(url_col),
-                      F.col(payload_col).alias(payload_col))
-            .mapInPandas(parse, ZIP_DIR_DDL))
+    def rows_of(url, payload):
+        d = parse_zip_directory(
+            bytes(payload) if payload is not None else None)
+        if d is not None:
+            for e in d["entries"]:
+                yield (url, *(e[c] for c in cols))
+
+    return flat_map(df, [url_col, payload_col], ZIP_DIR_DDL, rows_of)
 
 
 NTRIPLES_DDL = (
@@ -2613,27 +1679,14 @@ def read_ntriples(df: DataFrame, url_col: str = "url",
     lines skip — dumps at scale always carry a few). Pure parse:
     ``extractor.ntriplesx.parse_ntriples`` (golden-pinned).
     Map-only."""
-    import pandas as pd
-
     from ..extractor.ntriplesx import parse_ntriples
 
-    def parse(batches):
-        for b in batches:
-            rows = []
-            for url, payload in zip(b[url_col], b[payload_col]):
-                d = parse_ntriples(
-                    bytes(payload) if payload is not None else None)
-                for t in d["triples"]:
-                    rows.append((url,) + t)
-            out = pd.DataFrame(rows, columns=[
-                "url", "pos", "subj", "subj_kind", "pred", "obj",
-                "obj_kind", "obj_lang", "obj_datatype"])
-            out["pos"] = pd.array(out["pos"], dtype="Int32")
-            yield out
+    def rows_of(url, payload):
+        d = parse_ntriples(bytes(payload) if payload is not None else None)
+        for t in d["triples"]:
+            yield (url, *t)
 
-    return (df.select(F.col(url_col).alias(url_col),
-                      F.col(payload_col).alias(payload_col))
-            .mapInPandas(parse, NTRIPLES_DDL))
+    return flat_map(df, [url_col, payload_col], NTRIPLES_DDL, rows_of)
 
 
 GEOJSON_DDL = (
@@ -2648,30 +1701,14 @@ def read_geojson_features(df: DataFrame, url_col: str = "url",
     geometries surface as gtype 'invalid', junk payloads yield no
     rows). Pure parse: ``extractor.geojsonx.parse_geojson``
     (golden-pinned). Map-only."""
-    import pandas as pd
-
     from ..extractor.geojsonx import parse_geojson
 
-    def parse(batches):
-        for b in batches:
-            rows = []
-            for url, payload in zip(b[url_col], b[payload_col]):
-                d = parse_geojson(
-                    bytes(payload) if payload is not None else None)
-                for t in d["features"]:
-                    rows.append((url,) + t)
-            out = pd.DataFrame(rows, columns=[
-                "url", "pos", "gtype", "n_geoms", "n_points",
-                "minx", "miny", "maxx", "maxy", "name", "n_props"])
-            for c in ("pos", "n_geoms", "n_points", "n_props"):
-                out[c] = pd.array(out[c], dtype="Int32")
-            for c in ("minx", "miny", "maxx", "maxy"):
-                out[c] = pd.array(out[c], dtype="float64")
-            yield out
+    def rows_of(url, payload):
+        d = parse_geojson(bytes(payload) if payload is not None else None)
+        for t in d["features"]:
+            yield (url, *t)
 
-    return (df.select(F.col(url_col).alias(url_col),
-                      F.col(payload_col).alias(payload_col))
-            .mapInPandas(parse, GEOJSON_DDL))
+    return flat_map(df, [url_col, payload_col], GEOJSON_DDL, rows_of)
 
 
 TOML_DDL = ("url string, pos int, ok boolean, key_path string, "
@@ -2686,32 +1723,17 @@ def read_toml_records(df: DataFrame, url_col: str = "url",
     yields ONE ok=false row (parse-rate audits need the rejects).
     Pure parse: ``extractor.tomlx.parse_toml`` (tomllib-pinned,
     golden-pinned). Map-only."""
-    import pandas as pd
-
     from ..extractor.tomlx import flatten, parse_toml
 
-    def parse(batches):
-        for b in batches:
-            rows = []
-            for url, payload in zip(b[url_col], b[payload_col]):
-                d = parse_toml(
-                    bytes(payload) if payload is not None else None)
-                if not d["ok"]:
-                    rows.append((url, 0, False, None, None, None))
-                    continue
-                for (pos, key_path, vtype, text) in \
-                        flatten(d["doc"]):
-                    rows.append((url, pos, True, key_path, vtype,
-                                 text))
-            out = pd.DataFrame(rows, columns=[
-                "url", "pos", "ok", "key_path", "vtype",
-                "value_text"])
-            out["pos"] = pd.array(out["pos"], dtype="Int32")
-            yield out
+    def rows_of(url, payload):
+        d = parse_toml(bytes(payload) if payload is not None else None)
+        if not d["ok"]:
+            yield url, 0, False, None, None, None
+            return
+        for pos, key_path, vtype, text in flatten(d["doc"]):
+            yield url, pos, True, key_path, vtype, text
 
-    return (df.select(F.col(url_col).alias(url_col),
-                      F.col(payload_col).alias(payload_col))
-            .mapInPandas(parse, TOML_DDL))
+    return flat_map(df, [url_col, payload_col], TOML_DDL, rows_of)
 
 
 COMP_DDL = ("url string, pos int, format string, kind string, "
@@ -2728,33 +1750,17 @@ def read_compressed_frames(df: DataFrame, url_col: str = "url",
     headers. Pure parse: ``extractor.compx.parse_compressed``
     (golden-pinned). Map-only; unrecognized payloads yield no
     rows."""
-    import pandas as pd
-
     from ..extractor.compx import parse_compressed
 
-    def parse(batches):
-        for b in batches:
-            rows = []
-            for url, payload in zip(b[url_col], b[payload_col]):
-                d = parse_compressed(
-                    bytes(payload) if payload is not None else None)
-                if d["format"] is None:
-                    continue
-                for (pos, kind, comp, raw, extra, ok) in \
-                        d["frames"]:
-                    rows.append((url, pos, d["format"], kind,
-                                 comp, raw, extra, ok))
-            out = pd.DataFrame(rows, columns=[
-                "url", "pos", "format", "kind", "comp_size",
-                "raw_size", "extra", "ok"])
-            out["pos"] = pd.array(out["pos"], dtype="Int32")
-            for c in ("comp_size", "raw_size"):
-                out[c] = pd.array(out[c], dtype="Int64")
-            yield out
+    def rows_of(url, payload):
+        d = parse_compressed(
+            bytes(payload) if payload is not None else None)
+        if d["format"] is None:
+            return
+        for pos, kind, comp, raw, extra, ok in d["frames"]:
+            yield url, pos, d["format"], kind, comp, raw, extra, ok
 
-    return (df.select(F.col(url_col).alias(url_col),
-                      F.col(payload_col).alias(payload_col))
-            .mapInPandas(parse, COMP_DDL))
+    return flat_map(df, [url_col, payload_col], COMP_DDL, rows_of)
 
 
 CFB_DDL = (
@@ -2770,45 +1776,27 @@ def read_legacy_office(df: DataFrame, url_col: str = "url",
     atoms in record order) and 'doc_piece' rows ([MS-DOC] piece
     table, CP-ordered). Pure parse: ``extractor.cfbx``
     (golden-pinned). Map-only; junk yields no rows."""
-    import pandas as pd
-
     from ..extractor.cfbx import (extract_doc_pieces,
                                   extract_ppt_elements, parse_cfb)
 
-    def parse(batches):
-        for b in batches:
-            rows = []
-            for url, payload in zip(b[url_col], b[payload_col]):
-                blob = bytes(payload) if payload is not None \
-                    else None
-                d = parse_cfb(blob)
-                if d is None:
-                    continue
-                for (pos, path, kind, size, _start) in d["entries"]:
-                    # Int64 clamp: declared sizes are u64 in the spec
-                    size = size if size < 1 << 62 else None
-                    rows.append((url, pos, "entry", path, kind,
-                                 size, None, None, None, None))
-                for (pos, kind, text) in extract_ppt_elements(blob):
-                    rows.append((url, pos, "ppt_text", None, None,
-                                 None, kind, None, None, text))
-                for (pos, compressed, cp0, cp1, text) in \
-                        extract_doc_pieces(blob):
-                    rows.append((url, pos, "doc_piece", None, None,
-                                 None,
-                                 "cp1252" if compressed else "utf16",
-                                 cp0, cp1, text))
-            out = pd.DataFrame(rows, columns=[
-                "url", "pos", "row_kind", "path", "entry_kind",
-                "size", "text_kind", "cp_start", "cp_end", "text"])
-            for c in ("pos", "cp_start", "cp_end"):
-                out[c] = pd.array(out[c], dtype="Int32")
-            out["size"] = pd.array(out["size"], dtype="Int64")
-            yield out
+    def rows_of(url, payload):
+        blob = bytes(payload) if payload is not None else None
+        d = parse_cfb(blob)
+        if d is None:
+            return
+        for pos, path, kind, size, _start in d["entries"]:
+            # Int64 clamp: declared sizes are u64 in the spec
+            size = size if size < 1 << 62 else None
+            yield (url, pos, "entry", path, kind, size, None, None, None,
+                   None)
+        for pos, kind, text in extract_ppt_elements(blob):
+            yield (url, pos, "ppt_text", None, None, None, kind, None,
+                   None, text)
+        for pos, compressed, cp0, cp1, text in extract_doc_pieces(blob):
+            yield (url, pos, "doc_piece", None, None, None,
+                   "cp1252" if compressed else "utf16", cp0, cp1, text)
 
-    return (df.select(F.col(url_col).alias(url_col),
-                      F.col(payload_col).alias(payload_col))
-            .mapInPandas(parse, CFB_DDL))
+    return flat_map(df, [url_col, payload_col], CFB_DDL, rows_of)
 
 
 OLEPS_DDL = ("url string, pos int, stream string, prop_id int, "
@@ -2823,32 +1811,17 @@ def read_office_properties(df: DataFrame, url_col: str = "url",
     of ``read_office_metadata``). Pure parse:
     ``extractor.olepsx.extract_office_properties``. Map-only; CFB
     without property streams (or junk) yields no rows."""
-    import pandas as pd
-
     from ..extractor.olepsx import extract_office_properties
 
-    def parse(batches):
-        for b in batches:
-            rows = []
-            for url, payload in zip(b[url_col], b[payload_col]):
-                blob = bytes(payload) if payload is not None \
-                    else None
-                for (pos, stream, pid, name, vtype, val) in \
-                        extract_office_properties(blob):
-                    # Int32 clamp: property ids are u32 on disk
-                    pid = pid if pid <= 0x7FFFFFFF else None
-                    rows.append((url, pos, stream, pid, name,
-                                 vtype, val))
-            out = pd.DataFrame(rows, columns=[
-                "url", "pos", "stream", "prop_id", "name",
-                "vtype", "value"])
-            for c in ("pos", "prop_id"):
-                out[c] = pd.array(out[c], dtype="Int32")
-            yield out
+    def rows_of(url, payload):
+        for pos, stream, pid, name, vtype, val in \
+                extract_office_properties(
+                    bytes(payload) if payload is not None else None):
+            # Int32 clamp: property ids are u32 on disk
+            pid = pid if pid <= 0x7FFFFFFF else None
+            yield url, pos, stream, pid, name, vtype, val
 
-    return (df.select(F.col(url_col).alias(url_col),
-                      F.col(payload_col).alias(payload_col))
-            .mapInPandas(parse, OLEPS_DDL))
+    return flat_map(df, [url_col, payload_col], OLEPS_DDL, rows_of)
 
 
 KML_DDL = ("url string, pos int, folder string, name string, "
@@ -2863,33 +1836,15 @@ def read_kml_placemarks(df: DataFrame, url_col: str = "url",
     geometry census, exact bbox, and TimeStamp/TimeSpan epochs —
     the gpxx sibling. Pure parse: ``extractor.kmlx.parse_kml``
     (golden-pinned). Map-only; junk yields no rows."""
-    import pandas as pd
-
     from ..extractor.kmlx import parse_kml
 
-    _COLS = ["pos", "folder", "name", "gtype", "n_points",
-             "min_lon", "min_lat", "max_lon", "max_lat",
-             "t_begin", "t_end"]
+    cols = [f.split()[0] for f in KML_DDL.split(", ")][1:]
 
-    def parse(batches):
-        for b in batches:
-            rows = []
-            for url, payload in zip(b[url_col], b[payload_col]):
-                for r in parse_kml(
-                        bytes(payload) if payload is not None
-                        else None):
-                    rows.append((url,) + tuple(r[c]
-                                               for c in _COLS))
-            out = pd.DataFrame(rows, columns=["url"] + _COLS)
-            for c in ("pos", "n_points"):
-                out[c] = pd.array(out[c], dtype="Int32")
-            for c in ("t_begin", "t_end"):
-                out[c] = pd.array(out[c], dtype="Int64")
-            yield out
+    def rows_of(url, payload):
+        for r in parse_kml(bytes(payload) if payload is not None else None):
+            yield (url, *(r[c] for c in cols))
 
-    return (df.select(F.col(url_col).alias(url_col),
-                      F.col(payload_col).alias(payload_col))
-            .mapInPandas(parse, KML_DDL))
+    return flat_map(df, [url_col, payload_col], KML_DDL, rows_of)
 
 
 PGP_DDL = ("url string, pos int, row_kind string, kind string, "
@@ -2906,40 +1861,21 @@ def read_pgp_blocks(df: DataFrame, url_col: str = "url",
     user ids, v4 SHA-1 fingerprints). Pure parse:
     ``extractor.pgpx.extract_pgp`` (gpg-parity-pinned). Map-only;
     junk yields no rows."""
-    import pandas as pd
-
     from ..extractor.pgpx import extract_pgp
 
-    def parse(batches):
-        for b in batches:
-            rows = []
-            for url, payload in zip(b[url_col], b[payload_col]):
-                d = extract_pgp(
-                    bytes(payload) if payload is not None else None)
-                if d is None:
-                    continue
-                rows.append((url, 0, "block", d["kind"],
-                             d["n_headers"], d["crc_ok"],
-                             None, None, None, None, None, None,
-                             None, None))
-                for p in d["packets"]:
-                    rows.append((url, p["pos"], "packet", None,
-                                 None, None, p["tag"], p["name"],
-                                 p["length"], p["version"],
-                                 p["algorithm"], p["created"],
-                                 p["user_id"], p["fingerprint"]))
-            out = pd.DataFrame(rows, columns=[
-                "url", "pos", "row_kind", "kind", "n_headers",
-                "crc_ok", "tag", "name", "length", "version",
-                "algorithm", "created", "user_id", "fingerprint"])
-            for c in ("pos", "n_headers", "tag", "length",
-                      "version"):
-                out[c] = pd.array(out[c], dtype="Int32")
-            yield out
+    def rows_of(url, payload):
+        d = extract_pgp(bytes(payload) if payload is not None else None)
+        if d is None:
+            return
+        yield (url, 0, "block", d["kind"], d["n_headers"], d["crc_ok"],
+               None, None, None, None, None, None, None, None)
+        for p in d["packets"]:
+            yield (url, p["pos"], "packet", None, None, None, p["tag"],
+                   p["name"], p["length"], p["version"],
+                   p["algorithm"], p["created"], p["user_id"],
+                   p["fingerprint"])
 
-    return (df.select(F.col(url_col).alias(url_col),
-                      F.col(payload_col).alias(payload_col))
-            .mapInPandas(parse, PGP_DDL))
+    return flat_map(df, [url_col, payload_col], PGP_DDL, rows_of)
 
 
 def read_desktop_entries(df: DataFrame, url_col: str = "url",
@@ -2947,30 +1883,16 @@ def read_desktop_entries(df: DataFrame, url_col: str = "url",
     """(url, .desktop bytes) -> one row per (group, key, locale,
     value) — the bibtex_fields flat shape for freedesktop entries.
     Pure parse: ``extractor.desktopx.parse_desktop``. Map-only."""
-    import pandas as pd
-
     from ..extractor.desktopx import parse_desktop
 
-    def parse(batches):
-        for b in batches:
-            rows = []
-            for url, payload in zip(b[url_col], b[payload_col]):
-                for (pos, group, key, locale, value) in \
-                        parse_desktop(
-                            bytes(payload) if payload is not None
-                            else None):
-                    rows.append((url, pos, group, key, locale,
-                                 value))
-            out = pd.DataFrame(rows, columns=[
-                "url", "pos", "grp", "key", "locale", "value"])
-            out["pos"] = pd.array(out["pos"], dtype="Int32")
-            yield out
+    def rows_of(url, payload):
+        for pos, group, key, locale, value in parse_desktop(
+                bytes(payload) if payload is not None else None):
+            yield url, pos, group, key, locale, value
 
-    return (df.select(F.col(url_col).alias(url_col),
-                      F.col(payload_col).alias(payload_col))
-            .mapInPandas(parse, "url string, pos int, grp string, "
-                                "key string, locale string, "
-                                "value string"))
+    return flat_map(df, [url_col, payload_col],
+                    "url string, pos int, grp string, key string, "
+                    "locale string, value string", rows_of)
 
 
 AVI_DDL = ("url string, pos int, row_kind string, "
@@ -2986,41 +1908,17 @@ def read_avi_headers(df: DataFrame, url_col: str = "url",
     one 'stream' row per strh — the legacy-video sibling of
     mp4_metadata. Pure parse: ``extractor.avix.parse_avi``
     (golden-pinned). Map-only; junk/non-AVI-RIFF yields no rows."""
-    import pandas as pd
-
     from ..extractor.avix import parse_avi
 
-    def parse(batches):
-        for b in batches:
-            rows = []
-            for url, payload in zip(b[url_col], b[payload_col]):
-                d = parse_avi(
-                    bytes(payload) if payload is not None else None)
-                if d is None:
-                    continue
-                rows.append((url, 0, "file", d["us_per_frame"],
-                             d["fps_milli"], d["width"],
-                             d["height"], d["total_frames"],
-                             d["n_streams_declared"], None, None,
-                             None, None))
-                for (pos, kind, handler, rate_milli, length) in \
-                        d["streams"]:
-                    rows.append((url, pos, "stream", None, None,
-                                 None, None, None, None, kind,
-                                 handler, rate_milli, length))
-            out = pd.DataFrame(rows, columns=[
-                "url", "pos", "row_kind", "us_per_frame",
-                "fps_milli", "width", "height", "total_frames",
-                "n_streams", "stream_kind", "handler",
-                "rate_milli", "length"])
-            for c in ("pos", "us_per_frame", "fps_milli", "width",
-                      "height", "total_frames", "n_streams",
-                      "length"):
-                out[c] = pd.array(out[c], dtype="Int32")
-            out["rate_milli"] = pd.array(out["rate_milli"],
-                                         dtype="Int64")
-            yield out
+    def rows_of(url, payload):
+        d = parse_avi(bytes(payload) if payload is not None else None)
+        if d is None:
+            return
+        yield (url, 0, "file", d["us_per_frame"], d["fps_milli"],
+               d["width"], d["height"], d["total_frames"],
+               d["n_streams_declared"], None, None, None, None)
+        for pos, kind, handler, rate_milli, length in d["streams"]:
+            yield (url, pos, "stream", None, None, None, None, None,
+                   None, kind, handler, rate_milli, length)
 
-    return (df.select(F.col(url_col).alias(url_col),
-                      F.col(payload_col).alias(payload_col))
-            .mapInPandas(parse, AVI_DDL))
+    return flat_map(df, [url_col, payload_col], AVI_DDL, rows_of)

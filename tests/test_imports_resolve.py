@@ -7,6 +7,12 @@ call. This walks the AST instead: each ``import X`` needs a spec for X,
 and each ``from X import Y`` needs a spec for X plus Y as either a
 submodule of X or an attribute of it. Imports under a ``try`` that
 catches ImportError are optional by design and are skipped.
+
+The same walk pins two more things: every walked file compiles with
+SyntaxWarning and DeprecationWarning raised as errors (an invalid
+escape such as ``"\\;"`` is a SyntaxError in future Pythons), and the
+static import closure of the flagship (``pipeline`` + ``catalog``) is
+a reviewed list, so a change that widens it shows up as a diff here.
 """
 
 import ast
@@ -14,6 +20,7 @@ import importlib
 import importlib.util
 import os
 import sys
+import warnings
 
 import pytest
 
@@ -98,3 +105,60 @@ def test_every_import_resolves(path):
         if not hasattr(importlib.import_module(module), name):
             bad.append(f"{lineno}: {module} has no {name}")
     assert not bad, f"{os.path.relpath(path, ROOT)}: {bad}"
+
+
+@pytest.mark.parametrize(
+    "path", _sources(), ids=lambda p: os.path.relpath(p, ROOT))
+def test_compiles_without_warnings(path):
+    with open(path) as f:
+        src = f.read()
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", SyntaxWarning)
+        warnings.simplefilter("error", DeprecationWarning)
+        compile(src, path, "exec")
+
+
+# The modules the flagship job imports, function-body imports and the
+# packages they sit in included (about 6.2k lines). Widening this set
+# is a design decision; update the list in the same change.
+FLAGSHIP_CLOSURE = (
+    "", "catalog", "pipeline", "extractor", "extractor.cfbx",
+    "extractor.charsetx", "extractor.core", "extractor.docx",
+    "extractor.epubx", "extractor.feedx", "extractor.htmlx",
+    "extractor.ipynbx", "extractor.mailx", "extractor.odtx",
+    "extractor.pdfx", "extractor.pptx", "extractor.rtfx",
+    "extractor.sniff", "extractor.tarx", "extractor.texx",
+    "extractor.xlsxx")
+
+
+def _module_path(mod: str) -> str | None:
+    base = os.path.join(ROOT, *mod.split("."))
+    for p in (base + ".py", os.path.join(base, "__init__.py")):
+        if os.path.isfile(p):
+            return p
+    return None
+
+
+def _closure(roots: list[str]) -> set[str]:
+    """Package modules reachable from ``roots`` through any import
+    statement, plus every package on the way to each of them."""
+    seen: set[str] = set()
+    todo = list(roots)
+    while todo:
+        mod = todo.pop()
+        path = _module_path(mod)
+        if mod in seen or path is None:
+            continue
+        seen.add(mod)
+        if "." in mod:
+            todo.append(mod.rsplit(".", 1)[0])
+        for _, module, name in _imports(path):
+            todo += [m for m in (module, name and f"{module}.{name}")
+                     if m and m.split(".")[0] == PKG]
+    return seen
+
+
+def test_flagship_import_closure_is_pinned():
+    got = _closure([f"{PKG}.pipeline", f"{PKG}.catalog"])
+    want = {f"{PKG}.{m}" if m else PKG for m in FLAGSHIP_CLOSURE}
+    assert sorted(got) == sorted(want)
