@@ -54,9 +54,9 @@ _DRIVER_ORDER = [
     "charset_stats", "microdata_records", "dhash_near_pairs",
     "publish_date", "pack_greedy", "cms_term_counts",
     "table_records", "surt_urlkey",
-    # sole witnesses of format families still open for retirement
-    "parquet_layout_audit", "toml_records", "cookie_table",
-    "security_headers", "bibtex_fields", "compressed_frames",
+    # PDF and office metadata, and the extraction roll-ups over it
+    "pdf_info", "pdf_outline", "office_metadata",
+    "legacy_office_extract", "extract_kind_stats", "structured_records",
     # keep-set witnesses on the reference's document-to-record trace
     "docx_elements", "pptx_elements", "ppt_elements", "doc_elements",
     "odt_elements", "epub_chapters", "rtf_elements", "exact_dedup",
@@ -70,10 +70,10 @@ _DRIVER_ORDER = [
     "host_pagerank", "text_profile",
     "minhash_lsh_pairs", "dedup_clusters",
     "chunk_token_budget", "lsh_topk",
-    # sole driver witnesses of their page-structure and media families
+    # page structure, sections, links and metadata of one document
     "page_artifacts_stats", "image_dhash",
     "extract_av", "extract_forms", "idn_hosts", "arc_documents",
-    "audio_fingerprint", "sitemap_media", "hls_rows",
+    "section_chunks", "extract_links", "extract_meta",
     "pdf_modern_info",
 ]
 

@@ -14,8 +14,7 @@ set format:
 - TypedPropertyValue: VT type + value. Covered types: I2/I4/UI2/
   UI4 ints, BOOL, LPSTR (codepage property 1 decides the 8-bit
   decode, cp1252 default), LPWSTR UTF-16LE, FILETIME (100 ns ticks
-  since 1601 -> ISO via pure integer math — the cachex epoch
-  discipline).
+  since 1601 -> ISO via pure integer math).
 
 Never raises; junk -> []. All counts/offsets bounds-clamped.
 """
@@ -47,7 +46,7 @@ _EPOCH_DELTA = 11644473600  # seconds between 1601 and 1970
 
 def _filetime_iso(ticks: int) -> str | None:
     """100 ns ticks since 1601-01-01 -> ISO UTC string, pure
-    integer civil-date math (no datetime; the cachex formula)."""
+    integer civil-date math (no datetime; days-from-civil)."""
     if ticks <= 0:
         return None
     secs = ticks // 10_000_000 - _EPOCH_DELTA

@@ -875,74 +875,6 @@ def opml_file_rows(n: int, seed: int = 42) -> list[dict]:
     return out
 
 
-def subtitle_file_rows(n: int, seed: int = 42) -> list[dict]:
-    """Deterministic synthetic subtitle files: (url, payload). Cycles
-    SRT and WebVTT shapes — tags/entities, index-less and dot-milli
-    SRT blocks, VTT header metadata + NOTE/STYLE blocks + cue
-    settings + hour-less stamps — across utf-8, cp1252 and utf-16le
-    encodings; every 6th row is a cue-less payload that must yield
-    zero rows (F5)."""
-    out = []
-    for i in range(n):
-        rng = _rng(seed * 122949823, i)
-        kind = i % 6
-        url = f"sub://file-{i}"
-
-        def stamp(ms: int, sep: str = ",") -> str:
-            h, rem = divmod(ms, 3600000)
-            m, rem = divmod(rem, 60000)
-            s, mmm = divmod(rem, 1000)
-            return f"{h:02d}:{m:02d}:{s:02d}{sep}{mmm:03d}"
-
-        t0 = 500 + (i % 7) * 950
-        cues = []
-        for c in range(2 + i % 4):
-            dur = 1200 + ((i + c) % 5) * 700
-            cues.append((t0, t0 + dur, _sentence(rng, 3, 8)))
-            t0 += dur + 300
-        if kind == 0:           # SRT with tags + entities, cp1252 half
-            blocks = [f"{c + 1}\n{stamp(a)} --> {stamp(b)}\n"
-                      f"<i>{t}</i> &amp; fin"
-                      for c, (a, b, t) in enumerate(cues)]
-            enc = "cp1252" if i % 2 else "utf-8"
-            payload = ("\n\n".join(blocks) + "\n").encode(enc)
-        elif kind == 1:         # VTT: metadata header, NOTE, settings
-            blocks = ["WEBVTT - fixture\nKind: captions",
-                      "NOTE synthetic\ncomment lines"]
-            blocks += [f"cue-{c}\n{stamp(a, '.')} --> {stamp(b, '.')} "
-                       f"align:start\n<v Spk>{t}</v>"
-                       for c, (a, b, t) in enumerate(cues)]
-            payload = ("\n\n".join(blocks) + "\n").encode("utf-8")
-        elif kind == 2:         # SRT index-less, dot millis, overlaps
-            blocks = [f"{stamp(a, '.')} --> {stamp(max(b - 800, a), '.')}"
-                      f"\n{t}\nsecond line"
-                      for (a, b, t) in cues]
-            payload = ("\n\n".join(blocks) + "\n").encode("utf-8")
-        elif kind == 3:         # VTT hour-less + STYLE, utf-16le half
-            def short(ms: int) -> str:
-                m, rem = divmod(ms, 60000)
-                s, mmm = divmod(rem, 1000)
-                return f"{m:02d}:{s:02d}.{mmm:03d}"
-            blocks = ["WEBVTT", "STYLE\n::cue { color: red }"]
-            blocks += [f"{short(a)} --> {short(b)}\n<c.y>{t}</c>"
-                       for (a, b, t) in cues]
-            raw = "\n\n".join(blocks) + "\n"
-            payload = (b"\xff\xfe" + raw.encode("utf-16-le")
-                       if i % 2 else raw.encode("utf-8"))
-        elif kind == 4:         # SRT + garbage blocks + empty cues
-            blocks = []
-            for c, (a, b, t) in enumerate(cues):
-                blocks.append(f"{c + 1}\n{stamp(a)} --> {stamp(b)}\n{t}")
-                blocks.append("not a cue\nstill not one")
-                blocks.append(f"{c + 90}\n{stamp(b)} --> "
-                              f"{stamp(b + 100)}\n<i></i>")
-            payload = ("\n\n".join(blocks) + "\n").encode("utf-8")
-        else:                   # kind == 5: no cues -> zero rows
-            payload = _garbage(rng, i)
-        out.append({"url": url, "payload": payload})
-    return out
-
-
 def epub_file_rows(n: int, seed: int = 42) -> list[dict]:
     """Deterministic synthetic .epub books: (url, payload). Books
     cycle chapter counts 1-4, include heading-less chapters (the
@@ -2814,89 +2746,6 @@ def mbox_file_rows(n: int = 24, seed: int = 42) -> list[dict]:
     return out
 
 
-# --- wikitext fixture pages ----------------------------------------------------
-
-def wikitext_rows(n: int = 40, seed: int = 42) -> list[dict]:
-    """Deterministic (url, wikitext) pages exercising the wikix
-    subset: infobox templates (nested), heading hierarchies with the
-    lenient unbalanced-equals rule, pipe/pipe-trick links, File links
-    with caption links, external links (labeled and numbered), nested
-    lists of every marker, tables with links that must NOT register,
-    refs (paired, self-closing, unterminated), nowiki protection,
-    magic words, emphasis runs, multi-line templates, and junk/empty
-    rows (F5)."""
-    out = []
-    for i in range(n):
-        rng = _rng(seed * 198491317, i)
-        host = _HOSTS[(i * 40503) % len(_HOSTS)]
-        url = f"wiki://{host}/wiki/Article_{i}"
-        k = i % 8
-        title = _sentence(rng, 2, 4).rstrip(".,!")
-        if k == 0:
-            src = (
-                f"{{{{Infobox topic\n| name = {title}\n"
-                f"| site = [https://{host}/ home]\n"
-                f"| uses = {{{{nested|{i}}}}}\n}}}}\n"
-                f"'''{title}''' is a [[{_sentence(rng, 1, 2).rstrip('.,!')}"
-                f"|topic]] covering [[Article {(i + 3) % n}]].\n"
-                f"It spans two source lines.\n\n"
-                f"== Overview ==\n{_paragraph(rng, 1, 2)}\n\n"
-                f"=== Details ===\n"
-                f"* point about [[Article {(i + 5) % n}]]\n"
-                f"* second point\n** nested [[Deep link {i}]]\n"
-                f"# ordered one\n"
-                f"== See also ==\n"
-                f"* [[Article {(i + 1) % n}|next article]]\n")
-        elif k == 1:
-            src = (
-                f"{title} began<ref name=\"r{i}\">{{{{cite web"
-                f"|url=https://{host}/cite}}}}</ref> early.<ref "
-                f"name=\"r{i}\" />\n"
-                f"A [[File:Pic {i}.png|thumb|Caption with a "
-                f"[[Caption target {i}|caption link]] inside]] image.\n"
-                f"[[Category:Fixtures]]\n\n"
-                f"==Lenient {i}====\n"
-                f"Some ''italic'' and '''bold''' plus "
-                f"[https://{host}/x ext label] and bare "
-                f"[https://{host}/y].\n__NOTOC__\n")
-        elif k == 2:
-            src = (
-                f"Before the table.\n"
-                f"{{| class=\"wikitable\"\n|-\n! H1 !! H2\n|-\n"
-                f"| [[TableLink {i}]] || cell\n"
-                f"{{| nested inner\n| x\n|}}\n"
-                f"| more\n|}}\n"
-                f"After the table with [[Kept link {i}]].\n")
-        elif k == 3:
-            src = (
-                f"<nowiki>[[not a link {i}]] and {{{{not a "
-                f"template}}}}</nowiki> stays literal, then "
-                f"[[Real {i}|]] pipe-trick.\n\n"
-                f"= Top =\n; term\n: definition body {i}\n")
-        elif k == 4:
-            src = (
-                f"{{{{unterminated template {i}\nswallows the rest\n"
-                if i % 2 else
-                f"plain only {_paragraph(rng, 1, 2)}\n"
-                f"<!-- comment\nspanning -->tail {i}.\n")
-        elif k == 5:
-            src = (
-                f"== {title} ==\n"
-                + "\n".join(f"* [[Article {(i + j) % n}]] row {j}"
-                            for j in range(3))
-                + f"\n\nClosing paragraph {_sentence(rng, 4, 8)}\n")
-        elif k == 6:
-            # deep heading ladder for the section composition
-            src = "\n\n".join(
-                f"{'=' * lv} L{lv} head {i} {'=' * lv}\n"
-                f"body at level {lv}: {_sentence(rng, 3, 6)}"
-                for lv in range(1, 5))
-        else:
-            src = "" if i % 2 else f"<ref>unterminated ref {i}\ngone"
-        out.append({"url": url, "wikitext": src})
-    return out
-
-
 # --- mp4 fixture files ----------------------------------------------------------
 
 def mp4_media_rows(n: int = 20, seed: int = 42) -> list[dict]:
@@ -3033,58 +2882,7 @@ def latex_rows(n: int = 32, seed: int = 42) -> list[dict]:
     return out
 
 
-# --- MediaWiki dump + tar fixture files ------------------------------------------
-
-def _xml_esc(s: str) -> str:
-    return (s.replace("&", "&amp;").replace("<", "&lt;")
-            .replace(">", "&gt;"))
-
-
-def wiki_dump_rows(n: int = 12, seed: int = 42) -> list[dict]:
-    """Deterministic MediaWiki export XML dumps: (url, payload).
-    Pages reuse the wikitext_rows sources (the dump is the CONTAINER;
-    wikix parses the content) plus redirects, a talk-namespace page,
-    a title with XML entities, and junk/None payloads (F5)."""
-    pages = wikitext_rows(40, seed)
-    out = []
-    for i in range(n):
-        url = f"dump://export-{i}.xml"
-        k = i % 4
-        if k == 3:
-            out.append({"url": url,
-                        "payload": (None if i % 2 else
-                                    b"<html>not a dump</html>")})
-            continue
-        body = []
-        for j in range(2 + i % 3):
-            src = pages[(i * 3 + j) % len(pages)]["wikitext"]
-            body.append(
-                f"  <page>\n    <title>Article {i}-{j} &amp; more"
-                f"</title>\n    <ns>0</ns>\n    <id>{100 + i * 10 + j}"
-                f"</id>\n    <revision>\n      <id>{900 + j}</id>\n"
-                f"      <text xml:space=\"preserve\">{_xml_esc(src)}"
-                f"</text>\n    </revision>\n  </page>\n")
-        if k == 1:
-            body.append(
-                f"  <page>\n    <title>Old {i}</title>\n    <ns>0</ns>"
-                f"\n    <id>{990 + i}</id>\n"
-                f"    <redirect title=\"Article {i}-0 &amp; more\"/>\n"
-                f"    <revision><text>#REDIRECT [[Article {i}-0]]"
-                f"</text></revision>\n  </page>\n")
-        if k == 2:
-            body.append(
-                f"  <page>\n    <title>Talk:Article {i}-0</title>\n"
-                f"    <ns>1</ns>\n    <id>{980 + i}</id>\n"
-                f"    <revision><text>first chatter</text></revision>\n"
-                f"    <revision><text>second rev ignored</text>"
-                f"</revision>\n  </page>\n")
-        xml = ("<mediawiki xmlns=\"http://www.mediawiki.org/xml/"
-               "export-0.10/\" version=\"0.10\">\n"
-               "  <siteinfo><sitename>Fixture</sitename></siteinfo>\n"
-               + "".join(body) + "</mediawiki>\n")
-        out.append({"url": url, "payload": xml.encode("utf-8")})
-    return out
-
+# --- tar fixture files ----------------------------------------------------------
 
 def tar_file_rows(n: int = 12, seed: int = 42) -> list[dict]:
     """Deterministic ustar archives: (url, payload). Members mix .tex
@@ -3158,205 +2956,6 @@ def svg_media_rows(n: int = 16, seed: int = 42) -> list[dict]:
     return out
 
 
-def ics_file_rows(n: int, seed: int = 42) -> list[dict]:
-    """Deterministic synthetic iCalendar files: (url, payload). Cycles
-    the RFC 5545 shapes the parser must survive — folded long lines,
-    escaped TEXT (\\n \\, \\;), quoted TZID params, all-day DATE
-    values, DURATION instead of DTEND, nested VALARM blocks whose
-    properties must NOT bleed into the event, RRULEs with COUNT /
-    INTERVAL / UNTIL, CRLF endings and BOM — and every 6th row is a
-    payload with no parseable VEVENT (F5). Feeds
-    fixtures/golden_ics_seed42_n*.parquet."""
-    out = []
-    for i in range(n):
-        rng = _rng(seed * 198491317, i)
-        url = f"ics://cal-{i}"
-        kind = i % 6
-        day = 1 + (i * 7) % 27
-        base = f"202{i % 4}0{1 + i % 9}{day:02d}"
-        lines = ["BEGIN:VCALENDAR", "VERSION:2.0",
-                 f"PRODID:-//fixture//cal {i}//EN"]
-        if kind == 0:
-            # folded summary + escaped text + UTC stamps
-            summary = _sentence(rng, 8, 14) + r"\, part two\; end"
-            fold_at = 30 + i % 20
-            lines += [
-                "BEGIN:VEVENT", f"UID:ev-{i}-0@fixture",
-                "SUMMARY:" + summary[:fold_at],
-                " " + summary[fold_at:],
-                f"DTSTART:{base}T0{i % 9}3000Z",
-                f"DTEND:{base}T1{i % 9}0000Z",
-                f"LOCATION:Room {i}\\nFloor {i % 5}",
-                "END:VEVENT"]
-        elif kind == 1:
-            # all-day DATE + daily RRULE with COUNT
-            lines += [
-                "BEGIN:VEVENT", f"UID:ev-{i}-allday@fixture",
-                f"SUMMARY:All day {_sentence(rng, 2, 4)}",
-                f"DTSTART;VALUE=DATE:{base}",
-                f"RRULE:FREQ=DAILY;COUNT={2 + i % 6}",
-                "STATUS:CONFIRMED", "END:VEVENT"]
-        elif kind == 2:
-            # quoted TZID param + DURATION + biweekly RRULE
-            lines += [
-                "BEGIN:VEVENT", f"UID:ev-{i}-tz@fixture",
-                f"SUMMARY:{_sentence(rng, 3, 6)}",
-                f'DTSTART;TZID="America/New_York":{base}T09{i % 6}000',
-                f"DURATION:PT{1 + i % 3}H30M",
-                f"RRULE:FREQ=WEEKLY;INTERVAL=2;COUNT={2 + i % 4}",
-                "END:VEVENT"]
-        elif kind == 3:
-            # two events; first carries a VALARM that must not bleed
-            lines += [
-                "BEGIN:VEVENT", f"UID:ev-{i}-a@fixture",
-                f"SUMMARY:{_sentence(rng, 3, 6)}",
-                f"DTSTART:{base}T120000Z",
-                "BEGIN:VALARM", "ACTION:DISPLAY",
-                "SUMMARY:ALARM MUST NOT BLEED",
-                "TRIGGER:-PT15M", "END:VALARM",
-                f"LOCATION:{_sentence(rng, 1, 2)}",
-                "END:VEVENT",
-                "BEGIN:VEVENT", f"UID:ev-{i}-b@fixture",
-                f"SUMMARY:{_sentence(rng, 2, 4)}",
-                f"DTSTART:{base}T160000Z",
-                f"DTEND:{base}T169900Z",      # invalid -> end=start
-                "STATUS:tentative", "END:VEVENT"]
-        elif kind == 4:
-            # RRULE UNTIL + an event with an unparseable DTSTART
-            lines += [
-                "BEGIN:VEVENT", f"UID:ev-{i}-until@fixture",
-                f"SUMMARY:{_sentence(rng, 2, 5)}",
-                f"DTSTART:{base}T08{i % 6}500Z",
-                f"RRULE:FREQ=DAILY;INTERVAL={1 + i % 3};"
-                f"UNTIL:{base}",  # '=' typo form -> UNTIL unharvested
-                "END:VEVENT",
-                "BEGIN:VEVENT", f"UID:ev-{i}-bad@fixture",
-                "SUMMARY:dropped event", "DTSTART:20FEB2024",
-                "END:VEVENT",
-                "BEGIN:VEVENT", f"UID:ev-{i}-u2@fixture",
-                f"SUMMARY:{_sentence(rng, 2, 4)}",
-                f"DTSTART;VALUE=DATE:{base}",
-                f"RRULE:FREQ=WEEKLY;UNTIL={base}T235959Z",
-                "END:VEVENT"]
-        else:
-            # no parseable VEVENT at all
-            payload = _garbage(rng, i) if i % 2 else (
-                b"BEGIN:VCALENDAR\r\nVERSION:2.0\r\nEND:VCALENDAR\r\n")
-            out.append({"url": url, "payload": payload})
-            continue
-        lines.append("END:VCALENDAR")
-        sep = "\r\n" if i % 2 else "\n"
-        raw = sep.join(lines) + sep
-        payload = (b"\xef\xbb\xbf" if i % 4 == 3 else b"") \
-            + raw.encode("utf-8")
-        out.append({"url": url, "payload": payload})
-    return out
-
-
-def _isbn10_complete(d9: str) -> str:
-    """9 digits -> full ISBN-10 (check digit may be X)."""
-    total = sum((10 - i) * int(ch) for i, ch in enumerate(d9))
-    check = (11 - total % 11) % 11
-    return d9 + ("X" if check == 10 else str(check))
-
-
-def _isbn13_complete(d12: str) -> str:
-    """12 digits -> full EAN-13 ISBN."""
-    total = sum(int(ch) * (3 if i % 2 else 1) for i, ch in enumerate(d12))
-    return d12 + str((10 - total % 10) % 10)
-
-
-def ids_texts(n: int = 120, seed: int = 42) -> list[dict]:
-    """Deterministic (url, text) rows exercising the scholarly-
-    identifier family (extractor/idsx.py + operators/idents.py):
-    DOIs with trailing sentence punctuation and parens, arXiv new
-    style (prefix case variants, optional space, vN suffixes, bad
-    months), arXiv old style (archive classes, bad months), ISBN-10
-    (incl. X check digits) and ISBN-13 in every prefix form, checksum
-    -failing copies, plus the negatives all three engines must agree
-    on (naked YYMM.NNNNN digits, plain paths, clean/empty docs).
-
-    Same ASCII-adjacency invariant as pii_texts (\\b stays in the
-    Java/RE2 common subset). Committed as
-    fixtures/ids_texts_seed42_n120.parquet so the DuckDB oracle
-    reads the same input table."""
-    archives = ["hep-th", "math", "cond-mat", "astro-ph", "cs"]
-    classes = ["GT", "CO", "AG", "NT"]
-    rows: list[dict] = []
-    for i in range(n):
-        rng = _rng(seed * 7368787, i)
-        host = _HOSTS[(i * 40503) % len(_HOSTS)]
-        url = f"https://{host}/ids/doc-{i}"
-        parts = [_sentence(rng, 4, 9)]
-        k = i % 10
-        if k == 0:
-            parts.append(f"See doi:10.{1000 + i}/nature{10000 + i}. "
-                         f"and (10.1145/{3292500 + i}.{333000 + i}), "
-                         f"both cited.")
-        elif k == 1:
-            v = f"v{1 + i % 4}" if i % 2 else ""
-            parts.append(f"Preprint arXiv:{1700 + i % 30:04d}."
-                         f"{3762 + i:05d}{v} updated; naked "
-                         f"{1700 + i % 30:04d}.{3762 + i:05d} ignored.")
-        elif k == 2:
-            pre = ["arXiv: ", "ARXIV:", "arxiv:"][i % 3]
-            mm = 13 + i % 80     # bad month -> invalid
-            parts.append(f"Bad month {pre}{17:02d}{mm:02d}."
-                         f"{10000 + i} dropped; good {pre}"
-                         f"{2300 + 1 + i % 12:04d}.{10000 + i} kept.")
-        elif k == 3:
-            arch = archives[i % len(archives)]
-            cls = f".{classes[i % len(classes)]}" if i % 2 else ""
-            yymm = f"{i % 100:02d}{1 + i % 12:02d}"
-            parts.append(f"Old id {arch}{cls}/{yymm}{100 + i % 900:03d} "
-                         f"cited; bogus {arch}/{i % 100:02d}"
-                         f"{13 + i % 86:02d}{100 + i % 900:03d} not.")
-        elif k == 4:
-            d9 = f"{200000000 + i * 9973}"[:9]
-            good = _isbn10_complete(d9)
-            hy = f"{good[0]}-{good[1:4]}-{good[4:9]}-{good[9]}"
-            parts.append(f"ISBN {hy} in print; ISBN "
-                         f"{good[:9]}{'X' if good[9] != 'X' else '0'} "
-                         f"is a typo.")
-        elif k == 5:
-            d12 = "978" + f"{100000000 + i * 7919}"[:9]
-            good = _isbn13_complete(d12)
-            hy = (f"{good[:3]}-{good[3]}-{good[4:7]}-"
-                  f"{good[7:12]}-{good[12]}")
-            pre = ["ISBN-13: ", "ISBN:", "ISBN "][i % 3]
-            parts.append(f"Listed as {pre}{hy} everywhere.")
-        elif k == 6:
-            # an ISBN-10 whose check digit is exactly X
-            base = 957 + i
-            d9 = None
-            for probe in range(base, base + 5000):
-                cand = f"{probe:09d}"
-                if _isbn10_complete(cand)[9] == "X":
-                    d9 = cand
-                    break
-            full = _isbn10_complete(d9)
-            parts.append(f"Rare copy ISBN-10: {full[:1]}-{full[1:5]}-"
-                         f"{full[5:9]}-{full[9]} archived; "
-                         f"979 prefix fake ISBN 971"
-                         f"{d9[:9]}0 rejected.")
-        elif k == 7:
-            parts.append(f"Mixed bag: doi 10.5281/zenodo.{400000 + i}; "
-                         f"arXiv:{2000 + 1 + i % 12:04d}.{20000 + i}v2 "
-                         f"and hep-th/{92 + i % 8:02d}"
-                         f"{1 + i % 12:02d}{100 + i:03d} together.")
-        elif k == 8:
-            parts.append(f"No ids: path src/utils/{i:07d} and build "
-                         f"{1000 + i}.{2000 + i} plus 10.{i % 1000}/x "
-                         f"short-registrant ignored.")
-        else:
-            rows.append({"url": url, "text": "" if i % 2 else
-                         _paragraph(rng, 2, 4)})
-            continue
-        parts.append(_sentence(rng, 3, 8))
-        rows.append({"url": url, "text": " ".join(parts)})
-    return rows
-
-
 def wacz_file_rows(n: int = 12, seed: int = 42) -> list[dict]:
     """Deterministic synthetic WACZ containers: (url, payload).
     Cycles shard counts 1-3, manifests with/without title/mainPage,
@@ -3408,593 +3007,6 @@ def wacz_file_rows(n: int = 12, seed: int = 42) -> list[dict]:
             tamper=tamper)
         out.append({"url": url, "payload": payload})
     return out
-
-
-def ads_texts(n: int = 60, seed: int = 42) -> list[dict]:
-    """Deterministic (url, text) ads.txt bodies exercising the IAB
-    grammar subset (extractor/adsx.py + operators/adstxt.py):
-    DIRECT/RESELLER rows with and without cert ids, inline comments,
-    tab/space padding, CRLF endings, variable records (CONTACT,
-    SUBDOMAIN, mixed-case names), and the malformed lines every
-    engine must drop identically (two fields, unknown relationship,
-    empty domain/publisher, bare '=' lines). Committed as
-    fixtures/ads_texts_seed42_n60.parquet so the DuckDB oracle reads
-    the same input table."""
-    systems = ["google.com", "appnexus.com", "rubiconproject.com",
-               "openx.com", "pubmatic.com", "indexexchange.com"]
-    rows: list[dict] = []
-    for i in range(n):
-        host = _HOSTS[(i * 31) % len(_HOSTS)]
-        url = f"https://{host}/ads-{i}.txt"
-        k = i % 6
-        lines: list[str] = [f"# ads.txt for {host}"]
-        if k == 0:
-            for j in range(2 + i % 4):
-                sysd = systems[(i + j) % len(systems)]
-                lines.append(f"{sysd}, pub-{i:04d}{j}, DIRECT, "
-                             f"f{(i * 7 + j) % 100:02d}abc")
-            lines.append(f"CONTACT=ads@{host}")
-        elif k == 1:
-            for j in range(3 + i % 3):
-                sysd = systems[(i * 3 + j) % len(systems)]
-                rel = "RESELLER" if j % 2 else "direct"
-                lines.append(f"  {sysd.upper()} ,\tpub{i}-{j} , {rel}")
-            lines.append(f"subdomain=shop.{host}")
-        elif k == 2:
-            lines += [
-                f"{systems[i % 6]}, pub-a{i}, DIRECT # inline note",
-                "tooshort.com, only2fields",
-                f"{systems[(i + 1) % 6]}, pub-b{i}, SPONSOR",
-                f", pub-c{i}, DIRECT",
-                f"{systems[(i + 2) % 6]}, , RESELLER",
-                f"{systems[(i + 3) % 6]}, pub-d{i}, RESELLER, "
-                f"cert{i % 50}"]
-        elif k == 3:
-            lines += [
-                f"OwnerDomain = {host}",
-                "=",
-                "name=",
-                f"{systems[i % 6]},pub{i},reseller,",
-                f"inventorypartnerdomain={host}.partner.example"]
-        elif k == 4:
-            for j in range(2):
-                lines.append(f"{systems[(i + j) % 6]}, pub-{i}-{j}, "
-                             + ("DIRECT" if j else "RESELLER"))
-            lines.append("# trailing comment only")
-        else:
-            rows.append({"url": url, "text": "" if i % 2 else
-                         "# comments only\n\n   \n"})
-            continue
-        sep = "\r\n" if i % 2 else "\n"
-        rows.append({"url": url, "text": sep.join(lines) + sep})
-    return rows
-
-
-def security_texts(n: int = 48, seed: int = 42) -> list[dict]:
-    """Deterministic (url, text) security.txt bodies exercising the
-    RFC 9116 subset (extractor/sectxtx.py + operators/sectxt.py):
-    canonical well-formed files, OpenPGP clearsigned files whose
-    signature block hides field-looking trap lines, case-variant
-    names with unknown-field noise, contact-only files (not
-    well-formed), non-Z-form expiries (trust gate -> NULL), and
-    empty/comment-only bodies. Committed as
-    fixtures/sectxt_texts_seed42_n48.parquet so the DuckDB oracle
-    reads the same input table."""
-    rows: list[dict] = []
-    for i in range(n):
-        host = _HOSTS[(i * 29) % len(_HOSTS)]
-        url = f"https://{host}/.well-known/security-{i}.txt"
-        k = i % 6
-        if k == 0:
-            lines = [
-                f"# security.txt for {host}",
-                f"Contact: mailto:security@{host}",
-                f"Expires: 2027-0{1 + i % 9}-01T00:00:00Z",
-                f"Encryption: https://{host}/pgp-key.asc",
-                "Preferred-Languages: en, fr",
-                f"Canonical: https://{host}/.well-known/security.txt",
-            ]
-        elif k == 1:
-            lines = [
-                "-----BEGIN PGP SIGNED MESSAGE-----",
-                "Hash: SHA256",
-                "",
-                f"Contact: https://{host}/report",
-                f"Expires: 2025-0{1 + i % 9}-15T12:00:00Z",
-                "-----BEGIN PGP SIGNATURE-----",
-                "Version: GnuPG v2",
-                "",
-                "iQEzBAEBCAAdFiEE" + "A" * (20 + i % 7),
-                "Contact: mailto:trap@evil.example",
-                "Expires: 2099-01-01T00:00:00Z",
-                "-----END PGP SIGNATURE-----",
-            ]
-        elif k == 2:
-            lines = [
-                f"CONTACT:  tel:+1-201-555-0{i % 10}23",
-                f"expires:2026-12-31T23:59:5{i % 10}Z",
-                "X-Unknown: ignored",
-                f"Acknowledgments: https://{host}/hall-of-fame",
-                f"HIRING: https://{host}/jobs  ",
-                "# comment line",
-                "not a field line at all",
-            ]
-        elif k == 3:
-            lines = [
-                f"Contact: mailto:sec@{host}",
-                f"Contact: https://{host}/contact-form",
-                "Policy:",
-                "Policy:   ",
-                "bad-name!: value",
-            ]
-        elif k == 4:
-            lines = [
-                f"Contact: mailto:cert@{host}",
-                f"Expires: 2026-06-30T12:00:00+0{1 + i % 3}:00",
-                f"Expires: 2025-01-01T00:00:00Z",
-                f"Policy: https://{host}/disclosure-policy",
-            ]
-        else:
-            rows.append({"url": url, "text": "" if i % 2 else
-                         "# placeholder\n\n   \n"})
-            continue
-        sep = "\r\n" if i % 2 else "\n"
-        rows.append({"url": url, "text": sep.join(lines) + sep})
-    return rows
-
-
-_IMF_DAYS = ("Mon", "Tue", "Wed", "Thu", "Fri", "Sat", "Sun")
-_IMF_MONTHS = ("Jan", "Feb", "Mar", "Apr", "May", "Jun",
-               "Jul", "Aug", "Sep", "Oct", "Nov", "Dec")
-
-
-def _imf_date(dt: _dt.datetime) -> str:
-    """Hand-formatted IMF-fixdate (locale-free — strftime %a/%b
-    would silently track the host locale)."""
-    return (f"{_IMF_DAYS[dt.weekday()]}, {dt.day:02d} "
-            f"{_IMF_MONTHS[dt.month - 1]} {dt.year} "
-            f"{dt.hour:02d}:{dt.minute:02d}:{dt.second:02d} GMT")
-
-
-def cache_header_rows(n: int = 64, seed: int = 42) -> list[dict]:
-    """Deterministic response-header rows (url, cache_control,
-    hdr_age, hdr_date, hdr_expires, hdr_last_modified, hdr_etag)
-    exercising the RFC 9111 subset in extractor/cachex.py: CDN-style
-    max-age/s-maxage stacks, no-store/no-cache, Expires deltas (past,
-    future, and the invalid-means-stale '0'), heuristic
-    Date/Last-Modified pairs, grammar torture (quoted args holding
-    commas, unterminated quotes, bad delta tokens, first-wins
-    duplicates, case-variant names), rfc850 dates the strict parser
-    rejects, and header-free rows. Committed as
-    fixtures/cache_headers_seed42_n64.parquet."""
-    base = _dt.datetime(2025, 3, 1, 12, 0, 0)
-    rows: list[dict] = []
-    for i in range(n):
-        host = _HOSTS[(i * 37) % len(_HOSTS)]
-        r = {"url": f"https://{host}/res-{i}", "cache_control": None,
-             "hdr_age": None, "hdr_date": None, "hdr_expires": None,
-             "hdr_last_modified": None, "hdr_etag": None}
-        k = i % 8
-        d = base + _dt.timedelta(hours=i * 7, seconds=i * 11)
-        r["fetched_epoch"] = int(
-            (d - _dt.datetime(1970, 1, 1)).total_seconds())
-        if k == 0:
-            r["cache_control"] = (f"public, max-age={300 * (1 + i % 5)}, "
-                                  f"s-maxage={600 * (1 + i % 5)}, "
-                                  "stale-while-revalidate=60")
-            r["hdr_date"] = _imf_date(d)
-            r["hdr_age"] = str(i % 120)
-            r["hdr_etag"] = f'"v{i}"'
-        elif k == 1:
-            r["cache_control"] = ("no-store, no-cache, must-revalidate"
-                                  if i % 2 else "No-Cache, PRIVATE")
-            r["hdr_date"] = _imf_date(d)
-            r["hdr_etag"] = f'W/"weak{i}"' if i % 4 == 1 else None
-        elif k == 2:
-            r["hdr_date"] = _imf_date(d)
-            r["hdr_expires"] = _imf_date(
-                d + _dt.timedelta(days=1 + i % 9, minutes=i))
-            r["hdr_last_modified"] = _imf_date(
-                d - _dt.timedelta(days=30 + i))
-            r["hdr_etag"] = f'W/"rev-{i}"'
-        elif k == 3:
-            r["hdr_date"] = _imf_date(d)
-            r["hdr_expires"] = ("0" if i % 2 else
-                                _imf_date(d - _dt.timedelta(hours=i + 1)))
-            r["hdr_age"] = "abc" if i % 4 == 3 else None
-        elif k == 4:
-            r["hdr_date"] = _imf_date(d)
-            r["hdr_last_modified"] = _imf_date(
-                d - _dt.timedelta(days=(i % 9) * 3 + 1, hours=i))
-            r["hdr_age"] = str(3600 * (i % 3))
-        elif k == 5:
-            r["cache_control"] = [
-                'private="set-cookie, x-y", MAX-AGE=300, '
-                'community="uci", max-age=100',
-                f'max-age={60 * (i % 7)}, private="a',
-                "max-age=abc, , =, immutable",
-                "max-age=99999999999999999999, public",
-            ][i % 4]
-            r["hdr_date"] = _imf_date(d)
-        elif k == 6:
-            r["cache_control"] = ('s-maxage="120", proxy-revalidate, '
-                                  "private")
-            r["hdr_expires"] = _imf_date(d + _dt.timedelta(days=2))
-        else:
-            if i % 2:
-                r["hdr_date"] = "yesterday"
-                r["hdr_last_modified"] = \
-                    "Sunday, 06-Nov-94 08:49:37 GMT"
-            else:
-                # Expires without a Date: no freshness basis
-                r["hdr_expires"] = _imf_date(d + _dt.timedelta(days=1))
-            r["hdr_etag"] = '""' if i % 4 == 3 else None
-        rows.append(r)
-    return rows
-
-
-def fetch_history_rows(n_urls: int = 24, seed: int = 42) -> list[dict]:
-    """Deterministic multi-fetch histories (url, seq, fetched_epoch,
-    etag, content_md5) for the revisit-economics ops: static pages
-    (every revalidation saved), fast-changing, periodic (every 3rd
-    fetch), etag-less, weak-validator (W/ prefixes — If-None-Match
-    uses WEAK comparison per RFC 9110), and A/B flapping content.
-    Committed as fixtures/fetch_history_seed42.parquet."""
-    rows: list[dict] = []
-    base = 1740000000
-    for i in range(n_urls):
-        host = _HOSTS[(i * 41) % len(_HOSTS)]
-        url = f"https://{host}/hist-{i}"
-        k = i % 6
-        n_fetches = 2 + (i * 5) % 7
-        gap = 3600 * (1 + i % 5) + 60 * i
-        ver = 0
-        for seq in range(n_fetches):
-            if k == 0:
-                pass                       # static: ver stays 0
-            elif k == 1:
-                ver = seq                  # changes every fetch
-            elif k == 2:
-                ver = seq // 3             # changes every 3rd
-            elif k == 3:
-                ver = seq // 2             # etag-less, some change
-            elif k == 4:
-                ver = seq // 2             # weak etags
-            else:
-                ver = seq % 2              # A/B flapping
-            etag = None if k == 3 else (
-                f'W/"h{i}-{ver}"' if k == 4 else f'"h{i}-{ver}"')
-            rows.append({"url": url, "seq": seq,
-                         "fetched_epoch": base + i * 997
-                         + seq * gap,
-                         "etag": etag,
-                         "content_md5": f"md5-{i}-{ver}"})
-    return rows
-
-
-def set_cookie_rows(n: int = 72, seed: int = 42) -> list[dict]:
-    """Deterministic Set-Cookie headers (url, seq, fetched_epoch,
-    set_cookie) for the cookie privacy family: session cookies,
-    Max-Age / Expires persistence (and Max-Age-wins conflicts),
-    deletions (negative Max-Age), untrusted Max-Age shapes, ignored
-    headers (no '=' / empty name), duplicate attributes (last wins),
-    OWS-heavy segments, rejected rfc850 Expires, Domain/Path
-    normalization, SameSite variants, and the tracker shape
-    (persistent SameSite=None >= 30 days). ~3 headers per url.
-    Committed as fixtures/set_cookie_seed42_n72.parquet."""
-    base = _dt.datetime(2025, 3, 1, 12, 0, 0)
-    rows: list[dict] = []
-    for i in range(n):
-        host = _HOSTS[((i // 3) * 43) % len(_HOSTS)]
-        d = base + _dt.timedelta(hours=(i // 3) * 13, minutes=i)
-        k = i % 12
-        if k == 0:
-            sc = f"sid=abc{i}; Path=/; HttpOnly"
-        elif k == 1:
-            sc = (f"pref=p{i}; Max-Age={3600 * (1 + i % 50)}; "
-                  "Secure; SameSite=Lax")
-        elif k == 2:
-            # persistent via Expires, NO SameSite (NULL must read
-            # "not a tracker" in the host rollup)
-            sc = (f'uid="u-{i}"; Expires='
-                  f"{_imf_date(d + _dt.timedelta(days=200 + i))}; "
-                  f"Domain=.{host}; Path=/app")
-        elif k == 3:
-            # Max-Age wins over the (stale) Expires; tracker shape
-            sc = (f"tk=t{i}; Max-Age={86400 * 400}; Expires="
-                  f"{_imf_date(d - _dt.timedelta(days=1))}; "
-                  "SameSite=None; Secure")
-        elif k == 4:
-            sc = "old=; Max-Age=-1; Path=/"
-        elif k == 5:
-            sc = (f"x=v{i}; Max-Age=abc; Secure" if (i // 12) % 2 else
-                  f"x=v{i}; Max-Age=9999999999999999")
-        elif k == 6:
-            sc = "=oops; Path=/" if (i // 12) % 2 else "bareword"
-        elif k == 7:
-            sc = (f" a{i} = 1 ;  Path=/one ; path=/two ; "
-                  "SAMESITE=STRICT ;;")
-        elif k == 8:
-            sc = f"s=1; Expires=Sunday, 06-Nov-94 08:49:37 GMT"
-        elif k == 9:
-            sc = (f"d=1; Domain=.WWW.{host}; path=nope" if (i // 12) % 2
-                  else "d=2; Domain; Path=/")
-        elif k == 10:
-            sc = ("v=1; SameSite=NoNe; Max-Age=100" if (i // 12) % 2 else
-                  "v=2; SameSite=Weird; HttpOnly")
-        else:
-            # 30-day SameSite=None boundary: exactly TRACKER_MIN_S
-            sc = ('q="quoted value"; Secure; HttpOnly; '
-                  "Max-Age=2592000; SameSite=none")
-        rows.append({
-            "url": f"https://{host}/page-{i // 3}",
-            "seq": i % 3,
-            "fetched_epoch": int(
-                (d - _dt.datetime(1970, 1, 1)).total_seconds()),
-            "set_cookie": sc})
-    return rows
-
-
-def sec_header_rows(n: int = 60, seed: int = 42) -> list[dict]:
-    """Deterministic security-header captures (url, hsts, csp,
-    referrer_policy, x_frame_options) for the posture family:
-    full-strict hosts, invalid HSTS (duplicate directive / missing
-    or 16-digit max-age / empty name), quoted max-age, CSP with
-    unsafe-inline/eval, duplicate CSP directives (first wins), empty
-    segments, bare directives, case/OWS variants, obsolete
-    ALLOW-FROM, invalid tokens, and all-absent rows. Committed as
-    fixtures/sec_headers_seed42_n60.parquet."""
-    rows: list[dict] = []
-    for i in range(n):
-        # dedicated two-capture hosts: the posture grade of each
-        # shape pair stays isolated (no cross-shape pollution)
-        host = f"sec{i // 2}.example.net"
-        r = {"url": f"https://{host}/cap-{i}", "hsts": None,
-             "csp": None, "referrer_policy": None,
-             "x_frame_options": None}
-        k = i % 10
-        if k == 0:
-            r["hsts"] = ("max-age=63072000; includeSubDomains; "
-                         "preload")
-            r["csp"] = ("default-src 'self'; script-src 'self' "
-                        "cdn.example.com; frame-ancestors 'none'")
-            r["referrer_policy"] = "strict-origin-when-cross-origin"
-            r["x_frame_options"] = "DENY"
-        elif k == 1:
-            r["hsts"] = "max-age=300; max-age=600"      # dup: invalid
-            r["x_frame_options"] = "SAMEORIGIN"
-        elif k == 2:
-            r["hsts"] = 'max-age="86400"'
-            r["csp"] = ("default-src *; script-src 'unsafe-inline' "
-                        "'unsafe-eval'")
-            r["referrer_policy"] = "origin"
-            r["x_frame_options"] = "sameorigin"
-        elif k == 3:
-            r["hsts"] = "includeSubDomains"             # no max-age
-            r["csp"] = ("default-src 'self'; default-src *; "
-                        "img-src data:")
-            r["referrer_policy"] = "no-referrer, unsafe-url"
-            r["x_frame_options"] = "ALLOW-FROM https://x.example"
-        elif k == 4:
-            pass                                        # all absent
-        elif k == 5:
-            # paired with the all-absent k=4 capture on the same
-            # host: the three variants max the host at score 0 / 2 /
-            # 3 — grades F, D and C all reachable
-            v = (i // 10) % 3
-            if v == 0:
-                r["hsts"] = "max-age=" + "9" * 16
-            elif v == 1:
-                r["hsts"] = "=x; max-age=60"
-                r["csp"] = "; ; script-src 'unsafe-inline' ;"
-            else:
-                r["csp"] = "; ; default-src 'self' ;"
-            r["referrer_policy"] = "not-a-policy"
-            r["x_frame_options"] = "weird"
-        elif k == 6:
-            r["hsts"] = "max-age=0"                     # kill switch
-            r["csp"] = "upgrade-insecure-requests"
-            r["referrer_policy"] = ",same-origin,"
-        elif k == 7:
-            r["hsts"] = " max-age = 60 ; preload "
-            r["csp"] = "default-src\t'self'"
-            r["referrer_policy"] = "ORIGIN"
-            r["x_frame_options"] = " deny "
-        elif k == 8:
-            r["hsts"] = "preload; max-age=31536000"
-            r["csp"] = "script-src 'UNSAFE-INLINE'"
-            r["referrer_policy"] = "no-referrer-when-downgrade"
-            r["x_frame_options"] = "DENY"
-        else:
-            r["csp"] = "frame-ancestors 'self'"
-            r["referrer_policy"] = "same-origin"
-        rows.append(r)
-    return rows
-
-
-def bib_file_rows(n: int = 24, seed: int = 42) -> list[dict]:
-    """Deterministic synthetic BibTeX files: (url, payload). Cycles
-    macro definitions + # concatenation, paren-delimited entries,
-    trailing commas, quoted values with protective braces, @comment
-    blocks with nested braces (and a decoy entry inside), duplicate/
-    case-variant fields, @preamble, undefined macros, an
-    unterminated final entry after good ones, UTF-8 vs cp1252
-    accents (decode fallback), fieldless keys, and '@'-free junk.
-    Golden: fixtures/golden_bibtex_seed42_n24.parquet."""
-    rows: list[dict] = []
-    for i in range(n):
-        url = f"https://bib{i % 7}.example.edu/ref-{i}.bib"
-        k = i % 8
-        if k == 0:
-            body = (
-                f'@string{{venue{i} = "Conf.~on Data"}}\n'
-                f'@string{{pp = "pages " # {1 + i}}}\n'
-                f"@article{{art{i},\n"
-                f"  title = {{Study {i} of {{DNA}} Motifs\n"
-                f"      across lines}},\n"
-                f'  author = "Doe, A. and Roe, B.",\n'
-                f"  year = {1990 + i},\n"
-                f"  journal = venue{i},\n"
-                f"  note = pp\n"
-                f"}}\n"
-                f"@book{{bk{i}, title = {{Vol {i}}}, year = 2001}}\n")
-        elif k == 1:
-            # crossref target key matches case-INsensitively
-            body = (
-                f"@inproceedings(conf{i},\n"
-                f"  title = {{Paren Entry {i}}},\n"
-                f"  booktitle = {{Proc {i}}},\n"
-                f"  pages = {10 * i},\n"
-                f"  crossref = {{PROC{i}}},\n"
-                f")\n"
-                f"@proceedings{{proc{i},\n"
-                f"  booktitle = {{Shared Proc {i}}},\n"
-                f"  year = {2015 + i % 5},\n"
-                f"  publisher = {{Pub {i}}}\n"
-                f"}}\n")
-        elif k == 2:
-            body = (
-                f"@article{{q{i},\n"
-                f'  title = "A {{"}}quoted{{"}} brace trick {i}",\n'
-                f'  month = "jan" # "--" # "feb",\n'
-                f"}}\n")
-        elif k == 3:
-            body = (
-                "leading junk, not entries: a@b.c\n"
-                f"@comment{{ skip {{nested {{deep}}}} "
-                f"@article{{decoy{i}, x=1}} }}\n"
-                f"@misc{{only{i}}}\n"
-                f"@techreport{{tr{i}, institution = {{Lab {i}}}}}\n")
-        elif k == 4:
-            body = (
-                f"@PREAMBLE{{ \"\\\\def\\\\x{{{i}}}\" }}\n"
-                f"@Article{{dup{i},\n"
-                f"  Year = {2000 + i},\n"
-                f"  YEAR = 1111,\n"
-                f"  title = {{First Wins {i}}}\n"
-                f"}}\n")
-        elif k == 5:
-            body = (
-                f"@misc{{ok{i}, note = undefined{i} # \" tail\"}}\n"
-                f"@article{{bad{i}, title = {{never closed {i}\n")
-        elif k == 6:
-            txt = (f"@article{{u{i},\n"
-                   f"  author = {{Émile Müller {i}}},\n"
-                   f"  title = {{Café {i}}}\n}}\n")
-            rows.append({"url": url,
-                         "payload": txt.encode(
-                             "utf-8" if (i // 8) % 2 else "cp1252")})
-            continue
-        else:
-            body = ("no at-signs here at all\n" if (i // 8) % 2
-                    else "")
-        rows.append({"url": url, "payload": body.encode("utf-8")})
-    return rows
-
-
-def md_doc_rows(n: int = 20, seed: int = 42) -> list[dict]:
-    """Deterministic markdown documents (url, payload) for the
-    front-matter family: full Jekyll-style blocks (scalars, quoted
-    values, block + inline lists, comments, duplicate keys),
-    BOM/CRLF variants, '...' terminators, empty blocks, nested maps
-    (ignored per subset), documents without front matter, and
-    unterminated blocks. Golden:
-    fixtures/golden_frontmatter_seed42_n20.parquet."""
-    rows: list[dict] = []
-    for i in range(n):
-        url = f"https://md{i % 5}.example.dev/post-{i}.md"
-        k = i % 8
-        if k == 0:
-            body = (f"---\n"
-                    f'title: "Post {i}: a study"\n'
-                    f"date: 2024-0{1 + i % 9}-15\n"
-                    f"tags:\n  - nlp\n  - 'web {i}'\n"
-                    f"draft: {'true' if i % 3 else 'false'}\n"
-                    f"---\n# Heading\nBody {i}.\n")
-        elif k == 1:
-            body = (f"---\r\n"
-                    f"title: CRLF Doc {i}\r\n"
-                    f"categories: [a, b , \"c {i}\"]\r\n"
-                    f"...\r\n"
-                    f"Body.\r\n")
-        elif k == 2:
-            body = (f"---\n"
-                    f"# build metadata\n"
-                    f"title: First {i}\n"
-                    f"title: Last Wins {i}\n"
-                    f"weight_2: -3\n"
-                    f"empty-list: []\n"
-                    f"nullish:\n"
-                    f"nested:\n  sub: ignored\n"
-                    f"---\nBody\n")
-        elif k == 3:
-            body = f"# No Front Matter {i}\n\nJust prose.\n"
-        elif k == 4:
-            body = f"---\ntitle: Unterminated {i}\nNo end marker.\n"
-        elif k == 5:
-            body = ("\ufeff---\n"
-                    f"author: 'O''Brien {i}'\n"
-                    f"summary: \"quotes \\\" stay\"\n"
-                    "---\nBody after BOM.\n")
-        elif k == 6:
-            body = "---\n---\nEmpty block body.\n"
-        else:
-            body = (f"---\n"
-                    f"series:\n- one\n- two {i}\n"
-                    f"rating: 4.5\n"
-                    f"---\nBody.\n")
-        rows.append({"url": url, "payload": body.encode("utf-8")})
-    return rows
-
-
-def llms_txt_rows(n: int = 16, seed: int = 42) -> list[dict]:
-    """Deterministic llms.txt files (url, payload): canonical
-    title+summary+sections shape, an Optional section, preamble
-    links before any H2, * bullets, desc-less links, malformed
-    items (ignored), multi-line blockquotes, prose noise, missing
-    H1, CRLF, and empty files. Golden:
-    fixtures/golden_llms_seed42_n16.parquet."""
-    rows: list[dict] = []
-    for i in range(n):
-        url = f"https://llms{i}.example.org/llms.txt"
-        k = i % 6
-        if k == 0:
-            body = (f"# Site {i} Docs\n\n"
-                    f"> Curated docs for site {i},\n"
-                    f"> ranked by usefulness.\n\n"
-                    f"Some prose the parser ignores.\n\n"
-                    f"## Docs\n"
-                    f"- [Intro](https://s{i}.example.org/intro.md):"
-                    f" Start here\n"
-                    f"- [API](https://s{i}.example.org/api.md): "
-                    f"Reference\n\n"
-                    f"## Optional\n"
-                    f"- [Changelog](https://s{i}.example.org/"
-                    f"log.md)\n")
-        elif k == 1:
-            body = (f"# Minimal {i}\n"
-                    f"- [Pre](https://p{i}.example.org/a): before "
-                    f"any section\n"
-                    f"## Guides\n"
-                    f"* [Star bullet](https://p{i}.example.org/b)\n"
-                    f"-[no space](https://bad.example.org)\n"
-                    f"- [unclosed](https://bad.example.org\n")
-        elif k == 2:
-            body = (f"## Sectionless Title {i}\r\n"
-                    f"- [CRLF](https://c{i}.example.org/x): desc "
-                    f"with: colon\r\n")
-        elif k == 3:
-            body = (f"> Quote without title {i}\n\n"
-                    f"# Late Title {i}\n"
-                    f"# Second H1 ignored\n"
-                    f"## S\n"
-                    f"- [L](https://l{i}.example.org/)\n")
-        elif k == 4:
-            body = f"Just prose {i}, no structure at all.\n"
-        else:
-            body = ""
-        rows.append({"url": url, "payload": body.encode("utf-8")})
-    return rows
 
 
 def license_page_rows(n: int = 40, seed: int = 42) -> list[dict]:
@@ -4055,82 +3067,6 @@ def license_page_rows(n: int = 40, seed: int = 42) -> list[dict]:
             rows.append({"url": url, "href": None, "text":
                          f"Copyright {1990 + i}. all rights "
                          "reserved. Contact us."})
-    return rows
-
-
-def infra_header_rows(n: int = 48, seed: int = 42) -> list[dict]:
-    """Deterministic infrastructure headers (url, alt_svc, server):
-    h3/h2 alternatives with ma/persist params, `clear`, dropped
-    shapes (no '=', portless authority, bad port), last-VALID-wins
-    duplicate ma, quoted commas inside authorities, untrusted
-    16-digit ma (falls back to the spec default), and Server values
-    with nested comments / bare products / IIS-style versions.
-    Committed as fixtures/infra_headers_seed42_n48.parquet."""
-    rows: list[dict] = []
-    for i in range(n):
-        host = f"infra{i // 2}.example.net"
-        r = {"url": f"https://{host}/cap-{i}", "alt_svc": None,
-             "server": None}
-        k = i % 8
-        if k == 0:
-            r["alt_svc"] = (f'h3=":443"; ma={3600 * (1 + i % 9)}, '
-                            'h2=":443"')
-            r["server"] = f"nginx/1.25.{i % 4}"
-        elif k == 1:
-            r["alt_svc"] = (f'h3-29="alt{i}.example.com:8443"; '
-                            "persist=1")
-            r["server"] = ("Apache/2.4.57 (Ubuntu) "
-                           "OpenSSL/3.0.2")
-        elif k == 2:
-            r["alt_svc"] = "clear"
-            r["server"] = "cloudflare"
-        elif k == 3:
-            r["server"] = "Microsoft-IIS/10.0"
-        elif k == 4:
-            r["alt_svc"] = ('h2=":443"; ma=abc; ma=60, bogus, '
-                            '=x, h3=":99999"')
-            r["server"] = "gws (comment (nested) more) Product/1.2"
-        elif k == 5:
-            r["alt_svc"] = (f'h3="noport.example", h3=":443"; '
-                            f'ma={"9" * 16}')
-        elif k == 6:
-            r["alt_svc"] = 'h3=":443"; x="a,b", h2=":443"; ma=300'
-            r["server"] = "Varnish"
-        # k == 7: both absent
-        rows.append(r)
-    return rows
-
-
-def csv_file_rows(n: int = 18, seed: int = 42) -> list[dict]:
-    """Deterministic CSV/DSV files (url, payload): comma files with
-    quoted escapes + headers, semicolon files without headers
-    (numeric first row), ragged TSVs (rows wider than the header),
-    pipe files with CRLF + empty physical rows, quoted embedded
-    newlines with utf-8/cp1252 variants, single-column files and
-    empty payloads. Golden:
-    fixtures/golden_csv_seed42_n18.parquet."""
-    rows: list[dict] = []
-    for i in range(n):
-        url = f"https://data{i}.example.org/t-{i}.csv"
-        k = i % 6
-        if k == 0:
-            body = (f'id,name,note\n{i},"Smith, J.","say ""hi"""\n'
-                    f'{i + 1},Plain,last\n')
-        elif k == 1:
-            body = f"{i};2;3\n4;5;6\n7;8;9\n"
-        elif k == 2:
-            body = (f"a\tb\nv{i}\tw\tEXTRA\nx\t\n")
-        elif k == 3:
-            body = (f"h1|h2\r\n\r\np{i}|q\r\nr|s\r\n")
-        elif k == 4:
-            txt = (f'k,v\n"multi\nline {i}","Caf\xe9"\n')
-            rows.append({"url": url, "payload": txt.encode(
-                "utf-8" if (i // 6) % 2 else "cp1252")})
-            continue
-        else:
-            body = (f"single column only {i}\nsecond line\n"
-                    if (i // 6) % 2 else "")
-        rows.append({"url": url, "payload": body.encode("utf-8")})
     return rows
 
 
@@ -4205,481 +3141,6 @@ def xlsx_file_rows(n: int = 16, seed: int = 42) -> list[dict]:
     return rows
 
 
-def po_file_rows(n: int = 20, seed: int = 42) -> list[dict]:
-    """Deterministic gettext PO catalogs (url, payload): fr/de/ja
-    headers (Language + Plural-Forms), fuzzy and obsolete entries,
-    msgctxt, plural forms, width-wrapped literals, C escapes (incl.
-    an unknown one kept verbatim), untranslated + length-ratio
-    outlier entries for the bitext gate, a headerless file with a
-    malformed entry, a cp1252 payload, and empty payloads. Golden:
-    fixtures/golden_po_seed42_n20.parquet."""
-    from .extractor import pox
-
-    rows: list[dict] = []
-    for i in range(n):
-        url = f"https://l10n{i}.example.org/app-{i}.po"
-        k = i % 5
-        if k == 0:
-            body = pox.build_po(
-                [{"msgid": f"Hello world {i}",
-                  "msgstr": f"Bonjour le monde {i}",
-                  "refs": ["src/main.c:10", "src/ui.c:42"]},
-                 {"msgid": "Save file", "msgstr": "Enregistrer",
-                  "fuzzy": True},
-                 {"msgid": "Quit", "msgstr": "Quitter"}],
-                header={"Project-Id-Version": f"app {i}",
-                        "Language": "fr",
-                        "Plural-Forms":
-                            "nplurals=2; plural=(n > 1);"})
-        elif k == 1:
-            body = pox.build_po(
-                [{"ctxt": "menu", "msgid": "Open",
-                  "msgstr": "Öffnen"},
-                 {"msgid": "%d file", "msgid_plural": "%d files",
-                  "msgstr": "%d Datei", "msgstr_1": "%d Dateien",
-                  "n_plurals": 2},
-                 {"msgid": "A long sentence about document "
-                           f"processing number {i}",
-                  "msgstr": "Ein langer Satz über die "
-                            f"Dokumentverarbeitung Nummer {i}"}],
-                header={"Language": "de"}, width=24)
-        elif k == 2:
-            body = pox.build_po(
-                [{"msgid": "Cancel", "msgstr": "キャンセル"},
-                 # untranslated: empty msgstr (gate drops)
-                 {"msgid": f"Pending string {i}", "msgstr": ""},
-                 # ratio outlier: target 4x the source (gate drops
-                 # at max_ratio=3)
-                 {"msgid": "Hi", "msgstr": "x" * 40}],
-                header={"Language": "ja",
-                        "Plural-Forms": "nplurals=1; plural=0;"})
-        elif k == 3:
-            body = (f'msgid "escaped\\tok {i}"\n'
-                    'msgstr "line1\\nline2 \\"q\\" \\q"\n'
-                    "\n"
-                    'msgid "broken\n'
-                    'msgstr "dropped"\n'
-                    "\n"
-                    '#~ msgid "old"\n'
-                    '#~ msgstr "alt"\n')
-        else:
-            if (i // 5) % 2:
-                body = pox.build_po(
-                    [{"msgid": "Coffee", "msgstr": "Caf\xe9"}],
-                    header={"Language": "fr"})
-                rows.append({"url": url,
-                             "payload": body.encode("cp1252")})
-                continue
-            body = ""
-        rows.append({"url": url, "payload": body.encode("utf-8")})
-    return rows
-
-
-def tmx_file_rows(n: int = 16, seed: int = 42) -> list[dict]:
-    """Deterministic TMX memories (url, payload): en->fr/de pairs
-    with tuids, a 3-language tu, inline code tags (bpt/ept/ph
-    dropped, hi kept), srclang='*all*' (first tuv = source),
-    region-cased langs (EN-US lowercased), a tuv missing its lang
-    (skipped), ratio outliers for the gate, namespaced documents,
-    and malformed/non-tmx payloads. Golden:
-    fixtures/golden_tmx_seed42_n16.parquet."""
-    from .extractor import tmxx
-
-    rows: list[dict] = []
-    for i in range(n):
-        url = f"https://tm{i}.example.org/mem-{i}.tmx"
-        k = i % 5
-        if k == 0:
-            body = tmxx.build_tmx([
-                {"tuid": f"t{i}-1", "tuvs": [
-                    ("en", f"Click the button {i}"),
-                    ("fr", f"Cliquez sur le bouton {i}")]},
-                {"tuid": f"t{i}-2", "tuvs": [
-                    ("en", "Save <bpt i=\"1\">&lt;b&gt;</bpt>now"
-                           "<ept i=\"1\">&lt;/b&gt;</ept> please"),
-                    ("fr", "Enregistrez <hi>maintenant</hi> svp")]},
-            ], srclang="en")
-        elif k == 1:
-            body = tmxx.build_tmx([
-                {"tuid": None, "tuvs": [
-                    ("EN-US", f"Color {i}"),
-                    ("en-GB", f"Colour {i}"),
-                    ("de", f"Farbe {i}")]},
-            ], srclang="EN-US")
-        elif k == 2:
-            # *all*: first tuv is the source; one tuv lacks lang
-            body = tmxx.build_tmx([
-                {"tuid": f"a{i}", "tuvs": [
-                    ("ja", f"設定 {i}"), ("en", f"Settings {i}")]},
-                {"tuid": f"b{i}", "tuvs": [
-                    ("en", "Hi"), ("de", "x" * 40)]},
-            ], srclang="*all*").replace(
-                f'<tuv xml:lang="ja"><seg>設定 {i}</seg></tuv>',
-                f'<tuv xml:lang="ja"><seg>設定 {i}</seg></tuv>'
-                '<tuv><seg>no lang</seg></tuv>', 1)
-        elif k == 3:
-            # namespaced document, ph code dropped (tail kept)
-            body = (f'<x:tmx xmlns:x="urn:ex" version="1.4">'
-                    '<x:header srclang="en"/>'
-                    '<x:body><x:tu tuid="ns1">'
-                    '<x:tuv xml:lang="en"><x:seg>Print '
-                    '<x:ph x="1">%s</x:ph> pages</x:seg></x:tuv>'
-                    f'<x:tuv xml:lang="es"><x:seg>Imprimir {i} '
-                    "páginas</x:seg></x:tuv>"
-                    "</x:tu></x:body></x:tmx>")
-        else:
-            body = ("<notatmx/>" if (i // 5) % 2
-                    else "<tmx version='1.4'><body><tu>broken")
-        rows.append({"url": url, "payload": body.encode("utf-8")})
-    return rows
-
-
-def diff_file_rows(n: int = 40, seed: int = 42) -> list[dict]:
-    """Deterministic synthetic patch files: (url, payload). Cycles
-    git-style multi-file patches (multi-hunk modify with section
-    headers, rename + similarity, new/deleted file via /dev/null,
-    binary markers, quoted paths with escapes), plain unified diffs
-    with TAB+timestamp headers, format-patch mail framing around the
-    diff, and junk payloads with no sections (F5). Feeds
-    fixtures/golden_diff_hunks_seed42_n*.parquet."""
-    out = []
-    for i in range(n):
-        rng = _rng(seed * 479001599, i)
-        url = f"patch://change-{i}"
-        k = i % 6
-        if k == 5:
-            out.append({"url": url, "payload": _garbage(rng, i)
-                        if i % 2 else b"just words\nno diff here\n"})
-            continue
-        chunks: list[str] = []
-        if k == 4:
-            # format-patch mail framing: headers + commit message
-            chunks += [f"From {i:040x} Mon Sep 17 00:00:00 2001",
-                       f"From: Dev {i % 7} <dev{i % 7}@example.com>",
-                       f"Subject: [PATCH] change {i}",
-                       "", f"{_sentence(rng, 4, 9)}", "---", ""]
-        path = f"src/mod_{i % 9}/file_{i}.py"
-        chunks += [f"diff --git a/{path} b/{path}",
-                   f"index {i:07x}..{i + 1:07x} 100644",
-                   f"--- a/{path}", f"+++ b/{path}"]
-        for h in range(1 + i % 3):
-            old_start = 10 + h * 30 + i % 7
-            n_ctx, n_add, n_rem = 2, 1 + (i + h) % 3, (i + h) % 2
-            old_len = n_ctx * 2 + n_rem
-            new_len = n_ctx * 2 + n_add
-            sec = f"def fn_{h}():" if h % 2 else None
-            chunks.append(
-                f"@@ -{old_start},{old_len} "
-                f"+{old_start + h},{new_len} @@"
-                + (f" {sec}" if sec else ""))
-            chunks += [f" ctx {h} a", f" ctx {h} b"]
-            chunks += [f"-removed {i}-{h}-{r}" for r in range(n_rem)]
-            chunks += [f"+added {_sentence(rng, 2, 4)}"
-                       for _ in range(n_add)]
-            chunks += [f" ctx {h} c", f" ctx {h} d"]
-        if k == 1:
-            old = f"docs/old {i}.md"
-            chunks += [f'diff --git "a/{old}" "b/docs/new\\t{i}.md"',
-                       f"similarity index {80 + i % 20}%",
-                       f"rename from {old}",
-                       f"rename to docs/new\\t{i}.md"]
-            chunks += [f"diff --git a/img_{i}.png b/img_{i}.png",
-                       f"Binary files a/img_{i}.png and "
-                       f"b/img_{i}.png differ"]
-        elif k == 2:
-            chunks += [f"diff --git a/new_{i}.cfg b/new_{i}.cfg",
-                       "new file mode 100644",
-                       "--- /dev/null", f"+++ b/new_{i}.cfg",
-                       f"@@ -0,0 +1,{2 + i % 3} @@"]
-            chunks += [f"+cfg line {j}" for j in range(2 + i % 3)]
-            chunks += ["\\ No newline at end of file"]
-        elif k == 3:
-            chunks += [f"--- lib/gone_{i}.c\t2024-01-01 00:00:00",
-                       "+++ /dev/null",
-                       "@@ -1,2 +0,0 @@", f"-line one {i}",
-                       "-line two"]
-        payload = ("\n".join(chunks) + "\n").encode()
-        out.append({"url": url, "payload": payload})
-    return out
-
-
-def mhtml_file_rows(n: int = 16, seed: int = 42) -> list[dict]:
-    """Deterministic MHTML snapshots: (url, payload). Shapes cycle
-    i % 5: Chrome-style snapshot (html root + png + css, Snapshot-
-    Content-Location) / start-param root selection with a subframe
-    and a font / no snapshot header + qp special chars (url from the
-    root's Content-Location) / non-HTML root + a cid-only part /
-    malformed payloads (wrong multipart class, truncation, garbage).
-    Golden: fixtures/golden_mhtml_seed42_n16.parquet."""
-    from .extractor import mhtmlx
-
-    rows: list[dict] = []
-    for i in range(n):
-        url = f"https://archive{i}.example.org/saved-{i}.mht"
-        k = i % 5
-        page = f"https://site{i}.example.com/article/{i}"
-        if k == 0:
-            html = (f"<html><head><title>Article {i}</title></head>"
-                    f"<body><div class='content'><p>Saved article "
-                    f"number {i} with several words of body text "
-                    f"for extraction.</p></div>"
-                    f"<img src='img/hero-{i}.png'></body></html>")
-            payload = mhtmlx.build_mhtml(
-                f"----MultipartBoundary--{i:04d}", [
-                    {"content_type": "text/html; charset=utf-8",
-                     "location": page, "cid": f"frame-{i}",
-                     "text": html},
-                    {"content_type": "image/png",
-                     "location": f"https://site{i}.example.com/"
-                                 f"img/hero-{i}.png",
-                     "body": b"\x89PNG\r\n\x1a\n" + bytes(24)},
-                    {"content_type": "text/css",
-                     "location": f"https://site{i}.example.com/s.css",
-                     "text": f".a{i}{{margin:0}}"},
-                ], snapshot_url=page, start=f"frame-{i}")
-        elif k == 1:
-            payload = mhtmlx.build_mhtml(f"bnd-{i}", [
-                {"content_type": "text/html",
-                 "location": f"{page}/iframe", "cid": f"sub-{i}",
-                 "text": f"<p>subframe {i}</p>"},
-                {"content_type": "text/html; charset=utf-8",
-                 "location": page, "cid": f"main-{i}",
-                 "text": f"<html><body><h1>Main {i}</h1><p>The "
-                         f"start parameter selects this part even "
-                         f"though it is second.</p></body></html>"},
-                {"content_type": "font/woff2",
-                 "location": f"https://cdn{i}.example.com/f.woff2",
-                 "body": b"wOF2" + bytes(16 + i)},
-            ], snapshot_url=page, start=f"main-{i}")
-        elif k == 2:
-            html = (f"<html><body><p>Café numéro {i} = "
-                    f"spécial</p></body></html>")
-            payload = mhtmlx.build_mhtml(f"b{i}", [
-                {"content_type": "text/html; charset=utf-8",
-                 "location": page, "text": html},
-            ])
-        elif k == 3:
-            payload = mhtmlx.build_mhtml(f"b{i}", [
-                {"content_type": "text/plain",
-                 "location": f"{page}.txt",
-                 "text": f"plain root {i}"},
-                {"content_type": "application/octet-stream",
-                 "cid": f"blob-{i}", "body": bytes(10 + i)},
-            ], snapshot_url=f"{page}.txt")
-        else:
-            variant = (i // 5) % 3
-            if variant == 0:
-                payload = (b"MIME-Version: 1.0\r\nContent-Type: "
-                           b"multipart/mixed; boundary=\"x\"\r\n"
-                           b"\r\n--x\r\nContent-Type: text/html\r\n"
-                           b"\r\n<p>not related</p>\r\n--x--\r\n")
-            elif variant == 1:
-                good = mhtmlx.build_mhtml(f"b{i}", [
-                    {"content_type": "text/html", "location": page,
-                     "text": "<p>cut</p>"}])
-                payload = good[:40]
-            else:
-                payload = b"\x00\x01garbage not mime\xff"
-        rows.append({"url": url, "payload": payload})
-    return rows
-
-
-def har_file_rows(n: int = 12, seed: int = 42) -> list[dict]:
-    """Deterministic HAR exports: (url, payload). Shapes cycle
-    i % 4: single-page load (document + css + js + img + xhr, a
-    third-party CDN, h2, exact .5ms timings) / two pages with a
-    redirect hop and -1 unknown sizes / edge fields (no pageref,
-    charset-parameterized mime, status 0 abort, missing timings) /
-    malformed payloads (non-JSON, no log, entries not a list).
-    Golden: fixtures/golden_har_seed42_n12.parquet."""
-    from .extractor import harx
-
-    rows: list[dict] = []
-    for i in range(n):
-        url = f"https://qa{i}.example.org/capture-{i}.har"
-        k = i % 4
-        site = f"https://www.shop{i}.example.com"
-        if k == 0:
-            pages = [{"id": f"page_{i}_1",
-                      "startedDateTime": f"2026-03-0{i % 9 + 1}"
-                                         "T10:00:00.000Z",
-                      "title": f"Shop {i} — home",
-                      "pageTimings": {"onContentLoad": 240.5 + i,
-                                      "onLoad": 900.25 + i}}]
-            entries = [
-                {"pageref": f"page_{i}_1",
-                 "startedDateTime": f"2026-03-0{i % 9 + 1}"
-                                    "T10:00:00.100Z",
-                 "request": {"method": "GET", "url": f"{site}/"},
-                 "response": {"status": 200, "statusText": "OK",
-                              "httpVersion": "h2",
-                              "bodySize": 14200 + i,
-                              "content": {"size": 50100 + i,
-                                          "mimeType":
-                                          "text/html; charset=utf-8"}},
-                 "time": 120.5, "serverIPAddress": "203.0.113.7"},
-                {"pageref": f"page_{i}_1",
-                 "request": {"method": "GET",
-                             "url": f"{site}/assets/app.css"},
-                 "response": {"status": 200, "statusText": "OK",
-                              "httpVersion": "h2", "bodySize": 8000,
-                              "content": {"size": 31000,
-                                          "mimeType": "text/css"}},
-                 "time": 45.25},
-                {"pageref": f"page_{i}_1",
-                 "request": {"method": "GET",
-                             "url": f"https://cdn{i}.example.net/"
-                                    f"lib/app.js"},
-                 "response": {"status": 200, "statusText": "OK",
-                              "httpVersion": "h2",
-                              "bodySize": 52000 + i,
-                              "content": {"size": 160000,
-                                          "mimeType":
-                                          "application/javascript"}},
-                 "time": 88.5, "serverIPAddress": "198.51.100.9"},
-                {"pageref": f"page_{i}_1",
-                 "request": {"method": "GET",
-                             "url": f"{site}/img/hero.webp"},
-                 "response": {"status": 200, "statusText": "OK",
-                              "httpVersion": "h2", "bodySize": 91000,
-                              "content": {"size": 91000,
-                                          "mimeType": "image/webp"}},
-                 "time": 160.75},
-                {"pageref": f"page_{i}_1",
-                 "request": {"method": "POST",
-                             "url": f"{site}/api/cart"},
-                 "response": {"status": 201, "statusText": "Created",
-                              "httpVersion": "h2", "bodySize": 310,
-                              "content": {"size": 310,
-                                          "mimeType":
-                                          "application/json"}},
-                 "time": 65.0},
-            ]
-        elif k == 1:
-            pages = [{"id": f"p{i}a",
-                      "startedDateTime": "2026-04-01T08:00:00.000Z",
-                      "title": f"Landing {i}",
-                      "pageTimings": {"onLoad": 500.5}},
-                     {"id": f"p{i}b",
-                      "startedDateTime": "2026-04-01T08:00:05.000Z",
-                      "title": f"Checkout {i}",
-                      "pageTimings": {"onContentLoad": 220.0}}]
-            entries = [
-                {"pageref": f"p{i}a",
-                 "request": {"method": "GET",
-                             "url": f"http://shop{i}.example.com/"},
-                 "response": {"status": 301,
-                              "statusText": "Moved Permanently",
-                              "httpVersion": "HTTP/1.1",
-                              "bodySize": -1,
-                              "content": {"size": -1,
-                                          "mimeType": ""}},
-                 "time": 30.5},
-                {"pageref": f"p{i}a",
-                 "request": {"method": "GET", "url": f"{site}/"},
-                 "response": {"status": 200, "statusText": "OK",
-                              "httpVersion": "h2", "bodySize": 12000,
-                              "content": {"size": 40000 + i,
-                                          "mimeType": "text/html"}},
-                 "time": 110.25},
-                {"pageref": f"p{i}b",
-                 "request": {"method": "GET",
-                             "url": f"{site}/checkout"},
-                 "response": {"status": 200, "statusText": "OK",
-                              "httpVersion": "h2", "bodySize": 9000,
-                              "content": {"size": 22000,
-                                          "mimeType": "text/html"}},
-                 "time": 95.0},
-            ]
-        elif k == 2:
-            pages = []
-            entries = [
-                {"request": {"method": "GET",
-                             "url": f"{site}/orphan.json"},
-                 "response": {"status": 200,
-                              "content": {"size": 512,
-                                          "mimeType":
-                                          "APPLICATION/JSON; "
-                                          "charset=UTF-8"}}},
-                {"request": {"method": "GET",
-                             "url": f"{site}/aborted.png"},
-                 "response": {"status": 0, "statusText": "",
-                              "content": {}},
-                 "time": -1},
-                "not-an-entry",
-            ]
-        else:
-            variant = (i // 4) % 3
-            if variant == 0:
-                rows.append({"url": url, "payload": b"not json {"})
-                continue
-            if variant == 1:
-                rows.append({"url": url,
-                             "payload": b'{"version": "1.2"}'})
-                continue
-            rows.append({"url": url,
-                         "payload": b'{"log": {"entries": 42}}'})
-            continue
-        rows.append({"url": url,
-                     "payload": harx.build_har(pages, entries)})
-    return rows
-
-
-def vcf_file_rows(n: int = 16, seed: int = 42) -> list[dict]:
-    """Deterministic vCard files: (url, payload). Shapes cycle
-    i % 4: v4.0 full card (groups, TYPE lists, escaped NOTE, long
-    folded URL) / multi-card v3.0 directory export (3 cards,
-    repeated TYPE= params) / v2.1 bare-param legacy + an
-    unterminated trailing card (dropped) / junk payloads.
-    Golden: fixtures/golden_vcards_seed42_n16.parquet."""
-    from .extractor import vcardx
-
-    rows: list[dict] = []
-    for i in range(n):
-        url = f"https://contacts{i}.example.org/export-{i}.vcf"
-        k = i % 4
-        if k == 0:
-            payload = vcardx.build_vcard([[
-                "VERSION:4.0",
-                f"FN:Person {i} Longname",
-                f"N:Longname;Person {i};;;",
-                f"ORG:Org {i} GmbH;Research",
-                f"EMAIL;TYPE=work:p{i}@org{i}.example",
-                f"EMAIL;TYPE=home:p{i}@mail.example",
-                f'TEL;TYPE="cell,voice":+49 30 {1000 + i}',
-                f"item1.URL:https://org{i}.example/people/"
-                f"person-{i}/profile-page-with-long-slug",
-                "NOTE:First line\\nSecond\\, escaped; tail",
-                f"CATEGORIES:staff,team{i % 3}",
-                f"UID:urn:uuid:0000-{i:04d}",
-            ]])
-        elif k == 1:
-            cards = []
-            for j in range(3):
-                cards.append([
-                    "VERSION:3.0",
-                    f"FN:Member {i}-{j}",
-                    f"EMAIL;TYPE=INTERNET;TYPE=WORK:m{j}@"
-                    f"club{i}.example",
-                    f"TEL;TYPE=HOME;TYPE=VOICE:555-0{i}{j}",
-                ] + ([f"ORG:Club {i}"] if j == 0 else []))
-            payload = vcardx.build_vcard(cards)
-        elif k == 2:
-            payload = vcardx.build_vcard([[
-                "VERSION:2.1",
-                f"FN:Legacy {i}",
-                f"TEL;HOME;VOICE:555-1{i:03d}",
-                f"EMAIL;INTERNET:l{i}@old.example",
-                f"ADR;WORK:;;Main St {i};Town;;12345;DE",
-            ]]) + b"BEGIN:VCARD\r\nFN:Truncated\r\n"
-        else:
-            variant = (i // 4) % 2
-            payload = (b"not a vcard at all"
-                       if variant == 0 else b"\xff\xfe\x00junk")
-        rows.append({"url": url, "payload": payload})
-    return rows
-
-
 _STEM_WORDS = [
     # step 1 plurals / participles
     "caresses", "ponies", "ties", "cats", "feed", "agreed",
@@ -4736,721 +3197,6 @@ def stem_texts(n: int = 40, seed: int = 42) -> list[dict]:
             deco.append(w)
         rows.append({"url": f"https://text{i}.example.org/p{i}",
                      "text": " ".join(deco) + "."})
-    return rows
-
-
-def thread_msg_rows() -> list[dict]:
-    """Deterministic reply-forest fixture for thread_roots: archive
-    A = linear chain depth 9 (forces >3 doubling rounds), B =
-    forked tree + a second root, C = dangling parent (archive
-    truncated), D = REUSES archive A's message ids with different
-    links (partition isolation), plus an empty-id row (ignored)."""
-    rows: list[dict] = []
-    a = "https://lists.example.org/a"
-    rows.append({"url": a, "message_id": "m0", "in_reply_to": ""})
-    for j in range(1, 10):
-        rows.append({"url": a, "message_id": f"m{j}",
-                     "in_reply_to": f"m{j - 1}"})
-    b = "https://lists.example.org/b"
-    rows += [
-        {"url": b, "message_id": "r", "in_reply_to": ""},
-        {"url": b, "message_id": "c1", "in_reply_to": "r"},
-        {"url": b, "message_id": "c2", "in_reply_to": "r"},
-        {"url": b, "message_id": "g1", "in_reply_to": "c1"},
-        {"url": b, "message_id": "g2", "in_reply_to": "c1"},
-        {"url": b, "message_id": "g3", "in_reply_to": "c2"},
-        {"url": b, "message_id": "r2", "in_reply_to": ""},
-        {"url": b, "message_id": "r2c", "in_reply_to": "r2"},
-        {"url": b, "message_id": "", "in_reply_to": "r"},
-    ]
-    c = "https://lists.example.org/c"
-    rows += [
-        {"url": c, "message_id": "x1", "in_reply_to": "lost-head"},
-        {"url": c, "message_id": "x2", "in_reply_to": "x1"},
-    ]
-    d = "https://lists.example.org/d"
-    rows += [
-        {"url": d, "message_id": "m2", "in_reply_to": ""},
-        {"url": d, "message_id": "m0", "in_reply_to": "m2"},
-        {"url": d, "message_id": "m1", "in_reply_to": "m0"},
-    ]
-    return rows
-
-
-def gpx_file_rows(n: int = 12, seed: int = 42) -> list[dict]:
-    """Deterministic GPX files: (url, payload). Shapes cycle i % 4:
-    namespaced 2-track run with waypoints + an out-of-range point
-    (dropped) / multi-segment hike with sparse timestamps /
-    waypoints-only POI file with fractional-second times / junk
-    payloads. Golden: fixtures/golden_gpx_seed42_n12.parquet."""
-    from .extractor import gpxx
-
-    rows: list[dict] = []
-    for i in range(n):
-        url = f"https://tracks{i}.example.org/activity-{i}.gpx"
-        k = i % 4
-        base_lat, base_lon = 52.0 + i * 0.25, 13.0 + i * 0.125
-        t0 = f"2026-05-{i % 28 + 1:02d}T08:00:"
-        if k == 0:
-            segs = [[(base_lat + j * 0.001, base_lon + j * 0.002,
-                      30.0 + j, f"{t0}{j * 15:02d}Z")
-                     for j in range(4)]]
-            payload = gpxx.build_gpx(
-                [{"name": f"Run {i}", "segments": segs},
-                 {"name": f"Cooldown {i}", "segments": [
-                     [(base_lat, base_lon, None, None),
-                      (91.5, base_lon, None, None),
-                      (base_lat + 0.01, base_lon + 0.01, 31.0,
-                       None)]]}],
-                waypoints=[{"name": f"Start {i}", "lat": base_lat,
-                            "lon": base_lon, "ele": 30.0,
-                            "time": f"{t0}00Z"}],
-                ns=True)
-        elif k == 1:
-            segs = [[(base_lat + j * 0.01, base_lon, 100.0 + 10 * j,
-                      f"{t0}{j * 20:02d}Z" if j % 2 == 0 else None)
-                     for j in range(3)],
-                    [(base_lat + 0.1, base_lon + 0.1, 140.0,
-                      f"2026-05-{i % 28 + 1:02d}T09:30:00Z")]]
-            payload = gpxx.build_gpx(
-                [{"name": f"Hike {i}", "segments": segs}])
-        elif k == 2:
-            payload = gpxx.build_gpx([], waypoints=[
-                {"name": f"POI {i}-{j}", "lat": base_lat + j,
-                 "lon": base_lon - j, "ele": None,
-                 "time": f"{t0}{10 + j:02d}.500Z"}
-                for j in range(3)])
-        else:
-            variant = (i // 4) % 3
-            payload = (b"<html><body>nope</body></html>"
-                       if variant == 0 else b"<gpx><trk>"
-                       if variant == 1 else b"\x00\x01binary")
-        rows.append({"url": url, "payload": payload})
-    return rows
-
-
-def bookmark_file_rows(n: int = 12, seed: int = 42) -> list[dict]:
-    """Deterministic Netscape bookmark exports: (url, payload).
-    Shapes cycle i % 4: nested folders with tags + timestamps /
-    flat list with entity titles / legacy quirks (stray close tags,
-    attribute-less anchors skipped, single-quoted attrs) / junk.
-    Golden: fixtures/golden_bookmarks_seed42_n12.parquet."""
-    from .extractor import bookmarkx
-
-    rows: list[dict] = []
-    for i in range(n):
-        url = f"https://user{i}.example.org/bookmarks-{i}.html"
-        k = i % 4
-        t0 = 1700000000 + i * 1000
-        if k == 0:
-            payload = bookmarkx.build_bookmarks([
-                {"href": f"https://start{i}.example/", "title":
-                 f"Start page {i}", "add_date": t0},
-                {"folder": f"Work {i}", "add_date": t0 + 1,
-                 "children": [
-                     {"href": f"https://tool{i}.example/app",
-                      "title": f"Tool {i}", "add_date": t0 + 2,
-                      "tags": f"dev,team{i % 3}"},
-                     {"folder": "Deep", "children": [
-                         {"href": f"https://deep{i}.example/doc",
-                          "title": "Spec", "add_date": t0 + 3,
-                          "last_modified": t0 + 50}]},
-                 ]},
-                {"folder": "News", "children": [
-                    {"href": f"https://news{i}.example/",
-                     "title": f"Daily {i}"}]},
-            ])
-        elif k == 1:
-            payload = bookmarkx.build_bookmarks([
-                {"href": f"https://a{i}.example/x?y={i}",
-                 "title": f"A &amp; B {i}", "add_date": t0},
-                {"href": f"https://b{i}.example/",
-                 "title": "Caf&eacute; list", "tags": "food"},
-            ])
-        elif k == 2:
-            payload = (
-                b"</DL><p>\n<DT><A HREF='https://sq" +
-                str(i).encode() + b".example/one' ADD_DATE='" +
-                str(t0).encode() + b"'>Single quoted</A>\n"
-                b"<DT><A NAME=noref>no href here</A>\n"
-                b"<DT><A HREF=https://bare" + str(i).encode() +
-                b".example/two LAST_MODIFIED=\"99999999999999999999"
-                b"\">bare attr</A>")
-        else:
-            payload = (b"\xff\xfeII*\x00junk" if (i // 4) % 2
-                       else b"<html><body><p>plain</p></body>"
-                            b"</html>")
-        rows.append({"url": url, "payload": payload})
-    return rows
-
-
-def manifest_file_rows(n: int = 12, seed: int = 42) -> list[dict]:
-    """Deterministic Web App Manifests: (url, payload). Shapes
-    cycle i % 4: full PWA manifest with icon ladder / minimal with
-    INVALID display (gated to None) + non-dict icon entries
-    skipped / unicode names + maskable icons / junk payloads."""
-    from .extractor import manifestx
-
-    rows: list[dict] = []
-    for i in range(n):
-        url = f"https://app{i}.example.org/manifest.json"
-        k = i % 4
-        if k == 0:
-            payload = manifestx.build_manifest(
-                name=f"Example App {i}",
-                short_name=f"App{i}",
-                start_url="/",
-                scope="/",
-                display="standalone",
-                theme_color="#0d47a1",
-                background_color="#ffffff",
-                lang="en-US",
-                icons=[{"src": f"/icons/app-{i}-{s}.png",
-                        "sizes": f"{s}x{s}",
-                        "type": "image/png"}
-                       for s in (192, 512)])
-        elif k == 1:
-            payload = manifestx.build_manifest(
-                name=f"Minimal {i}",
-                display="popup-window",          # invalid -> None
-                start_url=f"/home?v={i}",
-                icons=["not-a-dict",
-                       {"sizes": "64x64"},       # no src -> skipped
-                       {"src": "/i.svg", "type": "image/svg+xml"}])
-        elif k == 2:
-            payload = manifestx.build_manifest(
-                name=f"アプリ {i}",
-                short_name=f"ア{i}",
-                display="MINIMAL-UI",            # case-normalized
-                lang="ja",
-                icons=[{"src": "/maskable.png", "sizes": "512x512",
-                        "purpose": "maskable any"}])
-        else:
-            variant = (i // 4) % 3
-            payload = (b"not json" if variant == 0
-                       else b"[1, 2, 3]" if variant == 1
-                       else b"\xff\xfe")
-        rows.append({"url": url, "payload": payload})
-    return rows
-
-
-def css_file_rows(n: int = 12, seed: int = 42) -> list[dict]:
-    """Deterministic stylesheets: (url, payload). Shapes cycle
-    i % 4: imports + font-face ladder + assets / comment and
-    string traps (url() in comments/content strings must NOT
-    count) + data URIs + escaped urls / minified one-liner /
-    junk payloads. Golden: fixtures/golden_css_seed42_n12.parquet."""
-    rows: list[dict] = []
-    for i in range(n):
-        url = f"https://cdn{i}.example.org/styles/site-{i}.css"
-        k = i % 4
-        if k == 0:
-            body = (
-                f'@import url("base-{i}.css");\n'
-                f"@import 'print-{i}.css' print;\n"
-                "@font-face {\n"
-                f'  font-family: "Brand{i}";\n'
-                f"  src: url(/fonts/brand-{i}.woff2) "
-                'format("woff2"),\n'
-                f'       url("/fonts/brand-{i}.woff") '
-                'format("woff");\n'
-                "}\n"
-                f".hero {{ background: url('../img/hero-{i}.jpg'); "
-                "}\n"
-                f".logo {{ background-image: url(/img/logo-{i}.svg)"
-                "; }\n")
-        elif k == 1:
-            body = (
-                "/* url(commented-out.png) */\n"
-                f".icon{i} {{ background: url(data:image/gif;"
-                "base64,R0lGOD); }\n"
-                ".q::before { content: \"see url(fake.png) and "
-                "@import 'no.css'\"; }\n"
-                f".esc {{ cursor: url(weird\\ name-{i}.cur); }}\n")
-        elif k == 2:
-            body = (f"@import url(reset.css);.a{{background:url("
-                    f"'s{i}.png')}}.b{{color:red}}"
-                    f"@font-face{{src:url(f{i}.woff2)}}")
-        else:
-            body = ("\x00\x01\xff binary-ish" if (i // 4) % 2
-                    else "p { color: blue }")
-        rows.append({"url": url,
-                     "payload": body.encode("utf-8", "replace")})
-    return rows
-
-
-def sourcemap_file_rows(n: int = 12, seed: int = 42) -> list[dict]:
-    """Deterministic source maps: (url, payload). Shapes cycle
-    i % 4: 2-source bundle with sourcesContent / many-source
-    vendor bundle with sourceRoot / map with a malformed VLQ line
-    (rest of line drops, later lines keep) / junk payloads.
-    Golden: fixtures/golden_sourcemaps_seed42_n12.parquet."""
-    import json as _json
-
-    from .extractor import srcmapx
-
-    rows: list[dict] = []
-    for i in range(n):
-        url = f"https://static{i}.example.org/js/app-{i}.min.js.map"
-        k = i % 4
-        if k == 0:
-            payload = srcmapx.build_sourcemap(
-                file=f"app-{i}.min.js",
-                sources=[f"src/index-{i}.js", f"src/util-{i}.js"],
-                names=["init", "render", f"hook{i}"],
-                lines=[
-                    [[0, 0, 0, 0], [6 + i % 3, 0, 0, 12],
-                     [20, 1, 4, 0, 1]],
-                    [[0, 1, 7, 2], [9, 0, 9, 4, 2]],
-                ],
-                content_for={0})
-        elif k == 1:
-            m = 4 + i % 3
-            payload = srcmapx.build_sourcemap(
-                file=f"vendor-{i}.js",
-                sources=[f"node_modules/lib{j}/idx.js"
-                         for j in range(m)],
-                names=[],
-                lines=[[[j * 3, j, j, 0] for j in range(m)]],
-                source_root=f"webpack://bundle{i}/")
-        elif k == 2:
-            base = srcmapx.build_sourcemap(
-                file=f"broken-{i}.js",
-                sources=[f"src/only-{i}.js"], names=[],
-                lines=[[[0, 0, 0, 0]], [[0, 0, 1, 0]]])
-            doc = _json.loads(base)
-            doc["mappings"] = "AAAA,??junk,AAAA;AACA"
-            payload = _json.dumps(doc, sort_keys=True).encode()
-        else:
-            variant = (i // 4) % 3
-            payload = (b'{"version": 2, "mappings": ""}'
-                       if variant == 0 else b"not json"
-                       if variant == 1 else b"\xff\xfe")
-        rows.append({"url": url, "payload": payload})
-    return rows
-
-
-def zip_probe_rows() -> list[dict]:
-    """The zip-container probe corpus for zipx: every zip-family
-    fixture payload this engine already builds (OOXML docx/pptx,
-    ODF, EPUB) plus junk rows. Golden:
-    fixtures/golden_zipdir_seed42.parquet."""
-    rows: list[dict] = []
-    for fn, n in (("docx_file_rows", 6), ("pptx_deck_rows", 6),
-                  ("odt_file_rows", 6), ("epub_file_rows", 6)):
-        for r in globals()[fn](n):
-            rows.append({"url": r["url"], "payload": r["payload"]})
-    rows.append({"url": "https://junk.example.org/not-a.zip",
-                 "payload": b"PK\x03\x04 local header only"})
-    rows.append({"url": "https://junk.example.org/empty.bin",
-                 "payload": b""})
-    return rows
-
-
-def ntriples_file_rows(n: int = 12, seed: int = 42) -> list[dict]:
-    """Deterministic N-Triples dumps: (url, payload). Shapes cycle
-    i % 4: entity descriptions (lang-tagged labels, xsd-typed
-    values, bnode addresses) / escape workout (quotes, newlines,
-    unicode escapes) + comments / a dump with malformed lines
-    (counted, skipped) / junk payloads. Golden:
-    fixtures/golden_ntriples_seed42_n12.parquet."""
-    from .extractor import ntriplesx
-
-    rows: list[dict] = []
-    for i in range(n):
-        url = f"https://data{i}.example.org/dump-{i}.nt"
-        k = i % 4
-        e = f"http://ex.org/entity/Q{i}"
-        if k == 0:
-            lines = [
-                f'<{e}> <http://www.w3.org/2000/01/rdf-schema#'
-                f'label> "Entity {i}"@en .',
-                f'<{e}> <http://www.w3.org/2000/01/rdf-schema#'
-                f'label> "Entität {i}"@de .',
-                f"<{e}> <http://ex.org/prop/population> "
-                f'"{10000 + i}"^^<http://www.w3.org/2001/'
-                "XMLSchema#integer> .",
-                f"<{e}> <http://ex.org/prop/address> _:addr{i} .",
-                f"_:addr{i} <http://ex.org/prop/city> "
-                f'"Town {i}" .',
-                f"<{e}> <http://www.w3.org/1999/02/22-rdf-syntax-"
-                f"ns#type> <http://schema.org/Place> .",
-            ]
-        elif k == 1:
-            esc = ntriplesx.escape_literal(
-                f'say "hi"\nline2\tand \\slash {i}')
-            lines = [
-                "# full-line comment",
-                f'<{e}> <http://ex.org/prop/note> "{esc}" .',
-                f'<{e}> <http://ex.org/prop/uni> '
-                f'"caf\\u00E9 \\U0001F600 {i}" .',
-                f'  <{e}> <http://ex.org/prop/pad> "ws ok" .  ',
-            ]
-        elif k == 2:
-            lines = [
-                f'<{e}> <http://ex.org/p> "good {i}" .',
-                "this is not a triple",
-                f'<{e}> <http://ex.org/p> "no final dot"',
-                f'"literal" <http://ex.org/p> <{e}> .',
-                f'<{e}> <http://ex.org/p> "bad \\q escape" .',
-                f'<{e}> <http://ex.org/p> "surrogate \\uD800" .',
-                f'<{e}> <http://ex.org/p2> <http://ex.org/o{i}> .',
-            ]
-        else:
-            rows.append({"url": url,
-                         "payload": b"\xff\xfe not utf8 \x9c"
-                         if (i // 4) % 2 else b""})
-            continue
-        rows.append({"url": url,
-                     "payload": ("\n".join(lines) + "\n")
-                     .encode("utf-8")})
-    return rows
-
-
-def id_sample_rows() -> list[str | None]:
-    """Deterministic identifier corpus for the id-time family
-    (extractor/idtimex.py): v1/v4/v5/v7 UUIDs (incl. a bogus
-    pre-1970 v1 and an uppercase variant), ULIDs (incl. the spec's
-    canonical example; lowercase and '8'-leading strings must fall
-    to 'unknown'), snowflakes (a real-shaped one, the int64 edge,
-    a borderline value just inside the plausibility window), plain
-    ints and junk. Generated into the DuckDB twin as VALUES."""
-    from .extractor import idtimex
-
-    c = idtimex.CROCKFORD
-
-    def ulid(ms: int, tail: str) -> str:
-        s = ""
-        v = ms
-        for _ in range(10):
-            s = c[v % 32] + s
-            v //= 32
-        assert v == 0 and len(tail) == 16
-        return s + tail
-
-    def uuid1(ms: int, frac100: int = 0) -> str:
-        ticks = idtimex.GREGORIAN_OFFSET_100NS + ms * 10000 + frac100
-        thi = ((ticks >> 48) & 0x0FFF) | 0x1000
-        return (f"{ticks & 0xFFFFFFFF:08x}-"
-                f"{(ticks >> 32) & 0xFFFF:04x}-{thi:04x}-"
-                f"9234-0123456789ab")
-
-    def uuid7(ms: int) -> str:
-        hx = f"{ms:012x}"
-        return f"{hx[:8]}-{hx[8:]}-7cc3-9b1d-0123456789ab"
-
-    return [
-        uuid1(1083827289123, 4567),        # 2004-05-06T07:08:09.123
-        uuid1(1700000000000).upper(),      # case-insensitive hex
-        "00000001-0001-1001-8abc-0123456789ab",  # pre-1970 v1
-        "f47ac10b-58cc-4372-a567-0e02b2c3d479",  # v4
-        uuid7(1709251200000),
-        uuid7(1709251200001),
-        "886313e1-3b8a-5372-9b90-0c9aee199e5d",  # v5 -> plain uuid
-        "01ARZ3NDEKTSV4RRFFQ69G5FAV",      # canonical spec ULID
-        ulid(1700000000000, "ABCDEFGHJKMNPQRS"),
-        "01arz3ndektsv4rrffq69g5fav",      # lowercase -> unknown
-        "8ZZZZZZZZZZZZZZZZZZZZZZZZZ",      # > 48-bit ms -> unknown
-        "1541815603606036480",             # real-shaped snowflake
-        "1234567890",                      # 10 digits, pre-window
-        str(131235425343 * 4194304),       # exactly 2015-01-01: in
-        str(131235425343 * 4194304 - 1),   # 1 tick below: out
-        "9223372036854775807",             # int64 max: beyond window
-        "18446744073709551615",            # 20 digits -> unknown
-        "hello-world",
-        "",
-        None,
-    ]
-
-
-def geojson_file_rows(n: int = 12, seed: int = 42) -> list[dict]:
-    """Deterministic GeoJSON files: (url, payload). Shapes cycle
-    i % 4: FeatureCollection of mixed geometries (point/linestring/
-    polygon-with-hole/multipolygon) / a single Feature (GeometryCollection
-    + foreign members + unnamed props) / bare geometry + invalid
-    geometries surfacing as 'invalid' / junk payloads. Golden:
-    fixtures/golden_geojson_seed42_n12.parquet."""
-    import json
-
-    rows: list[dict] = []
-    for i in range(n):
-        url = f"https://geo{i}.example.org/data-{i}.geojson"
-        k = i % 4
-        x = float(i)
-        if k == 0:
-            doc = {"type": "FeatureCollection", "features": [
-                {"type": "Feature",
-                 "properties": {"name": f"poi-{i}", "amenity":
-                                "cafe"},
-                 "geometry": {"type": "Point",
-                              "coordinates": [x + 0.5, -x - 0.25]}},
-                {"type": "Feature", "properties": {"name":
-                                                   f"route-{i}"},
-                 "geometry": {"type": "LineString", "coordinates":
-                              [[x, 0.0], [x + 1.0, 1.5],
-                               [x + 2.0, -2.25]]}},
-                {"type": "Feature",
-                 "properties": {"name": f"zone-{i}", "level": 3},
-                 "geometry": {"type": "Polygon", "coordinates": [
-                     [[x, 0.0], [x + 4.0, 0.0], [x + 4.0, 4.0],
-                      [x, 4.0], [x, 0.0]],
-                     [[x + 1.0, 1.0], [x + 2.0, 1.0],
-                      [x + 1.5, 2.0], [x + 1.0, 1.0]]]}},
-                {"type": "Feature", "properties": {},
-                 "geometry": {"type": "MultiPolygon",
-                              "coordinates": [
-                                  [[[x, 0.0], [x + 1.0, 0.0],
-                                    [x, 1.0], [x, 0.0]]],
-                                  [[[x + 9.0, 9.0],
-                                    [x + 10.0, 9.0],
-                                    [x + 9.0, 10.0],
-                                    [x + 9.0, 9.0]]]]}},
-                "not a feature",
-                {"type": "Feature", "geometry": None},
-            ]}
-        elif k == 1:
-            doc = {"type": "Feature", "bbox": [x, x, x, x],
-                   "foreign": {"whatever": 1},
-                   "properties": {"height_m": 12 + i},
-                   "geometry": {"type": "GeometryCollection",
-                                "geometries": [
-                                    {"type": "Point",
-                                     "coordinates": [x, x + 0.5]},
-                                    {"type": "MultiPoint",
-                                     "coordinates": [[x - 1.0, 0.0],
-                                                     [x + 1.0,
-                                                      2.5]]}]}}
-        elif k == 2:
-            if (i // 4) % 2:
-                doc = {"type": "FeatureCollection", "features": [
-                    {"type": "Feature", "properties": {"name":
-                                                       "bad-pt"},
-                     "geometry": {"type": "Point",
-                                  "coordinates": [x]}},
-                    {"type": "Feature", "properties": {"name":
-                                                       "bool-pt"},
-                     "geometry": {"type": "Point",
-                                  "coordinates": [True, 1.0]}},
-                    {"type": "Feature", "properties": {"name":
-                                                       "empty-ls"},
-                     "geometry": {"type": "LineString",
-                                  "coordinates": []}},
-                    {"type": "Feature", "properties": {"name":
-                                                       "wrong-depth"},
-                     "geometry": {"type": "Polygon",
-                                  "coordinates": [[x, 0.0],
-                                                  [x + 1.0, 1.0]]}},
-                    {"type": "Feature", "properties": {"name":
-                                                       "ok"},
-                     "geometry": {"type": "Point",
-                                  "coordinates": [x, x, 99.5]}},
-                ]}
-            else:
-                doc = {"type": "MultiLineString", "coordinates":
-                       [[[x, 0.0], [x + 1.0, 1.0]],
-                        [[x + 5.0, 5.0], [x + 6.0, 6.0],
-                         [x + 7.0, 5.5]]]}
-        else:
-            rows.append({"url": url,
-                         "payload": b"{\"type\": \"Telemetry\"}"
-                         if (i // 4) % 2 else b"\xff not json"})
-            continue
-        rows.append({"url": url,
-                     "payload": json.dumps(
-                         doc, sort_keys=True).encode("utf-8")})
-    return rows
-
-
-def toml_file_rows(seed: int = 42) -> list[dict]:
-    """Deterministic TOML config files (url, payload) for
-    extractor/tomlx.py: pyproject / Cargo manifest / site config
-    with array-of-tables + datetimes / number-format torture /
-    dotted keys + inline tables / invalid (dup key, bare junk,
-    multiline-string gap) / non-utf8. Golden:
-    fixtures/golden_toml_seed42_n10.parquet."""
-    docs = [
-        ("pyproject.toml", """\
-[project]
-name = "crawl-tools"
-version = "2.3.1"
-requires-python = ">=3.11"
-dependencies = ["pyspark>=4.0", "pyarrow>=15", "duckdb"]
-
-[project.optional-dependencies]
-dev = ["pytest", "hypothesis"]
-
-[tool.ruff]
-line-length = 79
-"""),
-        ("Cargo.toml", """\
-[package]
-name = "warc-tool"
-version = "0.9.0"
-edition = "2021"
-
-[dependencies]
-flate2 = "1.0"
-url = { version = "2.5", features = ["serde"] }
-
-[profile.release]
-lto = true
-opt-level = 3
-"""),
-        ("config.toml", """\
-base_url = "https://blog.example.org"
-build_ts = 2024-10-27T06:00:00Z
-launch_day = 2021-03-14
-
-[[menu.main]]
-name = "Home"
-weight = 1
-
-[[menu.main]]
-name = "Archive"
-weight = 2
-
-[params]
-tags = ["web", "data", "spark"]
-"""),
-        ("numbers.toml", """\
-dec = 1_000_000
-hex = 0xdead_beef
-oct = 0o644
-bin = 0b1101
-f_plain = 0.5
-f_exp = 6.022e23
-f_neg = -1.5e-3
-big = 9007199254740993
-neg = -17
-yes = true
-no = false
-"""),
-        ("dotted.toml", """\
-site.owner.name = "Ada"
-site.owner."e-mail" = "ada@example.org"
-point = { x = 1, y = -2 }
-times = [09:30:00, 17:45:00.25]
-"""),
-        ("dup.toml", "a = 1\na = 2\n"),
-        ("junk.toml", "this is ][ not toml at all\n"),
-        ("multiline.toml",
-         's = """the documented\ngap"""\n'),
-        ("redef.toml", "[t]\nx = 1\n[t]\ny = 2\n"),
-        ("latin1.toml", None),  # non-utf8 bytes below
-    ]
-    rows: list[dict] = []
-    for i, (name, text) in enumerate(docs):
-        payload = b"caf\xe9 = 1\n" if text is None \
-            else text.encode("utf-8")
-        rows.append({
-            "url": f"https://repo{i}.example.org/{name}",
-            "payload": payload})
-    return rows
-
-
-def compressed_stream_rows(seed: int = 42) -> list[dict]:
-    """Deterministic compressed containers (url, payload) for
-    extractor/compx.py: multi-member gzip (one member carrying
-    FNAME, fixed mtime) / bzip2 members / xz streams (two check
-    types) / hand-built zstd frames (raw+RLE blocks, FCS, a
-    skippable frame) / hand-built lz4 frames (content size,
-    block checksums) / truncated + junk. Golden:
-    fixtures/golden_comp_seed42_n10.parquet."""
-    import bz2 as _bz2
-    import lzma as _lzma
-    import struct
-    import zlib as _z
-
-    text1 = b"the quick brown fox jumps over the lazy dog\n" * 40
-    text2 = b"pack my box with five dozen liquor jugs\n" * 25
-
-    def gz_member(data, fname=None, mtime=0):
-        flg = 0x08 if fname else 0
-        hdr = b"\x1f\x8b\x08" + bytes([flg]) \
-            + struct.pack("<I", mtime) + b"\x00\x03"
-        if fname:
-            hdr += fname.encode("latin-1") + b"\x00"
-        co = _z.compressobj(9, _z.DEFLATED, -15)
-        body = co.compress(data) + co.flush()
-        return hdr + body + struct.pack(
-            "<II", _z.crc32(data), len(data) & 0xFFFFFFFF)
-
-    def zstd_frame(chunks, fcs=None, rle=None):
-        if fcs is None:
-            # no FCS => windowed frame (single-segment always
-            # carries a 1-byte FCS per RFC 8878)
-            fhd = 0x00
-            out = b"\x58"  # window descriptor
-        elif fcs < 256:
-            fhd = 0x20  # single-segment, fcs_flag 0 -> 1 byte
-            out = bytes([fcs])
-        else:
-            fhd = 0xA0  # single-segment, fcs_flag 2 -> 4 bytes
-            out = struct.pack("<I", fcs)
-        blocks = b""
-        items = list(chunks)
-        for i, ch in enumerate(items):
-            last = 1 if (i == len(items) - 1 and rle is None) \
-                else 0
-            bh = (len(ch) << 3) | (0 << 1) | last
-            blocks += bh.to_bytes(3, "little") + ch
-        if rle is not None:
-            byte, count = rle
-            bh = (count << 3) | (1 << 1) | 1
-            blocks += bh.to_bytes(3, "little") + bytes([byte])
-        return struct.pack("<I", 0xFD2FB528) + bytes([fhd]) \
-            + out + blocks
-
-    def zstd_skippable(data):
-        return struct.pack("<II", 0x184D2A50, len(data)) + data
-
-    def lz4_frame(chunks, content_size=None, block_crc=False):
-        flg = 0x40
-        if content_size is not None:
-            flg |= 0x08
-        if block_crc:
-            flg |= 0x10
-        hdr = struct.pack("<I", 0x184D2204) + bytes([flg, 0x40])
-        if content_size is not None:
-            hdr += struct.pack("<Q", content_size)
-        hdr += b"\x00"  # header checksum (not verified here)
-        body = b""
-        for ch in chunks:
-            body += struct.pack("<I", len(ch) | 0x80000000) + ch
-            if block_crc:
-                body += struct.pack("<I", _z.crc32(ch))
-        return hdr + body + struct.pack("<I", 0)
-
-    rows: list[dict] = []
-
-    def add(name, blob):
-        rows.append({
-            "url": f"https://drop{len(rows)}.example.org/{name}",
-            "payload": blob})
-
-    add("pages.warc.gz", gz_member(text1)
-        + gz_member(text2, fname="page-2.warc",
-                    mtime=1730000000)
-        + gz_member(b""))
-    add("dump.bz2", _bz2.compress(text1, 5)
-        + _bz2.compress(text2, 1))
-    add("logs.xz", _lzma.compress(text1, format=_lzma.FORMAT_XZ,
-                                  check=_lzma.CHECK_CRC64)
-        + _lzma.compress(text2, format=_lzma.FORMAT_XZ,
-                         check=_lzma.CHECK_CRC32))
-    add("shard.zst", zstd_frame([text1[:100], text1[100:130]],
-                                fcs=130)
-        + zstd_skippable(b"meta" * 3)
-        + zstd_frame([b"xy"], fcs=1000, rle=(0x41, 970)))
-    add("batch.lz4", lz4_frame([text2[:64], text2[64:80]],
-                               content_size=80)
-        + lz4_frame([b"tail"], block_crc=True))
-    good = gz_member(text1)
-    add("cut.gz", good[:len(good) - 5])
-    add("cut.zst", zstd_frame([text1[:50]], fcs=50)[:-10])
-    add("plain.txt", b"not compressed at all, just text")
-    add("empty.gz", gz_member(b""))
-    add("nested.gz.zst", zstd_frame([gz_member(text2)[:60]]))
     return rows
 
 
@@ -5734,171 +3480,4 @@ def cfb_file_rows(seed: int = 42) -> list[dict]:
 
     add("cut.ppt", ppt[:700])           # truncated mid-directory
     add("junk.bin", b"not a compound file at all")
-    return rows
-
-
-def kml_file_rows(seed: int = 42) -> list[dict]:
-    """Deterministic KML files (url, payload) — the ENCODE half of
-    extractor/kmlx.py. Shapes: nested folders with point/line/
-    polygon placemarks + TimeStamp/TimeSpan, MultiGeometry, out-of-
-    range coordinate dropping, junk/non-KML XML. Golden:
-    fixtures/golden_kml_seed42_n5.parquet."""
-    from .extractor.kmlx import build_kml
-
-    rows: list[dict] = []
-
-    def add(name, blob):
-        rows.append({
-            "url": f"https://maps{len(rows)}.example.org/{name}",
-            "payload": blob})
-
-    add("city.kml", build_kml([
-        {"name": "Landmarks", "placemarks": [
-            {"name": "Fountain", "gtype": "Point",
-             "coords": [(2.3522, 48.8566)],
-             "when": "2019-07-14T12:00:00Z"},
-            {"name": "Old Walk", "gtype": "LineString",
-             "coords": [(2.35, 48.85), (2.36, 48.86),
-                        (2.37, 48.855)],
-             "span": ("2019-07-01T00:00:00Z",
-                      "2019-07-31T23:59:59Z")},
-        ], "folders": [
-            {"name": "Parks", "placemarks": [
-                {"name": "Green Park", "gtype": "Polygon",
-                 "coords": [(2.30, 48.84), (2.31, 48.84),
-                            (2.31, 48.85), (2.30, 48.84)]},
-            ]},
-        ]},
-    ]))
-    add("multi.kml", build_kml([
-        {"name": "Routes", "placemarks": [
-            {"name": "Ferry", "gtype": "MultiGeometry",
-             "members": [
-                 {"gtype": "Point", "coords": [(-3.7, 40.4)]},
-                 {"gtype": "LineString",
-                  "coords": [(-3.7, 40.4), (-3.6, 40.5)]},
-             ]},
-        ]},
-    ]))
-    # out-of-range tuples must drop, leaving one valid vertex
-    bad = build_kml([
-        {"name": "Bad", "placemarks": [
-            {"name": "Edge", "gtype": "LineString",
-             "coords": [(185.0, 10.0), (10.0, 95.0),
-                        (9.5, 51.3)]},
-            {"name": "NoGeom", "gtype": "Point", "coords": []},
-        ]},
-    ])
-    add("edge.kml", bad)
-    add("feed.xml", b"<?xml version='1.0'?><rss><channel/></rss>")
-    add("junk.kml", b"not xml at all <<<")
-    return rows
-
-
-def pgp_blob_rows(seed: int = 42) -> list[dict]:
-    """Deterministic OpenPGP payloads (url, payload) — the ENCODE
-    half of extractor/pgpx.py. Shapes: armored public key block
-    (key + user id + subkey, good CRC), armored signature with a
-    WRONG CRC, binary old-format signature packet, two-byte
-    new-length user id, unterminated armor, junk. Golden:
-    fixtures/golden_pgp_seed42_n6.parquet."""
-    from .extractor import pgpx
-
-    rows: list[dict] = []
-
-    def add(name, blob):
-        rows.append({
-            "url": f"https://keys{len(rows)}.example.org/{name}",
-            "payload": blob})
-
-    key = pgpx.build_key_packet(6, 4, 1600000000, 22,
-                                bytes(range(40)))
-    sub = pgpx.build_key_packet(14, 4, 1600001000, 18,
-                                bytes(range(40)))
-    uid = pgpx.build_user_id("Ana Archivist <ana@example.org>")
-    add("ana.asc", pgpx.armor(
-        "PUBLIC KEY BLOCK", key + uid + sub,
-        [("Version", "Repro 1.0"), ("Comment", "fixture")]))
-    sig = pgpx.build_old_format(
-        2, bytes([4, 0x00, 17, 8]) + b"\x00" * 24)
-    bad = bytearray(pgpx.armor("SIGNATURE", sig))
-    eq = bad.rfind(b"\n=")
-    bad[eq + 2:eq + 3] = b"A" if bad[eq + 2:eq + 3] != b"A" \
-        else b"B"                        # corrupt the CRC line
-    add("release.sig", bytes(bad))
-    add("binary.pgp", sig)
-    long_uid = pgpx.build_user_id("x" * 300)   # 2-byte new length
-    add("long.pgp", pgpx.build_key_packet(
-        6, 4, 1700000000, 19, bytes(range(32))) + long_uid)
-    cut = pgpx.armor("MESSAGE", b"\x01\x02\x03")
-    add("cut.asc", cut[:40])
-    add("junk.txt", b"BEGIN nothing of the sort")
-    return rows
-
-
-def desktop_file_rows(seed: int = 42) -> list[dict]:
-    """Deterministic .desktop files (url, payload) — the ENCODE
-    half of extractor/desktopx.py. Shapes: full app entry with
-    locales + escaped list, action group, duplicate-key violation
-    (first wins), pre-group junk, non-ini junk."""
-    from .extractor.desktopx import build_desktop
-
-    rows: list[dict] = []
-
-    def add(name, blob):
-        rows.append({
-            "url": f"https://apps{len(rows)}.example.org/{name}",
-            "payload": blob})
-
-    add("crawlview.desktop", build_desktop([
-        ("Desktop Entry", [
-            ("Type", None, "Application"),
-            ("Name", None, "Crawl Viewer"),
-            ("Name", "fr", "Visionneuse de crawl"),
-            ("Name", "de", "Crawl-Betrachter"),
-            ("Comment", None, r"Line one\nline two"),
-            ("Exec", None, "crawlview %U"),
-            ("Categories", None, r"Network;Web\;Tools;Utility;"),
-            ("Terminal", None, "false"),
-        ]),
-        ("Desktop Action Refresh", [
-            ("Name", None, "Refresh index"),
-            ("Exec", None, "crawlview --refresh"),
-        ]),
-    ]))
-    dup = (b"[Desktop Entry]\nType=Application\nName=First\n"
-           b"Name=Second\nName[fr]=Premier\n")
-    add("dup.desktop", dup)
-    add("pre.desktop", b"Type=Application\n[Desktop Entry]\nName=X\n")
-    add("junk.desktop", b"\x00\x01 not ini at all")
-    return rows
-
-
-def avi_file_rows(seed: int = 42) -> list[dict]:
-    """Deterministic AVI files (url, payload) — the ENCODE half of
-    extractor/avix.py. Shapes: NTSC-rate xvid + audio, PAL video-
-    only with an ODD-sized chunk exercising RIFF word alignment,
-    truncated, RIFF-but-WAVE, junk. Golden:
-    fixtures/golden_avi_seed42_n5.parquet."""
-    from .extractor.avix import build_avi
-
-    rows: list[dict] = []
-
-    def add(name, blob):
-        rows.append({
-            "url": f"https://video{len(rows)}.example.org/{name}",
-            "payload": blob})
-
-    ntsc = build_avi(33367, 640, 480, 900, [
-        ("vids", "xvid", 1001, 30000, 900),
-        ("auds", "", 1, 48000, 43200),
-    ])
-    add("clip.avi", ntsc)
-    add("pal.avi", build_avi(40000, 720, 576, 250, [
-        ("vids", "DIB ", 1, 25, 250),
-    ]))
-    add("cut.avi", ntsc[:40])
-    add("sound.wav", b"RIFF" + (20).to_bytes(4, "little")
-        + b"WAVEfmt " + b"\x00" * 12)
-    add("junk.avi", b"FORM not riff either")
     return rows

@@ -7,7 +7,7 @@ from ..operators import bpetrain, chunking, textstats
 from ..operators.skew import spread_small_scan
 from . import (
     _GOLDEN, _GOLDEN_ODT, _GOLDEN_OUTLINE, _GOLDEN_RTF, _TOKSPLIT,
-    _fixture, _section_sql, _t, query)
+    _fixture, _t, query)
 
 
 _BPE_TRAIN_N = 12
@@ -158,11 +158,41 @@ def q_bpe_train(spark, sf_dir):
         _t(spark, sf_dir, "documents"), n_merges=_BPE_TRAIN_N)
 
 
+def _section_sql(src: str, split_level: int = 3) -> str:
+    """section_chunks twin over any (url, para, kind, level, text)
+    source — the same cumulative-sum sectioning; DuckDB
+    string_agg(ORDER BY) == Spark sort_array(collect_list) join;
+    empty-body sections need the coalesce (string_agg over zero rows
+    is NULL — the array_to_string lesson)."""
+    return f"""
+        WITH els AS ({src}), marked AS (
+          SELECT url, para, text,
+                 (kind = 'heading' AND level <= {split_level})
+                   AS is_title,
+                 sum(CASE WHEN kind = 'heading'
+                          AND level <= {split_level}
+                          THEN 1 ELSE 0 END)
+                   OVER (PARTITION BY url ORDER BY para
+                         ROWS UNBOUNDED PRECEDING)::int AS section_idx
+          FROM els
+        )
+        SELECT url, section_idx,
+               max(CASE WHEN is_title THEN text END) AS title,
+               count(*) FILTER (WHERE NOT is_title)::bigint AS n_paras,
+               length(coalesce(string_agg(text, chr(10) ORDER BY para)
+                   FILTER (WHERE NOT is_title), ''))::bigint AS n_chars,
+               coalesce(string_agg(text, chr(10) ORDER BY para)
+                   FILTER (WHERE NOT is_title), '') AS text
+        FROM marked
+        GROUP BY url, section_idx
+        ORDER BY url, section_idx"""
+
+
 # --- heading-hierarchy section chunking over the SHARED per-format
 # element schema (docx/odt/rtf all emit it) — SQL-checked: window
 # cumulative-sum sectioning + ordered string_agg twin, over the
 # UNION of two format goldens to prove cross-format reuse
-# section chunking: shared _section_sql twin over the union of
+# section chunking: the _section_sql twin over the union of
 # two office-format goldens (cross-format reuse proof)
 @query("section_chunks", oracle=lambda: _section_sql(f"""
               SELECT * FROM read_parquet('{_GOLDEN_ODT}')

@@ -6,8 +6,10 @@ from .. import fixtures
 from ..extractor.figx import parse_srcset
 from ..operators import encoding, pagemeta, webtext
 from . import (
-    _GOLDEN_AV, _GOLDEN_DATES, _GOLDEN_LINKS, _GOLDEN_META,
-    _GOLDEN_OUTLINE, _fixture, query)
+    _GOLDEN_DATES, _GOLDEN_LINKS, _GOLDEN_META, _GOLDEN_OUTLINE,
+    _fixture, query)
+
+_GOLDEN_AV = _fixture("golden_av_seed42_n120.parquet")
 
 
 _SRCSET_ROWS = (

@@ -1,11 +1,11 @@
-"""Sitemap / RSS / Atom discovery layer: round-trips, malformed
-degrade, Spark readers, and the frontier anti-join."""
+"""Sitemap / RSS / Atom / OPML / JSON Feed parsers: round-trips,
+malformed degrade, the Spark sitemap and feed readers, and the
+frontier anti-join."""
 
 from datetime import datetime, timezone
 
 from hypothesis import given, settings
 from hypothesis import strategies as st
-from pyspark.sql import functions as F
 
 from historicaldatadocumentparsersystem_spark import fixtures
 from historicaldatadocumentparsersystem_spark.extractor import cdxx, feedx
@@ -226,27 +226,6 @@ def test_opml_malformed_never_raises():
         feedx.parse_opml(p)
 
 
-def test_opml_reader_matches_golden(spark):
-    import pyarrow.parquet as pq
-    from historicaldatadocumentparsersystem_spark import sources
-    files = fixtures.opml_file_rows(30)
-    df = spark.createDataFrame(
-        [(r["url"], r["payload"]) for r in files],
-        "url string, payload binary").repartition(8)
-    got = sorted(tuple(r)
-                 for r in sources.read_opml_feeds(df).collect())
-    golden = sorted((r["url"], r["pos"], r["category"], r["title"],
-                     r["xml_url"], r["html_url"])
-                    for r in pq.read_table(GOLDEN_OPML).to_pylist())
-    assert got == golden
-    flat = spark.createDataFrame(
-        [(r["url"], r["payload"]) for r in files[:5]],
-        "url string, payload binary")
-    plan = (sources.read_opml_feeds(flat)
-            ._jdf.queryExecution().executedPlan().toString())
-    assert "Exchange" not in plan
-
-
 # --- media-extension sitemaps (video/image discovery) -------------------------
 
 def _media_pages():
@@ -310,21 +289,6 @@ def test_sitemap_media_arbitrary_bytes_never_raises(data):
         assert r["loc"]
 
 
-def test_spark_sitemap_media_source_matches_direct(spark, tmp_path):
-    from historicaldatadocumentparsersystem_spark.sources import (
-        read_sitemap_media)
-    blob = feedx.build_sitemap_media(_media_pages(), gzip_file=True)
-    (tmp_path / "media-sitemap.xml.gz").write_bytes(blob)
-    got = sorted((r["page_loc"], r["pos"], r["kind"], r["loc"],
-                  r["duration_s"])
-                 for r in read_sitemap_media(spark,
-                                             str(tmp_path)).collect())
-    want = sorted((r["page_loc"], r["pos"], r["kind"], r["loc"],
-                   r["duration_s"])
-                  for r in feedx.parse_sitemap_media(blob))
-    assert got == want and got
-
-
 # --- media attachments (podcast/audio discovery) ------------------------------
 
 def test_enclosure_roundtrip_and_itunes_durations():
@@ -370,45 +334,46 @@ def test_enclosures_arbitrary_bytes_never_raises(data):
         assert r["url"] and r["page_url"]
 
 
-def test_spark_enclosure_source(spark):
-    from historicaldatadocumentparsersystem_spark.queries import (
-        media_discovery as entry)
-    from historicaldatadocumentparsersystem_spark import sources
-    blobs = spark.createDataFrame(
-        [(b,) for b in entry._enclosure_feeds()], "content binary")
-    got = sorted((r["page_url"], r["url"], r["length_bytes"],
-                  r["duration_ms"])
-                 for r in sources.feed_enclosures_from_blobs(
-                     blobs).collect())
-    want = sorted((r["page_url"], r["url"], r["length_bytes"],
-                   r["duration_ms"])
-                  for b in entry._enclosure_feeds()
-                  for r in feedx.parse_feed_enclosures(b))
-    assert got == want and got
-
-
-def test_media_fetch_frontier_precedence(spark):
-    """The capstone union: channel precedence is argument order, and
-    a url referenced by several channels keeps its total n_refs."""
-    from historicaldatadocumentparsersystem_spark import sources
-    a = spark.createDataFrame([("u1",), ("u2",)], "url string")
-    b = spark.createDataFrame([("u2",), ("u3",), ("u3",), (None,)],
-                              "url string")
-    got = {r["url"]: (r["channel"], r["n_refs"])
-           for r in sources.media_fetch_frontier(
-               [("first", a), ("second", b)]).collect()}
-    assert got == {"u1": ("first", 1), "u2": ("first", 2),
-                   "u3": ("second", 2)}
-    plan = (sources.media_fetch_frontier([("first", a), ("second", b)])
-            ._jdf.queryExecution().executedPlan().toString())
-    assert plan.count("Exchange") <= 2   # ONE logical shuffle (+AQE)
+def _json_feed_blobs() -> list[bytes]:
+    """JSON Feed fixtures and an RSS shard in one set (one channel,
+    three wire formats): a v1.1 feed with attachments (audio
+    durations, an absurd declared size, an attachment-less item, an
+    external_url item), a gzipped v1 feed, a versionless JSON object
+    (rejected), and junk."""
+    jf = feedx.build_json_feed("Casts & notes", [
+        {"url": "https://jf.example/ep1", "title": "First & last",
+         "date_published": "2024-06-02T08:30:00Z",
+         "attachments": [
+             {"url": "https://cdn.jf.example/ep1.mp3",
+              "mime_type": "audio/mpeg", "size_in_bytes": 8388608,
+              "duration_in_seconds": 1903},
+             {"url": "https://cdn.jf.example/ep1.vtt",
+              "mime_type": "text/vtt"}]},
+        {"url": "https://jf.example/ep2", "title": "Oversize",
+         "date_published": "2024-06-03T09:00:00+02:00",
+         "attachments": [
+             {"url": "https://cdn.jf.example/ep2.m4a",
+              "size_in_bytes": 1 << 63,
+              "duration_in_seconds": -4}]},
+        {"external_url": "https://elsewhere.example/read",
+         "title": "Linkblog entry", "date_published": "not a date"},
+        {"title": "no url, dropped"},
+    ], home_page_url="https://jf.example/")
+    jf_gz = feedx.build_json_feed("Old style", [
+        {"url": "https://jf.example/v1", "title": None,
+         "date_published": "2024-06-04"},
+    ], version="https://jsonfeed.org/version/1", gzip_file=True)
+    rss = feedx.build_feed([
+        {"feed_kind": "rss", "url": "https://rss.example/a",
+         "title": "XML sibling", "pub_ts": datetime(
+             2024, 6, 1, tzinfo=timezone.utc)},
+    ])
+    not_feed = b'{"version": "1.0", "items": []}'
+    return [jf, jf_gz, rss, not_feed, b"total junk"]
 
 
 def test_json_feed_parse_and_dispatch():
-    from historicaldatadocumentparsersystem_spark.queries import (
-        media_discovery as entrymod)
-    from historicaldatadocumentparsersystem_spark.extractor import feedx
-    blobs = entrymod._json_feed_blobs()
+    blobs = _json_feed_blobs()
     # dispatch: JSON / gzipped-JSON / XML through the ONE entry point
     kinds = [r["feed_kind"] for b in blobs for r in feedx.parse_feed(b)]
     assert kinds == ["json", "json", "json", "json", "rss"]

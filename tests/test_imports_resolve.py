@@ -8,14 +8,18 @@ and each ``from X import Y`` needs a spec for X plus Y as either a
 submodule of X or an attribute of it. Imports under a ``try`` that
 catches ImportError are optional by design and are skipped.
 
-The same walk pins two more things: every walked file compiles with
+The same walk pins four more things: every walked file compiles with
 SyntaxWarning and DeprecationWarning raised as errors (an invalid
-escape such as ``"\\;"`` is a SyntaxError in future Pythons), and the
+escape such as ``"\\;"`` is a SyntaxError in future Pythons); the
 static import closure of the flagship (``pipeline`` + ``catalog``) is
-a reviewed list, so a change that widens it shows up as a diff here.
+a reviewed list, so a change that widens it shows up as a diff here;
+every package module is reached from the package's entry points,
+so a module left behind when its last importer is deleted fails by
+name; and every package module imports without error.
 """
 
 import ast
+import functools
 import importlib
 import importlib.util
 import os
@@ -162,3 +166,36 @@ def test_flagship_import_closure_is_pinned():
     got = _closure([f"{PKG}.pipeline", f"{PKG}.catalog"])
     want = {f"{PKG}.{m}" if m else PKG for m in FLAGSHIP_CLOSURE}
     assert sorted(got) == sorted(want)
+
+
+# The package's entry points: the flagship, every query family, and
+# the subsystems with a public surface of their own.
+ENTRY_POINTS = ("pipeline", "catalog", "sinks", "training",
+                "vector_index", "plans.checks")
+
+
+def _package_modules() -> list[str]:
+    pkg = os.path.join(ROOT, PKG)
+    return sorted(_module_name(os.path.join(d, f))
+                  for d, _, files in os.walk(pkg)
+                  for f in files if f.endswith(".py"))
+
+
+@functools.lru_cache(maxsize=None)
+def _reached() -> frozenset[str]:
+    roots = [f"{PKG}.{m}" for m in ENTRY_POINTS] + [
+        m for m in _package_modules()
+        if m.startswith((f"{PKG}.queries", f"{PKG}.streaming"))]
+    return frozenset(_closure(roots))
+
+
+@pytest.mark.parametrize("module", _package_modules())
+def test_every_package_module_is_reached(module):
+    assert module in _reached(), f"nothing imports {module}"
+
+
+@pytest.mark.parametrize("module", _package_modules())
+def test_every_package_module_imports(module):
+    """The static walk above sees import statements only; this runs
+    each module's top-level code, which may fail on its own."""
+    importlib.import_module(module)

@@ -1,6 +1,6 @@
 """Jupyter notebook source: extractor/ipynbx.py (pure oracle,
-golden-pinned), the v3/v4 serialization variants, the core-dispatch
-branch, and the Spark reader."""
+golden-pinned), the v3/v4 serialization variants and the core-dispatch
+branch."""
 
 import json
 import random
@@ -115,16 +115,6 @@ def test_make_ipynb_is_valid_json_and_roundtrips():
         assert [(c.cell_type, c.source) for c in got] == [
             ("code", "s=1"), ("markdown", "m\n")]
         assert got[0].exec_count is None
-
-
-def test_spark_reader_matches_golden(spark):
-    from historicaldatadocumentparsersystem_spark import sources
-    files = fixtures.ipynb_file_rows(30)
-    df = spark.createDataFrame(
-        [(r["url"], r["payload"]) for r in files],
-        "url string, payload binary").repartition(4)
-    got = sorted(tuple(r) for r in sources.read_ipynb_cells(df).collect())
-    assert got == sorted(_pure_rows())
 
 
 def test_fuzz_never_raises():

@@ -1,5 +1,5 @@
-"""LaTeX source: extractor/texx.py (pure oracle, golden-pinned),
-subset semantics, and the Spark reader."""
+"""LaTeX source: extractor/texx.py (pure oracle, golden-pinned) and
+subset semantics."""
 
 import random
 
@@ -105,14 +105,3 @@ def test_extract_text_spans():
     assert text == "H\npara"
     for (a, b, kind), want in zip(spans, ("heading", "text")):
         assert kind == want and text[a:b]
-
-
-def test_spark_reader_matches_golden(spark):
-    from historicaldatadocumentparsersystem_spark import sources
-    pages = fixtures.latex_rows(32)
-    df = spark.createDataFrame(
-        [(r["url"], r["tex"]) for r in pages],
-        "url string, tex string").repartition(4)
-    got = sorted(tuple(r)
-                 for r in sources.read_latex_elements(df).collect())
-    assert got == sorted(_pure_rows())

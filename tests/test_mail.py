@@ -1,6 +1,6 @@
 """mbox/MIME mail source: extractor/mailx.py (pure oracle,
 golden-pinned), RFC 2047 / MIME / mboxrd semantics, the core-dispatch
-branch, and the Spark reader."""
+branch, and the quoted-reply operator."""
 
 import random
 
@@ -129,17 +129,6 @@ def test_core_dispatch():
     # junk that fails the probe stays a fallback row
     res = core.extract_document(b"From here on out", "fb")
     assert (res.doc_kind, res.extracted_text) == ("empty", "fb")
-
-
-def test_spark_reader_matches_golden(spark):
-    from historicaldatadocumentparsersystem_spark import sources
-    files = fixtures.mbox_file_rows(24)
-    df = spark.createDataFrame(
-        [(r["url"], r["payload"]) for r in files],
-        "url string, payload binary").repartition(4)
-    got = sorted(tuple(r)
-                 for r in sources.read_mbox_messages(df).collect())
-    assert got == sorted(_pure_rows())
 
 
 def test_strip_quoted_reply_semantics(spark):

@@ -486,13 +486,27 @@ def test_refresh_microsyntax_vectors():
     assert p("99999999999; url=x") == ((1 << 31) - 1, "x")
 
 
+_REFRESH_ROWS = (
+    ("https://r.example/a", "5; url=https://r.example/b"),
+    ("https://r.example/doorway", "0;URL='https://spam.example/x'"),
+    ("https://r.example/frac", '  3.7 , url = "https://r.example/c"'),
+    ("https://r.example/self", "10"),
+    ("https://r.example/self2", "30; url=https://r.example/self2"),
+    ("https://r.example/rel", "0; promo/landing.html"),
+    ("https://r.example/slow", "600; url=https://r.example/later"),
+    ("https://r.example/bad", "abc"),
+    ("https://r.example/bad2", "5x; url=https://r.example/never"),
+    ("https://r.example/empty", None),
+    ("https://r.example/quoted", "1; url='https://other.example/p' tail"),
+    ("https://r.example/spacesep", "2 https://r.example/d"),
+)
+
+
 def test_refresh_spark_matches_pure(spark):
     from historicaldatadocumentparsersystem_spark.extractor.metax \
         import parse_refresh
     from historicaldatadocumentparsersystem_spark.operators import \
         pagemeta
-    from historicaldatadocumentparsersystem_spark.queries.cache_policy import (
-        _REFRESH_ROWS)
     df = spark.createDataFrame(list(_REFRESH_ROWS),
                                "url string, refresh string")
     got = [(r.url, r.delay_s, r.target)

@@ -469,37 +469,6 @@ def test_quantized_topk_scan_side_carries_int8_only(spark):
     assert "CartesianProduct" not in plan
 
 
-def test_cache_policy_plans(spark):
-    """cache_directives / cache_policy_table are map-only Arrow
-    passes (scan -> MapInPandas, ZERO exchanges — at 100 TB they ride
-    the capture scan); revisit_buckets adds exactly ONE exchange
-    (the tiny bucket rollup, map-side partial agg)."""
-    import re
-
-    from historicaldatadocumentparsersystem_spark.operators import \
-        cachepolicy
-    df = spark.createDataFrame(
-        [("u", "max-age=60", "1", None, None, None, None)],
-        "url string, cache_control string, hdr_age string, "
-        "hdr_date string, hdr_expires string, "
-        "hdr_last_modified string, hdr_etag string")
-    for op in (cachepolicy.cache_directives,
-               cachepolicy.cache_policy_table):
-        plan = physical_plan(op(df))
-        assert "Exchange" not in plan, plan
-    plan = physical_plan(cachepolicy.revisit_buckets(
-        cachepolicy.cache_policy_table(df)))
-    assert len(re.findall(r"^\(\d+\) Exchange\b", plan, re.M)) == 1, \
-        plan
-    # recrawl capstone: policy + fetched_epoch ride ONE Arrow pass
-    # (no join-back), then exactly the host-window exchange
-    df2 = df.withColumn("fetched_epoch", F.lit(1741000000).cast("long"))
-    plan = physical_plan(cachepolicy.recrawl_plan(df2, 1741600000))
-    assert "Join" not in plan, plan
-    assert len(re.findall(r"^\(\d+\) Exchange\b", plan, re.M)) == 1, \
-        plan
-
-
 def test_kmeans_broadcast_plan_bounded(spark):
     """Above LITERAL_K_MAX the assignment must be a broadcast-join
     plan whose SIZE is O(1) in k — no k x dim literal tree (the r4

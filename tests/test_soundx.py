@@ -251,15 +251,34 @@ def test_mp3_chapters_roundtrip_and_rules():
         soundx.mp3_chapters(blob[:i])
 
 
+def _podcast_rows() -> list[tuple[str, bytes]]:
+    """Chaptered-podcast inputs: full chapter lists (unicode titles,
+    open-ended last chapter), the end<=start degrade, a chapterless
+    episode, junk."""
+    return [
+        ("pod-ep1", soundx.make_mp3(
+            [("TIT2", "Show 12")], n_frames=6,
+            chapters=[("ch0", 0, 95000, "Intro"),
+                      ("ch1", 95000, 1680000,
+                       "M\u00e4in topic \u2014 deep dive"),
+                      ("ch2", 1680000, None, "Outro")])),
+        ("pod-ep2", soundx.make_mp3(
+            [("TIT2", "Show 13")], n_frames=4,
+            chapters=[("a", 1000, 500, None),
+                      ("b", 500, 2500, "Only titled")])),
+        ("pod-plain", soundx.make_mp3([("TIT2", "No chapters")],
+                                      n_frames=3)),
+        ("pod-junk", b"ID3junk not a tag"),
+    ]
+
+
 def test_podcast_chapters_operator(spark):
-    from historicaldatadocumentparsersystem_spark.queries import (
-        media_containers as entry)
     from historicaldatadocumentparsersystem_spark.operators import \
         multimodal
-    df = spark.createDataFrame(entry._podcast_rows(),
+    df = spark.createDataFrame(_podcast_rows(),
                                "media_id string, payload binary")
     got = sorted(tuple(r) for r in
                  multimodal.podcast_chapters(df).collect())
-    want = sorted((mid, *r) for mid, blob in entry._podcast_rows()
+    want = sorted((mid, *r) for mid, blob in _podcast_rows()
                   for r in soundx.mp3_chapters(blob))
     assert got == want and got

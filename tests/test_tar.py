@@ -1,6 +1,6 @@
 """tar/ustar archive source: extractor/tarx.py (pure oracle,
-golden-pinned, cross-checked against stdlib tarfile both directions),
-the recursive core dispatch, and the Spark reader + composition."""
+golden-pinned, cross-checked against stdlib tarfile both directions)
+and the recursive core dispatch."""
 
 import hashlib
 import io
@@ -10,12 +10,9 @@ import tarfile
 import pyarrow.parquet as pq
 
 from historicaldatadocumentparsersystem_spark import fixtures
-from historicaldatadocumentparsersystem_spark.extractor import (core,
-                                                                tarx,
-                                                                texx)
+from historicaldatadocumentparsersystem_spark.extractor import core, tarx
 
 GOLDEN_MEM = "fixtures/golden_tar_members_seed42_n12.parquet"
-GOLDEN_TARLATEX = "fixtures/golden_tar_latex_seed42_n12.parquet"
 
 
 def _pure_members() -> list[tuple]:
@@ -107,38 +104,3 @@ def test_never_raises_on_fuzz():
         for m in tarx.list_tar(mutated):
             assert m.size >= 0
         core.extract_document(mutated, None)
-
-
-def test_spark_reader_and_composition_match_golden(spark):
-    from pyspark.sql import functions as F
-    from historicaldatadocumentparsersystem_spark import sources
-    files = fixtures.tar_file_rows(12)
-    df = spark.createDataFrame(
-        [(r["url"], r["payload"]) for r in files],
-        "url string, payload binary").repartition(4)
-    got = sorted(
-        tuple(r) for r in sources.read_tar_members(df)
-        .select("url", "member_idx", "name", "size", "mtime",
-                "typeflag", F.md5("payload").alias("md5")).collect())
-    assert got == sorted(_pure_members())
-    # composition: .tex members through the latex reader == golden
-    members = sources.read_tar_members(df).where(
-        (F.col("typeflag") == "0") & F.col("name").endswith(".tex"))
-    texes = members.select(
-        F.concat_ws("#", "url", "name").alias("url"),
-        F.decode(F.col("payload"), "UTF-8").alias("tex"))
-    got = sorted(tuple(r)
-                 for r in sources.read_latex_elements(texes).collect())
-    want = sorted(
-        (r["url"], r["para"], r["kind"], r["level"], r["text"])
-        for r in pq.read_table(GOLDEN_TARLATEX).to_pylist())
-    assert got == want and len(want) == 104
-    # the golden re-derives from the pure parser
-    pure = []
-    for r in files:
-        for m in tarx.list_tar(r["payload"]):
-            if m.typeflag == "0" and m.name.endswith(".tex"):
-                for e in texx.parse_latex(m.payload.decode("utf-8")):
-                    pure.append((f"{r['url']}#{m.name}", e.para,
-                                 e.kind, e.level, e.text))
-    assert sorted(pure) == want

@@ -1,5 +1,5 @@
-"""XLSX source: extractor/xlsxx.py grammar vectors, golden pin,
-Spark reader == golden parity, and the core zip-dispatch branch."""
+"""XLSX source: extractor/xlsxx.py grammar vectors, golden pin, and
+the core zip-dispatch branch."""
 
 import io
 import random
@@ -148,48 +148,6 @@ def test_core_dispatch_and_text():
     empty = xlsxx.make_xlsx([("S", [])])
     res = core.extract_document(empty, None)
     assert res.doc_kind != "xlsx" and res.failed
-
-
-def test_spark_reader_matches_golden(spark):
-    from historicaldatadocumentparsersystem_spark import sources
-    files = fixtures.xlsx_file_rows(16)
-    df = spark.createDataFrame(
-        [(r["url"], r["payload"]) for r in files],
-        "url string, payload binary").repartition(8)
-    got = sorted(
-        (r.url, r.sheet, r.sheet_name, r.row, r.col, r.cell_type,
-         r.value)
-        for r in sources.read_xlsx_cells(df).collect())
-    assert got == sorted(_pure_rows(16))
-
-
-def test_spark_sheets_matches_pure(spark):
-    from historicaldatadocumentparsersystem_spark import sources
-    files = fixtures.xlsx_file_rows(16)
-    df = spark.createDataFrame(
-        [(r["url"], r["payload"]) for r in files],
-        "url string, payload binary").repartition(8)
-    got = sorted((r.url, r.sheet, r.sheet_name, r.n_cells, r.n_rows,
-                  r.n_cols)
-                 for r in sources.read_xlsx_sheets(df).collect())
-    want = []
-    for f in files:
-        try:
-            d = xlsxx.extract_xlsx(f["payload"])
-        except Exception:
-            continue
-        per = {}
-        for si, row, col, _, _ in d["cells"]:
-            per.setdefault(si, []).append((row, col))
-        for si, name in enumerate(d["sheets"]):
-            rcs = per.get(si, [])
-            want.append((f["url"], si, name, len(rcs),
-                         max((r for r, _ in rcs), default=-1) + 1,
-                         max((c for _, c in rcs), default=-1) + 1))
-    assert got == sorted(want)
-    # the empty sheet is present with zero extent
-    assert any(r[2] == "Blank" and r[3] == 0 and r[4] == 0
-               for r in got)
 
 
 def test_fuzz_never_raises():
