@@ -37,14 +37,15 @@ class Catalog:
     # -- extracted table ----------------------------------------------------
     def write_extracted(self, df: DataFrame) -> None:
         """Write partitioned by part_id; dynamic overwrite = idempotent.
+        The overwrite mode is a per-write option: the caller's session
+        conf is left as it was.
 
         No post-write count: the caller observes row totals during
         this write (``pipeline.run_extraction``) — an incremental run
         must never pay a table scan just for bookkeeping.
         """
-        spark = df.sparkSession
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         df.write.mode("overwrite").partitionBy("part_id") \
+            .option("partitionOverwriteMode", "dynamic") \
             .parquet(self.extracted_path)
 
     def read_extracted(self, spark: SparkSession) -> DataFrame:

@@ -7,8 +7,8 @@ The LAST reference source-format branch with no repo analog
 ``partition_ppt`` separately from ``.pptx``): decades of legacy
 ``.ppt``/``.doc`` binaries sit in web archives, and they are CFB
 containers — a FAT filesystem in a file. This module is both the
-container walk (directory tree, FAT/miniFAT chains — the
-``zipx`` index discipline) and the two text decoders:
+container walk (directory tree, FAT/miniFAT chains) and the two text
+decoders:
 
 - [MS-PPT]: the ``PowerPoint Document`` stream is a tree of records
   (8-byte headers: ver/instance, type, length; recVer 0xF =

@@ -23,7 +23,7 @@ Format shape:
   Content-Transfer-Encoding base64 / quoted-printable decoded by
   hand-rolled tolerant decoders; text charsets via the declared
   charset (charsetx alias table), falling back strict-utf-8 then
-  cp1252 (the subx rule).
+  cp1252.
 - body text: all non-attachment ``text/plain`` parts joined with
   "\\n"; a plain-less HTML-only message falls back to the SAME
   htmlx DOM pipeline every other format uses.
@@ -120,8 +120,8 @@ def _b64_decode(data: bytes) -> bytes:
 
 
 def _decode_charset(data: bytes, charset: str) -> str:
-    """Declared charset (alias-normalized) first; then the subx rule:
-    strict utf-8, falling back total cp1252."""
+    """Declared charset (alias-normalized) first; then strict utf-8,
+    falling back total cp1252."""
     cs = _ALIASES.get(charset.lower(), charset.lower()) if charset else ""
     if cs:
         try:

@@ -4,13 +4,14 @@ arXiv source dumps are a cornerstone science corpus; a crawl-scale
 pipeline meets them as raw ``.tex`` payloads.  This member of the
 loader family emits the SHARED (para, kind, level, text) element
 schema, so heading-hierarchy section chunking composes unchanged
-(the wikix/outlinex precedent).
+(as for ``outlinex``).
 
 Deterministic subset (the detex-stable core):
 
 - ``%`` comments to end-of-line (``\\%`` is a literal percent)
 - ``verbatim``/``verbatim*`` environment content kept VERBATIM via
-  NUL sentinels (the wikix nowiki rule); ``\\verb|x|`` inline too
+  NUL sentinels: the text is swapped out before any markup rule
+  runs and swapped back after; ``\\verb|x|`` inline too
 - math removed: ``$...$``, ``$$...$$``, ``\\(..\\)``, ``\\[..\\]``
   and the equation/align/displaymath/eqnarray/gather environments
 - dropped-whole environments: tabular/figure/table wrappers vanish

@@ -3,9 +3,9 @@
 
 Completes the OOXML loader family (S6 docx / S7 pptx; reference
 analog ``loaders.py``'s per-format dispatch): spreadsheet exports
-are the other tabular web modality next to CSV (S5) — the emitted
-cell schema matches ``extractor/csvx.py`` so both feed the same
-downstream typing profile.
+are the other tabular web modality next to CSV (S5) — each cell is
+one flat (sheet, row, column, cell type, raw value) record, which a
+downstream typing profile reads like any CSV table.
 
 Deterministic subset:
 - sheets in ``xl/workbook.xml`` document order; each worksheet part

@@ -14,7 +14,12 @@ Plan shape (SURVEY.md §4.3 target), lineage observed during the write:
                         observations, never from re-reading the output
 
 All per-document logic is Arrow-batched (``mapInPandas``) — no per-row
-Python at the DataFrame level (north rule). Skew: url is unique so
+Python at the DataFrame level (north rule). The fixed cost of a UDF
+task is not pandas or Arrow: it is PySpark's per-task
+``importlib.invalidate_caches()``, which re-reads the directory of
+pyspark.zip and the Spark jar (~0.3 s per task). The package
+``__init__`` keys that re-read on each archive's stat, so on a reused
+Python worker only the first tasks pay it. Skew: url is unique so
 xxhash64(url) spreads rows uniformly even when one host owns 30% of
 urls; host-level aggregations use ``operators.skew.salted_key``.
 
@@ -72,6 +77,10 @@ def extract_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     Heavy setup (none here — regexes are module-level, compiled once per
     executor at import) follows the reference's lesson NOT to re-init
     per row (tokenizer reloaded per call, ``doc_processor.py:96-99``).
+    The same holds per task: unpickling this function imports the
+    package, whose ``__init__`` keys zip-cache invalidation on the
+    archive's stat, so later tasks on the worker skip re-reading
+    pyspark.zip and the Spark jar.
     """
     for pdf_in in batches:
         # .tolist() once per column: per-row .iloc is ~2x slower than the

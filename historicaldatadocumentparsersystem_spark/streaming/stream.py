@@ -50,12 +50,11 @@ def extraction_stream(spark: SparkSession, source_dir: str,
         if lin is not None and \
                 lin.where(lin.snapshot_id == snap).limit(1).count() > 0:
             return  # replayed batch: already fully committed
-        session.conf.set("spark.sql.sources.partitionOverwriteMode",
-                         "dynamic")
         extracted = pipeline.extract_df(batch_df, num_buckets=num_buckets,
                                         shuffle=False).cache()
         (extracted.withColumn("batch_id", F.lit(int(batch_id)))
          .write.mode("overwrite").partitionBy("batch_id")
+         .option("partitionOverwriteMode", "dynamic")
          .parquet(cat.extracted_path))
         lineage = pipeline.lineage_from_extracted(
             extracted, run_id=run_id, snapshot_id=snap, wall_ms=0)
@@ -106,18 +105,17 @@ def sketch_stream(spark: SparkSession, source_dir: str, out_dir: str,
             .parquet(source_dir))
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        sess = batch_df.sparkSession
-        sess.conf.set("spark.sql.sources.partitionOverwriteMode",
-                      "dynamic")
         terms = batch_df.select(F.explode(F.transform(
             tokens("text"), lambda t: F.lower(t))).alias("term"))
         (sketches.cms_table(terms, "term", d=d, w=w, seed=seed)
          .withColumn("batch_id", F.lit(int(batch_id)))
          .write.mode("overwrite").partitionBy("batch_id")
+         .option("partitionOverwriteMode", "dynamic")
          .parquet(f"{out_dir}/cms"))
         (sketches.hll_registers(batch_df, "url", b=b, seed=seed)
          .withColumn("batch_id", F.lit(int(batch_id)))
          .write.mode("overwrite").partitionBy("batch_id")
+         .option("partitionOverwriteMode", "dynamic")
          .parquet(f"{out_dir}/hll"))
 
     return (docs.writeStream.foreachBatch(sink)
@@ -197,8 +195,6 @@ def discovery_stream(spark: SparkSession, source_dir: str,
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         sess = batch_df.sparkSession
-        sess.conf.set("spark.sql.sources.partitionOverwriteMode",
-                      "dynamic")
         disc = (batch_df.where(F.col("kind") == "url")
                 .select(F.col("loc").alias("url"),
                         surt_urlkey("loc").alias("urlkey"),
@@ -218,6 +214,7 @@ def discovery_stream(spark: SparkSession, source_dir: str,
                              "left_anti")
         (disc.withColumn("batch_id", F.lit(int(batch_id)))
          .write.mode("overwrite").partitionBy("batch_id")
+         .option("partitionOverwriteMode", "dynamic")
          .parquet(f"{out_dir}/frontier"))
 
     return (urls.writeStream.foreachBatch(sink)
@@ -261,12 +258,10 @@ def artifacts_stream(spark: SparkSession, source_dir: str, out_dir: str,
             .parquet(source_dir))
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        session = batch_df.sparkSession
-        session.conf.set("spark.sql.sources.partitionOverwriteMode",
-                         "dynamic")
         (pagemeta.page_artifacts(batch_df)
          .withColumn("batch_id", F.lit(int(batch_id)))
          .write.mode("overwrite").partitionBy("batch_id")
+         .option("partitionOverwriteMode", "dynamic")
          .parquet(f"{out_dir}/artifacts"))
 
     return (docs.writeStream.foreachBatch(sink)

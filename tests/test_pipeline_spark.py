@@ -142,6 +142,37 @@ def test_exact_resume(spark, docs_df, tmp_path):
     assert stats2["skipped_partitions"] == 8
 
 
+def test_static_session_stays_static_and_resume_keeps_done_files(
+        spark, docs_df, tmp_path):
+    """The dynamic overwrite is a per-write option: a STATIC session
+    stays STATIC, and a resumed run (whose write touches only the todo
+    buckets) still leaves the files of the done buckets in place."""
+    from pyspark.sql import functions as F
+    from historicaldatadocumentparsersystem_spark.catalog import Catalog
+
+    key = "spark.sql.sources.partitionOverwriteMode"
+    spark.conf.set(key, "STATIC")
+    try:
+        out = str(tmp_path / "cat")
+        half = docs_df.transform(lambda d: pipeline.with_part_id(d, 8)) \
+                      .where(F.col("part_id") < 4).drop("part_id")
+        pipeline.run_extraction(spark, half, out, run_id="r-half",
+                                snapshot_id="s1", num_buckets=8)
+        assert spark.conf.get(key) == "STATIC"
+        cat = Catalog(out)
+        done = cat.done_partitions(spark, "s1")
+        assert done and done <= {0, 1, 2, 3}
+        before = set(cat.data_files())     # the done buckets' files
+        stats = pipeline.run_extraction(spark, docs_df, out, run_id="r-rest",
+                                        snapshot_id="s1", num_buckets=8)
+        assert spark.conf.get(key) == "STATIC"
+        assert stats["skipped_partitions"] == len(done)
+        assert before and before < set(cat.data_files())
+        assert cat.read_extracted(spark).count() == N
+    finally:
+        spark.conf.unset(key)
+
+
 def test_run_extraction_writes_extract_df_plan(spark, docs_df, tmp_path,
                                                monkeypatch):
     """run_extraction writes extract_df's plan (one url-hash exchange
