@@ -10,9 +10,10 @@ max_tokens with overlap_tokens rewind). Defaults 4000/500
 
 This is NOT a hash-aggregation (cumulative-sum + floor(cum/max) is
 wrong: the reference resets the budget at group close), so it runs as
-``applyInPandas`` per url — one shuffle on url, then a deterministic
-in-memory fold per document. Tokens = whitespace words (no HF tokenizer
-offline; same proxy in the oracle below and the DuckDB-free pytest).
+one shuffle on url, then a deterministic in-memory fold per document
+(``fold_sorted_groups``, also used by ``packing.sequence_pack_greedy``).
+Tokens = whitespace words (no HF tokenizer offline; same proxy in the
+oracle below and the DuckDB-free pytest).
 """
 
 from __future__ import annotations
@@ -131,54 +132,58 @@ def chunk_elements(elements: list[tuple[int, int, str]], max_tokens: int,
     return chunks
 
 
-def _rows_df(url: str, rows: list) -> pd.DataFrame:
-    return pd.DataFrame({
-        "url": [url] * len(rows),
-        "chunk_id": [r[0] for r in rows],
-        "page": [r[1] for r in rows],
-        "text": [r[2] for r in rows],
-        "n_tokens": [r[3] for r in rows],
-    })
+def fold_sorted_groups(batches, cols: list[str], fold, names: list[str]):
+    """The streaming fold behind ``mapInPandas`` operators whose input
+    partition is sorted by its group key ``cols[0]``: rows of one key
+    are buffered as lists of the other ``cols`` and handed to
+    ``fold(key, rows)``, which yields output tuples in ``names`` order.
+    Output columns accumulate across a whole Arrow batch, one frame per
+    batch (a frame per group cost more than the fold itself). Batches
+    arrive in order within a partition, so the trailing group of a
+    batch is carried into the next. Rows with a null key yield
+    nothing."""
+    key, group = None, []
+    for b in batches:
+        out: list[tuple] = []
+        for k, *rest in zip(*(b[c].tolist() for c in cols)):
+            if k != key:
+                if key is not None:
+                    out.extend(fold(key, group))
+                key, group = k, []
+            group.append(rest)
+        if out:
+            yield pd.DataFrame(dict(zip(names, zip(*out))))
+    if key is not None:
+        out = list(fold(key, group))
+        if out:
+            yield pd.DataFrame(dict(zip(names, zip(*out))))
 
 
 def chunk_by_token_budget(df: DataFrame, max_tokens: int = 64,
                           overlap: int = 16,
                           counter="words") -> DataFrame:
-    """A4 over (url, page, pos, text) rows.
+    """A4 over (url, page, pos, text) rows: ``chunk_elements`` per url,
+    as (url, chunk_id, page, text, n_tokens) rows (CHUNK_SCHEMA).
 
     Plan: ONE shuffle (repartition by url) + sortWithinPartitions(url,
-    page, pos) + a streaming fold in mapInPandas. Each Python call
-    handles a whole partition of urls instead of one url per call —
-    groupBy().applyInPandas costs ~2 ms of per-group overhead, which at
-    5k docs was 12 s and at 10^12 docs is a non-starter. Arrow batches
-    can split a url, so the fold buffers the trailing incomplete group
-    across batches (batches arrive in order within a partition)."""
+    page, pos) + ``fold_sorted_groups`` in mapInPandas. Each Python
+    call handles a whole partition of urls instead of one url per call
+    — groupBy().applyInPandas costs ~2 ms of per-group overhead, which
+    at 5k docs was 12 s and at 10^12 docs is a non-starter — and builds
+    one output frame per Arrow batch, not one per url. A url whose
+    elements are all empty yields no rows."""
 
     prepared = (df.select("url", "page", "pos", "text")
                 .repartition(F.col("url"))
                 .sortWithinPartitions("url", "page", "pos"))
 
+    def chunks_of(url, elements):
+        for chunk in chunk_elements(elements, max_tokens, overlap, counter):
+            yield (url, *chunk)
+
     def fold_partition(batches):
-        cur_url: str | None = None
-        cur: list[tuple[int, int, str]] = []
-        for b in batches:
-            out: list[pd.DataFrame] = []
-            for url, page, pos, text in zip(
-                    b["url"], b["page"], b["pos"], b["text"]):
-                if url != cur_url:
-                    if cur_url is not None:
-                        out.append(_rows_df(
-                            cur_url,
-                            chunk_elements(cur, max_tokens, overlap,
-                                           counter)))
-                    cur_url, cur = url, []
-                cur.append((int(page), int(pos), text))
-            if out:
-                yield pd.concat(out, ignore_index=True)
-        if cur_url is not None:
-            yield _rows_df(cur_url,
-                           chunk_elements(cur, max_tokens, overlap,
-                                          counter))
+        return fold_sorted_groups(batches, ["url", "page", "pos", "text"],
+                                  chunks_of, CHUNK_SCHEMA.names)
 
     return prepared.mapInPandas(fold_partition, CHUNK_SCHEMA)
 

@@ -219,7 +219,9 @@ def _np_round9_nano(V):
     frac = ax - np.floor(ax)
     fast = (np.abs(frac - 0.5) > 1e-4) & (ax < 1e15)
     nano = np.floor(ax + 0.5)
-    out = np.where(V >= 0, nano, -nano).astype(np.int64)
+    # only fast elements are cast: a huge one would not fit int64, and
+    # the exact path below overwrites it (or raises OverflowError)
+    out = np.where(fast, np.where(V >= 0, nano, -nano), 0).astype(np.int64)
     if not fast.all():
         for i, j in zip(*np.nonzero(~fast)):
             d = Decimal(repr(float(V[i, j]))).quantize(

@@ -19,7 +19,7 @@ embedding-cosine near-dup. Design notes for scale:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from .textstats import tokens
@@ -299,22 +299,22 @@ def simhash(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
     Each token votes +1/-1 on each bit of conv(md5(token)[:8], 16, 10);
     bit b of the simhash is 1 iff the vote sum is > 0. Explode tokens ->
     one aggregation keyed by id (map-side combinable).
+
+    The 32 vote aggregates and the 32-term bit sum are SQL text: built
+    with the Column API they cost one py4j round trip per call, hundreds
+    per ``simhash`` (about half a second of driver time).
     """
     tok = (df.select(F.col(id_col).alias("id"),
                      F.explode(tokens(text_col)).alias("tok"))
            .withColumn("h", F.conv(F.substring(F.md5("tok"), 1, 8), 16, 10)
                        .cast("long")))
-    votes = [
-        F.sum(F.when(F.shiftright(F.col("h"), b).bitwiseAND(1) == 1,
-                     1).otherwise(-1)).alias(f"v{b}")
-        for b in range(bits)
-    ]
-    agg = tok.groupBy("id").agg(*votes)
-    sim = None
-    for b in range(bits):
-        bit = F.when(F.col(f"v{b}") > 0, F.lit(2 ** b)).otherwise(F.lit(0))
-        sim = bit if sim is None else (sim + bit)
-    return agg.select("id", sim.cast("long").alias("simhash"))
+    votes = [F.expr(f"sum(CASE WHEN (shiftright(h, {b}) & 1) = 1 "
+                    f"THEN 1 ELSE -1 END) AS v{b}")
+             for b in range(bits)]
+    sim = " + ".join(f"CASE WHEN v{b} > 0 THEN {2 ** b} ELSE 0 END"
+                     for b in range(bits))
+    return (tok.groupBy("id").agg(*votes)
+            .selectExpr("id", f"CAST({sim} AS BIGINT) AS simhash"))
 
 
 def simhash_near_pairs(df: DataFrame, text_col: str = "text",
@@ -378,75 +378,122 @@ def hamming_near_pairs(hashes: DataFrame, hash_col: str,
 
 # --- dedup clustering (connected components) ---------------------------------
 
+def _union_find_stars(batches):
+    """mapInArrow body: one union-find over every (src, dst) edge of
+    the partition, returned as star edges (node, root) with root the
+    minimum node of the node's local component. A null end joins
+    nothing: it is its own root."""
+    import pyarrow as pa
+    parent: dict = {}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]   # path halving
+            x = parent[x]
+        return x
+
+    schema = None
+    for b in batches:
+        schema = b.schema
+        for a, c in zip(b.column(0).to_pylist(), b.column(1).to_pylist()):
+            parent.setdefault(a, a)
+            parent.setdefault(c, c)
+            if a is None or c is None:
+                continue
+            ra, rc = find(a), find(c)
+            if ra != rc:
+                lo, hi = (ra, rc) if ra < rc else (rc, ra)
+                parent[hi] = lo
+    if parent:
+        nodes = list(parent)
+        yield pa.RecordBatch.from_arrays(
+            [pa.array(nodes, schema.field(0).type),
+             pa.array([find(n) for n in nodes], schema.field(0).type)],
+            ["node", "root"])
+
+
 def connected_components(pairs: DataFrame, a_col: str = "id_a",
                          b_col: str = "id_b",
                          max_iter: int = 50) -> DataFrame:
     """(id_a, id_b) near-dup pairs -> (node, component) with component
     = min node id in the connected cluster: the canonicalization step
     every dedup pipeline runs after LSH pair generation (keep one doc
-    per component).
+    per component). Ids keep their input type.
 
-    Min-label propagation (the large-star/small-star simplification):
-    each round every node takes the min of its own and its neighbors'
-    labels; converged when no label changes. Rounds needed = graph
-    diameter (near-dup clusters are shallow — a handful of rounds);
-    each round is ONE broadcast-free equi-join on node id plus a
-    map-side-combinable min-aggregate. The per-round driver scalar
-    (`changed`) is an aggregate count, not row data.
+    Contraction first: ONE ``mapInArrow`` pass runs a union-find over
+    each partition of the pair table and emits every local component
+    as a star (node -> local min). The star edges connect exactly what
+    the pairs connect, so the first labels, ``min(root)`` per node,
+    are already final for every component that lies inside one
+    partition — which is every component when AQE coalesces the (tiny)
+    pair shuffle into one partition. Exactness never rests on that:
+    min-label rounds over the star edges (each node takes the min of
+    its own and its neighbors' labels) finish any component that
+    spans partitions; converged when no label changes, so a run whose
+    components are all local pays one confirming round.
 
-    Labels are ``localCheckpoint``-ed each round: iterative DataFrame
-    loops otherwise stack join-plans into a tree that grows per
-    iteration until the driver OOMs just *analyzing* it — lineage
-    truncation per round is the canonical fix (same move GraphFrames
-    makes; on a cluster use a reliable ``checkpoint`` dir so executor
-    loss can recompute).
+    The star table is ``localCheckpoint``-ed, not ``persist()``-ed:
+    a cached plan keeps its shuffle partitioning under AQE
+    (``spark.sql.optimizer.canChangeCachedPlanOutputPartitioning`` is
+    false on 4.1), so a persisted input would carry all shuffle
+    partitions into the contraction and leave more rounds to do; it
+    also kept the cached blocks on the driver heap's old generation.
+    Each round's labels are checkpointed too: iterative DataFrame
+    loops otherwise stack join-plans into a tree that grows per round
+    until the driver OOMs just *analyzing* it (GraphFrames makes the
+    same move; on a cluster use a reliable ``checkpoint`` dir so
+    executor loss can recompute).
+
+    The driver scalars ride the checkpoint actions as
+    ``DataFrame.observe`` metrics instead of extra ``count()`` jobs:
+    the star row count (an upper bound on the node count, which picks
+    broadcast or shuffle joins) and each round's number of changed
+    labels.
     """
-    edges = (pairs.select(F.col(a_col).alias("src"),
-                          F.col(b_col).alias("dst"))
-             .union(pairs.select(F.col(b_col).alias("src"),
-                                 F.col(a_col).alias("dst")))
-             .distinct().persist())
-    labels = (edges.select(F.col("src").alias("node")).distinct()
-              .withColumn("component", F.col("node"))
-              .localCheckpoint(eager=True))
+    id_type = pairs.select(F.coalesce(a_col, b_col)).schema[0].dataType
+    edges = pairs.select(F.col(a_col).cast(id_type).alias("src"),
+                         F.col(b_col).cast(id_type).alias("dst"))
+    seen = Observation()
+    star = (edges.mapInArrow(_union_find_stars,
+                             f"node {id_type.simpleString()}, "
+                             f"root {id_type.simpleString()}")
+            .observe(seen, F.count(F.lit(1)).alias("rows"))
+            .localCheckpoint(eager=True))
     # checkpointed frames carry NO size stats (ScanExistingRDD reports
     # defaultSizeInBytes), so AQE never broadcasts the label table and
-    # every round pays two sort-merge shuffles even for tiny graphs.
-    # Decide from the MEASURED node count — the same call that seeds
-    # convergence context — and fall back to shuffle joins at scale
-    # (r6; label rows are ~32 B, threshold well under the 10 MB
-    # auto-broadcast default).
-    n_nodes = labels.count()
-    small = n_nodes * 64 < 8 << 20
+    # every round would pay two sort-merge shuffles even for tiny
+    # graphs; decide from the observed row count instead (label rows
+    # are ~32 B, threshold well under the 10 MB auto-broadcast default)
+    small = seen.get["rows"] * 64 < 8 << 20
     bcast = F.broadcast if small else (lambda d: d)
+    links = star.where(F.col("node") != F.col("root"))
+    star_edges = (links.select(F.col("node").alias("src"),
+                               F.col("root").alias("dst"))
+                  .union(links.select(F.col("root").alias("src"),
+                                      F.col("node").alias("dst"))))
+    labels = star.groupBy("node").agg(F.min("root").alias("component"))
     converged = False
     for _ in range(max_iter):
-        neighbor_min = (edges.join(bcast(labels),
-                                   edges.dst == labels.node)
+        neighbor_min = (star_edges.join(bcast(labels),
+                                        star_edges.dst == labels.node)
                         .groupBy("src")
                         .agg(F.min("component").alias("nbr_min")))
-        # convergence detection rides the SAME join that produces the
-        # labels (r6, VERDICT r5 item 5): new < old iff the neighbor
-        # min undercuts the current label, so a __chg flag replaces
-        # the old second full label-set join per round; counting it is
-        # a scan of the just-checkpointed rows
+        # new < old iff the neighbor min undercuts the current label
+        nbr = F.coalesce("nbr_min", F.col("component"))
+        rounds = Observation()
         new_labels = (labels.join(bcast(neighbor_min),
-                                  labels.node == neighbor_min.src,
-                                  "left")
+                                  labels.node == neighbor_min.src, "left")
                       .select("node",
-                              F.least("component",
-                                      F.coalesce("nbr_min",
-                                                 F.col("component")))
-                              .alias("component"),
-                              (F.coalesce("nbr_min", F.col("component"))
-                               < F.col("component")).alias("__chg"))
+                              F.least("component", nbr).alias("component"),
+                              (nbr < F.col("component")).alias("__chg"))
+                      .observe(rounds, F.count(F.when(F.col("__chg"), 1))
+                               .alias("changed"))
                       .localCheckpoint(eager=True))
-        changed = new_labels.where(F.col("__chg")).count()
+        changed = rounds.get["changed"]
         labels = new_labels.drop("__chg")
         if changed == 0:
             converged = True
             break
-    edges.unpersist()
     if not converged:
         # Silently returning mid-propagation labels would split one
         # cluster into several keep_ids with no signal — plausible for

@@ -32,13 +32,13 @@ as chunking does).
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import (IntegerType, LongType, StructField,
                                StructType)
 
 from . import textstats
+from .chunking import fold_sorted_groups
 
 
 def _cost_col() -> F.Column:
@@ -132,34 +132,13 @@ def sequence_pack_greedy(df: DataFrame, seq_len: int = 64,
                 .repartition(F.col("shard"))
                 .sortWithinPartitions("shard", "doc_id"))
 
+    def packed_of(shard, rows):
+        for packed in pack_greedy_fold(rows, seq_len):
+            yield (shard, *packed)
+
     def fold_partition(batches):
-        cur_shard: int | None = None
-        cur: list[tuple[int, int]] = []
-
-        def flush(shard, rows):
-            packed = pack_greedy_fold(rows, seq_len)
-            return pd.DataFrame({
-                "shard": [shard] * len(packed),
-                "doc_id": [p[0] for p in packed],
-                "cost": [p[1] for p in packed],
-                "seq_id": [p[2] for p in packed],
-                "n_pieces": [p[3] for p in packed],
-                "seq_used": [p[4] for p in packed],
-            })
-
-        for b in batches:
-            out: list[pd.DataFrame] = []
-            for shard, doc_id, cost in zip(b["shard"], b["doc_id"],
-                                           b["cost"]):
-                if shard != cur_shard:
-                    if cur_shard is not None:
-                        out.append(flush(cur_shard, cur))
-                    cur_shard, cur = int(shard), []
-                cur.append((int(doc_id), int(cost)))
-            if out:
-                yield pd.concat(out, ignore_index=True)
-        if cur_shard is not None:
-            yield flush(cur_shard, cur)
+        return fold_sorted_groups(batches, ["shard", "doc_id", "cost"],
+                                  packed_of, GREEDY_SCHEMA.names)
 
     return prepared.mapInPandas(fold_partition, GREEDY_SCHEMA)
 

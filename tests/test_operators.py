@@ -35,19 +35,30 @@ def test_chunk_oracle_oversize_window_split():
 
 
 def test_chunk_spark_matches_oracle(spark):
+    # batches of 3 records split urls across Arrow batches, so the fold
+    # carries a url's trailing elements into the next batch; u3's
+    # elements are all empty and yield no rows
     rows = [("u1", p, i, f"tok{p}_{i} " * (i + 1)) for p in (1, 2)
-            for i in range(5)] + [("u2", 1, 0, "a b c d e f g h i j")]
+            for i in range(5)] + [("u2", 1, 0, "a b c d e f g h i j")] \
+        + [("u3", 1, i, " " * i) for i in range(4)] \
+        + [(f"v{k}", 1, i, f"w{k} x{i} y z") for k in range(5)
+           for i in range(k)]
     df = spark.createDataFrame(
         rows, "url string, page int, pos int, text string")
-    got = chunking.chunk_by_token_budget(df, max_tokens=6, overlap=2)
-    got_rows = {(r.url, r.chunk_id): (r.page, r.text, r.n_tokens)
-                for r in got.collect()}
-    for url in ("u1", "u2"):
-        elements = [(p, i, t) for (u, p, i, t) in rows if u == url]
-        oracle = chunking.chunk_elements(elements, 6, 2)
-        assert len([1 for (u, _) in got_rows if u == url]) == len(oracle)
-        for cid, page, text, ntok in oracle:
-            assert got_rows[(url, cid)] == (page, text, ntok)
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prior = spark.conf.get(key)
+    spark.conf.set(key, "3")
+    try:
+        got = chunking.chunk_by_token_budget(
+            df, max_tokens=6, overlap=2).collect()
+    finally:
+        spark.conf.set(key, prior)
+    want = sorted(
+        (url, *chunk) for url in sorted({r[0] for r in rows})
+        for chunk in chunking.chunk_elements(
+            [(p, i, t) for (u, p, i, t) in rows if u == url], 6, 2))
+    assert sorted(tuple(r) for r in got) == want
+    assert not [r for r in got if r.url == "u3"]
 
 
 # --- dedup ---------------------------------------------------------------------
@@ -900,6 +911,75 @@ def test_connected_components_long_chain_converges(spark):
     cc = dedup.connected_components(pairs)
     comps = {r["component"] for r in cc.collect()}
     assert comps == {0} and cc.count() == n + 1
+
+
+def _union_find_labels(edges):
+    """Pure-Python reference: node -> min node of its component."""
+    parent = {}
+
+    def find(x):
+        while parent[x] != x:
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    return {n: find(n) for n in parent}
+
+
+@pytest.mark.parametrize("id_type", ["int", "long"])
+def test_connected_components_matches_union_find(spark, id_type):
+    """Labels equal a pure-Python union-find on seeded random graphs,
+    whether a component lies in one partition or spans several (the
+    min-label rounds finish what the per-partition contraction
+    leaves), and ids keep their input type."""
+    import random
+    from pyspark.sql.types import IntegerType, LongType
+    rng = random.Random(f"cc-{id_type}")
+    # three random graphs on disjoint id ranges, sparse to dense
+    edges = [(off + rng.randrange(n_nodes), off + rng.randrange(n_nodes))
+             for off, n_nodes, n_edges in ((0, 20, 14), (100, 30, 20),
+                                           (200, 12, 16))
+             for _ in range(n_edges)]
+    rng.shuffle(edges)
+    want = _union_find_labels(edges)
+    for n_parts in (1, 3, len(edges)):
+        pairs = spark.sparkContext.parallelize(edges, n_parts).toDF(
+            f"id_a {id_type}, id_b {id_type}")
+        cc = dedup.connected_components(pairs)
+        assert [f.dataType for f in cc.schema.fields] == \
+            [IntegerType() if id_type == "int" else LongType()] * 2
+        got = {r.node: r.component for r in cc.collect()}
+        assert got == want, n_parts
+
+
+def test_connected_components_raises_when_not_converged(spark):
+    # one edge per partition: the contraction leaves a path that needs
+    # many rounds, so one round cannot converge
+    pairs = spark.sparkContext.parallelize(
+        [(i, i + 1) for i in range(12)], 12).toDF("id_a long, id_b long")
+    with pytest.raises(RuntimeError, match="did not converge within 1"):
+        dedup.connected_components(pairs, max_iter=1)
+
+
+def test_dedup_clusters_job_count(spark):
+    """The dedup_clusters query runs a fixed number of Spark jobs on
+    the sf fixture: near-pair stages, the contraction checkpoint and
+    one confirming label round. A change in the number of rounds (or
+    a count() per round) changes it."""
+    import __spark_entry__ as entry
+    sc = spark.sparkContext
+    build = entry._all_queries()["dedup_clusters"]
+    group = "test-dedup-clusters-jobs"
+    sc.setJobGroup(group, "dedup_clusters job count")
+    try:
+        build(spark, SF).write.format("noop").mode("overwrite").save()
+    finally:
+        sc.setJobGroup("", "")
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 12
 
 
 def test_kmeans_separates_obvious_groups(spark):
