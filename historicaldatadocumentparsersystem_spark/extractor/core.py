@@ -20,32 +20,33 @@ from .cfbx import (extract_doc_text, extract_ppt_text, is_cfb, is_doc,
 from .docx import extract_docx_text, is_docx
 from .epubx import extract_epub_text, is_epub
 from .htmlx import decode_payload, extract_html
-from .ipynbx import extract_ipynb_text, is_ipynb
-from .mailx import extract_mbox_text, is_mbox
-from .tarx import extract_tar_text, is_tar
-from .texx import extract_latex, is_latex
 from .odtx import extract_odt_text, is_odt
 from .pdfx import extract_pdf
 from .pptx import extract_pptx_text, is_pptx
 from .rtfx import extract_rtf_text
 from .sniff import (KIND_EMPTY, KIND_HTML, KIND_PDF, KIND_RTF, KIND_ZIP,
                     sniff_kind)
-from .xlsxx import extract_xlsx_text, is_xlsx
 
 KIND_PPTX = "pptx"
 KIND_PPT = "ppt"
 KIND_DOC = "doc"
-KIND_XLSX = "xlsx"
 KIND_DOCX = "docx"
 KIND_EPUB = "epub"
 KIND_ODT = "odt"
-KIND_IPYNB = "ipynb"
-KIND_MBOX = "mbox"
-KIND_TAR = "tar"
-KIND_LATEX = "latex"
 
 # span struct field order used everywhere (Spark schema + oracle tuples)
 SPAN_FIELDS = ("start", "end", "kind")
+
+# zip containers, in probe order: S7 pptx subset (reference
+# loaders.py:30-37 -> partition_pptx), S6 docx subset
+# (unstructured_chunker.py:79-91, Docx2txt), ODF text (mimetype-gated,
+# so no overlap with OOXML), e-book (spine-ordered chapters through the
+# same DOM pipeline). A zip that none of them claims is a fallback row,
+# not a fail.
+_ZIP_KINDS = ((KIND_PPTX, is_pptx, extract_pptx_text),
+              (KIND_DOCX, is_docx, extract_docx_text),
+              (KIND_ODT, is_odt, extract_odt_text),
+              (KIND_EPUB, is_epub, extract_epub_text))
 
 
 @dataclass
@@ -68,10 +69,16 @@ def extract_document(payload: bytes | None, fallback_text: str | None
 
     - html  : DOM parse + Arc90-style boilerplate classification
     - pdf   : PDF-subset layout pass
+    - rtf   : legacy-office RTF text
+    - pptx, docx, odt, epub : zip containers, probed in that order
+    - ppt, doc : legacy OLE2/CFB office
     - empty : fall back to the row's ``text`` column (reference F5:
       unparseable inputs return empty records, never crash —
       ``llm_support_kickoff_parser.py:28-30``); counted as a fallback
-      row in lineage metrics.
+      row in lineage metrics. Any other payload (a non-office zip or
+      OLE container, JSON, mail, tar, TeX source, random bytes) lands
+      here with ``failed=False``; a recognised format whose parser
+      finds nothing or raises lands here with ``failed=True``.
     """
     kind = sniff_kind(payload)
     try:
@@ -91,50 +98,17 @@ def extract_document(payload: bytes | None, fallback_text: str | None
             # legacy-office text (extractor/rtfx.py — from-scratch
             # tokenizer; decades of .rtf sit in web archives)
             text, spans = extract_rtf_text(payload)  # type: ignore[arg-type]
-            if not spans:
-                return _fallback(fallback_text, failed=True)
-            return ExtractResult(KIND_RTF, text, spans, len(spans), 0.0)
+            return _office(KIND_RTF, text, spans, fallback_text)
         if kind == KIND_ZIP:
-            # S7 pptx subset (reference loaders.py:30-37 -> partition_pptx)
-            if is_pptx(payload):
-                text, spans = extract_pptx_text(payload)  # type: ignore[arg-type]
-                if not spans:
-                    return _fallback(fallback_text, failed=True)
-                return ExtractResult(KIND_PPTX, text, spans, len(spans), 0.0)
-            # S6 docx subset (unstructured_chunker.py:79-91, Docx2txt)
-            if is_docx(payload):
-                text, spans = extract_docx_text(payload)  # type: ignore[arg-type]
-                if not spans:
-                    return _fallback(fallback_text, failed=True)
-                return ExtractResult(KIND_DOCX, text, spans, len(spans), 0.0)
-            # ODF text (extractor/odtx.py — the OASIS sibling of the
-            # docx subset; mimetype-gated so no overlap with OOXML)
-            if is_odt(payload):
-                text, spans = extract_odt_text(payload)  # type: ignore[arg-type]
-                if not spans:
-                    return _fallback(fallback_text, failed=True)
-                return ExtractResult(KIND_ODT, text, spans, len(spans), 0.0)
-            # e-book container (extractor/epubx.py, spine-ordered
-            # chapters through the same DOM pipeline)
-            if is_epub(payload):
-                text, spans = extract_epub_text(payload)  # type: ignore[arg-type]
-                if not spans:
-                    return _fallback(fallback_text, failed=True)
-                return ExtractResult(KIND_EPUB, text, spans, len(spans), 0.0)
-            # spreadsheet workbook (extractor/xlsxx.py — the tabular
-            # OOXML sibling; one span per sheet, rows tab-joined)
-            if is_xlsx(payload):
-                text, spans = extract_xlsx_text(payload)  # type: ignore[arg-type]
-                if not spans:
-                    return _fallback(fallback_text, failed=True)
-                return ExtractResult(KIND_XLSX, text, spans,
-                                     len(spans), 0.0)
-            # non-OOXML zip: fallback, not a fail
+            for office_kind, probe, extract in _ZIP_KINDS:
+                if probe(payload):
+                    text, spans = extract(payload)
+                    return _office(office_kind, text, spans,
+                                   fallback_text)
             return _fallback(fallback_text, failed=False)
         # legacy OLE2/CFB office (extractor/cfbx.py — the reference's
         # .ppt branch, loaders.py:18-37 partition_ppt, plus Word 97;
-        # magic-byte probe so it runs first among the empty-kind
-        # sniffs)
+        # magic-byte probe on otherwise-empty payloads)
         if kind == KIND_EMPTY and is_cfb(payload):
             if is_ppt(payload):
                 text, spans = extract_ppt_text(payload)
@@ -151,48 +125,22 @@ def extract_document(payload: bytes | None, fallback_text: str | None
                     return _fallback(fallback_text, failed=True)
             if is_doc(payload):
                 text, spans = extract_doc_text(payload)
-                if not spans:
-                    return _fallback(fallback_text, failed=True)
-                return ExtractResult(KIND_DOC, text, spans,
-                                     len(spans), 0.0)
+                return _office(KIND_DOC, text, spans, fallback_text)
             # other OLE container: fallback, not a fail
             return _fallback(fallback_text, failed=False)
-        # Jupyter notebook (extractor/ipynbx.py — the JSON member of
-        # the loader family; sniff has no JSON kind, so the cheap
-        # is_ipynb probe gates here on otherwise-empty payloads)
-        if kind == KIND_EMPTY and is_ipynb(payload):
-            text, spans = extract_ipynb_text(payload)
-            if not spans:
-                return _fallback(fallback_text, failed=True)
-            return ExtractResult(KIND_IPYNB, text, spans, len(spans), 0.0)
-        # mbox mail archive (extractor/mailx.py — per-message
-        # subject+body blocks; html-only bodies route through the
-        # same DOM pipeline)
-        if kind == KIND_EMPTY and is_mbox(payload):
-            text, spans = extract_mbox_text(payload)
-            if not spans:
-                return _fallback(fallback_text, failed=True)
-            return ExtractResult(KIND_MBOX, text, spans, len(spans), 0.0)
-        # tar archive (extractor/tarx.py — each regular member routes
-        # back through THIS dispatcher, one level deep)
-        if kind == KIND_EMPTY and is_tar(payload):
-            text, spans = extract_tar_text(payload)
-            if not spans:
-                return _fallback(fallback_text, failed=True)
-            return ExtractResult(KIND_TAR, text, spans, len(spans), 0.0)
-        # raw LaTeX source (extractor/texx.py — the loosest probe,
-        # so it runs last among the empty-kind sniffs)
-        if kind == KIND_EMPTY and is_latex(payload):
-            text, spans = extract_latex(
-                payload.decode("utf-8", errors="replace"))
-            if not spans:
-                return _fallback(fallback_text, failed=True)
-            return ExtractResult(KIND_LATEX, text, spans,
-                                 len(spans), 0.0)
     except Exception:
         # degrade to fallback, mark failed (lineage failed_rows)
         return _fallback(fallback_text, failed=True)
     return _fallback(fallback_text, failed=False)
+
+
+def _office(kind: str, text: str, spans: list[tuple[int, int, str]],
+            fallback_text: str | None) -> ExtractResult:
+    """An office parser's (text, spans): no spans is a failed fallback
+    row; otherwise one block per span and no score."""
+    if not spans:
+        return _fallback(fallback_text, failed=True)
+    return ExtractResult(kind, text, spans, len(spans), 0.0)
 
 
 def _fallback(fallback_text: str | None, failed: bool) -> ExtractResult:

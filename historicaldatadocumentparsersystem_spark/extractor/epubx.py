@@ -23,9 +23,9 @@ Determinism contract:
 - chapter ``text`` = whitespace-normalized body text with
   script/style/head subtrees excluded (entities unescaped — chapter
   text is plain text, the opposite of the linkx raw-slice contract);
-- book metadata = first dc:title / dc:creator / dc:language /
-  dc:identifier in the OPF metadata block, entity semantics via XML
-  parse (None when absent / unparseable);
+- book metadata = first dc:title / dc:creator in the OPF metadata
+  block, entity semantics via XML parse (None when absent /
+  unparseable), read by extractor/officemeta;
 - any malformed layer (zip, container, OPF, chapter) degrades to
   fewer chapters / null fields, never raises (F5).
 """
@@ -49,7 +49,8 @@ _TEXT_STOPS = ("script", "style", "head", "title")
 # containers (blockquote/ul/div) are entered, these are captured whole
 _PARA_LIKE = frozenset(
     "p h1 h2 h3 h4 h5 h6 li pre td th dt dd figcaption".split())
-_DC_FIELDS = ("title", "creator", "language", "identifier")
+# dc metadata read by extractor/officemeta (first occurrence each)
+_DC_FIELDS = ("title", "creator")
 
 
 @dataclass
@@ -197,19 +198,6 @@ def extract_epub(payload: bytes) -> list[EpubChapter]:
                 continue
             out.append(EpubChapter(len(out), path, title, text))
     return out
-
-
-def epub_metadata(payload: bytes) -> dict[str, str | None]:
-    """Book-level dc metadata: {title, creator, language, identifier}
-    (first occurrence each; None when absent or unparseable)."""
-    try:
-        with zipfile.ZipFile(io.BytesIO(payload)) as zf:
-            opf = _opf_path(zf)
-            if opf:
-                return _parse_opf(zf, opf)[1]
-    except Exception:
-        pass
-    return {f: None for f in _DC_FIELDS}
 
 
 def extract_epub_text(payload: bytes) -> tuple[str, list[tuple[int, int,

@@ -16,9 +16,9 @@ Generalizes the reference's element pipeline to web pages:
 
 Offsets: every emitted text segment is a VERBATIM substring of the
 decoded source (``extracted_text == "\\n".join(src[s:e] for spans)``).
-To keep that invariant we parse with ``convert_charrefs=False`` and keep
-character references in their raw source form (``&amp;`` stays
-``&amp;``) — no normalization the oracle doesn't do.
+To keep that invariant character references stay in their raw source
+form (``&amp;`` stays ``&amp;``) — no normalization the oracle doesn't
+do.
 
 Pure Python, stdlib only (environment has no lxml/bs4 — SURVEY.md §7.0).
 """
@@ -27,7 +27,7 @@ from __future__ import annotations
 
 import re
 from html import unescape
-from html.parser import HTMLParser, attrfind_tolerant
+from html.parser import attrfind_tolerant
 
 # --- tag classes -----------------------------------------------------------
 
@@ -154,97 +154,6 @@ class _Text:
         self.parent = parent
 
 
-class _TreeBuilder(HTMLParser):
-    """Build a DOM with exact char offsets into the decoded source."""
-
-    def __init__(self, src: str) -> None:
-        super().__init__(convert_charrefs=False)
-        self.src = src
-        # line -> char offset map for getpos() conversion (1-based lines)
-        self._line_starts = [0]
-        pos = src.find("\n")
-        while pos != -1:
-            self._line_starts.append(pos + 1)
-            pos = src.find("\n", pos + 1)
-        self._order = 0
-        self.root = _Node("#root", {}, None, self._order)
-        self._stack = [self.root]
-
-    # -- helpers
-    def _offset(self) -> int:
-        line, col = self.getpos()
-        return self._line_starts[line - 1] + col
-
-    def _open(self, tag: str, attrs, push: bool) -> None:
-        for closer, closees in _AUTOCLOSE.items():
-            if tag == closer:
-                while (len(self._stack) > 1
-                       and self._stack[-1].tag in closees):
-                    self._stack.pop()
-                break
-        self._order += 1
-        node = _Node(tag, dict(attrs), self._stack[-1], self._order)
-        self._stack[-1].children.append(node)
-        if push and tag not in VOID_TAGS:
-            self._stack.append(node)
-
-    # -- HTMLParser hooks
-    def handle_starttag(self, tag, attrs):
-        self._open(tag, attrs, push=True)
-
-    def handle_startendtag(self, tag, attrs):
-        self._open(tag, attrs, push=False)
-
-    def handle_endtag(self, tag):
-        # pop to the matching open tag; stray close tags are ignored
-        for i in range(len(self._stack) - 1, 0, -1):
-            if self._stack[i].tag == tag:
-                del self._stack[i:]
-                return
-
-    def _add_text(self, start: int, end: int) -> None:
-        if end <= start:
-            return
-        top = self._stack[-1]
-        # merge contiguous runs (data + charref + data) into one segment
-        if (top.children and isinstance(top.children[-1], _Text)
-                and top.children[-1].end == start):
-            top.children[-1].end = end
-            return
-        top.children.append(_Text(start, end, top))
-
-    def handle_data(self, data):
-        start = self._offset()
-        self._add_text(start, start + len(data))
-
-    def handle_entityref(self, name):
-        start = self._offset()
-        end = start + 1 + len(name)
-        if self.src[end:end + 1] == ";":
-            end += 1
-        self._add_text(start, end)
-
-    def handle_charref(self, name):
-        start = self._offset()
-        end = start + 2 + len(name)
-        if self.src[end:end + 1] == ";":
-            end += 1
-        self._add_text(start, end)
-
-
-def parse_dom_htmlparser(src: str) -> _Node:
-    """Reference builder on stdlib html.parser (kept for the A/B
-    equivalence test in tests/test_extractor_oracle.py)."""
-    builder = _TreeBuilder(src)
-    try:
-        builder.feed(src)
-        builder.close()
-    except Exception:
-        # malformed pages must degrade, never crash (FIXTURES class 3)
-        pass
-    return builder.root
-
-
 def iter_elements(node: _Node, descend=None):
     """Preorder generator over ELEMENT nodes under ``node`` (text
     nodes skipped), yielding ``(element, depth)`` with depth 0 for the
@@ -284,7 +193,8 @@ def subtree_text(node: _Node, src: str, stop_tags=()) -> str:
 # html.parser spends ~65% of extraction time in per-tag Python (goahead /
 # parse_starttag / updatepos). This scanner tokenizes with ONE compiled
 # regex and builds the identical tree (verified node-for-node against
-# the html.parser builder on the fixture corpus + property tests).
+# an html.parser builder on the fixture corpus + property tests, in
+# tests/html_reference_builder.py).
 
 _ATTRS = r"(?:[^>\"']|\"[^\"]*\"|'[^']*')*?"
 _TAG_RE = re.compile(
@@ -652,7 +562,7 @@ def extract_html(src: str) -> tuple[str, list[tuple[int, int, str]],
     # is what _find_title would return; the empty-first-title edge case
     # (where _find_title's early return prunes that level but later
     # subtrees are still searched) falls back to the exact walk.
-    # parse_dom_htmlparser roots never set the slot -> always walk.
+    # roots built by another builder never set the slot -> always walk.
     tn = getattr(root, "title_node", False)
     if tn is None:                      # parse_dom saw NO title at all
         title = None

@@ -2536,216 +2536,6 @@ def pii_texts(n: int = 160, seed: int = 42) -> list[dict]:
     return rows
 
 
-# --- Jupyter notebook fixture files -------------------------------------------
-
-def ipynb_file_rows(n: int = 30, seed: int = 42) -> list[dict]:
-    """Deterministic synthetic .ipynb files: (url, payload). Rotates
-    the serializations a crawl meets: v4 python with list sources and
-    stream/execute_result outputs, v4 julia with string sources, a raw
-    cell and an error output, v4 r declared via language_info only,
-    v3 worksheets with prompt_number and per-cell language, a JSON
-    payload that is NOT a notebook, an empty-cells notebook (parses,
-    zero rows), and garbage/None payloads (F5)."""
-    from .extractor.ipynbx import make_ipynb
-    out = []
-    for i in range(n):
-        rng = _rng(seed * 141650963, i)
-        url = f"nb://notebook-{i}.ipynb"
-        k = i % 6
-        if k == 0:
-            cells = [
-                {"cell_type": "markdown",
-                 "source": [f"# {_sentence(rng, 3, 6)}\n",
-                            _sentence(rng, 5, 9)]},
-                {"cell_type": "code",
-                 "source": [f"x = {i}\n", "print(x * 2)\n"],
-                 "execution_count": 1 + i % 5,
-                 "outputs": [
-                     {"output_type": "stream", "name": "stdout",
-                      "text": [f"{i * 2}\n"]},
-                     {"output_type": "execute_result",
-                      "execution_count": 1 + i % 5,
-                      "data": {"text/plain": [f"{i * 2}"]},
-                      "metadata": {}}]},
-                {"cell_type": "code", "source": "y = x + 1"},
-            ]
-            payload = make_ipynb(cells, lang="python")
-        elif k == 1:
-            cells = [
-                {"cell_type": "raw", "source": f"raw block {i}"},
-                {"cell_type": "code",
-                 "source": f"f(x) = x^{2 + i % 3}",
-                 "execution_count": 2,
-                 "outputs": [
-                     {"output_type": "error", "ename": "DomainError",
-                      "evalue": f"bad input {i}", "traceback": ["..."]},
-                     {"output_type": "display_data",
-                      "data": {"image/png": "aWdub3JlZA=="},
-                      "metadata": {}}]},
-                {"cell_type": "markdown", "source": _sentence(rng, 6, 10)},
-            ]
-            payload = make_ipynb(cells, lang="julia")
-        elif k == 2:
-            cells = [
-                {"cell_type": "markdown",
-                 "source": [f"## {_sentence(rng, 2, 5)}\n",
-                            _paragraph(rng, 1, 2)]},
-                {"cell_type": "markdown", "source": ""},
-            ]
-            payload = make_ipynb(cells, lang="r", kernelspec=False)
-        elif k == 3:
-            cells = [
-                {"cell_type": "markdown", "source": [f"v3 doc {i}\n"]},
-                {"cell_type": "code", "source": [f"a = {i}\n", "a"],
-                 "execution_count": 3 + i % 4, "language": "python",
-                 "outputs": [{"output_type": "pyout",
-                              "text": [f"{i}"], "prompt_number": 3}]},
-            ]
-            payload = make_ipynb(cells, nbformat=3)
-        elif k == 4:
-            payload = (b'{"nbformat": 4, "note": "no cell list here"}'
-                       if i % 2 else
-                       b'{"cells": [], "metadata": {}, "nbformat": 4}')
-        else:
-            payload = b"\x00\x01 not json at all" if i % 2 else None
-        out.append({"url": url, "payload": payload})
-    return out
-
-
-# --- mbox / email fixture files ------------------------------------------------
-
-def mbox_file_rows(n: int = 24, seed: int = 42) -> list[dict]:
-    """Deterministic synthetic mbox files: (url, payload). Rotates the
-    serializations mailing-list archives carry: 7bit utf-8 plain,
-    quoted-printable with body ``From `` lines (mboxrd escaping must
-    round-trip), base64 cp1252 inside multipart/alternative with an
-    html twin, html-only messages (body falls back through the htmlx
-    DOM pipeline) with a binary attachment, declared-latin-1 and
-    unknown-charset fallbacks, folded To headers, duplicate Subject
-    (first wins), encoded-word subjects (B and Q), a bare RFC 5322
-    message with no envelope, and garbage/None payloads (F5)."""
-    import base64
-    from .extractor.mailx import make_mbox, make_message
-    out = []
-    for i in range(n):
-        rng = _rng(seed * 179424673, i)
-        url = f"mbox://archive-{i}.mbox"
-        k = i % 8
-        host = _HOSTS[(i * 40503) % len(_HOSTS)]
-        date = (f"Mon, {4 + i % 20:02d} Aug 2025 "
-                f"{8 + i % 12:02d}:{i % 60:02d}:00 +0{i % 3}00")
-        subj_text = _sentence(rng, 3, 6).rstrip(".,!")
-        if k == 0:
-            msgs = []
-            for j in range(2 + i % 3):
-                if j == 0:
-                    body = _paragraph(rng, 1, 2)
-                else:
-                    # reply shape: attribution line + quoted block +
-                    # fresh text + RFC 3676 signature (the
-                    # strip_quoted_reply fixture surface)
-                    body = (f"On Mon, Dev 0 <dev0@{host}> wrote:\n"
-                            f"> {_sentence(rng, 4, 7)}\n"
-                            f"> {_sentence(rng, 3, 6)}\n"
-                            f"{_paragraph(rng, 1, 2)}\n"
-                            f"-- \nDev {j} of {host}")
-                msgs.append(make_message(
-                    [("From", f"Dev {j} <dev{j}@{host}>"),
-                     ("To", f"list@{host}"),
-                     ("Subject", f"{subj_text} part {j}"),
-                     ("Date", date),
-                     ("Message-ID", f"<t{i}.m{j}@{host}>")]
-                    + ([("In-Reply-To", f"<t{i}.m0@{host}>")]
-                       if j else []),
-                    [{"content_type": "text/plain", "charset": "utf-8",
-                      "text": body}]))
-            payload = make_mbox(msgs)
-        elif k == 1:
-            body = (f"{_sentence(rng, 4, 8)}\n"
-                    f"From the café — naïve test.\n"
-                    f">From an already-quoted line.\n"
-                    f"{_sentence(rng, 3, 6)}")
-            b64subj = base64.b64encode(
-                f"café {subj_text}".encode()).decode()
-            payload = make_mbox([make_message(
-                [("From", f"alice@{host}"), ("To", f"list@{host}"),
-                 ("Subject", f"=?utf-8?B?{b64subj}?="),
-                 ("Date", date), ("Message-ID", f"<qp{i}@{host}>")],
-                [{"content_type": "text/plain", "charset": "utf-8",
-                  "cte": "quoted-printable", "text": body}])])
-        elif k == 2:
-            text = f"Sounds good — {_sentence(rng, 3, 6)}"
-            payload = make_mbox([make_message(
-                [("From", f"Bob <bob@{host}>"), ("To", f"list@{host}"),
-                 ("Subject", "=?utf-8?Q?caf=C3=A9_q=2Dword?="),
-                 ("Date", date), ("Message-ID", f"<alt{i}@{host}>")],
-                [{"content_type": "text/plain", "charset": "cp1252",
-                  "cte": "base64", "text": text, "alternative": True},
-                 {"content_type": "text/html", "charset": "utf-8",
-                  "text": f"<html><body><p>{text}</p></body></html>"}])])
-        elif k == 3:
-            payload = make_mbox([make_message(
-                [("From", f"Carol <carol@{host}>"),
-                 ("To", f"a@{host},\n\tB Team <b@{host}>"),
-                 ("Subject", f"report {i}"),
-                 ("Subject", "second subject loses"),
-                 ("Date", date), ("Message-ID", f"<html{i}@{host}>")],
-                [{"content_type": "text/html", "charset": "utf-8",
-                  "text": (f"<html><body><h1>Report {i}</h1>"
-                           f"<p>{_paragraph(rng, 1, 2)}</p>"
-                           f"</body></html>")},
-                 {"content_type": "application/octet-stream",
-                  "cte": "base64", "data": bytes(range(i % 7, 40)),
-                  "filename": f"data{i}.bin", "attachment": True}])])
-        elif k == 4:
-            payload = make_mbox([make_message(
-                [("From", f"dora@{host}"), ("Subject", f"latin {i}"),
-                 ("Date", date), ("Message-ID", f"<l1{i}@{host}>")],
-                [{"content_type": "text/plain", "charset": "iso-8859-1",
-                  "text": f"déjà vu {_sentence(rng, 3, 5)}"}]),
-                make_message(
-                [("From", f"erik@{host}"), ("Subject", f"odd {i}"),
-                 ("Date", "not a date"),
-                 ("Message-ID", f"<l2{i}@{host}>")],
-                [{"content_type": "text/plain", "charset": "utf-8",
-                  "declared": "x-weird-charset",
-                  "text": _sentence(rng, 4, 7)}])])
-        elif k == 5:
-            # bare RFC 5322 message, no mbox envelope
-            payload = make_message(
-                [("From", f"Frank <frank@{host}>"),
-                 ("To", f"list@{host}"), ("Subject", f"bare {i}"),
-                 ("Date", date)],
-                [{"content_type": "text/plain", "charset": "utf-8",
-                  "text": _paragraph(rng, 1, 2)}])
-        elif k == 6:
-            # nested multipart: mixed( alternative(plain, html), bin )
-            inner = make_message(
-                [],
-                [{"content_type": "text/plain", "charset": "utf-8",
-                  "text": f"nested {_sentence(rng, 3, 6)}",
-                  "alternative": True},
-                 {"content_type": "text/html", "charset": "utf-8",
-                  "text": "<p>nested html</p>"}])
-            # strip the empty header block ("\n" prefix) to reuse the
-            # serialized multipart entity as a sub-part
-            entity = inner.split(b"\n", 1)[1]
-            payload = make_mbox([
-                b"From: gina@" + host.encode() + b"\n"
-                b"Subject: nested " + str(i).encode() + b"\n"
-                b"Date: " + date.encode() + b"\n"
-                b"Message-ID: <nest" + str(i).encode() + b"@x>\n"
-                b"Content-Type: multipart/mixed; boundary=\"outer-b\"\n"
-                b"\n--outer-b\n" + entity +
-                b"\n--outer-b\nContent-Type: text/plain; charset=\"utf-8\""
-                b"\n\ntrailing plain part\n--outer-b--\n"])
-        else:
-            payload = (None if i % 2 else
-                       b"\x00\x01 binary junk, not mail at all")
-        out.append({"url": url, "payload": payload})
-    return out
-
-
 # --- mp4 fixture files ----------------------------------------------------------
 
 def mp4_media_rows(n: int = 20, seed: int = 42) -> list[dict]:
@@ -2804,119 +2594,6 @@ def mp4_media_rows(n: int = 20, seed: int = 42) -> list[dict]:
             payload = (None if i % 2 else
                        b"\x00\x00\x00\x08free not a real mp4")
         out.append({"media_id": mid, "payload": payload})
-    return out
-
-
-# --- LaTeX fixture sources ------------------------------------------------------
-
-def latex_rows(n: int = 32, seed: int = 42) -> list[dict]:
-    """Deterministic (url, tex) sources exercising the texx subset:
-    full documents with preamble/title carry-over, sectioning ladders,
-    nested lists, math removal (inline, display, environments),
-    figure/table wrappers whose captions survive, verbatim protection,
-    accent macros vs letter-named commands, href/url unwrapping,
-    comments, bare fragments without a document env, and junk/empty
-    rows (F5)."""
-    out = []
-    for i in range(n):
-        rng = _rng(seed * 217645199, i)
-        host = _HOSTS[(i * 40503) % len(_HOSTS)]
-        url = f"tex://{host}/papers/{i}.tex"
-        k = i % 6
-        title = _sentence(rng, 3, 6).rstrip(".,!")
-        if k == 0:
-            tex = (
-                f"\\documentclass{{article}}\n"
-                f"\\usepackage{{amsmath}}\n"
-                f"\\title{{{title} \\textbf{{Results}}}}\n"
-                f"\\author{{Fixture Author {i}}}\n"
-                f"\\begin{{document}}\n\\maketitle\n"
-                f"\\begin{{abstract}}\nWe prove $x_{i} > 0$ and "
-                f"cite~\\cite{{ref{i}}}.\n\\end{{abstract}}\n\n"
-                f"\\section{{Introduction}}\n"
-                f"Caf\\'e fa\\c{{c}}ade --- the \\emph{{key}} "
-                f"{i}0\\% case.\nSecond source line.\n\n"
-                f"\\subsection{{Method}}\n{_sentence(rng, 6, 10)}\n"
-                f"\\begin{{equation}}\ne=mc^2_{i}\n\\end{{equation}}\n"
-                f"After the equation.\n\\end{{document}}\n")
-        elif k == 1:
-            tex = (
-                f"\\begin{{document}}\n"
-                f"\\section{{Lists {i}}}\n"
-                f"\\begin{{itemize}}\n"
-                f"\\item first \\texttt{{tok{i}}}\n"
-                f"\\item see \\href{{https://{host}/x}}{{site {i}}}"
-                f" and \\url{{https://{host}/y}}\n"
-                f"\\begin{{enumerate}}\n\\item[*] nested {i}\n"
-                f"\\end{{enumerate}}\n"
-                f"\\end{{itemize}}\nTail paragraph {i}.\n"
-                f"\\end{{document}}")
-        elif k == 2:
-            tex = (
-                f"\\section{{Floats {i}}}\n"
-                f"\\begin{{figure}}\n"
-                f"\\includegraphics[width=2in]{{fig{i}.pdf}}\n"
-                f"\\caption{{Figure caption {i} survives.}}\n"
-                f"\\label{{fig:{i}}}\n\\end{{figure}}\n\n"
-                f"\\begin{{table}}\n\\caption{{Table caption {i}.}}\n"
-                f"\\begin{{tikzpicture}}\ndrawn {i}\\end{{tikzpicture}}\n"
-                f"\\end{{table}}\nBody after floats.\n")
-        elif k == 3:
-            tex = (
-                f"Plain fragment {_sentence(rng, 4, 8)}\n\n"
-                f"\\begin{{verbatim}}\nkept $m{i}$ \\cmd {{b}}\n"
-                f"\\end{{verbatim}}\n\n"
-                f"Inline \\verb|$v{i}$| and \\(a+b\\) gone, "
-                f"$$d{i}$$ too. % comment {i}\n"
-                f"A 50\\% escape \\& more~here.\n")
-        elif k == 4:
-            tex = (
-                f"\\chapter{{Book {i}}}\n\\section{{S1}}\n"
-                + "\n\n".join(
-                    f"\\subsection{{Sub {j}}}\npara {j}: "
-                    f"{_sentence(rng, 3, 6)}" for j in range(3))
-                + f"\n\\paragraph{{Deep {i}}}\ndeep body {i}.\n")
-        else:
-            tex = "" if i % 2 else f"% only a comment {i}\n$only math$\n"
-        out.append({"url": url, "tex": tex})
-    return out
-
-
-# --- tar fixture files ----------------------------------------------------------
-
-def tar_file_rows(n: int = 12, seed: int = 42) -> list[dict]:
-    """Deterministic ustar archives: (url, payload). Members mix .tex
-    sources (latex_rows content), html pages, plain text, directories,
-    GNU long names, and every 4th row is junk/None (F5)."""
-    from .extractor.tarx import make_tar
-    texes = latex_rows(32, seed)
-    out = []
-    for i in range(n):
-        rng = _rng(seed * 275604541, i)
-        url = f"tar://bundle-{i}.tar"
-        if i % 4 == 3:
-            out.append({"url": url,
-                        "payload": (None if i % 2 else
-                                    b"not a tar archive at all" * 30)})
-            continue
-        members = [{"name": f"bundle{i}/", "typeflag": "5"}]
-        for j in range(2 + i % 2):
-            tex = texes[(i * 2 + j) % len(texes)]["tex"]
-            if tex:
-                members.append({
-                    "name": f"bundle{i}/papers/p{j}.tex",
-                    "data": tex.encode("utf-8"),
-                    "mtime": 1700000000 + i * 1000 + j})
-        members.append({
-            "name": f"bundle{i}/pages/deep-" + "d" * 110 + ".html",
-            "data": (f"<html><body><p>{_paragraph(rng, 2, 3)}</p>"
-                     f"</body></html>").encode("utf-8"),
-            "mtime": 1700000000 + i,
-            "gnu_longname": True})
-        members.append({"name": f"bundle{i}/notes.txt",
-                        "data": f"plain note {i}".encode(),
-                        "mtime": 1700000500 + i})
-        out.append({"url": url, "payload": make_tar(members)})
     return out
 
 
@@ -3067,77 +2744,6 @@ def license_page_rows(n: int = 40, seed: int = 42) -> list[dict]:
             rows.append({"url": url, "href": None, "text":
                          f"Copyright {1990 + i}. all rights "
                          "reserved. Contact us."})
-    return rows
-
-
-def xlsx_file_rows(n: int = 16, seed: int = 42) -> list[dict]:
-    """Deterministic XLSX workbooks (url, payload): shared-string
-    files with headers + mixed types, inline-string streaming shape
-    (no r= refs, gaps collapse), multi-sheet incl. an empty sheet,
-    headerless numeric sheets, a hand-built file with rich-text
-    shared strings + NO rels part + out-of-bounds refs (sequential
-    fallback), and non-workbook payloads (empty bytes / plain zip)
-    that the reader skips. Golden:
-    fixtures/golden_xlsx_seed42_n16.parquet."""
-    import io
-    import zipfile
-
-    from .extractor import xlsxx
-
-    rows: list[dict] = []
-    for i in range(n):
-        url = f"https://sheets{i}.example.org/wb-{i}.xlsx"
-        k = i % 6
-        if k == 0:
-            payload = xlsxx.make_xlsx([("Data", [
-                ["sku", "qty", "price", "active"],
-                [f"A-{i}", i, 1.5 + i, True],
-                [f"B-{i}", 2 * i, 0.25, False]])])
-        elif k == 1:
-            payload = xlsxx.make_xlsx(
-                [("Log", [["a", None, "c"], [1, 2],
-                          [None, None, f"tail {i}"]])],
-                shared_strings=False, write_refs=False)
-        elif k == 2:
-            payload = xlsxx.make_xlsx([
-                ("Q1", [["region", "rev"], ["north", 10 + i],
-                        ["south", 20 + i]]),
-                ("Notes", [[f"only cell {i}"]]),
-                ("Blank", [])])
-        elif k == 3:
-            payload = xlsxx.make_xlsx(
-                [("Nums", [[i, 2, 3], [4.5, 6, 7]])])
-        elif k == 4:
-            ws = (f'<worksheet xmlns="{xlsxx._M}"><sheetData>'
-                  '<row r="1"><c r="A1" t="s"><v>0</v></c>'
-                  '<c r="B1" t="s"><v>1</v></c></row>'
-                  # out-of-bounds row ref -> sequential (row 1);
-                  # bad col ref + shared index miss -> NULL value
-                  '<row r="9999999"><c r="XFE1" t="s"><v>9</v></c>'
-                  '<c t="e"><v>#DIV/0!</v></c></row>'
-                  "</sheetData></worksheet>")
-            ss = (f'<sst xmlns="{xlsxx._M}"><si><r><t>Hello </t>'
-                  f"</r><r><t>World {i}</t></r></si>"
-                  "<si><t>Café</t></si></sst>")
-            buf = io.BytesIO()
-            with zipfile.ZipFile(buf, "w") as zf:
-                zf.writestr("xl/workbook.xml", (
-                    f'<workbook xmlns="{xlsxx._M}" '
-                    f'xmlns:r="{xlsxx._R}"><sheets>'
-                    '<sheet name="Rich" sheetId="1" r:id="rId1"/>'
-                    "</sheets></workbook>"))
-                zf.writestr("xl/worksheets/sheet1.xml", ws)
-                zf.writestr("xl/sharedStrings.xml", ss)
-            payload = buf.getvalue()
-        else:
-            if (i // 6) % 2:
-                buf = io.BytesIO()
-                with zipfile.ZipFile(buf, "w") as zf:
-                    zf.writestr("readme.txt", "not a workbook")
-                payload = buf.getvalue()
-            else:
-                payload = b""
-        rows.append({"url": url, "payload": payload})
     return rows
 
 

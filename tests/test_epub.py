@@ -8,7 +8,8 @@ import pyarrow.parquet as pq
 from hypothesis import given, settings, strategies as st
 
 from historicaldatadocumentparsersystem_spark import fixtures, sources
-from historicaldatadocumentparsersystem_spark.extractor import epubx
+from historicaldatadocumentparsersystem_spark.extractor import (
+    epubx, officemeta)
 
 GOLDEN_EPUB = "fixtures/golden_epub_chapters_seed42_n30.parquet"
 
@@ -40,9 +41,9 @@ def test_epub_roundtrip_and_title_fallback():
     assert chs[0].title == "Head & One"
     assert chs[0].text == "Head & One\nP1.\nP2 <x>."
     assert chs[1].title == "Chapter 2"          # <title> fallback
-    assert epubx.epub_metadata(b) == {
-        "title": "B & T", "creator": "C", "language": "fr",
-        "identifier": "urn:u:1"}
+    meta = officemeta.extract_office_meta(b)
+    assert (meta["format"], meta["title"], meta["creator"]) == (
+        "epub", "B & T", "C")
 
 
 def test_epub_spine_order_and_missing_entries():
@@ -89,7 +90,8 @@ def test_epub_degrade_layers():
             for name, data in inner.items():
                 zf.writestr(name, data)
         assert epubx.extract_epub(buf.getvalue()) == []
-        assert epubx.epub_metadata(buf.getvalue())["title"] is None
+        meta = officemeta.extract_office_meta(buf.getvalue())
+        assert meta is None or meta["title"] is None
     assert not epubx.is_epub(b"\x00\x01")
     assert not epubx.is_epub(None)
 
@@ -112,10 +114,12 @@ def test_epub_in_extraction_dispatch():
 @given(st.binary(max_size=1024))
 @settings(max_examples=100, deadline=None)
 def test_epub_api_never_raises_on_garbage(payload):
-    """is_epub/epub_metadata never raise; extract_epub raises only the
-    zip-layer error the sniffing caller handles (docx contract)."""
+    """is_epub and the OPF metadata read never raise; extract_epub
+    raises only the zip-layer error the sniffing caller handles (docx
+    contract)."""
     assert epubx.is_epub(payload) in (True, False)
-    assert isinstance(epubx.epub_metadata(payload), dict)
+    meta = officemeta.extract_office_meta(payload)
+    assert meta is None or isinstance(meta, dict)
     try:
         epubx.extract_epub(payload)
     except Exception as exc:

@@ -8,6 +8,13 @@ Encodes the reference's observable semantics (SURVEY.md §5.2):
 - span validity: 0 <= start < end <= len(source)
 """
 
+import functools
+import hashlib
+import io
+import json
+import tarfile
+import zipfile
+
 import pytest
 
 from historicaldatadocumentparsersystem_spark.extractor import (
@@ -16,6 +23,7 @@ from historicaldatadocumentparsersystem_spark.extractor.htmlx import (
     decode_payload, extract_html)
 from historicaldatadocumentparsersystem_spark.fixtures import (
     generate_rows, make_row, row_class, _make_pdf)
+from html_reference_builder import parse_dom_htmlparser
 
 N = 300
 
@@ -331,6 +339,93 @@ def test_empty_fallback():
     assert res2.extracted_text == "" and res2.spans == []
 
 
+_LATEX = ("\\documentclass{article}\n\\title{A Paper}\n"
+          "\\begin{document}\n\\section{Intro}\nBody text.\n"
+          "\\end{document}\n")
+
+
+def _tar_one_tex() -> bytes:
+    buf = io.BytesIO()
+    data = _LATEX.encode()
+    with tarfile.open(fileobj=buf, mode="w", format=tarfile.USTAR_FORMAT
+                      ) as tf:
+        info = tarfile.TarInfo("bundle/paper.tex")
+        info.size = len(data)
+        tf.addfile(info, io.BytesIO(data))
+    return buf.getvalue()
+
+
+def _xlsx_workbook() -> bytes:
+    ns = "http://schemas.openxmlformats.org/spreadsheetml/2006/main"
+    buf = io.BytesIO()
+    with zipfile.ZipFile(buf, "w") as zf:
+        zf.writestr("xl/workbook.xml", (
+            f'<workbook xmlns="{ns}"><sheets>'
+            '<sheet name="Data" sheetId="1"/></sheets></workbook>'))
+        zf.writestr("xl/worksheets/sheet1.xml", (
+            f'<worksheet xmlns="{ns}"><sheetData><row r="1">'
+            '<c r="A1" t="inlineStr"><is><t>cell text</t></is></c>'
+            "</row></sheetData></worksheet>"))
+    return buf.getvalue()
+
+
+# payloads of formats the dispatcher no longer parses
+_RETIRED_FORMATS = {
+    "mbox": lambda: (b"From alice@example.org Mon Aug  4 08:00:00 2025\n"
+                     b"From: alice@example.org\nSubject: hello\n"
+                     b"Date: Mon, 04 Aug 2025 08:00:00 +0000\n\n"
+                     b"Body line one.\n"),
+    "ipynb": lambda: json.dumps({
+        "cells": [{"cell_type": "markdown", "metadata": {},
+                   "source": ["# Title\n", "Some prose."]}],
+        "metadata": {"kernelspec": {"language": "python"}},
+        "nbformat": 4, "nbformat_minor": 5}).encode(),
+    "tar": _tar_one_tex,
+    "xlsx": _xlsx_workbook,
+    "latex": lambda: _LATEX.encode(),
+}
+
+
+@pytest.mark.parametrize("fmt", sorted(_RETIRED_FORMATS))
+def test_retired_formats_take_the_fallback(fmt):
+    """Mail archives, notebooks, tar bundles, spreadsheets and TeX
+    sources are not dispatched: each is a fallback row from the text
+    column, not a failed one."""
+    res = extract_document(_RETIRED_FORMATS[fmt](), "row text")
+    assert (res.doc_kind, res.extracted_text, res.failed) == (
+        "empty", "row text", False)
+    assert res.spans == [(0, 8, "fallback")]
+
+
+def _office_docs(fmt):
+    """(document with a heading and a body block, document with no
+    text) for one zip-container format."""
+    from historicaldatadocumentparsersystem_spark.extractor import (
+        docx, epubx, odtx, pptx)
+    if fmt == "pptx":
+        return (pptx.make_pptx([{"title": "T", "paras": [("body", False)]}]),
+                pptx.make_pptx([{"paras": []}]))
+    if fmt == "epub":
+        return epubx.make_epub([("T", ["body"])]), epubx.make_epub([])
+    make = {"docx": docx.make_docx, "odt": odtx.make_odt}[fmt]
+    return make([("heading", "T"), ("text", "body")]), make([])
+
+
+@pytest.mark.parametrize("fmt", ["pptx", "docx", "odt", "epub"])
+def test_zip_container_dispatch(fmt):
+    """Each zip container the dispatcher claims yields its own kind with
+    one block per span and no score; one with no text is a failed
+    fallback row."""
+    full, empty = _office_docs(fmt)
+    res = extract_document(full, "fb")
+    assert (res.doc_kind, res.extracted_text, res.score, res.failed) == (
+        fmt, "T\nbody", 0.0, False)
+    assert res.n_blocks == len(res.spans) > 0
+    res = extract_document(empty, "fb")
+    assert (res.doc_kind, res.extracted_text, res.failed) == (
+        "empty", "fb", True)
+
+
 # --- determinism --------------------------------------------------------------
 
 def test_generator_deterministic():
@@ -359,7 +454,7 @@ def _extract_both(src):
     from historicaldatadocumentparsersystem_spark.extractor import htmlx
     fast = extract_html(src)
     orig = htmlx.parse_dom
-    htmlx.parse_dom = htmlx.parse_dom_htmlparser
+    htmlx.parse_dom = parse_dom_htmlparser
     try:
         ref = extract_html(src)
     finally:
@@ -390,6 +485,38 @@ def test_fast_scanner_equals_htmlparser_adversarial():
         assert fast == ref, (i, src[:160])
 
 
+
+# sha256 over extract_document's (extracted_text, spans, repr(score),
+# title, failed) for adversarial_html_pages(400, 42), per class i % 8;
+# a change that moves HTML output on any class fails here by class
+_ADVERSARIAL_DIGESTS = (
+    "7fca3536c47730b79fd99b496ca9aeb973bc84458efef225a32b233c9e2ff3a3",
+    "f77a5f9143f61f55b69b3c7c277cf68c5992bdd0308506a71a946837ba377ff8",
+    "0ab8ed90c0bb99088f9fa39f7c3cdba3d4a5e7167523c042e9beef3d41e68c0f",
+    "ba2cd9116ee2a68c28f973382ce9a4661cdac4d5bb8e1e637d1644bd0028ca7f",
+    "621f0d95a9684e4eefaeea37087e24e03d4df5c01b976e4c33ce071fec88fdff",
+    "20170b32770094f056754eacdc3519c7e8f3211fcff762ad9cf927084ff2a73a",
+    "858ef2e12761a0298674d0001394aae0a13ece2f1000cad6c42324f37518dd69",
+    "652efbd1b356c6e69dcd2f6805e31f39a750e16449ca77c50302fe07f3eb1195",
+)
+
+
+@functools.lru_cache(maxsize=None)
+def _adversarial_pages() -> tuple[bytes, ...]:
+    from historicaldatadocumentparsersystem_spark.fixtures import (
+        adversarial_html_pages)
+    return tuple(adversarial_html_pages(400, 42))
+
+
+@pytest.mark.parametrize("cls", range(8), ids=lambda c: f"class{c}")
+def test_adversarial_html_output_is_pinned(cls):
+    h = hashlib.sha256()
+    for payload in _adversarial_pages()[cls::8]:
+        r = extract_document(payload, None)
+        h.update(repr((r.extracted_text, r.spans, repr(r.score), r.title,
+                       r.failed)).encode())
+    assert h.hexdigest() == _ADVERSARIAL_DIGESTS[cls]
+
 def test_bogus_charref_fast_scanner_keeps_parsing():
     """Known reference-parser wart, pinned: on a bogus charref ('&#'
     not followed by digits/x) stdlib html.parser breaks its goahead
@@ -407,7 +534,7 @@ def test_bogus_charref_fast_scanner_keeps_parsing():
     # html.parser really does swallow the closing tags (the wart that
     # forces the exclusion — if this stops failing, re-enable the class)
     orig = htmlx.parse_dom
-    htmlx.parse_dom = htmlx.parse_dom_htmlparser
+    htmlx.parse_dom = parse_dom_htmlparser
     try:
         ref_text = extract_html(src)[0]
     finally:
@@ -438,7 +565,7 @@ def test_rawtext_restart_does_not_swallow_markup():
     assert fast[0] == "hello after script"
     # and the A/B reference agrees
     orig = htmlx.parse_dom
-    htmlx.parse_dom = htmlx.parse_dom_htmlparser
+    htmlx.parse_dom = parse_dom_htmlparser
     try:
         ref = extract_html(src)
     finally:

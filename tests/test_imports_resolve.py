@@ -8,14 +8,16 @@ and each ``from X import Y`` needs a spec for X plus Y as either a
 submodule of X or an attribute of it. Imports under a ``try`` that
 catches ImportError are optional by design and are skipped.
 
-The same walk pins four more things: every walked file compiles with
+The same walk pins five more things: every walked file compiles with
 SyntaxWarning and DeprecationWarning raised as errors (an invalid
 escape such as ``"\\;"`` is a SyntaxError in future Pythons); the
 static import closure of the flagship (``pipeline`` + ``catalog``) is
 a reviewed list, so a change that widens it shows up as a diff here;
-every package module is reached from the package's entry points,
-so a module left behind when its last importer is deleted fails by
-name; and every package module imports without error.
+every top-level def and class in that closure is named by program
+code outside its own body (tests do not count); every package module
+is reached from the package's entry points, so a module left behind
+when its last importer is deleted fails by name; and every package
+module imports without error.
 """
 
 import ast
@@ -34,9 +36,10 @@ if ROOT not in sys.path:
     sys.path.insert(0, ROOT)
 
 
-def _sources() -> list[str]:
-    out = [os.path.join(ROOT, "__spark_entry__.py")]
-    for top in (PKG, "tools"):
+def _sources(roots=("__spark_entry__.py",), tops=(PKG, "tools")
+             ) -> list[str]:
+    out = [os.path.join(ROOT, f) for f in roots]
+    for top in tops:
         for d, _, files in os.walk(os.path.join(ROOT, top)):
             out += [os.path.join(d, f) for f in sorted(files)
                     if f.endswith(".py")]
@@ -123,16 +126,13 @@ def test_compiles_without_warnings(path):
 
 
 # The modules the flagship job imports, function-body imports and the
-# packages they sit in included (about 6.2k lines). Widening this set
-# is a design decision; update the list in the same change.
+# packages they sit in included (3,666 lines). Widening this set is a
+# design decision; update the list in the same change.
 FLAGSHIP_CLOSURE = (
     "", "catalog", "pipeline", "extractor", "extractor.cfbx",
-    "extractor.charsetx", "extractor.core", "extractor.docx",
-    "extractor.epubx", "extractor.feedx", "extractor.htmlx",
-    "extractor.ipynbx", "extractor.mailx", "extractor.odtx",
-    "extractor.pdfx", "extractor.pptx", "extractor.rtfx",
-    "extractor.sniff", "extractor.tarx", "extractor.texx",
-    "extractor.xlsxx")
+    "extractor.core", "extractor.docx", "extractor.epubx",
+    "extractor.htmlx", "extractor.odtx", "extractor.pdfx",
+    "extractor.pptx", "extractor.rtfx", "extractor.sniff")
 
 
 def _module_path(mod: str) -> str | None:
@@ -166,6 +166,57 @@ def test_flagship_import_closure_is_pinned():
     got = _closure([f"{PKG}.pipeline", f"{PKG}.catalog"])
     want = {f"{PKG}.{m}" if m else PKG for m in FLAGSHIP_CLOSURE}
     assert sorted(got) == sorted(want)
+
+
+@functools.lru_cache(maxsize=None)
+def _named_at() -> dict[str, list[tuple[str, int]]]:
+    """name -> (path, line) of each Name, attribute or imported name
+    in the package, tools/, perfbench/ and the root scripts. tests/ is
+    left out, so a def that only tests call counts as uncalled."""
+    out: dict[str, list[tuple[str, int]]] = {}
+    scripts = [f for f in os.listdir(ROOT) if f.endswith(".py")]
+    for path in _sources(scripts, (PKG, "tools", "perfbench")):
+        for node in ast.walk(ast.parse(open(path).read(), path)):
+            if isinstance(node, ast.Name):
+                names = [node.id]
+            elif isinstance(node, ast.Attribute):
+                names = [node.attr]
+            elif isinstance(node, ast.ImportFrom):
+                names = [a.name for a in node.names]
+            else:
+                continue
+            for name in names:
+                out.setdefault(name, []).append((path, node.lineno))
+    return out
+
+
+def _flagship_defs() -> list[tuple[str, str, int, int]]:
+    """(path, name, first line, last line) of each top-level def or
+    class in a FLAGSHIP_CLOSURE module."""
+    out = []
+    for m in FLAGSHIP_CLOSURE:
+        path = _module_path(f"{PKG}.{m}" if m else PKG)
+        for node in ast.parse(open(path).read(), path).body:
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef,
+                                 ast.ClassDef)):
+                out.append((path, node.name, node.lineno,
+                            node.end_lineno))
+    return out
+
+
+def _def_id(d: tuple[str, str, int, int]) -> str:
+    mod = _module_name(d[0])
+    return f"{mod[len(PKG) + 1:] or '__init__'}.{d[1]}"
+
+
+@pytest.mark.parametrize("d", _flagship_defs(), ids=_def_id)
+def test_every_flagship_def_is_called(d):
+    """A flagship def or class that no program file names outside its
+    own body is dead code (or lives on for tests alone): delete it."""
+    path, name, first, last = d
+    assert any(p != path or not first <= line <= last
+               for p, line in _named_at().get(name, ())), (
+        f"{_def_id(d)} is named nowhere outside its own body")
 
 
 # The package's entry points: the flagship, every query family, and

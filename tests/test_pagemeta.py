@@ -7,6 +7,7 @@ import pyarrow.parquet as pq
 from historicaldatadocumentparsersystem_spark import fixtures
 from historicaldatadocumentparsersystem_spark.extractor import metax, tablex
 from historicaldatadocumentparsersystem_spark.operators import pagemeta
+from html_reference_builder import parse_dom_htmlparser
 
 GOLDEN_META = "fixtures/golden_meta_seed42_n120.parquet"
 GOLDEN_TABLES = "fixtures/golden_tables_seed42_n120.parquet"
@@ -366,7 +367,7 @@ def test_full_attr_scanner_tree_equals_htmlparser():
     for payload, label in pages:
         src = htmlx.decode_payload(payload)
         assert (sig(htmlx.parse_dom(src, full_attrs=True), src)
-                == sig(htmlx.parse_dom_htmlparser(src), src)), label
+                == sig(parse_dom_htmlparser(src), src)), label
 
 
 def test_page_artifacts_equals_individual_extractors():

@@ -12,6 +12,7 @@ from hypothesis import given, settings, strategies as st
 
 from historicaldatadocumentparsersystem_spark.extractor import extract_document
 from historicaldatadocumentparsersystem_spark.extractor.htmlx import decode_payload
+from html_reference_builder import parse_dom_htmlparser
 
 _TAGS = ["div", "p", "a", "span", "ul", "li", "nav", "footer", "article",
          "script", "b", "h1", "table", "td", "form", "br", "img"]
@@ -145,7 +146,7 @@ def test_fast_scanner_ab_property(parts):
            + "".join(parts) + "</body></html>")
     fast = htmlx.extract_html(src)
     orig = htmlx.parse_dom
-    htmlx.parse_dom = htmlx.parse_dom_htmlparser
+    htmlx.parse_dom = parse_dom_htmlparser
     try:
         ref = htmlx.extract_html(src)
     finally:
