@@ -16,8 +16,6 @@ elayoubidriss/HistoricalDataDocumentParserSystem (reference at
   embedding-cosine), similarity search, text analysis, chunking,
   keyword-section selection, span/bbox algebra.
 - ``functions/``  : column-expression helpers (built-in functions only).
-- ``streaming/``  : Structured Streaming wrapper (foreachBatch over the
-  same extraction UDF).
 
 Reference parity citations use /root/reference file:line in docstrings.
 

@@ -142,74 +142,3 @@ class Catalog:
         manifest = self._read_manifest()
         manifest.setdefault("snapshots", {})[snapshot_id] = meta
         self._write_manifest(manifest)
-
-    # -- maintenance ----------------------------------------------------------
-    def data_files(self) -> list[str]:
-        """Parquet data files of the extracted table (maintenance
-        metric; excludes _SUCCESS/committed markers)."""
-        out = []
-        for root, _, names in os.walk(self.extracted_path):
-            out += [os.path.join(root, n) for n in names
-                    if n.endswith(".parquet")]
-        return out
-
-    def compact_extracted(self, spark: SparkSession,
-                          target_rows_per_file: int = 1_000_000) -> dict:
-        """Small-files compaction — the maintenance job every
-        partitioned 100 TB table needs: each incremental/streaming
-        write drops a few files per ``part_id``, and a year of runs
-        turns every scan into an open()-bound crawl over millions of
-        tiny files. This rewrites each partition into
-        ceil(rows / target_rows_per_file) files, preserving rows,
-        schema, and the part_id layout (resume/lineage untouched —
-        compaction is physical, not logical).
-
-        How: per-partition row counts come from ONE count aggregate
-        over the partition column (parquet footer metadata — no data
-        columns read), broadcast back as a files-per-partition plan;
-        rows are salted deterministically (xxhash64(url) % n_files)
-        and shuffled once on (part_id, salt) so each target file is
-        written by exactly one task. Spark refuses to overwrite a
-        path it is reading, so the rewrite stages into a sibling dir
-        and swaps — the step a real Iceberg catalog does atomically
-        by committing a new snapshot pointer (this emulation's swap
-        is rmtree+rename; the manifest stays the source of truth).
-
-        Returns {"files_before", "files_after", "rows"}.
-        """
-        import shutil
-
-        before = len(self.data_files())
-        df = self.read_extracted(spark)
-        counts = (df.groupBy("part_id")
-                  .agg(F.count("*").cast("long").alias("__rows")))
-        plan = counts.select(
-            "part_id", "__rows",
-            F.greatest(
-                F.expr(f"cast(ceil(__rows / {target_rows_per_file}"
-                       f".0e0) AS int)"),
-                F.lit(1)).alias("__n_files"))
-        salted = (df.join(F.broadcast(plan), "part_id")
-                  .withColumn("__salt",
-                              F.pmod(F.xxhash64("url"),
-                                     F.col("__n_files")).cast("int")))
-        n_rows = int(plan.agg(F.sum("__rows")).first()[0] or 0)
-        staged = self.extracted_path + ".compact-staging"
-        shutil.rmtree(staged, ignore_errors=True)
-        (salted.repartition("part_id", "__salt")
-         .drop("__rows", "__n_files", "__salt")
-         .write.mode("overwrite").partitionBy("part_id")
-         .parquet(staged))
-        # Swap non-destructively: move the live dir ASIDE first, then
-        # promote staging, then drop the old copy — every crash point
-        # leaves a recoverable directory (live, or .compact-old +
-        # staging), unlike rmtree-then-rename which has a window where
-        # the table path simply doesn't exist.
-        old = self.extracted_path + ".compact-old"
-        shutil.rmtree(old, ignore_errors=True)
-        os.replace(self.extracted_path, old)
-        os.replace(staged, self.extracted_path)
-        shutil.rmtree(old)
-        return {"files_before": before,
-                "files_after": len(self.data_files()),
-                "rows": n_rows}

@@ -176,12 +176,6 @@ class BPETokenizer:
     def word_cost(self, word: str) -> int:
         return len(self.bpe_word(word)) if word else 0
 
-    def tokenize(self, text: str) -> list[str]:
-        out: list[str] = []
-        for word in _PRETOK.findall(text.lower()):
-            out.extend(self.bpe_word(word))
-        return out
-
     def token_count(self, text: str) -> int:
         n = 0
         for word in _PRETOK.findall(text.lower()):
@@ -261,14 +255,6 @@ def learn_merges(texts, n_merges: int) -> tuple[tuple[str, str], ...]:
             if all(" " <= c <= "~" for c in w):
                 freqs[w] = freqs.get(w, 0) + 1
     return learn_merges_from_freqs(freqs.items(), n_merges)
-
-
-def tokenize(text: str) -> list[str]:
-    """Full BPE tokenization of a document (lowercased)."""
-    out: list[str] = []
-    for word in _PRETOK.findall(text.lower()):
-        out.extend(bpe_word(word))
-    return out
 
 
 def token_count(text: str) -> int:

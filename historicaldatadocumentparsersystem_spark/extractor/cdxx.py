@@ -15,10 +15,10 @@ Line shape (CDXJ)::
         "status": "200", "digest": "...", "length": "123",
         "offset": "456", "filename": "...warc.gz"}
 
-This module feeds ``sources.read_cdx`` (binaryFile scan + Arrow batch)
-and ``sources.read_warc_members`` (the ranged fetch).  Like the rest
-of ``extractor/``, it is the correctness oracle: malformed lines
-degrade to fewer rows, never raise (the F5 contract).
+This module feeds the crawl queries' CDX tables and the WACZ indexes
+(``extractor/waczx.py``).  Like the rest of ``extractor/``, it is the
+correctness oracle: malformed lines degrade to fewer rows, never raise
+(the F5 contract).
 
 Reference analog: the reference walks a directory and opens every
 file (`main_parser.py` directory scan); at 10^12 captures the listing
@@ -157,7 +157,7 @@ def build_warc_indexed(records: list[dict],
     """``build_warc`` plus its own CDX rows: returns (shard_bytes,
     cdx_records) where each cdx record carries the true (offset,
     length) of the member inside the shard — the fixture generator
-    for the record-locator fetch path (``sources.read_warc_members``).
+    for record locators.
 
     With ``gzip_records`` each member is an independent gzip stream
     (the production layout): offset/length address the COMPRESSED
@@ -182,15 +182,3 @@ def build_warc_indexed(records: list[dict],
         })
         shard += member
     return shard, rows
-
-
-def read_warc_member(data: bytes, offset: int, length: int) -> dict | None:
-    """Decode ONE record from shard bytes via its CDX locator: slice
-    [offset, offset+length), gunzip if the slice is a gzip member,
-    parse as WARC.  Returns the parse_warc record dict, or None when
-    the slice is corrupt/truncated (F5)."""
-    from .warcx import parse_warc
-
-    chunk = data[offset:offset + length]
-    recs = parse_warc(chunk)
-    return recs[0] if recs else None

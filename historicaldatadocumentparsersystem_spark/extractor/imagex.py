@@ -4,12 +4,11 @@ PNG is zlib (stdlib) + five byte-level scanline filters, so a genuine
 decoder/encoder needs no external codec: this module implements
 non-interlaced 8-bit PNG (gray / gray+alpha / RGB / RGBA) end to end —
 chunk walk, IDAT inflate, per-row unfilter (None/Sub/Up/Average/Paeth)
-— plus nearest-neighbor resize, crop, per-channel stats, and a filter-
-parameterized encoder used to exercise every decode path. WAV parsing
-uses the stdlib ``wave`` module with struct-based sample math.
+— plus nearest-neighbor resize, per-channel stats, and a filter-
+parameterized encoder used to exercise every decode path. Test WAVs
+are written with the stdlib ``wave`` module.
 
-This upgrades C8 (crop+render+b64, reference ``doc_processor.py:
-171-186``) and C14 (resize, ``multimodal_RAG_methods.py:336-352``)
+This upgrades C14 (resize, ``multimodal_RAG_methods.py:336-352``)
 from "stubbed: no codec in container" to real for PNG payloads; JPEG
 and GIF pixel decode (DCT / LZW) remain out of scope and fall back to
 the header-only path in ``operators/multimodal.py``.
@@ -159,7 +158,7 @@ def decode_png(payload: bytes) -> tuple[int, int, int, bytes]:
     return width, height, channels, bytes(out)
 
 
-# --- pixel ops (C8 crop / C14 resize / stats) ----------------------------------
+# --- pixel ops (C14 resize / stats) --------------------------------------------
 
 def resize_nearest(pixels: bytes, w: int, h: int, ch: int,
                    w2: int, h2: int) -> bytes:
@@ -330,18 +329,6 @@ def resize_lanczos(pixels: bytes, w: int, h: int, ch: int,
     return bytes(out)
 
 
-def crop(pixels: bytes, w: int, h: int, ch: int,
-         x0: int, y0: int, x1: int, y1: int) -> bytes:
-    """Crop [x0,x1) x [y0,y1) (clamped) — the C8 pixel step."""
-    x0, y0 = max(0, x0), max(0, y0)
-    x1, y1 = min(w, x1), min(h, y1)
-    out = bytearray()
-    for y in range(y0, y1):
-        row = y * w * ch
-        out += pixels[row + x0 * ch:row + x1 * ch]
-    return bytes(out)
-
-
 def grayscale(pixels: bytes, ch: int) -> bytes:
     """Integer ITU-R 601 luma ((299R + 587G + 114B + 500) // 1000) —
     deterministic on any host, no floats. ch=1 is identity; ch=2
@@ -442,25 +429,6 @@ def make_wav(n_frames: int, sample_rate: int = 8000,
     return buf.getvalue()
 
 
-def wav_stats(payload: bytes) -> dict:
-    """Real WAV decode via stdlib: channel count, rate, duration, RMS
-    (integer-exact sum of squares, then one float sqrt)."""
-    import io
-    import math
-    import wave
-    with wave.open(io.BytesIO(payload), "rb") as w:
-        nch, width, rate, nframes = (w.getnchannels(), w.getsampwidth(),
-                                     w.getframerate(), w.getnframes())
-        raw = w.readframes(nframes)
-    if width != 2:
-        raise ValueError("only 16-bit PCM supported")
-    samples = struct.unpack(f"<{len(raw) // 2}h", raw)
-    sq = sum(s * s for s in samples)
-    rms = math.sqrt(sq / len(samples)) if samples else 0.0
-    return {"n_channels": nch, "sample_rate": rate, "n_frames": nframes,
-            "duration_ms": int(nframes * 1000 / rate), "rms": rms}
-
-
 def make_test_png(width: int, height: int, channels: int = 3,
                   seed: int = 0, filter_type: int = 0) -> bytes:
     """Deterministic real PNG: pixel (x, y) channel c has value
@@ -471,39 +439,6 @@ def make_test_png(width: int, height: int, channels: int = 3,
         for y in range(height) for x in range(width)
         for c in range(channels))
     return encode_png(px, width, height, channels, filter_type)
-
-
-# --- frame container (video frame-sample analog) --------------------------------
-
-_FRAMES_MAGIC = b"FRMS"
-
-
-def pack_frames(frames: list[bytes]) -> bytes:
-    """Length-prefixed frame container: the deterministic stand-in for
-    a video file (no video codec ships in any runtime this engine
-    targets offline; a real deployment swaps ffmpeg demux for this
-    walk and the Spark-side frame-sample op is unchanged)."""
-    out = bytearray(_FRAMES_MAGIC + struct.pack(">I", len(frames)))
-    for f in frames:
-        out += struct.pack(">I", len(f)) + f
-    return bytes(out)
-
-
-def unpack_frames(payload: bytes) -> list[bytes]:
-    if payload[:4] != _FRAMES_MAGIC or len(payload) < 8:
-        raise ValueError("not a frame container")
-    (n,) = struct.unpack(">I", payload[4:8])
-    frames, pos = [], 8
-    for _ in range(n):
-        if pos + 4 > len(payload):
-            raise ValueError("truncated frame table")
-        (ln,) = struct.unpack(">I", payload[pos:pos + 4])
-        pos += 4
-        if pos + ln > len(payload):
-            raise ValueError("truncated frame body")
-        frames.append(payload[pos:pos + ln])
-        pos += ln
-    return frames
 
 
 # --- GIF (real LZW decode; encoder uses the uncompressed-GIF technique) --------
@@ -745,13 +680,3 @@ def decode_pnm(payload: bytes) -> tuple[int, int, int, bytes]:
             bit = (raw[base + (x >> 3)] >> (7 - (x & 7))) & 1
             out[y * w + x] = 0 if bit else 255
     return w, h, 1, bytes(out)
-
-
-def encode_pnm(pixels: bytes, width: int, height: int,
-               channels: int) -> bytes:
-    """(the fixture half) gray -> P5, rgb -> P6."""
-    if channels == 3:
-        return (b"P6\n%d %d\n255\n" % (width, height)) + pixels
-    if channels == 1:
-        return (b"P5\n%d %d\n255\n" % (width, height)) + pixels
-    raise ValueError(channels)

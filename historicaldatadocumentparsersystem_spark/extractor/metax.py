@@ -46,9 +46,8 @@ from .htmlx import (decode_payload, iter_elements, parse_dom,
 # output field order — the single source of truth shared by the Spark
 # schema (operators/pagemeta.py) and the golden fixture.
 # rel_next/rel_prev (pagination chains -> multi-page article
-# stitching + frontier seeding) and feed_url (RSS/Atom autodiscovery
-# -> feeds the feedx/discovery-stream pipeline) are crawl-discovery
-# outputs of the same head walk.
+# stitching + frontier seeding) and feed_url (RSS/Atom autodiscovery)
+# are crawl-discovery outputs of the same head walk.
 META_FIELDS = ("title", "description", "keywords", "robots",
                "canonical", "og_title", "og_description", "og_url",
                "og_image", "lang", "rel_next", "rel_prev", "feed_url")
@@ -163,53 +162,3 @@ def hreflang_from_root(root, base_url: str | None = None
         target = urljoin(base_url, href) if base_url else href
         out.append((len(out), lang, target))
     return out
-
-
-# --- meta-refresh microsyntax (HTML spec: shared declarative refresh
-# steps, deterministic subset) ------------------------------------------------
-# `<meta http-equiv=refresh content="5; url=...">` is the soft-redirect
-# channel HTTP redirects never see: spam doorways, interstitials, and
-# legacy moved-pages all use it, so a crawl's redirect graph is
-# incomplete without it. Subset rules (shared verbatim by the tests
-# and the VALUES oracle):
-# - leading whitespace skipped; the time is a required digit run
-#   (clamped to 9 digits -> int32-safe); a fractional part is parsed
-#   and IGNORED (spec behavior);
-# - end-of-value after the time means "reload self" (target None);
-#   otherwise ONE of ';' ',' or whitespace must separate — anything
-#   else is a parse error (None);
-# - the remainder optionally starts with case-insensitive `url` `=`
-#   (each side whitespace-tolerant); a leading ' or " quote cuts the
-#   target at the NEXT matching quote (or end); unquoted targets run
-#   to the end, trimmed. Empty targets normalize to None.
-
-import re as _re
-
-_REFRESH_RE = _re.compile(
-    r"^[ \t\n\r\f]*([0-9]{1,20})(?:\.[0-9]*)?"
-    r"(?:[ \t\n\r\f]*$|(?:[ \t\n\r\f]*[;,]|[ \t\n\r\f]+)"
-    r"(?P<rest>.*)$)", _re.S)
-_REFRESH_URL_RE = _re.compile(
-    r"^[ \t\n\r\f]*(?:[uU][rR][lL][ \t\n\r\f]*=[ \t\n\r\f]*)?(.*)$",
-    _re.S)
-
-
-def parse_refresh(content) -> tuple[int, str | None] | None:
-    """Refresh content attribute -> (delay_s, target_url|None), or
-    None when malformed. Never raises."""
-    m = _REFRESH_RE.match(content or "")
-    if not m:
-        return None
-    delay = min(int(m.group(1)), (1 << 31) - 1)
-    rest = m.group("rest")
-    if rest is None:
-        return delay, None
-    target = _REFRESH_URL_RE.match(rest).group(1)
-    if target[:1] in ("'", '"'):
-        q = target[0]
-        target = target[1:]
-        cut = target.find(q)
-        if cut >= 0:
-            target = target[:cut]
-    target = target.strip(" \t\n\r\f")
-    return delay, target or None

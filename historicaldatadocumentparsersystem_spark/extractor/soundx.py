@@ -111,49 +111,6 @@ def _id3_frames(payload: bytes) -> tuple[list[tuple[str, str]], int]:
     return rows, 10 + _syncsafe(payload[6:10])
 
 
-def mp3_chapters(payload: bytes) -> list[tuple]:
-    """Podcast chapter markers (the ID3v2 Chapter Frame Addendum):
-    (pos, element_id, start_ms, end_ms, title) per CHAP frame in tag
-    order. element_id is the null-terminated latin-1 id; start/end
-    are the 32-bit big-endian millisecond offsets (the spec's
-    0xFFFFFFFF 'not set' sentinel and end <= start degrade end to
-    None); title is the first embedded TIT2 sub-frame's text or
-    None. Chapters turn a podcast enclosure into (audio-span, text)
-    alignment rows. Malformed frames are skipped (F5)."""
-    out: list[tuple] = []
-    for fid, data in _iter_id3_raw(payload):
-        if fid != b"CHAP" or len(data) < 17:
-            continue
-        nul = data.find(b"\x00")
-        if nul < 0 or nul + 17 > len(data):
-            continue
-        element_id = data[:nul].decode("latin-1")
-        start = int.from_bytes(data[nul + 1:nul + 5], "big")
-        end = int.from_bytes(data[nul + 5:nul + 9], "big")
-        if start == 0xFFFFFFFF:
-            continue
-        if end == 0xFFFFFFFF or end <= start:
-            end_val = None
-        else:
-            end_val = end
-        # embedded sub-frames follow the two offset pairs
-        title = None
-        sub = data[nul + 17:]
-        j = 0
-        while j + 10 <= len(sub):
-            sid = sub[j:j + 4]
-            ssize = int.from_bytes(sub[j + 4:j + 8], "big")
-            if not sid.strip(b"\x00") or ssize <= 0 \
-                    or j + 10 + ssize > len(sub):
-                break
-            if sid == b"TIT2":
-                title = _id3_text(sub[j + 10:j + 10 + ssize])
-                break
-            j += 10 + ssize
-        out.append((len(out), element_id, start, end_val, title))
-    return out
-
-
 def _frame_header(b: bytes, i: int):
     """Decode one MPEG Layer III frame header at offset i ->
     (frame_len, samples, sample_rate, bitrate_kbps, mode, version)
@@ -289,7 +246,7 @@ def make_mp3(text_frames: list[tuple[str, str]], n_frames: int = 20,
     MPEG1 (or MPEG2 when ``v2``) Layer III frames of silence.
     ``chapters`` = (element_id, start_ms, end_ms | None, title |
     None) tuples -> CHAP frames with embedded TIT2 sub-frames (the
-    encode half of mp3_chapters)."""
+    ID3v2 Chapter Frame Addendum)."""
     frames = b""
     for fid, text in text_frames:
         try:
@@ -379,55 +336,3 @@ def make_ogg_opus(channels: int = 2, pre_skip: int = 312,
            + pre_skip.to_bytes(2, "little")
            + input_rate.to_bytes(4, "little") + b"\x00\x00\x00")
     return _ogg_page(pkt)
-
-
-def afp64(payload: bytes) -> tuple[int, int, int] | None:
-    """64-bit audio energy-delta fingerprint over 16-bit PCM WAV —
-    the dHash recipe in the time domain: decode (stdlib wave),
-    mix channels by exact integer per-frame sum, split the sample
-    sequence into 65 equal windows (integer boundaries k*n//65),
-    energy per window = exact sum of squares, one bit per adjacent
-    comparison (set when the LATER window is louder), MSB-first.
-    Returns (sample_rate, n_frames, fingerprint as SIGNED int64) or
-    None for non-WAV / non-16-bit / shorter than 65 frames.
-
-    Window boundaries are RELATIVE, so the same envelope rendered at
-    a different sample rate fingerprints identically (the cross-rate
-    near-dup the fixture plants). Robust in the dHash sense — it sees
-    only loudness-ordering structure; production swap for content ID
-    is a chromaprint-class spectral method, stated honestly like the
-    ffmpeg note on video frame sampling."""
-    import io
-    import struct as _struct
-    import wave
-    try:
-        with wave.open(io.BytesIO(payload), "rb") as w:
-            nch, width, rate, nframes = (
-                w.getnchannels(), w.getsampwidth(),
-                w.getframerate(), w.getnframes())
-            raw = w.readframes(nframes)
-    except Exception:
-        return None
-    if width != 2 or nch < 1 or not 0 < rate < (1 << 31):
-        return None              # header-fed value clamp (Int32 col)
-    raw = raw[:len(raw) - (len(raw) % 2)]   # truncated odd tail
-    samples = _struct.unpack(f"<{len(raw) // 2}h", raw)
-    if nch > 1:                      # exact integer channel mix
-        n = len(samples) // nch
-        samples = tuple(sum(samples[i * nch:(i + 1) * nch])
-                        for i in range(n))
-    n = len(samples)
-    if n < 65:
-        return None
-    energies = []
-    for k in range(65):
-        lo, hi = k * n // 65, (k + 1) * n // 65
-        energies.append(sum(s * s for s in samples[lo:hi]))
-    v = 0
-    for k in range(64):
-        v = (v << 1) | (1 if energies[k + 1] > energies[k] else 0)
-    # report the ACTUAL decoded frame count (n is the post-mix
-    # per-frame sample count, bounded by real data) — a lying header
-    # claim cannot overflow the row
-    return (rate, n,
-            v - (1 << 64) if v >= (1 << 63) else v)

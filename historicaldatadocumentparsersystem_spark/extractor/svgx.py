@@ -20,7 +20,7 @@ Deterministic subset:
   whitespace-collapsed, joined with "\\n" per text element
 - counts: total elements and ``<path>`` elements (complexity proxy)
 
-Namespace-agnostic tag matching (the feedx convention); junk
+Namespace-agnostic tag matching (local names, prefixes dropped); junk
 degrades to None (F5).
 """
 

@@ -25,10 +25,7 @@ Determinism contract:
 - captures: every member under ``indexes/`` whose name ends
   ``.cdx``/``.cdxj``/``.cdx.gz``, in SORTED path order, parsed by
   ``cdxx.parse_cdxj`` (whole-file gzip accepted); each row carries
-  the index path it came from;
-- fetch: ``fetch_capture`` resolves one CDX locator against an
-  ``archive/`` member via ``cdxx.read_warc_member`` — the in-zip
-  ranged-read path (at scale the zip member is the ranged unit).
+  the index path it came from.
 
 The builder half (``make_wacz``) is the fixture generator:
 byte-deterministic zips (fixed DOS timestamps, sorted member order,
@@ -197,32 +194,6 @@ def parse_wacz(payload) -> dict:
             row["index_path"] = name
             out["captures"].append(row)
     return out
-
-
-def fetch_capture(payload, capture: dict) -> dict | None:
-    """Resolve ONE capture's CDX locator against its archive member:
-    slice [offset, offset+length) of ``archive/<filename>``, decode
-    via cdxx.read_warc_member. None when anything is missing (F5)."""
-    if not isinstance(payload, (bytes, bytearray, memoryview)):
-        return None
-    try:
-        zf = zipfile.ZipFile(io.BytesIO(bytes(payload)))
-    except (zipfile.BadZipFile, OSError, ValueError):
-        return None
-    name = "archive/" + str(capture.get("filename") or "")
-    try:
-        with zf.open(name) as fh:
-            shard = fh.read()
-    except (KeyError, zipfile.BadZipFile, OSError, ValueError):
-        return None
-    try:
-        offset = int(capture["offset"])
-        length = int(capture["length"])
-    except (KeyError, ValueError, TypeError):
-        return None
-    if offset < 0 or length <= 0 or offset + length > len(shard):
-        return None
-    return cdxx.read_warc_member(shard, offset, length)
 
 
 def _str_or_none(v) -> str | None:

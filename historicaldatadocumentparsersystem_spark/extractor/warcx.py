@@ -7,10 +7,11 @@ responses (status line + headers + body). Production archives gzip
 each record as an independent member, so a whole-file gunzip that
 iterates members recovers the same byte stream.
 
-This parser feeds ``sources.read_warc_documents`` (binaryFile scan +
-Arrow batch over these functions), turning raw WARC shards into the
-engine's documents schema (url, warc_ts, html, ...) with no external
-dependency. Like the rest of ``extractor/``, it is the correctness
+This parser feeds ``sources.warc_captures_from_blobs`` and
+``sources.arc_documents_from_blobs`` (one Arrow batch over these
+functions per shard column), turning raw shards into capture rows and
+the engine's documents schema (url, warc_ts, html, ...) with no
+external dependency. Like the rest of ``extractor/``, it is the correctness
 oracle: malformed containers degrade to fewer records, never raise
 (the F5 contract).
 
@@ -232,26 +233,6 @@ def parse_warc(data: bytes) -> list[dict]:
     return records
 
 
-def parse_wet(data: bytes) -> list[dict]:
-    """All conversion records of a WET shard (Common Crawl's
-    pre-extracted plain-text sibling of WARC), in order:
-    {url, warc_ts (datetime, UTC), text (str)}.
-
-    WET payloads are bare UTF-8 text — no HTTP envelope; undecodable
-    bytes degrade via replacement (F5: fewer/lossy rows, never raise).
-    """
-    records: list[dict] = []
-    for headers, payload in _iter_records(data):
-        if headers.get("warc-type") != "conversion":
-            continue
-        records.append({
-            "url": headers.get("warc-target-uri", ""),
-            "warc_ts": _warc_ts(headers),
-            "text": payload.decode("utf-8", errors="replace"),
-        })
-    return records
-
-
 def build_warc(records: list[dict], gzip_records: bool = False) -> bytes:
     """Serialize records (same dict shape parse_warc returns) into a
     valid WARC shard — the test fixture generator and the exactness
@@ -293,29 +274,6 @@ def build_warc(records: list[dict], gzip_records: bool = False) -> bytes:
                 b"WARC-Type: response\r\n"
                 b"WARC-Target-URI: " + r["url"].encode() + b"\r\n"
                 b"WARC-Date: " + ts.encode() + b"\r\n"
-                b"Content-Length: " + str(len(payload)).encode() +
-                b"\r\n\r\n")
-        rec = head + payload + b"\r\n\r\n"
-        if gzip_records:
-            c = zlib.compressobj(wbits=31)
-            rec = c.compress(rec) + c.flush()
-        out.append(rec)
-    return b"".join(out)
-
-
-def build_wet(records: list[dict], gzip_records: bool = False) -> bytes:
-    """Serialize {url, warc_ts, text} records into a valid WET shard —
-    fixture generator + exactness witness (build_wet -> parse_wet
-    round-trips the text byte-identically through UTF-8)."""
-    out = []
-    for r in records:
-        payload = r["text"].encode("utf-8")
-        ts = r["warc_ts"].strftime("%Y-%m-%dT%H:%M:%SZ")
-        head = (b"WARC/1.0\r\n"
-                b"WARC-Type: conversion\r\n"
-                b"WARC-Target-URI: " + r["url"].encode() + b"\r\n"
-                b"WARC-Date: " + ts.encode() + b"\r\n"
-                b"Content-Type: text/plain\r\n"
                 b"Content-Length: " + str(len(payload)).encode() +
                 b"\r\n\r\n")
         rec = head + payload + b"\r\n\r\n"
@@ -421,131 +379,6 @@ def build_arc(records: list[dict], gzip_records: bool = False,
             r["url"], r.get("ip", "0.0.0.0"),
             r["warc_ts"].strftime("%Y%m%d%H%M%S"), mime, len(body))
         rec = line.encode() + body + b"\n"
-        if gzip_records:
-            c = zlib.compressobj(wbits=31)
-            rec = c.compress(rec) + c.flush()
-        out.append(rec)
-    return b"".join(out)
-
-
-def parse_wat(data: bytes) -> list[dict]:
-    """All metadata records of a WAT shard (Common Crawl's per-page
-    metadata sibling: JSON envelopes describing each WARC response),
-    in order: {url, warc_ts, title (str | None),
-    links: [{path, href, anchor}, ...]}.
-
-    Only the HTML-Metadata subset the pipeline consumes is surfaced —
-    head title and outgoing links — from the envelope path
-    ``Envelope.Payload-Metadata.HTTP-Response-Metadata.HTML-Metadata``.
-    Unparseable JSON or missing envelope levels degrade to title=None
-    / links=[] (F5: lossy rows, never raise).
-    """
-    import json
-
-    records: list[dict] = []
-    for headers, payload in _iter_records(data):
-        if headers.get("warc-type") != "metadata":
-            continue
-        title, links = None, []
-        try:
-            env = json.loads(payload.decode("utf-8", errors="replace"))
-            html_md = (env.get("Envelope", {})
-                       .get("Payload-Metadata", {})
-                       .get("HTTP-Response-Metadata", {})
-                       .get("HTML-Metadata", {}))
-            t = html_md.get("Head", {}).get("Title")
-            title = t if isinstance(t, str) else None
-            raw = html_md.get("Links", [])
-            if isinstance(raw, list):
-                for lk in raw:
-                    if isinstance(lk, dict) and "url" in lk:
-                        links.append({
-                            "path": str(lk.get("path", "")),
-                            "href": str(lk["url"]),
-                            "anchor": str(lk.get("text", ""))})
-        except (ValueError, AttributeError, TypeError):
-            pass
-        records.append({
-            "url": headers.get("warc-target-uri", ""),
-            "warc_ts": _warc_ts(headers),
-            "title": title,
-            "links": links,
-        })
-    return records
-
-
-def build_wat(records: list[dict], gzip_records: bool = False) -> bytes:
-    """Serialize {url, warc_ts, title, links} records into a valid WAT
-    shard (Common Crawl's envelope JSON under metadata records) —
-    fixture generator + exactness witness (build_wat -> parse_wat
-    round-trips title and links exactly)."""
-    import json
-
-    out = []
-    for r in records:
-        env = {"Envelope": {"Payload-Metadata": {
-            "HTTP-Response-Metadata": {"HTML-Metadata": {
-                "Head": ({"Title": r["title"]}
-                         if r.get("title") is not None else {}),
-                "Links": [{"path": lk["path"], "url": lk["href"],
-                           "text": lk["anchor"]}
-                          for lk in r.get("links", [])],
-            }}}}}
-        payload = json.dumps(env, sort_keys=True).encode("utf-8")
-        ts = r["warc_ts"].strftime("%Y-%m-%dT%H:%M:%SZ")
-        head = (b"WARC/1.0\r\n"
-                b"WARC-Type: metadata\r\n"
-                b"WARC-Target-URI: " + r["url"].encode() + b"\r\n"
-                b"WARC-Date: " + ts.encode() + b"\r\n"
-                b"Content-Type: application/json\r\n"
-                b"Content-Length: " + str(len(payload)).encode() +
-                b"\r\n\r\n")
-        rec = head + payload + b"\r\n\r\n"
-        if gzip_records:
-            c = zlib.compressobj(wbits=31)
-            rec = c.compress(rec) + c.flush()
-        out.append(rec)
-    return b"".join(out)
-
-
-def parse_revisits(data: bytes) -> list[dict]:
-    """All revisit records of a WARC shard, in order: {url, warc_ts,
-    digest}. Revisit records are how production archives dedup at
-    write time: a re-capture whose payload digest matched an earlier
-    capture stores NO body, only ``WARC-Payload-Digest`` — the reader
-    resolves content through the index (``webtext.resolve_revisits``).
-    Records without a digest are skipped (unresolvable); never raises
-    (F5).
-    """
-    records: list[dict] = []
-    for headers, _payload in _iter_records(data):
-        if headers.get("warc-type") != "revisit":
-            continue
-        digest = headers.get("warc-payload-digest", "")
-        if not digest:
-            continue
-        records.append({
-            "url": headers.get("warc-target-uri", ""),
-            "warc_ts": _warc_ts(headers),
-            "digest": digest,
-        })
-    return records
-
-
-def build_revisits(records: list[dict],
-                   gzip_records: bool = False) -> bytes:
-    """Serialize {url, warc_ts, digest} revisit records (bodyless,
-    digest pointer only) — fixture generator + exactness witness
-    (build_revisits -> parse_revisits round-trips every field)."""
-    out = []
-    for r in records:
-        ts = r["warc_ts"].strftime("%Y-%m-%dT%H:%M:%SZ")
-        rec = (b"WARC/1.0\r\n"
-               b"WARC-Type: revisit\r\n"
-               b"WARC-Target-URI: " + r["url"].encode() + b"\r\n"
-               b"WARC-Date: " + ts.encode() + b"\r\n"
-               b"WARC-Payload-Digest: " + r["digest"].encode() +
-               b"\r\nContent-Length: 0\r\n\r\n\r\n\r\n")
         if gzip_records:
             c = zlib.compressobj(wbits=31)
             rec = c.compress(rec) + c.flush()

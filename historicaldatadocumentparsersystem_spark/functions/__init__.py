@@ -14,97 +14,6 @@ def _c(col) -> Column:
     return F.col(col) if isinstance(col, str) else col
 
 
-# C2: numbered-list strip (utils/tools.py:84-99 regex)
-_NUMBERED = r"^[0-9a-zA-Z]+[.\-)]\s*"
-
-
-def is_numbered_item(col) -> Column:
-    return _c(col).rlike(_NUMBERED)
-
-
-def strip_numbering(col) -> Column:
-    return F.regexp_replace(_c(col), _NUMBERED, "")
-
-
-# C3: fixed-size string chunks (utils/tools.py:43-44 message[i:i+50])
-def fixed_chunks(col, width: int = 50) -> Column:
-    c = _c(col)
-    n = F.ceil(F.length(c) / width).cast("int")
-    return F.when(F.length(c) > 0, F.transform(
-        F.sequence(F.lit(0), n - 1),
-        lambda i: F.substring(c, i * width + 1, width))
-    ).otherwise(F.array().cast("array<string>"))
-
-
-# C6: coordinate origin flip bottom-left -> top-left
-# (doc_processor.py:55-86: y' = page_height - y)
-def flip_y(y_col, page_height_col) -> Column:
-    return _c(page_height_col) - _c(y_col)
-
-
-# C7: bbox padding + clamp (doc_processor.py:139-168)
-def pad_clamp_lo(col, ext: Column | float) -> Column:
-    return F.greatest(F.lit(0.0), _c(col) - ext)
-
-
-def pad_clamp_hi(col, ext: Column | float, limit_col) -> Column:
-    return F.least(_c(limit_col), _c(col) + ext)
-
-
-# C9: JSON parse with null-safe fallback (base_parser.py:57-63)
-def parse_records(col, schema: str = "array<struct<mission_name:string,"
-                  "entity:string,thematiques:string,data_type:string,"
-                  "content:string>>") -> Column:
-    return F.coalesce(F.from_json(_c(col), schema),
-                      F.array().cast(schema))
-
-
-# C7/F7: field defaulting (base_parser.py:74-87 'Not specified')
-def default_not_specified(col) -> Column:
-    return F.coalesce(_c(col), F.lit("Not specified"))
-
-
-# F8: prompt truncation text[:15000]
-def truncate_text(col, limit: int = 15000) -> Column:
-    return F.substring(_c(col), 1, limit)
-
-
-# C11/C12: deterministic ids (uuid4 replaced per SURVEY C11)
-def chunk_id(url_col, kind_col, pos_col) -> Column:
-    return F.concat_ws("_", F.xxhash64(_c(url_col)).cast("string"),
-                       _c(kind_col), _c(pos_col).cast("string"))
-
-
-# C13: dummy char-ordinal embedding (dummy_embeddings.py:14-20:
-# [float(ord(c))] padded/truncated to dim) — deterministic test vector
-def char_ordinal_embedding(col, dim: int = 16) -> Column:
-    c = _c(col)
-    padded = F.rpad(c, dim, "\x00")
-    return F.transform(
-        F.sequence(F.lit(1), F.lit(dim)),
-        lambda i: F.ascii(F.substring(padded, i, 1)).cast("double"))
-
-
-# W4: cap retrieved arrays (multimodal_RAG_methods.py:236-237 keeps the
-# first 3 retrieved images)
-def cap_array(arr_col, k: int = 3) -> Column:
-    return F.slice(_c(arr_col), 1, k)
-
-
-# W3: LongContextReorder (multimodal_RAG_methods.py:42-44) —
-# deterministic permutation: most relevant at the ends, i.e. ranks
-# [1,3,5,...,6,4,2]: odd ranks ascending then even ranks descending.
-def long_context_reorder(arr_col) -> Column:
-    a = _c(arr_col)
-    n = F.size(a)
-    odd = F.filter(F.sequence(F.lit(1), n), lambda i: i % 2 == 1)
-    even = F.reverse(F.filter(F.sequence(F.lit(1), n),
-                              lambda i: i % 2 == 0))
-    idx = F.concat(odd, even)
-    return F.when(n > 0, F.transform(idx, lambda i: F.element_at(a, i))) \
-        .otherwise(a)
-
-
 # --- training-data pipeline scalars (round 2) -------------------------------
 
 def hash_unit(col, seed: int = 42) -> Column:

@@ -130,20 +130,3 @@ def nfc_normalize_df(df: DataFrame, text_col: str = "text",
 
     return df.select(F.col(id_col), F.col(text_col)).mapInPandas(
         batch, schema)
-
-
-def nfc_key(col) -> "Column":  # noqa: F821 — pyspark Column
-    """NFC-canonical form of a text column for use as a DEDUP KEY:
-    U+00E9 and e+U+0301 must land in the same md5 bucket even though
-    the pipeline leaves the document bytes untouched (key-side
-    canonicalization — the content-preserving complement of
-    ``nfc_normalize_df``). Arrow-batched; nulls pass through."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("string")
-    def _udf(s: "pd.Series") -> "pd.Series":
-        import unicodedata
-        return s.map(lambda t: None if t is None
-                     else unicodedata.normalize("NFC", t))
-    return _udf(F.col(col) if isinstance(col, str) else col)

@@ -84,56 +84,3 @@ def zorder_events(df: DataFrame, bits: int = ZORDER_BITS) -> DataFrame:
         "TIMESTAMP_NTZ '1970-01-01 00:00:00', ts)"))
     return (zorder_keys(with_t, "user_id", "__t_us", bits)
             .select("event_id", "qx", "qy", "zkey"))
-
-
-def write_zordered(df: DataFrame, path: str, zkey_col: str = "zkey",
-                   n_files: int = 16) -> None:
-    """Cluster the physical layout on the Morton key: ONE range
-    shuffle (each output file written by exactly one task, keys
-    contiguous), sorted within files so row-group stats are tight
-    too. Rows/schema unchanged — this is a physical-only rewrite,
-    like catalog.compact_extracted."""
-    (df.repartitionByRange(n_files, F.col(zkey_col))
-       .sortWithinPartitions(zkey_col)
-       .write.mode("overwrite").parquet(path))
-
-
-def file_scan_fraction(path: str, bounds: dict[str, tuple]) -> float:
-    """Fraction of the table's parquet files a footer-stats-aware
-    reader must touch for a conjunctive range predicate — the
-    file-skipping measure the layout exists to minimize. ``bounds``
-    maps column -> (lo, hi) closed intervals; a file is a candidate
-    when EVERY column's [min, max] intersects its interval."""
-    import pyarrow.parquet as pq
-    import glob
-    import os
-    files = sorted(glob.glob(os.path.join(path, "*.parquet")))
-    n_candidates = 0
-    for f in files:
-        meta = pq.ParquetFile(f).metadata
-        if meta.num_rows == 0:
-            continue
-        hit = True
-        for col, (lo, hi) in bounds.items():
-            cmin = cmax = None
-            for rg in range(meta.num_row_groups):
-                grp = meta.row_group(rg)
-                for ci in range(grp.num_columns):
-                    c = grp.column(ci)
-                    if c.path_in_schema != col or c.statistics is None:
-                        continue
-                    st = c.statistics
-                    if st.min is not None:
-                        cmin = st.min if cmin is None else min(cmin,
-                                                               st.min)
-                    if st.max is not None:
-                        cmax = st.max if cmax is None else max(cmax,
-                                                               st.max)
-            if cmin is not None and (cmax < lo or cmin > hi):
-                hit = False
-                break
-        if hit:
-            n_candidates += 1
-    n_total = sum(1 for f in files
-                  if pq.ParquetFile(f).metadata.num_rows > 0)
-    return n_candidates / n_total if n_total else 0.0

@@ -1,4 +1,4 @@
-"""Link-graph operators: outlink table, host edges, integer PageRank.
+"""Link-graph operators: outlink table, integer PageRank.
 
 Common Crawl ships a host-level web graph + rank alongside the text
 corpus because curation wants graph priors (seed lists, spam demotion,
@@ -9,15 +9,13 @@ crawl frontier ordering). These are those operators, Spark-first:
   (``extractor/linkx.py`` — the same oracle pattern as the flagship
   extraction stage: byte-identity with the golden parquet is
   structural because the UDF calls the oracle's own functions).
-- ``host_edges``: links -> distinct (src_host, dst_host) pairs.
 - ``pagerank_hosts``: fixed-iteration PageRank over an edge table in
   PURE INT64 fixed-point (micro-rank units, truncating division via
   SQL ``div``), so Spark and the DuckDB oracle agree bit-for-bit —
   no float reassociation anywhere. Production at float precision is
   the same plan with the casts removed.
 
-Scale: links explode ~50x rows but only (url, href, anchor) columns;
-host_edges is one groupBy on the 2-host key (map-side combinable).
+Scale: links explode ~50x rows but only (url, href, anchor) columns.
 Each PageRank iteration is one equi-join ranks-to-edges on src_host +
 one groupBy on dst_host — the standard Spark PageRank shape; the rank
 table is |hosts| rows (millions, not trillions) so iterations never
@@ -77,19 +75,6 @@ def extract_links_df(docs: DataFrame) -> DataFrame:
 
     return (docs.select("url", "html")
             .mapInPandas(batch, LINKS_SCHEMA))
-
-
-def host_edges(links: DataFrame) -> DataFrame:
-    """links -> distinct (src_host, dst_host) edges with link counts.
-
-    One groupBy on the two-host key; hosts come from the same portable
-    regex as ``webtext.url_host`` so the DuckDB twin is exact.
-    """
-    return (links.select(url_host("url").alias("src_host"),
-                         url_host("href").alias("dst_host"))
-            .where((F.col("src_host") != "") & (F.col("dst_host") != ""))
-            .groupBy("src_host", "dst_host")
-            .agg(F.count("*").cast("long").alias("n_links")))
 
 
 def pagerank_hosts(edges: DataFrame, iters: int = 3) -> DataFrame:

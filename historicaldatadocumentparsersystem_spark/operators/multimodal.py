@@ -1,7 +1,6 @@
 """Multimodal columns: opaque binary payloads + typed metadata.
 
-Reference analogs: image crop/encode C8 (``doc_processor.py:171-186``:
-fitz 300-dpi pixmap -> PNG -> base64), image resize C14
+Reference analogs: image resize C14
 (``utils/multimodal_RAG_methods.py:336-352``: PIL LANCZOS), magic-byte
 sniff F10 (``multimodal_RAG_methods.py:313-334``), picture-class filter
 F3 (``docling_chunker.py:104-126``).
@@ -9,10 +8,9 @@ F3 (``docling_chunker.py:104-126``).
 ALL pixel paths are REAL, pure stdlib, no PIL/cv2/libjpeg: PNG
 (zlib + scanline filters), GIF (from-scratch variable-width LZW),
 baseline JPEG incl. 4:2:0 chroma subsampling (from-scratch Huffman +
-DCT, ``extractor/jpegx.py``), WAV analysis, resize/crop/stats, and
-frame sampling. The header-only dimension parse remains as the fast
-path and the fallback for exotic variants (progressive JPEG, 16-bit
-PNG, sampling factors > 2).
+DCT, ``extractor/jpegx.py``), resize and stats. The header-only
+dimension parse remains as the fast path and the fallback for exotic
+variants (progressive JPEG, 16-bit PNG, sampling factors > 2).
 """
 
 from __future__ import annotations
@@ -287,7 +285,7 @@ def parse_image_dimensions(payload: bytes) -> tuple[int, int] | None:
 def _decode_image_stub(payload: bytes) -> tuple[int, int]:
     """Fast header-only dimensions for ``decode_media`` (full pixel
     decode lives in ``extractor/imagex.py``/``jpegx.py`` and powers
-    ``image_pixel_stats``/``resize_media``/``crop_media_b64``).
+    ``image_pixel_stats``/``resize_media``).
     Unrecognized containers get a deterministic fake so the metadata
     plumbing stays testable — the historical 'stub', kept for the F5
     never-crash contract."""
@@ -307,7 +305,7 @@ def decode_media_batch(batches: Iterator[pd.DataFrame]
 
     Batch shape: one Arrow batch of (media_id, payload) in, same-length
     batch of MEDIA_SCHEMA out. Exactly the signature a codec-backed
-    decode/resize/frame-sample UDF uses.
+    decode/resize UDF uses.
     """
     for b in batches:
         kinds, ws, hs = [], [], []
@@ -361,7 +359,7 @@ def filter_allowed_classes(df: DataFrame, classes_col: str,
     return df.where(folded.getField("keep"))
 
 
-# --- REAL pixel/audio paths (stdlib codecs, extractor/imagex.py) --------------
+# --- REAL pixel paths (stdlib codecs, extractor/imagex.py) --------------------
 
 def _image_stats_batch(batches: Iterator[pd.DataFrame]
                        ) -> Iterator[pd.DataFrame]:
@@ -466,89 +464,6 @@ def dhash_near_pairs(hashes: DataFrame, max_hamming: int = 7
                               "dhash", "media_id", 64, max_hamming)
 
 
-def audio_fingerprint(df: DataFrame) -> DataFrame:
-    """64-bit audio energy-delta fingerprint per payload (media_id,
-    sample_rate, n_frames, afp) — the dHash recipe in the time domain
-    over 16-bit PCM WAV (extractor/soundx.afp64 is the Spark-free
-    oracle; window boundaries are relative, so re-rendered rates
-    fingerprint identically). Map-only 1->1; at 100 TB the hash table
-    is 16 bytes/asset and pairing runs over IT via the shared
-    pigeonhole hamming path, never over audio bytes. Undecodable /
-    too-short payloads yield null rows (F5)."""
-    import pandas as pd
-
-    def batch(batches: Iterator[pd.DataFrame]
-              ) -> Iterator[pd.DataFrame]:
-        from ..extractor import soundx
-        for b in batches:
-            ids, rates, frames, fps = [], [], [], []
-            for mid, payload in zip(b["media_id"], b["payload"]):
-                r = soundx.afp64(bytes(payload)
-                                 if payload is not None else b"")
-                ids.append(mid)
-                rates.append(r[0] if r else None)
-                frames.append(r[1] if r else None)
-                fps.append(r[2] if r else None)
-            yield pd.DataFrame({
-                "media_id": ids,
-                "sample_rate": pd.array(rates, dtype="Int32"),
-                "n_frames": pd.array(frames, dtype="Int64"),
-                # nullable Int64, NEVER float64 — a None in the batch
-                # would otherwise upcast and shred low hash bits
-                "afp": pd.array(fps, dtype="Int64")})
-
-    return df.select("media_id", "payload").mapInPandas(
-        batch,
-        "media_id string, sample_rate int, n_frames long, afp long")
-
-
-def afp_near_pairs(hashes: DataFrame, max_hamming: int = 7
-                   ) -> DataFrame:
-    """Acoustically-near pairs from audio_fingerprint output — the
-    same pigeonhole bit-band blocking + exact bit_count verify as
-    dhash_near_pairs (dedup.hamming_near_pairs is the ONE pair
-    engine)."""
-    from .dedup import hamming_near_pairs
-    return hamming_near_pairs(hashes.where(F.col("afp").isNotNull()),
-                              "afp", "media_id", 64, max_hamming)
-
-
-def podcast_chapters(df: DataFrame) -> DataFrame:
-    """ID3v2 CHAP chapter markers per mp3 payload (media_id, pos,
-    element_id, start_ms, end_ms, title) — turns a podcast enclosure
-    into (audio-span, text) alignment rows, joining subtitle_cues /
-    frame_cue_alignment downstream (extractor/soundx.mp3_chapters is
-    the Spark-free oracle). Map-only 1->N; chapterless or non-mp3
-    payloads yield no row."""
-    import pandas as pd
-
-    def batch(batches: Iterator[pd.DataFrame]
-              ) -> Iterator[pd.DataFrame]:
-        from ..extractor import soundx
-        for b in batches:
-            rows = []
-            for mid, payload in zip(b["media_id"], b["payload"]):
-                try:
-                    chaps = soundx.mp3_chapters(
-                        bytes(payload) if payload is not None
-                        else b"")
-                except Exception:            # F5
-                    continue
-                for r in chaps:
-                    rows.append((mid, *r))
-            out = pd.DataFrame(rows, columns=[
-                "media_id", "pos", "element_id", "start_ms",
-                "end_ms", "title"])
-            out["pos"] = out["pos"].astype("Int32")
-            out["start_ms"] = out["start_ms"].astype("Int64")
-            out["end_ms"] = out["end_ms"].astype("Int64")
-            yield out
-
-    return df.select("media_id", "payload").mapInPandas(
-        batch, "media_id string, pos int, element_id string, "
-               "start_ms long, end_ms long, title string")
-
-
 def media_metadata(df: DataFrame) -> DataFrame:
     """Embedded metadata rows per media payload (media_id, fmt, idx,
     key, value): JPEG EXIF tags (from-scratch TIFF IFD reader, both
@@ -572,56 +487,6 @@ def media_metadata(df: DataFrame) -> DataFrame:
     return df.select("media_id", "payload").mapInPandas(
         batch, "media_id string, fmt string, idx int, "
                "key string, value string")
-
-
-def video_metadata(df: DataFrame) -> DataFrame:
-    """Per-track MP4 container metadata (media_id, brand, duration_ms,
-    n_boxes, track_id, handler, codec, width, height, track_ms,
-    lang) — extractor/mp4x.py is the Spark-free oracle (real
-    ISO-BMFF box walk: ftyp/mvhd/tkhd/mdhd/hdlr/stsd, v0+v1 layouts,
-    largesize).  Map-only 1->N; the track table is what a training
-    pipeline filters on (handler routing, resolution buckets,
-    duration-weighted frame budgets, mdhd language) without ever
-    decoding sample data.  Track-less but valid containers emit one
-    row with null track fields so corpus accounting keeps the
-    payload.  Non-MP4 payloads yield no rows (F5)."""
-    import pandas as pd
-    from ..extractor import mp4x
-
-    def batch(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["media_id", "brand", "duration_ms", "n_boxes",
-                "track_id", "handler", "codec", "width", "height",
-                "track_ms", "lang"]
-        for b in it:
-            rows = []
-            for mid, payload in zip(b["media_id"], b["payload"]):
-                try:
-                    info = mp4x.parse_mp4(
-                        bytes(payload) if payload is not None else None)
-                except Exception:
-                    continue
-                if info is None:
-                    continue
-                if not info.tracks:
-                    rows.append((mid, info.brand, info.duration_ms,
-                                 info.n_boxes, None, None, None, None,
-                                 None, None, None))
-                for t in info.tracks:
-                    rows.append((mid, info.brand, info.duration_ms,
-                                 info.n_boxes, t.track_id, t.handler,
-                                 t.codec, t.width, t.height,
-                                 t.duration_ms, t.lang))
-            out = pd.DataFrame(rows, columns=cols)
-            for c in ("duration_ms", "n_boxes", "track_id", "width",
-                      "height", "track_ms"):
-                out[c] = pd.array(out[c], dtype="Int64")
-            yield out
-
-    return df.select("media_id", "payload").mapInPandas(
-        batch, "media_id string, brand string, duration_ms long, "
-               "n_boxes long, track_id long, handler string, "
-               "codec string, width long, height long, track_ms long, "
-               "lang string")
 
 
 def media_artifacts(df: DataFrame) -> DataFrame:
@@ -821,122 +686,6 @@ def resize_media(df: DataFrame, width: int, height: int,
     return df.select("media_id", "payload").mapInPandas(
         _resize_batch_fn(width, height, kernel),
         "media_id string, payload binary, width int, height int")
-
-
-def _crop_b64_batch_fn(x0: int, y0: int, x1: int, y1: int):
-    import base64
-    from ..extractor import imagex
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            out = []
-            for payload in b["payload"]:
-                payload = bytes(payload) if payload is not None else b""
-                try:
-                    w, h, ch, px = imagex.decode_png(payload)
-                    cx0, cy0 = max(0, x0), max(0, y0)
-                    cx1, cy1 = min(w, x1), min(h, y1)
-                    sub = imagex.crop(px, w, h, ch, cx0, cy0, cx1, cy1)
-                    png = imagex.encode_png(sub, cx1 - cx0, cy1 - cy0, ch)
-                    out.append(base64.b64encode(png).decode("ascii"))
-                except Exception:
-                    out.append(None)
-            yield pd.DataFrame({"media_id": b["media_id"], "b64": out})
-    return fn
-
-
-def crop_media_b64(df: DataFrame, x0: int, y0: int,
-                   x1: int, y1: int) -> DataFrame:
-    """REAL C8 for PNG: crop -> render PNG -> base64 (reference
-    ``doc_processor.py:171-186``: fitz pixmap -> PNG -> b64)."""
-    return df.select("media_id", "payload").mapInPandas(
-        _crop_b64_batch_fn(x0, y0, x1, y1),
-        "media_id string, b64 string")
-
-
-def _audio_stats_batch(batches: Iterator[pd.DataFrame]
-                       ) -> Iterator[pd.DataFrame]:
-    from ..extractor import imagex
-    for b in batches:
-        rows = {"media_id": [], "n_channels": [], "sample_rate": [],
-                "n_frames": [], "duration_ms": [], "rms": []}
-        for mid, payload in zip(b["media_id"], b["payload"]):
-            payload = bytes(payload) if payload is not None else b""
-            try:
-                s = imagex.wav_stats(payload)
-            except Exception:
-                s = {k: None for k in ("n_channels", "sample_rate",
-                                       "n_frames", "duration_ms", "rms")}
-            rows["media_id"].append(mid)
-            for k in ("n_channels", "sample_rate", "n_frames",
-                      "duration_ms"):
-                rows[k].append(s[k])
-            rows["rms"].append(round(s["rms"], 6)
-                               if s["rms"] is not None else None)
-        yield pd.DataFrame({
-            "media_id": rows["media_id"],
-            "n_channels": pd.array(rows["n_channels"], dtype="Int32"),
-            "sample_rate": pd.array(rows["sample_rate"], dtype="Int32"),
-            "n_frames": pd.array(rows["n_frames"], dtype="Int64"),
-            "duration_ms": pd.array(rows["duration_ms"], dtype="Int64"),
-            "rms": rows["rms"],
-        })
-
-
-def audio_stats(df: DataFrame) -> DataFrame:
-    """REAL WAV analysis via the stdlib wave reader: channels, rate,
-    frames, duration, RMS — the audio feature-extraction leg of the
-    multimodal brief, Arrow-batched like the image ops."""
-    return df.select("media_id", "payload").mapInPandas(
-        _audio_stats_batch,
-        "media_id string, n_channels int, sample_rate int, "
-        "n_frames long, duration_ms long, rms double")
-
-
-def _frame_sample_batch_fn(every: int):
-    from ..extractor import imagex
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = {"media_id": [], "frame_no": [], "payload": [],
-                    "width": [], "height": []}
-            for mid, payload in zip(b["media_id"], b["payload"]):
-                payload = bytes(payload) if payload is not None else b""
-                try:
-                    frames = imagex.unpack_frames(payload)
-                except Exception:
-                    continue                    # not a frame container
-                for i in range(0, len(frames), every):
-                    try:
-                        w, h, _, _ = imagex.decode_png(frames[i])
-                    except Exception:
-                        w = h = None
-                    rows["media_id"].append(mid)
-                    rows["frame_no"].append(i)
-                    rows["payload"].append(frames[i])
-                    rows["width"].append(w)
-                    rows["height"].append(h)
-            yield pd.DataFrame({
-                "media_id": rows["media_id"],
-                "frame_no": pd.array(rows["frame_no"], dtype="Int32"),
-                "payload": rows["payload"],
-                "width": pd.array(rows["width"], dtype="Int32"),
-                "height": pd.array(rows["height"], dtype="Int32"),
-            })
-    return fn
-
-
-def frame_sample(df: DataFrame, every: int = 2) -> DataFrame:
-    """Video frame sampling (1 row -> N frame rows): demux the frame
-    container, keep every ``every``-th frame, decode its real PNG
-    dimensions. The classic multimodal explode — output rows carry
-    (media_id, frame_no) so downstream image ops join/partition on
-    them; at scale the container bytes stream through one Arrow batch
-    per task and only sampled frames are materialized."""
-    return df.select("media_id", "payload").mapInPandas(
-        _frame_sample_batch_fn(every),
-        "media_id string, frame_no int, payload binary, "
-        "width int, height int")
 
 
 def svg_metadata(df: DataFrame) -> DataFrame:

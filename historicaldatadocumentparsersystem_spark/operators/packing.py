@@ -26,8 +26,8 @@ window/fold runs within a shard; pick ``n_shards`` so a shard's doc
 rows fit one task's sort buffer (at 100 TB: ~100k shards of ~1 GB).
 
 Token cost = whitespace tokens + 1 EOS (the oracle-portable proxy;
-swap ``textstats.bpe_token_count`` for tokenizer-exact budgets exactly
-as chunking does).
+swap in the BPE counts of ``textstats.bpe_token_stats`` for
+tokenizer-exact budgets, as chunking does).
 """
 
 from __future__ import annotations
@@ -141,18 +141,3 @@ def sequence_pack_greedy(df: DataFrame, seq_len: int = 64,
                                   packed_of, GREEDY_SCHEMA.names)
 
     return prepared.mapInPandas(fold_partition, GREEDY_SCHEMA)
-
-
-def packing_utilization(assign: DataFrame, seq_len: int = 64) -> DataFrame:
-    """Shard-level packing efficiency from a greedy assignment table:
-    sequences used, tokens placed, and utilization in basis points
-    (integer cross-multiply — no floats near the driver hash)."""
-    per_shard = (assign.groupBy("shard")
-                 .agg((F.max("seq_id") + 1).cast("long").alias("n_seqs"),
-                      F.sum("cost").cast("long").alias("n_tokens")))
-    # `div` truncates like DuckDB's `//` on non-negatives (double `/`
-    # then cast would round differently across engines)
-    return per_shard.select(
-        "shard", "n_seqs", "n_tokens",
-        F.expr(f"(n_tokens * 10000) div (n_seqs * {seq_len})")
-        .cast("long").alias("util_bp"))

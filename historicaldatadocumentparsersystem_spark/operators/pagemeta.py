@@ -1007,43 +1007,3 @@ def srcset_best(cands: DataFrame) -> DataFrame:
             .withColumn("_rn", F.row_number().over(w))
             .where(F.col("_rn") == 1)
             .select("url", "img_url", "kind", "val"))
-
-
-def refresh_targets(df: DataFrame, content_col: str = "refresh",
-                    url_col: str = "url") -> DataFrame:
-    """(url, refresh content attribute) -> (url, delay_s, target)
-    rows via the HTML shared-declarative-refresh subset in
-    ``extractor/metax.parse_refresh``. Malformed values drop (F5);
-    target is NULL for pure self-reloads. Map-only Arrow pass."""
-    from ..extractor.metax import parse_refresh
-
-    def rows_of(url, raw):
-        parsed = parse_refresh(raw)
-        if parsed is not None:
-            yield (url, *parsed)
-
-    return flat_map(df, [url_col, content_col],
-                    "url string, delay_s int, target string", rows_of)
-
-
-def refresh_redirects(targets: DataFrame,
-                      max_delay_s: int = 5) -> DataFrame:
-    """Parsed refresh rows -> the soft-redirect edges a redirect
-    graph misses: a target, a short delay, and not a self-reload.
-    ``same_host`` is the cloaking/doorway signal (cross-host instant
-    refreshes are classic spam); relative targets resolve against
-    the page, hence same-host by definition. Pure codegen filter —
-    no shuffle."""
-    def host(col):
-        return F.split(F.split(col, "://").getItem(1), "/").getItem(0)
-
-    th = F.when(F.col("target").startswith("http://")
-                | F.col("target").startswith("https://"),
-                host(F.col("target")))
-    return (targets
-            .where(F.col("target").isNotNull()
-                   & (F.col("delay_s") <= F.lit(int(max_delay_s)))
-                   & (F.col("target") != F.col("url")))
-            .select("url", "target", "delay_s",
-                    (th.isNull() | (th == host(F.col("url"))))
-                    .alias("same_host")))

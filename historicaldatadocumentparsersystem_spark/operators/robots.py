@@ -8,10 +8,8 @@ resolution order — expressed entirely in JVM column operations so the
 DuckDB twin is exact.
 
 Two layers:
-- ``parse_robots``: Spark-free parser for robots.txt bytes ->
-  (rule, prefix) rows for a given user-agent (most-specific agent
-  group wins, '*' fallback), usable inside an Arrow batch when rules
-  arrive as crawled payloads;
+- ``parse_crawl_delay``: Spark-free parser for a robots.txt group's
+  Crawl-delay (most-specific agent group wins, '*' fallback);
 - ``robots_filter``: documents x rule table -> allowed/blocked, via
   host equi-join + path-prefix match + longest-match window over the
   (bounded: rules per host) matched set.
@@ -30,30 +28,17 @@ from pyspark.sql import functions as F
 from .webtext import url_host
 
 
-def parse_robots(payload: bytes | str, agent: str = "*"
-                 ) -> list[tuple[str, str]]:
-    """(rule, path_prefix) rows for ``agent`` from one robots.txt.
-
-    Group selection per RFC 9309: the group whose User-agent line
-    best matches ``agent`` (exact, case-insensitive) wins; otherwise
-    the '*' group. Allow/Disallow lines keep file order; empty
-    Disallow ("allow all") is dropped. Never raises.
-    """
-    groups, delays = _parse_groups(payload)
-    return groups.get(agent.lower(), groups.get("*", []))
-
-
-def _parse_groups(payload: bytes | str) -> tuple[
-        dict[str, list[tuple[str, str]]], dict[str, int]]:
-    """Shared robots.txt group walk: per-agent (rule, prefix) lists
-    plus per-agent Crawl-delay in MILLISECONDS (parsed host-side in
-    Python — no cross-engine float math ever touches it; last
-    directive in a group wins, invalid values ignored)."""
+def _parse_groups(payload: bytes | str) -> tuple[set[str], dict[str, int]]:
+    """robots.txt group walk: the agents that head a group, plus
+    per-agent Crawl-delay in MILLISECONDS (parsed host-side in Python —
+    no cross-engine float math ever touches it; last directive in a
+    group wins, invalid values ignored). An Allow/Disallow line only
+    closes the group's agent list."""
     if isinstance(payload, (bytes, bytearray, memoryview)):
         text = bytes(payload).decode("utf-8", errors="replace")
     else:
         text = payload or ""
-    groups: dict[str, list[tuple[str, str]]] = {}
+    agents: set[str] = set()
     delays: dict[str, int] = {}
     current: list[str] = []
     seen_rule = False
@@ -69,17 +54,9 @@ def _parse_groups(payload: bytes | str) -> tuple[
                 current = []
                 seen_rule = False
             current.append(val.lower())
-            for a in current:
-                groups.setdefault(a, [])
+            agents.update(current)
         elif key in ("allow", "disallow"):
             seen_rule = True
-            if not current:
-                continue
-            if key == "disallow" and not val:
-                continue
-            if val:
-                for a in current:
-                    groups.setdefault(a, []).append((key, val))
         elif key == "crawl-delay":
             seen_rule = True
             try:
@@ -89,18 +66,18 @@ def _parse_groups(payload: bytes | str) -> tuple[
             if ms >= 0:
                 for a in current:
                     delays[a] = ms
-    return groups, delays
+    return agents, delays
 
 
 def parse_crawl_delay(payload: bytes | str, agent: str = "*"
                       ) -> int | None:
-    """The selected group's Crawl-delay in milliseconds (same
-    most-specific-agent-else-'*' group selection as ``parse_robots``),
+    """The selected group's Crawl-delay in milliseconds (RFC 9309
+    group selection: the agent's own group, else '*'),
     or None when the group declares none. Non-standard but widely
     published; a polite recrawler honors it when present."""
-    groups, delays = _parse_groups(payload)
+    agents, delays = _parse_groups(payload)
     a = agent.lower()
-    chosen = a if a in groups else "*"
+    chosen = a if a in agents else "*"
     return delays.get(chosen)
 
 
@@ -135,28 +112,3 @@ def robots_filter(docs: DataFrame, rules: DataFrame,
                     F.when(F.col("hit") & (F.col("rule") == "disallow"),
                            F.lit(0)).otherwise(F.lit(1))
                     .cast("long").alias("allowed")))
-
-
-def robots_sitemaps(payload: bytes | str) -> list[str]:
-    """``Sitemap:`` lines of one robots.txt — the discovery bridge:
-    robots points at sitemaps (sitemaps.org autodiscovery), sitemaps
-    feed ``sources.read_sitemap_urls`` -> ``webtext.
-    frontier_candidates``. Sitemap lines are GLOBAL (agent-
-    independent, unlike allow/disallow groups), absolute URLs, kept
-    in file order and deduplicated exactly. Never raises.
-    """
-    if isinstance(payload, (bytes, bytearray, memoryview)):
-        text = bytes(payload).decode("utf-8", errors="replace")
-    else:
-        text = payload or ""
-    out: list[str] = []
-    for raw in text.splitlines():
-        line = raw.split("#", 1)[0].strip()
-        if ":" not in line:
-            continue
-        key, val = line.split(":", 1)
-        if key.strip().lower() == "sitemap":
-            val = val.strip()
-            if val and val not in out:
-                out.append(val)
-    return out

@@ -149,16 +149,6 @@ def cms_table(df: DataFrame, col: str = "term", d: int = 4,
             .agg(F.sum("__w").cast("long").alias("cnt")))
 
 
-def cms_merge(*sketches: DataFrame) -> DataFrame:
-    """Combine shard/crawl sketches built with identical (d, w, seed):
-    cellwise sum — the mergeability that makes CMS a distributed
-    counter (each executor/shard sketches locally, cells reduce)."""
-    from functools import reduce
-    u = reduce(lambda a, b: a.unionByName(b), sketches)
-    return (u.groupBy("row", "cell")
-            .agg(F.sum("cnt").cast("long").alias("cnt")))
-
-
 def cms_estimate(sketch: DataFrame, probes: DataFrame,
                  col: str = "term", d: int = 4, w: int = 256,
                  seed: int = 42) -> DataFrame:
@@ -207,37 +197,3 @@ def hll_calibration(df: DataFrame, col: str = "url",
             .select("exact", "estimate", err.alias("err_ratio"),
                     F.lit(bound).alias("bound_ratio"),
                     (err <= 3 * F.lit(bound)).alias("within_3_sigma")))
-
-
-def cms_calibration(df: DataFrame, probes: DataFrame,
-                    col: str = "term", d: int = 4, w: int = 256,
-                    seed: int = 42) -> DataFrame:
-    """Sketch QA for Count-Min — per probed value: the sketch
-    estimate vs the EXACT frequency: (value, exact, est, overcount,
-    ok). CMS guarantees est >= exact always (one-sided error) and
-    E[overcount] <= e/w * N; ``ok`` pins the structural guarantee
-    (overcount >= 0) — a negative overcount means the hash family or
-    the merge is broken, the thing this job exists to catch.
-
-    Like the other calibrations, sampled by design: the exact side
-    is one filtered count over the probe set.
-
-    Scale: exact = semi-join + groupBy on the probe keys (probe set
-    broadcast); estimate side never touches the corpus (probes the
-    <= d*w-cell sketch).
-    """
-    sketch = cms_table(df, col, d, w, seed)
-    est = cms_estimate(sketch, probes, col, d, w, seed)
-    exact = (df.join(F.broadcast(probes.select(col)), col, "left_semi")
-             .groupBy(col)
-             .agg(F.count("*").cast("long").alias("exact")))
-    return (probes.select(col).join(exact, col, "left")
-            .join(est, col, "left")
-            .select(col,
-                    F.coalesce("exact", F.lit(0)).cast("long")
-                    .alias("exact"),
-                    F.coalesce("est", F.lit(0)).cast("long")
-                    .alias("est"))
-            .withColumn("overcount",
-                        (F.col("est") - F.col("exact")).cast("long"))
-            .withColumn("ok", F.col("overcount") >= 0))

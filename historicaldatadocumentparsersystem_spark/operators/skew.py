@@ -38,21 +38,6 @@ def salted_key(salt_src_col: str, num_salts: int = 16) -> Column:
     return F.pmod(F.xxhash64(F.col(salt_src_col)), F.lit(num_salts))
 
 
-def repartition_by_host_salted(df: DataFrame, num_partitions: int,
-                               url_col: str = "url",
-                               num_salts: int = 16) -> DataFrame:
-    """Partition by composite (host, salt) — the custom piece SURVEY
-    §4.2 calls out: host-affine placement (cache locality, per-host
-    politeness) WITHOUT letting a hot host own a partition.
-
-    salt = pmod(xxhash64(url), num_salts), so a host's rows spread over
-    up to num_salts partitions while rows of one (host, salt) stay
-    together. Deterministic — no RNG."""
-    return df.repartition(
-        num_partitions,
-        F.xxhash64(host_of(url_col), salted_key(url_col, num_salts)))
-
-
 def cap_per_host(df: DataFrame, url_col: str = "url",
                  cap: int = 2) -> DataFrame:
     """Domain cap: keep at most ``cap`` documents per host — the

@@ -74,43 +74,12 @@ def token_count(col: str | Column = "text") -> Column:
     return F.size(tokens(col))
 
 
-def bpe_token_count(col: str | Column = "text") -> Column:
-    """Count of BPE-ish regex tokens (letters runs / digit runs / punct)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.size(F.regexp_extract_all(c, F.lit(_BPE_RE), F.lit(0)))
-
-
 def stopword_ratio(col: str | Column = "text",
                    lang: str = "en") -> Column:
     toks = tokens(col)
     sw = F.size(F.filter(
         toks, lambda t: F.lower(t).isin(*STOPWORDS[lang])))
     return sw / F.greatest(F.size(toks), F.lit(1))
-
-
-def punct_ratio(col: str | Column = "text") -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    n_punct = F.length(c) - F.length(F.regexp_replace(c, r"[^\w\s]", ""))
-    return n_punct / F.greatest(F.length(c), F.lit(1))
-
-
-def mean_word_len(col: str | Column = "text") -> Column:
-    toks = tokens(col)
-    total = F.aggregate(toks, F.lit(0).cast("long"),
-                        lambda acc, t: acc + F.length(t))
-    return total / F.greatest(F.size(toks), F.lit(1))
-
-
-def quality_score(col: str | Column = "text") -> Column:
-    """Deterministic [0,1] quality heuristic: length band + low punct +
-    sane mean word length (gopher-rules-style signals)."""
-    c = F.col(col) if isinstance(col, str) else col
-    len_ok = (F.length(c) >= 100) & (F.length(c) <= 20000)
-    punct_ok = punct_ratio(c) < 0.2
-    mwl = mean_word_len(c)
-    mwl_ok = (mwl >= 3) & (mwl <= 12)
-    return ((len_ok.cast("double") + punct_ok.cast("double")
-             + mwl_ok.cast("double")) / F.lit(3.0))
 
 
 def lang_id(col: str | Column = "text") -> Column:
@@ -282,15 +251,6 @@ def bpe_token_stats(df: DataFrame, text_col: str = "text",
             })
 
     return df.select(id_col, text_col).mapInPandas(batch, schema)
-
-
-def fingerprint(col: str | Column = "text", width: int = 16) -> Column:
-    """Document fingerprint: first ``width`` hex chars of md5 of the
-    whitespace-normalized text (rolling-hash analog, portable to any
-    SQL engine for oracle checks)."""
-    c = F.col(col) if isinstance(col, str) else col
-    normalized = F.regexp_replace(F.trim(c), r"\s+", " ")
-    return F.substring(F.md5(normalized), 1, width)
 
 
 def text_profile(df: DataFrame, text_col: str = "text",

@@ -1025,19 +1025,19 @@ def recrawl_priority(snapshots: DataFrame, url_col: str = "url",
 def cdx_fetch_plan(cdx: DataFrame,
                    mimes: tuple[str, ...] = ("text/html",),
                    statuses: tuple[int, ...] = (200,)) -> DataFrame:
-    """Fetch planning over the CDX capture index (``sources.
-    read_cdx``): gate captures by status/mime, then collapse every
-    digest-identical group to ONE record locator — exact payload
-    dedup BEFORE any WARC byte is read. The production pre-fetch
-    move: Common Crawl crawls re-capture unchanged pages constantly,
-    so digest dedup at the index prunes archive IO by the duplicate
-    ratio (bytes_saved accounts for it per row).
+    """Fetch planning over the CDX capture index (rows of
+    ``extractor/cdxx.parse_cdxj``): gate captures by status/mime,
+    then collapse every digest-identical group to ONE record locator
+    — exact payload dedup BEFORE any WARC byte is read. The production
+    pre-fetch move: Common Crawl crawls re-capture unchanged pages
+    constantly, so digest dedup at the index prunes archive IO by the
+    duplicate ratio (bytes_saved accounts for it per row).
 
     The kept copy is deterministic: minimum (ts, urlkey, filename,
     offset) — a total order, so no tie ambiguity cross-engine.
     Output: (digest, url, urlkey, ts, filename, offset, length,
-    n_copies, bytes_saved) — (filename, offset, length) feed
-    ``sources.read_warc_members`` directly.
+    n_copies, bytes_saved) — (filename, offset, length) address each
+    kept member for a ranged read.
 
     Scale: one filter (pushed to the index scan) + ONE map-side-
     combinable groupBy on digest (hash keys, uniform); the aggregate
@@ -1069,9 +1069,8 @@ def frontier_candidates(discovered: DataFrame, captured: DataFrame,
                                                       "daily"),
                         hot_bp: int = 7000) -> DataFrame:
     """Crawl-frontier planning: URLs discovered via sitemaps/feeds
-    (``sources.read_sitemap_urls`` / ``read_feed_entries``) that the
-    crawl has NEVER captured — an anti-join on SURT urlkey against
-    the CDX capture index, so ``http://www.a.com/p?b=1&a=2`` and
+    that the crawl has NEVER captured — an anti-join on SURT urlkey
+    against the CDX capture index, so ``http://www.a.com/p?b=1&a=2`` and
     ``https://a.com/p?a=2&b=1`` are recognized as the same page.
 
     Each candidate gets a deterministic priority bucket from the
@@ -1281,9 +1280,9 @@ def resolve_revisits(revisits: DataFrame, plan: DataFrame,
     """Resolve WARC revisit records (bodyless digest pointers —
     production archives' write-time dedup) against a fetch plan
     (``cdx_fetch_plan`` output): every revisit URL gets the record
-    locator of the stored canonical copy of its payload, so
-    ``sources.read_warc_members`` can serve the revisit's content
-    without the archive ever storing the duplicate bytes.
+    locator of the stored canonical copy of its payload, so a ranged
+    read can serve the revisit's content without the archive ever
+    storing the duplicate bytes.
 
     Output: (url, warc_ts, digest, filename, offset, length,
     canonical_url). Revisits whose digest is not in the plan resolve
@@ -1317,7 +1316,7 @@ SOFT404_PHRASES = ("not found", "access denied", "forbidden",
 
 def _soft404_exprs(text_col: str, max_error_words: int):
     """(has_404, has_error_phrase, n_words, is_short, soft404) column
-    expressions shared by the gate operator and soft404_keep."""
+    expressions of the gate operator."""
     low = F.lower(F.col(text_col))
     has_404 = low.contains("404")
     has_phrase = None
@@ -1328,13 +1327,6 @@ def _soft404_exprs(text_col: str, max_error_words: int):
     is_short = n_words <= F.lit(max_error_words)
     soft404 = (has_404 & has_phrase) | (has_phrase & is_short)
     return has_404, has_phrase, n_words, is_short, soft404
-
-
-def soft404_keep(text_col: str = "text",
-                 max_error_words: int = 30) -> Column:
-    """Join-free keep predicate (the composition form): push straight
-    into a ``.where`` so the pipeline pays zero extra exchanges."""
-    return ~_soft404_exprs(text_col, max_error_words)[4]
 
 
 def header_robots_gate(df: DataFrame, xr_col: str = "x_robots",
@@ -1427,8 +1419,7 @@ def _phrase_hits(low, phrases) -> Column:
 
 def _interstitial_exprs(text_col: str, max_shell_words: int):
     """(consent_hits, paywall_hits, n_words, is_short, consent_shell,
-    paywalled) column expressions shared by the gate operator and
-    interstitial_keep."""
+    paywalled) column expressions of the gate operator."""
     low = F.lower(F.col(text_col))
     consent_hits = _phrase_hits(low, CONSENT_PHRASES)
     paywall_hits = _phrase_hits(low, PAYWALL_PHRASES)
@@ -1436,15 +1427,6 @@ def _interstitial_exprs(text_col: str, max_shell_words: int):
     is_short = n_words <= F.lit(max_shell_words)
     return (consent_hits, paywall_hits, n_words, is_short,
             (consent_hits >= 2) & is_short, paywall_hits >= 1)
-
-
-def interstitial_keep(text_col: str = "text",
-                      max_shell_words: int = 80) -> Column:
-    """Join-free keep predicate (the composition form): push straight
-    into a ``.where`` so the pipeline pays zero extra exchanges."""
-    _, _, _, is_short, consent_shell, paywalled = _interstitial_exprs(
-        text_col, max_shell_words)
-    return ~consent_shell & ~(paywalled & is_short)
 
 
 def interstitial_gate(df: DataFrame, text_col: str = "text",
@@ -1659,42 +1641,6 @@ def fetch_schedule_delayed(candidates: DataFrame, delays: DataFrame,
 
 
 # --- mailing-list reply hygiene ----------------------------------------------
-
-def strip_quoted_reply(df: DataFrame, text_col: str = "text",
-                       id_cols: tuple[str, ...] = ("url", "msg_idx")
-                       ) -> DataFrame:
-    """Mailing-list body cleaning (the mbox-source counterpart of the
-    C4 line filter): drop ``>``-quoted lines and ``On ... wrote:``
-    attribution lines, and cut everything from the first RFC 3676
-    signature marker (a line that is exactly ``--`` or ``-- ``).
-
-    Output keeps the id columns plus ``clean_text`` (kept lines
-    rejoined with "\\n"), ``n_lines`` / ``n_quoted`` / ``kept_lines``
-    and ``has_signature``.  Map-only, all JVM built-ins — the DuckDB
-    twin re-expresses the same list pipeline, a true dual-engine
-    check (no golden in the middle).
-
-    Scale: zero shuffles; at 100 TB this composes into the export
-    plan like redaction does.
-    """
-    lines = F.split(F.col(text_col), "\n")
-    # 1-based position of the first signature marker; 0 = none
-    sig_pos = F.array_position(
-        F.transform(lines, lambda x: (x == "--") | (x == "-- ")),
-        F.lit(True))
-    body = F.when(sig_pos > 0,
-                  F.slice(lines, 1, (sig_pos - 1).cast("int"))
-                  ).otherwise(lines)
-    kept = F.filter(body, lambda x: ~(x.startswith(">")
-                                      | x.rlike("^On .* wrote:$")))
-    quoted = F.filter(lines, lambda x: x.startswith(">"))
-    return df.select(
-        *id_cols,
-        F.array_join(kept, "\n").alias("clean_text"),
-        F.size(lines).cast("long").alias("n_lines"),
-        F.size(quoted).cast("long").alias("n_quoted"),
-        F.size(kept).cast("long").alias("kept_lines"),
-        (sig_pos > 0).alias("has_signature"))
 
 
 def redirect_chains(captures: DataFrame, max_hops: int = 8

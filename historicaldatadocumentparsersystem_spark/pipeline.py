@@ -139,23 +139,21 @@ def with_part_id(df: DataFrame, num_buckets: int) -> DataFrame:
                           F.lit(num_buckets)).cast("int"))
 
 
-def _bucketed(docs: DataFrame, num_buckets: int, shuffle: bool) -> DataFrame:
-    df = with_part_id(
-        docs.select("url", "warc_ts", "lang", "html", "text"), num_buckets)
-    if shuffle:
-        df = df.repartition(num_buckets, F.xxhash64(F.col("url")))
-    return df.select(*_IN_COLS)
+def _bucketed(docs: DataFrame, num_buckets: int) -> DataFrame:
+    return (with_part_id(docs.select("url", "warc_ts", "lang", "html",
+                                     "text"), num_buckets)
+            .repartition(num_buckets, F.xxhash64(F.col("url")))
+            .select(*_IN_COLS))
 
 
-def extract_df(docs: DataFrame, num_buckets: int = 64,
-               shuffle: bool = True) -> DataFrame:
+def extract_df(docs: DataFrame, num_buckets: int = 64) -> DataFrame:
     """documents DataFrame -> extracted DataFrame (lazy; no side effects).
 
     Narrow select FIRST so column pruning reaches the scan, then the one
     explicit shuffle on xxhash64(url) (north rule), which leaves bucket
     k in partition k, then the fused Arrow-batched extraction stage.
     """
-    return _bucketed(docs, num_buckets, shuffle).mapInPandas(
+    return _bucketed(docs, num_buckets).mapInPandas(
         extract_batch, EXTRACTED_SCHEMA)
 
 
@@ -171,38 +169,6 @@ LINEAGE_SCHEMA = StructType([
     StructField("wall_ms", LongType(), False),
     StructField("status", StringType(), False),
 ])
-
-
-def lineage_from_extracted(extracted: DataFrame, run_id: str,
-                           snapshot_id: str, wall_ms: int) -> DataFrame:
-    """Per-partition lineage metrics (FIXTURES.md §3) from extracted rows.
-
-    Analog of the reference's document registry INSERTs
-    (``pg_vector_db.py:364-409``) with the status enum of
-    ``utils/document.py:29-35``; status 'ContentExtracted' marks a
-    bucket done for resume.
-
-    A bucket with zero rows in the given frame gets NO lineage row and
-    so stays not-done: an empty bucket in this run's input is
-    indistinguishable from a partial input (a killed job resumed with
-    a fuller snapshot must still process it), so it is retried — a
-    cheap no-op when genuinely empty — rather than marked done.
-    """
-    agg = (extracted
-           .groupBy(F.col("part_id").alias("partition_id"))
-           .agg(F.count("*").alias("input_rows"),
-                F.count("*").alias("output_rows"),
-                F.sum("failed").cast("long").alias("failed_rows"),
-                F.sum("bytes_in").alias("bytes_in"),
-                F.sum(F.length("extracted_text")).cast("long")
-                 .alias("chars_out")))
-    return (agg
-            .select(F.lit(run_id).alias("run_id"),
-                    F.lit(snapshot_id).alias("snapshot_id"),
-                    "partition_id", "input_rows", "output_rows",
-                    "failed_rows", "bytes_in", "chars_out",
-                    F.lit(wall_ms).cast("long").alias("wall_ms"),
-                    F.lit("ContentExtracted").alias("status")))
 
 
 def _per_bucket(todo: list[int], **metrics: str) -> list:
@@ -264,7 +230,7 @@ def run_extraction(spark: SparkSession, docs: DataFrame, out_dir: str,
                     .where(F.col("part_id").isin(todo_parts)))
         seen_in, seen_out = Observation(), Observation()
         extracted = (
-            _bucketed(docs, num_buckets, shuffle=True)
+            _bucketed(docs, num_buckets)
             .observe(seen_in, *_per_bucket(todo_parts, input_rows="1"))
             .mapInPandas(extract_batch, EXTRACTED_SCHEMA)
             .observe(seen_out, *_per_bucket(

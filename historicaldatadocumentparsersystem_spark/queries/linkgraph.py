@@ -172,8 +172,7 @@ def _trustrank_sql(iters: int, n_seeds: int = 4) -> str:
 # documents table (SPARSE ring: only doc_id % 17 == 0 docs emit an
 # edge, offset by doc_id * 31, so in/out-degrees genuinely vary —
 # a dense derivation yields the complete graph and uniform ranks)
-# so the whole query is SQL-expressible; real crawls feed
-# host_edges(extract_links_df(...)) instead (pytest-covered)
+# so the whole query is SQL-expressible
 def _synth_host_edges(spark, sf_dir):
     from pyspark.sql import Window
     docs = _t(spark, sf_dir, "documents")

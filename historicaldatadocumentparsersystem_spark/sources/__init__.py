@@ -2,8 +2,7 @@
 
 Reference scan/source inventory (SURVEY.md §2.1): the directory walk S1
 becomes a table scan; format dispatch happens per row by payload sniff
-(extractor.sniff), not per file extension. S5 (CSV rows regrouped 10 per
-chunk, ``unstructured_chunker.py:65-78``) is re-expressed relationally.
+(extractor.sniff), not per file extension.
 
 Reader contract. Each per-format reader turns its input rows into
 structured records with one :func:`..flatmap.flat_map` pass:
@@ -16,16 +15,11 @@ structured records with one :func:`..flatmap.flat_map` pass:
 - the helper types the output from that DDL (``int``/``bigint``/
   ``boolean`` as nullable pandas dtypes) and owns F5: a row whose parse
   raises yields no rows, and the rest of its batch is kept.
-
-``read_warc_members`` (one file handle across rows) and the sitemap/feed
-batch parsers (shared with the streaming discovery source) keep their
-own ``mapInPandas`` bodies.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 from ..flatmap import flat_map
 
@@ -44,42 +38,6 @@ def read_documents(spark: SparkSession, path: str) -> DataFrame:
     if missing:
         raise ValueError(f"documents table missing columns: {missing}")
     return df
-
-
-def read_csv_chunks(spark: SparkSession, path: str,
-                    rows_per_chunk: int = 10, **csv_opts) -> DataFrame:
-    """S5: CSV rows regrouped ``rows_per_chunk`` rows per chunk
-    (``unstructured_chunker.py:65-78``: CSVLoader rows joined 10 at a
-    time into one text chunk).
-
-    Output: (file, chunk_id, text) where text is the newline-join of the
-    chunk's rows in row order. Row order within a file follows the CSV's
-    physical order via the input file + a monotonic position.
-    """
-    raw = (spark.read.options(**csv_opts).csv(path)
-           .withColumn("_file", F.input_file_name())
-           .withColumn("_pos", F.monotonically_increasing_id()))
-    row_text = F.concat_ws(",", *[c for c in raw.columns
-                                  if c not in ("_file", "_pos")])
-    w = Window.partitionBy("_file").orderBy("_pos")
-    rows = (raw.select("_file", "_pos", row_text.alias("_row"))
-            .withColumn("_rn", F.row_number().over(w) - 1)
-            .withColumn("chunk_id",
-                        (F.col("_rn") / rows_per_chunk).cast("int")))
-    return (rows.groupBy(F.col("_file").alias("file"), "chunk_id")
-            .agg(F.array_join(
-                F.transform(
-                    F.sort_array(F.collect_list(
-                        F.struct(F.col("_rn").alias("o"),
-                                 F.col("_row").alias("t")))),
-                    lambda s: s.getField("t")), "\n").alias("text")))
-
-
-def read_text_documents(spark: SparkSession, path: str) -> DataFrame:
-    """S4: plain-text files, one row per file (wholetext)."""
-    return (spark.read.text(path, wholetext=True)
-            .withColumn("file", F.input_file_name())
-            .withColumnRenamed("value", "text"))
 
 
 PPTX_ELEMENTS_DDL = ("url string, slide int, shape int, para int, "
@@ -170,8 +128,7 @@ def read_wacz_captures(df: DataFrame, url_col: str = "url",
     (``extractor/waczx.py`` composes the existing cdxx/warcx
     parsers). This reader surfaces the INDEX view only — at 100 TB
     the CDX rows are ~1/200 the archive bytes, so planning queries
-    (dedup, fetch gating) never decompress a WARC member; the fetch
-    path resolves individual locators via ``waczx.fetch_capture``.
+    (dedup, fetch gating) never decompress a WARC member.
     Map-only 1->N; non-zip payloads yield no rows (F5)."""
     from ..extractor.waczx import parse_wacz
 
@@ -329,30 +286,6 @@ def read_epub_chapters(df: DataFrame, url_col: str = "url",
                     rows_of)
 
 
-def read_warc_documents(spark: SparkSession, path: str) -> DataFrame:
-    """WARC shards -> the documents table (url, warc_ts, html, text,
-    lang): binaryFile scan (one row per shard) + Arrow batch over the
-    Spark-free ``extractor.warcx.parse_warc``; response bodies land in
-    ``html`` for the payload-sniffing extraction stage, ``text``/
-    ``lang`` stay null (no fallback, no crawl-provided language).
-
-    Scale: Common Crawl ships ~64k shards per crawl — per-FILE
-    parallelism is the archive's own unit of work, and shard bytes
-    stay inside the executor that scanned them (no shuffle between
-    scan and parse). Each task holds one shard in memory (~1 GB for
-    production CC; size executors or split shards accordingly).
-    Malformed/truncated shards degrade to fewer rows (F5 contract).
-    """
-    from ..extractor.warcx import parse_warc
-
-    def rows_of(blob):
-        for rec in parse_warc(bytes(blob)):
-            yield rec["url"], rec["warc_ts"], rec["body"], None, None
-
-    return flat_map(spark.read.format("binaryFile").load(path),
-                    ["content"], DOCUMENTS_DDL, rows_of)
-
-
 WARC_CAPTURES_DDL = ("url string, warc_ts timestamp, status int, "
                      "content_type string, x_robots string, "
                      "location string, content_encoding string, "
@@ -360,30 +293,17 @@ WARC_CAPTURES_DDL = ("url string, warc_ts timestamp, status int, "
                      "n_bytes long")
 
 
-def read_warc_captures(spark: SparkSession, path: str) -> DataFrame:
-    """WARC shards -> a metadata-only capture view: (url, warc_ts,
-    status, content_type, x_robots, location, content_encoding,
-    decoded, sniffed_kind, n_bytes) — bodies are entity bytes
-    (chunked framing and gzip/deflate codings undone by parse_warc;
-    ``decoded`` False marks captures left as stored). The payload is
-    magic-byte-sniffed (``extractor.sniff.sniff_kind``) IN the same
-    Arrow pass and then dropped — the served-vs-actual comparison
-    input for ``webtext.content_type_mismatch`` without ever
-    shuffling body bytes (output rows are ~100 B regardless of
-    capture size).
-
-    Scale: identical shape to ``read_warc_documents`` — per-shard
-    binaryFile parallelism, bodies die in the task that read them.
-    """
-    return warc_captures_from_blobs(
-        spark.read.format("binaryFile").load(path).select("content"))
-
-
 def warc_captures_from_blobs(blobs: DataFrame) -> DataFrame:
-    """The capture view over an in-hand shard column — same Arrow
-    pass as ``read_warc_captures`` minus the binaryFile scan (for
-    shards that arrive via another source, e.g. ranged reads or
-    fixtures). ``blobs`` needs a ``content binary`` column."""
+    """WARC shards (a ``content binary`` column) -> a metadata-only
+    capture view: (url, warc_ts, status, content_type, x_robots,
+    location, content_encoding, decoded, sniffed_kind, n_bytes).
+    Bodies are entity bytes (chunked framing and gzip/deflate codings
+    undone by parse_warc; ``decoded`` False marks captures left as
+    stored). The payload is magic-byte-sniffed
+    (``extractor.sniff.sniff_kind``) IN the same Arrow pass and then
+    dropped — the served-vs-actual comparison input for
+    ``webtext.content_type_mismatch`` without ever shuffling body
+    bytes (output rows are ~100 B regardless of capture size)."""
     from ..extractor.sniff import sniff_kind
     from ..extractor.warcx import parse_warc
 
@@ -398,229 +318,6 @@ def warc_captures_from_blobs(blobs: DataFrame) -> DataFrame:
     return flat_map(blobs, ["content"], WARC_CAPTURES_DDL, rows_of)
 
 
-def read_wet_documents(spark: SparkSession, path: str) -> DataFrame:
-    """WET shards (Common Crawl's pre-extracted plain text) -> the
-    documents table: ``text`` carries the conversion-record payload,
-    ``html`` stays null (there is nothing to extract — WET rows enter
-    the pipeline downstream of the extraction stage, feeding the
-    quality/dedup/curation operators directly).
-
-    Scale: identical shape to ``read_warc_documents`` — per-shard
-    binaryFile parallelism, shard bytes never shuffle, malformed
-    records degrade to fewer rows (F5).
-    """
-    from ..extractor.warcx import parse_wet
-
-    def rows_of(blob):
-        for rec in parse_wet(bytes(blob)):
-            yield rec["url"], rec["warc_ts"], None, rec["text"], None
-
-    return flat_map(spark.read.format("binaryFile").load(path),
-                    ["content"], DOCUMENTS_DDL, rows_of)
-
-
-WAT_LINKS_DDL = ("url string, warc_ts timestamp, title string, "
-                 "link_pos int, path string, href string, anchor string")
-
-
-def read_wat_links(spark: SparkSession, path: str) -> DataFrame:
-    """WAT shards (Common Crawl's per-page metadata JSON) -> the link
-    table (url, warc_ts, title, link_pos, path, href, anchor): one row
-    per outgoing link, 1->N via the Spark-free
-    ``extractor.warcx.parse_wat``. This is the cheap path to the link
-    graph — ``linkgraph.host_edges``/``pagerank_hosts``/
-    ``anchor_text_terms`` consume it directly without ever touching
-    page bodies (WAT shards are ~1/5 the bytes of their WARC parents).
-
-    Pages whose metadata parses but carries no links still emit one
-    row with link_pos = -1 and null href, so URL coverage (for
-    crawl-frontier joins) survives the explode.
-
-    Scale: identical shape to ``read_warc_documents`` — per-shard
-    binaryFile parallelism, shard bytes never shuffle, malformed
-    envelopes degrade to titleless/linkless rows (F5).
-    """
-    from ..extractor.warcx import parse_wat
-
-    def rows_of(blob):
-        for rec in parse_wat(bytes(blob)):
-            head = (rec["url"], rec["warc_ts"], rec["title"])
-            if not rec["links"]:
-                yield head + (-1, None, None, None)
-            for i, lk in enumerate(rec["links"]):
-                yield head + (i, lk["path"], lk["href"], lk["anchor"])
-
-    return flat_map(spark.read.format("binaryFile").load(path),
-                    ["content"], WAT_LINKS_DDL, rows_of)
-
-
-CDX_DDL = ("urlkey string, ts timestamp, url string, mime string, "
-           "status int, digest string, length long, offset long, "
-           "filename string")
-
-
-def read_cdx(spark: SparkSession, path: str) -> DataFrame:
-    """CDX(J) index shards -> the capture-index table (urlkey, ts,
-    url, mime, status, digest, length, offset, filename): one row per
-    capture, via the Spark-free ``extractor.cdxx.parse_cdxj``.
-
-    The index is the crawl's planning surface: ``webtext.
-    cdx_fetch_plan`` gates/dedups over THESE rows and only then does
-    ``read_warc_members`` touch WARC bytes — at 100 TB of WARC the
-    index is ~1/200 the bytes, so every query answered here is a
-    ~200x IO saving over scanning the archive.
-
-    Scale: identical shape to ``read_warc_documents`` — per-shard
-    binaryFile parallelism, shard bytes never shuffle, malformed
-    lines degrade to fewer rows (F5).
-    """
-    from ..extractor.cdxx import parse_cdxj
-
-    cols = [f.split()[0] for f in CDX_DDL.split(", ")]
-
-    def rows_of(blob):
-        for rec in parse_cdxj(bytes(blob)):
-            yield tuple(rec[c] for c in cols)
-
-    return flat_map(spark.read.format("binaryFile").load(path),
-                    ["content"], CDX_DDL, rows_of)
-
-
-WARC_MEMBER_DDL = ("url string, warc_ts timestamp, status int, "
-                   "body binary, filename string, offset long")
-
-
-def read_warc_members(locators: DataFrame,
-                      num_partitions: int | None = None) -> DataFrame:
-    """Record-locator fetch: (filename, offset, length) rows — the
-    output of ``webtext.cdx_fetch_plan`` — -> exactly those WARC
-    members, decoded. THE production fetch shape: a plan that kept
-    1% of captures reads 1% of the archive bytes, because each member
-    is sliced at [offset, offset+length) instead of scanning shards.
-
-    Locators are hash-partitioned by filename and sorted by offset
-    within the partition, so one shard is visited by one task and its
-    members are read in ascending-offset order (sequential IO; on
-    object stores each slice is one ranged GET).  The per-batch file
-    handle is reused across consecutive rows of the same shard.
-    Locators whose slice is corrupt/truncated degrade to no row (F5).
-    """
-    import pandas as pd
-
-    from ..extractor.cdxx import read_warc_member
-
-    def fetch(batches):
-        fname, fh = None, None
-        for b in batches:
-            rows = []
-            for fn, off, ln in zip(b["filename"], b["offset"],
-                                   b["length"]):
-                if fn != fname:
-                    if fh is not None:
-                        fh.close()
-                    fname, fh = fn, None
-                    try:
-                        fh = open(fn, "rb")
-                    except OSError:
-                        pass
-                if fh is None:
-                    continue
-                try:
-                    fh.seek(int(off))
-                    chunk = fh.read(int(ln))
-                except OSError:
-                    continue
-                rec = read_warc_member(chunk, 0, len(chunk))
-                if rec is not None:
-                    rows.append((rec["url"], rec["warc_ts"],
-                                 rec["status"], rec["body"], fn,
-                                 int(off)))
-            df = pd.DataFrame(rows, columns=(
-                "url", "warc_ts", "status", "body", "filename",
-                "offset"))
-            df["status"] = df["status"].astype("Int32")
-            yield df
-        if fh is not None:
-            fh.close()
-
-    n = num_partitions or locators.sparkSession.sparkContext.defaultParallelism
-    return (locators.select("filename", "offset", "length")
-            .repartition(n, "filename")
-            .sortWithinPartitions("filename", "offset")
-            .mapInPandas(fetch, WARC_MEMBER_DDL))
-
-
-SITEMAP_DDL = ("kind string, loc string, lastmod timestamp, "
-               "changefreq string, priority_bp int")
-
-
-def _sitemap_parse_batches(batches):
-    """Arrow-batch parser shared by the batch reader and the
-    streaming ``discovery_stream`` (same bytes -> same rows)."""
-    import pandas as pd
-
-    from ..extractor.feedx import parse_sitemap
-
-    cols = ("kind", "loc", "lastmod", "changefreq", "priority_bp")
-    for b in batches:
-        rows = [tuple(rec[c] for c in cols)
-                for blob in b["content"]
-                for rec in parse_sitemap(bytes(blob))]
-        df = pd.DataFrame(rows, columns=cols)
-        df["priority_bp"] = df["priority_bp"].astype("Int32")
-        yield df
-
-
-def read_sitemap_urls(spark: SparkSession, path: str) -> DataFrame:
-    """Sitemap documents (urlset or sitemapindex, plain or .gz) ->
-    frontier rows (kind, loc, lastmod, changefreq, priority_bp) via
-    the Spark-free ``extractor.feedx.parse_sitemap``. kind='sitemap'
-    rows are index pointers (the caller recurses by globbing those
-    paths next); kind='url' rows feed ``webtext.frontier_candidates``.
-
-    Scale: per-file binaryFile parallelism (a large site ships
-    thousands of 50k-url sitemap shards), no shuffle between scan and
-    parse; malformed XML degrades to fewer rows (F5).
-    """
-    return (spark.read.format("binaryFile")
-            .load(path)
-            .select("content")
-            .mapInPandas(_sitemap_parse_batches, SITEMAP_DDL))
-
-
-FEED_DDL = "feed_kind string, url string, title string, pub_ts timestamp"
-
-
-def _feed_parse_batches(batches):
-    """Arrow-batch parser shared by the batch reader and the
-    streaming ``discovery_stream(source_format="feed")``."""
-    import pandas as pd
-
-    from ..extractor.feedx import parse_feed
-
-    cols = ("feed_kind", "url", "title", "pub_ts")
-    for b in batches:
-        rows = [tuple(rec[c] for c in cols)
-                for blob in b["content"]
-                for rec in parse_feed(bytes(blob))]
-        yield pd.DataFrame(rows, columns=cols)
-
-
-def read_feed_entries(spark: SparkSession, path: str) -> DataFrame:
-    """RSS 2.0 / Atom feeds -> frontier rows (feed_kind, url, title,
-    pub_ts) via the Spark-free ``extractor.feedx.parse_feed`` — the
-    freshness-driven complement of sitemaps (feeds surface NEW urls
-    minutes after publication; sitemaps enumerate the whole site).
-
-    Scale: identical shape to ``read_sitemap_urls`` — per-file
-    parallelism, no shuffle, malformed feeds degrade (F5).
-    """
-    return (spark.read.format("binaryFile")
-            .load(path)
-            .select("content")
-            .mapInPandas(_feed_parse_batches, FEED_DDL))
-
-
 def arc_documents_from_blobs(blobs: DataFrame) -> DataFrame:
     """ARC v1 shards (a ``content binary`` column) -> the documents
     table (url, warc_ts, html, text, lang) — the pre-2013 Common
@@ -628,8 +325,7 @@ def arc_documents_from_blobs(blobs: DataFrame) -> DataFrame:
     response bodies land in ``html`` (entity bytes — chunked/gzip
     codings undone by ``extractor.warcx.parse_arc``); non-http
     records (dns:, filedesc:) are skipped; ``text``/``lang`` stay
-    null. Same scale shape as read_warc_documents: shard bytes never
-    leave the task that scanned them."""
+    null. Shard bytes never leave the task that scanned them."""
     from ..extractor.warcx import parse_arc
 
     def rows_of(blob):
@@ -638,14 +334,6 @@ def arc_documents_from_blobs(blobs: DataFrame) -> DataFrame:
                 yield rec["url"], rec["warc_ts"], rec["body"], None, None
 
     return flat_map(blobs, ["content"], DOCUMENTS_DDL, rows_of)
-
-
-def read_arc_documents(spark: SparkSession, path: str) -> DataFrame:
-    """ARC shards on disk -> the documents table; binaryFile scan
-    (one row per shard, per-FILE parallelism — the archive's own unit
-    of work) + the Arrow pass of ``arc_documents_from_blobs``."""
-    return arc_documents_from_blobs(
-        spark.read.format("binaryFile").load(path).select("content"))
 
 
 CFB_DDL = (

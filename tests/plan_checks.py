@@ -1,4 +1,12 @@
-"""Plan-shape assertions over df.explain output."""
+"""Plan-shape assertions over df.explain output (SURVEY.md §4
+discipline).
+
+The reference has no optimizer (SURVEY §4.1) — ours is Catalyst, and
+these helpers make plan *shape* testable: the flagship must stay
+"scan -> one exchange -> MapInPandas", scans must prune columns, small
+dimension joins must broadcast. tests/test_plans.py enforces this so a
+regression that adds a shuffle or widens a scan fails CI.
+"""
 
 from __future__ import annotations
 

@@ -3,6 +3,7 @@ its mapInPandas operator and the pair/provider compositions."""
 
 import pyarrow.parquet as pq
 
+import synth_inputs
 from historicaldatadocumentparsersystem_spark import fixtures
 from historicaldatadocumentparsersystem_spark.extractor import avx
 from historicaldatadocumentparsersystem_spark.operators import pagemeta
@@ -99,7 +100,7 @@ def test_caption_title_and_in_link():
 def test_malformed_never_raises():
     import random
     rng = random.Random("avx-fuzz")
-    pages = fixtures.adversarial_html_pages(100)
+    pages = synth_inputs.adversarial_html_pages(100)
     pages += [bytes(rng.randrange(256) for _ in range(rng.randrange(300)))
               for _ in range(100)]
     pages += [b"<video", b"<video><source src=", b"<iframe>", b""]

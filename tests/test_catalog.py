@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 
 from historicaldatadocumentparsersystem_spark import fixtures, pipeline
 from historicaldatadocumentparsersystem_spark.catalog import Catalog
+from lineage_oracle import lineage_from_extracted
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -33,7 +34,7 @@ def test_refuses_catalog_of_old_bucketing(spark, docs, tmp_path):
                               pipeline.EXTRACTED_SCHEMA)
                  .withColumn("run_id", F.lit("old")))
     cat.write_extracted(extracted)
-    cat.append_lineage(pipeline.lineage_from_extracted(
+    cat.append_lineage(lineage_from_extracted(
         cat.read_extracted(spark), "old", "s1", 0))
     cat.commit_snapshot("s1", {
         "run_id": "old", "rows_total": 40, "num_buckets": 8,

@@ -1,19 +1,16 @@
 """CDX capture-index layer: SURT urlkey (Python <-> column-expression
-A/B), CDXJ round-trip, record-locator fetch, and the digest-dedup
-fetch planner end-to-end."""
+A/B), CDXJ round-trip, record locators that slice back to their
+members, and the digest-dedup fetch planner."""
 
 from datetime import datetime, timezone
 
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
-from pyspark.sql import functions as F
 
 from historicaldatadocumentparsersystem_spark import functions as HF
 from historicaldatadocumentparsersystem_spark.extractor import cdxx, warcx
 from historicaldatadocumentparsersystem_spark.operators import webtext
-from historicaldatadocumentparsersystem_spark.sources import (
-    read_cdx, read_warc_members)
 
 SURT_CASES = [
     ("https://WWW.Example.COM:443/Path/A?b=2&a=1#frag",
@@ -100,28 +97,9 @@ def test_warc_indexed_locators_decode_members(gz):
                                                  for r in rows)
     assert sum(r["length"] for r in rows) == len(shard)
     for r, rec in zip(rows, recs):
-        got = cdxx.read_warc_member(shard, r["offset"], r["length"])
+        (got,) = warcx.parse_warc(shard[r["offset"]:r["offset"]
+                                        + r["length"]])
         assert got["url"] == rec["url"] and got["body"] == rec["body"]
-    # corrupt slice degrades to None, never raises
-    assert cdxx.read_warc_member(shard, 3, 10) is None
-    assert cdxx.read_warc_member(b"", 0, 5) is None
-
-
-def test_spark_cdx_reader(spark, tmp_path):
-    recs = _cdx_records(10)
-    (tmp_path / "i0.cdxj").write_bytes(cdxx.build_cdxj(recs[:5]))
-    (tmp_path / "i1.cdxj.gz").write_bytes(
-        cdxx.build_cdxj(recs[5:], gzip_file=True))
-    got = read_cdx(spark, str(tmp_path) + "/*").collect()
-    assert len(got) == 10
-    by_off = {r["offset"]: r for r in got}
-    for rec in recs:
-        r = by_off[rec["offset"]]
-        assert (r["urlkey"], r["url"], r["mime"], r["status"],
-                r["digest"], r["length"], r["filename"]) == (
-            rec["urlkey"], rec["url"], rec["mime"], rec["status"],
-            rec["digest"], rec["length"], rec["filename"])
-        assert r["ts"].replace(tzinfo=timezone.utc) == rec["ts"]
 
 
 def test_cdx_fetch_plan_gates_and_dedups(spark):
@@ -152,57 +130,3 @@ def test_cdx_fetch_plan_gates_and_dedups(spark):
     assert a["n_copies"] == 3 and a["bytes_saved"] == 100 + 120
     b = got["B"]
     assert (b["urlkey"], b["n_copies"], b["bytes_saved"]) == ("k3", 1, 0)
-
-
-def test_ranged_fetch_end_to_end(spark, tmp_path):
-    """CDX index -> fetch plan -> ranged member reads: the fetched
-    bodies are byte-identical to the originals, duplicate-digest
-    captures are fetched once, and gated-out captures never fetched."""
-    recs = _warc_records(6)
-    # duplicate payloads: docs 4/5 replay docs 0/1 (same digest)
-    for i in (4, 5):
-        recs[i] = dict(recs[i], body=recs[i - 4]["body"])
-    digest = {r["url"]: "D" + str(i % 4) for i, r in enumerate(recs)}
-    shards, cdx_rows = {}, []
-    for shard_i in (0, 1):
-        part = recs[shard_i * 3:(shard_i + 1) * 3]
-        blob, rows = cdxx.build_warc_indexed(part, gzip_records=True)
-        path = str(tmp_path / f"s{shard_i}.warc.gz")
-        (tmp_path / f"s{shard_i}.warc.gz").write_bytes(blob)
-        for r in rows:
-            r["filename"] = path
-            r["digest"] = digest[r["url"]]
-            r["status"] = 404 if r["url"].endswith("p3") else 200
-        cdx_rows += rows
-        shards[shard_i] = part
-    (tmp_path / "index.cdxj").write_bytes(cdxx.build_cdxj(cdx_rows))
-
-    cdx = read_cdx(spark, str(tmp_path / "index.cdxj"))
-    plan = webtext.cdx_fetch_plan(cdx)
-    fetched = read_warc_members(plan, num_partitions=2).collect()
-    # 6 captures, doc3 gated (404), dups 4->0 and 5->1 collapse: 3 left
-    assert len(fetched) == 3
-    bodies = {r["url"]: bytes(r["body"]) for r in fetched}
-    expect = {r["url"]: r["body"] for r in recs[:3] if
-              not r["url"].endswith("p3")}
-    # the kept copy per digest is the min-(ts,urlkey) one == originals
-    assert bodies == expect
-
-
-def test_ranged_fetch_missing_file_degrades(spark, tmp_path):
-    """Locators pointing at a vanished shard yield no rows (F5),
-    without failing the task or the other shards' reads."""
-    recs = _warc_records(2)
-    blob, rows = cdxx.build_warc_indexed(recs, gzip_records=True)
-    good = tmp_path / "ok.warc.gz"
-    good.write_bytes(blob)
-    locs = []
-    for r in rows:
-        locs.append((str(good), r["offset"], r["length"]))
-        locs.append((str(tmp_path / "GONE.warc.gz"), r["offset"],
-                     r["length"]))
-    df = spark.createDataFrame(
-        locs, "filename string, offset long, length long")
-    got = read_warc_members(df, num_partitions=2).collect()
-    assert {r["url"] for r in got} == {r["url"] for r in recs}
-    assert all(r["filename"] == str(good) for r in got)

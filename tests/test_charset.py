@@ -5,6 +5,7 @@ map-only plan)."""
 import pyarrow.parquet as pq
 import pytest
 
+import synth_inputs
 from historicaldatadocumentparsersystem_spark import fixtures
 from historicaldatadocumentparsersystem_spark.extractor import charsetx
 from historicaldatadocumentparsersystem_spark.extractor.htmlx import (
@@ -49,7 +50,7 @@ def test_sniff_decode_equals_engine_decode_everywhere():
             if not h:
                 continue
             payloads.append(h.encode("utf-8") if isinstance(h, str) else h)
-    payloads += fixtures.adversarial_html_pages(100)
+    payloads += synth_inputs.adversarial_html_pages(100)
     for r in fixtures.generate_rows(300):
         if r["html"]:
             payloads.append(r["html"])

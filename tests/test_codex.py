@@ -4,6 +4,7 @@ compositions."""
 
 import pyarrow.parquet as pq
 
+import synth_inputs
 from historicaldatadocumentparsersystem_spark import fixtures
 from historicaldatadocumentparsersystem_spark.extractor import codex
 from historicaldatadocumentparsersystem_spark.operators import pagemeta
@@ -91,7 +92,7 @@ def test_block_boundaries_and_text_contract():
 def test_malformed_never_raises():
     import random
     rng = random.Random("codex-fuzz")
-    pages = fixtures.adversarial_html_pages(100)
+    pages = synth_inputs.adversarial_html_pages(100)
     pages += [bytes(rng.randrange(256) for _ in range(rng.randrange(300)))
               for _ in range(100)]
     pages += [b"<pre>", b"<pre><code class=>x", b"</pre>", b""]

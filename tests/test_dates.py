@@ -5,6 +5,7 @@ aggregation."""
 import pyarrow.parquet as pq
 import pytest
 
+import synth_inputs
 from historicaldatadocumentparsersystem_spark import fixtures
 from historicaldatadocumentparsersystem_spark.extractor import datex
 from historicaldatadocumentparsersystem_spark.operators import pagemeta
@@ -82,7 +83,7 @@ def test_invalid_candidates_die_silently():
 def test_malformed_never_raises():
     import random
     rng = random.Random("datex-fuzz")
-    pages = fixtures.adversarial_html_pages(100)
+    pages = synth_inputs.adversarial_html_pages(100)
     pages += [bytes(rng.randrange(256) for _ in range(rng.randrange(300)))
               for _ in range(100)]
     pages += [b"<time datetime>", b"<meta name=date>", b""]

@@ -2,6 +2,9 @@
 TIFF-IFD reader + PNG tEXt + GIF comments, golden-pinned) and the
 media_metadata operator."""
 
+import io
+import wave
+
 import pyarrow.parquet as pq
 import pytest
 
@@ -85,7 +88,8 @@ def test_wav_info_and_mp4_meta():
     assert exifx.extract_media_metadata(wav) == [
         ("wav-info", 0, "IART", "bob"),
         ("wav-info", 1, "ICMT", "odd len")]
-    assert imagex.wav_stats(wav)["n_frames"] == 200   # still plays
+    with wave.open(io.BytesIO(wav)) as w:         # still plays
+        assert w.getnframes() == 200
 
     mp4 = exifx.build_mp4("avc1", timescale=600, duration=1800,
                           n_tracks=3)

@@ -477,8 +477,7 @@ def test_fast_scanner_equals_htmlparser_adversarial():
     storms, rawtext containing markup, quote abuse, stray closers,
     broken comments, truncation mid-tag — the fast path stays honest
     exactly where hand-written scanners historically diverge."""
-    from historicaldatadocumentparsersystem_spark.fixtures import (
-        adversarial_html_pages)
+    from synth_inputs import adversarial_html_pages
     for i, payload in enumerate(adversarial_html_pages(160)):
         src = decode_payload(payload)
         fast, ref = _extract_both(src)
@@ -503,8 +502,7 @@ _ADVERSARIAL_DIGESTS = (
 
 @functools.lru_cache(maxsize=None)
 def _adversarial_pages() -> tuple[bytes, ...]:
-    from historicaldatadocumentparsersystem_spark.fixtures import (
-        adversarial_html_pages)
+    from synth_inputs import adversarial_html_pages
     return tuple(adversarial_html_pages(400, 42))
 
 

@@ -3,6 +3,7 @@ mapInPandas operator and the CLIP-pair selection composition."""
 
 import pyarrow.parquet as pq
 
+import synth_inputs
 from historicaldatadocumentparsersystem_spark import fixtures
 from historicaldatadocumentparsersystem_spark.extractor import figx
 from historicaldatadocumentparsersystem_spark.operators import pagemeta
@@ -87,7 +88,7 @@ def test_in_link_and_script_isolation():
 def test_malformed_never_raises():
     import random
     rng = random.Random("figx-fuzz")
-    pages = fixtures.adversarial_html_pages(100)
+    pages = synth_inputs.adversarial_html_pages(100)
     pages += [bytes(rng.randrange(256) for _ in range(rng.randrange(300)))
               for _ in range(100)]
     pages += [b"<img", b"<figure><img src=", b"<figcaption>", b""]

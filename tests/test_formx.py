@@ -3,6 +3,7 @@ mapInPandas operator and the page-function flag composition."""
 
 import pyarrow.parquet as pq
 
+import synth_inputs
 from historicaldatadocumentparsersystem_spark import fixtures
 from historicaldatadocumentparsersystem_spark.extractor import formx
 from historicaldatadocumentparsersystem_spark.operators import pagemeta
@@ -84,7 +85,7 @@ def test_search_detection_type_and_name():
 def test_malformed_never_raises():
     import random
     rng = random.Random("formx-fuzz")
-    pages = fixtures.adversarial_html_pages(100)
+    pages = synth_inputs.adversarial_html_pages(100)
     pages += [bytes(rng.randrange(256) for _ in range(rng.randrange(300)))
               for _ in range(100)]
     pages += [b"<form", b"<form><input type=", b"<button>", b""]

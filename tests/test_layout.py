@@ -1,7 +1,5 @@
 """Z-order layout clustering (operators/layout): Morton key
-correctness vs a pure-Python bit-interleave, and the file-skipping
-property the layout exists for (footer-stats pruning on BOTH
-dimensions, which no single-column sort provides).
+correctness vs a pure-Python bit-interleave and quantizer.
 """
 
 import os
@@ -55,42 +53,3 @@ def test_zorder_constant_dimension_degrades_to_zero(spark):
     assert all(r.qx == 0 for r in out)
     assert {r.qy for r in out} == {_pure_quantize(i, 0, 9, 4)
                                    for i in range(10)}
-
-
-@pytest.mark.usefixtures("spark")
-def test_zorder_layout_prunes_both_dimensions(spark, tmp_path):
-    # 64x64 grid of (user, t) points, written (a) time-sorted — the
-    # layout a naive ingest produces — and (b) z-ordered. A user-only
-    # range predicate can skip nothing in (a): every time-run contains
-    # every user. The z-ordered layout keeps per-file user ranges
-    # narrow, so footer stats alone drop most files.
-    rows = [(u * 64 + t, u, t) for u in range(64) for t in range(64)]
-    df = spark.createDataFrame(rows, "event_id long, user long, t long")
-    keyed = layout.zorder_keys(df, "user", "t", bits=6)
-
-    time_sorted = str(tmp_path / "by_time")
-    (df.repartitionByRange(16, "t").sortWithinPartitions("t")
-       .write.mode("overwrite").parquet(time_sorted))
-    zordered = str(tmp_path / "by_z")
-    layout.write_zordered(keyed, zordered, n_files=16)
-
-    bounds = {"user": (10, 17)}  # 1/8 of the user axis, all of time
-    assert layout.file_scan_fraction(time_sorted, bounds) == 1.0
-    assert layout.file_scan_fraction(zordered, bounds) <= 0.5
-
-    # and the 2-D rectangle prunes harder than either 1-D filter
-    rect = {"user": (10, 17), "t": (20, 27)}
-    assert (layout.file_scan_fraction(zordered, rect)
-            <= layout.file_scan_fraction(zordered, bounds))
-
-
-@pytest.mark.usefixtures("spark")
-def test_write_zordered_preserves_rows(spark, tmp_path):
-    rows = [(i, i % 13, i % 7) for i in range(500)]
-    df = spark.createDataFrame(rows, "event_id long, user long, t long")
-    path = str(tmp_path / "z")
-    layout.write_zordered(layout.zorder_keys(df, "user", "t"), path)
-    back = spark.read.parquet(path)
-    assert back.count() == 500
-    assert sorted(r.event_id for r in back.select("event_id").collect()) \
-        == list(range(500))

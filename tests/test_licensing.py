@@ -5,6 +5,7 @@ import random
 
 import pyarrow.parquet as pq
 
+import synth_inputs
 from historicaldatadocumentparsersystem_spark import fixtures
 from historicaldatadocumentparsersystem_spark.extractor import licensex
 
@@ -14,7 +15,7 @@ LIC_FIX = "fixtures/license_pages_seed42_n40.parquet"
 def test_fixture_parquet_matches_builder():
     cols = ("url", "href", "text")
     regen = [tuple(r[c] for c in cols)
-             for r in fixtures.license_page_rows()]
+             for r in synth_inputs.license_page_rows()]
     disk = [tuple(r[c] for c in cols)
             for r in pq.read_table(LIC_FIX).to_pylist()]
     assert disk == regen
@@ -65,7 +66,7 @@ def test_spark_matches_pure(spark):
                  for r in sig.collect())
     want = []
     by_url: dict[str, list] = {}
-    for r in fixtures.license_page_rows():
+    for r in synth_inputs.license_page_rows():
         lic = licensex.link_license(r["href"])
         sigs = ([("link", lic)] if lic else []) + \
             licensex.text_signals(r["text"])
@@ -82,7 +83,7 @@ def test_spark_matches_pure(spark):
     # the link channel, and some pages have no signal at all
     assert {s for _, s in got_r.values()} == {"link", "spdx",
                                               "phrase"}
-    urls_with_rows = {r["url"] for r in fixtures.license_page_rows()}
+    urls_with_rows = {r["url"] for r in synth_inputs.license_page_rows()}
     assert set(got_r) < urls_with_rows
 
 

@@ -116,27 +116,6 @@ def test_pagerank_dangling_mass_redistributed(spark):
     assert got["e"] > got["b"] and got["f"] > got["b"]
 
 
-def test_host_edges_from_real_extraction(spark):
-    """End-to-end chain on a hand-built cross-host mini-web."""
-    pages = [
-        ("https://a.com/1", '<a href="https://b.com/x">b</a>'
-                            '<a href="/local">self</a>'),
-        ("https://b.com/1", '<a href="https://c.com/y">c</a>'),
-        ("https://c.com/1", '<a href="https://a.com/z">a</a>'
-                            '<a href="https://b.com/w">b</a>'),
-    ]
-    docs = spark.createDataFrame(
-        [(u, bytearray(h.encode())) for u, h in pages],
-        "url string, html binary")
-    links = linkgraph.extract_links_df(docs)
-    edges = linkgraph.host_edges(links)
-    got = {(r["src_host"], r["dst_host"]): r["n_links"]
-           for r in edges.collect()}
-    assert got == {("a.com", "b.com"): 1, ("a.com", "a.com"): 1,
-                   ("b.com", "c.com"): 1, ("c.com", "a.com"): 1,
-                   ("c.com", "b.com"): 1}
-
-
 # --- duplicated-span removal -------------------------------------------------
 
 def test_dup_span_removal_shared_passage(spark):

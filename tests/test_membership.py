@@ -43,7 +43,7 @@ def test_filter_merge_is_union_bitor(spark):
 
 
 def test_probe_plan_is_equi_join(spark):
-    from historicaldatadocumentparsersystem_spark.plans import physical_plan
+    from plan_checks import physical_plan
     bloom = membership.bloom_build(_keys(spark, 0, 50), "url",
                                    m_bits=M, k=K)
     df = membership.bloom_might_contain(

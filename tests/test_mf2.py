@@ -4,6 +4,7 @@ operator and the mf2_records composition (shared _typed_records)."""
 import pyarrow.parquet as pq
 import pytest
 
+import synth_inputs
 from historicaldatadocumentparsersystem_spark import fixtures
 from historicaldatadocumentparsersystem_spark.extractor import mf2x
 from historicaldatadocumentparsersystem_spark.operators import pagemeta
@@ -87,7 +88,7 @@ def test_root_tokens_case_sensitive_and_orphans():
 def test_malformed_never_raises():
     import random
     rng = random.Random("mf2x-fuzz")
-    pages = fixtures.adversarial_html_pages(100)
+    pages = synth_inputs.adversarial_html_pages(100)
     pages += [bytes(rng.randrange(256) for _ in range(rng.randrange(300)))
               for _ in range(100)]
     pages += [b'<div class="h-">x</div>', b'<div class>',

@@ -5,6 +5,7 @@ microdata_records composition (typed records via self-joins)."""
 import pyarrow.parquet as pq
 import pytest
 
+import synth_inputs
 from historicaldatadocumentparsersystem_spark import fixtures
 from historicaldatadocumentparsersystem_spark.extractor import microdatax
 from historicaldatadocumentparsersystem_spark.operators import pagemeta
@@ -112,7 +113,7 @@ def test_duplicate_tokens_dropped_itemid_resolved():
 def test_malformed_never_raises():
     import random
     rng = random.Random("microdatax-fuzz")
-    pages = fixtures.adversarial_html_pages(120)
+    pages = synth_inputs.adversarial_html_pages(120)
     pages += [bytes(rng.randrange(256) for _ in range(rng.randrange(300)))
               for _ in range(100)]
     pages += [b"<div itemscope", b"<meta itemprop>", b"",

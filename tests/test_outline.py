@@ -3,6 +3,7 @@
 
 import pyarrow.parquet as pq
 
+import synth_inputs
 from historicaldatadocumentparsersystem_spark import fixtures
 from historicaldatadocumentparsersystem_spark.extractor import outlinex
 from historicaldatadocumentparsersystem_spark.operators import pagemeta
@@ -68,7 +69,7 @@ def test_heading_inside_li_owned_once():
 def test_malformed_never_raises():
     import random
     rng = random.Random("outline-fuzz")
-    pages = fixtures.adversarial_html_pages(100)
+    pages = synth_inputs.adversarial_html_pages(100)
     pages += [bytes(rng.randrange(256) for _ in range(rng.randrange(300)))
               for _ in range(100)]
     for p in pages:

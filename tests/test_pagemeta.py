@@ -4,6 +4,7 @@ identity + map-only plans)."""
 
 import pyarrow.parquet as pq
 
+import synth_inputs
 from historicaldatadocumentparsersystem_spark import fixtures
 from historicaldatadocumentparsersystem_spark.extractor import metax, tablex
 from historicaldatadocumentparsersystem_spark.operators import pagemeta
@@ -363,7 +364,7 @@ def test_full_attr_scanner_tree_equals_htmlparser():
                 fixtures.jsonld_pages):
         pages += [(p["html"], p["url"]) for p in fam(60) if p["html"]]
     pages += [(p, f"adv-{i}") for i, p in
-              enumerate(fixtures.adversarial_html_pages(120))]
+              enumerate(synth_inputs.adversarial_html_pages(120))]
     for payload, label in pages:
         src = htmlx.decode_payload(payload)
         assert (sig(htmlx.parse_dom(src, full_attrs=True), src)
@@ -462,71 +463,3 @@ def test_meta_df_plan_is_map_only(spark):
     plan = pagemeta.extract_meta_df(docs)._jdf.queryExecution() \
         .executedPlan().toString()
     assert plan.count("Exchange") == base.count("Exchange"), plan
-
-
-def test_refresh_microsyntax_vectors():
-    from historicaldatadocumentparsersystem_spark.extractor.metax \
-        import parse_refresh as p
-    assert p("5; url=https://a/b") == (5, "https://a/b")
-    assert p("0;URL='https://a/q' junk") == (0, "https://a/q")
-    # fraction parsed and ignored; ws-tolerant separator and url=
-    assert p('  3.7 , url = "https://x"') == (3, "https://x")
-    # time-only forms reload self
-    assert p("10") == (10, None)
-    assert p("10 ;  ") == (10, None)
-    assert p("5; url=") == (5, None)
-    # bare and whitespace-separated targets
-    assert p("0; https://bare") == (0, "https://bare")
-    assert p("5 https://space-sep") == (5, "https://space-sep")
-    # unterminated quote runs to end
-    assert p("5; url='unterminated") == (5, "unterminated")
-    # parse errors
-    for bad in ("abc", "", None, "5x; url=https://a", ";url=x"):
-        assert p(bad) is None
-    # clamp
-    assert p("99999999999; url=x") == ((1 << 31) - 1, "x")
-
-
-_REFRESH_ROWS = (
-    ("https://r.example/a", "5; url=https://r.example/b"),
-    ("https://r.example/doorway", "0;URL='https://spam.example/x'"),
-    ("https://r.example/frac", '  3.7 , url = "https://r.example/c"'),
-    ("https://r.example/self", "10"),
-    ("https://r.example/self2", "30; url=https://r.example/self2"),
-    ("https://r.example/rel", "0; promo/landing.html"),
-    ("https://r.example/slow", "600; url=https://r.example/later"),
-    ("https://r.example/bad", "abc"),
-    ("https://r.example/bad2", "5x; url=https://r.example/never"),
-    ("https://r.example/empty", None),
-    ("https://r.example/quoted", "1; url='https://other.example/p' tail"),
-    ("https://r.example/spacesep", "2 https://r.example/d"),
-)
-
-
-def test_refresh_spark_matches_pure(spark):
-    from historicaldatadocumentparsersystem_spark.extractor.metax \
-        import parse_refresh
-    from historicaldatadocumentparsersystem_spark.operators import \
-        pagemeta
-    df = spark.createDataFrame(list(_REFRESH_ROWS),
-                               "url string, refresh string")
-    got = [(r.url, r.delay_s, r.target)
-           for r in pagemeta.refresh_targets(df)
-           .orderBy("url").collect()]
-    want = sorted((u,) + parse_refresh(c)
-                  for u, c in _REFRESH_ROWS
-                  if parse_refresh(c) is not None)
-    assert got == want
-    red = {r.url: (r.target, r.delay_s, r.same_host)
-           for r in pagemeta.refresh_redirects(
-               pagemeta.refresh_targets(df)).collect()}
-    # doorway: cross-host instant refresh flagged; relative target
-    # is same-host; slow refresh and self-reloads excluded
-    assert red["https://r.example/doorway"] == \
-        ("https://spam.example/x", 0, False)
-    assert red["https://r.example/rel"] == \
-        ("promo/landing.html", 0, True)
-    assert red["https://r.example/quoted"][2] is False
-    assert "https://r.example/slow" not in red
-    assert "https://r.example/self" not in red
-    assert "https://r.example/self2" not in red

@@ -10,6 +10,7 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+import synth_inputs
 from historicaldatadocumentparsersystem_spark import fixtures  # noqa: E402
 from historicaldatadocumentparsersystem_spark.operators import pagemeta  # noqa: E402
 
@@ -48,7 +49,7 @@ def test_golden_rederivation():
         decode_payload, extract_html)
     golden = pq.read_table(GOLDEN).to_pylist()
     derived = []
-    for p in fixtures.paging_pages(24):
+    for p in synth_inputs.paging_pages(24):
         meta = metax.extract_meta(p["html"], base_url=p["url"])
         text, _spans, _score, _title = extract_html(
             decode_payload(p["html"]))

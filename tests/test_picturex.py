@@ -3,6 +3,7 @@ class sanity over encoder-built images, decode dispatch, fuzz."""
 
 import random
 
+import synth_inputs
 from historicaldatadocumentparsersystem_spark.extractor import (imagex,
                                                                 picturex)
 
@@ -77,10 +78,10 @@ def test_pnm_codec_and_dispatch():
     comments, and the classifier dispatch path."""
     import pytest
     px = bytes([10, 200, 30] * 12)
-    p6 = imagex.encode_pnm(px, 4, 3, 3)
+    p6 = synth_inputs.encode_pnm(px, 4, 3, 3)
     assert imagex.decode_pnm(p6) == (4, 3, 3, px)
     g = bytes(range(12))
-    assert imagex.decode_pnm(imagex.encode_pnm(g, 4, 3, 1)) == \
+    assert imagex.decode_pnm(synth_inputs.encode_pnm(g, 4, 3, 1)) == \
         (4, 3, 1, g)
     p4 = b"P4\n# cmt\n10 2\n" + bytes([0b10101010, 0b10000000]) * 2
     w, h, ch, out = imagex.decode_pnm(p4)
@@ -92,7 +93,7 @@ def test_pnm_codec_and_dispatch():
         with pytest.raises(ValueError):
             imagex.decode_pnm(bad)
     # classifier consumes pnm payloads like any other codec
-    flat = imagex.encode_pnm(bytes([90]) * 900, 30, 30, 1)
+    flat = synth_inputs.encode_pnm(bytes([90]) * 900, 30, 30, 1)
     out = picturex.classify_picture(flat)
     assert out is not None and out[0][0] == "flat"
 

@@ -8,6 +8,7 @@ import random
 
 import pyarrow.parquet as pq
 
+import synth_inputs
 from historicaldatadocumentparsersystem_spark import fixtures
 from historicaldatadocumentparsersystem_spark.extractor import piix
 
@@ -17,7 +18,7 @@ PII_FIX = "fixtures/pii_texts_seed42_n160.parquet"
 def test_fixture_matches_committed_parquet():
     committed = [(r["url"], r["text"])
                  for r in pq.read_table(PII_FIX).to_pylist()]
-    regen = [(r["url"], r["text"]) for r in fixtures.pii_texts()]
+    regen = [(r["url"], r["text"]) for r in synth_inputs.pii_texts()]
     assert committed == regen
     assert len(committed) == 160
 

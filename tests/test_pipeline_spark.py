@@ -147,8 +147,14 @@ def test_static_session_stays_static_and_resume_keeps_done_files(
     """The dynamic overwrite is a per-write option: a STATIC session
     stays STATIC, and a resumed run (whose write touches only the todo
     buckets) still leaves the files of the done buckets in place."""
+    import os
     from pyspark.sql import functions as F
     from historicaldatadocumentparsersystem_spark.catalog import Catalog
+
+    def data_files():
+        return {os.path.join(d, n)
+                for d, _, names in os.walk(cat.extracted_path)
+                for n in names if n.endswith(".parquet")}
 
     key = "spark.sql.sources.partitionOverwriteMode"
     spark.conf.set(key, "STATIC")
@@ -162,12 +168,12 @@ def test_static_session_stays_static_and_resume_keeps_done_files(
         cat = Catalog(out)
         done = cat.done_partitions(spark, "s1")
         assert done and done <= {0, 1, 2, 3}
-        before = set(cat.data_files())     # the done buckets' files
+        before = data_files()     # the done buckets' files
         stats = pipeline.run_extraction(spark, docs_df, out, run_id="r-rest",
                                         snapshot_id="s1", num_buckets=8)
         assert spark.conf.get(key) == "STATIC"
         assert stats["skipped_partitions"] == len(done)
-        assert before and before < set(cat.data_files())
+        assert before and before < data_files()
         assert cat.read_extracted(spark).count() == N
     finally:
         spark.conf.unset(key)
@@ -183,8 +189,7 @@ def test_run_extraction_writes_extract_df_plan(spark, docs_df, tmp_path,
     rows above it, so the two are counted at different points."""
     from pyspark.sql import functions as F
     from historicaldatadocumentparsersystem_spark.catalog import Catalog
-    from historicaldatadocumentparsersystem_spark.plans import \
-        physical_plan
+    from plan_checks import physical_plan
 
     written = []
     write = Catalog.write_extracted
@@ -278,6 +283,7 @@ def test_observed_lineage_equals_groupby_of_written_table(spark, docs_df,
     groupBy(part_id) over this run's rows of the written table."""
     from pyspark.sql import functions as F
     from historicaldatadocumentparsersystem_spark.catalog import Catalog
+    from lineage_oracle import lineage_from_extracted
     out = str(tmp_path / "cat")
     half = docs_df.transform(lambda d: pipeline.with_part_id(d, 8)) \
                   .where(F.col("part_id") < 4).drop("part_id")
@@ -290,7 +296,7 @@ def test_observed_lineage_equals_groupby_of_written_table(spark, docs_df,
     for run_id in ("r1", "r2"):
         got = lineage.where(F.col("run_id") == run_id)
         wall_ms = got.first().wall_ms
-        oracle = pipeline.lineage_from_extracted(
+        oracle = lineage_from_extracted(
             cat.read_extracted(spark).where(F.col("run_id") == run_id),
             run_id, "s1", wall_ms)
         assert sorted(map(tuple, got.collect())) == \

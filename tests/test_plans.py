@@ -10,7 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from historicaldatadocumentparsersystem_spark import fixtures, pipeline
-from historicaldatadocumentparsersystem_spark.plans import (
+from plan_checks import (
     count_data_exchanges, count_exchanges, has_broadcast_join,
     physical_plan, scan_read_schemas)
 
@@ -103,36 +103,6 @@ def test_embedding_near_dup_has_no_cartesian(spark):
     # (tiny input broadcasts; at scale AQE picks sort-merge/shuffled-hash)
     assert ("SortMergeJoin" in plan or "ShuffledHashJoin" in plan
             or "BroadcastHashJoin" in plan), plan
-
-
-def test_vector_index_probe_prunes_partitions(spark, tmp_path_factory):
-    """S10 sink: a probe read must carry the cent_id partition filter
-    (only probed inverted lists are scanned) and must agree with the
-    in-memory ivf_topk on identical parameters."""
-    from historicaldatadocumentparsersystem_spark import vector_index
-    from historicaldatadocumentparsersystem_spark.operators import similarity
-    emb = spark.read.parquet(SF + "/embeddings.parquet")
-    path = str(tmp_path_factory.mktemp("vidx"))
-    stats = vector_index.build_ivf_index(emb, path, n_centroids=8)
-    assert stats["n_vectors"] == emb.count()
-    qdf = emb.where(F.col("vec_id") < 3).select(
-        F.col("vec_id").alias("query_id"), "embedding")
-    got = vector_index.query_ivf_index(spark, path, qdf, k=4, n_probe=2)
-    plan = physical_plan(got)
-    assert "PartitionFilters" in plan and "cent_id" in plan.split(
-        "PartitionFilters", 1)[1][:200], plan
-    want = similarity.ivf_topk(emb, qdf, k=4, n_centroids=8, n_probe=2)
-    assert sorted(map(tuple, got.collect())) == \
-        sorted(map(tuple, want.collect()))
-
-
-def test_flagship_bucketed_path_is_map_only(spark, docs_parquet):
-    """The 100 TB design: with the ingest table bucketed by url hash,
-    extraction runs with shuffle=False and the plan has ZERO exchanges
-    (measured +81% at local[32] in BENCH/BASELINE.md)."""
-    src = spark.read.parquet(docs_parquet)
-    df = pipeline.extract_df(src, num_buckets=8, shuffle=False)
-    assert count_exchanges(df) == 0, physical_plan(df)
 
 
 def test_lineage_read_partition_prunes(spark, docs_parquet, tmp_path_factory):

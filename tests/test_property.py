@@ -330,9 +330,9 @@ _MAGICS = [b"", b"\x89PNG\r\n\x1a\n", b"GIF89a", b"\xff\xd8\xff",
 @given(st.binary(max_size=400), st.sampled_from(_MAGICS))
 @settings(max_examples=80, deadline=None)
 def test_media_batch_ops_never_raise(tail, magic):
-    """image stats / resize / crop / audio / frame-sample / decode all
-    degrade to null rows (or skip) on arbitrary — including magic-
-    prefixed — garbage; output row counts obey each op's contract."""
+    """image stats / resize / decode all degrade to null rows on
+    arbitrary — including magic-prefixed — garbage: one output row per
+    input row."""
     from historicaldatadocumentparsersystem_spark.operators import multimodal
 
     payloads = [magic + tail, None, b""]
@@ -343,16 +343,6 @@ def test_media_batch_ops_never_raise(tail, magic):
 
     out = list(multimodal._resize_batch_fn(4, 3)(iter(batches)))
     assert sum(len(o) for o in out) == len(payloads)
-
-    out = list(multimodal._crop_b64_batch_fn(0, 0, 2, 2)(iter(batches)))
-    assert sum(len(o) for o in out) == len(payloads)
-
-    out = list(multimodal._audio_stats_batch(iter(batches)))
-    assert sum(len(o) for o in out) == len(payloads)
-
-    # frame-sample SKIPS non-containers (1->N contract), never raises
-    out = list(multimodal._frame_sample_batch_fn(2)(iter(batches)))
-    assert all(len(o) >= 0 for o in out)
 
     out = list(multimodal.decode_media_batch(iter(batches)))
     assert sum(len(o) for o in out) == len(payloads)

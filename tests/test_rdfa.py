@@ -5,6 +5,7 @@ path with microdata)."""
 import pyarrow.parquet as pq
 import pytest
 
+import synth_inputs
 from historicaldatadocumentparsersystem_spark import fixtures
 from historicaldatadocumentparsersystem_spark.extractor import rdfax
 from historicaldatadocumentparsersystem_spark.operators import pagemeta
@@ -90,7 +91,7 @@ def test_orphan_property_ignored():
 def test_malformed_never_raises():
     import random
     rng = random.Random("rdfax-fuzz")
-    pages = fixtures.adversarial_html_pages(100)
+    pages = synth_inputs.adversarial_html_pages(100)
     pages += [bytes(rng.randrange(256) for _ in range(rng.randrange(300)))
               for _ in range(100)]
     pages += [b"<div typeof>", b"<span property>", b"",

@@ -3,29 +3,6 @@
 from historicaldatadocumentparsersystem_spark.operators import robots
 
 
-def test_parser_group_selection_and_rules():
-    txt = (b"# polite bots only\n"
-           b"User-agent: googlebot\nDisallow: /private\n\n"
-           b"User-agent: *\nDisallow: /doc-1\nAllow: /doc-12\n"
-           b"Disallow:\n")                      # empty disallow = noop
-    assert robots.parse_robots(txt) == [
-        ("disallow", "/doc-1"), ("allow", "/doc-12")]
-    assert robots.parse_robots(txt, "googlebot") == [
-        ("disallow", "/private")]
-    assert robots.parse_robots(txt, "GoogleBot") == [
-        ("disallow", "/private")]               # case-insensitive
-    assert robots.parse_robots(b"") == []
-    assert robots.parse_robots(b"\xff\xfe binary junk") == []
-
-
-def test_parser_stacked_agents_share_group():
-    txt = (b"User-agent: a\nUser-agent: b\nDisallow: /x\n\n"
-           b"User-agent: *\nDisallow: /y\n")
-    assert robots.parse_robots(txt, "a") == [("disallow", "/x")]
-    assert robots.parse_robots(txt, "b") == [("disallow", "/x")]
-    assert robots.parse_robots(txt, "c") == [("disallow", "/y")]
-
-
 def test_filter_longest_prefix_and_ties(spark):
     rules = spark.createDataFrame(
         [("h", "disallow", "/a"), ("h", "allow", "/a/b"),

@@ -140,145 +140,6 @@ def test_audio_never_raises_on_fuzz():
             assert len(row) == 4
 
 
-# --- audio energy-delta fingerprint (the dHash recipe, time domain) ----------
-
-def _ham(a, b):
-    return bin(((a % (1 << 64)) ^ (b % (1 << 64)))).count("1")
-
-
-def test_afp_kernel_contract():
-    from historicaldatadocumentparsersystem_spark import fixtures
-    env = fixtures._afp_envelope(0)                 # strict ramp up
-    rate, n, fp = soundx.afp64(fixtures._afp_wave(env))
-    assert (rate, n) == (8000, 65 * 96)
-    assert fp == -1                                 # all 64 bits set
-    # rate-relative: double rate + double window length -> same hash
-    assert soundx.afp64(fixtures._afp_wave(env, m=192,
-                                           sample_rate=16000))[2] == fp
-    # too short / non-wav / wrong width -> None
-    assert soundx.afp64(b"\x00" * 40) is None
-    from historicaldatadocumentparsersystem_spark.extractor import \
-        imagex
-    assert soundx.afp64(imagex.make_wav(64)) is None   # < 65 samples
-    assert soundx.afp64(imagex.make_wav(65)) is not None
-
-
-def test_afp_fixture_separation():
-    from historicaldatadocumentparsersystem_spark import fixtures
-    fps = {mid: soundx.afp64(p)
-           for mid, p in fixtures.audio_fp_rows()}
-    assert fps["aubad"] is None
-    for k in range(6):                              # planted twins
-        assert _ham(fps[f"au{k}a"][2], fps[f"au{k}b"][2]) <= 4, k
-    assert fps["au2x"][2] == fps["au2a"][2]         # cross-rate dup
-    import itertools
-    for a, b in itertools.combinations(range(6), 2):
-        assert _ham(fps[f"au{a}a"][2], fps[f"au{b}a"][2]) >= 16, (a, b)
-
-
-def test_afp_never_raises_on_fuzz():
-    import random
-    rng = random.Random("afp-fuzz")
-    blobs = [b"RIFF" + bytes(rng.randrange(256) for _ in range(
-        rng.randrange(120))) for _ in range(150)]
-    from historicaldatadocumentparsersystem_spark import fixtures
-    good = fixtures._afp_wave(fixtures._afp_envelope(3))
-    blobs += [good[:i] for i in range(0, len(good), 257)]
-    for blob in blobs:
-        r = soundx.afp64(blob)
-        assert r is None or len(r) == 3
-
-
-def test_afp_operator_and_pairs(spark):
-    from historicaldatadocumentparsersystem_spark import fixtures
-    from historicaldatadocumentparsersystem_spark.operators import \
-        multimodal
-    df = fixtures.audio_fp_df(spark)
-    got = {r["media_id"]: (r["sample_rate"], r["n_frames"], r["afp"])
-           for r in multimodal.audio_fingerprint(df).collect()}
-    for mid, payload in fixtures.audio_fp_rows():
-        pure = soundx.afp64(payload)
-        assert got[mid] == (pure if pure else (None, None, None)), mid
-
-    pairs = {(r["id_a"], r["id_b"]): r["hamming"]
-             for r in multimodal.afp_near_pairs(
-                 multimodal.audio_fingerprint(df)).collect()}
-    for k in range(6):                    # every twin found
-        assert (f"au{k}a", f"au{k}b") in pairs, k
-    assert pairs[("au2a", "au2x")] == 0   # cross-rate exact dup
-    # no cross-kind leakage at the threshold
-    for (a, b), d in pairs.items():
-        assert a[:3] == b[:3] and d <= 7, (a, b, d)
-
-
-def test_afp_header_value_clamps():
-    """Header-fed values cannot overflow the op's Int32/Int64 columns
-    (the parse_image_dimensions lesson): absurd declared rates return
-    None, and n_frames is the ACTUAL decoded count."""
-    import struct
-    data = struct.pack("<100h", *range(100))
-    fmt = struct.pack("<HHIIHH", 1, 1, 0xFFFFFFFF,   # absurd rate
-                      0xFFFFFFFF, 2, 16)
-    blob = (b"RIFF" + struct.pack("<I", 36 + len(data)) + b"WAVE"
-            b"fmt " + struct.pack("<I", len(fmt)) + fmt
-            + b"data" + struct.pack("<I", len(data)) + data)
-    assert soundx.afp64(blob) is None
-
-
 def test_utf16_bom_not_misfiled_as_mp3():
     assert exifx.extract_media_metadata(b"\xff\xfeH\x00i\x00" * 40) \
         == []
-
-
-def test_mp3_chapters_roundtrip_and_rules():
-    blob = soundx.make_mp3(
-        [("TIT2", "Show 12")],
-        chapters=[("ch0", 0, 95000, "Intro"),
-                  ("ch1", 95000, None, "Mäin — topic"),
-                  ("ch2", 1800000, 1700000, None)],
-        n_frames=4)
-    assert soundx.mp3_chapters(blob) == [
-        (0, "ch0", 0, 95000, "Intro"),
-        (1, "ch1", 95000, None, "Mäin — topic"),   # open-ended
-        (2, "ch2", 1800000, None, None),           # end<=start -> None
-    ]
-    # text frames and the audio walk are untouched by CHAP frames
-    info = dict(soundx.mp3_info(blob))
-    assert info["id3:TIT2"] == "Show 12" and info["n_frames"] == "4"
-    assert soundx.mp3_chapters(soundx.make_mp3([("TIT2", "x")])) == []
-    # chapter fuzz: truncations never raise
-    for i in range(0, len(blob), 13):
-        soundx.mp3_chapters(blob[:i])
-
-
-def _podcast_rows() -> list[tuple[str, bytes]]:
-    """Chaptered-podcast inputs: full chapter lists (unicode titles,
-    open-ended last chapter), the end<=start degrade, a chapterless
-    episode, junk."""
-    return [
-        ("pod-ep1", soundx.make_mp3(
-            [("TIT2", "Show 12")], n_frames=6,
-            chapters=[("ch0", 0, 95000, "Intro"),
-                      ("ch1", 95000, 1680000,
-                       "M\u00e4in topic \u2014 deep dive"),
-                      ("ch2", 1680000, None, "Outro")])),
-        ("pod-ep2", soundx.make_mp3(
-            [("TIT2", "Show 13")], n_frames=4,
-            chapters=[("a", 1000, 500, None),
-                      ("b", 500, 2500, "Only titled")])),
-        ("pod-plain", soundx.make_mp3([("TIT2", "No chapters")],
-                                      n_frames=3)),
-        ("pod-junk", b"ID3junk not a tag"),
-    ]
-
-
-def test_podcast_chapters_operator(spark):
-    from historicaldatadocumentparsersystem_spark.operators import \
-        multimodal
-    df = spark.createDataFrame(_podcast_rows(),
-                               "media_id string, payload binary")
-    got = sorted(tuple(r) for r in
-                 multimodal.podcast_chapters(df).collect())
-    want = sorted((mid, *r) for mid, blob in _podcast_rows()
-                  for r in soundx.mp3_chapters(blob))
-    assert got == want and got

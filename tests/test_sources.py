@@ -1,4 +1,4 @@
-"""Source readers: documents scan validation, S5 CSV chunking, S4 text."""
+"""Source readers: documents scan validation and the office element readers."""
 
 import pytest
 
@@ -15,25 +15,6 @@ def test_read_documents_schema_check(spark, tmp_path):
     spark.range(3).write.parquet(bad)
     with pytest.raises(ValueError, match="missing columns"):
         sources.read_documents(spark, bad)
-
-
-def test_csv_chunks_s5(spark, tmp_path):
-    csv = tmp_path / "rows.csv"
-    csv.write_text("".join(f"r{i},v{i}\n" for i in range(25)))
-    got = sources.read_csv_chunks(spark, str(csv), rows_per_chunk=10) \
-        .collect()
-    by_chunk = {r.chunk_id: r.text for r in got}
-    # 25 rows -> chunks of 10/10/5, reference regroup semantics
-    assert sorted(by_chunk) == [0, 1, 2]
-    assert by_chunk[0].splitlines() == [f"r{i},v{i}" for i in range(10)]
-    assert by_chunk[2].splitlines() == [f"r{i},v{i}" for i in range(20, 25)]
-
-
-def test_text_documents_s4(spark, tmp_path):
-    (tmp_path / "a.txt").write_text("hello\nworld")
-    got = sources.read_text_documents(spark, str(tmp_path / "a.txt")) \
-        .collect()
-    assert len(got) == 1 and got[0].text == "hello\nworld"
 
 
 # --- S6 docx subset ---------------------------------------------------------

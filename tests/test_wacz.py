@@ -51,21 +51,6 @@ def test_tamper_audit_tristate():
     assert missing[0]["hash_ok"] is False
 
 
-def test_fetch_capture_locator_path():
-    w = waczx.make_wacz(_recs(), shards=2)
-    p = waczx.parse_wacz(w)
-    for cap in p["captures"]:
-        rec = waczx.fetch_capture(w, cap)
-        assert rec is not None and rec["url"] == cap["url"]
-        assert b"body" in rec["body"]
-    # corrupt locator -> None, never raise
-    bad = dict(p["captures"][0], offset=10 ** 9)
-    assert waczx.fetch_capture(w, bad) is None
-    assert waczx.fetch_capture(w, dict(p["captures"][0],
-                                       filename="nope.warc.gz")) is None
-    assert waczx.fetch_capture(b"junk", p["captures"][0]) is None
-
-
 def test_fixture_rows_and_fuzz():
     rows = fixtures.wacz_file_rows(12)
     assert rows == fixtures.wacz_file_rows(12)

@@ -1,14 +1,20 @@
-"""WARC source: pure-Python round-trip + Spark reader + extraction
-byte-identity vs the direct (parquet-style) path."""
+"""WARC/ARC sources: pure-Python round-trips and the Spark capture and
+ARC document views over binaryFile shards."""
 
 from datetime import datetime, timezone
 
-from pyspark.sql import functions as F
-
-from historicaldatadocumentparsersystem_spark import fixtures, pipeline
+from historicaldatadocumentparsersystem_spark import fixtures
 from historicaldatadocumentparsersystem_spark.extractor import warcx
 from historicaldatadocumentparsersystem_spark.sources import (
-    read_warc_documents)
+    arc_documents_from_blobs, warc_captures_from_blobs)
+
+
+def _shards(spark, path):
+    return spark.read.format("binaryFile").load(path).select("content")
+
+
+def _captures(spark, path):
+    return warc_captures_from_blobs(_shards(spark, path))
 
 
 def _records(n=30):
@@ -49,34 +55,6 @@ def test_parse_never_raises_on_junk():
         assert isinstance(warcx.parse_warc(junk), list)
 
 
-def test_spark_warc_extraction_matches_direct(spark, tmp_path):
-    """The north-star chain: WARC shards -> read_warc_documents ->
-    extract_df must produce byte-identical extracted text to feeding
-    the same pages directly (modulo the text-fallback rows, which a
-    WARC has no fallback column for)."""
-    rows = [r for r in fixtures.generate_rows(40) if r["html"]]
-    recs = [{"url": r["url"], "warc_ts": r["warc_ts"].replace(
-                 tzinfo=timezone.utc), "status": 200, "body": r["html"]}
-            for r in rows]
-    # two shards, second gzipped per record
-    (tmp_path / "shard0.warc").write_bytes(warcx.build_warc(recs[:20]))
-    (tmp_path / "shard1.warc.gz").write_bytes(
-        warcx.build_warc(recs[20:], gzip_records=True))
-
-    docs = read_warc_documents(spark, str(tmp_path) + "/*")
-    assert docs.columns == ["url", "warc_ts", "html", "text", "lang"]
-    got = {r["url"]: (r["doc_kind"], r["extracted_text"], r["score"])
-           for r in pipeline.extract_df(docs, num_buckets=4).collect()}
-
-    direct_docs = fixtures.corpus_df(spark, 40).where(
-        F.col("html").isNotNull())
-    want = {r["url"]: (r["doc_kind"], r["extracted_text"], r["score"])
-            for r in pipeline.extract_df(
-                direct_docs, num_buckets=4).collect()}
-    assert got == want
-    assert len(got) == len(rows)
-
-
 # --- property tests ----------------------------------------------------------
 
 from hypothesis import given, settings, strategies as st
@@ -106,170 +84,13 @@ def test_warc_parse_arbitrary_bytes_never_raises(data):
     assert isinstance(warcx.parse_warc(data), list)
 
 
-# --- WET (conversion-record plain text) --------------------------------------
-
-def test_wet_roundtrip_plain_and_gzip():
-    recs = [{"url": f"https://s{i}.example/p", "warc_ts": datetime(
-                2024, 5, 1, 12, 0, i, tzinfo=timezone.utc),
-             "text": f"line one {i}\nline two é中"}
-            for i in range(6)]
-    for gz in (False, True):
-        got = warcx.parse_wet(warcx.build_wet(recs, gzip_records=gz))
-        assert [(g["url"], g["warc_ts"], g["text"]) for g in got] == \
-            [(r["url"], r["warc_ts"], r["text"]) for r in recs]
-
-
-def test_wet_skips_response_records_and_vice_versa():
-    """A mixed shard: parse_wet sees only conversion records, parse_warc
-    only response records — the two readers partition the container."""
-    wet = warcx.build_wet([{
-        "url": "https://a/t", "text": "plain text",
-        "warc_ts": datetime(2024, 1, 1, tzinfo=timezone.utc)}])
-    warc = warcx.build_warc([{
-        "url": "https://a/h", "status": 200, "body": b"<p>hi</p>",
-        "warc_ts": datetime(2024, 1, 1, tzinfo=timezone.utc)}])
-    mixed = wet + warc
-    assert [r["url"] for r in warcx.parse_wet(mixed)] == ["https://a/t"]
-    assert [r["url"] for r in warcx.parse_warc(mixed)] == ["https://a/h"]
-
-
-def test_spark_wet_reader_feeds_curation_ops(spark, tmp_path):
-    """WET shards -> read_wet_documents: text lands in the documents
-    schema (html null) and flows straight into a curation operator."""
-    from historicaldatadocumentparsersystem_spark.operators import webtext
-    from historicaldatadocumentparsersystem_spark.sources import (
-        read_wet_documents)
-    recs = [{"url": f"https://h{i}.com/p", "warc_ts": datetime(
-                2024, 2, 2, tzinfo=timezone.utc),
-             "text": f"the quick brown fox {i} " * 3}
-            for i in range(10)]
-    (tmp_path / "s0.wet").write_bytes(warcx.build_wet(recs[:5]))
-    (tmp_path / "s1.wet.gz").write_bytes(
-        warcx.build_wet(recs[5:], gzip_records=True))
-    docs = read_wet_documents(spark, str(tmp_path) + "/*")
-    assert docs.columns == ["url", "warc_ts", "html", "text", "lang"]
-    rows = docs.collect()
-    assert len(rows) == 10 and all(r["html"] is None for r in rows)
-    assert {r["url"] for r in rows} == {r["url"] for r in recs}
-    prof = webtext.c4_line_filter(
-        docs.select("url", "text")).collect()
-    assert len(prof) == 10
-
-
-@given(st.lists(st.text(max_size=200), min_size=1, max_size=8),
-       st.booleans())
-@settings(max_examples=60, deadline=None)
-def test_wet_roundtrip_property(texts, gz):
-    recs = [{"url": f"https://h{i}.com/p",
-             "warc_ts": datetime(2024, 1, 1, tzinfo=timezone.utc),
-             "text": t} for i, t in enumerate(texts)]
-    got = warcx.parse_wet(warcx.build_wet(recs, gzip_records=gz))
-    assert [(g["url"], g["text"]) for g in got] == \
-        [(r["url"], r["text"]) for r in recs]
-
-
-@given(st.binary(max_size=2048))
-@settings(max_examples=100, deadline=None)
-def test_wet_parse_arbitrary_bytes_never_raises(data):
-    assert isinstance(warcx.parse_wet(data), list)
-
-
-def _wat_records(n=6):
-    return [{"url": f"https://h{i % 3}.com/p{i}",
-             "warc_ts": datetime(2024, 3, 3, tzinfo=timezone.utc),
-             "title": (f"Page {i}" if i % 4 else None),
-             "links": [{"path": "A@/href",
-                        "href": f"https://h{(i + j) % 3}.com/t{j}",
-                        "anchor": f"anchor {i} {j}"}
-                       for j in range(i % 3)]}
-            for i in range(n)]
-
-
-def test_wat_roundtrip_plain_and_gzip():
-    recs = _wat_records()
-    for gz in (False, True):
-        got = warcx.parse_wat(warcx.build_wat(recs, gzip_records=gz))
-        assert [(g["url"], g["title"], g["links"]) for g in got] == \
-            [(r["url"], r["title"], r["links"]) for r in recs]
-
-
-def test_wat_malformed_json_degrades_not_raises():
-    junk = (b"WARC/1.0\r\nWARC-Type: metadata\r\n"
-            b"WARC-Target-URI: https://t/x\r\n"
-            b"WARC-Date: 2024-01-01T00:00:00Z\r\n"
-            b"Content-Length: 9\r\n\r\n{not json\r\n\r\n")
-    got = warcx.parse_wat(junk)
-    assert got == [{"url": "https://t/x",
-                    "warc_ts": datetime(2024, 1, 1, tzinfo=timezone.utc),
-                    "title": None, "links": []}]
-    # envelope is valid JSON but not the CC shape: still degrades
-    flat = (b"WARC/1.0\r\nWARC-Type: metadata\r\n"
-            b"WARC-Target-URI: https://t/y\r\n"
-            b"Content-Length: 2\r\n\r\n[]\r\n\r\n")
-    assert warcx.parse_wat(flat)[0]["links"] == []
-
-
-def test_spark_wat_reader_feeds_link_graph(spark, tmp_path):
-    """WAT shards -> read_wat_links: one row per link (linkless pages
-    keep a sentinel row) and the table drives host_edges directly."""
-    from historicaldatadocumentparsersystem_spark.operators import linkgraph
-    from historicaldatadocumentparsersystem_spark.sources import (
-        read_wat_links)
-    recs = _wat_records(9)
-    (tmp_path / "s0.wat").write_bytes(warcx.build_wat(recs[:4]))
-    (tmp_path / "s1.wat.gz").write_bytes(
-        warcx.build_wat(recs[4:], gzip_records=True))
-    links = read_wat_links(spark, str(tmp_path) + "/*")
-    rows = links.collect()
-    n_links = sum(len(r["links"]) for r in recs)
-    n_linkless = sum(1 for r in recs if not r["links"])
-    assert len(rows) == n_links + n_linkless
-    assert all(r["href"] is None and r["link_pos"] == -1
-               for r in rows if r["link_pos"] < 0)
-    edges = linkgraph.host_edges(
-        links.where(F.col("link_pos") >= 0).select("url", "href"))
-    got = {(r["src_host"], r["dst_host"]) for r in edges.collect()}
-    exp = {(f"h{i % 3}.com", f"h{(i + j) % 3}.com")
-           for i in range(9) for j in range(i % 3)}
-    assert got == exp
-
-
-@given(st.binary(max_size=2048))
-@settings(max_examples=100, deadline=None)
-def test_wat_parse_arbitrary_bytes_never_raises(data):
-    assert isinstance(warcx.parse_wat(data), list)
-
-
-def test_revisit_roundtrip_and_skip_rules():
-    recs = [{"url": f"https://h.com/r{i}",
-             "warc_ts": datetime(2024, 4, 4, tzinfo=timezone.utc),
-             "digest": f"md5:{i:032d}"} for i in range(4)]
-    for gz in (False, True):
-        got = warcx.parse_revisits(
-            warcx.build_revisits(recs, gzip_records=gz))
-        assert got == recs
-    # response records are not revisits; digestless revisits skipped
-    mixed = (warcx.build_warc(_records(2))
-             + warcx.build_revisits(recs[:1])
-             + b"WARC/1.0\r\nWARC-Type: revisit\r\n"
-               b"WARC-Target-URI: https://h.com/no-digest\r\n"
-               b"WARC-Date: 2024-01-01T00:00:00Z\r\n"
-               b"Content-Length: 0\r\n\r\n\r\n\r\n")
-    assert warcx.parse_revisits(mixed) == recs[:1]
-    # revisit records are invisible to the response/conversion parsers
-    assert len(warcx.parse_warc(mixed)) == 2
-    assert warcx.parse_wet(mixed) == []
-
-
 def test_resolve_revisits_serves_content_from_canonical(spark, tmp_path):
-    """Revisit pointers resolve to the stored copy's locator, and the
-    ranged fetch serves the ORIGINAL bytes for the revisit's url;
+    """Revisit pointers resolve to the stored copy's locator, and that
+    byte range holds the ORIGINAL record for the revisit's url;
     unresolvable digests surface as missing rows."""
     import hashlib
     from historicaldatadocumentparsersystem_spark.extractor import cdxx
     from historicaldatadocumentparsersystem_spark.operators import webtext
-    from historicaldatadocumentparsersystem_spark.sources import (
-        read_warc_members)
     recs = _records(3)
     shard, rows = cdxx.build_warc_indexed(recs, gzip_records=True)
     path = tmp_path / "s.warc.gz"
@@ -295,8 +116,10 @@ def test_resolve_revisits_serves_content_from_canonical(spark, tmp_path):
     got = res.collect()
     assert len(got) == 1 and got[0]["url"] == "https://h.com/replay"
     assert got[0]["canonical_url"] == recs[1]["url"]
-    fetched = read_warc_members(res).collect()
-    assert bytes(fetched[0]["body"]) == recs[1]["body"]
+    off, n = got[0]["offset"], got[0]["length"]
+    assert got[0]["filename"] == str(path)
+    (member,) = warcx.parse_warc(shard[off:off + n])
+    assert member["body"] == recs[1]["body"]
 
 
 def test_content_type_round_trips():
@@ -320,13 +143,11 @@ def test_content_type_round_trips():
     assert [r["body"] for r in back] == [r["body"] for r in recs]
 
 
-def test_read_warc_captures_sniffs_without_bodies(spark, tmp_path):
+def test_warc_captures_sniff_without_bodies(spark, tmp_path):
     from datetime import datetime, timezone
 
     from historicaldatadocumentparsersystem_spark.extractor.warcx import \
         build_warc
-    from historicaldatadocumentparsersystem_spark.sources import \
-        read_warc_captures
     ts = datetime(2024, 3, 5, 12, 0, tzinfo=timezone.utc)
     shard = build_warc([
         {"url": "https://c/1", "warc_ts": ts, "status": 200,
@@ -338,7 +159,7 @@ def test_read_warc_captures_sniffs_without_bodies(spark, tmp_path):
     ])
     (tmp_path / "s.warc").write_bytes(shard)
     rows = {r.url: r for r in
-            read_warc_captures(spark, str(tmp_path) + "/*").collect()}
+            _captures(spark, str(tmp_path) + "/*").collect()}
     assert rows["https://c/1"].sniffed_kind == "html"
     assert rows["https://c/2"].sniffed_kind == "pdf"
     assert rows["https://c/2"].status == 404
@@ -397,14 +218,12 @@ def test_x_robots_header_roundtrip_and_gate(spark):
 
 def test_location_roundtrip_and_redirect_chains(spark, tmp_path):
     """Location header round-trips through build_warc -> parse_warc,
-    surfaces in read_warc_captures, and redirect_chains resolves the
+    surfaces in the captures view, and redirect_chains resolves the
     multi-hop / dangling / cycle / terminal-404 cases end-to-end."""
     from datetime import datetime, timezone
 
     from historicaldatadocumentparsersystem_spark.extractor import warcx
     from historicaldatadocumentparsersystem_spark.operators import webtext
-    from historicaldatadocumentparsersystem_spark.sources import \
-        read_warc_captures
     ts = datetime(2024, 6, 1, tzinfo=timezone.utc)
     recs = [
         {"url": "https://r/a", "warc_ts": ts, "status": 301,
@@ -430,7 +249,7 @@ def test_location_roundtrip_and_redirect_chains(spark, tmp_path):
         "https://r/offsite", "https://r/c2", "https://r/c1"]
 
     (tmp_path / "r.warc").write_bytes(warcx.build_warc(recs))
-    caps = read_warc_captures(spark, str(tmp_path) + "/*")
+    caps = _captures(spark, str(tmp_path) + "/*")
     assert caps.where("location IS NOT NULL").count() == 6
     got = {r["start_url"]: (r["final_url"], r["n_hops"],
                             r["final_status"], r["resolved"])
@@ -505,8 +324,6 @@ def test_encoded_warc_roundtrip_and_captures(spark, tmp_path):
     from datetime import datetime, timezone
 
     from historicaldatadocumentparsersystem_spark.extractor import warcx
-    from historicaldatadocumentparsersystem_spark.sources import \
-        read_warc_captures
     ts = datetime(2024, 7, 1, tzinfo=timezone.utc)
     html = b"<html><body>" + b"paragraph " * 20 + b"</body></html>"
     recs = [
@@ -538,7 +355,7 @@ def test_encoded_warc_roundtrip_and_captures(spark, tmp_path):
               b"\r\n\r\n" + br + b"\r\n\r\n")
     (tmp_path / "e.warc").write_bytes(shard + manual)
     caps = {r["url"]: r for r in
-            read_warc_captures(spark, str(tmp_path) + "/*").collect()}
+            _captures(spark, str(tmp_path) + "/*").collect()}
     assert len(caps) == 6
     for u in ("https://e/gz", "https://e/chunk", "https://e/both"):
         assert caps[u]["sniffed_kind"] == "html"
@@ -599,13 +416,11 @@ def test_arc_parse_arbitrary_bytes_never_raises(data):
 
 
 def test_spark_arc_source_matches_direct(spark, tmp_path):
-    from historicaldatadocumentparsersystem_spark.sources import (
-        read_arc_documents)
     recs = _arc_records()
     p = tmp_path / "shard-0.arc.gz"
     p.write_bytes(warcx.build_arc(recs, gzip_records=True))
     got = {r["url"]: (r["warc_ts"], bytes(r["html"]))
-           for r in read_arc_documents(spark, str(p)).collect()}
+           for r in arc_documents_from_blobs(_shards(spark, str(p))).collect()}
     want = {r["url"]: (r["warc_ts"].replace(tzinfo=None), r["body"])
             for r in recs if r["url"].startswith("http")}
     assert {u: (ts, b) for u, (ts, b) in got.items()} \
